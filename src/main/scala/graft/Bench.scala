@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Evaluate EVERY output column and keep the final sort: a plain
     * count() lets Catalyst prune unreferenced projections/window
@@ -9,18 +9,20 @@ object Bench {
   def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Usage: `tools/run.sh graft.Bench [query ...]` — every declared
+    * query by default, or only the named ones (an ad hoc timing run:
+    * BENCH_LOCAL.json is written only by an unfiltered run).
+    */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => args.isEmpty || args.contains(name) }
+    val spark = LocalSession()
     // Warmup: pay JVM/codegen/scheduler startup outside the timed loop.
     force(SparkEntry.entry(spark))
     // Phase 1 — GLOBAL warm pass, untimed: run every query once BEFORE
@@ -32,7 +34,7 @@ object Bench {
     // cold shared artifact landed inside a timed rep). The warm seconds
     // are emitted as their own "warm" map: on a cold boot the artifact
     // build cost is visible THERE, never in "queries".
-    val warm = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val warm = queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok = try { force(fn(spark, sfDir)); true } catch {
         case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
@@ -49,7 +51,7 @@ object Bench {
     // can't survive both runs. Both raws land under "raw" for
     // inspection. A failing query must not masquerade as a fast one:
     // record -1.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = queries.map { case (name, fn) =>
       val ts = if (!warm(name)._1) Seq(-1.0) else Seq.fill(2) {
         val t0 = System.nanoTime()
         force(fn(spark, sfDir))
@@ -74,9 +76,10 @@ object Bench {
     // keeps only a 2000-char tail of stdout, which truncates the
     // per-query map — BENCH_LOCAL.json is the untruncated record,
     // overwritten per run and committed per round.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e: Exception => System.err.println(s"[bench] BENCH_LOCAL.json: $e") }
+    if (args.isEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
+        (line + "\n").getBytes("UTF-8"))
+      catch { case e: Exception => System.err.println(s"[bench] BENCH_LOCAL.json: $e") }
     spark.stop()
   }
 }

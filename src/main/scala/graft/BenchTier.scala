@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-tier bench over the SERVE-PATH AND FUNNEL queries — the
   * composed retrieval/curation subset whose 100 TB behavior the
   * ScaleProbe byte slopes vouch for at sf0.001–0.01 corpora and the
@@ -43,16 +41,7 @@ object BenchTier {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf0.3")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val qs = serveQueries.map(n => n -> SparkEntry.queries(n))
     val warm = qs.map { case (name, fn) =>
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: dump the formatted physical plan of every
   * declared query (or the ones named on the command line) so scan
   * pushdown (`PushedFilters`/`ReadSchema`), join strategy (broadcast vs
@@ -23,14 +21,7 @@ object Explain {
       System.err.println(s"unknown queries: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR", cores = 4)
     names.foreach { name =>
       println(s"\n========== $name ==========")
       try println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(

@@ -48,16 +48,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val (scaleArgs, opFilter) = args.drop(1).toSeq.partition(_.forall(_.isDigit))
     val scales = if (scaleArgs.nonEmpty) scaleArgs.map(_.toInt) else Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
 
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "dedup_normalized" -> (d => Dedup.normalizedText(d, col("text"), col("doc_id"))),
@@ -732,9 +723,8 @@ object ScaleProbe {
             asOf = Some(1L)))
         val pinned = measured(pinnedRead _)
         // the pre-r14 behavior: no surviving record for the pin's epoch
-        val ep0 = new org.apache.hadoop.fs.Path(fdir, "doc_parts@0")
-        ep0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(ep0, false): Unit
+        // (a one-version retention drops every epoch copy before v2)
+        graft.operators.Stamp.vacuum(spark, fdir, retainVersions = 1): Unit
         val nohist = measured(pinnedRead _)
         spark.catalog.clearCache()
         (pinned, nohist)

@@ -2,7 +2,8 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Corpus, Retrieval, Similarity, Tombstones}
+import graft.operators.{Curation, Corpus, Retrieval, Similarity, Stamp,
+  Tombstones}
 import graft.sources.Versioned
 
 /** The COMPOSED daily maintenance job (SURVEY §8, round 10) — the full
@@ -600,7 +601,7 @@ object DailyMaintenance {
       // retention as the data they describe (a pin past the vacuum
       // horizon can no longer read data, so its epoch record is dead)
       indexDirs(work).foreach(d =>
-        Retrieval.vacuumIndexSidecars(spark, d, retainVersions): Unit)
+        Stamp.vacuum(spark, d, retainVersions): Unit)
       // and the tombstone gate tables: rows no retained version can
       // serve gate nothing — without this the takedown list itself
       // grows corpus-scale on a long-lived pipeline ([[Tombstones
@@ -644,14 +645,7 @@ object DailyMaintenance {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workDir = args.lift(1).getOrElse("/tmp/graft_daily")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val docs = graft.Tables.documents(spark, sfDir)
     val vecs = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))

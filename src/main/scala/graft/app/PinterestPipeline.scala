@@ -33,14 +33,7 @@ object PinterestPipeline {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(11001) // reference table size
     val workDir = args.lift(1).getOrElse("/tmp/graft_pipeline")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     Emulator.write(s"$workDir/raw", n)
     val r = run(spark, s"$workDir/raw")

@@ -1,6 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import graft.clean.{Cleaners, Schemas}
 import graft.sources.{Emulator, Sources}
 import graft.streaming.StreamJobs
@@ -17,14 +16,7 @@ object StreamingPipeline {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(2000)
     val workDir = args.lift(1).getOrElse("/tmp/graft_stream")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     // Two emulator waves into the same directory: the second wave lands
     // after the first AvailableNow drain, proving the checkpoint resumes

@@ -137,7 +137,7 @@ object Retrieval {
     * per engine). The partition column of the "partition" postings
     * layout; [[tokPartOf]] is its exact Scala twin for literal terms.
     */
-  private def tokPartExpr(tok: Column, nParts: Int): Column =
+  private[operators] def tokPartExpr(tok: Column, nParts: Int): Column =
     conv(substring(md5(tok), 1, 8), 16, 10).cast("long") % nParts
 
   private[graft] def tokPartOf(term: String, nParts: Int): Long = {
@@ -236,7 +236,8 @@ object Retrieval {
       if (Versioned.exists(spark, postT))
         Versioned.latestVersion(spark, postT) + 1
       else 0L
-    writeStopEpoch(spark, indexDir, stopTokens, stopMaxDfRatio, vPred)
+    Stamp.mark(spark, indexDir, Stamp.StopToks,
+      (stopTokens, stopMaxDfRatio), vPred)
     val vp = layout match {
       case "bucket" => Versioned.overwriteBucketed(postings,
         postT, "tok", nBuckets)
@@ -253,349 +254,50 @@ object Retrieval {
     // discipline): queries and appends derive tok_part from there, so
     // there is no way to probe or append with a mismatched modulus
     if (layout == "partition")
-      writePartDirs(spark, indexDir, nPartDirs, vp)
-    // lost the predicted version to a concurrent writer (already UB for
-    // builds, but never leave the marker pointing at someone else's
-    // commit); the legacy head pointer is convenience, written last
-    if (vp != vPred)
-      writeStopEpoch(spark, indexDir, stopTokens, stopMaxDfRatio, vp)
-    writeStopHead(spark, indexDir, stopTokens, stopMaxDfRatio, vp)
+      Stamp.write(spark, indexDir, Stamp.TokParts, nPartDirs, vp)
+    // re-marks at the committed version (a concurrent writer may have
+    // taken the predicted one), then the legacy head pointer
+    Stamp.write(spark, indexDir, Stamp.StopToks,
+      (stopTokens, stopMaxDfRatio), vp)
     vp
   }
 
-  // ---------------------------------------------------- stop-list sidecar
-  //
-  // Two files per capped (or explicitly-uncapped) build:
-  //  - `stop_toks@<v>` — the EPOCH MARKER, written BEFORE the postings
-  //    commit it describes (fail-closed: the commit cannot land without
-  //    its cap status on disk). Append-only history: one per overwrite.
-  //  - `stop_toks` — the legacy head pointer, written after the commits
-  //    (convenience + back-compat; epoch markers take precedence).
-  // Format (both): line 1 = "<version>" or "<version> <maxDfRatio>",
-  // remaining lines = the sorted stop tokens (none = uncapped). A
-  // recorded ratio opts the index into stop-list RE-DERIVATION at
-  // [[compactBm25Index]] (boilerplate that emerges after the build gets
-  // capped at the next compaction instead of never).
-
-  private def stopSidecarPath(indexDir: String) =
-    new org.apache.hadoop.fs.Path(indexDir, "stop_toks")
-
-  private def stopEpochPath(indexDir: String, v: Long) =
-    new org.apache.hadoop.fs.Path(indexDir, s"stop_toks@$v")
-
-  private def writeStopFile(spark: SparkSession,
-                            p: org.apache.hadoop.fs.Path,
-                            toks: Seq[String], ratio: Option[Double],
-                            version: Long): Unit = {
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val head = version.toString + ratio.map(r => s" $r").getOrElse("")
-    val out = f.create(p, true)
-    try out.write((head +: toks.distinct.sorted).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def writeStopEpoch(spark: SparkSession, indexDir: String,
-                             toks: Seq[String], ratio: Option[Double],
-                             version: Long): Unit =
-    writeStopFile(spark, stopEpochPath(indexDir, version), toks, ratio, version)
-
-  private def writeStopHead(spark: SparkSession, indexDir: String,
-                            toks: Seq[String], ratio: Option[Double],
-                            version: Long): Unit =
-    writeStopFile(spark, stopSidecarPath(indexDir), toks, ratio, version)
-
-  /** Parse a stop file: (stamped version, recap ratio, tokens). The
-    * legacy single-line-header format (version only, ≥1 token) parses
-    * identically. None when absent or corrupt.
-    */
-  private def readStopFile(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): Option[(Long, Option[Double], Seq[String])] = {
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val lines = raw.split("\n", -1).toSeq
-      lines.headOption.map(_.trim.split(" ").toSeq).flatMap {
-        case Seq(v) if v.nonEmpty && v.forall(_.isDigit) =>
-          Some((v.toLong, None, lines.tail.filter(_.nonEmpty)))
-        case Seq(v, r) if v.nonEmpty && v.forall(_.isDigit) &&
-            r.toDoubleOption.exists(d => d > 0 && d < 1) =>
-          Some((v.toLong, r.toDoubleOption, lines.tail.filter(_.nonEmpty)))
-        case _ => None
-      }
-    }
-  }
-
   /** The cap state of the index at its current overwrite snapshot:
-    * (stop tokens — empty = uncapped, recap ratio). Resolution order:
-    *
-    *  1. The epoch marker for the head overwrite. It was written before
-    *     that commit, so a build/compaction can never land without it —
-    *     its absence for a NEW-code overwrite cannot happen, and its
-    *     word is final (an empty list is an explicit uncapped build).
-    *  2. Legacy head pointer with a matching stamp (pre-marker indexes).
-    *  3. Legacy head pointer with a STALE stamp throws — the cap status
-    *     of the head snapshot is unknowable, and appending with a
-    *     maybe-wrong set is silent ranking corruption, not degradation;
-    *     [[repairBm25Index]] restores the stamp after the pure-rewrite
-    *     content check.
-    *  4. Nothing on disk = uncapped (pre-cap-era index).
+    * (stop tokens — empty = uncapped, recap ratio). A trusted
+    * [[Stamp.StopToks]] is final: its epoch marker precedes the commit it
+    * describes, so a build or compaction can never land without it (an
+    * empty list is an explicit uncapped build). Otherwise the legacy
+    * head pointer decides: absent or unreadable = uncapped (a pre-cap-era
+    * index); a stale EMPTY list is inert (filtering with the empty set is
+    * the identity); a stale NON-empty list throws — the cap status of the
+    * head snapshot is unknowable, and appending with a maybe-wrong set is
+    * silent ranking corruption, not degradation. [[repairBm25Index]]
+    * restores the stamp after the pure-rewrite content check.
     */
   private def stopStateOf(spark: SparkSession,
-                          indexDir: String): (Seq[String], Option[Double]) = {
-    val h = lastPostingsOverwrite(spark, indexDir)
-    readStopFile(spark, stopEpochPath(indexDir, h)) match {
-      case Some((v, ratio, toks)) =>
-        require(v == h, s"$indexDir stop_toks@$h epoch marker records " +
-          s"version $v — foreign write; rebuild the index")
-        (toks, ratio)
-      case None => readStopFile(spark, stopSidecarPath(indexDir)) match {
+                          indexDir: String): (Seq[String], Option[Double]) =
+    Stamp.read(spark, indexDir, Stamp.StopToks).getOrElse(
+      Stamp.recorded(spark, indexDir, Stamp.StopToks) match {
         case None => (Nil, None)
-        // a stale pointer recording an EMPTY list is inert — filtering
-        // with the empty set is the identity, so no append can become
-        // inconsistent with any base; only a stale NON-empty list is
-        // unknowable cap status
-        case Some((_, ratio, toks)) if toks.isEmpty => (Nil, ratio)
-        case Some((v, ratio, toks)) =>
-          require(v == h,
-            s"$indexDir stop_toks sidecar is STALE (a compaction or " +
-              "rebuild died between its postings commit and the re-stamp) " +
-              "— run repairBm25Index to restore it, or rebuild the index")
-          (toks, ratio)
-      }
-    }
-  }
+        case Some(((toks, ratio), _)) if toks.isEmpty => (Nil, ratio)
+        case Some(_) => throw new IllegalArgumentException(
+          s"$indexDir ${Stamp.StopToks.name} sidecar is STALE (a " +
+            "compaction or rebuild died between its postings commit and " +
+            "the re-stamp) — run repairBm25Index to restore it, or " +
+            "rebuild the index")
+      })
 
-  /** The stop list IF the index is capped: None = uncapped. Throws on
-    * an unresolvable legacy stamp (see [[stopStateOf]]).
+  /** Re-stamp the BM25 sidecars after a repair restored lockstep: the
+    * shard modulus of a partition layout (data-verified: a crashed
+    * REBUILD with a different modulus must never get the old stamp
+    * blessed — probes would prune to the wrong shards) and a legacy
+    * stop list (blessed only when the head overwrite is a pure rewrite
+    * of its predecessor: true for a crashed compaction, false for any
+    * content-changing rebuild). Both no-op when already trusted.
     */
-  private def stopTokensOf(spark: SparkSession,
-                           indexDir: String): Option[Seq[String]] =
-    Some(stopStateOf(spark, indexDir)._1).filter(_.nonEmpty)
-
-  /** Re-stamp a stale LEGACY stop_toks pointer after a repair restored
-    * lockstep. The recorded list is blessed only when the head overwrite
-    * snapshot is CONTENT-IDENTICAL to the stamped version (the
-    * [[restampChunkGrid]] pure-rewrite discipline) — true for a crashed
-    * compaction chain, false for ANY crashed rebuild (capped→uncapped
-    * leaves the tokens present; an ENLARGED list leaves both old and new
-    * tokens absent, where the weaker tokens-absent check would bless the
-    * old list and appends would then filter with a smaller set than the
-    * base build used). New-code indexes never need this: their epoch
-    * markers precede their commits. No-op when absent, already trusted,
-    * or nothing on disk can prove the rewrite was pure (vacuumed stamp
-    * version included).
-    */
-  private def restampStopToks(spark: SparkSession, indexDir: String): Unit = {
-    val h = lastPostingsOverwrite(spark, indexDir)
-    if (readStopFile(spark, stopEpochPath(indexDir, h)).nonEmpty) return
-    readStopFile(spark, stopSidecarPath(indexDir)).foreach {
-      case (v, ratio, toks) if v < h && h > 0 && toks.nonEmpty =>
-        // pure means the head overwrite changed nothing vs ITS INPUT
-        // (version h−1): then cap status at h equals cap status at h−1,
-        // which by induction through the sidecar-filtered appends is the
-        // recorded list — true for a compaction, false for any content-
-        // changing rebuild (capped→uncapped leaves the tokens present;
-        // an ENLARGED list leaves different postings), which stays
-        // refused with the manual-rebuild message
-        val pure = try {
-          val now  = Versioned.read(spark, s"$indexDir/postings", Some(h))
-          val prev = Versioned.read(spark, s"$indexDir/postings", Some(h - 1))
-          now.exceptAll(prev).isEmpty && prev.exceptAll(now).isEmpty
-        } catch { case _: Exception => false }
-        if (pure) {
-          writeStopEpoch(spark, indexDir, toks, ratio, h)
-          writeStopHead(spark, indexDir, toks, ratio, h)
-        }
-      case _ => ()
-    }
-  }
-
-  /** Sidecar recording a partitioned layout's shard modulus, stamped
-    * with the overwrite version of the table it describes (the
-    * chunk_grid discipline: a crashed rebuild leaves a stale stamp that
-    * consumers detect instead of pruning by the wrong modulus). Two
-    * instances: `tok_parts` (token shards of a "partition"-layout
-    * postings table) and `doc_parts` (doc shards of the forward index).
-    */
-  private def shardSidecarPath(indexDir: String, name: String) =
-    new org.apache.hadoop.fs.Path(indexDir, name)
-
-  private def shardEpochPath(indexDir: String, name: String, v: Long) =
-    new org.apache.hadoop.fs.Path(indexDir, s"$name@$v")
-
-  /** Writes BOTH the head sidecar and an append-only per-EPOCH copy
-    * (`<name>@<version>`). The head file serves latest reads; the epoch
-    * files give every historical layout epoch its own surviving record,
-    * so a read PINNED before the current epoch (a serving stream that
-    * straddled a compaction) prunes with ITS epoch's modulus instead of
-    * degrading to an unpruned scan for the stream's remaining lifetime —
-    * old epochs' shard columns are persisted per row, so an old modulus
-    * prunes its own files correctly.
-    */
-  private[operators] def writeShardSidecar(spark: SparkSession,
-                                indexDir: String,
-                                name: String, nParts: Int,
-                                version: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(shardSidecarPath(indexDir, name),
-        shardEpochPath(indexDir, name, version)).foreach { p =>
-      val out = p.getFileSystem(conf).create(p, true)
-      try out.write(s"$nParts $version".getBytes("UTF-8")) finally out.close()
-    }
-  }
-
-  /** The modulus recorded by epoch `v`'s sidecar copy, or None when the
-    * epoch predates the history (legacy index) or its stamp disagrees
-    * with its filename (foreign write). Only meaningful for `v`s that
-    * are overwrite commits of the stamp table.
-    */
-  private def epochShardSidecarOf(spark: SparkSession, indexDir: String,
-                                  name: String, v: Long): Option[Int] = {
-    val p = shardEpochPath(indexDir, name, v)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      raw.trim.split(" ") match {
-        case Array(n, sv) if Seq(n, sv).forall(_.forall(_.isDigit)) &&
-            sv.toLong == v => Some(n.toInt)
-        case _ => None
-      }
-    }
-  }
-
-  /** Shard modulus recorded by a sidecar, or None when the sidecar is
-    * absent OR cannot be trusted for the CURRENT snapshot (stale stamp
-    * after a crashed rebuild, corrupt file). Pruning is an optimization
-    * layered over an always-correct fallback, so an untrusted sidecar
-    * degrades queries to unpruned scans; appends need the modulus to
-    * write and refuse separately when it is absent on a partitioned
-    * table.
-    */
-  private[operators] def shardSidecarOf(spark: SparkSession, indexDir: String,
-                             name: String, stampTable: String): Option[Int] = {
-    val p = shardSidecarPath(indexDir, name)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      raw.trim.split(" ") match {
-        case Array(n, v) if Seq(n, v).forall(_.forall(_.isDigit)) &&
-            v.toLong == lastOverwriteOf(spark, indexDir, stampTable) =>
-          Some(n.toInt)
-        case _ => None
-      }
-    }
-  }
-
-  private def writePartDirs(spark: SparkSession, indexDir: String,
-                            nParts: Int, version: Long): Unit =
-    writeShardSidecar(spark, indexDir, "tok_parts", nParts, version)
-
-  /** [[shardSidecarOf]] for a possibly-PINNED read. A layout EPOCH runs
-    * from an overwrite commit (the build/compaction that laid the
-    * directories out) to the next overwrite; appends inside an epoch
-    * derive their shard column from the epoch's own sidecar, so every
-    * version inside it shares one modulus. Resolution:
-    *
-    *  - no pin, or a pin inside the LIVE epoch → the stamp-checked head
-    *    sidecar (exactly the pre-r14 behavior);
-    *  - a pin in an EARLIER epoch → that epoch's own `<name>@<v>`
-    *    history copy ([[writeShardSidecar]] appends one per overwrite),
-    *    so a serving stream that pinned its version at start KEEPS
-    *    pruning after a mid-stream compaction moves the live layout —
-    *    previously every subsequent micro-batch of that stream read the
-    *    table unpruned for the stream's remaining lifetime;
-    *  - an epoch with no surviving record (legacy index, or the epoch's
-    *    own writer crashed before its sidecar) → None: the unpruned-
-    *    but-correct scan.
-    */
-  private[operators] def shardSidecarFor(spark: SparkSession,
-      indexDir: String, name: String, stampTable: String,
-      asOf: Option[Long]): Option[Int] = asOf match {
-    case None => shardSidecarOf(spark, indexDir, name, stampTable)
-    case Some(pin) =>
-      val overwrites = Versioned.history(spark, s"$indexDir/$stampTable")
-        .collect { case (v, "overwrite", _) => v }
-      overwrites.filter(_ <= pin).lastOption.flatMap { epoch =>
-        if (overwrites.lastOption.contains(epoch))
-          shardSidecarOf(spark, indexDir, name, stampTable)
-        else epochShardSidecarOf(spark, indexDir, name, epoch)
-      }
-  }
-
-  /** The modulus a sidecar RECORDS, ignoring its stamp — a repair's
-    * first candidate (the stamp is stale exactly when a repair is
-    * needed; the recorded modulus is still the best guess and is
-    * data-verified before being blessed).
-    */
-  private def sidecarRecordedModulus(spark: SparkSession, indexDir: String,
-                                     name: String): Option[Int] = {
-    val p = shardSidecarPath(indexDir, name)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      raw.trim.split(" ") match {
-        case Array(n, v) if Seq(n, v).forall(_.forall(_.isDigit)) =>
-          Some(n.toInt)
-        case _ => None
-      }
-    }
-  }
-
-  private def partDirsOf(spark: SparkSession, indexDir: String): Option[Int] =
-    shardSidecarOf(spark, indexDir, "tok_parts", "postings")
-
-  /** Bound the per-epoch sidecar/marker history: [[writeShardSidecar]]
-    * and [[writeStopEpoch]] append one `<name>@<v>` file per overwrite
-    * FOREVER, and [[graft.sources.Versioned.vacuum]] prunes data files
-    * but never these — the one artifact class that grew unboundedly.
-    * Drop history entries for epochs no retained version can pin: after
-    * `vacuum(retainVersions = N)` the readable versions are the last N,
-    * so the epochs that matter are the overwrites INSIDE that window
-    * plus the one covering its floor (a retained version between two
-    * overwrites pins the EARLIER one's layout). A pin older than that
-    * can no longer read data anyway. Call after vacuuming the index's
-    * tables with the SAME retention. Returns the number of files
-    * removed.
-    */
-  def vacuumIndexSidecars(spark: SparkSession, indexDir: String,
-                          retainVersions: Int = 2): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pairs = Seq("tok_parts" -> "postings", "stop_toks" -> "postings",
-      "doc_parts" -> "fwd", "vec_parts" -> "vectors")
-    var removed = 0
-    pairs.foreach { case (name, t) =>
-      val tab = s"$indexDir/$t"
-      if (Versioned.exists(spark, tab)) {
-        val hist = Versioned.history(spark, tab)
-        val floor = hist.map(_._1).takeRight(math.max(1, retainVersions)).head
-        val overwrites = hist.collect { case (v, "overwrite", _) => v }
-        val keep = (overwrites.filter(_ <= floor).lastOption.toSeq ++
-          overwrites.filter(_ > floor)).toSet
-        val dir = new org.apache.hadoop.fs.Path(indexDir)
-        val f = dir.getFileSystem(conf)
-        if (f.exists(dir)) f.listStatus(dir).filter(_.isFile)
-          .map(_.getPath).filter(_.getName.startsWith(s"$name@"))
-          .foreach { p =>
-            val v = p.getName.stripPrefix(s"$name@")
-            if (v.nonEmpty && v.forall(_.isDigit) && !keep.contains(v.toLong)) {
-              if (f.delete(p, false)) removed += 1
-            }
-          }
-      }
-    }
-    removed
+  private def restampBm25(spark: SparkSession, indexDir: String): Unit = {
+    Stamp.restamp(spark, indexDir, Stamp.TokParts)
+    Stamp.restamp(spark, indexDir, Stamp.StopToks)
   }
 
   // --------------------------------------------------- tombstone gating
@@ -613,10 +315,8 @@ object Retrieval {
     * sidecar) — its rows key by the composite ck, so doc-grain
     * tombstones match on the decoded high 32 bits. */
   private[operators] def hasChunkGrid(spark: SparkSession,
-                                      indexDir: String): Boolean = {
-    val p = chunkGridPath(indexDir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+                                      indexDir: String): Boolean =
+    Stamp.exists(spark, indexDir, lexGrid)
 
   /** The DOCUMENT id of an index row's key column: identity at doc
     * grain, the composite-key decode at chunk grain. */
@@ -667,11 +367,10 @@ object Retrieval {
         col("toks") +: meta.map(col)): _*)
     // a capped index filters every batch with its FROZEN stop set (from
     // the sidecar, never the caller) — stats stay true corpus stats
-    val postings = stopTokensOf(spark, indexDir) match {
-      case Some(stops) =>
-        postingsOf(base, meta).filter(!col("tok").isInCollection(stops))
-      case None => postingsOf(base, meta)
-    }
+    val stops = stopStateOf(spark, indexDir)._1
+    val postings =
+      if (stops.isEmpty) postingsOf(base, meta)
+      else postingsOf(base, meta).filter(!col("tok").isInCollection(stops))
     val delta = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val merged = Versioned.read(spark, s"$indexDir/stats", Some(vStats))
       .unionByName(delta)
@@ -683,10 +382,11 @@ object Retrieval {
       else {
         // a partitioned table's batches must land partitioned with the
         // SAME modulus — from the sidecar, never the caller
-        val n = partDirsOf(spark, indexDir).getOrElse(sys.error(
-          s"$indexDir postings are partition-laid-out but the tok_parts " +
-            "sidecar is absent or stale (a rebuild crashed between its " +
-            "commit and the stamp) — rebuild with buildBm25Index"))
+        val n = Stamp.read(spark, indexDir, Stamp.TokParts).getOrElse(sys.error(
+          s"$indexDir postings are partition-laid-out but the " +
+            s"${Stamp.TokParts.name} sidecar is absent or stale (a rebuild " +
+            "crashed between its commit and the stamp) — rebuild with " +
+            "buildBm25Index"))
         Versioned.appendPartitioned(
           postings.withColumn("tok_part", tokPartExpr(col("tok"), n)),
           s"$indexDir/postings", "tok_part")
@@ -748,8 +448,7 @@ object Retrieval {
       var v = Versioned.overwrite(full, statT)
       while (v < vp)
         v = Versioned.overwrite(Versioned.read(spark, statT, Some(v)), statT)
-      restampTokParts(spark, indexDir)
-      restampStopToks(spark, indexDir)
+      restampBm25(spark, indexDir)
       return v
     }
     val vs = Versioned.latestVersion(spark, statT)
@@ -757,8 +456,7 @@ object Retrieval {
       // lockstep intact, but a compaction may still have died between
       // its table commits and a sidecar re-stamp — both restamps no-op
       // when already trusted
-      restampTokParts(spark, indexDir)
-      restampStopToks(spark, indexDir)
+      restampBm25(spark, indexDir)
       return vp
     }
     require(vp > vs, s"$indexDir stats v$vs is AHEAD of postings v$vp — " +
@@ -792,48 +490,8 @@ object Retrieval {
     while (v < vp)
       v = Versioned.overwriteExpecting(
         Versioned.read(spark, statT, Some(v)), statT, v + 1)
-    restampTokParts(spark, indexDir)
-    restampStopToks(spark, indexDir)
+    restampBm25(spark, indexDir)
     v
-  }
-
-  /** Re-stamp the tok_parts sidecar after a repair restored lockstep on
-    * a partition-layout index. A crashed compaction moved the postings'
-    * overwrite version past the sidecar's stamp while leaving the
-    * modulus unchanged, so without this step queries permanently lose
-    * shard pruning and appends permanently refuse even though the
-    * modulus is fully recoverable. The stamp is only restored after the
-    * candidate modulus is VERIFIED against the data (every row must
-    * satisfy tok_part = md5(tok) mod n — a crashed REBUILD with a
-    * different modulus leaves rows that fail this, and blessing the old
-    * stamp there would prune probes to the wrong shards, a wrong-answer
-    * bug rather than a performance one). Candidates: the stale
-    * sidecar's recorded modulus, then max(tok_part)+1 off the data (the
-    * sidecar-missing crash shape). No candidate verifying ⇒ the sidecar
-    * stays stale: queries degrade to unpruned (correct), appends keep
-    * refusing with the rebuild message.
-    */
-  private def restampTokParts(spark: SparkSession, indexDir: String): Unit = {
-    val postT = s"$indexDir/postings"
-    if (!Versioned.declaredLayout(spark, postT).startsWith("part:")) return
-    // already trusted (e.g. the crash was an APPEND, which never moves
-    // the overwrite snapshot the stamp tracks) — re-stamping with a
-    // fresher version would WRONGLY invalidate it
-    if (partDirsOf(spark, indexDir).nonEmpty) return
-    val stampV = lastPostingsOverwrite(spark, indexDir)
-    val posts = Versioned.read(spark, postT).select(col("tok"), col("tok_part"))
-    val recorded = sidecarRecordedModulus(spark, indexDir, "tok_parts")
-    // an index over an EMPTY corpus has no rows to derive the modulus
-    // from (max is NULL) — only the recorded candidate applies; getLong
-    // on the null would turn the repair into a crash instead of the
-    // documented stale-sidecar degradation
-    val maxRow = posts.agg(max(col("tok_part"))).head
-    val fromData: Seq[Int] =
-      if (maxRow.isNullAt(0)) Seq.empty else Seq(maxRow.getLong(0).toInt + 1)
-    (recorded.toSeq ++ fromData).distinct
-      .find(n => posts
-        .filter(col("tok_part") =!= tokPartExpr(col("tok"), n)).isEmpty)
-      .foreach(n => writeShardSidecar(spark, indexDir, "tok_parts", n, stampV))
   }
 
   /** Compact the index after a run of appends (the daily-add cadence):
@@ -857,7 +515,7 @@ object Retrieval {
     // rewrite moves the stamp (a stale legacy state is never blessed
     // here: the compact proceeds and the index stays refused until
     // repairBm25Index adjudicates it)
-    val nParts = partDirsOf(spark, indexDir)
+    val nParts = Stamp.read(spark, indexDir, Stamp.TokParts)
     val state: Option[(Seq[String], Option[Double])] =
       try Some(stopStateOf(spark, indexDir))
       catch { case _: IllegalArgumentException => None }
@@ -901,7 +559,7 @@ object Retrieval {
     val dlGone = if (goneRow.isNullAt(1)) 0L else goneRow.getLong(1)
     // the epoch marker precedes the commit it describes, as at build
     val vPred = Versioned.latestVersion(spark, postT) + 1
-    recapped.foreach { case (t, r) => writeStopEpoch(spark, indexDir, t, r, vPred) }
+    recapped.foreach(Stamp.mark(spark, indexDir, Stamp.StopToks, _, vPred))
     val vp =
       if (dropped.isEmpty && nGone == 0L) Versioned.compact(spark, postT)
       else {
@@ -927,28 +585,37 @@ object Retrieval {
       }
     require(vp == vs, s"BM25 compaction left tables out of lockstep " +
       s"(postings v$vp, stats v$vs) — run repairBm25Index")
-    nParts.foreach(n => writePartDirs(spark, indexDir, n, vp))
-    recapped.foreach { case (t, r) =>
-      if (vp != vPred) writeStopEpoch(spark, indexDir, t, r, vp)
-      writeStopHead(spark, indexDir, t, r, vp)
-    }
+    nParts.foreach(Stamp.write(spark, indexDir, Stamp.TokParts, _, vp))
+    recapped.foreach(Stamp.write(spark, indexDir, Stamp.StopToks, _, vp))
     vp
   }
 
   /** The query-term shard prune: layered over the always-correct token
     * filter when the index is partition-laid-out and the sidecar vouches
     * for the read's snapshot — the latest, or any pin INSIDE the live
-    * layout epoch ([[shardSidecarFor]]); an older pin degrades to the
+    * layout epoch ([[Stamp.read]]); an older pin degrades to the
     * unpruned-but-correct scan.
     */
   private def shardPruned(spark: SparkSession, indexDir: String,
                           posts: DataFrame, terms: Seq[String],
                           asOf: Option[Long]): DataFrame =
     if (!posts.columns.contains("tok_part")) posts
-    else shardSidecarFor(spark, indexDir, "tok_parts", "postings", asOf) match {
+    else Stamp.read(spark, indexDir, Stamp.TokParts, asOf) match {
       case Some(n) => posts.filter(col("tok_part")
         .isInCollection(terms.map(tokPartOf(_, n)).distinct))
       case None => posts
+    }
+
+  /** A latest read needs postings and stats in lockstep; a pinned read
+    * names its own version. */
+  private def requireLockstep(spark: SparkSession, indexDir: String,
+                              asOf: Option[Long]): Unit =
+    if (asOf.isEmpty) {
+      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
+      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
+      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
+        s"stats v$vs) — an append or build crashed between commits; run " +
+        "repairBm25Index, or pin an intact version with asOf")
     }
 
   /** Query the persisted index: touches only the query terms' postings
@@ -962,13 +629,7 @@ object Retrieval {
                      k1: Double = K1, b: Double = B,
                      asOf: Option[Long] = None): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     val tf = shardPruned(spark, indexDir,
         Versioned.read(spark, s"$indexDir/postings", asOf), terms, asOf)
       .filter(col("tok").isInCollection(terms))
@@ -1027,13 +688,7 @@ object Retrieval {
                              k1: Double = K1, b: Double = B,
                              asOf: Option[Long] = None): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
     requirePostingsPredicate(indexDir, posts, predicate)
     val slice = shardPruned(spark, indexDir, posts, terms, asOf)
@@ -1084,7 +739,7 @@ object Retrieval {
     val postsAll = Versioned.read(spark, s"$indexDir/postings", asOf)
     val partN =
       if (postsAll.columns.contains("tok_part"))
-        shardSidecarFor(spark, indexDir, "tok_parts", "postings", asOf)
+        Stamp.read(spark, indexDir, Stamp.TokParts, asOf)
       else None
     val posts = postsAll.select(
       (partN.map(_ => col("tok_part")).toSeq ++
@@ -1105,13 +760,7 @@ object Retrieval {
                          queries: DataFrame, k: Int,
                          k1: Double = K1, b: Double = B,
                          asOf: Option[Long] = None): DataFrame = {
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
     // the pruned (query, posting) slice feeds BOTH df and scoring —
     // stage it (bounded by Σ per-query postings, not the corpus); the
@@ -1148,13 +797,7 @@ object Retrieval {
                                  predicate: Column,
                                  k1: Double = K1, b: Double = B,
                                  asOf: Option[Long] = None): DataFrame = {
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     requirePostingsPredicate(indexDir,
       Versioned.read(spark, s"$indexDir/postings", asOf), predicate)
     val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
@@ -1242,13 +885,7 @@ object Retrieval {
                          asOf: Option[Long]): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
     require(facetCols.nonEmpty, "need at least one facet column")
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
     predicate.foreach(requirePostingsPredicate(indexDir, posts, _))
     val missing = facetCols.filterNot(postingsMetaCols(posts).contains)
@@ -1301,13 +938,7 @@ object Retrieval {
                    asOf: Option[Long] = None): DataFrame = {
     require(terms.nonEmpty, "QL needs at least one query term")
     require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     // the pruned slice feeds cf, the candidate set, AND the tf join —
     // stage it (≤ |terms| rows per matching doc, the bm25Scores rule)
     val pruned = shardPruned(spark, indexDir,
@@ -1349,13 +980,7 @@ object Retrieval {
                        queries: DataFrame, k: Int, mu: Double = 2000.0,
                        asOf: Option[Long] = None): DataFrame = {
     require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
     val hits = bm25ManyHits(spark, indexDir, queries, asOf)
       .select(col("query_id"), col("doc_id"), col("dl"), col("tok"),
@@ -1494,17 +1119,11 @@ object Retrieval {
                    phrase: Seq[String], k: Int,
                    asOf: Option[Long] = None): DataFrame = {
     require(phrase.nonEmpty, "phrase needs at least one term")
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+    requireLockstep(spark, indexDir, asOf)
     val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
     val partN =
       if (asOf.isEmpty && posts.columns.contains("tok_part"))
-        partDirsOf(spark, indexDir)
+        Stamp.read(spark, indexDir, Stamp.TokParts)
       else None
     val slices = phrase.zipWithIndex.map { case (t, j) =>
       partN.fold(posts)(n =>
@@ -1633,35 +1252,13 @@ object Retrieval {
     // version it describes: a rebuild that dies between the two writes
     // leaves a version mismatch chunkGrid() refuses loudly, instead of
     // a stale grid silently mis-chunking the next append
-    writeChunkGrid(docs.sparkSession, indexDir, size, stride, v)
+    Stamp.write(docs.sparkSession, indexDir, lexGrid, (size, stride), v)
     v
   }
 
-  private def chunkGridPath(indexDir: String) =
-    new org.apache.hadoop.fs.Path(indexDir, "chunk_grid")
-
-  private def writeChunkGrid(spark: SparkSession, indexDir: String,
-                             size: Int, stride: Int, version: Long): Unit = {
-    val p = chunkGridPath(indexDir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(p, true)
-    try out.write(s"$size $stride $version".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Last "overwrite" version of the index's stamp table — the
-    * snapshot a grid/sidecar stamp must match (appends keep it; builds
-    * and compactions move it). `postings` for the lexical index,
-    * `assignment` for the chunk ANN index.
-    */
-  private[operators] def lastOverwriteOf(spark: SparkSession, indexDir: String,
-                              table: String): Long =
-    Versioned.history(spark, s"$indexDir/$table")
-      .collect { case (v, "overwrite", _) => v }.lastOption
-      .getOrElse(sys.error(s"$indexDir/$table has no overwrite commit"))
-
-  private def lastPostingsOverwrite(spark: SparkSession,
-                                    indexDir: String): Long =
-    lastOverwriteOf(spark, indexDir, "postings")
+  /** The grid kinds of the chunk BM25 and chunk ANN indexes. */
+  private val lexGrid = Stamp.chunkGrid("postings")
+  private val annGrid = Stamp.chunkGrid("assignment")
 
   /** The build-time window grid of a chunk-grain index, trusted ONLY
     * when its stamp matches the postings' current overwrite snapshot.
@@ -1674,25 +1271,19 @@ object Retrieval {
     */
   def chunkGrid(spark: SparkSession, indexDir: String,
                 stampTable: String = "postings"): (Int, Int) = {
-    val p = chunkGridPath(indexDir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(f.exists(p), s"$indexDir carries no chunk_grid sidecar — " +
-      "not a chunk-grain index (or a pre-grid build); rebuild with " +
-      "buildChunkBm25Index / buildChunkIvfIndex")
-    val in = f.open(p)
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    raw.trim.split(" ") match {
-      case Array(s, st, v) if Seq(s, st, v).forall(_.forall(_.isDigit)) =>
-        require(v.toLong == lastOverwriteOf(spark, indexDir, stampTable),
-          s"$indexDir chunk_grid stamp v$v does not match the " +
-            s"$stampTable table's current overwrite snapshot — a rebuild " +
-            "or compaction died between its index commit and the grid " +
-            "stamp, so the recorded grid cannot be trusted to describe " +
-            "the current build; rebuild the index")
-        (s.toInt, st.toInt)
-      case _ => sys.error(s"$indexDir chunk_grid sidecar is corrupt " +
-        s"('${raw.take(40)}') — a crashed write; rebuild the index")
+    val k = Stamp.chunkGrid(stampTable)
+    Stamp.read(spark, indexDir, k).getOrElse {
+      require(Stamp.exists(spark, indexDir, k), s"$indexDir carries no " +
+        s"${k.name} sidecar — not a chunk-grain index (or a pre-grid " +
+        "build); rebuild with buildChunkBm25Index / buildChunkIvfIndex")
+      val v = Stamp.recorded(spark, indexDir, k).map(_._2).getOrElse(
+        sys.error(s"$indexDir ${k.name} sidecar is corrupt — a crashed " +
+          "write; rebuild the index"))
+      throw new IllegalArgumentException(s"$indexDir ${k.name} stamp v$v " +
+        s"does not match the $stampTable table's current overwrite " +
+        "snapshot — a rebuild or compaction died between its index " +
+        "commit and the grid stamp, so the recorded grid cannot be " +
+        "trusted to describe the current build; rebuild the index")
     }
   }
 
@@ -1709,7 +1300,7 @@ object Retrieval {
 
   /** Re-stamp the chunk_grid sidecar after a crashed COMPACTION moved
     * the stamp table's overwrite snapshot past the stamp — the
-    * [[restampTokParts]] discipline applied to the grid: without it the
+    * [[Stamp.restamp]] discipline applied to the grid: without it the
     * index is permanently refused even though the recorded grid is
     * fully recoverable, and a maintenance-grain operator that obeyed
     * the rebuild message would rebuild from one day's batch, silently
@@ -1724,42 +1315,8 @@ object Retrieval {
     * crash-recovery path.
     */
   def restampChunkGrid(spark: SparkSession, indexDir: String,
-                       stampTable: String = "postings"): Unit = {
-    if (chunkGridHealthy(spark, indexDir, stampTable)) return
-    val p = chunkGridPath(indexDir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return
-    val in = f.open(p)
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    raw.trim.split(" ") match {
-      case Array(s, st, v) if Seq(s, st, v).forall(_.forall(_.isDigit)) =>
-        val t = s"$indexDir/$stampTable"
-        val vNew =
-          try lastOverwriteOf(spark, indexDir, stampTable)
-          catch { case _: Exception => return }
-        // vNew == 0 is a first build with nothing before it to verify
-        // against; vNew <= recorded stamp is a foreign shape
-        if (vNew <= v.toLong || vNew == 0L) return
-        // a rewrite is grid-preserving when it ADDED nothing and removed
-        // at most TOMBSTONED documents' rows (a pure compaction, or a
-        // crashed tombstone merge — survivors keep their ck keys, so the
-        // recorded grid still describes them); a grid-CHANGING rebuild
-        // adds re-keyed rows and stays refused
-        val now  = Versioned.read(spark, t, Some(vNew))
-        val prev = Versioned.read(spark, t, Some(vNew - 1))
-        val keyCol = if (now.columns.contains("doc_id")) "doc_id" else "cand_id"
-        val goneUntombed = Tombstones.of(spark, indexDir) match {
-          case None => prev.exceptAll(now)
-          case Some(tb) => prev.exceptAll(now).join(
-            broadcast(tb.select(col("doc_id").as("__ts_doc"))),
-            shiftright(col(keyCol), 32) === col("__ts_doc"), "left_anti")
-        }
-        if (now.exceptAll(prev).isEmpty && goneUntombed.isEmpty)
-          writeChunkGrid(spark, indexDir, s.toInt, st.toInt, vNew)
-      case _ => ()
-    }
-  }
+                       stampTable: String = "postings"): Unit =
+    Stamp.restamp(spark, indexDir, Stamp.chunkGrid(stampTable))
 
   /** Compact the chunk index ([[compactBm25Index]] — re-establishes
     * the bucketed layout in lockstep) and RE-STAMP the grid sidecar at
@@ -1774,7 +1331,7 @@ object Retrieval {
   def compactChunkBm25Index(spark: SparkSession, indexDir: String): Long = {
     val (size, stride) = chunkGrid(spark, indexDir)
     val v = compactBm25Index(spark, indexDir)
-    writeChunkGrid(spark, indexDir, size, stride, v)
+    Stamp.write(spark, indexDir, lexGrid, (size, stride), v)
     v
   }
 
@@ -1988,7 +1545,7 @@ object Retrieval {
         Seq("id"))
     val v = Similarity.buildIvfIndex(vecs, indexDir, nCentroids,
       lloydIters, nBuckets, metaCols = metaCols)
-    writeChunkGrid(docs.sparkSession, indexDir, size, stride, v)
+    Stamp.write(docs.sparkSession, indexDir, annGrid, (size, stride), v)
     v
   }
 
@@ -2029,66 +1586,41 @@ object Retrieval {
   def compactChunkIvfIndex(spark: SparkSession, indexDir: String): Long = {
     val (size, stride) = chunkGrid(spark, indexDir, stampTable = "assignment")
     val v = Similarity.compactIvfIndex(spark, indexDir)
-    writeChunkGrid(spark, indexDir, size, stride, v)
+    Stamp.write(spark, indexDir, annGrid, (size, stride), v)
     v
   }
 
-  /** The grid values the sidecar RECORDS, ignoring its stamp — what a
-    * RETRAIN rebuild reads (the sidecarRecordedModulus discipline: the
-    * stamp is stale exactly when a prior rebuild crashed, the recorded
-    * grid is still the corpus's grid, and the rebuild re-stamps at its
-    * own commit, which is what makes the stamp true again). None when
-    * absent or corrupt.
+  /** Run a RETRAIN `rebuild` of a chunk ANN dir and re-stamp the grid at
+    * its overwrite (the grid itself is immutable across a retrain — same
+    * windows, fresh centroids). The grid reads stamp-UNvalidated
+    * ([[Stamp.recorded]]): a stale stamp left by a crashed prior rebuild
+    * must not wedge the retrain cadence, and the rebuild sources from the
+    * last LOCKSTEP snapshot — the era the recorded grid describes — then
+    * makes the stamp true again at its own commit.
     */
-  private def chunkGridRecorded(spark: SparkSession,
-                                indexDir: String): Option[(Int, Int)] = {
-    val p = chunkGridPath(indexDir)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      raw.trim.split(" ") match {
-        case Array(s, st, v) if Seq(s, st, v).forall(_.forall(_.isDigit)) =>
-          Some((s.toInt, st.toInt))
-        case _ => None
-      }
-    }
+  private def regridded(spark: SparkSession, indexDir: String,
+                        builder: String)(rebuild: => Long): Long = {
+    val grid = Stamp.recorded(spark, indexDir, annGrid).map(_._1)
+      .getOrElse(sys.error(s"$indexDir carries no parseable " +
+        s"${annGrid.name} sidecar — rebuild from the corpus with $builder"))
+    val v = rebuild
+    Stamp.write(spark, indexDir, annGrid, grid, v)
+    v
   }
 
-  /** [[Similarity.rebuildIvfIndex]] on a CHUNK-grain dir, re-stamping
-    * the grid sidecar at the rebuilt overwrite (the grid itself is
-    * immutable across a retrain — same windows, fresh centroids). The
-    * grid reads stamp-UNvalidated ([[chunkGridRecorded]]): a stale
-    * stamp left by a crashed prior rebuild must not wedge the retrain
-    * cadence, and the rebuild sources from the last LOCKSTEP snapshot —
-    * the era the recorded grid describes — then makes the stamp true
-    * again at its own commit.
-    */
+  /** [[Similarity.rebuildIvfIndex]] on a CHUNK-grain dir ([[regridded]]). */
   def rebuildChunkIvfIndex(spark: SparkSession, indexDir: String,
-                           lloydIters: Int = 0): Long = {
-    val (size, stride) = chunkGridRecorded(spark, indexDir).getOrElse(
-      sys.error(s"$indexDir carries no parseable chunk_grid sidecar — " +
-        "rebuild from the corpus with buildChunkIvfIndex"))
-    val v = Similarity.rebuildIvfIndex(spark, indexDir, lloydIters)
-    writeChunkGrid(spark, indexDir, size, stride, v)
-    v
-  }
+                           lloydIters: Int = 0): Long =
+    regridded(spark, indexDir, "buildChunkIvfIndex")(
+      Similarity.rebuildIvfIndex(spark, indexDir, lloydIters))
 
-  /** [[Similarity.rebuildIvfPqIndex]] on a CHUNK-grain dir, grid
-    * re-stamped as in [[rebuildChunkIvfIndex]]. */
+  /** [[Similarity.rebuildIvfPqIndex]] on a CHUNK-grain dir
+    * ([[regridded]]). */
   def rebuildChunkIvfPqIndex(spark: SparkSession, indexDir: String,
                              pqLloydIters: Int = 0,
-                             lloydIters: Int = 0): Long = {
-    val (size, stride) = chunkGridRecorded(spark, indexDir).getOrElse(
-      sys.error(s"$indexDir carries no parseable chunk_grid sidecar — " +
-        "rebuild from the corpus with buildChunkIvfPqIndex"))
-    val v = Similarity.rebuildIvfPqIndex(spark, indexDir, pqLloydIters,
-      lloydIters)
-    writeChunkGrid(spark, indexDir, size, stride, v)
-    v
-  }
+                             lloydIters: Int = 0): Long =
+    regridded(spark, indexDir, "buildChunkIvfPqIndex")(
+      Similarity.rebuildIvfPqIndex(spark, indexDir, pqLloydIters, lloydIters))
 
   /** Build the COMPRESSED chunk-grain ANN index — [[buildChunkIvfIndex]]
     * with the assignment storing m-byte PQ codes instead of float
@@ -2122,7 +1654,7 @@ object Retrieval {
     val v = Similarity.buildIvfPqIndex(vecs, indexDir, nCentroids, m, ks,
       pqLloydIters, lloydIters, dim, residual, nBuckets,
       metaCols = metaCols)
-    writeChunkGrid(docs.sparkSession, indexDir, size, stride, v)
+    Stamp.write(docs.sparkSession, indexDir, annGrid, (size, stride), v)
     v
   }
 
@@ -2701,7 +2233,7 @@ object Retrieval {
         col("toks"),
         pmod(col("doc_id"), lit(n.toLong)).as("doc_part"))
     val v = Versioned.overwritePartitioned(rows, s"$indexDir/fwd", "doc_part")
-    writeShardSidecar(docs.sparkSession, indexDir, "doc_parts", n, v)
+    Stamp.write(docs.sparkSession, indexDir, Stamp.DocParts, n, v)
     v
   }
 
@@ -2716,7 +2248,7 @@ object Retrieval {
     * count at build, and re-deriving at [[compactForwardIndex]], keeps
     * shard bytes — and therefore a fixed serving batch's read — flat.
     */
-  private def autoDocShards(count: Long): Int =
+  private[operators] def autoDocShards(count: Long): Int =
     math.max(4L, math.min(4096L, (count + 63L) / 64L)).toInt
 
   /** Append a batch of NEW documents to the forward index (the daily
@@ -2729,10 +2261,10 @@ object Retrieval {
   def appendToForwardIndex(batch: DataFrame, id: Column, text: Column,
                            indexDir: String): Long = {
     val spark = batch.sparkSession
-    val n = docPartsOf(spark, indexDir).getOrElse(sys.error(
-      s"$indexDir forward index's doc_parts sidecar is absent or stale " +
-        "(a rebuild crashed between its commit and the stamp) — rebuild " +
-        "with buildForwardIndex"))
+    val n = Stamp.read(spark, indexDir, Stamp.DocParts).getOrElse(sys.error(
+      s"$indexDir forward index's ${Stamp.DocParts.name} sidecar is " +
+        "absent or stale (a rebuild crashed between its commit and the " +
+        "stamp) — rebuild with buildForwardIndex"))
     val rows = batch.select(id.as("doc_id"), TextOps.tokens(text).as("toks"))
       .select(col("doc_id"),
         org.apache.spark.sql.functions.size(col("toks")).cast("long").as("dl"),
@@ -2751,7 +2283,7 @@ object Retrieval {
     * is read-validated BEFORE any rewrite moves the stamp.
     */
   def compactForwardIndex(spark: SparkSession, indexDir: String): Long =
-    docPartsOf(spark, indexDir) match {
+    Stamp.read(spark, indexDir, Stamp.DocParts) match {
       case Some(_) =>
         // tombstoned documents drop from the rewrite (single table — no
         // stats to correct, no lockstep partner; see [[Tombstones]])
@@ -2762,7 +2294,7 @@ object Retrieval {
         val v = Versioned.overwritePartitioned(
           cur.withColumn("doc_part", pmod(col("doc_id"), lit(n.toLong))),
           s"$indexDir/fwd", "doc_part")
-        writeShardSidecar(spark, indexDir, "doc_parts", n, v)
+        Stamp.write(spark, indexDir, Stamp.DocParts, n, v)
         v
       case None =>
         // untrusted sidecar: layout-preserving compact, with the
@@ -2775,72 +2307,24 @@ object Retrieval {
           s"$indexDir/fwd")
     }
 
-  private def docPartsOf(spark: SparkSession, indexDir: String): Option[Int] =
-    shardSidecarOf(spark, indexDir, "doc_parts", "fwd")
-
-  /** Re-stamp the doc_parts sidecar after a crash left it stale — the
-    * [[restampTokParts]] twin for the FORWARD index: a compaction that
-    * died between its overwrite commit and the sidecar re-stamp leaves
-    * every [[appendToForwardIndex]] refusing with a rebuild message
-    * even though the modulus is fully recoverable (and a
-    * maintenance-grain operator that OBEYED that message would rebuild
-    * from one day's batch, silently dropping prior days). The stamp is
-    * restored only after the candidate modulus is VERIFIED against the
-    * data (every row must satisfy doc_part = pmod(doc_id, n) — a
-    * crashed rebuild with a DIFFERENT modulus leaves rows that fail
-    * this, and blessing the old stamp there would prune probes to the
-    * wrong shards). Candidates: the stale sidecar's recorded modulus,
-    * then max(doc_part)+1 off the data. No candidate verifying ⇒ the
-    * sidecar stays stale: queries degrade to unpruned (correct),
-    * appends keep refusing. No-op when already trusted.
+  /** Re-stamp a stale doc_parts sidecar ([[Stamp.restamp]] of
+    * [[Stamp.DocParts]]): a compaction that died between its overwrite
+    * commit and the re-stamp leaves every [[appendToForwardIndex]]
+    * refusing, though the modulus is recoverable (a maintenance-grain
+    * operator that OBEYED the rebuild message would rebuild from one
+    * day's batch, silently dropping prior days). The modulus is blessed
+    * only after every row verifies doc_part = pmod(doc_id, n); nothing
+    * verifying ⇒ queries stay unpruned (correct) and appends keep
+    * refusing. No-op when already trusted.
     */
   def repairForwardIndex(spark: SparkSession, indexDir: String): Unit =
-    restampModSidecar(spark, indexDir, "doc_parts", "fwd",
-      "doc_id", "doc_part", n => Some(autoDocShards(n)))
-
-  /** The generic pmod-shard restamp behind [[repairForwardIndex]] and
-    * the ANN vectors table's vec_parts repair: verify a candidate
-    * modulus against every row's recorded shard, then re-stamp the
-    * sidecar at the table's current overwrite snapshot. Shared by every
-    * partitioned layout whose shard key is `pmod(id, n)` (tok_parts
-    * hashes the token first and keeps its own verifier). Candidates, in
-    * order: the stale sidecar's recorded modulus (an append/compact
-    * crash that kept the modulus), max(partCol)+1 off the data (the
-    * sidecar-missing shape — exact when the top shard is non-empty),
-    * and `autoModulus(row count)` — the modulus an AUTO-SIZED crashed
-    * compaction actually used, which the first two miss when the
-    * compact re-derived a NEW modulus whose top shard happens to be
-    * empty (no id ≡ n−1 mod n): without it the sidecar stayed stale and
-    * appends wedged behind a rebuild message that repair cannot honor.
-    */
-  private[operators] def restampModSidecar(spark: SparkSession,
-      indexDir: String, name: String, table: String,
-      idCol: String, partCol: String,
-      autoModulus: Long => Option[Int] = _ => None): Unit = {
-    val t = s"$indexDir/$table"
-    if (!Versioned.exists(spark, t)) return
-    if (!Versioned.declaredLayout(spark, t).startsWith("part:")) return
-    if (shardSidecarOf(spark, indexDir, name, table).nonEmpty) return
-    val stampV = lastOverwriteOf(spark, indexDir, table)
-    val rows = Versioned.read(spark, t).select(col(idCol), col(partCol))
-    val recorded = sidecarRecordedModulus(spark, indexDir, name)
-    val maxRow = rows.agg(max(col(partCol)), count(lit(1))).head
-    val fromData: Seq[Int] =
-      if (maxRow.isNullAt(0)) Seq.empty else Seq(maxRow.getLong(0).toInt + 1)
-    val fromAuto: Seq[Int] =
-      if (maxRow.isNullAt(0)) Seq.empty
-      else autoModulus(maxRow.getLong(1)).toSeq
-    (recorded.toSeq ++ fromData ++ fromAuto).distinct
-      .find(n => rows
-        .filter(col(partCol) =!= pmod(col(idCol), lit(n.toLong))).isEmpty)
-      .foreach(n => writeShardSidecar(spark, indexDir, name, n, stampV))
-  }
+    Stamp.restamp(spark, indexDir, Stamp.DocParts)
 
   /** Forward rows for a bounded doc set: the set's distinct doc ids
     * broadcast ONTO the partitioned forward scan. On a trusted sidecar
     * the join carries doc_part, so Spark DPP prunes unprobed doc-shard
     * directories at run time — for the latest read AND for any asOf
-    * pinned inside the live layout epoch ([[shardSidecarFor]] — what
+    * pinned inside the live layout epoch ([[Stamp.read]] — what
     * keeps a pinned serving stream pruned); an untrusted sidecar or a
     * pre-epoch pin degrades to the unpruned-but-correct doc_id join.
     * `need` names the forward columns to read — parquet prunes the
@@ -2874,7 +2358,7 @@ object Retrieval {
     // into a context window even if an ungated caller asks for it
     val ids = Tombstones.gate(spark, indexDir,
       docSet.select(col("doc_id")).distinct(), col("doc_id"))
-    shardSidecarFor(spark, indexDir, "doc_parts", "fwd", asOf) match {
+    Stamp.read(spark, indexDir, Stamp.DocParts, asOf) match {
       case Some(n) =>
         // the shard-range guard is an invariant (pmod lands in [0, n))
         // doing double duty: it is the selective predicate Spark's

@@ -631,7 +631,7 @@ object Similarity {
     if (vv == va && heads.forall(_._2 == va)) {
       // intact lockstep — but a crashed compaction may still have died
       // between the vectors overwrite and the sidecar re-stamp
-      restampVecParts(spark, indexDir)
+      Stamp.restamp(spark, indexDir, Stamp.VecParts)
       return va
     }
     // commit order (append and compaction alike): vectors → centroids →
@@ -703,7 +703,7 @@ object Similarity {
             Versioned.read(spark, s"$indexDir/assignment", Some(va)),
             Retrieval.docKeyExpr(spark, indexDir, col("cand_id"))),
           s"$indexDir/assignment")
-      restampVecParts(spark, indexDir)
+      Stamp.restamp(spark, indexDir, Stamp.VecParts)
       return out
     }
     // a crashed APPEND: the orphan full-precision slice IS the batch —
@@ -749,11 +749,6 @@ object Similarity {
     appendAssignment(delta, s"$indexDir/assignment")
   }
 
-  private def restampVecParts(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String): Unit =
-    Retrieval.restampModSidecar(spark, indexDir, "vec_parts", "vectors",
-      "cand_id", "vec_part", n => Some(autoVecShards(n)))
-
   /** Compact a persisted IVF / IVF-SQ8 / IVF-PQ index after appends:
     * re-establishes the assignment table's bucketed-by-centroid layout
     * (appended batches land as plain files, demoting reads until the
@@ -795,7 +790,7 @@ object Similarity {
         val v = graft.sources.Versioned.overwritePartitioned(
           cur.withColumn("vec_part", pmod(col("cand_id"), lit(n.toLong))),
           s"$indexDir/vectors", "vec_part")
-        Retrieval.writeShardSidecar(spark, indexDir, "vec_parts", n, v)
+        Stamp.write(spark, indexDir, Stamp.VecParts, n, v)
         Seq(v)
       }
     val names = (if (vVec.nonEmpty) Seq("vectors") else Nil) ++ tables
@@ -1651,8 +1646,7 @@ object Similarity {
     require(vv == vc && vc == vb && vb == va,
       s"index tables diverged: vectors v$vv / centroids v$vc / " +
         s"codebook v$vb / assignment v$va")
-    Retrieval.writeShardSidecar(candidates.sparkSession, indexDir,
-      "vec_parts", nVec, vv)
+    Stamp.write(candidates.sparkSession, indexDir, Stamp.VecParts, nVec, vv)
     vc
   }
 
@@ -1666,7 +1660,7 @@ object Similarity {
     * from the actual corpus; [[compactIvfIndex]] re-derives it when
     * appends have outgrown the layout.
     */
-  private def autoVecShards(count: Long): Int =
+  private[operators] def autoVecShards(count: Long): Int =
     math.max(4L, math.min(4096L, (count + 127L) / 128L)).toInt
 
   /** Append a batch to a persisted IVF-PQ index without rebuilding:
@@ -1694,11 +1688,11 @@ object Similarity {
         .distinct.size == 1,
       s"$indexDir tables out of lockstep — a prior append crashed between " +
         "commits; run repairIvfIndex, then retry this append")
-    val nVec = vecPartsOf(spark, indexDir).getOrElse(sys.error(
-      s"$indexDir vectors table's vec_parts sidecar is absent or stale " +
-        "— run repairIvfIndex (a pre-vectors index must rebuild with " +
-        "buildIvfPqIndex: the exact re-rank serves from the index's own " +
-        "full-precision table)"))
+    val nVec = Stamp.read(spark, indexDir, Stamp.VecParts).getOrElse(sys.error(
+      s"$indexDir vectors table's ${Stamp.VecParts.name} sidecar is " +
+        "absent or stale — run repairIvfIndex (a pre-vectors index must " +
+        "rebuild with buildIvfPqIndex: the exact re-rank serves from the " +
+        "index's own full-precision table)"))
     val centroids = graft.sources.Versioned.read(spark, s"$indexDir/centroids")
     val cb = pqResGuard(
       graft.sources.Versioned.read(spark, s"$indexDir/codebook"), residual)
@@ -1751,10 +1745,6 @@ object Similarity {
         s"codebook v$vb / assignment v$va")
     vc
   }
-
-  private def vecPartsOf(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String): Option[Int] =
-    Retrieval.shardSidecarOf(spark, indexDir, "vec_parts", "vectors")
 
   /** Probe a persisted IVF-PQ index: probe selection in full precision
     * against the stored centroids, then an ADC scan of only the probed
@@ -1935,8 +1925,7 @@ object Similarity {
                          asOf: Option[Long]): DataFrame = {
     val vt = graft.sources.Versioned.read(spark, s"$indexDir/vectors", asOf)
     val ids = candSet.select(col("cand_id")).distinct()
-    Retrieval.shardSidecarFor(spark, indexDir, "vec_parts", "vectors",
-        asOf) match {
+    Stamp.read(spark, indexDir, Stamp.VecParts, asOf) match {
       case Some(n) =>
         val probe = ids
           .withColumn("vec_part", pmod(col("cand_id"), lit(n.toLong)))

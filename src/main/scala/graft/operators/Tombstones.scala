@@ -176,7 +176,7 @@ object Tombstones {
     }
 
   /** Retention-aligned tombstone VACUUM — the [[graft.operators
-    * .Retrieval.vacuumIndexSidecars]] discipline applied to the gate
+    * .Stamp.vacuum]] discipline applied to the gate
     * table itself: "never cleared" is correct only while some retained
     * version can still SERVE the doc; once the physical drop has
     * compacted through AND the data retention window has passed the

@@ -630,19 +630,27 @@ object Versioned {
     * production (guide §6: file listing is a real cost at scale).
     */
   private val relationCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long, Int), DataFrame]
+    .empty[(SparkSession, String),
+      scala.collection.concurrent.TrieMap[(Long, Int), (DataFrame, Long)]]
+
+  /** Access clock: each hit or insert stamps its entry with the next
+    * tick, so eviction drops the least recently READ entries. */
+  private val relationTouch = new java.util.concurrent.atomic.AtomicLong
 
   /** Entries retained per (session, table): the live version plus the
     * handful of pinned `asOf` reads a maintenance/audit path touches.
     * Long-lived sessions otherwise accumulate one plan-sized entry per
     * (version, digest) between vacuums (r17 VERDICT #6) — bounded here
-    * by evicting the OLDEST versions beyond this count on each insert.
+    * by evicting the least recently read entries beyond this count on
+    * each read (never the one just read: evicting by version number
+    * dropped a pin older than the cached ones right after inserting it,
+    * so every such read re-planned).
     */
   private val relationCacheRetain = 4
 
   /** Test hook: live relation-cache entries for `table`. */
   private[graft] def relationCacheEntries(table: String): Int =
-    relationCache.keys.count(_._2 == table)
+    relationCache.collect { case (k, es) if k._2 == table => es.size }.sum
 
   /** Drop cached relations for `table` (every session/version) — called
     * by [[vacuum]]; required by anything else that DELETES files under
@@ -660,23 +668,25 @@ object Versioned {
     val f = fs(spark, new Path(table))
     val snap = resolve(f, table, asOf)
     relationCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) relationCache.remove(k): Unit
+      if (k._2 == table && k._1.sparkContext.isStopped)
+        relationCache.remove(k): Unit
     }
     // the key carries a digest of the snapshot's FILE SET (staged dirs
     // embed a random salt), so a table dir that is deleted and rebuilt
     // from scratch — same path, version numbers restarting at 0 — can
     // never serve a stale cached file index (the q117 state-dir wipe
     // shape); it simply mints a new key.
-    val fileSet = (snap.add, snap.schemaJson, snap.layout).hashCode()
-    val df = relationCache.getOrElseUpdate((spark, table, snap.version, fileSet),
-      readUncached(spark, table, snap))
-    // latest-N retention per (session, table): drop the oldest-version
-    // entries beyond the retain bound (plan-sized, but a long-lived
-    // session re-reading a churning table should not grow without limit)
-    relationCache.keys.toSeq
-      .filter(k => (k._1 eq spark) && k._2 == table)
-      .sortBy(-_._3).drop(relationCacheRetain)
-      .foreach(relationCache.remove(_): Unit)
+    val key = (snap.version, (snap.add, snap.schemaJson, snap.layout).hashCode())
+    val entries = relationCache.getOrElseUpdate((spark, table),
+      scala.collection.concurrent.TrieMap.empty)
+    val df = entries.get(key).fold(readUncached(spark, table, snap))(_._1)
+    entries.put(key, (df, relationTouch.incrementAndGet())): Unit
+    // retention per (session, table): keep the most recently read
+    // entries (plan-sized, but a long-lived session re-reading a
+    // churning table should not grow without limit)
+    entries.toSeq.filter(_._1 != key).sortBy(-_._2._2)
+      .drop(relationCacheRetain - 1)
+      .foreach(e => entries.remove(e._1): Unit)
     df
   }
 

@@ -377,7 +377,7 @@ class TombstoneSpec extends SparkSpec {
     assert(epochFiles >= 4, s"expected a grown history, got $epochFiles")
     Versioned.vacuum(spark, s"$dir/postings", retainVersions = 2)
     Versioned.vacuum(spark, s"$dir/stats", retainVersions = 2)
-    val removed = Retrieval.vacuumIndexSidecars(spark, dir, retainVersions = 2)
+    val removed = graft.operators.Stamp.vacuum(spark, dir, retainVersions = 2)
     assert(removed > 0)
     // ≤ retained-epochs + 1 per sidecar name (the floor-covering epoch)
     val tokEpochs = f.listFiles.map(_.getName).count(_.startsWith("tok_parts@"))

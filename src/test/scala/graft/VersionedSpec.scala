@@ -362,6 +362,18 @@ class VersionedSpec extends SparkSpec {
       .as[String].head() == "v0")
   }
 
+  test("relation cache evicts by read recency: a pin older than every " +
+      "cached version stays cached after it is read") {
+    val t = tmpTable()
+    (0 to 5).foreach(i =>
+      Versioned.overwrite(Seq((i.toLong, s"v$i")).toDF("k", "v"), t): Unit)
+    Versioned.read(spark, t): Unit
+    val pinned = (4L to 0L by -1L).map(v => Versioned.read(spark, t, Some(v)))
+    assert(Versioned.read(spark, t, asOf = Some(0L)) eq pinned.last,
+      "a re-read of the most recently read pin must hit the cache")
+    assert(Versioned.relationCacheEntries(t) <= 4)
+  }
+
   test("merge: CDC upserts produce new versions with Upsert semantics") {
     val t = tmpTable()
     Versioned.merge(Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "seq"), t,

@@ -12,7 +12,7 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 # SPARK_GRAFT_JVM_OPTS: extra -D system properties for experiments
-# (e.g. -Dspark.local.dir=/dev/shm/x for the CheckpointDiag device test)
+# (e.g. -Dspark.local.dir=/dev/shm/x to put block and shuffle files on tmpfs)
 exec java $ADDOPENS $SPARK_GRAFT_JVM_OPTS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
