@@ -67,11 +67,11 @@ object PlanAudit {
       }
     }
 
-    // DPP evidence for the dynamic-term serving path: the probe join
-    // runs as its own job behind queryBm25IndexMany's checkpoint seam,
-    // so q172's row above cannot show it — audit the fragment directly,
-    // over a storage-backed filtered batch (DPP's trigger shape)
-    // against a partition-layout index.
+    // DPP evidence for the dynamic-term serving path: q172's row above
+    // probes with an in-memory query batch, which DPP does not treat as
+    // selective — audit the probe fragment directly, over a
+    // storage-backed filtered batch (DPP's trigger shape) against a
+    // partition-layout index.
     {
       import org.apache.spark.sql.functions.col
       import spark.implicits._
@@ -116,8 +116,8 @@ object PlanAudit {
 
     // Faceted serve: ranking AND facets must consume ONE staged pass of
     // the token-pruned slice — after the checkpoint seam neither
-    // consumer may re-scan the postings parquet (the facet plan reads
-    // no parquet at all; the ranking's only parquet is the 1-row stats).
+    // consumer may re-scan the postings parquet (neither plan reads
+    // parquet at all: the 1-row stats are plan literals).
     {
       import org.apache.spark.sql.functions.col
       val tmp = java.nio.file.Files.createTempDirectory("audit_facet").toString
@@ -138,13 +138,13 @@ object PlanAudit {
               .getOrElse("?")
         }
       }
-      // the ranking may list the same stats file under both the initial
-      // and final adaptive plan — DISTINCT files is the honest count
+      // a plan may list the same file under both the initial and final
+      // adaptive plan — DISTINCT files is the honest count
       println("Faceted serve (queryBm25IndexFaceted, one staged slice): " +
         s"facet-plan parquet scans = ${parquetScans(facets).size} (want 0: " +
         "the staged slice is the only input), ranking-plan distinct " +
         s"parquet files = ${parquetScans(ranked).distinct.size} " +
-        "(want 1: the 1-row stats — postings are never re-scanned)")
+        "(want 0: the stats are plan literals, postings are never re-scanned)")
     }
     spark.stop()
   }

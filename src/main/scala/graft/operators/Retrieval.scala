@@ -84,6 +84,49 @@ object Retrieval {
       .select(col("doc_id"), col("n_terms"), col("s").cast("double").as("score"))
   }
 
+  /** A persisted index's 1-row corpus stats (n_docs, sum_dl) at `asOf`
+    * appended to `rows` as plan literals — read once per stats version
+    * ([[Versioned.rows]]), so a probe neither scans nor broadcasts the
+    * stats table per request. The inline [[bm25Scores]] keeps its
+    * corpus-derived stats.
+    */
+  private def withIndexStats(spark: SparkSession, indexDir: String,
+                             asOf: Option[Long], rows: DataFrame): DataFrame = {
+    val stats = Versioned.rows(spark, s"$indexDir/stats", asOf,
+      Seq("n_docs", "sum_dl"))
+    require(stats.size == 1, s"$indexDir stats must be one row, found " +
+      s"${stats.size} — rebuild the index")
+    val r = stats.head
+    rows.select(col("*") +: r.schema.fields.toSeq.zipWithIndex.map {
+      case (f, i) => lit(r.get(i)).cast(f.dataType).as(f.name) }: _*)
+  }
+
+  /** df per (`group`…, tok) as a window count over a probed postings
+    * slice (one row per (tok, doc) per group) — the same number as a
+    * per-term aggregate joined back, without the join, so the slice has
+    * one consumer and needs no staging seam. Filters applied ABOVE the
+    * window (metadata predicates, tombstone gates) leave df index-global;
+    * only a filter on the window's own keys could sink below it, and that
+    * drops whole partitions without changing the others' counts.
+    */
+  private def withDf(slice: DataFrame, group: Seq[String]): DataFrame =
+    slice.withColumn("df", count(lit(1)).over(
+      org.apache.spark.sql.expressions.Window
+        .partitionBy((group :+ "tok").map(col): _*)))
+
+  /** Per-(`group`…, doc) BM25 over an index slice carrying df, with the
+    * index stats as literals ([[withIndexStats]]). */
+  private def scoreIndexed(spark: SparkSession, indexDir: String,
+                           asOf: Option[Long], slice: DataFrame,
+                           group: Seq[String], k1: Double,
+                           b: Double): DataFrame =
+    withIndexStats(spark, indexDir, asOf, slice)
+      .groupBy((group :+ "doc_id").map(col): _*)
+      .agg(count(lit(1)).as("n_terms"),
+           sum(bmTermExpr(k1, b).cast("decimal(27,10)")).as("s"))
+      .select((group.map(col) ++ Seq(col("doc_id"), col("n_terms"),
+        col("s").cast("double").as("score"))): _*)
+
   /** BM25 scores for every document matching ≥1 query term.
     * Output: doc_id, n_terms (distinct query terms present), score.
     */
@@ -94,9 +137,8 @@ object Retrieval {
     // tf feeds BOTH the scoring join and the df derivation — stage it
     // (it is query-term-sized: ≤ |T| rows per matching doc) so the
     // second consumer does not replay the corpus explode lineage. The
-    // index path passes its tf through UNstaged: there the input is
-    // already a token-pruned postings scan, and re-reading that beats
-    // hiding the parquet pushdown behind a checkpoint.
+    // index paths derive df by a window instead ([[withDf]]) over their
+    // token-pruned postings scan, which keeps the parquet pushdown.
     scoreDocs(tf.localCheckpoint(eager = false), stats, k1, b)
   }
 
@@ -303,8 +345,8 @@ object Retrieval {
   // --------------------------------------------------- tombstone gating
   //
   // Document deletion ([[Tombstones]]): every probe of a persisted
-  // index anti-joins its candidates against the index's broadcast
-  // tombstone set BEFORE ranking — survivors fill the top-k (no
+  // index filters its candidates against the index's tombstone id set
+  // (a plan literal) BEFORE ranking — survivors fill the top-k (no
   // starvation), and df/cf/corpus stats stay PRE-delete until the
   // compaction physically drops the rows and corrects them (Lucene
   // delete-then-merge). Chunk-grain indexes gate on the decoded doc id
@@ -619,7 +661,8 @@ object Retrieval {
     }
 
   /** Query the persisted index: touches only the query terms' postings
-    * (token filter pushed into the parquet scan) + the 1-row stats;
+    * (token filter pushed into the parquet scan); the 1-row stats are
+    * plan literals ([[withIndexStats]]);
     * `asOf` time-travels to any historical index version. Scores are
     * IDENTICAL to the inline [[bm25TopK]] over the same corpus — same
     * formula over the same exact integers.
@@ -634,10 +677,11 @@ object Retrieval {
         Versioned.read(spark, s"$indexDir/postings", asOf), terms, asOf)
       .filter(col("tok").isInCollection(terms))
       .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
-    val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
     // pending deletes gate the scored set pre-ranking (stats/df stay
     // pre-delete until compaction — the Lucene split, see [[Tombstones]])
-    tombGate(spark, indexDir, scoreDocs(tf, stats, k1, b), "doc_id")
+    tombGate(spark, indexDir,
+        scoreIndexed(spark, indexDir, asOf, withDf(tf, Nil), Nil, k1, b),
+        "doc_id")
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
   }
@@ -694,18 +738,9 @@ object Retrieval {
     val slice = shardPruned(spark, indexDir, posts, terms, asOf)
       .filter(col("tok").isInCollection(terms))
     // df from the UNgated slice (index-global idf), scoring over the
-    // gated rows — both consume the same token-pruned scan
-    val dfTab = slice.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
-    tombGate(spark, indexDir, slice.filter(predicate)
-      .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
-      .join(dfTab, Seq("tok"))
-      .crossJoin(stats) // 1 row — broadcast nested loop by construction
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-           sum(bmTermExpr(k1, b).cast("decimal(27,10)")).as("s"))
-      .select(col("doc_id"), col("n_terms"), col("s").cast("double").as("score")),
-      "doc_id")
+    // gated rows — the predicate filters above the df window
+    tombGate(spark, indexDir, scoreIndexed(spark, indexDir, asOf,
+        withDf(slice, Nil).filter(predicate), Nil, k1, b), "doc_id")
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
   }
@@ -730,8 +765,8 @@ object Retrieval {
     * token-shard DIRECTORIES' bytes at run time — the lever a dynamic
     * term set cannot get from bucketing (a literal IN would need the
     * terms at plan time). Package-visible so the plan audit can assert
-    * the dynamicpruning subquery on the fragment that actually runs it
-    * ([[queryBm25IndexMany]] stages this behind a checkpoint seam).
+    * the dynamicpruning subquery on the probe fragment itself, on a
+    * storage-backed query batch.
     */
   private[graft] def bm25ManyHits(spark: SparkSession, indexDir: String,
                                   queries: DataFrame,
@@ -745,8 +780,12 @@ object Retrieval {
       (partN.map(_ => col("tok_part")).toSeq ++
         Seq(col("doc_id"), col("dl"), col("tok"), col("tf")) ++
         postingsMetaCols(postsAll).map(col)): _*)
+    // the (query, term) set is broadcast, so it is small by construction:
+    // dedup it in one partition — a single-partition aggregate needs no
+    // shuffle
     val qt0 = queries
-      .select(col("query_id"), explode(col("terms")).as("tok")).distinct()
+      .select(col("query_id"), explode(col("terms")).as("tok"))
+      .coalesce(1).distinct()
     val (qt, joinKeys) = partN match {
       case Some(n) =>
         (qt0.withColumn("tok_part", tokPartExpr(col("tok"), n)),
@@ -759,29 +798,9 @@ object Retrieval {
   def queryBm25IndexMany(spark: SparkSession, indexDir: String,
                          queries: DataFrame, k: Int,
                          k1: Double = K1, b: Double = B,
-                         asOf: Option[Long] = None): DataFrame = {
-    requireLockstep(spark, indexDir, asOf)
-    val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
-    // the pruned (query, posting) slice feeds BOTH df and scoring —
-    // stage it (bounded by Σ per-query postings, not the corpus); the
-    // join fragment runs as its own job, so its DPP fires there (and is
-    // plan-audited there — the downstream plan only sees the RDD seam)
-    val hits = bm25ManyHits(spark, indexDir, queries, asOf)
-      .localCheckpoint(eager = false)
-    val dfTab = hits.groupBy(col("query_id"), col("tok"))
-      .agg(count(lit(1)).as("df"))
-    val scored = hits.join(dfTab, Seq("query_id", "tok"))
-      .crossJoin(stats)
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-           sum(bmTermExpr(k1, b).cast("decimal(27,10)")).as("s"))
-      .select(col("query_id"), col("doc_id"), col("n_terms"),
-        col("s").cast("double").as("score"))
-    Ranking.topPerGroup(tombGate(spark, indexDir, scored, "doc_id"),
-        Seq(col("query_id")), Seq(col("score").desc, col("doc_id").asc), k)
-      .select(col("query_id"), col("doc_id"), col("n_terms"), col("score"))
+                         asOf: Option[Long] = None): DataFrame =
+    bm25ManyTop(spark, indexDir, queries, k, None, k1, b, asOf)
       .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-  }
 
   /** [[queryBm25IndexFiltered]] at serving batch width — MANY queries,
     * one predicate-gated postings pass: identical probe shape to
@@ -796,27 +815,31 @@ object Retrieval {
                                  queries: DataFrame, k: Int,
                                  predicate: Column,
                                  k1: Double = K1, b: Double = B,
-                                 asOf: Option[Long] = None): DataFrame = {
+                                 asOf: Option[Long] = None): DataFrame =
+    bm25ManyTop(spark, indexDir, queries, k, Some(predicate), k1, b, asOf)
+      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
+
+  /** The top-k per query of [[queryBm25IndexMany]] (and, with a
+    * predicate, [[queryBm25IndexManyFiltered]]), unsorted: what a fusion
+    * arm hands [[rrfFuse]], which re-ranks per query anyway. df per
+    * (query, term) is a window over the UNgated (query, posting) slice,
+    * so the slice has one consumer: no staging seam, and the probe
+    * join's DPP runs inside the same plan.
+    */
+  private def bm25ManyTop(spark: SparkSession, indexDir: String,
+                          queries: DataFrame, k: Int,
+                          predicate: Option[Column], k1: Double, b: Double,
+                          asOf: Option[Long]): DataFrame = {
     requireLockstep(spark, indexDir, asOf)
-    requirePostingsPredicate(indexDir,
-      Versioned.read(spark, s"$indexDir/postings", asOf), predicate)
-    val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
-    val hits = bm25ManyHits(spark, indexDir, queries, asOf)
-      .localCheckpoint(eager = false)
-    val dfTab = hits.groupBy(col("query_id"), col("tok"))
-      .agg(count(lit(1)).as("df"))
-    val scored = hits.filter(predicate)
-      .join(dfTab, Seq("query_id", "tok"))
-      .crossJoin(stats)
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-           sum(bmTermExpr(k1, b).cast("decimal(27,10)")).as("s"))
-      .select(col("query_id"), col("doc_id"), col("n_terms"),
-        col("s").cast("double").as("score"))
+    predicate.foreach(requirePostingsPredicate(indexDir,
+      Versioned.read(spark, s"$indexDir/postings", asOf), _))
+    val hits = withDf(bm25ManyHits(spark, indexDir, queries, asOf),
+      Seq("query_id"))
+    val scored = scoreIndexed(spark, indexDir, asOf,
+      predicate.map(hits.filter).getOrElse(hits), Seq("query_id"), k1, b)
     Ranking.topPerGroup(tombGate(spark, indexDir, scored, "doc_id"),
         Seq(col("query_id")), Seq(col("score").desc, col("doc_id").asc), k)
       .select(col("query_id"), col("doc_id"), col("n_terms"), col("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
   }
 
   // ------------------------------------------------------ facet counts
@@ -861,14 +884,8 @@ object Retrieval {
     // unfiltered scores), so ranking needs no second df pass
     val slice = facetSlice(spark, indexDir, terms, facetCols, predicate,
       asOf).localCheckpoint(eager = false)
-    val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
-    val ranked = tombGate(spark, indexDir, slice
-      .crossJoin(stats) // 1 row — broadcast nested loop by construction
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-           sum(bmTermExpr(k1, b).cast("decimal(27,10)")).as("s"))
-      .select(col("doc_id"), col("n_terms"),
-        col("s").cast("double").as("score")), "doc_id")
+    val ranked = tombGate(spark, indexDir,
+        scoreIndexed(spark, indexDir, asOf, slice, Nil, k1, b), "doc_id")
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
     (ranked, facetsOf(spark, indexDir, slice, facetCols))
@@ -895,13 +912,11 @@ object Retrieval {
         "scan, so the columns must be baked at build (metaCols; available: " +
         s"${postingsMetaCols(posts) match {
           case Nil => "none"; case ms => ms.mkString(", ") }})")
-    val slice = shardPruned(spark, indexDir, posts, terms, asOf)
-      .filter(col("tok").isInCollection(terms))
-    val dfTab = slice.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val gated = predicate.map(slice.filter).getOrElse(slice)
-    gated.select((col("doc_id") +: col("dl") +: col("tok") +: col("tf") +:
-        facetCols.map(col)): _*)
-      .join(dfTab, Seq("tok"))
+    val slice = withDf(shardPruned(spark, indexDir, posts, terms, asOf)
+      .filter(col("tok").isInCollection(terms)), Nil)
+    predicate.map(slice.filter).getOrElse(slice)
+      .select((col("doc_id") +: col("dl") +: col("tok") +: col("tf") +:
+        col("df") +: facetCols.map(col)): _*)
   }
 
   private def facetsOf(spark: SparkSession, indexDir: String,
@@ -946,13 +961,12 @@ object Retrieval {
       .filter(col("tok").isInCollection(terms))
       .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
       .localCheckpoint(eager = false)
-    val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
     val cf = pruned.groupBy(col("tok")).agg(sum(col("tf")).as("cf"))
     val cand = pruned.select(col("doc_id"), col("dl")).distinct()
-    val scoredQl = cand.crossJoin(broadcast(cf))
+    val scoredQl = withIndexStats(spark, indexDir, asOf, cand
+      .crossJoin(broadcast(cf))
       .join(pruned.select(col("doc_id"), col("tok"), col("tf")),
-        Seq("doc_id", "tok"), "left")
-      .crossJoin(stats)
+        Seq("doc_id", "tok"), "left"))
       .withColumn("__s", log(
         (coalesce(col("tf"), lit(0L)).cast("double") +
           lit(mu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
@@ -978,10 +992,16 @@ object Retrieval {
     */
   def queryQlIndexMany(spark: SparkSession, indexDir: String,
                        queries: DataFrame, k: Int, mu: Double = 2000.0,
-                       asOf: Option[Long] = None): DataFrame = {
+                       asOf: Option[Long] = None): DataFrame =
+    qlManyTop(spark, indexDir, queries, k, mu, asOf)
+      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
+
+  /** [[queryQlIndexMany]]'s top-k per query, unsorted (a fusion arm). */
+  private def qlManyTop(spark: SparkSession, indexDir: String,
+                        queries: DataFrame, k: Int, mu: Double,
+                        asOf: Option[Long]): DataFrame = {
     require(mu > 0, s"Dirichlet mu must be positive, got $mu")
     requireLockstep(spark, indexDir, asOf)
-    val stats = Versioned.read(spark, s"$indexDir/stats", asOf)
     val hits = bm25ManyHits(spark, indexDir, queries, asOf)
       .select(col("query_id"), col("doc_id"), col("dl"), col("tok"),
         col("tf"))
@@ -990,10 +1010,10 @@ object Retrieval {
       .agg(sum(col("tf")).as("cf"))
     val cand = hits.select(col("query_id"), col("doc_id"), col("dl"))
       .distinct()
-    val scored = cand.join(broadcast(cf), Seq("query_id"))
+    val scored = withIndexStats(spark, indexDir, asOf, cand
+      .join(broadcast(cf), Seq("query_id"))
       .join(hits.select(col("query_id"), col("doc_id"), col("tok"),
-        col("tf")), Seq("query_id", "doc_id", "tok"), "left")
-      .crossJoin(stats)
+        col("tf")), Seq("query_id", "doc_id", "tok"), "left"))
       .withColumn("__s", log(
         (coalesce(col("tf"), lit(0L)).cast("double") +
           lit(mu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
@@ -1006,7 +1026,6 @@ object Retrieval {
     Ranking.topPerGroup(tombGate(spark, indexDir, scored, "doc_id"),
         Seq(col("query_id")), Seq(col("score").desc, col("doc_id").asc), k)
       .select(col("query_id"), col("doc_id"), col("n_terms"), col("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
   }
 
   /** Dirichlet QL over the chunk-grain index; output matches
@@ -1440,12 +1459,13 @@ object Retrieval {
                    nProbes: Int = 4, c: Int = 60,
                    bm25AsOf: Option[Long] = None,
                    ivfAsOf: Option[Long] = None): DataFrame = {
-    val lex = queryBm25IndexMany(spark, bm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, asOf = bm25AsOf)
+    val lex = bm25ManyTop(spark, bm25Dir,
+        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
+        bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.queryIvfIndex(spark, ivfDir,
+    val sem = Similarity.ivfIndexTop(spark, ivfDir,
         queries.select(col("query_id").as("id"), col("vec")), kEach,
-        nProbes, asOf = ivfAsOf)
+        nProbes, ivfAsOf, None)
       .select(col("query_id"), col("cand_id").as("doc_id"),
         col("sim").as("score"))
     rrfFuse(Seq(lex, sem), k, c)
@@ -1471,13 +1491,13 @@ object Retrieval {
                            kEach: Int = 20, nProbes: Int = 4, c: Int = 60,
                            bm25AsOf: Option[Long] = None,
                            ivfAsOf: Option[Long] = None): DataFrame = {
-    val lex = queryBm25IndexManyFiltered(spark, bm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, predicate,
-        asOf = bm25AsOf)
+    val lex = bm25ManyTop(spark, bm25Dir,
+        queries.select(col("query_id"), col("terms")), kEach,
+        Some(predicate), K1, B, bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.queryIvfIndexFiltered(spark, ivfDir,
+    val sem = Similarity.ivfIndexTop(spark, ivfDir,
         queries.select(col("query_id").as("id"), col("vec")), kEach,
-        predicate, nProbes, asOf = ivfAsOf)
+        nProbes, ivfAsOf, Some(predicate))
       .select(col("query_id"), col("cand_id").as("doc_id"),
         col("sim").as("score"))
     rrfFuse(Seq(lex, sem), k, c)
@@ -1504,12 +1524,13 @@ object Retrieval {
                      residual: Boolean = false,
                      bm25AsOf: Option[Long] = None,
                      pqAsOf: Option[Long] = None): DataFrame = {
-    val lex = queryBm25IndexMany(spark, bm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, asOf = bm25AsOf)
+    val lex = bm25ManyTop(spark, bm25Dir,
+        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
+        bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.queryIvfPqIndexReranked(spark, pqDir,
+    val sem = Similarity.pqRerankedTop(spark, pqDir,
         queries.select(col("query_id").as("id"), col("vec")),
-        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual)
+        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual, None)
       .select(col("query_id"), col("cand_id").as("doc_id"),
         col("dot").as("score"))
     rrfFuse(Seq(lex, sem), k, c)
@@ -1707,12 +1728,13 @@ object Retrieval {
     require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
       s"$gridLex vs ANN $gridSem — spans from different grids never " +
       "align; rebuild one index on the other's grid")
-    val lex = queryBm25IndexMany(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, asOf = bm25AsOf)
+    val lex = bm25ManyTop(spark, chunkBm25Dir,
+        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
+        bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.queryIvfIndex(spark, chunkIvfDir,
+    val sem = Similarity.ivfIndexTop(spark, chunkIvfDir,
         queries.select(col("query_id").as("id"), col("vec")), kEach,
-        nProbes, asOf = ivfAsOf)
+        nProbes, ivfAsOf, None)
       .select(col("query_id"), col("cand_id").as("doc_id"),
         col("sim").as("score"))
     // the optional THIRD arm — Dirichlet QL over the SAME chunk BM25
@@ -1721,9 +1743,9 @@ object Retrieval {
     // enter, so the likelihood scale never needs to be commensurate
     val arms =
       if (!qlArm) Seq(lex, sem)
-      else Seq(lex, sem, queryQlIndexMany(spark, chunkBm25Dir,
+      else Seq(lex, sem, qlManyTop(spark, chunkBm25Dir,
           queries.select(col("query_id"), col("terms")), kEach, mu,
-          asOf = bm25AsOf)
+          bm25AsOf)
         .select(col("query_id"), col("doc_id"), col("score")))
     rrfFuse(arms, k, c)
       .select(shiftright(col("doc_id"), 32).as("doc_id"),
@@ -1755,13 +1777,13 @@ object Retrieval {
     require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
       s"$gridLex vs ANN $gridSem — spans from different grids never " +
       "align; rebuild one index on the other's grid")
-    val lex = queryBm25IndexManyFiltered(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, predicate,
-        asOf = bm25AsOf)
+    val lex = bm25ManyTop(spark, chunkBm25Dir,
+        queries.select(col("query_id"), col("terms")), kEach,
+        Some(predicate), K1, B, bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.queryIvfIndexFiltered(spark, chunkIvfDir,
+    val sem = Similarity.ivfIndexTop(spark, chunkIvfDir,
         queries.select(col("query_id").as("id"), col("vec")), kEach,
-        predicate, nProbes, asOf = ivfAsOf)
+        nProbes, ivfAsOf, Some(predicate))
       .select(col("query_id"), col("cand_id").as("doc_id"),
         col("sim").as("score"))
     rrfFuse(Seq(lex, sem), k, c)
@@ -1802,12 +1824,13 @@ object Retrieval {
     require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
       s"$gridLex vs PQ $gridSem — spans from different grids never " +
       "align; rebuild one index on the other's grid")
-    val lex = queryBm25IndexMany(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, asOf = bm25AsOf)
+    val lex = bm25ManyTop(spark, chunkBm25Dir,
+        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
+        bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.queryIvfPqIndexReranked(spark, chunkPqDir,
+    val sem = Similarity.pqRerankedTop(spark, chunkPqDir,
         queries.select(col("query_id").as("id"), col("vec")),
-        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual)
+        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual, None)
       .select(col("query_id"), col("cand_id").as("doc_id"),
         col("dot").as("score"))
     rrfFuse(Seq(lex, sem), k, c)
@@ -1949,21 +1972,21 @@ object Retrieval {
     require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
       s"$gridLex vs PQ $gridSem — spans from different grids never " +
       "align; rebuild one index on the other's grid")
-    val lex = queryBm25IndexMany(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach,
-        asOf = bm25AsOf)
+    val lex = bm25ManyTop(spark, chunkBm25Dir,
+        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
+        bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val ql = queryQlIndexMany(spark, chunkBm25Dir,
+    val ql = qlManyTop(spark, chunkBm25Dir,
         queries.select(col("query_id"), col("terms")), kEach, mu,
-        asOf = bm25AsOf)
+        bm25AsOf)
       .select(col("query_id"), col("doc_id"), col("score"))
     // ONE PQ probe+rerank serves both semantic arms: the exact-dot arm
     // reads (ck, dot), the maxsim arm re-ranks the same shortlist —
     // staged once, never evaluated twice (r17: the duplicated probe
     // subtree was the single largest cost in this composition).
-    val semRaw = Similarity.queryIvfPqIndexReranked(spark, chunkPqDir,
+    val semRaw = Similarity.pqRerankedTop(spark, chunkPqDir,
         queries.select(col("query_id").as("id"), col("vec")),
-        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual)
+        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual, None)
       .localCheckpoint(eager = false)
     val sem = semRaw
       .select(col("query_id"), col("cand_id").as("doc_id"),

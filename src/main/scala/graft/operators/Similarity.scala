@@ -172,7 +172,7 @@ object Similarity {
               lloydIters: Int = 0): DataFrame = {
     val c = prepCandidates(candidates)
     val (centroids, assigned) = centroidsAndAssignment(c, nCentroids, lloydIters)
-    probeIndex(queries, centroids, assigned, k, nProbes)
+    probeIndex(queries, joinedCents(centroids), assigned, k, nProbes)
   }
 
   /** Corpus projection shared by the inline and persisted IVF paths. */
@@ -277,6 +277,35 @@ object Similarity {
     .agg(collect_list(struct(col("centroid_id"), col("centv"),
       col("cent_norm_sq"))).as("cents"))
 
+  /** Attach the `cents` array of a centroid set computed in-plan: the
+    * broadcast [[centArray]] row. */
+  private def joinedCents(cent: DataFrame): DataFrame => DataFrame =
+    _.join(broadcast(centArray(cent)), lit(true))
+
+  private val centFields = Seq("centroid_id", "centv", "cent_norm_sq")
+
+  /** Attach the `cents` array of a PERSISTED index's centroids at `asOf`
+    * as a plan literal: the [[centArray]] value, read once per centroids
+    * version ([[graft.sources.Versioned.rows]] — nCentroids rows, bounded
+    * by construction), so a probe runs no collect/broadcast job for it.
+    * Same value as the aggregate: the probe's total order makes the array
+    * order irrelevant.
+    */
+  private def indexCents(spark: org.apache.spark.sql.SparkSession,
+                         indexDir: String,
+                         asOf: Option[Long]): DataFrame => DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StructType}
+    val t = s"$indexDir/centroids"
+    val schema = graft.sources.Versioned.read(spark, t, asOf).schema
+    val dt = ArrayType(StructType(centFields.map(schema(_))), containsNull = false)
+    val value = CatalystTypeConverters.createToCatalystConverter(dt)(
+      graft.sources.Versioned.rows(spark, t, asOf, centFields))
+    val cents = org.apache.spark.sql.GraftColumnBridge.column(Literal(value, dt))
+    _.withColumn("cents", cents)
+  }
+
   /** (sim, centroid_id) per centroid, computed once per element inside
     * `transform` (the lambda binds everything it dereferences — an
     * unbound subexpression would re-evaluate per element). Null sims
@@ -301,8 +330,8 @@ object Similarity {
   /** Assignment: nearest centroid per candidate (cosine, ties → smaller
     * id), map-side per-row argmax over the broadcast centroid array.
     */
-  private def assignTo(c: DataFrame, cent: DataFrame): DataFrame = c
-    .join(broadcast(centArray(cent)), lit(true))
+  private def assignTo(c: DataFrame, cent: DataFrame): DataFrame =
+    joinedCents(cent)(c)
     .withColumn("__best",
       element_at(array_sort(scoredCents(col("cv"), col("c_norm_sq")), bySimDescIdAsc), 1))
     .select(col("__best")("centroid_id").as("centroid_id"),
@@ -317,13 +346,13 @@ object Similarity {
     * (sort the broadcast centroid array, slice, explode), and only the
     * probed buckets are scanned.
     */
-  private def probeScored(queries: DataFrame, centroids: DataFrame,
+  private def probeScored(queries: DataFrame,
+                          withCents: DataFrame => DataFrame,
                           assigned: DataFrame, nProbes: Int): DataFrame = {
     val q = queries
       .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
       .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
-    val probes = q
-      .join(broadcast(centArray(centroids)), lit(true))
+    val probes = withCents(q)
       .withColumn("__probe", explode(slice(
         array_sort(scoredCents(col("qv"), col("q_norm_sq")), bySimDescIdAsc),
         1, nProbes)))
@@ -338,12 +367,18 @@ object Similarity {
       .select(col("query_id"), col("cand_id"), col("sim"))
   }
 
-  private def probeIndex(queries: DataFrame, centroids: DataFrame,
+  private def probeIndex(queries: DataFrame,
+                         withCents: DataFrame => DataFrame,
                          assigned: DataFrame, k: Int, nProbes: Int): DataFrame =
-    Ranking.topPerGroup(probeScored(queries, centroids, assigned, nProbes),
+    probeTop(queries, withCents, assigned, k, nProbes)
+      .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
+
+  /** [[probeIndex]]'s top-k per query, unsorted. */
+  private def probeTop(queries: DataFrame, withCents: DataFrame => DataFrame,
+                       assigned: DataFrame, k: Int, nProbes: Int): DataFrame =
+    Ranking.topPerGroup(probeScored(queries, withCents, assigned, nProbes),
         Seq(col("query_id")), Seq(col("sim").desc, col("cand_id").asc), k)
       .select(col("query_id"), col("cand_id"), col("sim"))
-      .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
 
   /** [[hardNegatives]] over a persisted IVF index — the scale path:
     * only the probed buckets are scanned, and the label constraint is
@@ -363,9 +398,9 @@ object Similarity {
   def hardNegativesIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, candLabels: DataFrame, k: Int,
       nProbes: Int = 4, asOf: Option[Long] = None): DataFrame = {
-    val (centroids, assigned) = readIndexPair(spark, indexDir, asOf)
+    val assigned = readIndexPair(spark, indexDir, asOf)._2
     val scored = probeScored(queries.select(col("id"), col("vec")),
-      centroids, assigned, nProbes)
+      indexCents(spark, indexDir, asOf), assigned, nProbes)
     val qLab = queries.select(col("id").as("query_id"), col("label").as("q_label"))
     val cLab = candLabels.select(col("id").as("cand_id"), col("label").as("cand_label"))
     scored
@@ -975,9 +1010,23 @@ object Similarity {
 
   def queryIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                     queries: DataFrame, k: Int, nProbes: Int = 4,
-                    asOf: Option[Long] = None): DataFrame = {
-    val (centroids, assigned) = readIndexPair(spark, indexDir, asOf)
-    probeIndex(queries, centroids, assigned, k, nProbes)
+                    asOf: Option[Long] = None): DataFrame =
+    ivfIndexTop(spark, indexDir, queries, k, nProbes, asOf, None)
+      .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
+
+  /** The top-k per query of [[queryIvfIndex]] (with a predicate,
+    * [[queryIvfIndexFiltered]]), unsorted: what a fusion arm hands
+    * [[Retrieval.rrfFuse]], which re-ranks per query anyway.
+    */
+  private[operators] def ivfIndexTop(spark: org.apache.spark.sql.SparkSession,
+                                     indexDir: String, queries: DataFrame,
+                                     k: Int, nProbes: Int,
+                                     asOf: Option[Long],
+                                     predicate: Option[Column]): DataFrame = {
+    val assigned = readIndexPair(spark, indexDir, asOf)._2
+    predicate.foreach(requirePredicateCols(indexDir, assigned, _))
+    probeTop(queries, indexCents(spark, indexDir, asOf),
+      predicate.map(assigned.filter).getOrElse(assigned), k, nProbes)
   }
 
   /** Predicate-FILTERED IVF probe — filtered vector search, the
@@ -1005,11 +1054,9 @@ object Similarity {
   def queryIvfIndexFiltered(spark: org.apache.spark.sql.SparkSession,
                             indexDir: String, queries: DataFrame, k: Int,
                             predicate: Column, nProbes: Int = 4,
-                            asOf: Option[Long] = None): DataFrame = {
-    val (centroids, assigned) = readIndexPair(spark, indexDir, asOf)
-    requirePredicateCols(indexDir, assigned, predicate)
-    probeIndex(queries, centroids, assigned.filter(predicate), k, nProbes)
-  }
+                            asOf: Option[Long] = None): DataFrame =
+    ivfIndexTop(spark, indexDir, queries, k, nProbes, asOf, Some(predicate))
+      .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
 
   /** [[queryIvfIndexFiltered]] with ADAPTIVE probe widening — the
     * filtered-ANN starvation fix (the problem ACORN and FAISS's
@@ -1032,12 +1079,14 @@ object Similarity {
                                     k: Int, predicate: Column,
                                     nProbes: Int = 4,
                                     asOf: Option[Long] = None): DataFrame = {
-    val (centroids, assigned) = readIndexPair(spark, indexDir, asOf)
+    val assigned = readIndexPair(spark, indexDir, asOf)._2
     requirePredicateCols(indexDir, assigned, predicate)
     val gated = assigned.filter(predicate)
-    val nCent = centroids.count().toInt // nCentroids rows — bounded
+    val nCent = graft.sources.Versioned.rows(spark,
+      s"$indexDir/centroids", asOf, centFields).size
+    val cents = indexCents(spark, indexDir, asOf)
     adaptiveWiden(queries, k, math.max(1, nProbes), nCent,
-      p => probeIndex(queries, centroids, gated, k, p))
+      p => probeIndex(queries, cents, gated, k, p))
   }
 
   // --------------------------------------------- gate-count sidecar
@@ -1329,9 +1378,7 @@ object Similarity {
     val q = queries
       .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
       .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
-    val probes = q
-      .join(broadcast(centArray(
-        cents.select(col("centroid_id"), col("centv"), col("cent_norm_sq")))), lit(true))
+    val probes = indexCents(spark, indexDir, asOf)(q)
       .withColumn("__probe", explode(slice(
         array_sort(scoredCents(col("qv"), col("q_norm_sq")), bySimDescIdAsc),
         1, nProbes)))
@@ -1805,8 +1852,7 @@ object Similarity {
     val q = queries
       .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
       .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
-    val probesRaw = q
-      .join(broadcast(centArray(centroids)), lit(true))
+    val probesRaw = indexCents(spark, indexDir, asOf)(q)
       .withColumn("__probe", explode(slice(
         array_sort(scoredCents(col("qv"), col("q_norm_sq")), bySimDescIdAsc),
         1, nProbes)))
@@ -1863,8 +1909,9 @@ object Similarity {
                               nProbes: Int = 4, asOf: Option[Long] = None,
                               m: Int = 8, ks: Int = 16, dim: Int = 64,
                               residual: Boolean = false): DataFrame =
-    queryIvfPqIndexRerankedWhere(spark, indexDir, queries, k, alpha, nProbes,
+    pqRerankedTop(spark, indexDir, queries, k, alpha, nProbes,
       asOf, m, ks, dim, residual, None)
+      .orderBy(col("query_id"), col("dot").desc, col("cand_id"))
 
   /** [[queryIvfPqIndexReranked]] with the metadata gate on the ADC
     * shortlist stage ([[queryIvfPqIndexFiltered]]): the k·alpha
@@ -1879,10 +1926,14 @@ object Similarity {
                               nProbes: Int = 4, asOf: Option[Long] = None,
                               m: Int = 8, ks: Int = 16, dim: Int = 64,
                               residual: Boolean = false): DataFrame =
-    queryIvfPqIndexRerankedWhere(spark, indexDir, queries, k, alpha, nProbes,
+    pqRerankedTop(spark, indexDir, queries, k, alpha, nProbes,
       asOf, m, ks, dim, residual, Some(predicate))
+      .orderBy(col("query_id"), col("dot").desc, col("cand_id"))
 
-  private def queryIvfPqIndexRerankedWhere(
+  /** The re-ranked top-k per query of [[queryIvfPqIndexReranked]] (with a
+    * predicate, [[queryIvfPqIndexRerankedFiltered]]), unsorted — the
+    * fusion-arm form. */
+  private[operators] def pqRerankedTop(
                               spark: org.apache.spark.sql.SparkSession,
                               indexDir: String, queries: DataFrame,
                               k: Int, alpha: Int,
@@ -1908,7 +1959,6 @@ object Similarity {
     Ranking.topPerGroup(scored, Seq(col("query_id")),
         Seq(col("dot").desc, col("cand_id").asc), k)
       .select(col("query_id"), col("cand_id"), col("dot"))
-      .orderBy(col("query_id"), col("dot").desc, col("cand_id"))
   }
 
   /** Full-precision rows for a bounded candidate set — the

@@ -9,10 +9,16 @@ import org.apache.spark.sql.DataFrame
   * the expensive producers in this engine).
   *
   * Local form: a LAZY `localCheckpoint` — MEMORY_AND_DISK blocks that
-  * materialize inside the first consuming action (no separate staging
-  * job; `explain`/plan audits stay computation-free), owned by the
-  * plan (nothing registered in the session cache manager for callers
-  * to clean up; blocks free when the plan is GC'd).
+  * materialize inside the first consuming action, owned by the plan
+  * (nothing registered in the session cache manager for callers to
+  * clean up; blocks free when the plan is GC'd). Lazy is not job-free:
+  * under AQE (the session default) the CALL plans the staged subtree
+  * adaptively and runs its shuffle and broadcast stages right there —
+  * e.g. 2 jobs for a subtree that broadcast-joins a `distinct()` side
+  * (the distinct's shuffle, then the broadcast) — and only the final
+  * stage waits for the consuming action.
+  * With AQE off the call runs no job. Stage only what several
+  * consumers read; a single consumer pays those jobs for nothing.
   *
   * CLUSTER CAVEAT (the reason this seam exists as ONE function): a
   * localCheckpoint block CUTS lineage — on a real cluster a lost
@@ -35,8 +41,9 @@ import org.apache.spark.sql.DataFrame
   *    must preserve that property (a parquet read does).
   */
 object Stage {
-  /** Stage `df` for multiple consumers. Lazy: no job runs until the
-    * first consuming action materializes the blocks.
+  /** Stage `df` for multiple consumers. The blocks materialize in the
+    * first consuming action; under AQE this call itself runs the
+    * subtree's shuffle and broadcast stages (see the object doc).
     */
   def staged(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 

@@ -12,8 +12,8 @@ import graft.sources.Versioned
   *
   *  - **Logical delete now**: [[add]] appends doc ids to a small
   *    `tombstones/` Versioned table beside the index's own tables.
-  *    Every query path anti-joins its CANDIDATE stream against the
-  *    broadcast tombstone set BEFORE ranking (the no-starvation
+  *    Every query path filters its CANDIDATE stream against the
+  *    tombstone id set (a plan literal) BEFORE ranking (the no-starvation
   *    discipline — survivors fill the top-k), so a tombstoned document
   *    stops being served the moment the tombstone commits. Term/corpus
   *    statistics (df, cf, n_docs, sum_dl) stay PRE-delete until the
@@ -23,7 +23,7 @@ import graft.sources.Versioned
   *  - **Physical drop at the compaction cadence**: the index
   *    compactions ([[Retrieval.compactBm25Index]],
   *    [[Similarity.compactIvfIndex]], [[Retrieval.compactForwardIndex]])
-  *    anti-join the tombstones out of the data tables and CORRECT the
+  *    filter the tombstoned rows out of the data tables and CORRECT the
   *    corpus statistics (n_docs/sum_dl subtract the dropped documents'
   *    denormalized lengths), after which the index is row-identical to
   *    a fresh build without the documents (spec-proven) and every df/cf
@@ -44,9 +44,10 @@ import graft.sources.Versioned
   * opt-out reversed) takes a new doc_id, consistent with the
   * append-only discipline every state artifact shares.
   *
-  * Idempotence & growth: [[add]] is append-only and the gate is an
-  * anti-join, so re-adding an id is harmless; the table is
-  * takedown-list-sized (tiny against the corpus — it broadcasts), is
+  * Idempotence & growth: [[add]] is append-only and the gate is a
+  * set-membership filter, so re-adding an id is harmless; the table is
+  * takedown-list-sized (tiny against the corpus — its ids are collected
+  * once per tombstone version and planned as a literal), is
   * never cleared (a pinned pre-drop read must stay gated), and rides
   * the same compact/vacuum cadence as every other maintained table.
   *
@@ -158,21 +159,32 @@ object Tombstones {
     else Some(Versioned.read(spark, t).select(col("doc_id")).distinct())
   }
 
+  /** The distinct non-null tombstoned ids (latest version), read once per
+    * tombstone-table version ([[Versioned.rows]]); empty when the index has
+    * no tombstone table. A null id matches no row under the anti-join
+    * semantics the gates keep, so it is dropped here.
+    */
+  private def ids(spark: SparkSession, indexDir: String): Seq[Any] = {
+    val t = table(indexDir)
+    if (!Versioned.exists(spark, t)) Nil
+    else Versioned.rows(spark, t, None, Seq("doc_id"))
+      .flatMap(r => Option(r.get(0))).distinct
+  }
+
   /** Gate a candidate stream: drop rows whose document is tombstoned.
     * `docExpr` maps a row to its DOCUMENT id (identity for doc-grain
     * ids; `shiftright(ck, 32)` for chunk-grain composite keys). The
-    * tombstone side broadcasts (takedown-list-sized), so the gate is a
-    * map-side anti probe on the already-pruned candidate scan — no
-    * shuffle, no corpus-sized join. No-op (the exact input plan) when
-    * the index has no tombstones.
+    * tombstone set is a plan literal (takedown-list-sized), so the gate
+    * is a map-side filter on the already-pruned candidate scan — no
+    * job, no shuffle, no broadcast. Same rows as a `left_anti` join on
+    * `docExpr = doc_id`: a NULL key matches nothing and survives. No-op
+    * (the exact input plan) when the index has no tombstones.
     */
   def gate(spark: SparkSession, indexDir: String, rows: DataFrame,
            docExpr: Column): DataFrame =
-    of(spark, indexDir) match {
-      case None => rows
-      case Some(t) => rows.join(
-        broadcast(t.select(col("doc_id").as("__ts_doc"))),
-        docExpr === col("__ts_doc"), "left_anti")
+    ids(spark, indexDir) match {
+      case Nil => rows
+      case ts => rows.filter(docExpr.isNull || !docExpr.isInCollection(ts))
     }
 
   /** Retention-aligned tombstone VACUUM — the [[graft.operators
@@ -182,7 +194,7 @@ object Tombstones {
     * compacted through AND the data retention window has passed the
     * pre-drop snapshots, the tombstone row gates nothing — and on a
     * decade-long pipeline the accumulated takedown list itself becomes
-    * a corpus-scale artifact riding every probe's broadcast.
+    * a corpus-scale artifact riding every probe's plan.
     *
     * A row is dropped exactly when its doc appears in NO retained
     * version of the index's primary data table (presence over versions
@@ -227,15 +239,13 @@ object Tombstones {
   }
 
   /** The rows of `df` whose document IS tombstoned — the drop set a
-    * compaction removes (semi form of [[gate]]). Empty when no
-    * tombstones exist.
+    * compaction removes (semi form of [[gate]]: its exact complement).
+    * Empty when no tombstones exist.
     */
   def hits(spark: SparkSession, indexDir: String, rows: DataFrame,
            docExpr: Column): DataFrame =
-    of(spark, indexDir) match {
-      case None => rows.limit(0)
-      case Some(t) => rows.join(
-        broadcast(t.select(col("doc_id").as("__ts_doc"))),
-        docExpr === col("__ts_doc"), "left_semi")
+    ids(spark, indexDir) match {
+      case Nil => rows.limit(0)
+      case ts => rows.filter(docExpr.isInCollection(ts))
     }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** S3 — a transactional, versioned table format over plain parquet,
@@ -186,21 +186,30 @@ object Versioned {
     } finally in.close()
   }
 
-  /** All committed versions, ascending (checkpoint files excluded). */
-  private def versions(f: FileSystem, table: String): Seq[Long] = {
+  /** One listing of the log: (committed versions, checkpoint versions),
+    * both ascending. */
+  private def listLog(f: FileSystem, table: String): (Seq[Long], Seq[Long]) = {
     val dir = logDir(table)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.endsWith(".json") && !n.contains("checkpoint"))
-      .map(_.stripSuffix(".json").toLong).sorted.toSeq
+    if (!f.exists(dir)) (Seq.empty, Seq.empty)
+    else {
+      val names = f.listStatus(dir).map(_.getPath.getName)
+      (names.filter(n => n.endsWith(".json") && !n.contains("checkpoint"))
+        .map(_.stripSuffix(".json").toLong).sorted.toSeq,
+        names.filter(_.endsWith(".checkpoint.json"))
+          .map(_.stripSuffix(".checkpoint.json").toLong).sorted.toSeq)
+    }
   }
+
+  /** All committed versions, ascending (checkpoint files excluded). */
+  private def versions(f: FileSystem, table: String): Seq[Long] =
+    listLog(f, table)._1
 
   /** Resolve the live file set at `asOf` (or latest): nearest checkpoint
     * ≤ asOf, then replay the tail — O(checkpointInterval) reads however
     * long the table's history is.
     */
   private def resolve(f: FileSystem, table: String, asOf: Option[Long]): Commit = {
-    val vs = versions(f, table)
+    val (vs, allCkpts) = listLog(f, table)
     require(vs.nonEmpty, s"not a versioned table (no $logDirName): $table")
     val target = asOf match {
       case Some(v) =>
@@ -208,10 +217,7 @@ object Versioned {
         v
       case None => vs.last
     }
-    val ckpts = f.listStatus(logDir(table)).map(_.getPath.getName)
-      .filter(_.endsWith(".checkpoint.json"))
-      .map(_.stripSuffix(".checkpoint.json").toLong)
-      .filter(_ <= target).sorted.lastOption
+    val ckpts = allCkpts.filter(_ <= target).lastOption
     val start: Commit = ckpts match {
       case Some(cv) =>
         parse(readString(f, checkpointFile(table, cv))).copy(version = target)
@@ -622,16 +628,26 @@ object Versioned {
     * mint new versions and staged dirs never receive files after their
     * commit), so a cached plan (file index + schema) cannot go stale —
     * except through [[vacuum]], which deletes dropped versions' files
-    * and therefore clears the table's entries. Only the PLAN is cached
-    * (file listing + relation), never row data; `resolve` still runs
-    * per read, so "latest" always re-resolves against the log. Without
+    * and therefore clears the table's entries. The PLAN is cached
+    * (file listing + relation); row data only for the small constant
+    * tables read through [[rows]]. `resolve` still runs per read, so
+    * "latest" always re-resolves against the log. Without
     * this every probe of a persisted index re-lists and re-plans 4+
     * tables per call — driver-side overhead a metastore amortizes in
     * production (guide §6: file listing is a real cost at scale).
     */
   private val relationCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String),
-      scala.collection.concurrent.TrieMap[(Long, Int), (DataFrame, Long)]]
+      scala.collection.concurrent.TrieMap[(Long, Int), Cached]]
+
+  /** One relation-cache entry: the resolved relation, its access tick,
+    * and the rows [[rows]] collected from it, per column list. The rows
+    * live and die with the entry (same key, retention and [[vacuum]]
+    * invalidation), so they are as immutable as the file set they came
+    * from.
+    */
+  private final case class Cached(df: DataFrame, touch: Long,
+      rows: scala.collection.concurrent.TrieMap[Seq[String], IndexedSeq[Row]])
 
   /** Access clock: each hit or insert stamps its entry with the next
     * tick, so eviction drops the least recently READ entries. */
@@ -664,7 +680,27 @@ object Versioned {
     * The schema comes from the LOG (written at commit time), not from
     * file footers — schema-on-read is pinned to schema-at-commit.
     */
-  def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
+  def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame =
+    cached(spark, table, asOf).df
+
+  /** The rows of `cols` of `table` at `asOf`, collected ONCE per (table,
+    * version) and kept on the relation-cache entry — the per-version
+    * constants a probe plans as literals (BM25 corpus stats, tombstone
+    * ids, IVF centroids) instead of scanning and broadcasting them per
+    * request. A repeat read of the same snapshot
+    * runs no job; a new commit, a [[vacuum]] or a rebuilt directory
+    * (new file digest) is read afresh. Only for tables that are small by
+    * construction: the rows are held in memory.
+    */
+  def rows(spark: SparkSession, table: String, asOf: Option[Long],
+           cols: Seq[String]): IndexedSeq[Row] = {
+    val c = cached(spark, table, asOf)
+    c.rows.getOrElseUpdate(cols, c.df.select(cols.map(n =>
+      org.apache.spark.sql.functions.col(s"`$n`")): _*).collect().toIndexedSeq)
+  }
+
+  private def cached(spark: SparkSession, table: String,
+                     asOf: Option[Long]): Cached = {
     val f = fs(spark, new Path(table))
     val snap = resolve(f, table, asOf)
     relationCache.keys.foreach { k =>
@@ -679,15 +715,17 @@ object Versioned {
     val key = (snap.version, (snap.add, snap.schemaJson, snap.layout).hashCode())
     val entries = relationCache.getOrElseUpdate((spark, table),
       scala.collection.concurrent.TrieMap.empty)
-    val df = entries.get(key).fold(readUncached(spark, table, snap))(_._1)
-    entries.put(key, (df, relationTouch.incrementAndGet())): Unit
+    val c = entries.get(key).getOrElse(Cached(readUncached(spark, table, snap),
+      0L, scala.collection.concurrent.TrieMap.empty))
+      .copy(touch = relationTouch.incrementAndGet())
+    entries.put(key, c): Unit
     // retention per (session, table): keep the most recently read
     // entries (plan-sized, but a long-lived session re-reading a
     // churning table should not grow without limit)
-    entries.toSeq.filter(_._1 != key).sortBy(-_._2._2)
+    entries.toSeq.filter(_._1 != key).sortBy(-_._2.touch)
       .drop(relationCacheRetain - 1)
       .foreach(e => entries.remove(e._1): Unit)
-    df
+    c
   }
 
   private def readUncached(spark: SparkSession, table: String,

@@ -39,13 +39,16 @@ class PlanQualitySpec extends SparkSpec {
   /** Nested-loop joins that ARE the declared algorithm: the build side
     * is constant-sized (query vectors q31, centroid table q37, 1-row
     * aggregate q53/q69), so the "loop" is O(n·k) with tiny k — the
-    * standard scale shape for scan-scoring, not an accident.
+    * standard scale shape for scan-scoring, not an accident. Persisted-
+    * index probes are NOT listed: their per-version constants (BM25
+    * stats, tombstone ids, IVF centroids) are plan literals, so a
+    * nested-loop join there means a constant went back to a per-request
+    * broadcast.
     */
   private val intentionalNestedLoop = Set(
-    "q31_cosine_topk", "q133_hard_negatives", "q135_hard_negatives_indexed",
+    "q31_cosine_topk", "q133_hard_negatives",
     "q37_ann_ivf", "q98_ann_ivf_refined",
-    "q109_ann_sq8", "q116_ann_index", "q118_ann_ivf_sq8",
-    "q162_ann_index_dpp", "q184_ann_filtered",
+    "q109_ann_sq8", "q118_ann_ivf_sq8",
     // PQ: broadcast codebook (m·ks tiny rows) + broadcast per-query LUTs
     "q144_pq_topk", "q145_ann_ivf_pq", "q149_ann_ivf_pq_residual",
     "q158_ann_ivf_pq_rerank",
@@ -58,14 +61,11 @@ class PlanQualitySpec extends SparkSpec {
     // classic pays once, plus q139's 1-row value threshold
     "q137_tpch_q2", "q138_tpch_q9", "q139_tpch_q11", "q140_tpch_q16",
     "q141_tpch_q20",
-    // 1-row corpus stats (N, Σdl) / min-max range stats broadcasts
-    "q146_bm25", "q147_bm25_index", "q148_zorder_key", "q153_bm25_many",
-    "q183_bm25_stopped", "q185_bm25_filtered",
-    // filtered hybrid: the gated q147 stats broadcast + the gated q116
-    // probe's broadcast centroid-array scoring
-    "q186_hybrid_filtered",
-    // chunk-grain BM25: same 1-row (N, Σdl) stats broadcast, chunk corpus
-    "q167_chunk_bm25", "q168_chunk_index",
+    // inline BM25's corpus-derived 1-row stats (N, Σdl) / min-max range
+    // stats broadcasts
+    "q146_bm25", "q148_zorder_key",
+    // inline chunk-grain BM25: the same corpus-derived 1-row stats
+    "q167_chunk_bm25",
     // 1-row corpus total broadcast onto the candidate recount
     "q160_heavy_hitters",
     // BPE: each merge step applies a broadcast 1-row winner; encode
@@ -75,22 +75,9 @@ class PlanQualitySpec extends SparkSpec {
     // tokenizer-true export: the BPE encode's broadcast 1-row merge
     // array rides under the packing (the q151/q156 shape)
     "q165_bpe_trainer_export",
-    // hybrid fusion: the semantic arm is the q116 probe (broadcast
-    // centroid-array scoring); the fusion itself is all equality joins
-    "q166_hybrid_rrf",
-    // chunk-grain hybrid: chunk BM25's 1-row stats + the chunk ANN's
-    // broadcast centroid array (q170/q173 ride q169's fused set;
-    // q187 is the same pair with the metadata gate inside both scans)
-    "q169_chunk_hybrid", "q170_context_pack", "q173_context_text",
-    "q187_chunk_hybrid_filtered",
-    // PQ+rerank arm: broadcast codebook/LUT + the BM25 1-row stats
-    "q171_hybrid_pq_rerank",
-    // partition-layout BM25 many: the same 1-row stats broadcast
-    "q172_bm25_many_part",
-    // RM3: two BM25 passes, each with the 1-row stats broadcast
-    "q174_rm3_expand",
-    // Dirichlet QL: the same 1-row stats broadcast + the |terms|-row
-    // cf broadcast grid
+    // context packing over q169's fused set
+    "q170_context_pack", "q173_context_text",
+    // Dirichlet QL: the |terms|-row cf broadcast grid
     "q175_ql_index",
     // BPE round-trip: the encode half's broadcast merge array (the
     // q151/q156 shape); the decode is pure equality joins
@@ -98,35 +85,16 @@ class PlanQualitySpec extends SparkSpec {
     // byte-level round-trip: the encode merge array + the decode's
     // 1-row flag-guard broadcast
     "q178_bpe_byte_roundtrip",
-    // chunk PQ hybrid: chunk BM25's 1-row stats + the broadcast
-    // codebook (m·ks tiny rows) + per-query LUTs
-    "q179_chunk_hybrid_pq",
-    // 3-arm chunk hybrid: the 1-row stats broadcast rides BOTH lexical
-    // arms (BM25 + QL) + the chunk ANN's centroid array
-    "q180_chunk_hybrid_3arm",
     // model-token pack: q169's fused arms + the BPE encode's broadcast
     // merge array at span grain
     "q181_context_model_pack",
-    // chunk-grain RM3: two chunk-BM25 passes, each with the 1-row
-    // stats broadcast (the q174 shape at span grain)
-    "q182_rm3_chunks",
-    // takedown: the merged index serves through queryBm25Index — the
-    // same 1-row (N, Σdl) stats broadcast as q147
-    "q188_takedown_bm25",
-    // supersede: the merged index serves through the same paths — the
-    // 1-row stats broadcast (q191) / the broadcast centroid array
-    // (q192)
-    "q191_supersede_bm25", "q192_supersede_ann",
     // counted filtered probe: the broadcast centroid+counts array
-    // scoring (the q116 shape with the prefix fold)
+    // scoring (the prefix fold over per-centroid eligible counts)
     "q195_ann_filtered_counted",
     // maxsim: the PQ shortlist arm's broadcast codebook/LUT + the
     // broadcast shortlist-doc-id semi probe; the token-pair join is
     // all equality
-    "q196_chunk_maxsim",
-    // 4-arm fusion: BM25/QL 1-row stats + PQ codebook/LUT + the maxsim
-    // arm above
-    "q197_chunk_hybrid_maxsim")
+    "q196_chunk_maxsim")
 
   test("PLAN_AUDIT.md has a row for every SparkEntry query") {
     // The audit artifact is regenerated by `tools/run.sh graft.PlanAudit`;

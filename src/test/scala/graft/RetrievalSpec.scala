@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
+import graft.sources.Versioned
 
 /** BM25 semantics on hand-computed fixtures + the persisted inverted
   * index's build/query/append/time-travel contract.
@@ -1252,20 +1254,23 @@ class RetrievalSpec extends SparkSpec {
     assert(tied == Seq(5L, 9L))
   }
 
+  // The planted hybrid corpus: relevant = {1 (lexical-only match), 2
+  // (semantic-only match)}: doc 1 holds the query term but an orthogonal
+  // vector; doc 2 has the near-query vector but none of the terms;
+  // distractors share neither strongly.
+  private def plantedDocs = (Seq(
+    (1L, "alpha beta"), (2L, "filler words only")) ++
+    (3L to 20L).map(i => (i, s"filler beta padding$i")))
+    .toDF("doc_id", "text")
+  private def plantedVecs = (Seq(
+    (1L, Seq(0.0, 1.0, 0.0, 0.0)), (2L, Seq(0.99, 0.1, 0.0, 0.0))) ++
+    (3L to 20L).map(i => (i, Seq(0.3, 0.6, 0.4, 0.3))))
+    .toDF("id", "vec")
+
   test("hybrid RRF on a planted corpus: fused recall beats each single " +
       "ranker; the pinned index pair reproduces after an append") {
-    // relevant = {1 (lexical-only match), 2 (semantic-only match)}:
-    // doc 1 holds the query term but an orthogonal vector; doc 2 has
-    // the near-query vector but none of the terms; distractors share
-    // neither strongly
-    val docs = (Seq(
-      (1L, "alpha beta"), (2L, "filler words only")) ++
-      (3L to 20L).map(i => (i, s"filler beta padding$i")))
-      .toDF("doc_id", "text")
-    val vecs = (Seq(
-      (1L, Seq(0.0, 1.0, 0.0, 0.0)), (2L, Seq(0.99, 0.1, 0.0, 0.0))) ++
-      (3L to 20L).map(i => (i, Seq(0.3, 0.6, 0.4, 0.3))))
-      .toDF("id", "vec")
+    val docs = plantedDocs
+    val vecs = plantedVecs
     val bm = java.nio.file.Files.createTempDirectory("graft-hy-bm").toString
     val iv = java.nio.file.Files.createTempDirectory("graft-hy-iv").toString
     Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bm)
@@ -1307,6 +1312,45 @@ class RetrievalSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSeq
     assert(latest.contains(50L) && latest != before.map(_.getLong(1)),
       s"the appended heavy-alpha doc must reshape the latest fusion: $latest")
+  }
+
+  test("per-request job budget: a warm serve request runs only the jobs " +
+      "that carry the request (per-version constants are plan literals, " +
+      "df is a window, fusion arms are unsorted)") {
+    // the planted hybrid fixture, bucketed BM25 postings, pending
+    // tombstones on both indexes
+    val bm = java.nio.file.Files.createTempDirectory("graft-budget-bm").toString
+    val iv = java.nio.file.Files.createTempDirectory("graft-budget-iv").toString
+    Retrieval.buildBm25Index(plantedDocs, col("doc_id"), col("text"), bm)
+    graft.operators.Similarity.buildIvfIndex(plantedVecs, iv, nCentroids = 2)
+    graft.operators.Tombstones.addAll(Seq(5L, 6L).toDF("doc_id"), Seq(bm, iv))
+    assert(Versioned.declaredLayout(spark, s"$bm/postings").startsWith("bucket:"))
+    val queries = Seq((100L, Seq("alpha", "beta"), Seq(1.0, 0.0, 0.0, 0.0)),
+        (101L, Seq("filler"), Seq(0.0, 1.0, 0.0, 0.0)))
+      .toDF("query_id", "terms", "vec")
+    // pinned counts under AQE (the session default); each is a host-
+    // independent property of the plan. Reading the stats, tombstone or
+    // centroid table per request, deriving df by an aggregate joined
+    // back behind a staging seam, shuffling the query batch's term set,
+    // or sorting a fusion arm globally each adds jobs here.
+    val requests: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("queryBm25Index", 2, () => Retrieval.queryBm25Index(spark, bm,
+        Seq("alpha", "beta"), 3)),
+      ("queryIvfIndex", 5, () => graft.operators.Similarity.queryIvfIndex(
+        spark, iv, queries.select(col("query_id").as("id"), col("vec")),
+        3, nProbes = 2)),
+      ("queryBm25IndexMany", 6, () => Retrieval.queryBm25IndexMany(spark, bm,
+        queries.select("query_id", "terms"), 3)),
+      ("hybridSearch", 8, () => Retrieval.hybridSearch(spark, bm, iv, queries,
+        k = 2, kEach = 3, nProbes = 2)))
+    val got = requests.map { case (name, _, req) =>
+      req().collect(): Unit // warm: per-version constants read once
+      val (rows, jobs) = JobCount(spark)(req().collect())
+      assert(rows.nonEmpty, name)
+      name -> jobs
+    }
+    assert(got == requests.map(r => r._1 -> r._2),
+      s"jobs per warm request (plan call + collect): $got")
   }
 
   test("chunk-grain BM25: the hit is the planted span with exact " +

@@ -78,6 +78,42 @@ class TombstoneSpec extends SparkSpec {
            rowsOf(Retrieval.rm3Expand(spark, freshDir, Seq("rare"), 10, kFb = 2, nExp = 2)))
   }
 
+  test("the literal gate keeps anti-join semantics: NULL keys survive, " +
+       "duplicate tombstones are harmless, chunk keys decode, and hits is " +
+       "the exact complement of gate") {
+    val dir = tmp("ts_literal")
+    Tombstones.add(dead.toDF("doc_id"), dir, reason = "dmca")
+    Tombstones.add(Seq(5L).toDF("doc_id"), dir, reason = "optout") // duplicate id
+    Versioned.append(Seq((Option.empty[Long], "unspecified", 0L, 0L))
+      .toDF("doc_id", "reason", "requested_at", "boundary"),
+      Tombstones.table(dir)) // a NULL tombstone id gates nothing
+    val ts = Versioned.read(spark, Tombstones.table(dir))
+      .select(col("doc_id").as("t_doc"))
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    def check(rows: DataFrame, key: org.apache.spark.sql.Column): Unit = {
+      val gate = Tombstones.gate(spark, dir, rows, key)
+      val hits = Tombstones.hits(spark, dir, rows, key)
+      assert(sorted(gate) ==
+        sorted(rows.join(ts, key === col("t_doc"), "left_anti")))
+      assert(sorted(hits) ==
+        sorted(rows.join(ts, key === col("t_doc"), "left_semi")))
+      assert(sorted(gate.unionAll(hits)) == sorted(rows),
+        "gate and hits must partition the rows")
+    }
+    // doc grain: a NULL key and repeated rows
+    val docRows = Seq(Some(1L), Some(2L), Some(5L), Some(5L), None, Some(7L))
+      .toDF("doc_id")
+    check(docRows, col("doc_id"))
+    assert(Tombstones.gate(spark, dir, docRows, col("doc_id"))
+      .filter(col("doc_id").isNull).count() == 1)
+    // chunk grain: composite key doc·2³² + chunk_start
+    val chunkRows = Seq((1L, 0L), (2L, 0L), (2L, 7L), (5L, 3L), (6L, 0L))
+      .map { case (d, c) => (d << 32) + c }.toDF("ck")
+    check(chunkRows, shiftright(col("ck"), 32))
+    assert(Tombstones.gate(spark, dir, chunkRows, shiftright(col("ck"), 32))
+      .as[Long].collect().map(_ >> 32).toSet == Set(1L, 6L))
+  }
+
   test("BM25 gates cover the many-query, QL, and phrase paths pre-merge") {
     val dir = tmp("ts_paths")
     val docs = corpus.toDF("doc_id", "text")

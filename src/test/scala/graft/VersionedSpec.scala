@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graft.JobCount
 import graft.sources.Versioned
 
 /** S3 — versioned table format: ACID-ish commit log over plain parquet
@@ -372,6 +373,34 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.read(spark, t, asOf = Some(0L)) eq pinned.last,
       "a re-read of the most recently read pin must hit the cache")
     assert(Versioned.relationCacheEntries(t) <= 4)
+  }
+
+  test("rows: a per-version constant is read once per (table, version); a " +
+      "new commit, a vacuum and a rebuilt directory are read afresh") {
+    val t = tmpTable()
+    Versioned.overwrite(Seq((1L, "a")).toDF("k", "v"), t)
+    def keys(asOf: Option[Long] = None): (Seq[Long], Int) = JobCount(spark)(
+      Versioned.rows(spark, t, asOf, Seq("k")).map(_.getLong(0)).sorted)
+    val (first, j0) = keys()
+    assert(first == Seq(1L) && j0 > 0)
+    assert(keys() == ((Seq(1L), 0)),
+      "a second read of the same (table, version) must run no job")
+    // a new commit is a new snapshot; the old one stays memoized
+    Versioned.append(Seq((2L, "b")).toDF("k", "v"), t)
+    val (latest, j1) = keys()
+    assert(latest == Seq(1L, 2L) && j1 > 0)
+    assert(keys(Some(0L)) == ((Seq(1L), 0)))
+    assert(keys(Some(1L)) == ((Seq(1L, 2L), 0)))
+    // vacuum drops the table's cache entries, rows included
+    Versioned.vacuum(spark, t, retainVersions = 2)
+    val (vacuumed, j2) = keys()
+    assert(vacuumed == Seq(1L, 2L) && j2 > 0)
+    // wiped and rebuilt at the same path: version 0 again, new file digest
+    val p = new Path(t)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    Versioned.overwrite(Seq((9L, "z")).toDF("k", "v"), t)
+    val (rebuilt, j3) = keys(Some(0L))
+    assert(rebuilt == Seq(9L) && j3 > 0)
   }
 
   test("merge: CDC upserts produce new versions with Upsert semantics") {

@@ -1,0 +1,35 @@
+package org.apache.spark.graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+
+/** Counts the Spark jobs a block runs. Jobs are tagged with a private job
+  * group (broadcast and subquery jobs inherit the caller's local
+  * properties), and the listener bus is drained before the count is read
+  * — it is `private[spark]`, hence this package.
+  */
+object JobCount {
+  def apply[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      val out = body
+      sc.listenerBus.waitUntilEmpty()
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+}

@@ -2,7 +2,8 @@
 # Fast runner for graft mains without sbt startup overhead.
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 set -e
-CLASSES=/root/repo/target/scala-2.13/classes
+# the classes of the checkout this script lives in
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
