@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Retrieval, Similarity}
+import graft.operators.Retrieval.{Hybrid, Ivf, Pq}
 
 /** ANN quality probe: recall@k of the approximate similarity paths
   * against the brute-force truth, per parameter setting — the dial that
@@ -73,7 +74,6 @@ object RecallProbe {
     // probe counts — the row pair quantifies what that compression
     // costs the FUSED ranking.
     import spark.implicits._
-    import graft.operators.Retrieval
     val docs = Tables.documents(spark, sfDir)
     val qb = Seq((0L, Seq("dup", "spark")), (1L, Seq("hash", "join", "table")))
       .toDF("query_id", "terms")
@@ -93,14 +93,15 @@ object RecallProbe {
       (truth & got).size.toDouble / truth.size
     val truthFloat = fpairs(Retrieval.hybridSearch(spark, bm, ivfF, qb,
       k = 10, nProbes = 16))
-    val truthDot = fpairs(Retrieval.hybridSearchPq(spark, bm, pqH, qb,
-      k = 10, alpha = 200, nProbes = 16, ks = 64))
+    val truthDot = fpairs(Retrieval.hybrid(spark,
+      Hybrid(bm, Pq(pqH, alpha = 200, nProbes = 16, ks = 64)), qb, k = 10))
     println(f"hybrid float-IVF arm   nProbes=4 fused recall@10 = ${
       frecall(truthFloat, fpairs(Retrieval.hybridSearch(spark, bm, ivfF, qb,
         k = 10, nProbes = 4)))}%.3f")
     println(f"hybrid IVF-PQ+rerank   nProbes=4 fused recall@10 = ${
-      frecall(truthDot, fpairs(Retrieval.hybridSearchPq(spark, bm, pqH, qb,
-        k = 10, alpha = 4, nProbes = 4, ks = 64)))}%.3f  (~1/32 scan bytes)")
+      frecall(truthDot, fpairs(Retrieval.hybrid(spark,
+        Hybrid(bm, Pq(pqH, alpha = 4, nProbes = 4, ks = 64)), qb,
+        k = 10)))}%.3f  (~1/32 scan bytes)")
 
     // CHUNK-grain hybrid (round 12): the same float-vs-compressed row
     // pair at the grain the RAG stack serves — each arm family against
@@ -129,16 +130,14 @@ object RecallProbe {
     def srecall(truth: Set[(Long, Long, Long)],
                 got: Set[(Long, Long, Long)]): Double =
       (truth & got).size.toDouble / truth.size
-    val ctruthFloat = spairs(Retrieval.hybridSearchChunks(spark, cbm, civ,
-      cqb, k = 10, nProbes = 16))
-    val ctruthDot = spairs(Retrieval.hybridSearchChunksPq(spark, cbm, cpq,
-      cqb, k = 10, alpha = 200, nProbes = 16, ks = 64))
+    def chunkFused(sem: Retrieval.SemanticArm) =
+      spairs(Retrieval.hybrid(spark, Hybrid(cbm, sem), cqb, k = 10))
+    val ctruthFloat = chunkFused(Ivf(civ, nProbes = 16))
+    val ctruthDot = chunkFused(Pq(cpq, alpha = 200, nProbes = 16, ks = 64))
     println(f"chunk-hybrid float-IVF nProbes=4 fused recall@10 = ${
-      srecall(ctruthFloat, spairs(Retrieval.hybridSearchChunks(spark, cbm,
-        civ, cqb, k = 10, nProbes = 4)))}%.3f")
+      srecall(ctruthFloat, chunkFused(Ivf(civ, nProbes = 4)))}%.3f")
     println(f"chunk-hybrid PQ+rerank nProbes=4 fused recall@10 = ${
-      srecall(ctruthDot, spairs(Retrieval.hybridSearchChunksPq(spark, cbm,
-        cpq, cqb, k = 10, alpha = 4, nProbes = 4,
+      srecall(ctruthDot, chunkFused(Pq(cpq, alpha = 4, nProbes = 4,
         ks = 64)))}%.3f  (~1/32 chunk-vector scan bytes)")
 
     // LATE-INTERACTION maxsim arm (round 16): the bounded serving

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
+import graft.operators.Retrieval.{Hybrid, Ivf, MaxSim, Pq}
 
 /** Lexical retrieval + storage-layout queries (SURVEY.md §2 [EXT] rows,
   * q146–q148): Okapi BM25 full-text search (inline and from the
@@ -680,9 +681,9 @@ object RetrievalQueries {
         graft.operators.Similarity.buildIvfIndex(e, d, nCentroids = 16,
           lloydIters = 2, metaCols = Seq("lang")): Unit
       })
-    Retrieval.hybridSearchFiltered(spark, cachedBm25Meta(spark, dir),
-      ivfLang, terms.join(vecs, Seq("query_id")), k = 10,
-      predicate = col("lang") === "en", kEach = 20)
+    Retrieval.hybrid(spark, Hybrid(cachedBm25Meta(spark, dir), Ivf(ivfLang),
+      predicate = Some(col("lang") === "en")),
+      terms.join(vecs, Seq("query_id")), k = 10)
   }
 
   private val q186Sql = {
@@ -910,8 +911,8 @@ object RetrievalQueries {
   }
 
   def q169ChunkHybrid(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.hybridSearchChunks(spark, cachedChunkBm25(spark, dir),
-      cachedChunkIvf(spark, dir), chunkQueryBatch(spark), k = 10, kEach = 20)
+    Retrieval.hybrid(spark, Hybrid(cachedChunkBm25(spark, dir),
+      Ivf(cachedChunkIvf(spark, dir))), chunkQueryBatch(spark), k = 10)
 
   // ---------------------------------------------------------------------
   // [EXT] chunk-grain hybrid over the COMPRESSED semantic arm — q169's
@@ -935,9 +936,9 @@ object RetrievalQueries {
         size = 32, stride = 16): Unit)
 
   def q179ChunkHybridPq(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.hybridSearchChunksPq(spark, cachedChunkBm25(spark, dir),
-      cachedChunkPq(spark, dir), chunkQueryBatch(spark),
-      k = 10, kEach = 20, alpha = 4, nProbes = 4)
+    Retrieval.hybrid(spark, Hybrid(cachedChunkBm25(spark, dir),
+      Pq(cachedChunkPq(spark, dir), alpha = 4, nProbes = 4)),
+      chunkQueryBatch(spark), k = 10)
 
   private lazy val q179Sql =
     s"""$chunkHybridPqCtes
@@ -956,9 +957,9 @@ object RetrievalQueries {
   // statement; n_rankers now reaches 3 where a span is found by every
   // arm.
   def q180ChunkHybrid3(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.hybridSearchChunks(spark, cachedChunkBm25(spark, dir),
-      cachedChunkIvf(spark, dir), chunkQueryBatch(spark), k = 10,
-      kEach = 20, qlArm = true)
+    Retrieval.hybrid(spark, Hybrid(cachedChunkBm25(spark, dir),
+      Ivf(cachedChunkIvf(spark, dir)), ql = Some(Retrieval.Mu)),
+      chunkQueryBatch(spark), k = 10)
 
   private lazy val q180Sql =
     s"""$chunkHybrid3Ctes
@@ -1348,9 +1349,10 @@ object RetrievalQueries {
   // arm agrees. The oracle replays all four rankings and the fusion in
   // ONE statement.
   def q197ChunkHybridMaxSim(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.hybridSearchChunksMaxSim(spark, cachedChunkBm25(spark, dir),
-      cachedChunkPq(spark, dir), Tables.documents(spark, dir),
-      col("doc_id"), col("text"), chunkQueryBatch(spark), k = 10)
+    Retrieval.hybrid(spark, Hybrid(cachedChunkBm25(spark, dir),
+      Pq(cachedChunkPq(spark, dir)), ql = Some(Retrieval.Mu),
+      maxSim = Some(MaxSim(Tables.documents(spark, dir), col("doc_id"),
+        col("text")))), chunkQueryBatch(spark), k = 10)
 
   private lazy val q197Sql =
     s"""$chunkPrefixCtes,
@@ -1431,9 +1433,8 @@ object RetrievalQueries {
       Retrieval.buildChunkIvfIndex(
         Tables.documents(spark, dir), col("doc_id"), col("text"), _,
         size = 32, stride = 16, metaCols = Seq("lang")): Unit)
-    Retrieval.hybridSearchChunksFiltered(spark, bm, iv,
-      chunkQueryBatch(spark), k = 10, predicate = col("lang") === "en",
-      kEach = 20)
+    Retrieval.hybrid(spark, Hybrid(bm, Ivf(iv),
+      predicate = Some(col("lang") === "en")), chunkQueryBatch(spark), k = 10)
   }
 
   private val q187Sql =
@@ -1812,10 +1813,9 @@ object RetrievalQueries {
       .toDF("query_id", "terms")
     val vecs = Tables.embeddings(spark, dir).filter(col("vec_id") < 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("vec"))
-    Retrieval.hybridSearchPq(spark, cachedBm25(spark, dir),
-      SimQueries.cachedIvfPqIndex(spark, dir),
-      terms.join(vecs, Seq("query_id")),
-      k = 10, kEach = 20, alpha = 4, nProbes = 4)
+    Retrieval.hybrid(spark, Hybrid(cachedBm25(spark, dir),
+      Pq(SimQueries.cachedIvfPqIndex(spark, dir), alpha = 4, nProbes = 4)),
+      terms.join(vecs, Seq("query_id")), k = 10)
   }
 
   private val q171Sql =

@@ -312,8 +312,8 @@ object DailyMaintenance {
       }
     }),
     // the chunk ANN index — the semantic half of the chunk-grain hybrid
-    // pair the RAG stack serves ([[graft.operators.Retrieval
-    // .hybridSearchChunks]] needs BOTH chunk indexes on the SAME grid);
+    // pair the RAG stack serves ([[graft.operators.Retrieval.hybrid]]
+    // needs BOTH chunk indexes on the SAME grid);
     // same grid-health routing and first-build self-heal as chunk_append
     "chunk_ivf_append" -> (() => {
       val dir = s"$work/chunk_ivf"
@@ -359,7 +359,7 @@ object DailyMaintenance {
       }
     }),
     // the COMPRESSED chunk ANN index (IVF-PQ + rerank — the semantic arm
-    // hybridSearchChunksPq serves at 100 TB, where the chunk-grain
+    // a chunk-grain hybrid request serves at 100 TB, where the chunk-grain
     // vector table is the largest vector artifact in the system): same
     // grid-health routing and first-build self-heal as chunk_ivf_append
     "chunk_pq_append" -> (() => {

@@ -371,16 +371,17 @@ object Bpe {
           " — re-read the model with the alphabet it was trained on")).isNull)
       .drop("byte_level")
 
+  /** The version a read of the tokenizer at `modelDir` pins
+    * ([[graft.sources.Versioned.lockstep]] over merges + vocab). */
+  private[graft] def pinModel(spark: org.apache.spark.sql.SparkSession,
+                              modelDir: String, asOf: Option[Long]): Long =
+    graft.sources.Versioned.lockstep(spark, modelDir, Seq("merges", "vocab"),
+      asOf, "rebuild into a fresh directory or pin an intact version with asOf")
+
   private def readModel(spark: org.apache.spark.sql.SparkSession,
                         modelDir: String, asOf: Option[Long],
                         byteLevel: Boolean): (DataFrame, DataFrame) = {
-    if (asOf.isEmpty) {
-      val vm = graft.sources.Versioned.latestVersion(spark, s"$modelDir/merges")
-      val vv = graft.sources.Versioned.latestVersion(spark, s"$modelDir/vocab")
-      require(vm == vv, s"BPE model tables out of lockstep (merges v$vm, " +
-        s"vocab v$vv) — a build crashed between commits; rebuild into a " +
-        "fresh directory or pin an intact version with asOf")
-    }
+    pinModel(spark, modelDir, asOf): Unit
     (byteLevelGuard(
         graft.sources.Versioned.read(spark, s"$modelDir/merges", asOf),
         byteLevel),

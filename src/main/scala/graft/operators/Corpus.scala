@@ -1351,6 +1351,14 @@ object Corpus {
     vm
   }
 
+  /** The version a read of the NB model at `modelDir` pins
+    * ([[graft.sources.Versioned.lockstep]] over model + priors). */
+  private[graft] def pinNbModel(spark: org.apache.spark.sql.SparkSession,
+                                modelDir: String,
+                                asOf: Option[Long]): Long =
+    graft.sources.Versioned.lockstep(spark, modelDir, Seq("model", "priors"),
+      asOf, "rebuild into a fresh directory or pin an intact version with asOf")
+
   /** Score against a persisted NB model (optionally a pinned historical
     * version). A scoring run pays the test-corpus pass only — no
     * training rescan; the model tables are KB-sized broadcasts.
@@ -1364,13 +1372,7 @@ object Corpus {
   def scoreWithNbModel(spark: org.apache.spark.sql.SparkSession,
       modelDir: String, test: DataFrame, id: Column, text: Column,
       asOf: Option[Long] = None): DataFrame = {
-    if (asOf.isEmpty) {
-      val vm = graft.sources.Versioned.latestVersion(spark, s"$modelDir/model")
-      val vp = graft.sources.Versioned.latestVersion(spark, s"$modelDir/priors")
-      require(vm == vp, s"NB model tables out of lockstep (model v$vm, " +
-        s"priors v$vp) — a build crashed between commits; rebuild into a " +
-        "fresh directory or pin an intact version with asOf")
-    }
+    pinNbModel(spark, modelDir, asOf): Unit
     val model = graft.sources.Versioned.read(spark, s"$modelDir/model", asOf)
     val prior = graft.sources.Versioned.read(spark, s"$modelDir/priors", asOf)
     nbScore(test, id, text, model, prior)

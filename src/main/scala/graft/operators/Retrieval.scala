@@ -42,6 +42,9 @@ object Retrieval {
   val K1: Double = 1.2
   val B: Double  = 0.75
 
+  /** The customary Dirichlet smoothing mass of query likelihood. */
+  val Mu: Double = 2000.0
+
   /** (doc_id, dl, tok, tf) for the query terms only, plus the 1-row
     * corpus stats (n_docs, sum_dl). The stats ride a broadcast cross
     * join; the token filter runs inside the scan's codegen stage.
@@ -648,17 +651,23 @@ object Retrieval {
       case None => posts
     }
 
-  /** A latest read needs postings and stats in lockstep; a pinned read
-    * names its own version. */
-  private def requireLockstep(spark: SparkSession, indexDir: String,
-                              asOf: Option[Long]): Unit =
-    if (asOf.isEmpty) {
-      val vp = Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — an append or build crashed between commits; run " +
-        "repairBm25Index, or pin an intact version with asOf")
-    }
+  /** The tables an index writer commits together, whichever family the
+    * dir holds: BM25 {postings, stats}, IVF {centroids, assignment},
+    * IVF-PQ {vectors, centroids, codebook, assignment}. */
+  private val IndexTables =
+    Seq("postings", "stats", "vectors", "centroids", "codebook", "assignment")
+
+  /** The version a read of the index at `indexDir` pins
+    * ([[Versioned.lockstep]] over its tables): `asOf` itself, or the
+    * latest version all its tables share — a wedged dir refuses naming
+    * its family's repair. Every index probe and every serving stream
+    * pins through here.
+    */
+  private[graft] def pinIndex(spark: SparkSession, indexDir: String,
+                               asOf: Option[Long] = None): Long =
+    Versioned.lockstep(spark, indexDir, IndexTables, asOf,
+      (if (Versioned.exists(spark, s"$indexDir/postings")) "run repairBm25Index"
+       else "run repairIvfIndex") + ", or pin an intact version with asOf")
 
   /** Query the persisted index: touches only the query terms' postings
     * (token filter pushed into the parquet scan); the 1-row stats are
@@ -672,7 +681,7 @@ object Retrieval {
                      k1: Double = K1, b: Double = B,
                      asOf: Option[Long] = None): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
-    requireLockstep(spark, indexDir, asOf)
+    pinIndex(spark, indexDir, asOf): Unit
     val tf = shardPruned(spark, indexDir,
         Versioned.read(spark, s"$indexDir/postings", asOf), terms, asOf)
       .filter(col("tok").isInCollection(terms))
@@ -732,7 +741,7 @@ object Retrieval {
                              k1: Double = K1, b: Double = B,
                              asOf: Option[Long] = None): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
-    requireLockstep(spark, indexDir, asOf)
+    pinIndex(spark, indexDir, asOf): Unit
     val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
     requirePostingsPredicate(indexDir, posts, predicate)
     val slice = shardPruned(spark, indexDir, posts, terms, asOf)
@@ -830,7 +839,7 @@ object Retrieval {
                           queries: DataFrame, k: Int,
                           predicate: Option[Column], k1: Double, b: Double,
                           asOf: Option[Long]): DataFrame = {
-    requireLockstep(spark, indexDir, asOf)
+    pinIndex(spark, indexDir, asOf): Unit
     predicate.foreach(requirePostingsPredicate(indexDir,
       Versioned.read(spark, s"$indexDir/postings", asOf), _))
     val hits = withDf(bm25ManyHits(spark, indexDir, queries, asOf),
@@ -902,7 +911,7 @@ object Retrieval {
                          asOf: Option[Long]): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
     require(facetCols.nonEmpty, "need at least one facet column")
-    requireLockstep(spark, indexDir, asOf)
+    pinIndex(spark, indexDir, asOf): Unit
     val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
     predicate.foreach(requirePostingsPredicate(indexDir, posts, _))
     val missing = facetCols.filterNot(postingsMetaCols(posts).contains)
@@ -953,7 +962,7 @@ object Retrieval {
                    asOf: Option[Long] = None): DataFrame = {
     require(terms.nonEmpty, "QL needs at least one query term")
     require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    requireLockstep(spark, indexDir, asOf)
+    pinIndex(spark, indexDir, asOf): Unit
     // the pruned slice feeds cf, the candidate set, AND the tf join —
     // stage it (≤ |terms| rows per matching doc, the bm25Scores rule)
     val pruned = shardPruned(spark, indexDir,
@@ -1001,7 +1010,7 @@ object Retrieval {
                         queries: DataFrame, k: Int, mu: Double,
                         asOf: Option[Long]): DataFrame = {
     require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    requireLockstep(spark, indexDir, asOf)
+    pinIndex(spark, indexDir, asOf): Unit
     val hits = bm25ManyHits(spark, indexDir, queries, asOf)
       .select(col("query_id"), col("doc_id"), col("dl"), col("tok"),
         col("tf"))
@@ -1138,7 +1147,7 @@ object Retrieval {
                    phrase: Seq[String], k: Int,
                    asOf: Option[Long] = None): DataFrame = {
     require(phrase.nonEmpty, "phrase needs at least one term")
-    requireLockstep(spark, indexDir, asOf)
+    pinIndex(spark, indexDir, asOf): Unit
     val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
     val partN =
       if (asOf.isEmpty && posts.columns.contains("tok_part"))
@@ -1440,101 +1449,162 @@ object Retrieval {
       .orderBy(col("query_id"), col("rrf").desc, col("doc_id"))
   }
 
-  /** HYBRID retrieval over the two persisted indexes — the lexical
-    * inverted index ([[queryBm25IndexMany]]) and the semantic IVF ANN
-    * index ([[Similarity.queryIvfIndex]]) answer the same query batch
-    * independently, then [[rrfFuse]] combines the two top-`kEach`
-    * rankings. Queries: (query_id, terms array<string>, vec
-    * array<float|double>). Each index pins its own version (`bm25AsOf`
-    * / `ivfAsOf`) — a fused result is reproducible against any
-    * historical (lexical, semantic) index pair even after appends or
-    * rebuilds on either side.
+  /** A HYBRID retrieval request: the lexical index (BM25 arm, plus the
+    * optional Dirichlet QL arm over the same postings slice), ONE
+    * semantic arm, and the optional maxsim arm. Each index pins its own
+    * version (`bm25AsOf`, the semantic arm's `asOf`), so a fused result
+    * reproduces against any historical (lexical, semantic) index pair
+    * after appends or rebuilds on either side. A new fusion
+    * composition is a value of this type, planned by [[hybrid]].
     *
-    * Scale shape: each arm pays only its own probe cost (postings
-    * pruned by token / buckets pruned by centroid); fusion adds
-    * O(|Q|·kEach) — nothing corpus-sized beyond the two probes.
+    * @param ql        the QL arm's Dirichlet `mu`, when requested
+    * @param maxSim    the late-interaction arm's corpus: re-ranks the PQ
+    *                  arm's shortlist at chunk grain
+    * @param predicate ONE metadata gate on every arm (the BM25 arm gates
+    *                  inside its token-pruned postings scan, the vector
+    *                  arm inside its probed buckets, each before its
+    *                  top-kEach); it resolves against each index's own
+    *                  baked columns, and an index missing them refuses
+    * @param kEach     per-arm ranking depth handed to [[rrfFuse]]
+    * @param c         the RRF constant
     */
+  final case class Hybrid(bm25Dir: String, sem: SemanticArm,
+                          bm25AsOf: Option[Long] = None,
+                          ql: Option[Double] = None,
+                          maxSim: Option[MaxSim] = None,
+                          predicate: Option[Column] = None,
+                          kEach: Int = 20, c: Int = 60) {
+    /** This request with both indexes pinned ([[pinIndex]]): a latest
+      * read becomes the version its tables share now. */
+    def pinned(spark: SparkSession): Hybrid =
+      copy(bm25AsOf = Some(pinIndex(spark, bm25Dir, bm25AsOf)),
+        sem = sem.at(pinIndex(spark, sem.dir, sem.asOf)))
+  }
+
+  /** The semantic arm of a [[Hybrid]] request: one persisted ANN index. */
+  sealed trait SemanticArm {
+    def dir: String
+    def asOf: Option[Long]
+    def at(version: Long): SemanticArm
+  }
+
+  /** The float IVF index ([[Similarity.queryIvfIndex]]): cosine over the
+    * `nProbes` probed buckets. */
+  final case class Ivf(dir: String, nProbes: Int = 4,
+                       asOf: Option[Long] = None) extends SemanticArm {
+    def at(version: Long): Ivf = copy(asOf = Some(version))
+  }
+
+  /** The COMPRESSED index plus exact re-rank
+    * ([[Similarity.queryIvfPqIndexReranked]]): the ADC scan shortlists
+    * kEach·alpha candidates per query at code-width bytes, and the exact
+    * dot re-scores only the shortlist from the index's own
+    * full-precision vectors (DPP-fetched, never a corpus scan). `alpha`
+    * is the arm's recall dial; `m`/`ks`/`dim`/`residual` must match the
+    * build. */
+  final case class Pq(dir: String, alpha: Int = 4, nProbes: Int = 4,
+                      m: Int = 8, ks: Int = 16, dim: Int = 64,
+                      residual: Boolean = false,
+                      asOf: Option[Long] = None) extends SemanticArm {
+    def at(version: Long): Pq = copy(asOf = Some(version))
+  }
+
+  /** The maxsim arm's corpus ([[maxSimRerankChunks]]): the documents
+    * whose shortlisted chunks re-window on the index's own grid. */
+  final case class MaxSim(docs: DataFrame, id: Column, text: Column)
+
+  /** Plan a [[Hybrid]] request over a query batch (query_id, terms
+    * array<string>, vec array<float|double>, embedded by the index's
+    * encoder): every arm answers independently with its per-query
+    * top-kEach, unsorted, and [[rrfFuse]] fuses them. RRF is rank-only,
+    * so incommensurate scales (log-odds, log-likelihood, cosine, dot,
+    * summed cosine) never need calibration; n_rankers counts the arms
+    * that found a row.
+    *
+    * Grain comes from the index pair's own chunk_grid sidecars (file
+    * reads, no Spark job): both doc grain, output (query_id, doc_id,
+    * n_rankers, rrf); or both chunk grain on ONE window grid, fused at
+    * composite-key grain (a lexical and a semantic hit of the same span
+    * fuse) and decoded to (query_id, doc_id, chunk_start, n_rankers,
+    * rrf) — spans from different grids never align, so any other pair
+    * refuses. Output is top-k per query, ordered by (query_id, rrf
+    * desc, doc_id[, chunk_start]).
+    *
+    * The maxsim arm re-ranks the PQ arm's shortlist: one PQ
+    * probe+rerank, staged once, feeds both semantic arms (a duplicated
+    * probe subtree was the largest cost of the four-arm composition).
+    * The QL and maxsim arms cannot gate, so a predicate refuses them.
+    *
+    * Scale shape: each arm pays only its own probe (postings pruned by
+    * token, buckets pruned by centroid); fusion adds O(|Q|·kEach).
+    */
+  def hybrid(spark: SparkSession, req: Hybrid, queries: DataFrame,
+             k: Int): DataFrame = {
+    require(req.predicate.isEmpty || (req.ql.isEmpty && req.maxSim.isEmpty),
+      "the QL and maxsim arms cannot gate: a predicate fuses only the " +
+        "BM25 and vector arms")
+    require(req.maxSim.isEmpty || req.sem.isInstanceOf[Pq],
+      "the maxsim arm re-ranks the PQ arm's shortlist: request a Pq arm")
+    val chunked = chunkPair(spark, req.bm25Dir, req.sem.dir)
+    val terms = queries.select(col("query_id"), col("terms"))
+    val lex = bm25ManyTop(spark, req.bm25Dir, terms, req.kEach,
+        req.predicate, K1, B, req.bm25AsOf)
+      .select(col("query_id"), col("doc_id"), col("score"))
+    val ql = req.ql.map(mu => qlManyTop(spark, req.bm25Dir, terms,
+        req.kEach, mu, req.bm25AsOf)
+      .select(col("query_id"), col("doc_id"), col("score")))
+    val vecs = queries.select(col("query_id").as("id"), col("vec"))
+    val (top, score) = req.sem match {
+      case s: Ivf => (Similarity.ivfIndexTop(spark, s.dir, vecs, req.kEach,
+        s.nProbes, s.asOf, req.predicate), "sim")
+      case s: Pq => (Similarity.pqRerankedTop(spark, s.dir, vecs, req.kEach,
+        s.alpha, s.nProbes, s.asOf, s.m, s.ks, s.dim, s.residual,
+        req.predicate), "dot")
+    }
+    val shortlist =
+      if (req.maxSim.isEmpty) top else top.localCheckpoint(eager = false)
+    val sem = shortlist.select(col("query_id"), col("cand_id").as("doc_id"),
+      col(score).as("score"))
+    val msim = req.maxSim.map(ms => maxSimScoresFrom(spark, req.sem.dir,
+      ms.docs, ms.id, ms.text, queries,
+      shortlist.select(col("query_id"), col("cand_id").as("ck"))))
+    val fused = rrfFuse(Seq(lex) ++ ql ++ Seq(sem) ++ msim, k, req.c)
+    if (!chunked) fused
+    else fused
+      .select(col("query_id"),
+        shiftright(col("doc_id"), 32).as("doc_id"),
+        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
+        col("n_rankers"), col("rrf"))
+      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"),
+        col("chunk_start"))
+  }
+
+  /** True when a fusion pair is chunk grain; refuses a doc/chunk pair
+    * and two chunk grids that disagree. */
+  private def chunkPair(spark: SparkSession, lexDir: String,
+                        semDir: String): Boolean = {
+    val chunked = hasChunkGrid(spark, lexDir)
+    require(chunked == hasChunkGrid(spark, semDir), s"index grains " +
+      s"disagree: $lexDir is ${if (chunked) "chunk" else "doc"} grain, " +
+      s"$semDir is not — build both indexes at one grain")
+    if (chunked) {
+      val gridLex = chunkGrid(spark, lexDir)
+      val gridSem = chunkGrid(spark, semDir, stampTable = "assignment")
+      require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
+        s"$gridLex vs ANN $gridSem — spans from different grids never " +
+        "align; rebuild one index on the other's grid")
+    }
+    chunked
+  }
+
+  /** The doc-grain BM25 + float IVF request ([[hybrid]]). */
   def hybridSearch(spark: SparkSession, bm25Dir: String, ivfDir: String,
                    queries: DataFrame, k: Int, kEach: Int = 20,
                    nProbes: Int = 4, c: Int = 60,
                    bm25AsOf: Option[Long] = None,
-                   ivfAsOf: Option[Long] = None): DataFrame = {
-    val lex = bm25ManyTop(spark, bm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
-        bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.ivfIndexTop(spark, ivfDir,
-        queries.select(col("query_id").as("id"), col("vec")), kEach,
-        nProbes, ivfAsOf, None)
-      .select(col("query_id"), col("cand_id").as("doc_id"),
-        col("sim").as("score"))
-    rrfFuse(Seq(lex, sem), k, c)
-  }
-
-  /** [[hybridSearch]] with ONE metadata gate applied to BOTH arms —
-    * end-to-end FILTERED retrieval, the shape a multilingual /
-    * license-gated RAG deployment actually serves: the lexical arm
-    * gates inside its token-pruned postings scan
-    * ([[queryBm25IndexManyFiltered]] — gate columns denormalized onto
-    * postings rows at build), the semantic arm inside its probed
-    * centroid buckets ([[Similarity.queryIvfIndexFiltered]] — gate
-    * columns baked onto assignment rows), and BOTH apply the gate to
-    * the full scored set before their top-kEach (no arm can starve on
-    * gated neighbors), so the fusion sees only eligible documents.
-    * The SAME Column predicate resolves against each index's own baked
-    * columns — build both with the same metaCols names; either side
-    * missing them refuses loudly.
-    */
-  def hybridSearchFiltered(spark: SparkSession, bm25Dir: String,
-                           ivfDir: String, queries: DataFrame, k: Int,
-                           predicate: Column,
-                           kEach: Int = 20, nProbes: Int = 4, c: Int = 60,
-                           bm25AsOf: Option[Long] = None,
-                           ivfAsOf: Option[Long] = None): DataFrame = {
-    val lex = bm25ManyTop(spark, bm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach,
-        Some(predicate), K1, B, bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.ivfIndexTop(spark, ivfDir,
-        queries.select(col("query_id").as("id"), col("vec")), kEach,
-        nProbes, ivfAsOf, Some(predicate))
-      .select(col("query_id"), col("cand_id").as("doc_id"),
-        col("sim").as("score"))
-    rrfFuse(Seq(lex, sem), k, c)
-  }
-
-  /** [[hybridSearch]] with the semantic arm upgraded to the engine's
-    * declared ANN scale path — the COMPRESSED index plus exact re-rank
-    * ([[Similarity.queryIvfPqIndexReranked]]): the ADC scan shortlists
-    * kEach·alpha candidates per query at code-width bytes, the exact
-    * full-precision dot re-scores only the shortlist (DPP-fetched from
-    * the index's own vectors table — never a corpus scan, never a
-    * caller-supplied corpus that could drift stale), and the re-ranked
-    * top-kEach fuses with the lexical ranking under RRF. At 100 TB
-    * this is the serving pair a deployment actually runs: postings
-    * pruned by token on one arm, ~nProbes/nCentroids ÷ 32 of the
-    * vector bytes + |Q|·kEach·alpha exact dots on shard-pruned
-    * directories on the other. `alpha` is the semantic arm's recall
-    * dial; both indexes pin their own version.
-    */
-  def hybridSearchPq(spark: SparkSession, bm25Dir: String, pqDir: String,
-                     queries: DataFrame, k: Int,
-                     kEach: Int = 20, alpha: Int = 4, nProbes: Int = 4,
-                     c: Int = 60, m: Int = 8, ks: Int = 16, dim: Int = 64,
-                     residual: Boolean = false,
-                     bm25AsOf: Option[Long] = None,
-                     pqAsOf: Option[Long] = None): DataFrame = {
-    val lex = bm25ManyTop(spark, bm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
-        bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.pqRerankedTop(spark, pqDir,
-        queries.select(col("query_id").as("id"), col("vec")),
-        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual, None)
-      .select(col("query_id"), col("cand_id").as("doc_id"),
-        col("dot").as("score"))
-    rrfFuse(Seq(lex, sem), k, c)
-  }
+                   ivfAsOf: Option[Long] = None): DataFrame =
+    hybrid(spark, Hybrid(bm25Dir, Ivf(ivfDir, nProbes, ivfAsOf), bm25AsOf,
+      kEach = kEach, c = c), queries, k)
 
   // --------------------------------------------- chunk-grain hybrid RAG
 
@@ -1554,18 +1624,9 @@ object Retrieval {
                          lloydIters: Int = 0, nBuckets: Int = 8,
                          metaCols: Seq[String] = Nil): Long = {
     require(size > 0 && stride > 0)
-    val chunked = chunkKeyed(docs, id, text, size, stride, metaCols)
-    val vecs0 = Corpus.hashEmbed(chunked, col("ck"), col("chunk_text"), dim)
-    // chunks inherit their document's gate columns (chunkKeyed carried
-    // them); bake them onto the assignment so the filtered probe gates
-    // spans inside the probed buckets
-    val vecs =
-      if (metaCols.isEmpty) vecs0
-      else vecs0.join(
-        chunked.select((col("ck").as("id") +: metaCols.map(col)): _*),
-        Seq("id"))
-    val v = Similarity.buildIvfIndex(vecs, indexDir, nCentroids,
-      lloydIters, nBuckets, metaCols = metaCols)
+    val v = Similarity.buildIvfIndex(
+      chunkVecs(docs, id, text, size, stride, dim, metaCols), indexDir,
+      nCentroids, lloydIters, nBuckets, metaCols = metaCols)
     Stamp.write(docs.sparkSession, indexDir, annGrid, (size, stride), v)
     v
   }
@@ -1580,21 +1641,34 @@ object Retrieval {
     * re-stamps.
     */
   def appendToChunkIvfIndex(batch: DataFrame, id: Column, text: Column,
-                            indexDir: String, dim: Int = 64): Long = {
+                            indexDir: String, dim: Int = 64): Long =
+    Similarity.appendToIvfIndex(
+      appendedChunkVecs(batch, id, text, indexDir, dim), indexDir)
+
+  /** A document batch as chunk-grain ANN rows (id = ck, vec, gate
+    * columns): chunked on the grid, each chunk embedded
+    * ([[Corpus.hashEmbed]]), and each chunk carrying its document's
+    * gate columns (chunkKeyed inherited them) so the filtered probe
+    * gates spans inside the probed buckets. */
+  private def chunkVecs(docs: DataFrame, id: Column, text: Column,
+                        size: Int, stride: Int, dim: Int,
+                        metaCols: Seq[String]): DataFrame = {
+    val chunked = chunkKeyed(docs, id, text, size, stride, metaCols)
+    val vecs = Corpus.hashEmbed(chunked, col("ck"), col("chunk_text"), dim)
+    if (metaCols.isEmpty) vecs
+    else vecs.join(
+      chunked.select((col("ck").as("id") +: metaCols.map(col)): _*), Seq("id"))
+  }
+
+  /** [[chunkVecs]] for an append: the grid from the index's own
+    * sidecar, and the index's gate columns the batch carries (the
+    * underlying append enforces it supplies all of them). */
+  private def appendedChunkVecs(batch: DataFrame, id: Column, text: Column,
+                                indexDir: String, dim: Int): DataFrame = {
     val spark = batch.sparkSession
-    val (size, stride) = chunkGrid(spark, indexDir,
-      stampTable = "assignment")
-    // re-derive the index's gate columns for the batch's chunks; the
-    // underlying append enforces the batch actually supplies them
-    val meta = Similarity.indexMetaCols(spark, indexDir)
-      .filter(batch.columns.contains)
-    val chunked = chunkKeyed(batch, id, text, size, stride, meta)
-    val vecs0 = Corpus.hashEmbed(chunked, col("ck"), col("chunk_text"), dim)
-    val vecs =
-      if (meta.isEmpty) vecs0
-      else vecs0.join(
-        chunked.select((col("ck").as("id") +: meta.map(col)): _*), Seq("id"))
-    Similarity.appendToIvfIndex(vecs, indexDir)
+    val (size, stride) = chunkGrid(spark, indexDir, stampTable = "assignment")
+    chunkVecs(batch, id, text, size, stride, dim,
+      Similarity.indexMetaCols(spark, indexDir).filter(batch.columns.contains))
   }
 
   /** Compact the chunk-grain ANN index and RE-STAMP its grid sidecar
@@ -1651,7 +1725,7 @@ object Retrieval {
     * where PQ's ~32× byte cut pays most: a probe moves
     * ~nProbes/nCentroids ÷ 32 of the float-index bytes, and the exact
     * re-rank ([[Similarity.queryIvfPqIndexReranked]], wired into
-    * [[hybridSearchChunksPq]]) closes the reconstruction-error recall
+    * a [[Pq]] arm of [[hybrid]]) closes the reconstruction-error recall
     * gap at |Q|·kEach·alpha exact dots. Same grid-sidecar discipline as
     * the float index — stamped against the assignment's overwrite
     * snapshot, so fusion refuses mismatched grids.
@@ -1665,15 +1739,9 @@ object Retrieval {
                            nBuckets: Int = 8,
                            metaCols: Seq[String] = Nil): Long = {
     require(size > 0 && stride > 0)
-    val chunked = chunkKeyed(docs, id, text, size, stride, metaCols)
-    val vecs0 = Corpus.hashEmbed(chunked, col("ck"), col("chunk_text"), dim)
-    val vecs =
-      if (metaCols.isEmpty) vecs0
-      else vecs0.join(
-        chunked.select((col("ck").as("id") +: metaCols.map(col)): _*),
-        Seq("id"))
-    val v = Similarity.buildIvfPqIndex(vecs, indexDir, nCentroids, m, ks,
-      pqLloydIters, lloydIters, dim, residual, nBuckets,
+    val v = Similarity.buildIvfPqIndex(
+      chunkVecs(docs, id, text, size, stride, dim, metaCols), indexDir,
+      nCentroids, m, ks, pqLloydIters, lloydIters, dim, residual, nBuckets,
       metaCols = metaCols)
     Stamp.write(docs.sparkSession, indexDir, annGrid, (size, stride), v)
     v
@@ -1686,161 +1754,10 @@ object Retrieval {
     */
   def appendToChunkIvfPqIndex(batch: DataFrame, id: Column, text: Column,
                               indexDir: String, dim: Int = 64, m: Int = 8,
-                              residual: Boolean = false): Long = {
-    val spark = batch.sparkSession
-    val (size, stride) = chunkGrid(spark, indexDir,
-      stampTable = "assignment")
-    val meta = Similarity.indexMetaCols(spark, indexDir)
-      .filter(batch.columns.contains)
-    val chunked = chunkKeyed(batch, id, text, size, stride, meta)
-    val vecs0 = Corpus.hashEmbed(chunked, col("ck"), col("chunk_text"), dim)
-    val vecs =
-      if (meta.isEmpty) vecs0
-      else vecs0.join(
-        chunked.select((col("ck").as("id") +: meta.map(col)): _*), Seq("id"))
-    Similarity.appendToIvfPqIndex(vecs, indexDir, m, dim, residual)
-  }
-
-  /** HYBRID retrieval at CHUNK grain — the full RAG serving unit: the
-    * chunk BM25 index and the chunk ANN index answer the same query
-    * batch independently AT CK GRAIN (so a lexical hit and a semantic
-    * hit of the same span fuse, not just the same document), RRF fuses
-    * the two rankings, and the composite key decodes to attributed
-    * spans. The two indexes must have been chunked on the SAME window
-    * grid — fusing rankings over different grids would co-rank spans
-    * that never align, so a grid mismatch refuses up front.
-    *
-    * Queries: (query_id, terms array<string>, vec array<double> — the
-    * query text embedded by the same encoder as the index). Output:
-    * (query_id, doc_id, chunk_start, n_rankers, rrf), top-k per query
-    * by (rrf desc, doc asc, chunk asc). Feed [[assembleContext]] to
-    * turn the ranking into a budgeted context window.
-    */
-  def hybridSearchChunks(spark: SparkSession, chunkBm25Dir: String,
-                         chunkIvfDir: String, queries: DataFrame, k: Int,
-                         kEach: Int = 20, nProbes: Int = 4, c: Int = 60,
-                         bm25AsOf: Option[Long] = None,
-                         ivfAsOf: Option[Long] = None,
-                         qlArm: Boolean = false,
-                         mu: Double = 2000.0): DataFrame = {
-    val gridLex = chunkGrid(spark, chunkBm25Dir)
-    val gridSem = chunkGrid(spark, chunkIvfDir, stampTable = "assignment")
-    require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
-      s"$gridLex vs ANN $gridSem — spans from different grids never " +
-      "align; rebuild one index on the other's grid")
-    val lex = bm25ManyTop(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
-        bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.ivfIndexTop(spark, chunkIvfDir,
-        queries.select(col("query_id").as("id"), col("vec")), kEach,
-        nProbes, ivfAsOf, None)
-      .select(col("query_id"), col("cand_id").as("doc_id"),
-        col("sim").as("score"))
-    // the optional THIRD arm — Dirichlet QL over the SAME chunk BM25
-    // index (one more pass over the already-pruned postings slice, no
-    // new artifact): rrfFuse is ranker-count-agnostic and only ranks
-    // enter, so the likelihood scale never needs to be commensurate
-    val arms =
-      if (!qlArm) Seq(lex, sem)
-      else Seq(lex, sem, qlManyTop(spark, chunkBm25Dir,
-          queries.select(col("query_id"), col("terms")), kEach, mu,
-          bm25AsOf)
-        .select(col("query_id"), col("doc_id"), col("score")))
-    rrfFuse(arms, k, c)
-      .select(shiftright(col("doc_id"), 32).as("doc_id"),
-        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
-        col("query_id"), col("n_rankers"), col("rrf"))
-      .select(col("query_id"), col("doc_id"), col("chunk_start"),
-        col("n_rankers"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"),
-        col("chunk_start"))
-  }
-
-  /** [[hybridSearchChunks]] with ONE metadata gate on BOTH chunk arms —
-    * [[hybridSearchFiltered]] at the RAG serving grain: spans rank only
-    * if their DOCUMENT passes the gate (chunks inherited the columns at
-    * build — postings metaCols on the lexical arm, assignment metaCols
-    * on the semantic arm), each arm gates its full scored set before
-    * its top-kEach, and the fused output keeps span-exact attribution.
-    * Both indexes must share the window grid AND carry the predicate's
-    * columns; either missing refuses the whole serve.
-    */
-  def hybridSearchChunksFiltered(spark: SparkSession, chunkBm25Dir: String,
-                         chunkIvfDir: String, queries: DataFrame, k: Int,
-                         predicate: Column,
-                         kEach: Int = 20, nProbes: Int = 4, c: Int = 60,
-                         bm25AsOf: Option[Long] = None,
-                         ivfAsOf: Option[Long] = None): DataFrame = {
-    val gridLex = chunkGrid(spark, chunkBm25Dir)
-    val gridSem = chunkGrid(spark, chunkIvfDir, stampTable = "assignment")
-    require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
-      s"$gridLex vs ANN $gridSem — spans from different grids never " +
-      "align; rebuild one index on the other's grid")
-    val lex = bm25ManyTop(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach,
-        Some(predicate), K1, B, bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.ivfIndexTop(spark, chunkIvfDir,
-        queries.select(col("query_id").as("id"), col("vec")), kEach,
-        nProbes, ivfAsOf, Some(predicate))
-      .select(col("query_id"), col("cand_id").as("doc_id"),
-        col("sim").as("score"))
-    rrfFuse(Seq(lex, sem), k, c)
-      .select(col("query_id"),
-        shiftright(col("doc_id"), 32).as("doc_id"),
-        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
-        col("n_rankers"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"),
-        col("chunk_start"))
-  }
-
-  /** [[hybridSearchChunks]] with the semantic arm upgraded to the
-    * COMPRESSED chunk index plus exact re-rank — the 100 TB serving
-    * form: the chunk-grain vector table is the largest vector artifact
-    * in the system, so its probe reads m-code rows (~1/32 the float
-    * bytes) and only the |Q|·kEach·alpha shortlist pays exact dots,
-    * DPP-fetched from the ck-sharded full-precision vectors the index
-    * persisted AT BUILD TIME ([[buildChunkIvfPqIndex]] already computes
-    * every chunk vector to encode it — committing them costs one write,
-    * where the previous form re-chunked and re-embedded the WHOLE
-    * documents table in-plan per serving batch, a full corpus pass that
-    * a real neural encoder makes impossible, with a silent-staleness
-    * hazard besides). Both indexes must share the window grid; both pin
-    * their own version; `alpha` is the semantic arm's recall dial.
-    * Output matches [[hybridSearchChunks]]: (query_id, doc_id,
-    * chunk_start, n_rankers, rrf).
-    */
-  def hybridSearchChunksPq(spark: SparkSession, chunkBm25Dir: String,
-                           chunkPqDir: String, queries: DataFrame,
-                           k: Int, kEach: Int = 20,
-                           alpha: Int = 4, nProbes: Int = 4, c: Int = 60,
-                           m: Int = 8, ks: Int = 16, dim: Int = 64,
-                           residual: Boolean = false,
-                           bm25AsOf: Option[Long] = None,
-                           pqAsOf: Option[Long] = None): DataFrame = {
-    val gridLex = chunkGrid(spark, chunkBm25Dir)
-    val gridSem = chunkGrid(spark, chunkPqDir, stampTable = "assignment")
-    require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
-      s"$gridLex vs PQ $gridSem — spans from different grids never " +
-      "align; rebuild one index on the other's grid")
-    val lex = bm25ManyTop(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
-        bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    val sem = Similarity.pqRerankedTop(spark, chunkPqDir,
-        queries.select(col("query_id").as("id"), col("vec")),
-        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual, None)
-      .select(col("query_id"), col("cand_id").as("doc_id"),
-        col("dot").as("score"))
-    rrfFuse(Seq(lex, sem), k, c)
-      .select(col("query_id"),
-        shiftright(col("doc_id"), 32).as("doc_id"),
-        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
-        col("n_rankers"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"),
-        col("chunk_start"))
-  }
+                              residual: Boolean = false): Long =
+    Similarity.appendToIvfPqIndex(
+      appendedChunkVecs(batch, id, text, indexDir, dim), indexDir, m, dim,
+      residual)
 
   /** LATE-INTERACTION (multi-vector) re-rank — ColBERT's maxsim
     * (Khattab & Zaharia, SIGIR 2020) bounded to the serving shape a
@@ -1895,7 +1812,7 @@ object Retrieval {
         .localCheckpoint(eager = false)) // feeds doc fetch + the pair join
 
   /** [[maxSimScores]] over a CALLER-STAGED shortlist (query_id, ck) —
-    * the seam that lets [[hybridSearchChunksMaxSim]] run the PQ
+    * the seam that lets [[hybrid]]'s maxsim arm run the PQ
     * probe+rerank ONCE and feed both the exact-dot arm and the maxsim
     * arm from the same staged rows, instead of evaluating the identical
     * probe subtree twice per serve call. The shortlist must be staged
@@ -1944,62 +1861,6 @@ object Retrieval {
       .agg(sum(col("mxc").cast("decimal(27,10)")).cast("double")
         .as("score"))
       .select(col("query_id"), col("ck").as("doc_id"), col("score"))
-  }
-
-  /** [[hybridSearchChunksPq]] grown to the FOUR-arm serving unit: BM25
-    * + Dirichlet QL (both off the pruned postings slice) + the
-    * PQ-shortlisted exact-dot single-vector arm + the late-interaction
-    * maxsim re-rank of that same shortlist ([[maxSimRerankChunks]]).
-    * RRF stays rank-only, so the four incommensurate scales (log-odds,
-    * log-likelihood, dot, summed cosine) never need calibration;
-    * n_rankers reaches 4 where every arm finds the span. The maxsim
-    * arm re-uses the PQ arm's shortlist — the fourth ranking costs
-    * token-level work on |Q|·kEach chunks, nothing corpus-sized.
-    */
-  def hybridSearchChunksMaxSim(spark: SparkSession, chunkBm25Dir: String,
-                               chunkPqDir: String, docs: DataFrame,
-                               id: Column, text: Column,
-                               queries: DataFrame, k: Int,
-                               kEach: Int = 20, alpha: Int = 4,
-                               nProbes: Int = 4, c: Int = 60,
-                               mu: Double = 2000.0, m: Int = 8,
-                               ks: Int = 16, dim: Int = 64,
-                               residual: Boolean = false,
-                               bm25AsOf: Option[Long] = None,
-                               pqAsOf: Option[Long] = None): DataFrame = {
-    val gridLex = chunkGrid(spark, chunkBm25Dir)
-    val gridSem = chunkGrid(spark, chunkPqDir, stampTable = "assignment")
-    require(gridLex == gridSem, s"chunk index grids disagree: BM25 " +
-      s"$gridLex vs PQ $gridSem — spans from different grids never " +
-      "align; rebuild one index on the other's grid")
-    val lex = bm25ManyTop(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, None, K1, B,
-        bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    val ql = qlManyTop(spark, chunkBm25Dir,
-        queries.select(col("query_id"), col("terms")), kEach, mu,
-        bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score"))
-    // ONE PQ probe+rerank serves both semantic arms: the exact-dot arm
-    // reads (ck, dot), the maxsim arm re-ranks the same shortlist —
-    // staged once, never evaluated twice (r17: the duplicated probe
-    // subtree was the single largest cost in this composition).
-    val semRaw = Similarity.pqRerankedTop(spark, chunkPqDir,
-        queries.select(col("query_id").as("id"), col("vec")),
-        kEach, alpha, nProbes, pqAsOf, m, ks, dim, residual, None)
-      .localCheckpoint(eager = false)
-    val sem = semRaw
-      .select(col("query_id"), col("cand_id").as("doc_id"),
-        col("dot").as("score"))
-    val msim = maxSimScoresFrom(spark, chunkPqDir, docs, id, text, queries,
-      semRaw.select(col("query_id"), col("cand_id").as("ck")))
-    rrfFuse(Seq(lex, ql, sem, msim), k, c)
-      .select(col("query_id"),
-        shiftright(col("doc_id"), 32).as("doc_id"),
-        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
-        col("n_rankers"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"),
-        col("chunk_start"))
   }
 
   /** RAG context assembly over a fused chunk ranking — the step between

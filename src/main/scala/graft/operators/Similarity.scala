@@ -27,9 +27,7 @@ object Similarity {
     * @param candidates (id, vec)
     */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val q = queries
-      .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
-      .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
+    val q = queryVecs(queries)
     val c = candidates
       .select(col("id").as("cand_id"), VectorOps.toDoubleArray(col("vec")).as("cv"))
       .withColumn("c_norm_sq", VectorOps.normSq(col("cv")))
@@ -349,16 +347,7 @@ object Similarity {
   private def probeScored(queries: DataFrame,
                           withCents: DataFrame => DataFrame,
                           assigned: DataFrame, nProbes: Int): DataFrame = {
-    val q = queries
-      .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
-      .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
-    val probes = withCents(q)
-      .withColumn("__probe", explode(slice(
-        array_sort(scoredCents(col("qv"), col("q_norm_sq")), bySimDescIdAsc),
-        1, nProbes)))
-      .select(col("query_id"), col("__probe")("centroid_id").as("centroid_id"),
-        col("qv"), col("q_norm_sq"))
-
+    val probes = probesOf(queryVecs(queries), withCents, nProbes)
     // scan only the probed buckets
     assigned.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("cand_id") =!= col("query_id"))
@@ -366,6 +355,25 @@ object Similarity {
         col("qv"), col("cv"), col("q_norm_sq"), col("c_norm_sq")))
       .select(col("query_id"), col("cand_id"), col("sim"))
   }
+
+  /** The query side of an IVF probe: (query_id, qv, q_norm_sq). */
+  private def queryVecs(queries: DataFrame): DataFrame =
+    queries
+      .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
+      .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
+
+  /** IVF probe selection, map-side: rank the centroid array
+    * `withCents` attaches per query (sim DESC, id ASC), keep the first
+    * `nProbes`, explode — (query_id, centroid_id, qv, q_norm_sq), one
+    * row per probed centroid. */
+  private def probesOf(q: DataFrame, withCents: DataFrame => DataFrame,
+                       nProbes: Int): DataFrame =
+    withCents(q)
+      .withColumn("__probe", explode(slice(
+        array_sort(scoredCents(col("qv"), col("q_norm_sq")), bySimDescIdAsc),
+        1, nProbes)))
+      .select(col("query_id"), col("__probe")("centroid_id").as("centroid_id"),
+        col("qv"), col("q_norm_sq"))
 
   private def probeIndex(queries: DataFrame,
                          withCents: DataFrame => DataFrame,
@@ -981,21 +989,15 @@ object Similarity {
     * to a historical index version (both tables pin the same version).
     */
   /** Read the (centroids, assignment) pair of a persisted index.
-    * Latest-version reads REFUSE an out-of-lockstep pair (a build or
-    * append that crashed between its two commits): probing new
-    * centroids against a stale assignment silently drops vectors. The
-    * index is a derived artifact — repair is a rebuild; pinned `asOf`
-    * reads of intact historical versions keep working.
+    * Latest-version reads REFUSE an out-of-lockstep index
+    * ([[Retrieval.pinIndex]]; a build or append that crashed between
+    * its commits): probing new centroids against a stale assignment
+    * silently drops vectors. Pinned `asOf` reads of intact historical
+    * versions keep working.
     */
   private def readIndexPair(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, asOf: Option[Long]): (DataFrame, DataFrame) = {
-    if (asOf.isEmpty) {
-      val vc = graft.sources.Versioned.latestVersion(spark, s"$indexDir/centroids")
-      val va = graft.sources.Versioned.latestVersion(spark, s"$indexDir/assignment")
-      require(vc == va, s"index tables out of lockstep (centroids v$vc, " +
-        s"assignment v$va) — a build/append crashed between commits; " +
-        "run repairIvfIndex, or pin an intact version with asOf")
-    }
+    Retrieval.pinIndex(spark, indexDir, asOf): Unit
     // document deletion ([[Tombstones]]): pending deletes gate the
     // candidate rows BEFORE scoring/ranking (survivors fill k — no
     // starvation); the physical drop happens at [[compactIvfIndex]].
@@ -1248,10 +1250,7 @@ object Similarity {
         coalesce(col("n"), lit(0L)).as("n"))
       .agg(collect_list(struct(col("centroid_id"), col("centv"),
         col("cent_norm_sq"), col("n"))).as("cents"))
-    val q = queries
-      .select(col("id").as("query_id"),
-        VectorOps.toDoubleArray(col("vec")).as("qv"))
-      .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
+    val q = queryVecs(queries)
     val scoredN = transform(col("cents"), ct => struct(
       coalesce(VectorOps.cosineWithNorms(col("qv"), ct("centv"),
         col("q_norm_sq"), ct("cent_norm_sq")),
@@ -1295,8 +1294,8 @@ object Similarity {
                                       asOf: Option[Long] = None, m: Int = 8,
                                       ks: Int = 16, dim: Int = 64,
                                       residual: Boolean = false): DataFrame = {
-    val nCent = graft.sources.Versioned
-      .read(spark, s"$indexDir/centroids", asOf).count().toInt
+    val nCent = graft.sources.Versioned.rows(spark,
+      s"$indexDir/centroids", asOf, centFields).size
     adaptiveWiden(queries, k, math.max(1, nProbes), nCent,
       p => queryIvfPqIndexWhere(spark, indexDir, queries, k, p, asOf, m, ks,
         dim, residual, Some(predicate)))
@@ -1375,14 +1374,9 @@ object Similarity {
     val (cents, assigned) = readIndexPair(spark, indexDir, asOf)
     val scale = cents.select(col("s").as("s")).limit(1)
 
-    val q = queries
-      .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
-      .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
-    val probes = indexCents(spark, indexDir, asOf)(q)
-      .withColumn("__probe", explode(slice(
-        array_sort(scoredCents(col("qv"), col("q_norm_sq")), bySimDescIdAsc),
-        1, nProbes)))
-      .select(col("query_id"), col("__probe")("centroid_id").as("centroid_id"))
+    val q = queryVecs(queries)
+    val probes = probesOf(q, indexCents(spark, indexDir, asOf), nProbes)
+      .select(col("query_id"), col("centroid_id"))
     val qq = sq8Apply(q.select(col("query_id"), col("qv").as("v")), scale)
       .select(col("query_id"), col("q").as("qq"))
       .join(probes, Seq("query_id"))
@@ -1830,15 +1824,7 @@ object Similarity {
                       pred: Option[Column]): DataFrame = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val sub = dim / m
-    if (asOf.isEmpty) {
-      val ts = Seq("vectors", "centroids", "codebook", "assignment")
-        .filter(t => graft.sources.Versioned.exists(spark, s"$indexDir/$t"))
-      val vs = ts.map(t =>
-        graft.sources.Versioned.latestVersion(spark, s"$indexDir/$t"))
-      require(vs.distinct.size == 1, s"index tables out of lockstep " +
-        s"(${ts.zip(vs).map { case (t, v) => s"$t v$v" }.mkString(", ")}) — " +
-        "a build/append crashed between commits; run repairIvfIndex or pin asOf")
-    }
+    Retrieval.pinIndex(spark, indexDir, asOf): Unit
     val centroids = graft.sources.Versioned.read(spark, s"$indexDir/centroids", asOf)
     val cb = pqResGuard(
       graft.sources.Versioned.read(spark, s"$indexDir/codebook", asOf), residual)
@@ -1849,15 +1835,9 @@ object Similarity {
     pred.foreach(requirePredicateCols(indexDir, assignedAll, _))
     val assigned = pred.map(assignedAll.filter).getOrElse(assignedAll)
 
-    val q = queries
-      .select(col("id").as("query_id"), VectorOps.toDoubleArray(col("vec")).as("qv"))
-      .withColumn("q_norm_sq", VectorOps.normSq(col("qv")))
-    val probesRaw = indexCents(spark, indexDir, asOf)(q)
-      .withColumn("__probe", explode(slice(
-        array_sort(scoredCents(col("qv"), col("q_norm_sq")), bySimDescIdAsc),
-        1, nProbes)))
-      .select(col("query_id"), col("__probe")("centroid_id").as("centroid_id"),
-        col("qv"))
+    val q = queryVecs(queries)
+    val probesRaw = probesOf(q, indexCents(spark, indexDir, asOf), nProbes)
+      .select(col("query_id"), col("centroid_id"), col("qv"))
     // residual ADC: score(q, x) ≈ dot(q, c) + dot(q, x − c hat) — the
     // centroid base dot is ONE extra term per (query, probe), computed
     // against the broadcast centroid table; raw mode scores from the

@@ -802,6 +802,31 @@ object Versioned {
     vs.last
   }
 
+  /** The read-side LOCKSTEP rule for tables one writer commits together
+    * under `dir`, and the version a read of them pins. A pinned read
+    * names its own version (`asOf`, returned unchecked). A latest read
+    * requires every table of `tables` that exists under `dir` to share
+    * one latest version: one table ahead of the others means a
+    * multi-table commit crashed between its commits, and reading the
+    * pair anyway would join new rows against stale ones. The refusal
+    * names `remedy`. Index and model reads, batch and streaming, pin
+    * through here.
+    */
+  def lockstep(spark: SparkSession, dir: String, tables: Seq[String],
+               asOf: Option[Long], remedy: => String): Long =
+    asOf.getOrElse {
+      val heads = tables.flatMap { t =>
+        val table = s"$dir/$t"
+        versions(fs(spark, new Path(table)), table).lastOption.map(t -> _)
+      }
+      require(heads.nonEmpty,
+        s"$dir holds none of the versioned tables ${tables.mkString(", ")}")
+      require(heads.map(_._2).distinct.size == 1, s"$dir tables out of " +
+        s"lockstep (${heads.map { case (t, v) => s"$t v$v" }.mkString(", ")})" +
+        s" — a build or append crashed between commits; $remedy")
+      heads.head._2
+    }
+
   /** Table history: (version, action, fileCount) ascending. */
   def history(spark: SparkSession, table: String): Seq[(Long, String, Int)] = {
     val f = fs(spark, new Path(table))

@@ -245,8 +245,10 @@ object StreamJobs {
     * `buildIvfIndex`) with an unbounded stream of query vectors
     * (id, vec): each micro-batch pays only probe selection + the
     * bucket scan — the online-serving half of the build-once /
-    * probe-many cadence. The index version is PINNED at stream start,
-    * so a concurrent append or rebuild never shifts answers
+    * probe-many cadence. The index version is PINNED at stream start
+    * ([[graft.operators.Retrieval.pinIndex]] — a dir wedged by a crashed
+    * append refuses here, naming its repair, never inside the first
+    * micro-batch), so a concurrent append or rebuild never shifts answers
     * mid-stream (the operational invariant an online ranker needs);
     * restarting the stream picks up the new latest version.
     * foreachBatch because the probe is a batch join against Versioned
@@ -261,8 +263,7 @@ object StreamJobs {
                      outDir: String, checkpointDir: String,
                      k: Int = 5, nProbes: Int = 4): StreamingQuery = {
     val spark = queryStream.sparkSession
-    val pinned = graft.sources.Versioned
-      .latestVersion(spark, s"$indexDir/centroids")
+    val pinned = graft.operators.Retrieval.pinIndex(spark, indexDir)
     queryStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -309,9 +310,9 @@ object StreamJobs {
     * ([[graft.operators.Retrieval.buildBm25Index]]): each micro-batch
     * of (query_id, terms) rows pays one pass over its terms' postings
     * slices ([[graft.operators.Retrieval.queryBm25IndexMany]] — never
-    * the corpus); the index version is pinned at stream start (with the
-    * lockstep check, so a dir wedged by a crashed build fails here with
-    * the rebuild hint, not per-batch) and a concurrent append/rebuild
+    * the corpus); the index version is pinned at stream start
+    * ([[graft.operators.Retrieval.pinIndex]], so a wedged dir fails here
+    * with the repair hint, not per-batch) and a concurrent append/rebuild
     * never shifts rankings mid-stream — a restart picks up the new
     * latest. The [[classifyStream]] discipline applied to lexical
     * search, including the idempotent (run_id, batch_id) sink.
@@ -319,14 +320,7 @@ object StreamJobs {
   def searchStream(queryStream: DataFrame, indexDir: String, outDir: String,
                    checkpointDir: String, k: Int = 10): StreamingQuery = {
     val spark = queryStream.sparkSession
-    val pinned = {
-      val vp = graft.sources.Versioned.latestVersion(spark, s"$indexDir/postings")
-      val vs = graft.sources.Versioned.latestVersion(spark, s"$indexDir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — a build crashed between commits; rebuild into a " +
-        "fresh directory")
-      vp
-    }
+    val pinned = graft.operators.Retrieval.pinIndex(spark, indexDir)
     queryStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -340,202 +334,34 @@ object StreamJobs {
   }
 
   /** Online HYBRID retrieval — the streaming half of
-    * [[graft.operators.Retrieval.hybridSearch]]: each micro-batch of
-    * (query_id, terms, vec) rows answers on BOTH persisted indexes
-    * (postings slices for the lexical arm, probed buckets for the
-    * semantic arm — never anything corpus-sized) and fuses the two
-    * rankings with reciprocal-rank fusion. The version PAIR is pinned
-    * at stream start — each index through its own lockstep check, so
-    * an append or rebuild on EITHER side never reshapes fused rankings
-    * mid-stream; a restart picks up the new latest pair. The
-    * [[searchStream]] discipline applied to the fused ranker,
-    * including the idempotent (run_id, batch_id) sink.
+    * [[graft.operators.Retrieval.hybrid]]: each micro-batch of
+    * (query_id, terms, vec) rows answers the request on its persisted
+    * indexes (postings slices, probed buckets — never anything
+    * corpus-sized) and fuses the rankings, at whichever grain the index
+    * pair has. Both indexes pin at stream start
+    * ([[graft.operators.Retrieval.Hybrid.pinned]] — a wedged dir refuses
+    * here with its repair hint), so an append or rebuild on EITHER side
+    * never reshapes fused rankings mid-stream; a restart picks up the new
+    * latest pair. The request is validated at start too, by planning it
+    * once on an empty batch: an un-baked predicate or a mismatched grid
+    * refuses before the first micro-batch, never inside it. The
+    * [[searchStream]] discipline, including the idempotent (run_id,
+    * batch_id) sink.
     */
-  def hybridSearchStream(queryStream: DataFrame, bm25Dir: String,
-                         ivfDir: String, outDir: String,
-                         checkpointDir: String, k: Int = 10,
-                         kEach: Int = 20, nProbes: Int = 4): StreamingQuery = {
+  def hybridStream(queryStream: DataFrame,
+                   req: graft.operators.Retrieval.Hybrid, outDir: String,
+                   checkpointDir: String, k: Int = 10): StreamingQuery = {
     val spark = queryStream.sparkSession
-    val pinnedLex = {
-      val vp = graft.sources.Versioned.latestVersion(spark, s"$bm25Dir/postings")
-      val vs = graft.sources.Versioned.latestVersion(spark, s"$bm25Dir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — a build crashed between commits; rebuild into a " +
-        "fresh directory")
-      vp
-    }
-    val pinnedSem = {
-      val vc = graft.sources.Versioned.latestVersion(spark, s"$ivfDir/centroids")
-      val va = graft.sources.Versioned.latestVersion(spark, s"$ivfDir/assignment")
-      require(vc == va, s"IVF index tables out of lockstep (centroids v$vc, " +
-        s"assignment v$va) — a build/append crashed between commits; " +
-        "rebuild the index or pin an intact version with asOf")
-      vc
-    }
-    queryStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(
-          graft.operators.Retrieval.hybridSearch(spark, bm25Dir, ivfDir,
-            batch, k, kEach, nProbes,
-            bm25AsOf = Some(pinnedLex), ivfAsOf = Some(pinnedSem)),
-          checkpointDir, batchId, outDir)
-      }
-      .start()
-  }
-
-  /** Online FILTERED hybrid retrieval — [[hybridSearchStream]] with
-    * one metadata gate applied to BOTH persisted arms
-    * ([[graft.operators.Retrieval.hybridSearchFiltered]]): the serving
-    * stream of a multilingual / license-gated RAG deployment. The
-    * predicate resolves against the gate columns BAKED into each index
-    * at build, so the per-micro-batch cost is exactly the unfiltered
-    * stream's (token-pruned postings + probed buckets, the gate inside
-    * each scan) — and an index missing the column refuses AT STREAM
-    * START (the predicate is validated against both snapshots before
-    * the first batch), never mid-stream. Versions pin at start; the
-    * epoch-history sidecars keep both arms shard-pruned even when a
-    * compaction lands mid-stream.
-    */
-  def hybridSearchFilteredStream(queryStream: DataFrame, bm25Dir: String,
-                         ivfDir: String, outDir: String,
-                         checkpointDir: String,
-                         predicate: org.apache.spark.sql.Column,
-                         k: Int = 10,
-                         kEach: Int = 20, nProbes: Int = 4): StreamingQuery = {
-    val spark = queryStream.sparkSession
-    val pinnedLex = {
-      val vp = graft.sources.Versioned.latestVersion(spark, s"$bm25Dir/postings")
-      val vs = graft.sources.Versioned.latestVersion(spark, s"$bm25Dir/stats")
-      require(vp == vs, s"BM25 index tables out of lockstep (postings v$vp, " +
-        s"stats v$vs) — a build crashed between commits; rebuild into a " +
-        "fresh directory")
-      vp
-    }
-    val pinnedSem = {
-      val vc = graft.sources.Versioned.latestVersion(spark, s"$ivfDir/centroids")
-      val va = graft.sources.Versioned.latestVersion(spark, s"$ivfDir/assignment")
-      require(vc == va, s"IVF index tables out of lockstep (centroids v$vc, " +
-        s"assignment v$va) — a build/append crashed between commits; " +
-        "rebuild the index or pin an intact version with asOf")
-      vc
-    }
-    // fail an un-baked predicate NOW, not inside the first micro-batch:
-    // run the gated plans once against an empty query batch — both
-    // arms' predicate validation fires at analysis
-    graft.operators.Retrieval.hybridSearchFiltered(spark, bm25Dir, ivfDir,
+    val pinned = req.pinned(spark)
+    graft.operators.Retrieval.hybrid(spark, pinned,
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        queryStream.schema),
-      k, predicate, kEach, nProbes,
-      bm25AsOf = Some(pinnedLex), ivfAsOf = Some(pinnedSem)): Unit
+        queryStream.schema), k): Unit
     queryStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         writeBatchIdempotent(
-          graft.operators.Retrieval.hybridSearchFiltered(spark, bm25Dir,
-            ivfDir, batch, k, predicate, kEach, nProbes,
-            bm25AsOf = Some(pinnedLex), ivfAsOf = Some(pinnedSem)),
-          checkpointDir, batchId, outDir)
-      }
-      .start()
-  }
-
-  /** Online CHUNK-grain hybrid retrieval — [[hybridSearchStream]] at
-    * the RAG serving grain: each micro-batch of (query_id, terms, vec)
-    * fuses the chunk BM25 and chunk ANN indexes at composite-key grain
-    * and decodes to attributed spans
-    * ([[graft.operators.Retrieval.hybridSearchChunks]] — which also
-    * refuses a grid-mismatched index pair up front, before the stream
-    * starts). Both versions pin at stream start; idempotent
-    * (batch_id)-partitioned sink.
-    */
-  def hybridSearchChunksStream(queryStream: DataFrame, chunkBm25Dir: String,
-                               chunkIvfDir: String, outDir: String,
-                               checkpointDir: String, k: Int = 10,
-                               kEach: Int = 20,
-                               nProbes: Int = 4): StreamingQuery = {
-    val spark = queryStream.sparkSession
-    val pinnedLex = {
-      val vp = graft.sources.Versioned.latestVersion(spark, s"$chunkBm25Dir/postings")
-      val vs = graft.sources.Versioned.latestVersion(spark, s"$chunkBm25Dir/stats")
-      require(vp == vs, s"chunk BM25 index tables out of lockstep " +
-        s"(postings v$vp, stats v$vs) — run repairBm25Index")
-      vp
-    }
-    val pinnedSem = {
-      val vc = graft.sources.Versioned.latestVersion(spark, s"$chunkIvfDir/centroids")
-      val va = graft.sources.Versioned.latestVersion(spark, s"$chunkIvfDir/assignment")
-      require(vc == va, s"chunk IVF index tables out of lockstep " +
-        s"(centroids v$vc, assignment v$va) — run repairIvfIndex")
-      vc
-    }
-    // fail the grid check NOW, not inside the first micro-batch
-    graft.operators.Retrieval.chunkGrid(spark, chunkBm25Dir): Unit
-    graft.operators.Retrieval.chunkGrid(spark, chunkIvfDir,
-      stampTable = "assignment"): Unit
-    queryStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(
-          graft.operators.Retrieval.hybridSearchChunks(spark, chunkBm25Dir,
-            chunkIvfDir, batch, k, kEach, nProbes,
-            bm25AsOf = Some(pinnedLex), ivfAsOf = Some(pinnedSem)),
-          checkpointDir, batchId, outDir)
-      }
-      .start()
-  }
-
-  /** The COMPRESSED chunk-hybrid's online half —
-    * [[hybridSearchChunksStream]] with the semantic arm on the
-    * persisted IVF-PQ chunk index plus exact re-rank
-    * ([[graft.operators.Retrieval.hybridSearchChunksPq]]): each
-    * micro-batch of (query_id, terms, vec) fuses at span grain against
-    * the version pair pinned at stream start (the PQ index's FOUR
-    * lockstep tables — codes, centroids, codebook, and the
-    * full-precision vectors the exact re-rank DPP-fetches — pin as
-    * one). Grid mismatch refuses BEFORE the stream starts; idempotent
-    * (run_id, batch_id) sink.
-    */
-  def hybridSearchChunksPqStream(queryStream: DataFrame,
-                                 chunkBm25Dir: String, chunkPqDir: String,
-                                 outDir: String,
-                                 checkpointDir: String, k: Int = 10,
-                                 kEach: Int = 20, alpha: Int = 4,
-                                 nProbes: Int = 4, m: Int = 8,
-                                 ks: Int = 16, dim: Int = 64,
-                                 residual: Boolean = false): StreamingQuery = {
-    val spark = queryStream.sparkSession
-    val pinnedLex = {
-      val vp = graft.sources.Versioned.latestVersion(spark, s"$chunkBm25Dir/postings")
-      val vs = graft.sources.Versioned.latestVersion(spark, s"$chunkBm25Dir/stats")
-      require(vp == vs, s"chunk BM25 index tables out of lockstep " +
-        s"(postings v$vp, stats v$vs) — run repairBm25Index")
-      vp
-    }
-    val pinnedSem = {
-      val vs = Seq("vectors", "centroids", "codebook", "assignment")
-        .filter(t => graft.sources.Versioned.exists(spark, s"$chunkPqDir/$t"))
-        .map(t => graft.sources.Versioned.latestVersion(spark, s"$chunkPqDir/$t"))
-      require(vs.distinct.size == 1, s"chunk PQ index tables out of " +
-        s"lockstep ($vs) — run repairIvfIndex")
-      vs.head
-    }
-    // fail the grid check NOW, not inside the first micro-batch
-    graft.operators.Retrieval.chunkGrid(spark, chunkBm25Dir): Unit
-    graft.operators.Retrieval.chunkGrid(spark, chunkPqDir,
-      stampTable = "assignment"): Unit
-    queryStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(
-          graft.operators.Retrieval.hybridSearchChunksPq(spark,
-            chunkBm25Dir, chunkPqDir, batch, k, kEach, alpha,
-            nProbes, m = m, ks = ks, dim = dim, residual = residual,
-            bm25AsOf = Some(pinnedLex), pqAsOf = Some(pinnedSem)),
+          graft.operators.Retrieval.hybrid(spark, pinned, batch, k),
           checkpointDir, batchId, outDir)
       }
       .start()
@@ -549,7 +375,7 @@ object StreamJobs {
     * micro-batch IDENTICALLY — a whitespace-budget stream would
     * mis-provision the model window per the q165/q181 lesson. The
     * forward-index version AND the tokenizer version pin at stream
-    * start (the [[hybridSearchChunksPqStream]] discipline): a daily
+    * start (the [[hybridStream]] discipline): a daily
     * append or a mid-stream BPE retrain never changes what an in-flight
     * stream mounts or counts with — deliveries reproduce bit-for-bit
     * against the batch pack under the same pins, across a retrain
@@ -566,13 +392,7 @@ object StreamJobs {
     val spark = fusedStream.sparkSession
     val pinnedFwd = graft.sources.Versioned
       .latestVersion(spark, s"$forwardDir/fwd")
-    val pinnedModel = {
-      val vm = graft.sources.Versioned.latestVersion(spark, s"$modelDir/merges")
-      val vv = graft.sources.Versioned.latestVersion(spark, s"$modelDir/vocab")
-      require(vm == vv, s"BPE model tables out of lockstep (merges v$vm, " +
-        s"vocab v$vv) — a retrain crashed between commits; rebuild the model")
-      vm
-    }
+    val pinnedModel = graft.operators.Bpe.pinModel(spark, modelDir, None)
     fusedStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -598,7 +418,7 @@ object StreamJobs {
   def classifyStream(docStream: DataFrame, modelDir: String, outDir: String,
                      checkpointDir: String): StreamingQuery = {
     val spark = docStream.sparkSession
-    val pinned = graft.sources.Versioned.latestVersion(spark, s"$modelDir/model")
+    val pinned = graft.operators.Corpus.pinNbModel(spark, modelDir, None)
     docStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
+import graft.operators.Retrieval.{Hybrid, Ivf, MaxSim, Pq}
 import graft.sources.Versioned
 
 /** BM25 semantics on hand-computed fixtures + the persisted inverted
@@ -505,16 +506,16 @@ class RetrievalSpec extends SparkSpec {
       metaCols = Seq("lang")): Unit
     val queries = Seq((1L, terms)).toDF("query_id", "terms")
       .join(emb.select(col("id").as("query_id"), col("vec")), Seq("query_id"))
-    val fused = Retrieval.hybridSearchFiltered(spark, dir, ivfDir, queries,
-      k = 10, predicate = col("lang") === "en", kEach = 10, nProbes = 4)
+    val fused = Retrieval.hybrid(spark, Hybrid(dir, Ivf(ivfDir, nProbes = 4),
+        predicate = Some(col("lang") === "en"), kEach = 10), queries, k = 10)
       .select("doc_id").as[Long].collect().toSet
     assert(fused.nonEmpty && fused.subsetOf(Set(1L, 3L, 9L)),
       s"fused results must all pass the gate, got $fused")
     val ivfPlain = java.nio.file.Files.createTempDirectory("ivfflt2").toString
     graft.operators.Similarity.buildIvfIndex(emb, ivfPlain, nCentroids = 4): Unit
     val err3 = intercept[IllegalArgumentException] {
-      Retrieval.hybridSearchFiltered(spark, dir, ivfPlain, queries,
-        k = 10, predicate = col("lang") === "en").collect()
+      Retrieval.hybrid(spark, Hybrid(dir, Ivf(ivfPlain),
+        predicate = Some(col("lang") === "en")), queries, k = 10).collect()
     }
     assert(err3.getMessage.contains("metaCols"))
   }
@@ -582,9 +583,8 @@ class RetrievalSpec extends SparkSpec {
     val queries = qraw.join(Corpus.hashEmbed(qraw, col("query_id"),
         concat_ws(" ", col("terms")), dim = 16)
       .withColumnRenamed("id", "query_id"), Seq("query_id"))
-    val fused = Retrieval.hybridSearchChunksFiltered(spark, bmDir, ivDir,
-      queries, k = 10, predicate = col("lang") === "en", kEach = 10,
-      nProbes = 4)
+    val fused = Retrieval.hybrid(spark, Hybrid(bmDir, Ivf(ivDir, nProbes = 4),
+        predicate = Some(col("lang") === "en"), kEach = 10), queries, k = 10)
       .select("doc_id").as[Long].collect().toSet
     assert(fused.nonEmpty && fused.subsetOf(Set(2L, 4L, 5L, 7L)),
       s"fused spans must come from EN documents only, got $fused")
@@ -594,8 +594,8 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), plain,
       size = 16, stride = 8, dim = 16, nCentroids = 4): Unit
     val err = intercept[IllegalArgumentException] {
-      Retrieval.hybridSearchChunksFiltered(spark, bmDir, plain, queries,
-        k = 10, predicate = col("lang") === "en").collect()
+      Retrieval.hybrid(spark, Hybrid(bmDir, Ivf(plain),
+        predicate = Some(col("lang") === "en")), queries, k = 10).collect()
     }
     assert(err.getMessage.contains("metaCols"))
     // the PQ chunk build carries the gate too: the generic filtered
@@ -657,8 +657,8 @@ class RetrievalSpec extends SparkSpec {
         concat_ws(" ", col("terms")), dim = 16)
         .withColumnRenamed("id", "query_id"),
       Seq("query_id"))
-    val fused = Retrieval.hybridSearchChunks(spark, bmDir, ivDir,
-        queries, k = 5, kEach = 10, nProbes = 4)
+    val fused = Retrieval.hybrid(spark,
+        Hybrid(bmDir, Ivf(ivDir, nProbes = 4), kEach = 10), queries, k = 5)
       .collect()
     val top = fused.head
     assert(top.getAs[Long]("doc_id") == 5L)
@@ -672,7 +672,7 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), ivDir2,
       size = 32, stride = 16, dim = 16, nCentroids = 4): Unit
     val e = intercept[IllegalArgumentException] {
-      Retrieval.hybridSearchChunks(spark, bmDir, ivDir2, queries, 5)
+      Retrieval.hybrid(spark, Hybrid(bmDir, Ivf(ivDir2)), queries, 5)
     }
     assert(e.getMessage.contains("grids disagree"))
   }
@@ -699,9 +699,9 @@ class RetrievalSpec extends SparkSpec {
       Seq("query_id"))
     // nProbes = nCentroids and alpha past the corpus: the semantic arm
     // degenerates to the exact dot ranking (the q158-proven identity)
-    val fused = Retrieval.hybridSearchPq(spark, bmDir, pqDir, queries,
-      k = 5, kEach = 8, alpha = 4,
-      nProbes = 4).collect()
+    val fused = Retrieval.hybrid(spark,
+      Hybrid(bmDir, Pq(pqDir, alpha = 4, nProbes = 4), kEach = 8), queries,
+      k = 5).collect()
     val top = fused.head
     assert(top.getAs[Long]("doc_id") == 7L)
     assert(top.getAs[Long]("n_rankers") == 2L,
@@ -736,9 +736,9 @@ class RetrievalSpec extends SparkSpec {
     // exhaustive probes + a shortlist covering every chunk: the exact
     // re-rank makes the semantic arm the exact dot ranking (served from
     // the index's own persisted full-precision vectors)
-    val fused = Retrieval.hybridSearchChunksPq(spark, bmDir, pqDir,
-        queries, k = 5, kEach = 10, alpha = 8, nProbes = 4,
-        m = 4, ks = 8, dim = 16)
+    val fused = Retrieval.hybrid(spark, Hybrid(bmDir,
+        Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8, dim = 16),
+        kEach = 10), queries, k = 5)
       .collect()
     val top = fused.head
     assert(top.getAs[Long]("doc_id") == 5L)
@@ -751,8 +751,8 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.buildChunkIvfPqIndex(docs, col("doc_id"), col("text"), pqDir2,
       size = 32, stride = 16, dim = 16, nCentroids = 4, m = 4, ks = 8): Unit
     val e = intercept[IllegalArgumentException] {
-      Retrieval.hybridSearchChunksPq(spark, bmDir, pqDir2, queries,
-        k = 5, m = 4, ks = 8, dim = 16)
+      Retrieval.hybrid(spark, Hybrid(bmDir, Pq(pqDir2, m = 4, ks = 8,
+        dim = 16)), queries, k = 5)
     }
     assert(e.getMessage.contains("grids disagree"))
 
@@ -765,13 +765,43 @@ class RetrievalSpec extends SparkSpec {
       bmDir): Unit
     Retrieval.appendToChunkIvfPqIndex(batch, col("doc_id"), col("text"),
       pqDir, dim = 16, m = 4): Unit
-    val fused2 = Retrieval.hybridSearchChunksPq(spark, bmDir, pqDir,
-        queries, k = 5, kEach = 10, alpha = 8, nProbes = 4,
-        m = 4, ks = 8, dim = 16)
+    val fused2 = Retrieval.hybrid(spark, Hybrid(bmDir,
+        Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8, dim = 16),
+        kEach = 10), queries, k = 5)
       .collect()
     assert(fused2.exists(r => r.getAs[Long]("doc_id") == 9L &&
       r.getAs[Long]("n_rankers") == 2L),
       "an appended span must arrive through both arms")
+  }
+
+  test("hybrid refuses what it cannot plan: a doc/chunk index pair, and " +
+      "a predicate with an arm that cannot gate") {
+    // every refusal fires before a table is read; a chunk-grain dir is
+    // one carrying the chunk_grid sidecar a chunk-index build stamps
+    val doc = java.nio.file.Files.createTempDirectory("hyref-doc").toString
+    val chunk = java.nio.file.Files.createTempDirectory("hyref-ck").toString
+    graft.operators.Stamp.write(spark, chunk,
+      graft.operators.Stamp.chunkGrid("postings"), (16, 8), 0L)
+    val gate = Some(col("lang") === "en")
+    val maxSim = Some(MaxSim(Seq((1L, "a")).toDF("doc_id", "text"),
+      col("doc_id"), col("text")))
+    val cases = Seq(
+      ("doc BM25 + chunk ANN", Hybrid(doc, Ivf(chunk)), "grains disagree"),
+      ("chunk BM25 + doc ANN", Hybrid(chunk, Pq(doc)), "grains disagree"),
+      ("predicate + QL", Hybrid(doc, Ivf(doc), ql = Some(Retrieval.Mu),
+        predicate = gate), "cannot gate"),
+      ("predicate + maxsim", Hybrid(doc, Pq(doc), maxSim = maxSim,
+        predicate = gate), "cannot gate"),
+      ("maxsim over a float arm", Hybrid(doc, Ivf(doc), maxSim = maxSim),
+        "Pq arm"))
+    val queries = Seq((1L, Seq("a"), Seq(1.0)))
+      .toDF("query_id", "terms", "vec")
+    for ((name, req, msg) <- cases) {
+      val e = intercept[IllegalArgumentException] {
+        Retrieval.hybrid(spark, req, queries, 5)
+      }
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+    }
   }
 
   test("assembleContext: overlap + adjacency merge to one span, the " +
@@ -900,7 +930,7 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(Seq(a, b, c)) == rows(Seq(c, a, b)))
     assert(rows(Seq(a, b, c)) == rows(Seq(b, c, a)))
 
-    // hybridSearchChunks with the QL arm on: a span hit by all three
+    // the chunk hybrid with the QL arm on: a span hit by all three
     // rankers carries n_rankers = 3
     val qraw = Seq((900L, Seq("zebra", "quark"))).toDF("query_id", "terms")
     val ivDir = java.nio.file.Files.createTempDirectory("qlciv").toString
@@ -911,8 +941,8 @@ class RetrievalSpec extends SparkSpec {
         concat_ws(" ", col("terms")), dim = 16)
         .withColumnRenamed("id", "query_id"),
       Seq("query_id"))
-    val fused3 = Retrieval.hybridSearchChunks(spark, cdir, ivDir, queries,
-      k = 5, kEach = 10, nProbes = 2, qlArm = true).collect()
+    val fused3 = Retrieval.hybrid(spark, Hybrid(cdir, Ivf(ivDir, nProbes = 2),
+      ql = Some(Retrieval.Mu), kEach = 10), queries, k = 5).collect()
     assert(fused3.exists(r => r.getAs[Long]("doc_id") == 1L &&
       r.getAs[Long]("n_rankers") == 3L),
       s"the planted span must arrive through all three arms: ${fused3.toSeq}")

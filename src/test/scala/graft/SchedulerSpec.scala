@@ -565,8 +565,9 @@ class SchedulerSpec extends SparkSpec {
           concat_ws(" ", col("terms"))).withColumnRenamed("id", "query_id"),
         Seq("query_id"))
       def fused(chunks: String, civf: String) =
-        graft.operators.Retrieval.hybridSearchChunks(spark, chunks, civf,
-          queries, k = 10, kEach = 20, nProbes = 16)
+        graft.operators.Retrieval.hybrid(spark, graft.operators.Retrieval
+          .Hybrid(chunks, graft.operators.Retrieval.Ivf(civf, nProbes = 16)),
+          queries, k = 10)
           .collect().map(_.toSeq).toSeq
       assert(fused(s"$work/chunks", s"$work/chunk_ivf") ==
         fused(s"$fresh/chunks", s"$fresh/chunk_ivf"),
@@ -625,9 +626,9 @@ class SchedulerSpec extends SparkSpec {
           concat_ws(" ", col("terms"))).withColumnRenamed("id", "query_id"),
         Seq("query_id"))
       def fusedPq(chunks: String, pq: String) =
-        graft.operators.Retrieval.hybridSearchChunksPq(spark, chunks, pq,
-          pqQueries,
-          k = 10, kEach = 20, alpha = 200, nProbes = 16)
+        graft.operators.Retrieval.hybrid(spark, graft.operators.Retrieval
+          .Hybrid(chunks, graft.operators.Retrieval.Pq(pq, alpha = 200,
+            nProbes = 16)), pqQueries, k = 10)
           .collect().map(_.toSeq).toSeq
       assert(fusedPq(s"$work/chunks", s"$work/chunk_pq") ==
         fusedPq(freshC, freshPq),

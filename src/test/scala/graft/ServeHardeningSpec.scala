@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Retrieval, Similarity, Tombstones}
@@ -214,12 +215,17 @@ class ServeHardeningSpec extends SparkSpec {
     val fixed = Similarity.queryIvfPqIndexFiltered(spark, dir, q, k = 3,
       predicate = col("rare"), nProbes = 1, m = 4, ks = 8, dim = 8)
     assert(fixed.count() < 3)
-    val adaptive = Similarity.queryIvfPqIndexFilteredAdaptive(spark, dir, q,
-      k = 3, predicate = col("rare"), nProbes = 1, m = 4, ks = 8, dim = 8)
+    // the widening sizes itself from the centroid memo the probe already
+    // read (a plan literal), never a count job over the centroids table:
+    // the jobs left are the escalation rounds' and the final collect's
+    val (adaptive, jobs) = JobCount(spark)(
+      Similarity.queryIvfPqIndexFilteredAdaptive(spark, dir, q, k = 3,
+          predicate = col("rare"), nProbes = 1, m = 4, ks = 8, dim = 8)
+        .collect().map(_.toSeq).toSeq)
     val exhaustive = Similarity.queryIvfPqIndexFiltered(spark, dir, q, k = 3,
       predicate = col("rare"), nProbes = 8, m = 4, ks = 8, dim = 8)
-    assert(adaptive.collect().map(_.toSeq).toSeq ==
-      exhaustive.collect().map(_.toSeq).toSeq)
+    assert(adaptive == exhaustive.collect().map(_.toSeq).toSeq)
+    assert(jobs == 36, s"jobs per adaptive PQ request: $jobs")
   }
 
   // --------------------------------------------- retrain-cadence rebuild

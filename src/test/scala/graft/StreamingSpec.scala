@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.clean.{Cleaners, Schemas}
 import graft.sources.{Emulator, Sources}
+import graft.operators.Retrieval.{Hybrid, Ivf, Pq}
 import graft.streaming.StreamJobs
 
 /** Streaming surface (SURVEY.md §5.2 layer 5): file-source micro-batch
@@ -477,6 +478,33 @@ class StreamingSpec extends SparkSpec {
         .exists { case (_, cid, _) => cid >= 500000L })
   }
 
+  test("streaming ANN probe: an index wedged by a crashed append refuses " +
+      "at stream start, naming the repair") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import graft.sources.Versioned
+
+    val work = tmpDir()
+    val idx = s"$work/ivf"
+    val pool = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)),
+      (3L, Seq(0.7f, 0.7f)))
+    graft.operators.Similarity.buildIvfIndex(pool.toDF("id", "vec"), idx,
+      nCentroids = 2): Unit
+    // crash between an append's two commits: the identical centroids
+    // re-committed, the batch's assignment never landed
+    Versioned.overwrite(Versioned.read(spark, s"$idx/centroids"),
+      s"$idx/centroids"): Unit
+    val mem = MemoryStream[(Long, Seq[Float])]
+    mem.addData(pool.take(1): _*)
+    val e = intercept[IllegalArgumentException] {
+      StreamJobs.annProbeStream(mem.toDF().toDF("id", "vec"), idx,
+        s"$work/out", s"$work/ckpt", k = 2, nProbes = 2)
+    }
+    assert(e.getMessage.contains("out of lockstep") &&
+      e.getMessage.contains("repairIvfIndex"), e.getMessage)
+  }
+
   test("streaming doc-signals sheet: replayed corpus accumulates to exactly the batch q136 sheet") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -633,9 +661,10 @@ class StreamingSpec extends SparkSpec {
       n += 1
       val mem = MemoryStream[(Long, Seq[String], Seq[Double])]
       mem.addData(rows.toIndexedSeq: _*)
-      StreamJobs.hybridSearchStream(
-        mem.toDF().toDF("query_id", "terms", "vec"), bm25, ivf,
-        out, s"$work/hckpt$n", k = 10, kEach = 10, nProbes = 2)
+      StreamJobs.hybridStream(
+        mem.toDF().toDF("query_id", "terms", "vec"),
+        Hybrid(bm25, Ivf(ivf, nProbes = 2), kEach = 10),
+        out, s"$work/hckpt$n", k = 10)
         .awaitTermination()
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -703,9 +732,10 @@ class StreamingSpec extends SparkSpec {
       n += 1
       val mem = MemoryStream[(Long, Seq[String], Seq[Double])]
       mem.addData(rows.toIndexedSeq: _*)
-      StreamJobs.hybridSearchFilteredStream(
-        mem.toDF().toDF("query_id", "terms", "vec"), bm25, ivf,
-        out, s"$work/fckpt$n", pred, k = 10, kEach = 10, nProbes = 2)
+      StreamJobs.hybridStream(
+        mem.toDF().toDF("query_id", "terms", "vec"),
+        Hybrid(bm25, Ivf(ivf, nProbes = 2), predicate = Some(pred),
+          kEach = 10), out, s"$work/fckpt$n", k = 10)
         .awaitTermination()
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -714,9 +744,10 @@ class StreamingSpec extends SparkSpec {
 
     deliver(queries.take(1), s"$work/fout1", col("lang") === "en")
     deliver(queries.drop(1), s"$work/fout1", col("lang") === "en")
-    val expect = rows(Retrieval.hybridSearchFiltered(spark, bm25, ivf,
-      queries.toDF("query_id", "terms", "vec"), k = 10,
-      predicate = col("lang") === "en", kEach = 10, nProbes = 2))
+    val expect = rows(Retrieval.hybrid(spark,
+      Hybrid(bm25, Ivf(ivf, nProbes = 2),
+        predicate = Some(col("lang") === "en"), kEach = 10),
+      queries.toDF("query_id", "terms", "vec"), k = 10))
     assert(expect.nonEmpty && expect.forall(r => Set(1L, 3L)(r._2)),
       "the gated batch fusion must return only EN docs")
     assert(rows(spark.read.parquet(s"$work/fout1")) == expect,
@@ -727,9 +758,10 @@ class StreamingSpec extends SparkSpec {
     val err = intercept[IllegalArgumentException] {
       val mem = MemoryStream[(Long, Seq[String], Seq[Double])]
       mem.addData(queries.head)
-      StreamJobs.hybridSearchFilteredStream(
-        mem.toDF().toDF("query_id", "terms", "vec"), bm25, ivf,
-        s"$work/fout2", s"$work/fckptX", col("license") === "mit")
+      StreamJobs.hybridStream(
+        mem.toDF().toDF("query_id", "terms", "vec"),
+        Hybrid(bm25, Ivf(ivf), predicate = Some(col("license") === "mit")),
+        s"$work/fout2", s"$work/fckptX")
     }
     assert(err.getMessage.contains("metaCols"))
   }
@@ -774,9 +806,10 @@ class StreamingSpec extends SparkSpec {
       n += 1
       val mem = MemoryStream[(Long, Seq[String], Seq[Double])]
       mem.addData(qvecs.filter(q => ids.contains(q._1)).toIndexedSeq: _*)
-      StreamJobs.hybridSearchChunksStream(
-        mem.toDF().toDF("query_id", "terms", "vec"), bmDir, ivDir,
-        out, s"$work/cckpt$n", k = 5, kEach = 10, nProbes = 4)
+      StreamJobs.hybridStream(
+        mem.toDF().toDF("query_id", "terms", "vec"),
+        Hybrid(bmDir, Ivf(ivDir, nProbes = 4), kEach = 10),
+        out, s"$work/cckpt$n", k = 5)
         .awaitTermination()
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -786,8 +819,9 @@ class StreamingSpec extends SparkSpec {
 
     deliver(Seq(900L), s"$work/cout1")
     deliver(Seq(901L), s"$work/cout1")
-    val batch = Retrieval.hybridSearchChunks(spark, bmDir, ivDir,
-      withVecs(queries), k = 5, kEach = 10, nProbes = 4)
+    val batch = Retrieval.hybrid(spark,
+      Hybrid(bmDir, Ivf(ivDir, nProbes = 4), kEach = 10),
+      withVecs(queries), k = 5)
     val expect = rows(batch)
     assert(expect.exists(r => r._2 == 5L && r._4 == 2L),
       "the planted span must arrive through BOTH arms")
@@ -807,9 +841,10 @@ class StreamingSpec extends SparkSpec {
     assert(rows(spark.read.parquet(s"$work/cout2"))
       .exists(r => r._2 == 6L && r._3 == 1L),
       "post-append stream must surface the appended doc's span")
-    assert(rows(Retrieval.hybridSearchChunks(spark, bmDir, ivDir,
-        withVecs(queries.take(1)), k = 5, kEach = 10, nProbes = 4,
-        bm25AsOf = Some(0L), ivfAsOf = Some(0L))) ==
+    assert(rows(Retrieval.hybrid(spark,
+        Hybrid(bmDir, Ivf(ivDir, nProbes = 4, asOf = Some(0L)),
+          bm25AsOf = Some(0L), kEach = 10),
+        withVecs(queries.take(1)), k = 5)) ==
       expect.filter(_._1 == 900L),
       "the pinned chunk-index pair must reproduce the pre-append fusion")
   }
@@ -851,10 +886,11 @@ class StreamingSpec extends SparkSpec {
       n += 1
       val mem = MemoryStream[(Long, Seq[String], Seq[Double])]
       mem.addData(qvecs.filter(q => ids.contains(q._1)).toIndexedSeq: _*)
-      StreamJobs.hybridSearchChunksPqStream(
-        mem.toDF().toDF("query_id", "terms", "vec"), bmDir, pqDir,
-        out, s"$work/pqckpt$n", k = 5, kEach = 10, alpha = 8,
-        nProbes = 4, m = 4, ks = 8, dim = 16)
+      StreamJobs.hybridStream(
+        mem.toDF().toDF("query_id", "terms", "vec"),
+        Hybrid(bmDir, Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8,
+          dim = 16), kEach = 10),
+        out, s"$work/pqckpt$n", k = 5)
         .awaitTermination()
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -864,9 +900,10 @@ class StreamingSpec extends SparkSpec {
 
     deliver(Seq(900L), s"$work/pqout1")
     deliver(Seq(901L), s"$work/pqout1")
-    val batch = Retrieval.hybridSearchChunksPq(spark, bmDir, pqDir,
-      withVecs(queries), k = 5, kEach = 10, alpha = 8,
-      nProbes = 4, m = 4, ks = 8, dim = 16)
+    val batch = Retrieval.hybrid(spark,
+      Hybrid(bmDir, Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8,
+        dim = 16), kEach = 10),
+      withVecs(queries), k = 5)
     val expect = rows(batch)
     assert(expect.exists(r => r._2 == 5L && r._4 == 2L),
       "the planted span must arrive through BOTH arms")
@@ -886,10 +923,10 @@ class StreamingSpec extends SparkSpec {
     assert(rows(spark.read.parquet(s"$work/pqout2"))
       .exists(r => r._2 == 6L && r._3 == 1L),
       "post-append stream must surface the appended doc's span")
-    assert(rows(Retrieval.hybridSearchChunksPq(spark, bmDir, pqDir,
-        withVecs(queries.take(1)), k = 5, kEach = 10,
-        alpha = 8, nProbes = 4, m = 4, ks = 8, dim = 16,
-        bm25AsOf = Some(0L), pqAsOf = Some(0L))) ==
+    assert(rows(Retrieval.hybrid(spark,
+        Hybrid(bmDir, Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8,
+          dim = 16, asOf = Some(0L)), bm25AsOf = Some(0L), kEach = 10),
+        withVecs(queries.take(1)), k = 5)) ==
       expect.filter(_._1 == 900L),
       "the pinned index pair must reproduce the pre-append fusion")
   }
