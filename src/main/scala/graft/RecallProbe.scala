@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Retrieval, Similarity}
-import graft.operators.Retrieval.{Hybrid, Ivf, Pq}
+import graft.operators.Retrieval.{Hybrid, Ivf, MaxSim, Pq, Sq8}
 
 /** ANN quality probe: recall@k of the approximate similarity paths
   * against the brute-force truth, per parameter setting — the dial that
@@ -42,7 +42,7 @@ object RecallProbe {
     Similarity.buildIvfSq8Index(e, idx, nCentroids = 16): Unit
     for (probes <- Seq(4, 8, 16))
       println(f"ivf+sq8 nProbes=$probes%-2d recall@5 = ${
-        recall(pairs(Similarity.queryIvfSq8Index(spark, idx, q, 5, nProbes = probes)))}%.3f")
+        recall(pairs(Similarity.probe(spark, Sq8(idx, probes), q, 5)))}%.3f")
     // IVF-PQ, raw vs residual encoding at identical code bytes — on
     // uniform embeddings the residual win is small (no cluster
     // structure to move into the coarse quantizer); the clustered-case
@@ -53,8 +53,8 @@ object RecallProbe {
         pqLloydIters = 1, residual = res): Unit
       for (probes <- Seq(4, 8, 16))
         println(f"ivf+pq residual=$res%-5s nProbes=$probes%-2d recall@5 = ${
-          recall(pairs(Similarity.queryIvfPqIndex(spark, pq, q, 5,
-            nProbes = probes, ks = 64, residual = res)))}%.3f")
+          recall(pairs(Similarity.probe(spark, Pq(pq, None, probes, ks = 64,
+            residual = res), q, 5)))}%.3f")
     }
     // two-stage: ADC shortlist (k·alpha) + exact re-rank of the
     // shortlist only — recovers what PQ reconstruction error displaced
@@ -64,8 +64,8 @@ object RecallProbe {
       pqLloydIters = 1): Unit
     for (probes <- Seq(4, 8, 16); alpha <- Seq(4, 8))
       println(f"ivf+pq+rerank alpha=$alpha%-2d nProbes=$probes%-2d recall@5 = ${
-        recall(pairs(Similarity.queryIvfPqIndexReranked(spark, pq2, q, 5,
-          alpha = alpha, nProbes = probes, ks = 64)))}%.3f")
+        recall(pairs(Similarity.probe(spark,
+          Pq(pq2, Some(alpha), probes, ks = 64), q, 5)))}%.3f")
 
     // HYBRID fusion recall: each arm family against ITS exhaustive-probe
     // truth (float IVF ranks cosine, PQ+rerank ranks exact dot — mixing
@@ -94,13 +94,13 @@ object RecallProbe {
     val truthFloat = fpairs(Retrieval.hybridSearch(spark, bm, ivfF, qb,
       k = 10, nProbes = 16))
     val truthDot = fpairs(Retrieval.hybrid(spark,
-      Hybrid(bm, Pq(pqH, alpha = 200, nProbes = 16, ks = 64)), qb, k = 10))
+      Hybrid(bm, Pq(pqH, Some(200), nProbes = 16, ks = 64)), qb, k = 10))
     println(f"hybrid float-IVF arm   nProbes=4 fused recall@10 = ${
       frecall(truthFloat, fpairs(Retrieval.hybridSearch(spark, bm, ivfF, qb,
         k = 10, nProbes = 4)))}%.3f")
     println(f"hybrid IVF-PQ+rerank   nProbes=4 fused recall@10 = ${
       frecall(truthDot, fpairs(Retrieval.hybrid(spark,
-        Hybrid(bm, Pq(pqH, alpha = 4, nProbes = 4, ks = 64)), qb,
+        Hybrid(bm, Pq(pqH, Some(4), nProbes = 4, ks = 64)), qb,
         k = 10)))}%.3f  (~1/32 scan bytes)")
 
     // CHUNK-grain hybrid (round 12): the same float-vs-compressed row
@@ -133,11 +133,11 @@ object RecallProbe {
     def chunkFused(sem: Retrieval.SemanticArm) =
       spairs(Retrieval.hybrid(spark, Hybrid(cbm, sem), cqb, k = 10))
     val ctruthFloat = chunkFused(Ivf(civ, nProbes = 16))
-    val ctruthDot = chunkFused(Pq(cpq, alpha = 200, nProbes = 16, ks = 64))
+    val ctruthDot = chunkFused(Pq(cpq, Some(200), nProbes = 16, ks = 64))
     println(f"chunk-hybrid float-IVF nProbes=4 fused recall@10 = ${
       srecall(ctruthFloat, chunkFused(Ivf(civ, nProbes = 4)))}%.3f")
     println(f"chunk-hybrid PQ+rerank nProbes=4 fused recall@10 = ${
-      srecall(ctruthDot, chunkFused(Pq(cpq, alpha = 4, nProbes = 4,
+      srecall(ctruthDot, chunkFused(Pq(cpq, Some(4), nProbes = 4,
         ks = 64)))}%.3f  (~1/32 chunk-vector scan bytes)")
 
     // LATE-INTERACTION maxsim arm (round 16): the bounded serving
@@ -155,21 +155,21 @@ object RecallProbe {
       df.select("query_id", "doc_id", "chunk_start", "maxsim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSeq
-    val msTruthR = mrows(Retrieval.maxSimRerankChunks(spark, cpq, docs,
-      col("doc_id"), col("text"), cqb, k = 10, kEach = 200, alpha = 200,
-      nProbes = 16, ks = 64))
-    val msServeR = mrows(Retrieval.maxSimRerankChunks(spark, cpq,
-      docs, col("doc_id"), col("text"), cqb, k = 10, kEach = 20,
-      alpha = 4, nProbes = 4, ks = 64))
+    val ms = MaxSim(docs, col("doc_id"), col("text"))
+    val msTruthR = mrows(Retrieval.maxSimRerankChunks(spark,
+      Pq(cpq, Some(200), nProbes = 16, ks = 64), ms, cqb, k = 10,
+      kEach = 200))
+    val msServeR = mrows(Retrieval.maxSimRerankChunks(spark,
+      Pq(cpq, Some(4), nProbes = 4, ks = 64), ms, cqb, k = 10, kEach = 20))
     val msTruth = msTruthR.map(r => (r._1, r._2, r._3)).toSet
     println(f"chunk maxsim rerank    nProbes=4 kEach=20 recall@10 = ${
       srecall(msTruth, msServeR.map(r => (r._1, r._2, r._3)).toSet)}%.3f" +
       f"  score mass = ${msServeR.map(_._4).sum / msTruthR.map(_._4).sum}%.3f" +
       "  (token-level work on the shortlist only; identity ties break on key)")
     println(f"single-vector rerank vs maxsim truth agreement@10 = ${
-      srecall(msTruth, spairs(Similarity.queryIvfPqIndexReranked(spark,
-          cpq, cqb.select(col("query_id").as("id"), col("vec")), 10, 4,
-          4, None, 8, 64, 64, false)
+      srecall(msTruth, spairs(Similarity.probe(spark,
+          Pq(cpq, Some(4), nProbes = 4, ks = 64),
+          cqb.select(col("query_id").as("id"), col("vec")), 10)
         .select(col("query_id"),
           org.apache.spark.sql.functions.shiftright(col("cand_id"), 32)
             .as("doc_id"),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
-import graft.operators.Retrieval.{Hybrid, Ivf, MaxSim, Pq}
+import graft.operators.Retrieval.{Hybrid, Ivf, Lexical, MaxSim, Pq}
 
 /** Lexical retrieval + storage-layout queries (SURVEY.md §2 [EXT] rows,
   * q146–q148): Okapi BM25 full-text search (inline and from the
@@ -227,8 +227,8 @@ object RetrievalQueries {
         metaCols = Seq("lang")): Unit)
 
   def q185Bm25Filtered(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.queryBm25IndexFiltered(spark, cachedBm25Meta(spark, dir),
-      bmTerms, k = 20, predicate = col("lang") === "en")
+    Retrieval.lexical(spark, Lexical(cachedBm25Meta(spark, dir),
+      predicate = Some(col("lang") === "en")), bmTerms, k = 20)
 
   private val q185Sql =
     """WITH d AS (
@@ -872,8 +872,8 @@ object RetrievalQueries {
         size = 32, stride = 16): Unit)
 
   def q168ChunkIndex(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.queryChunkBm25Index(spark, cachedChunkBm25(spark, dir),
-      bmTerms, k = 20)
+    Retrieval.lexical(spark, Lexical(cachedChunkBm25(spark, dir)), bmTerms,
+      k = 20)
 
   // ---------------------------------------------------------------------
   // [EXT] chunk-grain HYBRID retrieval — the full RAG serving unit: the
@@ -937,7 +937,7 @@ object RetrievalQueries {
 
   def q179ChunkHybridPq(spark: SparkSession, dir: String): DataFrame =
     Retrieval.hybrid(spark, Hybrid(cachedChunkBm25(spark, dir),
-      Pq(cachedChunkPq(spark, dir), alpha = 4, nProbes = 4)),
+      Pq(cachedChunkPq(spark, dir), Some(4), nProbes = 4)),
       chunkQueryBatch(spark), k = 10)
 
   private lazy val q179Sql =
@@ -1326,8 +1326,8 @@ object RetrievalQueries {
   // token cosine, the max/Σ algebra, and the final ranking in ONE
   // statement.
   def q196ChunkMaxSim(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.maxSimRerankChunks(spark, cachedChunkPq(spark, dir),
-      Tables.documents(spark, dir), col("doc_id"), col("text"),
+    Retrieval.maxSimRerankChunks(spark, Pq(cachedChunkPq(spark, dir)),
+      MaxSim(Tables.documents(spark, dir), col("doc_id"), col("text")),
       chunkQueryBatch(spark), k = 10)
 
   private lazy val q196Sql =
@@ -1574,7 +1574,8 @@ object RetrievalQueries {
   // The oracle replays cf, the candidate grid, and the DECIMAL-exact
   // log-likelihood sums.
   def q175QlIndex(spark: SparkSession, dir: String): DataFrame =
-    Retrieval.queryQlIndex(spark, cachedBm25(spark, dir), bmTerms, k = 20)
+    Retrieval.lexical(spark, Lexical(cachedBm25(spark, dir),
+      ql = Some(Retrieval.Mu)), bmTerms, k = 20)
 
   private val q175Sql =
     """WITH d AS (
@@ -1814,7 +1815,7 @@ object RetrievalQueries {
     val vecs = Tables.embeddings(spark, dir).filter(col("vec_id") < 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("vec"))
     Retrieval.hybrid(spark, Hybrid(cachedBm25(spark, dir),
-      Pq(SimQueries.cachedIvfPqIndex(spark, dir), alpha = 4, nProbes = 4)),
+      Pq(SimQueries.cachedIvfPqIndex(spark, dir), Some(4), nProbes = 4)),
       terms.join(vecs, Seq("query_id")), k = 10)
   }
 

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Corpus, Dedup, Graph, NearDup}
+import graft.operators.{Corpus, Dedup, Graph, NearDup, Similarity}
+import graft.operators.Retrieval.{Ivf, Lexical, Pq}
 
 /** Scaling probe: time the corpus-heavy operators on 1×/3×/10×
   * replicas of the documents table (ids offset per replica so the
@@ -398,7 +399,7 @@ object ScaleProbe {
 
     // Round-15 filtered-ANN claim: a SELECTIVE gate (~1% of candidates)
     // underfills a fixed-width probe, and the adaptive widening
-    // (queryIvfIndexFilteredAdaptive) escalates until k eligible rows
+    // (a Widening gate) escalates until k eligible rows
     // fill — so probed BYTES are set by the gate's selectivity, not the
     // corpus: at small scale few eligible rows sit per bucket and the
     // escalation approaches the exhaustive scan (the information floor
@@ -424,18 +425,18 @@ object ScaleProbe {
         graft.operators.Similarity.refreshGateCounts(spark, dir,
           Seq("rare")): Unit
         def probeA() = measured(() =>
-          Bench.force(graft.operators.Similarity.queryIvfIndexFilteredAdaptive(
-            spark, dir, queries, k = 5, predicate = col("rare"), nProbes = 1)))
+          Bench.force(Similarity.probe(spark, Ivf(dir, nProbes = 1), queries,
+            k = 5, Similarity.Widening(col("rare")))))
         // round-16: the gatecounts sidecar picks every query's probe
         // width in ONE round — bytes must track the adaptive path's
         // FINAL round alone (no geometric re-scans, no per-doubling
         // driver round-trip)
         def probeC() = measured(() =>
-          Bench.force(graft.operators.Similarity.queryIvfIndexFilteredCounted(
-            spark, dir, queries, k = 5, gateCol = "rare", gateVal = true)))
+          Bench.force(Similarity.probe(spark, Ivf(dir), queries, k = 5,
+            Similarity.Counted("rare", true))))
         def probeX() = measured(() =>
-          Bench.force(graft.operators.Similarity.queryIvfIndexFiltered(
-            spark, dir, queries, k = 5, predicate = col("rare"), nProbes = 16)))
+          Bench.force(Similarity.probe(spark, Ivf(dir, nProbes = 16), queries,
+            k = 5, Similarity.Where(col("rare")))))
         val a = probeA(); val c = probeC(); val x = probeX()
         spark.catalog.clearCache()
         (a, c, x)
@@ -542,7 +543,8 @@ object ScaleProbe {
         val bmU = measured(() => Bench.force(
           graft.operators.Retrieval.queryBm25IndexMany(spark, un, qdf, 10)))
         val qlU = measured(() => Bench.force(
-          graft.operators.Retrieval.queryQlIndexMany(spark, un, qdf, 10)))
+          graft.operators.Retrieval.lexical(spark,
+            Lexical(un, ql = Some(graft.operators.Retrieval.Mu)), qdf, 10)))
         val bmC = measured(() => Bench.force(
           graft.operators.Retrieval.queryBm25IndexMany(spark, cap, qdf, 10)))
         spark.catalog.clearCache()
@@ -648,17 +650,14 @@ object ScaleProbe {
         // larger SFs it dominates the totals, so it is measured as its
         // own floor and the FETCH deltas are derived below it
         val floor = measured(() => Bench.force(
-          graft.operators.Similarity.queryIvfPqIndex(
-            spark, idx, queries, k = 10, nProbes = 4)))
+          Similarity.probe(spark, Pq(idx, None), queries, k = 10)))
         val dpp = measured(() => Bench.force(
-          graft.operators.Similarity.queryIvfPqIndexReranked(
-            spark, idx, queries, k = 5, alpha = 2, nProbes = 4)))
+          Similarity.probe(spark, Pq(idx, Some(2)), queries, k = 5)))
         // the retired pre-r13 shape: the k·alpha shortlist joined
         // against EVERY full-precision vector row (no shard key on the
         // probe, so nothing prunes — the whole float table streams)
         val scan = measured(() => Bench.force {
-          val short = graft.operators.Similarity.queryIvfPqIndex(
-              spark, idx, queries, k = 10, nProbes = 4)
+          val short = Similarity.probe(spark, Pq(idx, None), queries, k = 10)
             .select(col("query_id"), col("cand_id"))
           val c = graft.sources.Versioned.read(spark, s"$idx/vectors")
             .select(col("cand_id"), col("cv"))

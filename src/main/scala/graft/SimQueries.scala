@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Corpus, Graph, NearDup, Ranking, Similarity}
+import graft.operators.Retrieval.{Ivf, Pq, Sq8}
 
 /** Similarity-search and near-duplicate queries (SURVEY.md §2.3 J7,
   * §2.4 A8, LLM-pipeline north star). EVERY query here carries a DuckDB
@@ -757,8 +758,8 @@ object SimQueries {
       Similarity.buildIvfIndex(embs(spark, dir), _, nCentroids = 16,
         lloydIters = 2, assignmentLayout = "partition",
         metaCols = Seq("label")): Unit)
-    Similarity.queryIvfIndexFiltered(spark, idx, e.filter(col("id") < 10),
-      k = 5, predicate = col("label") === 1)
+    Similarity.probe(spark, Ivf(idx), e.filter(col("id") < 10), k = 5,
+      Similarity.Where(col("label") === 1))
   }
 
   private val q184Sql = {
@@ -833,7 +834,7 @@ object SimQueries {
     val e = embs(spark, dir)
     val idx = cachedIndex(spark, dir, "ivfsq8_c16b")(
       Similarity.buildIvfSq8Index(e, _, nCentroids = 16): Unit)
-    Similarity.queryIvfSq8Index(spark, idx, e.filter(col("id") < 10), k = 5)
+    Similarity.probe(spark, Sq8(idx), e.filter(col("id") < 10), k = 5)
   }
 
   private val q118Sql = {
@@ -992,8 +993,8 @@ object SimQueries {
 
   def q145AnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
-    Similarity.queryIvfPqIndex(spark, cachedIvfPqIndex(spark, dir),
-      e.filter(col("id") < 10), k = 5, nProbes = 4)
+    Similarity.probe(spark, Pq(cachedIvfPqIndex(spark, dir), None),
+      e.filter(col("id") < 10), k = 5)
   }
 
   /** The q145 chain up through `scored` (IVF probe selection + PQ
@@ -1062,8 +1063,8 @@ object SimQueries {
   // float-tight, not approximate.
   def q158AnnIvfPqRerank(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
-    Similarity.queryIvfPqIndexReranked(spark, cachedIvfPqIndex(spark, dir),
-      e.filter(col("id") < 10), k = 5, alpha = 4, nProbes = 4)
+    Similarity.probe(spark, Pq(cachedIvfPqIndex(spark, dir), Some(4)),
+      e.filter(col("id") < 10), k = 5)
   }
 
   private val q158Sql =
@@ -1105,8 +1106,8 @@ object SimQueries {
       new java.io.File(dir, "embeddings.parquet"), "ivfpqr2_c16b",
       "centroids", "codebook", "assignment", "vectors")(
       Similarity.buildIvfPqIndex(e, _, nCentroids = 16, residual = true): Unit)
-    Similarity.queryIvfPqIndex(spark, idx, e.filter(col("id") < 10), k = 5,
-      nProbes = 4, residual = true)
+    Similarity.probe(spark, Pq(idx, None, residual = true),
+      e.filter(col("id") < 10), k = 5)
   }
 
   private val q149Sql = {
@@ -1287,8 +1288,8 @@ object SimQueries {
         metaCols = Seq("label")): Unit
       Similarity.refreshGateCounts(spark, d, Seq("label")): Unit
     }
-    Similarity.queryIvfIndexFilteredCounted(spark, idx,
-      e.filter(col("id") < 10), k = 5, gateCol = "label", gateVal = 1)
+    Similarity.probe(spark, Ivf(idx), e.filter(col("id") < 10), k = 5,
+      Similarity.Counted("label", 1))
   }
 
   private val q195Sql = {

@@ -66,24 +66,23 @@ object Retrieval {
     * n_docs, sum_dl — ONE formula shared by every scoring path (inline,
     * single-query index, multi-query index), so the paths provably
     * score identically. */
-  private def bmTermExpr(k1: Double, b: Double): Column = {
+  private def bmTermExpr: Column = {
     val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
     val idf = log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df").cast("double") + lit(0.5)))
     val tfd = col("tf").cast("double")
     val dld = col("dl").cast("double")
-    idf * (tfd * lit(k1 + 1.0)) /
-      (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * dld / avgdl))
+    idf * (tfd * lit(K1 + 1.0)) /
+      (tfd + lit(K1) * (lit(1.0 - B) + lit(B) * dld / avgdl))
   }
 
-  private def scoreDocs(tf: DataFrame, stats: DataFrame,
-                        k1: Double, b: Double): DataFrame = {
+  private def scoreDocs(tf: DataFrame, stats: DataFrame): DataFrame = {
     val dfTab = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     tf.join(dfTab, Seq("tok"))
       .crossJoin(stats) // 1 row — broadcast nested loop by construction
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
-           sum(bmTermExpr(k1, b).cast("decimal(27,10)")).as("s"))
+           sum(bmTermExpr.cast("decimal(27,10)")).as("s"))
       .select(col("doc_id"), col("n_terms"), col("s").cast("double").as("score"))
   }
 
@@ -121,20 +120,19 @@ object Retrieval {
     * index stats as literals ([[withIndexStats]]). */
   private def scoreIndexed(spark: SparkSession, indexDir: String,
                            asOf: Option[Long], slice: DataFrame,
-                           group: Seq[String], k1: Double,
-                           b: Double): DataFrame =
+                           group: Seq[String]): DataFrame =
     withIndexStats(spark, indexDir, asOf, slice)
       .groupBy((group :+ "doc_id").map(col): _*)
       .agg(count(lit(1)).as("n_terms"),
-           sum(bmTermExpr(k1, b).cast("decimal(27,10)")).as("s"))
+           sum(bmTermExpr.cast("decimal(27,10)")).as("s"))
       .select((group.map(col) ++ Seq(col("doc_id"), col("n_terms"),
         col("s").cast("double").as("score"))): _*)
 
   /** BM25 scores for every document matching ≥1 query term.
     * Output: doc_id, n_terms (distinct query terms present), score.
     */
-  def bm25Scores(docs: DataFrame, id: Column, text: Column, terms: Seq[String],
-                 k1: Double = K1, b: Double = B): DataFrame = {
+  def bm25Scores(docs: DataFrame, id: Column, text: Column,
+                 terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
     val (tf, stats) = tfAndStats(docs, id, text, terms)
     // tf feeds BOTH the scoring join and the df derivation — stage it
@@ -142,13 +140,13 @@ object Retrieval {
     // second consumer does not replay the corpus explode lineage. The
     // index paths derive df by a window instead ([[withDf]]) over their
     // token-pruned postings scan, which keeps the parquet pushdown.
-    scoreDocs(tf.localCheckpoint(eager = false), stats, k1, b)
+    scoreDocs(tf.localCheckpoint(eager = false), stats)
   }
 
   /** Top-k BM25 search (score desc, doc_id asc — a total order). */
   def bm25TopK(docs: DataFrame, id: Column, text: Column, terms: Seq[String],
-               k: Int, k1: Double = K1, b: Double = B): DataFrame =
-    bm25Scores(docs, id, text, terms, k1, b)
+               k: Int): DataFrame =
+    bm25Scores(docs, id, text, terms)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
 
@@ -669,30 +667,181 @@ object Retrieval {
       (if (Versioned.exists(spark, s"$indexDir/postings")) "run repairBm25Index"
        else "run repairIvfIndex") + ", or pin an intact version with asOf")
 
-  /** Query the persisted index: touches only the query terms' postings
-    * (token filter pushed into the parquet scan); the 1-row stats are
-    * plan literals ([[withIndexStats]]);
-    * `asOf` time-travels to any historical index version. Scores are
-    * IDENTICAL to the inline [[bm25TopK]] over the same corpus — same
-    * formula over the same exact integers.
+  // ------------------------------------------------ lexical probe request
+
+  /** A single-index LEXICAL probe request over a persisted BM25 index
+    * ([[buildBm25Index]] or [[buildChunkBm25Index]] — the dir's own
+    * chunk_grid sidecar decides the grain, never a caller flag):
+    *
+    *  - BM25 by default, scored IDENTICALLY to the inline [[bm25TopK]]
+    *    over the same corpus (same formula over the same exact integers;
+    *    the 1-row stats are plan literals, [[withIndexStats]]);
+    *  - `ql = Some(mu)`: Dirichlet-smoothed query likelihood (Zhai &
+    *    Lafferty, SIGIR 2001; [[Mu]] is the published default) over the
+    *    SAME postings slice: score(q,d) = Σ_{w∈q} ln((tf(w,d) +
+    *    μ·cf(w)/|C|) / (dl + μ)) over every query term of a candidate
+    *    (an unmatched term contributes its smoothing mass; terms absent
+    *    from the corpus drop), n_terms counting MATCHED terms;
+    *  - `predicate`: a metadata gate over columns baked into the
+    *    postings rows at build (`metaCols` — denormalized like the doc
+    *    length, so the gate runs inside the token-pruned scan with no
+    *    doc-meta join). Lucene filtered-search semantics: df and the
+    *    corpus stats stay INDEX-GLOBAL, so a survivor scores exactly as
+    *    unfiltered (the gate changes WHO ranks, never HOW), and the gate
+    *    applies to the full matching set before ranking (no
+    *    starvation). A predicate naming a column the index lacks
+    *    refuses; QL cannot gate;
+    *  - `asOf`: time-travel to any historical index version.
+    *
+    * Pending deletes gate every plan before ranking (stats/df stay
+    * pre-delete until compaction — the Lucene split, see [[Tombstones]]).
+    * A new single-index lexical probe is a value of this type planned by
+    * [[lexical]], never a new `query*` function.
     */
+  final case class Lexical(dir: String, ql: Option[Double] = None,
+                           predicate: Option[Column] = None,
+                           asOf: Option[Long] = None)
+
+  /** Plan a [[Lexical]] request over LITERAL query terms: the terms push
+    * into the postings scan as a token IN (bucket/shard-pruned by
+    * layout), so a probe reads only its terms' postings. Output: top-k
+    * (doc_id, n_terms, score) by (score desc, doc_id asc); at chunk grain
+    * (doc_id, chunk_start, n_terms, score) — the composite key's asc
+    * order IS (doc, chunk) asc.
+    */
+  def lexical(spark: SparkSession, req: Lexical, terms: Seq[String],
+              k: Int): DataFrame = {
+    val top = lexTop(spark, req, Left(terms), k)
+    if (hasChunkGrid(spark, req.dir)) decodeChunkKey(top) else top
+  }
+
+  /** Plan a [[Lexical]] request over a query BATCH (query_id, terms
+    * array<string>) in ONE postings pass — the batch-serving shape: the
+    * (query, term) set broadcasts onto the postings scan
+    * ([[bm25ManyHits]]; DPP prunes token-shard directories on a
+    * partition layout), df/cf derive per query from the joined slice,
+    * and ranking is a bounded top-k per query. A 1-query batch returns
+    * the literal plan's rows. Output: (query_id, doc_id[, chunk_start],
+    * n_terms, score) by (query_id, score desc, doc_id[, chunk_start]).
+    */
+  def lexical(spark: SparkSession, req: Lexical, queries: DataFrame,
+              k: Int): DataFrame = {
+    val top = lexTop(spark, req, Right(queries), k)
+    if (hasChunkGrid(spark, req.dir))
+      decodeChunkKey(top).orderBy(col("query_id"), col("score").desc,
+        col("doc_id"), col("chunk_start"))
+    else top.orderBy(col("query_id"), col("score").desc, col("doc_id"))
+  }
+
+  /** The BM25 preset of [[lexical]] over literal terms (signature frozen:
+    * `perfbench` and the job-budget spec call it). */
   def queryBm25Index(spark: SparkSession, indexDir: String,
                      terms: Seq[String], k: Int,
-                     k1: Double = K1, b: Double = B,
-                     asOf: Option[Long] = None): DataFrame = {
-    require(terms.nonEmpty, "BM25 needs at least one query term")
-    pinIndex(spark, indexDir, asOf): Unit
-    val tf = shardPruned(spark, indexDir,
-        Versioned.read(spark, s"$indexDir/postings", asOf), terms, asOf)
-      .filter(col("tok").isInCollection(terms))
-      .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
-    // pending deletes gate the scored set pre-ranking (stats/df stay
-    // pre-delete until compaction — the Lucene split, see [[Tombstones]])
-    tombGate(spark, indexDir,
-        scoreIndexed(spark, indexDir, asOf, withDf(tf, Nil), Nil, k1, b),
-        "doc_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+                     asOf: Option[Long] = None): DataFrame =
+    lexical(spark, Lexical(indexDir, asOf = asOf), terms, k)
+
+  /** The BM25 preset of [[lexical]] over a query batch (signature
+    * frozen, like [[queryBm25Index]]). */
+  def queryBm25IndexMany(spark: SparkSession, indexDir: String,
+                         queries: DataFrame, k: Int,
+                         asOf: Option[Long] = None): DataFrame =
+    lexical(spark, Lexical(indexDir, asOf = asOf), queries, k)
+
+  /** The composite-keyed core of [[lexical]] — what [[hybrid]]'s lexical
+    * arms and [[rm3Expand]] consume: literal terms give the ordered
+    * top-k, a batch its top-k per query UNSORTED (a fusion arm's
+    * [[rrfFuse]] re-ranks per query anyway). One scoring body per ranker
+    * serves both plans; the tombstone gate runs before ranking.
+    */
+  private def lexTop(spark: SparkSession, req: Lexical,
+                     input: Either[Seq[String], DataFrame],
+                     k: Int): DataFrame = {
+    val (hits, group) = lexHits(spark, req, input)
+    val scored = req.ql match {
+      case None => scoreIndexed(spark, req.dir, req.asOf,
+        bm25Slice(hits, group, req.predicate), group)
+      case Some(mu) => qlScored(spark, req, hits, group, mu)
+    }
+    topOf(tombGate(spark, req.dir, scored, "doc_id"), group, k)
+  }
+
+  /** Ranking of a gated (group…, doc_id, n_terms, score) set: the global
+    * top-k (TakeOrderedAndProject) without a group, else the top-k per
+    * group, unsorted. */
+  private def topOf(scored: DataFrame, group: Seq[String], k: Int): DataFrame =
+    if (group.isEmpty)
+      scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    else Ranking.topPerGroup(scored, group.map(col),
+        Seq(col("score").desc, col("doc_id").asc), k)
+      .select((group.map(col) ++ Seq(col("doc_id"), col("n_terms"),
+        col("score"))): _*)
+
+  /** The probed postings rows of a lexical request and their group
+    * keys — the input type picks the plan. Literal terms prune the scan
+    * by token (shard directories, bucket files, the parquet IN) and need
+    * no group; a batch is the broadcast (query, term) probe join
+    * ([[bm25ManyHits]]) grouped by query_id. Pins the index and refuses
+    * what it cannot plan before any job runs.
+    */
+  private def lexHits(spark: SparkSession, req: Lexical,
+                      input: Either[Seq[String], DataFrame])
+      : (DataFrame, Seq[String]) = {
+    val ranker = if (req.ql.isEmpty) "BM25" else "QL"
+    input.left.foreach(terms =>
+      require(terms.nonEmpty, s"$ranker needs at least one query term"))
+    req.ql.foreach(mu =>
+      require(mu > 0, s"Dirichlet mu must be positive, got $mu"))
+    require(req.ql.isEmpty || req.predicate.isEmpty,
+      "the QL ranker cannot gate: a predicate gates the BM25 ranker only")
+    pinIndex(spark, req.dir, req.asOf): Unit
+    // read only when used: each read resolves the table's log, and the
+    // batch plan's probe join reads the postings itself
+    lazy val posts = Versioned.read(spark, s"${req.dir}/postings", req.asOf)
+    req.predicate.foreach(requirePostingsPredicate(req.dir, posts, _))
+    input match {
+      case Left(terms) => (shardPruned(spark, req.dir, posts, terms, req.asOf)
+        .filter(col("tok").isInCollection(terms)), Nil)
+      case Right(queries) =>
+        (bm25ManyHits(spark, req.dir, queries, req.asOf), Seq("query_id"))
+    }
+  }
+
+  /** The BM25 slice: df per (group…, tok) from the UNgated hits
+    * (index-global idf), the predicate above the df window. */
+  private def bm25Slice(hits: DataFrame, group: Seq[String],
+                        predicate: Option[Column]): DataFrame = {
+    val slice = withDf(hits, group)
+    predicate.map(slice.filter).getOrElse(slice)
+  }
+
+  /** Dirichlet QL per (group…, doc) over the probed hits: cf and the
+    * candidate set both derive from the slice; the candidate × term grid
+    * is |cand|·|terms| rows with the |terms|-row cf table broadcast.
+    * Per-doc sums ride DECIMAL(27,10), so the double scores replay
+    * exactly in SQL.
+    */
+  private def qlScored(spark: SparkSession, req: Lexical, hits: DataFrame,
+                       group: Seq[String], mu: Double): DataFrame = {
+    // the slice feeds cf, the candidate set AND the tf join — stage it
+    // (≤ |terms| rows per matching doc, the bm25Scores rule)
+    val staged = hits.select((group ++ Seq("doc_id", "dl", "tok", "tf"))
+      .map(col): _*).localCheckpoint(eager = false)
+    val cf = staged.groupBy((group :+ "tok").map(col): _*)
+      .agg(sum(col("tf")).as("cf"))
+    val cand = staged.select((group ++ Seq("doc_id", "dl")).map(col): _*)
+      .distinct()
+    withIndexStats(spark, req.dir, req.asOf, cand
+      .join(broadcast(cf), group)
+      .join(staged.drop("dl"), group ++ Seq("doc_id", "tok"), "left"))
+      .withColumn("__s", log(
+        (coalesce(col("tf"), lit(0L)).cast("double") +
+          lit(mu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
+        (col("dl").cast("double") + lit(mu))))
+      .groupBy((group :+ "doc_id").map(col): _*)
+      .agg(sum(when(col("tf").isNotNull, 1L).otherwise(0L)).as("n_terms"),
+        sum(col("__s").cast("decimal(27,10)")).as("__sc"))
+      .select((group.map(col) ++ Seq(col("doc_id"), col("n_terms"),
+        col("__sc").cast("double").as("score"))): _*)
   }
 
   /** Postings columns beyond the core shape = caller-baked metadata
@@ -719,63 +868,15 @@ object Retrieval {
               e.getSimpleMessage}", e)
     }
 
-  /** Metadata-FILTERED BM25 probe — the lexical half of filtered
-    * retrieval ([[graft.operators.Similarity.queryIvfIndexFiltered]] is
-    * the embedding half): the caller's predicate gates CANDIDATES, over
-    * columns baked into the postings rows at build (`metaCols` —
-    * denormalized per posting exactly like the doc length, so the gate
-    * runs inside the token-pruned scan with no doc-meta join per
-    * query). Semantics follow Lucene's filtered search: term statistics
-    * stay INDEX-GLOBAL — df counts every matching document, gated or
-    * not, and the corpus stats table is untouched — so a document's
-    * score is IDENTICAL to its unfiltered score (the gate changes WHO
-    * ranks, never HOW a survivor scores; a sub-corpus re-weighting
-    * would make the same document score differently under every gate,
-    * and both df variants read the same token-pruned slice anyway).
-    * The gate applies to the full matching set BEFORE ranking (the
-    * no-starvation contract), and a predicate naming a column the
-    * index lacks refuses loudly.
-    */
-  def queryBm25IndexFiltered(spark: SparkSession, indexDir: String,
-                             terms: Seq[String], k: Int, predicate: Column,
-                             k1: Double = K1, b: Double = B,
-                             asOf: Option[Long] = None): DataFrame = {
-    require(terms.nonEmpty, "BM25 needs at least one query term")
-    pinIndex(spark, indexDir, asOf): Unit
-    val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
-    requirePostingsPredicate(indexDir, posts, predicate)
-    val slice = shardPruned(spark, indexDir, posts, terms, asOf)
-      .filter(col("tok").isInCollection(terms))
-    // df from the UNgated slice (index-global idf), scoring over the
-    // gated rows — the predicate filters above the df window
-    tombGate(spark, indexDir, scoreIndexed(spark, indexDir, asOf,
-        withDf(slice, Nil).filter(predicate), Nil, k1, b), "doc_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  /** MANY queries against the persisted index in ONE postings pass —
-    * the batch-serving shape (and what [[graft.streaming.StreamJobs]]'s
-    * search stream runs per micro-batch): `queries` is (query_id,
-    * terms array); the term sets broadcast onto the postings scan as an
-    * equality join, df/tf derive per query from the joined slice, and
-    * ranking is a bounded top-k per query. Scoring is the SAME formula
-    * as [[queryBm25Index]] — a 1-query input returns identical rows.
-    * Unlike the single-query path the term set is not a literal, so
-    * nothing pushes into the parquet scan — non-matching postings rows
-    * die map-side at the broadcast-hash probe in the scan's own stage,
-    * and pruning the scan BYTES is the bucketing-by-token layout's job
-    * (amortized across the batch, this is the right trade for serving).
-    * Output: (query_id, doc_id, n_terms, score).
-    */
-  /** The multi-query postings probe: the (query, posting) equality join
-    * BEFORE scoring. On a partition-layout index the broadcast term
+  /** The batch postings probe: the (query, posting) equality join
+    * BEFORE scoring. The term set is data, not a literal, so nothing
+    * pushes into the parquet scan — non-matching postings rows die
+    * map-side at the broadcast-hash probe, and pruning the scan BYTES is
+    * the layout's job: on a partition-layout index the broadcast term
     * join carries the shard column, so Spark DPP prunes unprobed
-    * token-shard DIRECTORIES' bytes at run time — the lever a dynamic
-    * term set cannot get from bucketing (a literal IN would need the
-    * terms at plan time). Package-visible so the plan audit can assert
-    * the dynamicpruning subquery on the probe fragment itself, on a
-    * storage-backed query batch.
+    * token-shard DIRECTORIES' bytes at run time. Package-visible so the
+    * plan audit can assert the dynamicpruning subquery on the probe
+    * fragment itself, on a storage-backed query batch.
     */
   private[graft] def bm25ManyHits(spark: SparkSession, indexDir: String,
                                   queries: DataFrame,
@@ -804,66 +905,16 @@ object Retrieval {
     posts.join(broadcast(qt), joinKeys)
   }
 
-  def queryBm25IndexMany(spark: SparkSession, indexDir: String,
-                         queries: DataFrame, k: Int,
-                         k1: Double = K1, b: Double = B,
-                         asOf: Option[Long] = None): DataFrame =
-    bm25ManyTop(spark, indexDir, queries, k, None, k1, b, asOf)
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-
-  /** [[queryBm25IndexFiltered]] at serving batch width — MANY queries,
-    * one predicate-gated postings pass: identical probe shape to
-    * [[queryBm25IndexMany]] (broadcast term join, DPP on a partition
-    * layout — the hits carry the baked metadata columns through the
-    * seam), df stays INDEX-GLOBAL per query (Lucene filtered-search
-    * semantics: the gate changes WHO ranks, never how a survivor
-    * scores), and the gate applies to the full matching set before
-    * ranking. Output: (query_id, doc_id, n_terms, score) top-k/query.
-    */
-  def queryBm25IndexManyFiltered(spark: SparkSession, indexDir: String,
-                                 queries: DataFrame, k: Int,
-                                 predicate: Column,
-                                 k1: Double = K1, b: Double = B,
-                                 asOf: Option[Long] = None): DataFrame =
-    bm25ManyTop(spark, indexDir, queries, k, Some(predicate), k1, b, asOf)
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-
-  /** The top-k per query of [[queryBm25IndexMany]] (and, with a
-    * predicate, [[queryBm25IndexManyFiltered]]), unsorted: what a fusion
-    * arm hands [[rrfFuse]], which re-ranks per query anyway. df per
-    * (query, term) is a window over the UNgated (query, posting) slice,
-    * so the slice has one consumer: no staging seam, and the probe
-    * join's DPP runs inside the same plan.
-    */
-  private def bm25ManyTop(spark: SparkSession, indexDir: String,
-                          queries: DataFrame, k: Int,
-                          predicate: Option[Column], k1: Double, b: Double,
-                          asOf: Option[Long]): DataFrame = {
-    pinIndex(spark, indexDir, asOf): Unit
-    predicate.foreach(requirePostingsPredicate(indexDir,
-      Versioned.read(spark, s"$indexDir/postings", asOf), _))
-    val hits = withDf(bm25ManyHits(spark, indexDir, queries, asOf),
-      Seq("query_id"))
-    val scored = scoreIndexed(spark, indexDir, asOf,
-      predicate.map(hits.filter).getOrElse(hits), Seq("query_id"), k1, b)
-    Ranking.topPerGroup(tombGate(spark, indexDir, scored, "doc_id"),
-        Seq(col("query_id")), Seq(col("score").desc, col("doc_id").asc), k)
-      .select(col("query_id"), col("doc_id"), col("n_terms"), col("score"))
-  }
-
   // ------------------------------------------------------ facet counts
 
   /** FACET COUNTS over filtered retrieval — the serving aggregate every
     * search UI mounts beside its top-k: per gate-column value, the
     * count of the FULL eligible matching set (documents matching ≥1
     * query term AND the predicate, minus pending deletes) — NOT of the
-    * truncated top-k. Rides exactly the probe's own slice: the token
-    * filter pushes into the (bucket/shard-pruned) postings scan, the
-    * facet columns were baked onto the postings rows at build
-    * (`metaCols` — the dl denormalization discipline), and the count is
-    * one distinct-doc aggregation over that slice, so facet bytes ==
-    * probe bytes and no doc-meta table joins at query time. Facet and
-    * predicate columns must be baked; un-baked names refuse loudly.
+    * truncated top-k. Rides exactly the [[lexical]] plan's own literal
+    * slice ([[facetSlice]]), so facet bytes == probe bytes and no
+    * doc-meta table joins at query time. Facet and predicate columns
+    * must be baked; un-baked names refuse loudly.
     * Output: (facetCols…, n_docs), ordered by the facet columns.
     */
   def bm25Facets(spark: SparkSession, indexDir: String, terms: Seq[String],
@@ -875,8 +926,8 @@ object Retrieval {
 
   /** Ranking AND facets off ONE physical pass: the token-pruned slice
     * stages once (lazy localCheckpoint — the first action materializes
-    * it, the second reuses the rows), the left half is exactly
-    * [[queryBm25IndexFiltered]]'s ranking and the right half exactly
+    * it, the second reuses the rows), the left half is exactly the
+    * filtered [[lexical]] ranking and the right half exactly
     * [[bm25Facets]]' counts (both spec-asserted). This is the serving
     * shape: a UI needs both per request, and paying the probe scan
     * twice would double the per-request index bytes.
@@ -885,45 +936,35 @@ object Retrieval {
                             terms: Seq[String], k: Int,
                             facetCols: Seq[String],
                             predicate: Option[Column] = None,
-                            k1: Double = K1, b: Double = B,
                             asOf: Option[Long] = None)
       : (DataFrame, DataFrame) = {
-    // the slice rows already carry INDEX-GLOBAL df (facetSlice joins it
-    // pre-gate — Lucene filtered semantics: survivor scores equal their
-    // unfiltered scores), so ranking needs no second df pass
+    // the slice rows already carry INDEX-GLOBAL df, so ranking needs no
+    // second df pass
     val slice = facetSlice(spark, indexDir, terms, facetCols, predicate,
       asOf).localCheckpoint(eager = false)
-    val ranked = tombGate(spark, indexDir,
-        scoreIndexed(spark, indexDir, asOf, slice, Nil, k1, b), "doc_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+    val ranked = topOf(tombGate(spark, indexDir,
+      scoreIndexed(spark, indexDir, asOf, slice, Nil), "doc_id"), Nil, k)
     (ranked, facetsOf(spark, indexDir, slice, facetCols))
   }
 
-  /** The shared eligible slice: token-pruned postings rows with
-    * INDEX-GLOBAL df joined on (computed pre-gate, so survivor scores
-    * equal their unfiltered scores), then predicate-gated. Carries
-    * (doc_id, dl, tok, tf, df, facetCols…).
+  /** The [[lexical]] planner's literal BM25 slice (df index-global,
+    * predicate-gated) narrowed to (doc_id, dl, tok, tf, df, facetCols…).
     */
   private def facetSlice(spark: SparkSession, indexDir: String,
                          terms: Seq[String], facetCols: Seq[String],
                          predicate: Option[Column],
                          asOf: Option[Long]): DataFrame = {
-    require(terms.nonEmpty, "BM25 needs at least one query term")
     require(facetCols.nonEmpty, "need at least one facet column")
-    pinIndex(spark, indexDir, asOf): Unit
-    val posts = Versioned.read(spark, s"$indexDir/postings", asOf)
-    predicate.foreach(requirePostingsPredicate(indexDir, posts, _))
-    val missing = facetCols.filterNot(postingsMetaCols(posts).contains)
+    val (hits, _) = lexHits(spark,
+      Lexical(indexDir, predicate = predicate, asOf = asOf), Left(terms))
+    val missing = facetCols.filterNot(postingsMetaCols(hits).contains)
     require(missing.isEmpty,
       s"$indexDir postings do not carry facet column(s) " +
         s"${missing.mkString(", ")} — facets count inside the token-pruned " +
         "scan, so the columns must be baked at build (metaCols; available: " +
-        s"${postingsMetaCols(posts) match {
+        s"${postingsMetaCols(hits) match {
           case Nil => "none"; case ms => ms.mkString(", ") }})")
-    val slice = withDf(shardPruned(spark, indexDir, posts, terms, asOf)
-      .filter(col("tok").isInCollection(terms)), Nil)
-    predicate.map(slice.filter).getOrElse(slice)
+    bm25Slice(hits, Nil, predicate)
       .select((col("doc_id") +: col("dl") +: col("tok") +: col("tf") +:
         col("df") +: facetCols.map(col)): _*)
   }
@@ -936,116 +977,6 @@ object Retrieval {
       .groupBy(facetCols.map(col): _*)
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(facetCols.map(col(_).asc): _*)
-
-  /** Dirichlet-smoothed query-likelihood retrieval (Zhai & Lafferty,
-    * SIGIR 2001) — the second classic ranker beside BM25, over the SAME
-    * inverted index: score(q,d) = Σ_{w∈q} ln((tf(w,d) + μ·P(w|C)) /
-    * (dl + μ)), with the collection model P(w|C) = cf(w)/|C| and
-    * μ = 2000 the published default. Candidates are documents matching
-    * ≥1 query term (standard inverted-index behavior), each scored with
-    * the FULL smoothed likelihood over every query term — an unmatched
-    * term contributes its smoothing mass, so long documents do not get
-    * a free ride on partial matches. Query terms absent from the corpus
-    * drop (their collection probability is zero — the standard
-    * treatment). Per-doc sums ride DECIMAL(27,10), so the double scores
-    * replay exactly in SQL.
-    *
-    * Scale shape: identical to [[queryBm25Index]] — the probe touches
-    * only the query terms' postings (bucket/shard-pruned by layout);
-    * cf and the candidate set both derive from that pruned slice; the
-    * candidate × term grid is |cand|·|terms| rows with the |terms|-row
-    * cf table broadcast. Output: (doc_id, n_terms, score) top-k by
-    * (score desc, doc_id asc); n_terms counts MATCHED terms.
-    */
-  def queryQlIndex(spark: SparkSession, indexDir: String,
-                   terms: Seq[String], k: Int, mu: Double = 2000.0,
-                   asOf: Option[Long] = None): DataFrame = {
-    require(terms.nonEmpty, "QL needs at least one query term")
-    require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    pinIndex(spark, indexDir, asOf): Unit
-    // the pruned slice feeds cf, the candidate set, AND the tf join —
-    // stage it (≤ |terms| rows per matching doc, the bm25Scores rule)
-    val pruned = shardPruned(spark, indexDir,
-        Versioned.read(spark, s"$indexDir/postings", asOf), terms, asOf)
-      .filter(col("tok").isInCollection(terms))
-      .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
-      .localCheckpoint(eager = false)
-    val cf = pruned.groupBy(col("tok")).agg(sum(col("tf")).as("cf"))
-    val cand = pruned.select(col("doc_id"), col("dl")).distinct()
-    val scoredQl = withIndexStats(spark, indexDir, asOf, cand
-      .crossJoin(broadcast(cf))
-      .join(pruned.select(col("doc_id"), col("tok"), col("tf")),
-        Seq("doc_id", "tok"), "left"))
-      .withColumn("__s", log(
-        (coalesce(col("tf"), lit(0L)).cast("double") +
-          lit(mu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
-        (col("dl").cast("double") + lit(mu))))
-      .groupBy(col("doc_id"))
-      .agg(sum(when(col("tf").isNotNull, 1L).otherwise(0L)).as("n_terms"),
-        sum(col("__s").cast("decimal(27,10)")).as("__sc"))
-      .select(col("doc_id"), col("n_terms"),
-        col("__sc").cast("double").as("score"))
-    tombGate(spark, indexDir, scoredQl, "doc_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  /** MANY queries scored under Dirichlet QL in ONE postings pass — the
-    * [[queryBm25IndexMany]] shape for the second ranker: the (query,
-    * posting) slice from [[bm25ManyHits]] (DPP-pruned on a partition
-    * layout) feeds cf, the candidate set, and the tf join per query; a
-    * 1-query batch returns exactly [[queryQlIndex]]'s rows. This is
-    * what lets QL serve as a fusion arm at ANY grain — the chunk-grain
-    * hybrid passes its composite-keyed index through unchanged. Output:
-    * (query_id, doc_id, n_terms, score), top-k per query.
-    */
-  def queryQlIndexMany(spark: SparkSession, indexDir: String,
-                       queries: DataFrame, k: Int, mu: Double = 2000.0,
-                       asOf: Option[Long] = None): DataFrame =
-    qlManyTop(spark, indexDir, queries, k, mu, asOf)
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-
-  /** [[queryQlIndexMany]]'s top-k per query, unsorted (a fusion arm). */
-  private def qlManyTop(spark: SparkSession, indexDir: String,
-                        queries: DataFrame, k: Int, mu: Double,
-                        asOf: Option[Long]): DataFrame = {
-    require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    pinIndex(spark, indexDir, asOf): Unit
-    val hits = bm25ManyHits(spark, indexDir, queries, asOf)
-      .select(col("query_id"), col("doc_id"), col("dl"), col("tok"),
-        col("tf"))
-      .localCheckpoint(eager = false)
-    val cf = hits.groupBy(col("query_id"), col("tok"))
-      .agg(sum(col("tf")).as("cf"))
-    val cand = hits.select(col("query_id"), col("doc_id"), col("dl"))
-      .distinct()
-    val scored = withIndexStats(spark, indexDir, asOf, cand
-      .join(broadcast(cf), Seq("query_id"))
-      .join(hits.select(col("query_id"), col("doc_id"), col("tok"),
-        col("tf")), Seq("query_id", "doc_id", "tok"), "left"))
-      .withColumn("__s", log(
-        (coalesce(col("tf"), lit(0L)).cast("double") +
-          lit(mu) * (col("cf").cast("double") / col("sum_dl").cast("double"))) /
-        (col("dl").cast("double") + lit(mu))))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(when(col("tf").isNotNull, 1L).otherwise(0L)).as("n_terms"),
-        sum(col("__s").cast("decimal(27,10)")).as("__sc"))
-      .select(col("query_id"), col("doc_id"), col("n_terms"),
-        col("__sc").cast("double").as("score"))
-    Ranking.topPerGroup(tombGate(spark, indexDir, scored, "doc_id"),
-        Seq(col("query_id")), Seq(col("score").desc, col("doc_id").asc), k)
-      .select(col("query_id"), col("doc_id"), col("n_terms"), col("score"))
-  }
-
-  /** Dirichlet QL over the chunk-grain index; output matches
-    * [[queryChunkBm25Index]]'s shape: (doc_id, chunk_start, n_terms,
-    * score) — the index machinery is grain-agnostic, the composite-key
-    * decode is the only seam.
-    */
-  def queryChunkQlIndex(spark: SparkSession, indexDir: String,
-                        terms: Seq[String], k: Int, mu: Double = 2000.0,
-                        asOf: Option[Long] = None): DataFrame =
-    decodeChunkKey(queryQlIndex(spark, indexDir, terms, k, mu, asOf))
 
   /** Pseudo-relevance-feedback query expansion (RM3-style — Lavrenko &
     * Croft's relevance models, SIGIR 2001; the uniform-weight requery
@@ -1061,7 +992,7 @@ object Retrieval {
     * Everything is index-only — the feedback pass, the term mining
     * (feedback doc ids broadcast ONTO the postings scan), and the
     * requery (the expanded set is DATA, so it rides the dynamic-term
-    * [[queryBm25IndexMany]] machinery — on a partition-layout index the
+    * batch [[lexical]] plan — on a partition-layout index the
     * requery DPP-prunes like any dynamic batch); no text is re-read
     * and nothing is collected to the driver. The MINING pass has two
     * forms: without `forwardDir` it reads the postings bytes once — a
@@ -1080,12 +1011,11 @@ object Retrieval {
     */
   def rm3Expand(spark: SparkSession, indexDir: String, terms: Seq[String],
                 k: Int, kFb: Int = 5, nExp: Int = 5,
-                k1: Double = K1, b: Double = B,
                 asOf: Option[Long] = None,
                 forwardDir: Option[String] = None): DataFrame = {
     require(kFb > 0 && nExp >= 0, s"need kFb > 0, nExp >= 0")
     val fb = constraintFreeStage(
-      queryBm25Index(spark, indexDir, terms, kFb, k1, b, asOf)
+      lexTop(spark, Lexical(indexDir, asOf = asOf), Left(terms), kFb)
         .select(col("doc_id"), col("score")))
       // feeds the doc-set probe AND the score join — one probe, not two
     val mined = forwardDir match {
@@ -1112,7 +1042,7 @@ object Retrieval {
       .unionByName(terms.toDF("tok"))
       .agg(collect_set(col("tok")).as("terms"))
       .select(lit(0L).as("query_id"), col("terms"))
-    queryBm25IndexMany(spark, indexDir, expanded, k, k1, b, asOf)
+    lexTop(spark, Lexical(indexDir, asOf = asOf), Right(expanded), k)
       .select(col("doc_id"), col("n_terms"), col("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
   }
@@ -1124,14 +1054,14 @@ object Retrieval {
     * composite key decodes to attributed spans: pseudo-relevance
     * feedback at the grain the RAG stack serves, where the synonym
     * bridge surfaces a SPAN sharing no original term. Output matches
-    * [[queryChunkBm25Index]]: (doc_id, chunk_start, n_terms, score).
+    * a chunk-grain [[lexical]] request: (doc_id, chunk_start, n_terms,
+    * score).
     */
   def rm3ExpandChunks(spark: SparkSession, indexDir: String,
                       terms: Seq[String], k: Int, kFb: Int = 5,
-                      nExp: Int = 5, k1: Double = K1, b: Double = B,
-                      asOf: Option[Long] = None): DataFrame =
+                      nExp: Int = 5, asOf: Option[Long] = None): DataFrame =
     decodeChunkKey(
-      rm3Expand(spark, indexDir, terms, k, kFb, nExp, k1, b, asOf))
+      rm3Expand(spark, indexDir, terms, k, kFb, nExp, asOf))
       .orderBy(col("score").desc, col("doc_id").asc, col("chunk_start").asc)
 
   /** Exact-phrase search from the positional index: documents
@@ -1219,19 +1149,21 @@ object Retrieval {
   }
 
   /** Decode (doc_id, chunk_start) off a ranking whose doc_id column
-    * carries the composite ck — bit ops, not double division (a key
-    * near 2⁶³ would round).
+    * carries the composite ck, in place (every other column kept in
+    * order) — bit ops, not double division (a key near 2⁶³ would round).
     */
   private def decodeChunkKey(ranked: DataFrame): DataFrame =
-    ranked.select(shiftright(col("doc_id"), 32).as("doc_id"),
-      col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
-      col("n_terms"), col("score"))
+    ranked.select(ranked.columns.toSeq.flatMap {
+      case "doc_id" => Seq(shiftright(col("doc_id"), 32).as("doc_id"),
+        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"))
+      case c => Seq(col(c))
+    }: _*)
 
   def chunkBm25TopK(docs: DataFrame, id: Column, text: Column,
-                    terms: Seq[String], k: Int, size: Int, stride: Int,
-                    k1: Double = K1, b: Double = B): DataFrame =
+                    terms: Seq[String], k: Int, size: Int,
+                    stride: Int): DataFrame =
     decodeChunkKey(bm25TopK(chunkKeyed(docs, id, text, size, stride),
-      col("ck"), col("chunk_text"), terms, k, k1, b))
+      col("ck"), col("chunk_text"), terms, k))
 
   /** The serve-many RAG path — the persisted-index machinery is
     * grain-agnostic, so the chunk index IS [[buildBm25Index]] over the
@@ -1271,7 +1203,7 @@ object Retrieval {
     // ratio has [[compactBm25Index]] re-derive the set over the grown
     // chunk corpus (chunk-grain df: chunks containing the token).
     // metaCols: chunks inherit their document's gate columns, so
-    // [[queryChunkBm25IndexFiltered]] gates spans inside the pruned scan
+    // a filtered [[lexical]] request gates spans inside the pruned scan
     val v = buildBm25Index(chunkKeyed(docs, id, text, size, stride, metaCols),
       col("ck"), col("chunk_text"), indexDir, nBuckets,
       stopTokens = stopTokens, stopMaxDfRatio = stopMaxDfRatio,
@@ -1362,29 +1294,6 @@ object Retrieval {
     Stamp.write(spark, indexDir, lexGrid, (size, stride), v)
     v
   }
-
-  /** Probe the chunk-grain index; output matches [[chunkBm25TopK]]:
-    * (doc_id, chunk_start, n_terms, score) by (score desc, doc asc,
-    * chunk asc) — the composite key's asc order IS (doc, chunk) asc.
-    */
-  def queryChunkBm25Index(spark: SparkSession, indexDir: String,
-                          terms: Seq[String], k: Int,
-                          asOf: Option[Long] = None): DataFrame =
-    decodeChunkKey(queryBm25Index(spark, indexDir, terms, k, asOf = asOf))
-
-  /** [[queryBm25IndexFiltered]] at chunk grain: the gate columns were
-    * inherited from each chunk's DOCUMENT at build, so a span ranks
-    * only if its document passes — language/license gates compose with
-    * span-exact attribution at no per-query join. Same Lucene
-    * semantics: chunk df stays index-global, survivors score exactly
-    * as unfiltered.
-    */
-  def queryChunkBm25IndexFiltered(spark: SparkSession, indexDir: String,
-                                  terms: Seq[String], k: Int,
-                                  predicate: Column,
-                                  asOf: Option[Long] = None): DataFrame =
-    decodeChunkKey(queryBm25IndexFiltered(spark, indexDir, terms, k,
-      predicate, asOf = asOf))
 
   /** Append a document batch's chunks to the chunk-grain index —
     * [[appendToBm25Index]] semantics (new keys only, stats merge under
@@ -1481,32 +1390,48 @@ object Retrieval {
         sem = sem.at(pinIndex(spark, sem.dir, sem.asOf)))
   }
 
-  /** The semantic arm of a [[Hybrid]] request: one persisted ANN index. */
+  /** One persisted ANN index as a probe arm — the vector family's
+    * request value, planned by [[Similarity.probe]] alone or as the
+    * semantic arm of a [[Hybrid]] request. `score` names the column the
+    * arm ranks by. */
   sealed trait SemanticArm {
     def dir: String
     def asOf: Option[Long]
+    def nProbes: Int
     def at(version: Long): SemanticArm
+    def score: String
   }
 
-  /** The float IVF index ([[Similarity.queryIvfIndex]]): cosine over the
-    * `nProbes` probed buckets. */
+  /** The float IVF index ([[Similarity.buildIvfIndex]]): cosine `sim`
+    * over the `nProbes` probed buckets. */
   final case class Ivf(dir: String, nProbes: Int = 4,
                        asOf: Option[Long] = None) extends SemanticArm {
     def at(version: Long): Ivf = copy(asOf = Some(version))
+    def score: String = "sim"
   }
 
-  /** The COMPRESSED index plus exact re-rank
-    * ([[Similarity.queryIvfPqIndexReranked]]): the ADC scan shortlists
-    * kEach·alpha candidates per query at code-width bytes, and the exact
-    * dot re-scores only the shortlist from the index's own
-    * full-precision vectors (DPP-fetched, never a corpus scan). `alpha`
-    * is the arm's recall dial; `m`/`ks`/`dim`/`residual` must match the
-    * build. */
-  final case class Pq(dir: String, alpha: Int = 4, nProbes: Int = 4,
-                      m: Int = 8, ks: Int = 16, dim: Int = 64,
-                      residual: Boolean = false,
+  /** The SQ8 IVF index ([[Similarity.buildIvfSq8Index]]): probe selection
+    * in full precision, queries quantized on the index's stored scale,
+    * the probed buckets scored on the exact INTEGER code dot `qdot`. */
+  final case class Sq8(dir: String, nProbes: Int = 4,
+                       asOf: Option[Long] = None) extends SemanticArm {
+    def at(version: Long): Sq8 = copy(asOf = Some(version))
+    def score: String = "qdot"
+  }
+
+  /** The COMPRESSED IVF-PQ index ([[Similarity.buildIvfPqIndex]]): the
+    * ADC scan of the probed buckets' code rows (`pqdot`), and with
+    * `alpha = Some(a)` the exact re-rank: the ADC scan shortlists k·a
+    * candidates per query at code-width bytes, and the exact `dot`
+    * re-scores only the shortlist from the index's own full-precision
+    * vectors (DPP-fetched, never a corpus scan). `alpha` is the recall
+    * dial; `m`/`ks`/`dim`/`residual` must match the build. */
+  final case class Pq(dir: String, alpha: Option[Int] = Some(4),
+                      nProbes: Int = 4, m: Int = 8, ks: Int = 16,
+                      dim: Int = 64, residual: Boolean = false,
                       asOf: Option[Long] = None) extends SemanticArm {
     def at(version: Long): Pq = copy(asOf = Some(version))
+    def score: String = if (alpha.isEmpty) "pqdot" else "dot"
   }
 
   /** The maxsim arm's corpus ([[maxSimRerankChunks]]): the documents
@@ -1543,41 +1468,35 @@ object Retrieval {
     require(req.predicate.isEmpty || (req.ql.isEmpty && req.maxSim.isEmpty),
       "the QL and maxsim arms cannot gate: a predicate fuses only the " +
         "BM25 and vector arms")
-    require(req.maxSim.isEmpty || req.sem.isInstanceOf[Pq],
-      "the maxsim arm re-ranks the PQ arm's shortlist: request a Pq arm")
+    req.maxSim.foreach(_ => requirePqShortlist(req.sem))
     val chunked = chunkPair(spark, req.bm25Dir, req.sem.dir)
     val terms = queries.select(col("query_id"), col("terms"))
-    val lex = bm25ManyTop(spark, req.bm25Dir, terms, req.kEach,
-        req.predicate, K1, B, req.bm25AsOf)
+    def lexArm(lx: Lexical) = lexTop(spark, lx, Right(terms), req.kEach)
       .select(col("query_id"), col("doc_id"), col("score"))
-    val ql = req.ql.map(mu => qlManyTop(spark, req.bm25Dir, terms,
-        req.kEach, mu, req.bm25AsOf)
-      .select(col("query_id"), col("doc_id"), col("score")))
-    val vecs = queries.select(col("query_id").as("id"), col("vec"))
-    val (top, score) = req.sem match {
-      case s: Ivf => (Similarity.ivfIndexTop(spark, s.dir, vecs, req.kEach,
-        s.nProbes, s.asOf, req.predicate), "sim")
-      case s: Pq => (Similarity.pqRerankedTop(spark, s.dir, vecs, req.kEach,
-        s.alpha, s.nProbes, s.asOf, s.m, s.ks, s.dim, s.residual,
-        req.predicate), "dot")
-    }
+    val lex = lexArm(Lexical(req.bm25Dir, predicate = req.predicate,
+      asOf = req.bm25AsOf))
+    val ql = req.ql.map(mu =>
+      lexArm(Lexical(req.bm25Dir, Some(mu), asOf = req.bm25AsOf)))
+    val top = Similarity.probeTop(spark, req.sem,
+      queries.select(col("query_id").as("id"), col("vec")), req.kEach,
+      req.predicate.fold[Similarity.Gate](Similarity.Ungated)(Similarity.Where))
     val shortlist =
       if (req.maxSim.isEmpty) top else top.localCheckpoint(eager = false)
     val sem = shortlist.select(col("query_id"), col("cand_id").as("doc_id"),
-      col(score).as("score"))
+      col(req.sem.score).as("score"))
     val msim = req.maxSim.map(ms => maxSimScoresFrom(spark, req.sem.dir,
-      ms.docs, ms.id, ms.text, queries,
-      shortlist.select(col("query_id"), col("cand_id").as("ck"))))
+      ms, queries, shortlist.select(col("query_id"), col("cand_id").as("ck"))))
     val fused = rrfFuse(Seq(lex) ++ ql ++ Seq(sem) ++ msim, k, req.c)
     if (!chunked) fused
-    else fused
-      .select(col("query_id"),
-        shiftright(col("doc_id"), 32).as("doc_id"),
-        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
-        col("n_rankers"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"),
-        col("chunk_start"))
+    else decodeChunkKey(fused).orderBy(col("query_id"), col("rrf").desc,
+      col("doc_id"), col("chunk_start"))
   }
+
+  /** The maxsim arm re-ranks a PQ arm's shortlist (the arm that carries
+    * the chunk-grain compressed index); any other arm refuses. */
+  private def requirePqShortlist(arm: SemanticArm): Unit =
+    require(arm.isInstanceOf[Pq],
+      "the maxsim arm re-ranks the PQ arm's shortlist: request a Pq arm")
 
   /** True when a fusion pair is chunk grain; refuses a doc/chunk pair
     * and two chunk grids that disagree. */
@@ -1724,9 +1643,9 @@ object Retrieval {
     * document explodes into size/stride windows), which is exactly
     * where PQ's ~32× byte cut pays most: a probe moves
     * ~nProbes/nCentroids ÷ 32 of the float-index bytes, and the exact
-    * re-rank ([[Similarity.queryIvfPqIndexReranked]], wired into
-    * a [[Pq]] arm of [[hybrid]]) closes the reconstruction-error recall
-    * gap at |Q|·kEach·alpha exact dots. Same grid-sidecar discipline as
+    * re-rank (a [[Pq]] arm with `alpha`, alone or in [[hybrid]]) closes
+    * the reconstruction-error recall gap at |Q|·kEach·alpha exact dots.
+    * Same grid-sidecar discipline as
     * the float index — stamped against the assignment's overwrite
     * snapshot, so fusion refuses mismatched grids.
     */
@@ -1775,54 +1694,41 @@ object Retrieval {
     * query-token) maxes are order-independent; the final sum runs in
     * DECIMAL(27,10) so the score replays exactly cross-engine.
     *
+    * The shortlist is the `arm`'s top-kEach ([[Similarity.probeTop]]);
+    * only a [[Pq]] arm (the chunk-grain compressed index) can carry it.
     * Output: (query_id, doc_id, chunk_start, maxsim) — top `k` per
     * query, span-exact attribution like every chunk server here.
     */
-  def maxSimRerankChunks(spark: SparkSession, chunkPqDir: String,
-                         docs: DataFrame, id: Column, text: Column,
-                         queries: DataFrame, k: Int, kEach: Int = 20,
-                         alpha: Int = 4, nProbes: Int = 4,
-                         asOf: Option[Long] = None, m: Int = 8,
-                         ks: Int = 16, dim: Int = 64,
-                         residual: Boolean = false): DataFrame =
-    Ranking.topPerGroup(
-        maxSimScores(spark, chunkPqDir, docs, id, text, queries, kEach,
-          alpha, nProbes, asOf, m, ks, dim, residual),
+  def maxSimRerankChunks(spark: SparkSession, arm: SemanticArm,
+                         ms: MaxSim, queries: DataFrame, k: Int,
+                         kEach: Int = 20): DataFrame = {
+    requirePqShortlist(arm)
+    val short = Similarity.probeTop(spark, arm,
+        queries.select(col("query_id").as("id"), col("vec")), kEach,
+        Similarity.Ungated)
+      .select(col("query_id"), col("cand_id").as("ck"))
+      .localCheckpoint(eager = false) // feeds doc fetch + the pair join
+    decodeChunkKey(Ranking.topPerGroup(
+        maxSimScoresFrom(spark, arm.dir, ms, queries, short),
         Seq(col("query_id")), Seq(col("score").desc, col("doc_id").asc), k)
-      .select(col("query_id"),
-        shiftright(col("doc_id"), 32).as("doc_id"),
-        col("doc_id").bitwiseAND(lit(ChunkKeyBase - 1)).as("chunk_start"),
-        col("score").as("maxsim"))
+      .select(col("query_id"), col("doc_id"), col("score").as("maxsim")))
       .orderBy(col("query_id"), col("maxsim").desc, col("doc_id"),
         col("chunk_start"))
+  }
 
-  /** The maxsim arm at ck grain — (query_id, doc_id = ck, score), the
-    * [[rrfFuse]] input shape shared with the other arms. */
-  private def maxSimScores(spark: SparkSession, chunkPqDir: String,
-                           docs: DataFrame, id: Column, text: Column,
-                           queries: DataFrame, kEach: Int, alpha: Int,
-                           nProbes: Int, asOf: Option[Long], m: Int,
-                           ks: Int, dim: Int,
-                           residual: Boolean): DataFrame =
-    maxSimScoresFrom(spark, chunkPqDir, docs, id, text, queries,
-      Similarity.queryIvfPqIndexReranked(spark, chunkPqDir,
-          queries.select(col("query_id").as("id"), col("vec")),
-          kEach, alpha, nProbes, asOf, m, ks, dim, residual)
-        .select(col("query_id"), col("cand_id").as("ck"))
-        .localCheckpoint(eager = false)) // feeds doc fetch + the pair join
-
-  /** [[maxSimScores]] over a CALLER-STAGED shortlist (query_id, ck) —
-    * the seam that lets [[hybrid]]'s maxsim arm run the PQ
-    * probe+rerank ONCE and feed both the exact-dot arm and the maxsim
+  /** The maxsim scores (query_id, doc_id = ck, score) — the [[rrfFuse]]
+    * input shape shared with the other arms — over a CALLER-STAGED
+    * shortlist (query_id, ck): the seam that lets [[hybrid]]'s maxsim
+    * arm run the PQ probe ONCE and feed both the PQ arm and the maxsim
     * arm from the same staged rows, instead of evaluating the identical
     * probe subtree twice per serve call. The shortlist must be staged
     * (checkpointed) by the caller: it feeds the doc fetch, the chunk
     * semi-join and the pair join below.
     */
   private def maxSimScoresFrom(spark: SparkSession, chunkPqDir: String,
-                           docs: DataFrame, id: Column, text: Column,
-                           queries: DataFrame,
-                           short: DataFrame): DataFrame = {
+                               ms: MaxSim, queries: DataFrame,
+                               short: DataFrame): DataFrame = {
+    val MaxSim(docs, id, text) = ms
     val (size, stride) = chunkGrid(spark, chunkPqDir,
       stampTable = "assignment")
     // ONLY the shortlist's documents re-window — never the corpus

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField,
+  StructType}
 import graft.functions.VectorOps
+import graft.sources.Versioned
 
 /** Similarity search over embedding columns (SURVEY.md §2.3 J7).
   *
@@ -54,7 +59,7 @@ object Similarity {
     * over the candidate scan (declared BNLJ), with the label
     * inequality riding the join condition so same-label pairs never
     * materialize. At 100 TB the same composition rides the IVF index
-    * ([[queryIvfIndex]] with a post-filter on label, over-fetching
+    * (an IVF [[probe]] with a post-filter on label, over-fetching
     * k·labels to survive the filter) — the brute form is the exact
     * baseline the index path is measured against.
     *
@@ -141,9 +146,7 @@ object Similarity {
       .withColumn("sim", VectorOps.cosineWithNorms(
         col("query_id_v"), col("cand_id_v"),
         col("query_id_norm_sq"), col("cand_id_norm_sq")))
-    Ranking.topPerGroup(paired, Seq(col("query_id")),
-        Seq(col("sim").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("sim"))
+    topBy(paired, "sim", k)
       .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
   }
 
@@ -282,27 +285,35 @@ object Similarity {
 
   private val centFields = Seq("centroid_id", "centv", "cent_norm_sq")
 
-  /** Attach the `cents` array of a PERSISTED index's centroids at `asOf`
-    * as a plan literal: the [[centArray]] value, read once per centroids
-    * version ([[graft.sources.Versioned.rows]] — nCentroids rows, bounded
-    * by construction), so a probe runs no collect/broadcast job for it.
-    * Same value as the aggregate: the probe's total order makes the array
-    * order irrelevant.
+  /** A persisted index's centroid rows at `asOf`, read once per centroids
+    * version ([[Versioned.rows]] — nCentroids rows, bounded by
+    * construction). */
+  private def centRows(spark: SparkSession, indexDir: String,
+                       asOf: Option[Long]): IndexedSeq[Row] =
+    Versioned.rows(spark, s"$indexDir/centroids", asOf, centFields)
+
+  /** The [[centArray]] value of a PERSISTED index's centroids at `asOf`
+    * as a plan literal ([[centRows]]), so a probe runs no collect or
+    * broadcast job for it; `counts` appends each centroid's eligible
+    * count `n` (0 when absent) for the [[Counted]] prefix. Same value as
+    * the aggregate: the probe's total order makes the array order
+    * irrelevant.
     */
-  private def indexCents(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String,
-                         asOf: Option[Long]): DataFrame => DataFrame = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, StructType}
-    val t = s"$indexDir/centroids"
-    val schema = graft.sources.Versioned.read(spark, t, asOf).schema
-    val dt = ArrayType(StructType(centFields.map(schema(_))), containsNull = false)
-    val value = CatalystTypeConverters.createToCatalystConverter(dt)(
-      graft.sources.Versioned.rows(spark, t, asOf, centFields))
-    val cents = org.apache.spark.sql.GraftColumnBridge.column(Literal(value, dt))
-    _.withColumn("cents", cents)
+  private def centroidArray(spark: SparkSession, indexDir: String,
+                            asOf: Option[Long],
+                            counts: Option[Map[Any, Long]]): Column = {
+    val schema = Versioned.read(spark, s"$indexDir/centroids", asOf).schema
+    val fields = centFields.map(schema(_)) ++
+      counts.map(_ => StructField("n", LongType, nullable = false))
+    literal(ArrayType(StructType(fields), containsNull = false),
+      centRows(spark, indexDir, asOf).map(r => counts.fold(r)(n =>
+        Row.fromSeq(r.toSeq :+ n.getOrElse(r.get(0), 0L)))))
   }
+
+  /** A Scala value of type `dt` as a Catalyst literal column. */
+  private def literal(dt: DataType, value: Any): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(Literal(
+      CatalystTypeConverters.createToCatalystConverter(dt)(value), dt))
 
   /** (sim, centroid_id) per centroid, computed once per element inside
     * `transform` (the lambda binds everything it dereferences — an
@@ -335,26 +346,16 @@ object Similarity {
     .select(col("__best")("centroid_id").as("centroid_id"),
       col("cand_id"), col("cv"), col("c_norm_sq"))
 
-  /** Probe + scan + rank against a (centroids, assignment) pair —
-    * shared by the inline path and [[queryIvfIndex]].
-    */
   /** The probe pipeline up to (query_id, cand_id, sim) scored pairs —
-    * the pre-ranking seam [[probeIndex]] and label-aware consumers
+    * the pre-ranking seam the inline path and label-aware consumers
     * ([[hardNegativesIndexed]]) share: probe selection is map-side
-    * (sort the broadcast centroid array, slice, explode), and only the
-    * probed buckets are scanned.
+    * (sort the centroid array, slice, explode), and only the probed
+    * buckets are scanned ([[cosineScored]]).
     */
   private def probeScored(queries: DataFrame,
                           withCents: DataFrame => DataFrame,
-                          assigned: DataFrame, nProbes: Int): DataFrame = {
-    val probes = probesOf(queryVecs(queries), withCents, nProbes)
-    // scan only the probed buckets
-    assigned.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", VectorOps.cosineWithNorms(
-        col("qv"), col("cv"), col("q_norm_sq"), col("c_norm_sq")))
-      .select(col("query_id"), col("cand_id"), col("sim"))
-  }
+                          assigned: DataFrame, nProbes: Int): DataFrame =
+    cosineScored(probesOf(queryVecs(queries), withCents, nProbes), assigned)
 
   /** The query side of an IVF probe: (query_id, qv, q_norm_sq). */
   private def queryVecs(queries: DataFrame): DataFrame =
@@ -375,18 +376,13 @@ object Similarity {
       .select(col("query_id"), col("__probe")("centroid_id").as("centroid_id"),
         col("qv"), col("q_norm_sq"))
 
+  /** Probe + scan + rank against an in-plan (centroids, assignment)
+    * pair — the inline [[ivfTopK]]. */
   private def probeIndex(queries: DataFrame,
                          withCents: DataFrame => DataFrame,
                          assigned: DataFrame, k: Int, nProbes: Int): DataFrame =
-    probeTop(queries, withCents, assigned, k, nProbes)
+    topBy(probeScored(queries, withCents, assigned, nProbes), "sim", k)
       .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
-
-  /** [[probeIndex]]'s top-k per query, unsorted. */
-  private def probeTop(queries: DataFrame, withCents: DataFrame => DataFrame,
-                       assigned: DataFrame, k: Int, nProbes: Int): DataFrame =
-    Ranking.topPerGroup(probeScored(queries, withCents, assigned, nProbes),
-        Seq(col("query_id")), Seq(col("sim").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("sim"))
 
   /** [[hardNegatives]] over a persisted IVF index — the scale path:
     * only the probed buckets are scanned, and the label constraint is
@@ -406,9 +402,10 @@ object Similarity {
   def hardNegativesIndexed(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queries: DataFrame, candLabels: DataFrame, k: Int,
       nProbes: Int = 4, asOf: Option[Long] = None): DataFrame = {
-    val assigned = readIndexPair(spark, indexDir, asOf)._2
+    val cents = centroidArray(spark, indexDir, asOf, None)
     val scored = probeScored(queries.select(col("id"), col("vec")),
-      indexCents(spark, indexDir, asOf), assigned, nProbes)
+      _.withColumn("cents", cents), pinnedAssignment(spark, indexDir, asOf),
+      nProbes)
     val qLab = queries.select(col("id").as("query_id"), col("label").as("q_label"))
     val cLab = candLabels.select(col("id").as("cand_id"), col("label").as("cand_label"))
     scored
@@ -475,7 +472,7 @@ object Similarity {
     val c = prepCandidates(candidates)
     val (centroids, assigned0) = centroidsAndAssignment(c, nCentroids, lloydIters)
     // metadata gates ride the assignment rows ([[withMeta]]): one build-
-    // cadence join so [[queryIvfIndexFiltered]] probes pay neither a
+    // cadence join so gated [[probe]]s pay neither a
     // join nor a distance eval for gated candidates
     val assigned = withMeta(assigned0, candidates, metaCols)
     val vc = graft.sources.Versioned.overwrite(centroids, s"$indexDir/centroids")
@@ -982,118 +979,378 @@ object Similarity {
     target
   }
 
-  /** Probe a persisted IVF index: identical output to the [[ivfTopK]]
-    * call whose corpus/params built it, but the only work per query
-    * batch is probe selection + the bucket-equality scan — no seed
-    * sample, no Lloyd passes, no corpus assignment. `asOf` time-travels
-    * to a historical index version (both tables pin the same version).
-    */
-  /** Read the (centroids, assignment) pair of a persisted index.
-    * Latest-version reads REFUSE an out-of-lockstep index
-    * ([[Retrieval.pinIndex]]; a build or append that crashed between
-    * its commits): probing new centroids against a stale assignment
-    * silently drops vectors. Pinned `asOf` reads of intact historical
-    * versions keep working.
-    */
-  private def readIndexPair(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, asOf: Option[Long]): (DataFrame, DataFrame) = {
-    Retrieval.pinIndex(spark, indexDir, asOf): Unit
-    // document deletion ([[Tombstones]]): pending deletes gate the
-    // candidate rows BEFORE scoring/ranking (survivors fill k — no
-    // starvation); the physical drop happens at [[compactIvfIndex]].
-    // Gates read the LATEST tombstones even under asOf — takedown is
-    // retroactive. Chunk-grain indexes (composite ck keys) gate on the
-    // decoded doc id.
-    (graft.sources.Versioned.read(spark, s"$indexDir/centroids", asOf),
-     Tombstones.gate(spark, indexDir,
-       graft.sources.Versioned.read(spark, s"$indexDir/assignment", asOf),
-       Retrieval.docKeyExpr(spark, indexDir, col("cand_id"))))
-  }
+  // ------------------------------------------------- ANN probe request
 
-  def queryIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+  /** The candidate gate of an ANN probe ([[probe]]). Every gate applies
+    * to the FULL probed-candidate stream BEFORE scoring and ranking — a
+    * post-filter on an already-truncated top-k starves a query whose
+    * nearest neighbors are gated (the [[hardNegativesIndexed]] lesson) —
+    * and rides the probed-bucket SCAN itself: the gate columns were baked
+    * into the assignment rows at build (`metaCols`), so gated candidates
+    * die at the scan without a join OR a distance evaluation. A
+    * predicate naming a column the index does not carry REFUSES
+    * ([[requirePredicateCols]]). With nProbes = nCentroids a gated probe
+    * is EXACTLY the brute-force top-k over the filtered corpus.
+    */
+  sealed trait Gate
+
+  /** No gate: every candidate in the probed buckets ranks. */
+  case object Ungated extends Gate
+
+  /** A metadata predicate at the arm's fixed probe width. */
+  final case class Where(predicate: Column) extends Gate
+
+  /** A metadata predicate with ADAPTIVE probe widening — the filtered-ANN
+    * starvation fix (the problem ACORN and FAISS's selectivity-aware
+    * probing address): a selective gate can leave fewer than k eligible
+    * candidates inside the probed buckets while eligible vectors sit in
+    * unprobed ones. When any query underfills, the probe width DOUBLES
+    * and the probe re-runs, until every query fills k or the scan is
+    * exhaustive (then EXACTLY the filtered brute force). Total probed
+    * bytes ≤ 2× what the right width would have paid; a batch that fills
+    * k at the starting width pays the [[Where]] plan plus one |Q|-row
+    * underfill check (a bounded control read).
+    */
+  final case class Widening(predicate: Column) extends Gate
+
+  /** A CATEGORICAL gate `gateCol = gateVal` with the probe width chosen
+    * in ONE shot from the index's `gatecounts` sidecar
+    * ([[refreshGateCounts]]): each query ranks the centroids as usual,
+    * then takes the shortest prefix whose cumulative eligible count
+    * reaches k+1 (one row of headroom for the self-match exclusion) —
+    * per-query widths, no widening loop. A gate value the counts never
+    * saw, or a total eligible count below k, degrades to the exhaustive
+    * scan (EXACTLY the filtered brute force); an absent or STALE sidecar
+    * (appends since the last refresh) falls back to the [[Widening]]
+    * plan — correctness never rides the sidecar, only the byte bound
+    * does. Tombstones added since the refresh can make counts overcount;
+    * the |Q|-row underfill backstop re-routes exactly those batches to
+    * the widening plan. The counts describe the latest assignment, so a
+    * pinned (`asOf`) arm refuses.
+    */
+  final case class Counted(gateCol: String, gateVal: Any) extends Gate
+
+  /** Plan an ANN probe: one [[Retrieval.SemanticArm]] over a query batch
+    * (id, vec), gated by `gate`. The planner keeps three parts apart:
+    *
+    *  - the probe WIDTH — the arm's fixed `nProbes` (probe selection is
+    *    map-side: rank the centroid literal per query, slice, explode),
+    *    the [[Widening]] loop, or the [[Counted]] one-shot prefix;
+    *  - the BUCKET SCORER over only the probed buckets — float cosine
+    *    `sim` ([[Retrieval.Ivf]]), the exact INTEGER SQ8 code dot `qdot`
+    *    on the index's stored scale ([[Retrieval.Sq8]],
+    *    [[graft.plans.IntDotProductExpr]] — bit-identical in any engine),
+    *    or the PQ ADC score `pqdot` ([[Retrieval.Pq]]: a per-query lookup
+    *    table over the codebook, plus the centroid base dot on a residual
+    *    index);
+    *  - the optional EXACT RE-RANK of a PQ arm with `alpha`: the ADC
+    *    ranking shortlists k·alpha candidates per query and the exact
+    *    `dot` re-scores only the shortlist from the index's own
+    *    full-precision `vectors/` table (a broadcast equality join the
+    *    shortlist DPP-prunes to its shard directories — re-rank bytes
+    *    are bounded by the probed doc set, never the corpus). The
+    *    shortlist stages through a constraint-free seam so the shard-range
+    *    guard survives composition (SPARK-39748).
+    *
+    * Per-version constants — centroids, the SQ8 scale, the PQ codebook,
+    * gate counts — are plan literals read once per version
+    * ([[graft.sources.Versioned.rows]]), never a per-request scan or
+    * broadcast. Latest reads refuse an out-of-lockstep index
+    * ([[Retrieval.pinIndex]]); pending deletes gate the candidates before
+    * scoring ([[Tombstones]] — the gate reads the LATEST tombstones even
+    * under asOf: takedown is retroactive). With nProbes = nCentroids the
+    * probe is exactly the arm's brute-force scan ([[bruteForceTopK]],
+    * [[sq8TopK]], [[pqTopK]] — spec-proven). Output: (query_id, cand_id,
+    * arm.score) top-k per query by (score desc, cand_id asc). A new
+    * single-index vector probe is an arm and a gate planned here, never a
+    * new `query*` function.
+    */
+  def probe(spark: SparkSession, arm: Retrieval.SemanticArm,
+            queries: DataFrame, k: Int, gate: Gate = Ungated): DataFrame =
+    planProbe(spark, arm, queries, k, gate, sorted = true)
+
+  /** [[probe]]'s top-k per query, unsorted: what a fusion arm hands
+    * [[Retrieval.rrfFuse]], which re-ranks per query anyway. */
+  private[operators] def probeTop(spark: SparkSession,
+                                  arm: Retrieval.SemanticArm,
+                                  queries: DataFrame, k: Int,
+                                  gate: Gate): DataFrame =
+    planProbe(spark, arm, queries, k, gate, sorted = false)
+
+  /** The float IVF preset of [[probe]] (signature frozen: `perfbench` and
+    * the job-budget spec call it): identical output to the [[ivfTopK]]
+    * call whose corpus/params built the index. */
+  def queryIvfIndex(spark: SparkSession, indexDir: String,
                     queries: DataFrame, k: Int, nProbes: Int = 4,
                     asOf: Option[Long] = None): DataFrame =
-    ivfIndexTop(spark, indexDir, queries, k, nProbes, asOf, None)
-      .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
+    probe(spark, Retrieval.Ivf(indexDir, nProbes, asOf), queries, k)
 
-  /** The top-k per query of [[queryIvfIndex]] (with a predicate,
-    * [[queryIvfIndexFiltered]]), unsorted: what a fusion arm hands
-    * [[Retrieval.rrfFuse]], which re-ranks per query anyway.
-    */
-  private[operators] def ivfIndexTop(spark: org.apache.spark.sql.SparkSession,
-                                     indexDir: String, queries: DataFrame,
-                                     k: Int, nProbes: Int,
-                                     asOf: Option[Long],
-                                     predicate: Option[Column]): DataFrame = {
-    val assigned = readIndexPair(spark, indexDir, asOf)._2
-    predicate.foreach(requirePredicateCols(indexDir, assigned, _))
-    probeTop(queries, indexCents(spark, indexDir, asOf),
-      predicate.map(assigned.filter).getOrElse(assigned), k, nProbes)
+  private def planProbe(spark: SparkSession, arm: Retrieval.SemanticArm,
+                        queries: DataFrame, k: Int, gate: Gate,
+                        sorted: Boolean): DataFrame = {
+    val predicate = gate match {
+      case Ungated => None
+      case Where(p) => Some(p)
+      case Widening(p) => Some(p)
+      case Counted(c, v) =>
+        require(arm.asOf.isEmpty, "a Counted gate sizes the probe from the " +
+          "latest gatecounts sidecar, so it cannot pin asOf — use a " +
+          "Widening gate for a pinned read")
+        Some(col(c) === lit(v))
+    }
+    val assigned = pinnedAssignment(spark, arm.dir, arm.asOf)
+    predicate.foreach(requirePredicateCols(arm.dir, assigned, _))
+    val eligible = predicate.map(assigned.filter).getOrElse(assigned)
+    val cents = centroidArray(spark, arm.dir, arm.asOf, None)
+    val (scored, stage) = bucketScorer(spark, arm, cents)
+    val q = queryVecs(queries)
+    def at(probes: DataFrame): DataFrame = {
+      val top = arm match {
+        case a @ Retrieval.Pq(_, Some(alpha), _, _, _, _, _, _) =>
+          reranked(spark, a, queries, k,
+            topBy(scored(q, probes, eligible), stage, k * alpha))
+        case _ => topBy(scored(q, probes, eligible), stage, k)
+      }
+      if (sorted) top.orderBy(col("query_id"), col(arm.score).desc,
+        col("cand_id"))
+      else top
+    }
+    def fixed(p: Int) = at(probesOf(q, _.withColumn("cents", cents), p))
+    def widened() = widen(queries, k, math.max(1, arm.nProbes),
+      centRows(spark, arm.dir, arm.asOf).size, fixed)
+    gate match {
+      case Ungated | Where(_) => fixed(arm.nProbes)
+      case Widening(_) => widened()
+      case Counted(c, v) => gateCounts(spark, arm.dir, c, v) match {
+        case None => widened()
+        case Some(n) =>
+          val r = at(countedProbesOf(q,
+            centroidArray(spark, arm.dir, None, Some(n)), k))
+            .localCheckpoint(eager = false) // shares the underfill check
+          // an EXHAUSTIVE one-shot (total eligible ≤ k: the prefix took
+          // every centroid) is already the filtered brute force; an
+          // underfill otherwise means tombstones landed after the last
+          // refresh — route those (rare) batches through the widening
+          if (n.values.sum > k.toLong && underfilled(queries, r, k)) widened()
+          else r
+      }
+    }
   }
 
-  /** Predicate-FILTERED IVF probe — filtered vector search, the
-    * metadata-gate + ANN composition every RAG deployment hits
-    * (language / date / license gates on candidates). The predicate
-    * applies to the FULL probed-candidate stream BEFORE scoring and
-    * ranking — the [[hardNegativesIndexed]] lesson: a post-filter on an
-    * already-truncated top-k starves a query whose nearest neighbors
-    * are gated — and it rides the probed-bucket SCAN itself: the gate
-    * columns were baked into the assignment rows at build
-    * ([[buildIvfIndex]] `metaCols`), so gated candidates die at the
-    * scan (simple comparisons push into parquet) without paying a join
-    * OR a distance evaluation. A predicate naming a column the index
-    * does not carry REFUSES loudly ([[requirePredicateCols]]); the
-    * fallback for un-baked gates is the separate (id, label) relation
-    * joined post-probe, [[hardNegativesIndexed]]'s shape, at the cost
-    * of a corpus-keyed join per serve batch.
-    *
-    * With nProbes = nCentroids the output is EXACTLY the brute-force
-    * top-k over the filtered corpus (spec-proven); at lower probe
-    * counts recall follows the probe dial measured against that
-    * filtered brute force — NOT against unfiltered brute force, whose
-    * gated neighbors no probe count could return.
+  /** The pinned, tombstone-gated assignment of a persisted index: latest
+    * reads REFUSE an out-of-lockstep index ([[Retrieval.pinIndex]]; a
+    * build or append that crashed between its commits) — probing new
+    * centroids against a stale assignment silently drops vectors. Pinned
+    * `asOf` reads of intact historical versions keep working. Pending
+    * deletes gate the candidate rows BEFORE scoring (survivors fill k);
+    * chunk-grain indexes gate on the decoded doc id.
     */
-  def queryIvfIndexFiltered(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String, queries: DataFrame, k: Int,
-                            predicate: Column, nProbes: Int = 4,
-                            asOf: Option[Long] = None): DataFrame =
-    ivfIndexTop(spark, indexDir, queries, k, nProbes, asOf, Some(predicate))
-      .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
-
-  /** [[queryIvfIndexFiltered]] with ADAPTIVE probe widening — the
-    * filtered-ANN starvation fix (the problem ACORN and FAISS's
-    * selectivity-aware probing address): a highly selective gate (a
-    * rare language, a narrow date) can leave fewer than k eligible
-    * candidates inside the probed buckets while eligible vectors sit in
-    * UNprobed ones — the fixed-probe result underfills k at full
-    * correctness but poor recall. When any query underfills, the probe
-    * count DOUBLES and the probe re-runs, until every query fills k or
-    * the scan is exhaustive (nProbes = nCentroids, where the result is
-    * EXACTLY the filtered brute force). Escalation cost is geometric:
-    * the final round dominates, total probed bytes ≤ 2× the bytes the
-    * right probe count would have paid, and a query batch that fills k
-    * at the starting width pays exactly [[queryIvfIndexFiltered]]'s
-    * plan plus one |Q|-row underfill check. The check is a bounded
-    * control read (|Q| rows), the documented Scheduler-style exception.
-    */
-  def queryIvfIndexFilteredAdaptive(spark: org.apache.spark.sql.SparkSession,
-                                    indexDir: String, queries: DataFrame,
-                                    k: Int, predicate: Column,
-                                    nProbes: Int = 4,
-                                    asOf: Option[Long] = None): DataFrame = {
-    val assigned = readIndexPair(spark, indexDir, asOf)._2
-    requirePredicateCols(indexDir, assigned, predicate)
-    val gated = assigned.filter(predicate)
-    val nCent = graft.sources.Versioned.rows(spark,
-      s"$indexDir/centroids", asOf, centFields).size
-    val cents = indexCents(spark, indexDir, asOf)
-    adaptiveWiden(queries, k, math.max(1, nProbes), nCent,
-      p => probeIndex(queries, cents, gated, k, p))
+  private def pinnedAssignment(spark: SparkSession, indexDir: String,
+                               asOf: Option[Long]): DataFrame = {
+    Retrieval.pinIndex(spark, indexDir, asOf): Unit
+    Tombstones.gate(spark, indexDir,
+      Versioned.read(spark, s"$indexDir/assignment", asOf),
+      Retrieval.docKeyExpr(spark, indexDir, col("cand_id")))
   }
+
+  /** The arm's bucket scorer — (queries, probes, eligible rows) →
+    * (query_id, cand_id, score) over the probed buckets, self-matches
+    * excluded — and its score column. The arm's per-version constants
+    * (the SQ8 scale, the PQ codebook) are read here, once per request.
+    */
+  private def bucketScorer(spark: SparkSession, arm: Retrieval.SemanticArm,
+                           cents: Column)
+      : ((DataFrame, DataFrame, DataFrame) => DataFrame, String) = arm match {
+    case _: Retrieval.Ivf => ((_, probes, rows) => cosineScored(probes, rows),
+      "sim")
+    case a: Retrieval.Sq8 =>
+      val scale = lit(sq8ScaleOf(spark, a))
+      ((q, probes, rows) => {
+        val qq = q.select(col("query_id"), sq8Code(col("qv"), scale).as("qq"))
+          .join(probes.select(col("query_id"), col("centroid_id")),
+            Seq("query_id"))
+        rows.join(broadcast(qq), Seq("centroid_id"))
+          .filter(col("cand_id") =!= col("query_id"))
+          .withColumn("qdot", VectorOps.dotInt(col("qq"), col("cq")))
+          .select(col("query_id"), col("cand_id"), col("qdot"))
+      }, "qdot")
+    case a: Retrieval.Pq =>
+      require(a.dim % a.m == 0,
+        s"dim ${a.dim} must split evenly into ${a.m} subspaces")
+      a.alpha.foreach(alpha =>
+        require(alpha >= 1, s"alpha must be >= 1, got $alpha"))
+      require(a.alpha.isEmpty || Versioned.exists(spark, s"${a.dir}/vectors"),
+        s"${a.dir} has no vectors table — the exact re-rank serves the " +
+          "shortlist from the index's own full-precision snapshot; rebuild " +
+          "this (pre-vectors) index with buildIvfPqIndex")
+      val cbs = codebookArray(spark, a)
+      // residual ADC: score(q, x) ≈ dot(q, c) + dot(q, x − c hat) — the
+      // centroid base dot is ONE extra term per (query, probe), off the
+      // centroid literal; raw mode scores from the LUT alone
+      val cdot =
+        if (!a.residual) lit(0.0)
+        else VectorOps.dot(col("qv"), element_at(filter(cents,
+          ct => ct("centroid_id") === col("centroid_id")), 1)("centv"))
+      ((q, probes, rows) => {
+        val qlut = withPqLut(q.select(col("query_id"), col("qv")), cbs, a.m,
+            a.dim / a.m, a.ks)
+          .select(col("query_id"), col("lut"))
+          .join(probes.select(col("query_id"), col("centroid_id"),
+            cdot.as("cdot")), Seq("query_id"))
+        rows.join(broadcast(qlut), Seq("centroid_id"))
+          .filter(col("cand_id") =!= col("query_id"))
+          .withColumn("pqdot",
+            if (a.residual) col("cdot") + pqScore(col("pqcode"), col("lut"))
+            else pqScore(col("pqcode"), col("lut")))
+          .select(col("query_id"), col("cand_id"), col("pqdot"))
+      }, "pqdot")
+  }
+
+  /** Float cosine over the probed buckets: (query_id, cand_id, sim). */
+  private def cosineScored(probes: DataFrame, rows: DataFrame): DataFrame =
+    rows.join(broadcast(probes), Seq("centroid_id"))
+      .filter(col("cand_id") =!= col("query_id"))
+      .withColumn("sim", VectorOps.cosineWithNorms(
+        col("qv"), col("cv"), col("q_norm_sq"), col("c_norm_sq")))
+      .select(col("query_id"), col("cand_id"), col("sim"))
+
+  /** Top-k per query by (`score` desc, cand_id asc), unsorted. */
+  private def topBy(scored: DataFrame, score: String, k: Int): DataFrame =
+    Ranking.topPerGroup(scored, Seq(col("query_id")),
+        Seq(col(score).desc, col("cand_id").asc), k)
+      .select(col("query_id"), col("cand_id"), col(score))
+
+  /** The exact re-rank of a PQ shortlist: full-precision dots from the
+    * index's own vectors table ([[vectorsFor]]), top-k per query. */
+  private def reranked(spark: SparkSession, arm: Retrieval.Pq,
+                       queries: DataFrame, k: Int,
+                       short: DataFrame): DataFrame = {
+    val shortlist = Retrieval.constraintFreeStage(
+      short.select(col("query_id"), col("cand_id")))
+    topBy(vectorsFor(spark, arm.dir, shortlist, arm.asOf)
+      .join(broadcast(shortlist), Seq("cand_id"))
+      .join(broadcast(queryVecs(queries)), Seq("query_id"))
+      .withColumn("dot", VectorOps.dot(col("qv"), col("cv"))), "dot", k)
+  }
+
+  /** The SQ8 index's one global quantization scale, stored on every
+    * centroid row. */
+  private def sq8ScaleOf(spark: SparkSession, arm: Retrieval.Sq8): Double = {
+    val t = s"${arm.dir}/centroids"
+    require(Versioned.read(spark, t, arm.asOf).columns.contains("s"),
+      s"${arm.dir} is not an SQ8 index (its centroids carry no " +
+        "quantization scale) — build it with buildIvfSq8Index")
+    Versioned.rows(spark, t, arm.asOf, Seq("s")).head.getDouble(0)
+  }
+
+  /** The PQ codebook as the [[pqCbNested]] value — cbs[j+1] = subspace
+    * j's (code, cb) entries sorted by code — planned as a literal, with
+    * the [[pqGuard]]/[[pqResGuard]] checks on the collected rows: a
+    * probe with the wrong m would slice wrong, and residual codes scored
+    * without the centroid base term (or raw codes with it) would be
+    * silently wrong by roughly one centroid dot.
+    */
+  private def codebookArray(spark: SparkSession, arm: Retrieval.Pq): Column = {
+    val t = s"${arm.dir}/codebook"
+    val schema = Versioned.read(spark, t, arm.asOf).schema
+    val hasRes = schema.fieldNames.contains("res")
+    // a codebook persisted before the residual flag existed was always
+    // raw-encoded
+    require(hasRes || !arm.residual, "this codebook predates residual " +
+      "encoding (no 'res' column): it was built raw — query/append with " +
+      "residual=false, or rebuild the index to use by_residual")
+    val rows = Versioned.rows(spark, t, arm.asOf,
+      Seq("j", "code", "cb") ++ (if (hasRes) Seq("res") else Nil))
+    require(!hasRes || rows.forall(_.getBoolean(3) == arm.residual),
+      s"PQ codebook residual flag != caller's residual = ${arm.residual}")
+    def num(r: Row, i: Int) = r.get(i).asInstanceOf[Number].longValue
+    val cbs = rows.groupBy(num(_, 0)).toSeq.sortBy(_._1).map(_._2
+      .sortBy(num(_, 1)).map(r => Row(r.get(1), r.get(2))))
+    require(cbs.size == arm.m,
+      s"PQ codebook subspace count != caller's m = ${arm.m}")
+    literal(ArrayType(ArrayType(
+      StructType(Seq(schema("code"), schema("cb"))))), cbs)
+  }
+
+  /** The gatecounts sidecar's eligible count per centroid for `gateCol =
+    * gateVal` (a gate value's string form, as the sidecar stores it), or
+    * None when the sidecar is absent or STALE (its `src_v` is not the
+    * latest assignment version). Read once per sidecar version. */
+  private def gateCounts(spark: SparkSession, indexDir: String,
+                         gateCol: String,
+                         gateVal: Any): Option[Map[Any, Long]] = {
+    val t = s"$indexDir/gatecounts"
+    if (!Versioned.exists(spark, t)) return None
+    val rows = Versioned.rows(spark, t, None,
+      Seq("gate_col", "gate_val", "centroid_id", "n", "src_v"))
+    val latest = Versioned.latestVersion(spark, s"$indexDir/assignment")
+    if (rows.isEmpty || rows.map(_.getLong(4)).max != latest) None
+    else Some(rows.filter(r => r.getString(0) == gateCol &&
+        r.getString(1) == String.valueOf(gateVal))
+      .map(r => r.get(2) -> r.getLong(3)).toMap)
+  }
+
+  /** The one-round counted probe width: rank centroids per query, cut
+    * the prefix at cumulative eligible count ≥ k+1 (an ordered left fold
+    * over the centroid literal — the lambda binds everything it
+    * dereferences), explode to per-query probe sets.
+    */
+  private def countedProbesOf(q: DataFrame, centsN: Column,
+                              k: Int): DataFrame = {
+    val scoredN = transform(col("cents"), ct => struct(
+      coalesce(VectorOps.cosineWithNorms(col("qv"), ct("centv"),
+        col("q_norm_sq"), ct("cent_norm_sq")),
+        lit(Double.NegativeInfinity)).as("sim"),
+      ct("centroid_id").as("centroid_id"),
+      ct("n").as("n")))
+    val emptyIds = typedLit(Seq.empty[Long])
+    q.withColumn("cents", centsN)
+      .withColumn("__probe_ids", aggregate(
+        array_sort(scoredN, bySimDescIdAsc),
+        struct(lit(0L).as("cum"), emptyIds.as("ids")),
+        // target k+1, not k: a query that is itself an eligible corpus
+        // member is counted by the sidecar but excluded from scoring
+        // (cand_id <> query_id), so a bare-k prefix underfills by one
+        // exactly when the query's own row sits in the probed buckets
+        (acc, x) => when(acc("cum") >= k + 1, acc)
+          .otherwise(struct((acc("cum") + x("n")).as("cum"),
+            concat(acc("ids"), array(x("centroid_id"))).as("ids"))),
+        acc => acc("ids")))
+      .select(col("query_id"), explode(col("__probe_ids")).as("centroid_id"),
+        col("qv"), col("q_norm_sq"))
+  }
+
+  /** The escalation loop: run the probe at width p, return when every
+    * query has k rows or the scan is exhaustive; else double. The
+    * result stages through a lazy localCheckpoint so the underfill
+    * check and the returned rows share one computation.
+    */
+  private def widen(queries: DataFrame, k: Int, startProbes: Int,
+                    nCent: Int, probe: Int => DataFrame): DataFrame = {
+    var p = math.min(startProbes, math.max(1, nCent))
+    while (true) {
+      val r = probe(p).localCheckpoint(eager = false)
+      if (p >= nCent || !underfilled(queries, r, k)) return r
+      p = math.min(nCent, p * 2)
+    }
+    sys.error("unreachable")
+  }
+
+  /** True when some query of the batch has fewer than k rows in `r`.
+    * Detection joins from the QUERY side: a query with ZERO eligible
+    * probed candidates has no result group at all — a result-side
+    * group-count would miss it exactly where escalation matters most.
+    */
+  private def underfilled(queries: DataFrame, r: DataFrame, k: Int): Boolean =
+    !queries.select(col("id").as("query_id")).distinct()
+      .join(r.groupBy(col("query_id")).agg(count(lit(1)).as("__n")),
+        Seq("query_id"), "left")
+      .filter(coalesce(col("__n"), lit(0L)) < k)
+      .isEmpty
 
   // --------------------------------------------- gate-count sidecar
   //
-  // The one-shot alternative to [[adaptiveWiden]]'s geometric re-scan
+  // The one-shot alternative to [[Widening]]'s geometric re-scan
   // for CATEGORICAL gates (the ACORN-style selectivity statistic): a
   // per-(gate column, value, centroid) eligible-candidate count table
   // beside the index, consulted at probe time to pick each query's
@@ -1178,157 +1435,6 @@ object Similarity {
     graft.sources.Versioned.overwrite(merged, t): Unit
   }
 
-  /** [[queryIvfIndexFiltered]] for a CATEGORICAL gate with the probe
-    * width chosen in ONE shot from the gatecounts sidecar: each query
-    * ranks the centroids as usual, then takes the shortest prefix
-    * whose cumulative eligible count reaches k+1 (one row of headroom
-    * for the self-match exclusion — a query that is itself an eligible
-    * corpus member is counted but never scored) — per-query widths, no
-    * widening loop, probed bytes ≈ the adaptive path's final round
-    * alone. Guarantees: the gate applies to the full probed stream
-    * before ranking (never a post-filter); a gate value the counts
-    * never saw — or a total eligible count below k — degrades to the
-    * exhaustive scan, which is EXACTLY the filtered brute force; a
-    * STALE sidecar (appends since the last refresh, or a pinned asOf)
-    * falls back to [[queryIvfIndexFilteredAdaptive]] — correctness
-    * never rides the sidecar, only the byte bound does. Tombstones
-    * added since the refresh can make counts overcount; the |Q|-row
-    * underfill backstop re-routes exactly those batches to the
-    * adaptive path.
-    */
-  def queryIvfIndexFilteredCounted(spark: org.apache.spark.sql.SparkSession,
-                                   indexDir: String, queries: DataFrame,
-                                   k: Int, gateCol: String, gateVal: Any,
-                                   asOf: Option[Long] = None): DataFrame = {
-    val predicate = col(gateCol) === lit(gateVal)
-    def adaptive() = queryIvfIndexFilteredAdaptive(spark, indexDir,
-      queries, k, predicate, asOf = asOf)
-    val t = s"$indexDir/gatecounts"
-    if (asOf.nonEmpty || !graft.sources.Versioned.exists(spark, t))
-      return adaptive()
-    val cur = graft.sources.Versioned.read(spark, t)
-    val head = cur.select(max(col("src_v"))).head // 1-row control read
-    val fresh = !head.isNullAt(0) && head.getLong(0) ==
-      graft.sources.Versioned.latestVersion(spark, s"$indexDir/assignment")
-    if (!fresh) return adaptive()
-    val (centroids, assigned) = readIndexPair(spark, indexDir, None)
-    requirePredicateCols(indexDir, assigned, predicate)
-    val counts = cur
-      .filter(col("gate_col") === gateCol &&
-        col("gate_val") === lit(gateVal).cast("string"))
-      .select(col("centroid_id"), col("n"))
-    val r = probeIndexCounted(queries, centroids,
-      assigned.filter(predicate), k, counts)
-      .localCheckpoint(eager = false) // shares the underfill check
-    val qids = queries.select(col("id").as("query_id")).distinct()
-    val underfilled = !qids
-      .join(r.groupBy(col("query_id")).agg(count(lit(1)).as("__n")),
-        Seq("query_id"), "left")
-      .filter(coalesce(col("__n"), lit(0L)) < k)
-      .isEmpty
-    // under-count only happens when tombstones landed after the last
-    // refresh — route those (rare) batches through the widening loop;
-    // but an EXHAUSTIVE one-shot (total eligible ≤ k ⇒ the k+1 target
-    // was unreachable and the prefix took every centroid) is already
-    // the filtered brute force and must return as-is, not re-probe
-    val totalEligible = counts.agg(coalesce(sum(col("n")), lit(0L)))
-      .head.getLong(0) // 1-row control read
-    if (underfilled && totalEligible > k.toLong) adaptive() else r
-  }
-
-  /** The one-round counted probe: rank centroids per query, cut the
-    * prefix at cumulative eligible count ≥ k (an ordered left fold over
-    * the broadcast centroid array — the lambda binds everything it
-    * dereferences), explode to per-query probe sets, scan, rank.
-    */
-  private def probeIndexCounted(queries: DataFrame, centroids: DataFrame,
-                                gated: DataFrame, k: Int,
-                                counts: DataFrame): DataFrame = {
-    val centsN = centroids
-      .join(counts, Seq("centroid_id"), "left")
-      .select(col("centroid_id"), col("centv"), col("cent_norm_sq"),
-        coalesce(col("n"), lit(0L)).as("n"))
-      .agg(collect_list(struct(col("centroid_id"), col("centv"),
-        col("cent_norm_sq"), col("n"))).as("cents"))
-    val q = queryVecs(queries)
-    val scoredN = transform(col("cents"), ct => struct(
-      coalesce(VectorOps.cosineWithNorms(col("qv"), ct("centv"),
-        col("q_norm_sq"), ct("cent_norm_sq")),
-        lit(Double.NegativeInfinity)).as("sim"),
-      ct("centroid_id").as("centroid_id"),
-      ct("n").as("n")))
-    val emptyIds = typedLit(Seq.empty[Long])
-    val probes = q
-      .join(broadcast(centsN), lit(true))
-      .withColumn("__probe_ids", aggregate(
-        array_sort(scoredN, bySimDescIdAsc),
-        struct(lit(0L).as("cum"), emptyIds.as("ids")),
-        // target k+1, not k: a query that is itself an eligible corpus
-        // member is counted by the sidecar but excluded from scoring
-        // (cand_id <> query_id), so a bare-k prefix underfills by one
-        // exactly when the query's own row sits in the probed buckets
-        (acc, x) => when(acc("cum") >= k + 1, acc)
-          .otherwise(struct((acc("cum") + x("n")).as("cum"),
-            concat(acc("ids"), array(x("centroid_id"))).as("ids"))),
-        acc => acc("ids")))
-      .select(col("query_id"), explode(col("__probe_ids")).as("centroid_id"),
-        col("qv"), col("q_norm_sq"))
-    val scored = gated.join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("sim", VectorOps.cosineWithNorms(
-        col("qv"), col("cv"), col("q_norm_sq"), col("c_norm_sq")))
-      .select(col("query_id"), col("cand_id"), col("sim"))
-    Ranking.topPerGroup(scored, Seq(col("query_id")),
-        Seq(col("sim").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("sim"))
-      .orderBy(col("query_id"), col("sim").desc, col("cand_id"))
-  }
-
-  /** [[queryIvfPqIndexFiltered]] with the same adaptive widening over
-    * the compressed ADC scan; with escalation exhausted the output is
-    * exactly the filtered [[pqTopK]]. */
-  def queryIvfPqIndexFilteredAdaptive(spark: org.apache.spark.sql.SparkSession,
-                                      indexDir: String, queries: DataFrame,
-                                      k: Int, predicate: Column,
-                                      nProbes: Int = 4,
-                                      asOf: Option[Long] = None, m: Int = 8,
-                                      ks: Int = 16, dim: Int = 64,
-                                      residual: Boolean = false): DataFrame = {
-    val nCent = graft.sources.Versioned.rows(spark,
-      s"$indexDir/centroids", asOf, centFields).size
-    adaptiveWiden(queries, k, math.max(1, nProbes), nCent,
-      p => queryIvfPqIndexWhere(spark, indexDir, queries, k, p, asOf, m, ks,
-        dim, residual, Some(predicate)))
-  }
-
-  /** The escalation loop: run the probe at width p, return when every
-    * query has k rows or the scan is exhaustive; else double. The
-    * result stages through a lazy localCheckpoint so the underfill
-    * check and the returned rows share one computation. Underfill
-    * detection joins from the QUERY side (a query with ZERO eligible
-    * probed candidates has no result group at all — a result-side
-    * group-count would miss it and never escalate exactly where
-    * escalation matters most).
-    */
-  private def adaptiveWiden(queries: DataFrame, k: Int, startProbes: Int,
-                            nCent: Int,
-                            probe: Int => DataFrame): DataFrame = {
-    val qids = queries.select(col("id").as("query_id")).distinct()
-    var p = math.min(startProbes, math.max(1, nCent))
-    while (true) {
-      val r = probe(p).localCheckpoint(eager = false)
-      if (p >= nCent) return r
-      val underfilled = !qids
-        .join(r.groupBy(col("query_id")).agg(count(lit(1)).as("__n")),
-          Seq("query_id"), "left")
-        .filter(coalesce(col("__n"), lit(0L)) < k)
-        .isEmpty
-      if (!underfilled) return r
-      p = math.min(nCent, p * 2)
-    }
-    sys.error("unreachable")
-  }
-
   /** Build an IVF index whose buckets store SQ8 CODES instead of float
     * vectors — the two ANN scale levers combined: probes prune the scan
     * to nProbes/nCentroids of the corpus (IVF) and the pruned scan
@@ -1360,36 +1466,6 @@ object Similarity {
     vc
   }
 
-  /** Probe an SQ8 IVF index: probe selection in full precision against
-    * the stored centroids, queries quantized on the STORED scale, and
-    * the pruned bucket scan scored on the exact INTEGER code dot
-    * ([[graft.plans.IntDotProductExpr]] — bit-identical in any engine).
-    * Output (query_id, cand_id, qdot), ranked qdot DESC, id ASC.
-    * With nProbes = nCentroids this degenerates to exactly
-    * [[sq8TopK]]'s full quantized scan (spec-proven).
-    */
-  def queryIvfSq8Index(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                       queries: DataFrame, k: Int, nProbes: Int = 4,
-                       asOf: Option[Long] = None): DataFrame = {
-    val (cents, assigned) = readIndexPair(spark, indexDir, asOf)
-    val scale = cents.select(col("s").as("s")).limit(1)
-
-    val q = queryVecs(queries)
-    val probes = probesOf(q, indexCents(spark, indexDir, asOf), nProbes)
-      .select(col("query_id"), col("centroid_id"))
-    val qq = sq8Apply(q.select(col("query_id"), col("qv").as("v")), scale)
-      .select(col("query_id"), col("q").as("qq"))
-      .join(probes, Seq("query_id"))
-
-    val scored = assigned.join(broadcast(qq), Seq("centroid_id"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("qdot", VectorOps.dotInt(col("qq"), col("cq")))
-    Ranking.topPerGroup(scored, Seq(col("query_id")),
-        Seq(col("qdot").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("qdot"))
-      .orderBy(col("query_id"), col("qdot").desc, col("cand_id"))
-  }
-
   /** Global quantization scale of a corpus: max |component| across
     * every vector — ONE broadcast scalar. The scale is deliberately
     * global, not per-dimension: a shared scale multiplies every code
@@ -1409,10 +1485,13 @@ object Similarity {
     */
   private def sq8Apply(base: DataFrame, scale: DataFrame): DataFrame = base
     .crossJoin(broadcast(scale))
-    .withColumn("q", transform(col("v"), x =>
-      when(col("s") === 0.0, lit(0))
-        .otherwise(round(x / col("s") * 127).cast("int"))))
+    .withColumn("q", sq8Code(col("v"), col("s")))
     .drop("v", "s")
+
+  /** The [[sq8Apply]] codes of vector `v` on scale `s`. */
+  private def sq8Code(v: Column, s: Column): Column =
+    transform(v, x => when(s === 0.0, lit(0))
+      .otherwise(round(x / s * 127).cast("int")))
 
   // -------------------------------------------------------------------
   // Product quantization (PQ) — the third compression tier.
@@ -1562,12 +1641,11 @@ object Similarity {
     * ONCE per query (missing codes → null, never referenced: no vector
     * encodes to a dropped cell). Scoring a candidate is then m lookups.
     */
-  private def withPqLut(q: DataFrame, cb: DataFrame, m: Int, sub: Int,
+  private def withPqLut(q: DataFrame, cbs: Column, m: Int, sub: Int,
                         ks: Int): DataFrame =
-    pqGuard(q.join(broadcast(pqCbNested(cb)), lit(true)), m)
-      .withColumn("qsubs", transform(sequence(lit(0), lit(m - 1)), j =>
+    q.withColumn("qsubs", transform(sequence(lit(0), lit(m - 1)), j =>
         slice(col("qv"), j * sub + 1, lit(sub))))
-      .withColumn("lut", zip_with(col("qsubs"), col("cbs"), (qj, ent) =>
+      .withColumn("lut", zip_with(col("qsubs"), cbs, (qj, ent) =>
         transform(sequence(lit(0), lit(ks - 1)), i =>
           // get() (0-based) is null on an empty cell in BOTH ANSI
           // modes — element_at threw under ANSI when a Lloyd pass
@@ -1602,13 +1680,12 @@ object Similarity {
     val codes = withPqCodes(c, cb, m, sub).select(col("cand_id"), col("pqcode"))
     val q = queries.select(col("id").as("query_id"),
       VectorOps.toDoubleArray(col("vec")).as("qv"))
-    val qlut = withPqLut(q, cb, m, sub, ks).select(col("query_id"), col("lut"))
+    val qlut = withPqLut(pqGuard(q.join(broadcast(pqCbNested(cb)), lit(true)),
+      m), col("cbs"), m, sub, ks).select(col("query_id"), col("lut"))
     val scored = codes.join(broadcast(qlut), lit(true))
       .filter(col("cand_id") =!= col("query_id"))
       .withColumn("pqdot", pqScore(col("pqcode"), col("lut")))
-    Ranking.topPerGroup(scored, Seq(col("query_id")),
-        Seq(col("pqdot").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("pqdot"))
+    topBy(scored, "pqdot", k)
       .orderBy(col("query_id"), col("pqdot").desc, col("cand_id"))
   }
 
@@ -1628,7 +1705,7 @@ object Similarity {
     * cand_id-sharded directories (`vec_part = pmod(cand_id,
     * nVecParts)`, the forward-index discipline, modulus in a stamped
     * `vec_parts` sidecar) so the exact re-rank
-    * ([[queryIvfPqIndexReranked]]) DPP-fetches its |Q|·k·alpha
+    * (a [[Retrieval.Pq]] arm with `alpha`) DPP-fetches its |Q|·k·alpha
     * shortlist instead of scanning (or worse, recomputing) the
     * full-precision corpus per serving batch — at 100 TB the re-rank
     * fetch was the last corpus-sized read on the serving path, and with
@@ -1657,7 +1734,7 @@ object Similarity {
     // quantizer spends its ks cells on the WITHIN-bucket spread instead
     // of re-describing bucket placement — markedly better reconstruction
     // on clustered corpora at identical code bytes. Scoring adds the
-    // centroid base dot per probe (see queryIvfPqIndex). The flag is
+    // centroid base dot per probe (see bucketScorer). The flag is
     // persisted on every codebook row and guarded at query/append time.
     val encBase = if (residual) residualsOf(assigned, centroids) else c
     val cb = pqCodebook(encBase, m, sub, ks, pqLloydIters)
@@ -1787,160 +1864,6 @@ object Similarity {
     vc
   }
 
-  /** Probe a persisted IVF-PQ index: probe selection in full precision
-    * against the stored centroids, then an ADC scan of only the probed
-    * buckets' code rows. With nProbes = nCentroids and identical
-    * codebook params this degenerates to exactly [[pqTopK]]
-    * (spec-proven, and how the oracle checks it). Latest-version reads
-    * refuse an out-of-lockstep triple, same as [[queryIvfIndex]].
-    */
-  def queryIvfPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                      queries: DataFrame, k: Int, nProbes: Int = 4,
-                      asOf: Option[Long] = None, m: Int = 8, ks: Int = 16,
-                      dim: Int = 64, residual: Boolean = false): DataFrame =
-    queryIvfPqIndexWhere(spark, indexDir, queries, k, nProbes, asOf, m, ks,
-      dim, residual, None)
-
-  /** [[queryIvfPqIndex]] with the [[queryIvfIndexFiltered]] metadata
-    * gate riding the probed code-row scan — the predicate applies to
-    * the full ADC-scored stream BEFORE the compressed ranking, so the
-    * shortlist is drawn from eligible candidates only (no starvation),
-    * and a predicate column the index does not carry refuses loudly.
-    */
-  def queryIvfPqIndexFiltered(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, queries: DataFrame, k: Int,
-                              predicate: Column, nProbes: Int = 4,
-                              asOf: Option[Long] = None, m: Int = 8,
-                              ks: Int = 16, dim: Int = 64,
-                              residual: Boolean = false): DataFrame =
-    queryIvfPqIndexWhere(spark, indexDir, queries, k, nProbes, asOf, m, ks,
-      dim, residual, Some(predicate))
-
-  private def queryIvfPqIndexWhere(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String,
-                      queries: DataFrame, k: Int, nProbes: Int,
-                      asOf: Option[Long], m: Int, ks: Int,
-                      dim: Int, residual: Boolean,
-                      pred: Option[Column]): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val sub = dim / m
-    Retrieval.pinIndex(spark, indexDir, asOf): Unit
-    val centroids = graft.sources.Versioned.read(spark, s"$indexDir/centroids", asOf)
-    val cb = pqResGuard(
-      graft.sources.Versioned.read(spark, s"$indexDir/codebook", asOf), residual)
-    // takedown gate before scoring, as in [[readIndexPair]]
-    val assignedAll = Tombstones.gate(spark, indexDir,
-      graft.sources.Versioned.read(spark, s"$indexDir/assignment", asOf),
-      Retrieval.docKeyExpr(spark, indexDir, col("cand_id")))
-    pred.foreach(requirePredicateCols(indexDir, assignedAll, _))
-    val assigned = pred.map(assignedAll.filter).getOrElse(assignedAll)
-
-    val q = queryVecs(queries)
-    val probesRaw = probesOf(q, indexCents(spark, indexDir, asOf), nProbes)
-      .select(col("query_id"), col("centroid_id"), col("qv"))
-    // residual ADC: score(q, x) ≈ dot(q, c) + dot(q, x − c hat) — the
-    // centroid base dot is ONE extra term per (query, probe), computed
-    // against the broadcast centroid table; raw mode scores from the
-    // LUT alone.
-    val probes =
-      if (!residual) probesRaw.select(col("query_id"), col("centroid_id"))
-        .withColumn("cdot", lit(0.0))
-      else probesRaw.join(broadcast(centroids), Seq("centroid_id"))
-        .select(col("query_id"), col("centroid_id"),
-          VectorOps.dot(col("qv"), col("centv")).as("cdot"))
-    val qlut = withPqLut(q.select(col("query_id"), col("qv")), cb, m, sub, ks)
-      .select(col("query_id"), col("lut"))
-      .join(probes, Seq("query_id"))
-
-    val scored = assigned.join(broadcast(qlut), Seq("centroid_id"))
-      .filter(col("cand_id") =!= col("query_id"))
-      .withColumn("pqdot",
-        if (residual) col("cdot") + pqScore(col("pqcode"), col("lut"))
-        else pqScore(col("pqcode"), col("lut")))
-    Ranking.topPerGroup(scored, Seq(col("query_id")),
-        Seq(col("pqdot").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("pqdot"))
-      .orderBy(col("query_id"), col("pqdot").desc, col("cand_id"))
-  }
-
-  /** TWO-STAGE retrieval over a persisted IVF-PQ index — the standard
-    * serving composition (FAISS's refine / re-rank stage): stage 1
-    * shortlists `k·alpha` candidates per query with the compressed ADC
-    * scan ([[queryIvfPqIndex]] — probe-pruned, code-width bytes); stage
-    * 2 re-scores ONLY the shortlist with the exact full-precision dot
-    * and keeps the top k. This closes PQ's reconstruction-error recall
-    * gap at probe-bounded cost: the exact math touches |Q|·k·alpha
-    * rows, never the corpus — the full-precision vectors come from the
-    * index's OWN `vectors/` table ([[buildIvfPqIndex]] persists them
-    * cand_id-sharded at build time), so the fetch is a broadcast
-    * equality join the shortlist DPP-prunes to its shard directories:
-    * re-rank BYTES are bounded by the probed doc set, independent of
-    * corpus size, and the vectors are the indexed snapshot by
-    * construction (no caller-supplied corpus to drift stale). The
-    * shortlist stages through a constraint-free seam so the shard-range
-    * guard survives composition (SPARK-39748). `alpha` is the recall
-    * dial (how far past k the compressed ranking must place a true
-    * neighbor to be recovered). Output: (query_id, cand_id, dot) —
-    * exact dots, so ties and order are engine-exact.
-    */
-  def queryIvfPqIndexReranked(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, queries: DataFrame,
-                              k: Int, alpha: Int = 4,
-                              nProbes: Int = 4, asOf: Option[Long] = None,
-                              m: Int = 8, ks: Int = 16, dim: Int = 64,
-                              residual: Boolean = false): DataFrame =
-    pqRerankedTop(spark, indexDir, queries, k, alpha, nProbes,
-      asOf, m, ks, dim, residual, None)
-      .orderBy(col("query_id"), col("dot").desc, col("cand_id"))
-
-  /** [[queryIvfPqIndexReranked]] with the metadata gate on the ADC
-    * shortlist stage ([[queryIvfPqIndexFiltered]]): the k·alpha
-    * shortlist is drawn from ELIGIBLE candidates only, so the exact
-    * re-rank's top-k can never starve on gated neighbors — and the
-    * re-rank fetch needs no second gate (its input is already a subset
-    * of the filtered stream).
-    */
-  def queryIvfPqIndexRerankedFiltered(spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, queries: DataFrame,
-                              k: Int, predicate: Column, alpha: Int = 4,
-                              nProbes: Int = 4, asOf: Option[Long] = None,
-                              m: Int = 8, ks: Int = 16, dim: Int = 64,
-                              residual: Boolean = false): DataFrame =
-    pqRerankedTop(spark, indexDir, queries, k, alpha, nProbes,
-      asOf, m, ks, dim, residual, Some(predicate))
-      .orderBy(col("query_id"), col("dot").desc, col("cand_id"))
-
-  /** The re-ranked top-k per query of [[queryIvfPqIndexReranked]] (with a
-    * predicate, [[queryIvfPqIndexRerankedFiltered]]), unsorted — the
-    * fusion-arm form. */
-  private[operators] def pqRerankedTop(
-                              spark: org.apache.spark.sql.SparkSession,
-                              indexDir: String, queries: DataFrame,
-                              k: Int, alpha: Int,
-                              nProbes: Int, asOf: Option[Long],
-                              m: Int, ks: Int, dim: Int,
-                              residual: Boolean,
-                              pred: Option[Column]): DataFrame = {
-    require(alpha >= 1, s"alpha must be >= 1, got $alpha")
-    require(graft.sources.Versioned.exists(spark, s"$indexDir/vectors"),
-      s"$indexDir has no vectors table — the exact re-rank serves the " +
-        "shortlist from the index's own full-precision snapshot; rebuild " +
-        "this (pre-vectors) index with buildIvfPqIndex")
-    val shortlist = Retrieval.constraintFreeStage(
-      queryIvfPqIndexWhere(spark, indexDir, queries, k * alpha,
-          nProbes, asOf, m, ks, dim, residual, pred)
-        .select(col("query_id"), col("cand_id")))
-    val q = queries.select(col("id").as("query_id"),
-      VectorOps.toDoubleArray(col("vec")).as("qv"))
-    val scored = vectorsFor(spark, indexDir, shortlist, asOf)
-      .join(broadcast(shortlist), Seq("cand_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("dot", VectorOps.dot(col("qv"), col("cv")))
-    Ranking.topPerGroup(scored, Seq(col("query_id")),
-        Seq(col("dot").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("dot"))
-  }
-
   /** Full-precision rows for a bounded candidate set — the
     * [[Retrieval.forwardFor]] discipline on the vectors table: the
     * set's distinct cand_ids broadcast ONTO the partitioned scan, and
@@ -1992,9 +1915,7 @@ object Similarity {
     val scored = cq.join(broadcast(qq), lit(true))
       .filter(col("cand_id") =!= col("query_id"))
       .withColumn("qdot", VectorOps.dotInt(col("qq"), col("cq")))
-    Ranking.topPerGroup(scored, Seq(col("query_id")),
-        Seq(col("qdot").desc, col("cand_id").asc), k)
-      .select(col("query_id"), col("cand_id"), col("qdot"))
+    topBy(scored, "qdot", k)
       .orderBy(col("query_id"), col("qdot").desc, col("cand_id"))
   }
 }

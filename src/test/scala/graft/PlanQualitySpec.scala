@@ -41,17 +41,17 @@ class PlanQualitySpec extends SparkSpec {
     * aggregate q53/q69), so the "loop" is O(n·k) with tiny k — the
     * standard scale shape for scan-scoring, not an accident. Persisted-
     * index probes are NOT listed: their per-version constants (BM25
-    * stats, tombstone ids, IVF centroids) are plan literals, so a
-    * nested-loop join there means a constant went back to a per-request
-    * broadcast.
+    * stats, tombstone ids, IVF centroids, the SQ8 scale, the PQ
+    * codebook, gate counts) are plan literals, so a nested-loop join
+    * there means a constant went back to a per-request broadcast.
     */
   private val intentionalNestedLoop = Set(
     "q31_cosine_topk", "q133_hard_negatives",
     "q37_ann_ivf", "q98_ann_ivf_refined",
-    "q109_ann_sq8", "q118_ann_ivf_sq8",
-    // PQ: broadcast codebook (m·ks tiny rows) + broadcast per-query LUTs
-    "q144_pq_topk", "q145_ann_ivf_pq", "q149_ann_ivf_pq_residual",
-    "q158_ann_ivf_pq_rerank",
+    "q109_ann_sq8",
+    // inline PQ: broadcast codebook (m·ks tiny rows) + broadcast
+    // per-query LUTs
+    "q144_pq_topk",
     "q53_scalar_subquery", "q69_tfidf", "q107_tpch_q22",
     // 1-row aggregate build sides (vocabulary size V / corpus token totals)
     "q128_lm_score", "q129_dsir_select", "q136_signal_sheet",
@@ -87,14 +87,7 @@ class PlanQualitySpec extends SparkSpec {
     "q178_bpe_byte_roundtrip",
     // model-token pack: q169's fused arms + the BPE encode's broadcast
     // merge array at span grain
-    "q181_context_model_pack",
-    // counted filtered probe: the broadcast centroid+counts array
-    // scoring (the prefix fold over per-centroid eligible counts)
-    "q195_ann_filtered_counted",
-    // maxsim: the PQ shortlist arm's broadcast codebook/LUT + the
-    // broadcast shortlist-doc-id semi probe; the token-pair join is
-    // all equality
-    "q196_chunk_maxsim")
+    "q181_context_model_pack")
 
   test("PLAN_AUDIT.md has a row for every SparkEntry query") {
     // The audit artifact is regenerated by `tools/run.sh graft.PlanAudit`;

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
-import graft.operators.Retrieval.{Hybrid, Ivf, MaxSim, Pq}
+import graft.operators.Retrieval.{Hybrid, Ivf, Lexical, MaxSim, Pq, Sq8}
 import graft.sources.Versioned
 
 /** BM25 semantics on hand-computed fixtures + the persisted inverted
@@ -458,24 +458,24 @@ class RetrievalSpec extends SparkSpec {
     // survivor's score never moves (df/idf stay index-global — a
     // sub-corpus reweighting would score the same doc differently
     // under every gate)
-    val got = rows(Retrieval.queryBm25IndexFiltered(spark, dir, terms, 50,
-      predicate = col("lang") === "en"))
+    val got = rows(Retrieval.lexical(spark, Lexical(dir,
+      predicate = Some(col("lang") === "en")), terms, 50))
     assert(got == unfiltered.filter(r => en(r._1)))
     // the gate applies BEFORE ranking: k=1 returns the best EN doc even
     // though the global top doc is gated (no starvation)
-    val top1 = rows(Retrieval.queryBm25IndexFiltered(spark, dir, terms, 1,
-      predicate = col("lang") === "en"))
+    val top1 = rows(Retrieval.lexical(spark, Lexical(dir,
+      predicate = Some(col("lang") === "en")), terms, 1))
     assert(top1 == unfiltered.filter(r => en(r._1)).take(1))
     // the many-query path agrees with the single-query path
     val qdf = Seq((7L, terms)).toDF("query_id", "terms")
-    assert(Retrieval.queryBm25IndexManyFiltered(spark, dir, qdf, 50,
-        predicate = col("lang") === "en")
+    assert(Retrieval.lexical(spark, Lexical(dir,
+      predicate = Some(col("lang") === "en")), qdf, 50)
       .select("doc_id", "n_terms", "score")
       .as[(Long, Long, Double)].collect().toSeq == got)
     // un-baked predicate columns refuse loudly
     val err = intercept[IllegalArgumentException] {
-      Retrieval.queryBm25IndexFiltered(spark, dir, terms, 5,
-        predicate = col("license") === "mit")
+      Retrieval.lexical(spark, Lexical(dir,
+        predicate = Some(col("license") === "mit")), terms, 5)
     }
     assert(err.getMessage.contains("metaCols"))
     // appends must supply the baked columns (refused before commit)...
@@ -492,8 +492,8 @@ class RetrievalSpec extends SparkSpec {
       Seq((9L, "spark encore", "en"), (10L, "spark aussi", "fr"))
         .toDF("doc_id", "text", "lang"),
       col("doc_id"), col("text"), dir): Unit
-    val after = rows(Retrieval.queryBm25IndexFiltered(spark, dir, terms, 50,
-      predicate = col("lang") === "en"))
+    val after = rows(Retrieval.lexical(spark, Lexical(dir,
+      predicate = Some(col("lang") === "en")), terms, 50))
     assert(after.map(_._1).contains(9L) && !after.map(_._1).contains(10L))
     assert(after == rows(Retrieval.queryBm25Index(spark, dir, terms, 50))
       .filter(r => Set(1L, 3L, 9L)(r._1)))
@@ -548,10 +548,10 @@ class RetrievalSpec extends SparkSpec {
         .as[(Long, Long, Long, Double)].collect().toSeq
     // identical planted spans in an EN and an FR doc: the gate keeps
     // only the EN doc's spans, at their unfiltered scores
-    val unf = spans(Retrieval.queryChunkBm25Index(spark, bmDir, terms, 20))
+    val unf = spans(Retrieval.lexical(spark, Lexical(bmDir), terms, 20))
     assert(unf.map(_._1).toSet == Set(5L, 6L))
-    val flt = spans(Retrieval.queryChunkBm25IndexFiltered(spark, bmDir,
-      terms, 20, predicate = col("lang") === "en"))
+    val flt = spans(Retrieval.lexical(spark, Lexical(bmDir,
+      predicate = Some(col("lang") === "en")), terms, 20))
     assert(flt == unf.filter(_._1 == 5L),
       "gated spans must be exactly the EN doc's, at unfiltered scores")
     // chunk appends inherit the doc gate per chunk (batch must carry it)
@@ -567,8 +567,8 @@ class RetrievalSpec extends SparkSpec {
           (8L, "zebra quark xylem aussi", "fr"))
         .toDF("doc_id", "text", "lang"),
       col("doc_id"), col("text"), bmDir): Unit
-    val flt2 = spans(Retrieval.queryChunkBm25IndexFiltered(spark, bmDir,
-      terms, 20, predicate = col("lang") === "en")).map(_._1).toSet
+    val flt2 = spans(Retrieval.lexical(spark, Lexical(bmDir,
+      predicate = Some(col("lang") === "en")), terms, 20)).map(_._1).toSet
     assert(flt2 == Set(5L, 7L), s"expected EN docs only, got $flt2")
     // the ANN arm appends inherit the gate too
     Retrieval.appendToChunkIvfIndex(
@@ -604,10 +604,9 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.buildChunkIvfPqIndex(docs, col("doc_id"), col("text"), pqDir,
       size = 16, stride = 8, dim = 16, nCentroids = 4, m = 4,
       metaCols = Seq("lang")): Unit
-    val pq = Similarity.queryIvfPqIndexRerankedFiltered(spark, pqDir,
-      queries.select(col("query_id").as("id"), col("vec")), k = 5,
-      predicate = col("lang") === "en", alpha = 50, nProbes = 4,
-      m = 4, dim = 16)
+    val pq = Similarity.probe(spark, Pq(pqDir, Some(50), nProbes = 4, m = 4,
+      dim = 16), queries.select(col("query_id").as("id"), col("vec")), 5,
+      Similarity.Where(col("lang") === "en"))
     assert(pq.select(shiftright(col("cand_id"), 32).as("d"))
       .as[Long].collect().toSet.subsetOf(Set(2L, 4L, 5L)),
       "PQ filtered re-rank must return only EN documents' chunks")
@@ -700,7 +699,7 @@ class RetrievalSpec extends SparkSpec {
     // nProbes = nCentroids and alpha past the corpus: the semantic arm
     // degenerates to the exact dot ranking (the q158-proven identity)
     val fused = Retrieval.hybrid(spark,
-      Hybrid(bmDir, Pq(pqDir, alpha = 4, nProbes = 4), kEach = 8), queries,
+      Hybrid(bmDir, Pq(pqDir, alpha = Some(4), nProbes = 4), kEach = 8), queries,
       k = 5).collect()
     val top = fused.head
     assert(top.getAs[Long]("doc_id") == 7L)
@@ -737,7 +736,7 @@ class RetrievalSpec extends SparkSpec {
     // re-rank makes the semantic arm the exact dot ranking (served from
     // the index's own persisted full-precision vectors)
     val fused = Retrieval.hybrid(spark, Hybrid(bmDir,
-        Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8, dim = 16),
+        Pq(pqDir, alpha = Some(8), nProbes = 4, m = 4, ks = 8, dim = 16),
         kEach = 10), queries, k = 5)
       .collect()
     val top = fused.head
@@ -766,7 +765,7 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.appendToChunkIvfPqIndex(batch, col("doc_id"), col("text"),
       pqDir, dim = 16, m = 4): Unit
     val fused2 = Retrieval.hybrid(spark, Hybrid(bmDir,
-        Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8, dim = 16),
+        Pq(pqDir, alpha = Some(8), nProbes = 4, m = 4, ks = 8, dim = 16),
         kEach = 10), queries, k = 5)
       .collect()
     assert(fused2.exists(r => r.getAs[Long]("doc_id") == 9L &&
@@ -802,6 +801,61 @@ class RetrievalSpec extends SparkSpec {
       }
       assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
     }
+  }
+
+  test("probe requests refuse what they cannot plan: an un-baked " +
+      "predicate column, QL with a predicate, Counted with asOf, a maxsim " +
+      "arm over a non-PQ arm, an SQ8 arm over a float index") {
+    // one lexical and one float IVF index, both built without metaCols
+    val bm = java.nio.file.Files.createTempDirectory("prref-bm").toString
+    val iv = java.nio.file.Files.createTempDirectory("prref-iv").toString
+    Retrieval.buildBm25Index(corpus.toDF("doc_id", "text"), col("doc_id"),
+      col("text"), bm)
+    graft.operators.Similarity.buildIvfIndex(plantedVecs, iv, nCentroids = 2)
+    val gate = col("lang") === "en"
+    val queries = Seq((1L, Seq("spark"), Seq(1.0, 0.0, 0.0, 0.0)))
+      .toDF("query_id", "terms", "vec")
+    val vecs = queries.select(col("query_id").as("id"), col("vec"))
+    import graft.operators.Similarity
+    val cases: Seq[(String, () => Any, String)] = Seq(
+      ("lexical, un-baked predicate", () => Retrieval.lexical(spark,
+        Lexical(bm, predicate = Some(gate)), Seq("spark"), 5),
+        "cannot resolve the probe predicate"),
+      ("lexical batch, un-baked predicate", () => Retrieval.lexical(spark,
+        Lexical(bm, predicate = Some(gate)), queries.select("query_id",
+          "terms"), 5), "cannot resolve the probe predicate"),
+      ("lexical, QL with a predicate", () => Retrieval.lexical(spark,
+        Lexical(bm, ql = Some(Retrieval.Mu), predicate = Some(gate)),
+        Seq("spark"), 5), "cannot gate"),
+      ("probe, un-baked predicate", () => Similarity.probe(spark, Ivf(iv),
+        vecs, 5, Similarity.Where(gate)), "cannot resolve the probe predicate"),
+      ("probe, Counted with asOf", () => Similarity.probe(spark,
+        Ivf(iv, asOf = Some(0L)), vecs, 5, Similarity.Counted("lang", "en")),
+        "cannot pin asOf"),
+      ("maxsim over a float arm", () => Retrieval.maxSimRerankChunks(spark,
+        Ivf(iv), MaxSim(Seq((1L, "a")).toDF("doc_id", "text"), col("doc_id"),
+          col("text")), queries, 5), "Pq arm"),
+      ("SQ8 arm over a float index", () => Similarity.probe(spark, Sq8(iv),
+        vecs, 5), "not an SQ8 index"))
+    for ((name, plan, msg) <- cases) {
+      val e = intercept[IllegalArgumentException](plan())
+      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("only the frozen presets are public single-arm query* entry " +
+      "points: a new probe is a Lexical or arm request value") {
+    val presets = Set("queryBm25Index", "queryBm25IndexMany",
+      "queryBm25IndexFaceted", "queryIvfIndex")
+    val Def = """^\s*def\s+(query\w*)""".r
+    val found = for {
+      f <- Seq("Retrieval", "Similarity")
+      line <- scala.io.Source.fromFile(
+        s"src/main/scala/graft/operators/$f.scala", "UTF-8").getLines()
+      m <- Def.findFirstMatchIn(line)
+    } yield s"$f.${m.group(1)}"
+    assert(found.map(_.split('.')(1)).toSet == presets,
+      s"public query* functions: ${found.mkString(", ")}")
   }
 
   test("assembleContext: overlap + adjacency merge to one span, the " +
@@ -859,7 +913,7 @@ class RetrievalSpec extends SparkSpec {
         .setScale(10, BigDecimal.RoundingMode.HALF_UP)
     }.sum.toDouble
 
-    val got = Retrieval.queryQlIndex(spark, dir, terms, 10, mu = mu)
+    val got = Retrieval.lexical(spark, Lexical(dir, ql = Some(mu)), terms, 10)
       .as[(Long, Long, Double)].collect().toSeq
     // candidates = docs matching ≥1 term: 1, 2 (doc 3 has neither,
     // doc 4 has neither)
@@ -879,7 +933,8 @@ class RetrievalSpec extends SparkSpec {
         col(score).cast("double").as("score"))
     val fused = Retrieval.rrfFuse(Seq(
       arm(Retrieval.queryBm25Index(spark, dir, Seq("spark"), 10), "score"),
-      arm(Retrieval.queryQlIndex(spark, dir, Seq("spark"), 10), "score"),
+      arm(Retrieval.lexical(spark, Lexical(dir, ql = Some(Retrieval.Mu)),
+        Seq("spark"), 10), "score"),
       arm(Retrieval.phraseSearch(spark, dir, Seq("spark", "shuffle"), 10),
         "n_occur")), k = 5)
     val byDoc = fused.select("doc_id", "n_rankers")
@@ -894,10 +949,11 @@ class RetrievalSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("qlmany").toString
     Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir): Unit
     val terms = Seq("spark", "rare")
-    val single = Retrieval.queryQlIndex(spark, dir, terms, 10, mu = 100.0)
+    val single = Retrieval.lexical(spark, Lexical(dir, ql = Some(100.0)), terms,
+      10)
       .as[(Long, Long, Double)].collect().toSeq
-    val many = Retrieval.queryQlIndexMany(spark, dir,
-        Seq((7L, terms)).toDF("query_id", "terms"), 10, mu = 100.0)
+    val many = Retrieval.lexical(spark, Lexical(dir, ql = Some(100.0)),
+      Seq((7L, terms)).toDF("query_id", "terms"), 10)
       .select("doc_id", "n_terms", "score")
       .as[(Long, Long, Double)].collect().toSeq
     assert(many == single, "the multi-query path must score identically")
@@ -911,8 +967,9 @@ class RetrievalSpec extends SparkSpec {
       .toDF("doc_id", "text")
     Retrieval.buildChunkBm25Index(longDocs, col("doc_id"), col("text"),
       cdir, size = 16, stride = 8): Unit
-    val chunkQl = Retrieval.queryChunkQlIndex(spark, cdir,
-      Seq("zebra", "quark"), 5).as[(Long, Long, Long, Double)].collect()
+    val chunkQl = Retrieval.lexical(spark, Lexical(cdir,
+      ql = Some(Retrieval.Mu)), Seq("zebra", "quark"), 5)
+      .as[(Long, Long, Long, Double)].collect()
     assert(chunkQl.nonEmpty && chunkQl.head._1 == 1L &&
       Seq(9L, 17L).contains(chunkQl.head._2),
       s"QL at chunk grain must attribute the planted span: ${chunkQl.toSeq}")
@@ -922,7 +979,8 @@ class RetrievalSpec extends SparkSpec {
       df.select(lit(0L).as("query_id"), col("doc_id"),
         col(score).cast("double").as("score"))
     val a = arm(Retrieval.queryBm25Index(spark, dir, Seq("spark"), 10), "score")
-    val b = arm(Retrieval.queryQlIndex(spark, dir, Seq("spark"), 10), "score")
+    val b = arm(Retrieval.lexical(spark, Lexical(dir, ql = Some(Retrieval.Mu)),
+      Seq("spark"), 10), "score")
     val c = arm(Retrieval.phraseSearch(spark, dir, Seq("spark", "shuffle"), 10),
       "n_occur")
     def rows(arms: Seq[org.apache.spark.sql.DataFrame]) =
@@ -1053,7 +1111,7 @@ class RetrievalSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("rm3ch").toString
     Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), dir,
       size = 8, stride = 8): Unit
-    val plain = Retrieval.queryChunkBm25Index(spark, dir, Seq("zebra"), 10)
+    val plain = Retrieval.lexical(spark, Lexical(dir), Seq("zebra"), 10)
       .select("doc_id").as[Long].collect().toSet
     assert(plain == Set(1L, 2L), "only literal matches before expansion")
     val got = Retrieval.rm3ExpandChunks(spark, dir, Seq("zebra"), k = 10,
@@ -1353,11 +1411,20 @@ class RetrievalSpec extends SparkSpec {
     val iv = java.nio.file.Files.createTempDirectory("graft-budget-iv").toString
     Retrieval.buildBm25Index(plantedDocs, col("doc_id"), col("text"), bm)
     graft.operators.Similarity.buildIvfIndex(plantedVecs, iv, nCentroids = 2)
-    graft.operators.Tombstones.addAll(Seq(5L, 6L).toDF("doc_id"), Seq(bm, iv))
+    // the compressed arms: the SQ8 scale and the PQ codebook are
+    // per-version constants too
+    val sq = java.nio.file.Files.createTempDirectory("graft-budget-sq").toString
+    val pq = java.nio.file.Files.createTempDirectory("graft-budget-pq").toString
+    graft.operators.Similarity.buildIvfSq8Index(plantedVecs, sq, nCentroids = 2)
+    graft.operators.Similarity.buildIvfPqIndex(plantedVecs, pq, nCentroids = 2,
+      m = 2, ks = 4, dim = 4)
+    graft.operators.Tombstones.addAll(Seq(5L, 6L).toDF("doc_id"),
+      Seq(bm, iv, sq, pq))
     assert(Versioned.declaredLayout(spark, s"$bm/postings").startsWith("bucket:"))
     val queries = Seq((100L, Seq("alpha", "beta"), Seq(1.0, 0.0, 0.0, 0.0)),
         (101L, Seq("filler"), Seq(0.0, 1.0, 0.0, 0.0)))
       .toDF("query_id", "terms", "vec")
+    val vecs = queries.select(col("query_id").as("id"), col("vec"))
     // pinned counts under AQE (the session default); each is a host-
     // independent property of the plan. Reading the stats, tombstone or
     // centroid table per request, deriving df by an aggregate joined
@@ -1372,7 +1439,13 @@ class RetrievalSpec extends SparkSpec {
       ("queryBm25IndexMany", 6, () => Retrieval.queryBm25IndexMany(spark, bm,
         queries.select("query_id", "terms"), 3)),
       ("hybridSearch", 8, () => Retrieval.hybridSearch(spark, bm, iv, queries,
-        k = 2, kEach = 3, nProbes = 2)))
+        k = 2, kEach = 3, nProbes = 2)),
+      ("probe Sq8", 6, () => graft.operators.Similarity.probe(spark,
+        Sq8(sq, nProbes = 2), vecs, 3)),
+      ("probe Pq", 6, () => graft.operators.Similarity.probe(spark,
+        Pq(pq, None, nProbes = 2, m = 2, ks = 4, dim = 4), vecs, 3)),
+      ("probe Pq re-ranked", 11, () => graft.operators.Similarity.probe(
+        spark, Pq(pq, Some(2), nProbes = 2, m = 2, ks = 4, dim = 4), vecs, 3)))
     val got = requests.map { case (name, _, req) =>
       req().collect(): Unit // warm: per-version constants read once
       val (rows, jobs) = JobCount(spark)(req().collect())
@@ -1437,7 +1510,7 @@ class RetrievalSpec extends SparkSpec {
       idx, size = 16, stride = 8) == 0L)
     assert(Retrieval.chunkGrid(spark, idx) == (16, 8))
     def probe(asOf: Option[Long] = None) =
-      Retrieval.queryChunkBm25Index(spark, idx, terms, k = 6, asOf)
+      Retrieval.lexical(spark, Lexical(idx, asOf = asOf), terms, 6)
         .as[(Long, Long, Long, Double)].collect().toSeq
     val inline = Retrieval.chunkBm25TopK(docs, col("doc_id"), col("text"),
         terms, k = 6, size = 16, stride = 8)
@@ -1519,7 +1592,7 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.appendToChunkBm25Index(
       Seq((80L, "spark appended here")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir): Unit
-    def probe() = Retrieval.queryChunkBm25Index(spark, dir, Seq("spark"), 10)
+    def probe() = Retrieval.lexical(spark, Lexical(dir), Seq("spark"), 10)
       .collect().map(_.toSeq).toSeq
     val before = probe()
     // crash inside compactChunkBm25Index after BOTH table compacts but
@@ -1631,7 +1704,8 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(capped, Seq("the")).isEmpty)
     assert(rows(capped, Seq("the", "rare1")) == rows(capped, Seq("rare1")))
     // QL treats the stopped term as OOV (cf = 0 drops it) — no log(0)
-    assert(Retrieval.queryQlIndex(spark, capped, Seq("the", "rare1"), 10)
+    assert(Retrieval.lexical(spark, Lexical(capped, ql = Some(Retrieval.Mu)),
+      Seq("the", "rare1"), 10)
       .count() > 0)
     // appends filter with the frozen set: the capped index never grows
     // a 'the' posting, and surviving-term scores track the uncapped twin

@@ -1,6 +1,7 @@
 package graft
 
 import graft.app.Scheduler
+import graft.operators.Retrieval.Lexical
 
 /** The Airflow-DAG semantics (schedule, retries, catchup=false, run
   * history) with injected clock/sleeper — no wall time anywhere.
@@ -470,7 +471,7 @@ class SchedulerSpec extends SparkSpec {
       s"$clean/chunks", size = 32, stride = 16): Unit
     Retrieval.appendToChunkBm25Index(dayDocs(1), col("doc_id"), col("text"),
       s"$clean/chunks"): Unit
-    def probe(dir: String) = Retrieval.queryChunkBm25Index(spark, dir,
+    def probe(dir: String) = Retrieval.lexical(spark, Lexical(dir),
       Seq("dup", "spark", "hash"), 10)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(probe(s"$work/chunks") == probe(s"$clean/chunks"))
@@ -605,10 +606,10 @@ class SchedulerSpec extends SparkSpec {
     val freshC = java.nio.file.Files.createTempDirectory("graft-daily-c").toString
     graft.operators.Retrieval.buildChunkBm25Index(union, col("doc_id"),
       col("text"), freshC, size = 32, stride = 16)
-    assert(rows(graft.operators.Retrieval.queryChunkBm25Index(
-        spark, s"$work/chunks", Seq("dup"), k = 5)) ==
-      rows(graft.operators.Retrieval.queryChunkBm25Index(
-        spark, freshC, Seq("dup"), k = 5)))
+    assert(rows(graft.operators.Retrieval.lexical(spark,
+      Lexical(s"$work/chunks"), Seq("dup"), 5)) ==
+      rows(graft.operators.Retrieval.lexical(spark, Lexical(freshC), Seq("dup"),
+        5)))
     // the COMPRESSED chunk pair: the maintained PQ index encodes day-1/2
     // appends on the FROZEN day-0 codebook while a fresh union build
     // trains on the whole union — under exhaustive probes and a
@@ -627,7 +628,7 @@ class SchedulerSpec extends SparkSpec {
         Seq("query_id"))
       def fusedPq(chunks: String, pq: String) =
         graft.operators.Retrieval.hybrid(spark, graft.operators.Retrieval
-          .Hybrid(chunks, graft.operators.Retrieval.Pq(pq, alpha = 200,
+          .Hybrid(chunks, graft.operators.Retrieval.Pq(pq, alpha = Some(200),
             nProbes = 16)), pqQueries, k = 10)
           .collect().map(_.toSeq).toSeq
       assert(fusedPq(s"$work/chunks", s"$work/chunk_pq") ==
@@ -733,10 +734,10 @@ class SchedulerSpec extends SparkSpec {
     val freshC = java.nio.file.Files.createTempDirectory("gtd-c").toString
     graft.operators.Retrieval.buildChunkBm25Index(survivors, col("doc_id"),
       col("text"), freshC, size = 32, stride = 16)
-    assert(rows(graft.operators.Retrieval.queryChunkBm25Index(
-        spark, s"$work/chunks", Seq("dup"), k = 10)) ==
-      rows(graft.operators.Retrieval.queryChunkBm25Index(
-        spark, freshC, Seq("dup"), k = 10)))
+    assert(rows(graft.operators.Retrieval.lexical(spark,
+      Lexical(s"$work/chunks"), Seq("dup"), 10)) ==
+      rows(graft.operators.Retrieval.lexical(spark, Lexical(freshC), Seq("dup"),
+        10)))
 
     // ANN: exhaustive probe ≡ brute force over the surviving vectors
     val queries = vecs.filter(col("id") < 2)
@@ -840,7 +841,7 @@ class SchedulerSpec extends SparkSpec {
       s"$freshC/chunks", size = 32, stride = 16,
       stopTokens = heavyChunkU, stopMaxDfRatio = Some(0.5)): Unit
     def chunkQ(dir: String, terms: Seq[String]) =
-      Retrieval.queryChunkBm25Index(spark, dir, terms, k = 10)
+      Retrieval.lexical(spark, Lexical(dir), terms, 10)
         .collect().map(_.toSeq).toSeq
     assert(chunkQ(s"$work/chunks", Seq("dup")) ==
       chunkQ(s"$freshC/chunks", Seq("dup")),
@@ -1035,10 +1036,10 @@ class SchedulerSpec extends SparkSpec {
     val freshC = java.nio.file.Files.createTempDirectory("graft-cc-c").toString
     graft.operators.Retrieval.buildChunkBm25Index(union, col("doc_id"),
       col("text"), freshC, size = 32, stride = 16): Unit
-    assert(rows(graft.operators.Retrieval.queryChunkBm25Index(spark,
-        s"$work/chunks", Seq("dup", "spark"), k = 10)) ==
-      rows(graft.operators.Retrieval.queryChunkBm25Index(spark, freshC,
-        Seq("dup", "spark"), k = 10)),
+    assert(rows(graft.operators.Retrieval.lexical(spark,
+      Lexical(s"$work/chunks"), Seq("dup", "spark"), 10)) ==
+      rows(graft.operators.Retrieval.lexical(spark, Lexical(freshC),
+        Seq("dup", "spark"), 10)),
       "the chunk index must heal its grid stamp and land day 2's chunks")
     // and the compact stage heals the same shape AT ITS OWN BOUNDARY: a
     // resumed bm25_compact repairs the pair even when appendDebt is 0

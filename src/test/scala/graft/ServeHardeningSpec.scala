@@ -4,6 +4,7 @@ import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Retrieval, Similarity, Tombstones}
+import graft.operators.Retrieval.{Ivf, Lexical, Pq}
 import graft.sources.Versioned
 
 /** Round-15 serving hardening: facet counts riding the probe slice,
@@ -52,8 +53,8 @@ class ServeHardeningSpec extends SparkSpec {
     val (ranked, facets) = Retrieval.queryBm25IndexFaceted(spark, dir,
       terms, k = 10, facetCols = Seq("lang"), predicate = Some(pred))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
-    assert(rows(ranked) == rows(Retrieval.queryBm25IndexFiltered(
-      spark, dir, terms, k = 10, predicate = pred)))
+    assert(rows(ranked) == rows(Retrieval.lexical(spark, Lexical(dir,
+      predicate = Some(pred)), terms, 10)))
     assert(facetMap(facets) == bruteCounts(Some(pred)))
 
     // un-baked facet / predicate columns refuse loudly
@@ -105,13 +106,13 @@ class ServeHardeningSpec extends SparkSpec {
     // query from cluster 0 — its nearest probes are cluster-0 buckets,
     // while every rare=true candidate sits in cluster 2
     val q = corpus.filter(col("id") === 1L).select("id", "vec")
-    val fixed = Similarity.queryIvfIndexFiltered(spark, dir, q, k = 3,
-      predicate = col("rare"), nProbes = 1)
+    val fixed = Similarity.probe(spark, Ivf(dir, nProbes = 1), q, 3,
+      Similarity.Where(col("rare")))
     assert(fixed.count() < 3, "the planted gate must underfill the fixed probe")
-    val adaptive = Similarity.queryIvfIndexFilteredAdaptive(spark, dir, q,
-      k = 3, predicate = col("rare"), nProbes = 1)
-    val exhaustive = Similarity.queryIvfIndexFiltered(spark, dir, q, k = 3,
-      predicate = col("rare"), nProbes = 8)
+    val adaptive = Similarity.probe(spark, Ivf(dir, nProbes = 1), q, 3,
+      Similarity.Widening(col("rare")))
+    val exhaustive = Similarity.probe(spark, Ivf(dir, nProbes = 8), q, 3,
+      Similarity.Where(col("rare")))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     assert(rows(adaptive) == rows(exhaustive),
       "escalation must recover the exhaustive-filtered answer")
@@ -119,12 +120,12 @@ class ServeHardeningSpec extends SparkSpec {
 
     // unselective gate: fills at the starting width — rows identical to
     // the fixed-probe filtered plan (q184's contract is untouched)
-    val loose = Similarity.queryIvfIndexFilteredAdaptive(spark, dir,
-      corpus.filter(col("id") < 2).select("id", "vec"), k = 3,
-      predicate = !col("rare"), nProbes = 4)
-    val fixedLoose = Similarity.queryIvfIndexFiltered(spark, dir,
-      corpus.filter(col("id") < 2).select("id", "vec"), k = 3,
-      predicate = !col("rare"), nProbes = 4)
+    val loose = Similarity.probe(spark, Ivf(dir, nProbes = 4),
+      corpus.filter(col("id") < 2).select("id", "vec"), 3,
+      Similarity.Widening(!col("rare")))
+    val fixedLoose = Similarity.probe(spark, Ivf(dir, nProbes = 4),
+      corpus.filter(col("id") < 2).select("id", "vec"), 3,
+      Similarity.Where(!col("rare")))
     assert(rows(loose) == rows(fixedLoose))
   }
 
@@ -145,10 +146,10 @@ class ServeHardeningSpec extends SparkSpec {
     // one-shot prefix walks out exactly far enough and returns the
     // exhaustive-filtered answer — the adaptive path's recall without
     // its geometric re-scans
-    val counted = Similarity.queryIvfIndexFilteredCounted(spark, dir, q,
-      k = 3, gateCol = "rare", gateVal = true)
-    val exhaustive = Similarity.queryIvfIndexFiltered(spark, dir, q, k = 3,
-      predicate = col("rare"), nProbes = 8)
+    val counted = Similarity.probe(spark, Ivf(dir), q, 3,
+      Similarity.Counted("rare", true))
+    val exhaustive = Similarity.probe(spark, Ivf(dir, nProbes = 8), q, 3,
+      Similarity.Where(col("rare")))
     assert(rows(counted) == rows(exhaustive),
       "counted must reach the exhaustive-filtered answer in one round")
 
@@ -156,10 +157,10 @@ class ServeHardeningSpec extends SparkSpec {
     // eligible rows, so the one-shot width is ONE probe — rows
     // identical to the fixed nProbes=1 filtered plan
     val qs = corpus.filter(col("id") < 2).select("id", "vec")
-    val cnt1 = Similarity.queryIvfIndexFilteredCounted(spark, dir, qs,
-      k = 3, gateCol = "rare", gateVal = false)
-    val fix1 = Similarity.queryIvfIndexFiltered(spark, dir, qs, k = 3,
-      predicate = !col("rare"), nProbes = 1)
+    val cnt1 = Similarity.probe(spark, Ivf(dir), qs, 3,
+      Similarity.Counted("rare", false))
+    val fix1 = Similarity.probe(spark, Ivf(dir, nProbes = 1), qs, 3,
+      Similarity.Where(!col("rare")))
     assert(rows(cnt1) == rows(fix1),
       "an unselective gate must probe the minimal per-query width")
 
@@ -179,20 +180,20 @@ class ServeHardeningSpec extends SparkSpec {
     val dir2 = tmp("cnt2")
     Similarity.buildIvfIndex(corpus, dir2, nCentroids = 8, lloydIters = 2,
       metaCols = Seq("rare"))
-    assert(rows(Similarity.queryIvfIndexFilteredCounted(spark, dir2, q,
-        k = 3, gateCol = "rare", gateVal = true)) ==
-      rows(Similarity.queryIvfIndexFilteredAdaptive(spark, dir2, q, k = 3,
-        predicate = col("rare"))),
+    assert(rows(Similarity.probe(spark, Ivf(dir2), q, 3,
+      Similarity.Counted("rare", true))) ==
+      rows(Similarity.probe(spark, Ivf(dir2), q, 3,
+        Similarity.Widening(col("rare")))),
       "no sidecar must degrade to the adaptive path, not fail")
 
     // tombstones landed AFTER the refresh: counts overcount, the
     // underfill backstop re-routes to the adaptive path and survivors
     // still fill from whatever remains
     Tombstones.add(Seq(24L, 25L).toDF("doc_id"), dir) // two of the rare
-    val afterTomb = Similarity.queryIvfIndexFilteredCounted(spark, dir, q,
-      k = 3, gateCol = "rare", gateVal = true)
-    val exhTomb = Similarity.queryIvfIndexFiltered(spark, dir, q, k = 3,
-      predicate = col("rare"), nProbes = 8)
+    val afterTomb = Similarity.probe(spark, Ivf(dir), q, 3,
+      Similarity.Counted("rare", true))
+    val exhTomb = Similarity.probe(spark, Ivf(dir, nProbes = 8), q, 3,
+      Similarity.Where(col("rare")))
     assert(rows(afterTomb) == rows(exhTomb),
       "tombstone drift must fall back to the widening loop's answer")
     // and the compaction merge re-derives the sidecar tombstone-free
@@ -212,20 +213,21 @@ class ServeHardeningSpec extends SparkSpec {
     Similarity.buildIvfPqIndex(corpus, dir, nCentroids = 8, m = 4, ks = 8,
       lloydIters = 2, dim = 8, metaCols = Seq("rare"))
     val q = corpus.filter(col("id") === 1L).select("id", "vec")
-    val fixed = Similarity.queryIvfPqIndexFiltered(spark, dir, q, k = 3,
-      predicate = col("rare"), nProbes = 1, m = 4, ks = 8, dim = 8)
+    val fixed = Similarity.probe(spark, Pq(dir, None, nProbes = 1, m = 4,
+      ks = 8, dim = 8), q, 3, Similarity.Where(col("rare")))
     assert(fixed.count() < 3)
     // the widening sizes itself from the centroid memo the probe already
-    // read (a plan literal), never a count job over the centroids table:
-    // the jobs left are the escalation rounds' and the final collect's
+    // read (a plan literal), never a count job over the centroids table,
+    // and the codebook is a plan literal too: the jobs left are the
+    // escalation rounds' and the final collect's
     val (adaptive, jobs) = JobCount(spark)(
-      Similarity.queryIvfPqIndexFilteredAdaptive(spark, dir, q, k = 3,
-          predicate = col("rare"), nProbes = 1, m = 4, ks = 8, dim = 8)
+      Similarity.probe(spark, Pq(dir, None, nProbes = 1, m = 4, ks = 8,
+        dim = 8), q, 3, Similarity.Widening(col("rare")))
         .collect().map(_.toSeq).toSeq)
-    val exhaustive = Similarity.queryIvfPqIndexFiltered(spark, dir, q, k = 3,
-      predicate = col("rare"), nProbes = 8, m = 4, ks = 8, dim = 8)
+    val exhaustive = Similarity.probe(spark, Pq(dir, None, nProbes = 8, m = 4,
+      ks = 8, dim = 8), q, 3, Similarity.Where(col("rare")))
     assert(adaptive == exhaustive.collect().map(_.toSeq).toSeq)
-    assert(jobs == 36, s"jobs per adaptive PQ request: $jobs")
+    assert(jobs == 18, s"jobs per adaptive PQ request: $jobs")
   }
 
   // --------------------------------------------- retrain-cadence rebuild
@@ -310,17 +312,17 @@ class ServeHardeningSpec extends SparkSpec {
         s"rebuilt $t diverged from the fresh union build")
     }
     val q = shifted.filter(col("id") < 1002L).select("id", "vec")
-    val got = Similarity.queryIvfPqIndexReranked(spark, dir, q, k = 5,
-      alpha = 100, nProbes = 6, m = 4, ks = 8, dim = 8, residual = true)
+    val got = Similarity.probe(spark, Pq(dir, Some(100), nProbes = 6, m = 4,
+      ks = 8, dim = 8, residual = true), q, 5)
       .collect().map(_.toSeq).toSeq
-    val want = Similarity.queryIvfPqIndexReranked(spark, fresh, q, k = 5,
-      alpha = 100, nProbes = 6, m = 4, ks = 8, dim = 8, residual = true)
+    val want = Similarity.probe(spark, Pq(fresh, Some(100), nProbes = 6, m = 4,
+      ks = 8, dim = 8, residual = true), q, 5)
       .collect().map(_.toSeq).toSeq
     assert(got == want, "rebuilt and fresh indexes must serve identically")
     // the filtered probe still resolves its baked gate post-rebuild
-    assert(Similarity.queryIvfPqIndexFiltered(spark, dir, q, k = 3,
-      predicate = col("lang") === "en", nProbes = 6, m = 4, ks = 8,
-      dim = 8, residual = true).count() > 0)
+    assert(Similarity.probe(spark, Pq(dir, None, nProbes = 6, m = 4, ks = 8,
+      dim = 8, residual = true), q, 3,
+      Similarity.Where(col("lang") === "en")).count() > 0)
   }
 
   test("rebuildChunkIvfIndex re-stamps the grid and appends keep working; " +

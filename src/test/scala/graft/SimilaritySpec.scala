@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.operators.{Ranking, Similarity}
+import graft.operators.Retrieval.{Ivf, Pq, Sq8}
 
 /** Similarity search: exact brute-force top-k correctness on known
   * geometry, LSH candidate soundness (scores are exact cosines), vector
@@ -361,8 +362,8 @@ class SimilaritySpec extends SparkSpec {
     Similarity.buildIvfPqIndex(initial, idx3, nCentroids = 8): Unit
     Similarity.buildIvfPqIndex(initial, idx4, nCentroids = 8): Unit
     Similarity.appendToIvfPqIndex(batch, idx4): Unit // the uncrashed twin
-    def pqRows(dir: String) = Similarity
-      .queryIvfPqIndex(spark, dir, q, k = 5, nProbes = 8)
+    def pqRows(dir: String) =
+      Similarity.probe(spark, Pq(dir, None, nProbes = 8), q, 5)
       .as[(Long, Long, Double)].collect().toSeq
     // simulate the crash: the batch's vectors land (same rows a real
     // append stages), nothing else commits
@@ -375,7 +376,7 @@ class SimilaritySpec extends SparkSpec {
         .withColumn("vec_part", pmod(col("cand_id"), lit(nShards.toLong))),
       s"$idx3/vectors", "vec_part"): Unit
     val e3 = intercept[IllegalArgumentException] {
-      Similarity.queryIvfPqIndex(spark, idx3, q, k = 5)
+      Similarity.probe(spark, Pq(idx3, None), q, 5)
     }
     assert(e3.getMessage.contains("repairIvfIndex"))
     assert(Similarity.repairIvfIndex(spark, idx3) == 1L)
@@ -386,9 +387,9 @@ class SimilaritySpec extends SparkSpec {
       graft.sources.Versioned.latestVersion(spark, s"$idx3/$t"))
       .distinct.size == 1)
     // the re-rank path works off the completed index too
-    assert(Similarity.queryIvfPqIndexReranked(spark, idx3, q, k = 5)
+    assert(Similarity.probe(spark, Pq(idx3), q, 5)
         .as[(Long, Long, Double)].collect().toSeq ==
-      Similarity.queryIvfPqIndexReranked(spark, idx4, q, k = 5)
+      Similarity.probe(spark, Pq(idx4), q, 5)
         .as[(Long, Long, Double)].collect().toSeq)
 
     // a crashed PQ COMPACTION (vectors overwritten with identical
@@ -499,15 +500,15 @@ class SimilaritySpec extends SparkSpec {
 
     // probing every bucket = the full quantized brute-force scan,
     // bit-for-bit (integer scores, so exact equality is meaningful)
-    val exhaustive = rows(Similarity.queryIvfSq8Index(spark, idx, q, k = 5, nProbes = 16))
+    val exhaustive = rows(Similarity.probe(spark, Sq8(idx, nProbes = 16), q, 5))
     assert(exhaustive == rows(Similarity.sq8TopK(q, e, 5)),
       "exhaustive SQ8-index probe must equal sq8TopK exactly")
 
     // pruned probes surface a subset; every surfaced score must be the
     // same integer code dot the full scan computes for that pair
-    val full = rows(Similarity.queryIvfSq8Index(spark, idx, q, k = 1000, nProbes = 16))
+    val full = rows(Similarity.probe(spark, Sq8(idx, nProbes = 16), q, 1000))
       .map { case (qid, cid, d) => (qid, cid) -> d }.toMap
-    val pruned = rows(Similarity.queryIvfSq8Index(spark, idx, q, k = 5, nProbes = 4))
+    val pruned = rows(Similarity.probe(spark, Sq8(idx, nProbes = 4), q, 5))
     assert(pruned.nonEmpty)
     pruned.foreach { case (qid, cid, d) =>
       assert(full((qid, cid)) == d, s"pruned score for ($qid,$cid) diverged")
@@ -529,21 +530,21 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "cand_id", "qdot")
         .as[(Long, Long, Long)].collect().toSeq
 
-    val before = rows(Similarity.queryIvfSq8Index(spark, idx, q, k = 5, nProbes = 8))
+    val before = rows(Similarity.probe(spark, Sq8(idx, nProbes = 8), q, 5))
     assert(Similarity.appendToIvfIndex(batch, idx) == 1L)
 
     // exhaustive probe of the appended index ≡ the full quantized scan
     // over the union, bit-for-bit: the append stored int CODES on the
     // frozen scale, not raw floats under a replaced schema
-    val after = rows(Similarity.queryIvfSq8Index(spark, idx, q, k = 5, nProbes = 8))
+    val after = rows(Similarity.probe(spark, Sq8(idx, nProbes = 8), q, 5))
     assert(after == rows(Similarity.sq8TopK(q, e.unionByName(batch), 5)),
       "appended SQ8 index must score like the quantized scan of the union corpus")
     assert(after.exists { case (_, cid, _) => cid >= 100000L },
       "appended vectors must be probe-reachable")
 
     // time travel: version 0 still answers with the pre-append corpus
-    assert(rows(Similarity.queryIvfSq8Index(spark, idx, q, k = 5, nProbes = 8,
-      asOf = Some(0L))) == before)
+    assert(rows(Similarity.probe(spark, Sq8(idx, nProbes = 8, asOf = Some(0L)),
+      q, 5)) == before)
   }
 
   test("PQ is EXACT when every candidate is a codebook seed (corpus ≤ ks)") {
@@ -626,15 +627,17 @@ class SimilaritySpec extends SparkSpec {
 
     // probing every bucket = the full ADC scan over the same codebook —
     // identical fold order, so exact double equality is meaningful
-    val exhaustive = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 5, nProbes = 16))
+    val exhaustive = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 16),
+      q, 5))
     assert(exhaustive == rows(Similarity.pqTopK(q, e, 5)),
       "exhaustive IVF-PQ probe must equal pqTopK exactly")
 
     // pruned probes surface a subset; every surfaced score must be the
     // same ADC value the full scan computes for that pair
-    val full = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 1000, nProbes = 16))
+    val full = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 16), q,
+      1000))
       .map { case (qid, cid, d) => (qid, cid) -> d }.toMap
-    val pruned = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 5, nProbes = 4))
+    val pruned = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 4), q, 5))
     assert(pruned.nonEmpty)
     pruned.foreach { case (qid, cid, d) =>
       assert(full((qid, cid)) == d, s"pruned ADC score for ($qid,$cid) diverged")
@@ -656,10 +659,11 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "cand_id", "pqdot")
         .as[(Long, Long, Double)].collect().toSeq
 
-    val before = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 5, nProbes = 8))
+    val before = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8), q, 5))
     assert(Similarity.appendToIvfPqIndex(batch, idx) == 1L)
 
-    val all = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 100000, nProbes = 8))
+    val all = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8), q,
+      100000))
       .map { case (qid, cid, d) => (qid, cid) -> d }.toMap
     assert(all.keys.exists { case (_, cid) => cid >= 100000L },
       "appended vectors must be probe-reachable")
@@ -670,8 +674,8 @@ class SimilaritySpec extends SparkSpec {
       }
 
     // time travel: version 0 still answers with the pre-append corpus
-    assert(rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 5, nProbes = 8,
-      asOf = Some(0L))) == before)
+    assert(rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8,
+      asOf = Some(0L)), q, 5)) == before)
 
     // the float-index append path refuses a PQ index loudly
     val ex = intercept[IllegalArgumentException] {
@@ -712,8 +716,8 @@ class SimilaritySpec extends SparkSpec {
       a.iterator.zip(b.iterator).map { case (x, y) => x * y }.sum
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpqr_exact").toString
     Similarity.buildIvfPqIndex(e, idx, nCentroids = 4, residual = true): Unit
-    val got = Similarity.queryIvfPqIndex(spark, idx, e.filter(col("id") < 3),
-      k = 15, nProbes = 4, residual = true).collect()
+    val got = Similarity.probe(spark, Pq(idx, None, nProbes = 4,
+      residual = true), e.filter(col("id") < 3), 15).collect()
     assert(got.length == 3 * 15)
     got.foreach { r =>
       val exact = dot(vecs(r.getAs[Long]("query_id")), vecs(r.getAs[Long]("cand_id")))
@@ -742,8 +746,8 @@ class SimilaritySpec extends SparkSpec {
         .createTempDirectory(s"graft_ivfpqr_$residual").toString
       Similarity.buildIvfPqIndex(e, idx, nCentroids = 24, ks = 16,
         lloydIters = 1, pqLloydIters = 1, residual = residual): Unit
-      val got = Similarity.queryIvfPqIndex(spark, idx,
-          e.filter(col("id") < 5), k = 100000, nProbes = 24, residual = residual)
+      val got = Similarity.probe(spark, Pq(idx, None, nProbes = 24,
+        residual = residual), e.filter(col("id") < 5), 100000)
         .collect()
       assert(got.length == 5 * 119)
       got.map { r =>
@@ -769,8 +773,8 @@ class SimilaritySpec extends SparkSpec {
       pqLloydIters = 1, residual = true): Unit
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
-      val got = Similarity.queryIvfPqIndex(spark, idx, e.filter(col("id") < 2),
-        k = 5, nProbes = 8, ks = 64, residual = true).collect()
+      val got = Similarity.probe(spark, Pq(idx, None, nProbes = 8, ks = 64,
+        residual = true), e.filter(col("id") < 2), 5).collect()
       assert(got.length == 2 * 5)
     } finally spark.conf.set("spark.sql.ansi.enabled", "false")
   }
@@ -786,8 +790,8 @@ class SimilaritySpec extends SparkSpec {
     // probing without the flag would drop the centroid base term —
     // silently wrong by ~one centroid dot per pair
     val exQ = intercept[Exception] {
-      Similarity.queryIvfPqIndex(spark, idx, e.filter(col("id") < 2),
-        k = 3, nProbes = 4).collect()
+      Similarity.probe(spark, Pq(idx, None, nProbes = 4),
+        e.filter(col("id") < 2), 3).collect()
     }
     assert(causes(exQ).contains("residual flag"))
     // appending raw-encoded codes into a residual assignment would
@@ -814,8 +818,8 @@ class SimilaritySpec extends SparkSpec {
     // alpha ≥ |corpus|/k), stage 2 IS the exact dot ranking — the
     // compressed stage can no longer lose a true neighbor
     val n = e.count().toInt
-    val full = Similarity.queryIvfPqIndexReranked(spark, idx, q, k = 5,
-      alpha = n / 5 + 1, nProbes = 16, ks = 64)
+    val full = Similarity.probe(spark, Pq(idx, Some(n / 5 + 1), nProbes = 16,
+      ks = 64), q, 5)
     val exactDot = {
       val qv = q.select(col("id").as("query_id"),
         VectorOps.toDoubleArray(col("vec")).as("qv"))
@@ -836,10 +840,10 @@ class SimilaritySpec extends SparkSpec {
     // true neighbor the plain ADC top-k already had (set-dominance is
     // guaranteed only vs the truth: measure recall, not containment)
     val truth = pairs(exactDot)
-    val plain = pairs(Similarity.queryIvfPqIndex(spark, idx, q, k = 5,
-      nProbes = 16, ks = 64))
-    val rr = pairs(Similarity.queryIvfPqIndexReranked(spark, idx, q,
-      k = 5, alpha = 8, nProbes = 16, ks = 64))
+    val plain = pairs(Similarity.probe(spark, Pq(idx, None, nProbes = 16,
+      ks = 64), q, 5))
+    val rr = pairs(Similarity.probe(spark, Pq(idx, Some(8), nProbes = 16,
+      ks = 64), q, 5))
     val recallPlain = (truth & plain).size.toDouble / truth.size
     val recallRr = (truth & rr).size.toDouble / truth.size
     assert(recallRr >= recallPlain,
@@ -863,7 +867,7 @@ class SimilaritySpec extends SparkSpec {
     def fmt(df: org.apache.spark.sql.DataFrame) = df.queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))
-    val rr = Similarity.queryIvfPqIndexReranked(spark, idx, q, k = 5)
+    val rr = Similarity.probe(spark, Pq(idx), q, 5)
     assert(fmt(rr).contains("dynamicpruningexpression"),
       "the re-rank vector fetch must DPP-prune shard directories")
     val rows0 = rr.as[(Long, Long, Double)].collect().toSeq
@@ -875,12 +879,12 @@ class SimilaritySpec extends SparkSpec {
       "UTF-8").split(" ") match { case Array(n, v) => s"$n ${v.toLong + 7}" }
     java.nio.file.Files.write(sc.toPath, stale.getBytes("UTF-8")): Unit
     new java.io.File(idx, ".vec_parts.crc").delete(): Unit
-    val rr2 = Similarity.queryIvfPqIndexReranked(spark, idx, q, k = 5)
+    val rr2 = Similarity.probe(spark, Pq(idx), q, 5)
     assert(rr2.as[(Long, Long, Double)].collect().toSeq == rows0)
     assert(!fmt(rr2).contains("dynamicpruning"))
     // repair data-verifies the recorded modulus and restores the stamp
     Similarity.repairIvfIndex(spark, idx): Unit
-    val rr3 = Similarity.queryIvfPqIndexReranked(spark, idx, q, k = 5)
+    val rr3 = Similarity.probe(spark, Pq(idx), q, 5)
     assert(rr3.as[(Long, Long, Double)].collect().toSeq == rows0)
     assert(fmt(rr3).contains("dynamicpruningexpression"),
       "a repaired sidecar must restore shard pruning")
@@ -893,8 +897,8 @@ class SimilaritySpec extends SparkSpec {
     assert(versions() == Seq(1L, 1L, 1L, 1L))
     Similarity.compactIvfIndex(spark, idx): Unit
     assert(versions() == Seq(2L, 2L, 2L, 2L))
-    assert(Similarity.queryIvfPqIndexReranked(spark, idx, q, k = 5,
-        asOf = Some(0L)).as[(Long, Long, Double)].collect().toSeq == rows0,
+    assert(Similarity.probe(spark, Pq(idx, asOf = Some(0L)), q, 5)
+        .as[(Long, Long, Double)].collect().toSeq == rows0,
       "asOf must pin the pre-append snapshot across the re-shard")
   }
 
@@ -908,7 +912,7 @@ class SimilaritySpec extends SparkSpec {
     val q = e.filter(col("id") < 2)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSeq
-    val modern = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 3, nProbes = 4))
+    val modern = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 4), q, 3))
     // rewrite the index as a legacy dir: same tables, codebook without
     // the 'res' column (all three advance so versions stay lockstep)
     import graft.sources.Versioned
@@ -920,11 +924,11 @@ class SimilaritySpec extends SparkSpec {
       .drop("res").localCheckpoint(), s"$idx/codebook"): Unit
     Versioned.overwrite(Versioned.read(spark, s"$idx/assignment")
       .localCheckpoint(), s"$idx/assignment"): Unit
-    assert(rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 3, nProbes = 4))
+    assert(rows(Similarity.probe(spark, Pq(idx, None, nProbes = 4), q, 3))
       == modern, "legacy codebooks were always raw-encoded — same scores")
     val ex = intercept[IllegalArgumentException] {
-      Similarity.queryIvfPqIndex(spark, idx, q, k = 3, nProbes = 4,
-        residual = true).collect()
+      Similarity.probe(spark, Pq(idx, None, nProbes = 4, residual = true), q,
+        3).collect()
     }
     assert(ex.getMessage.contains("predates residual"))
   }
@@ -939,11 +943,11 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "pqdot")
         .as[(Long, Long, Double)].collect().toSeq
-    val before = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 5,
-      nProbes = 8, residual = true))
+    val before = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8,
+      residual = true), q, 5))
     assert(Similarity.appendToIvfPqIndex(batch, idx, residual = true) == 1L)
-    val all = rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 100000,
-        nProbes = 8, residual = true))
+    val all = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8,
+      residual = true), q, 100000))
       .map { case (qid, cid, d) => (qid, cid) -> d }.toMap
     assert(all.keys.exists { case (_, cid) => cid >= 100000L },
       "appended vectors must be probe-reachable")
@@ -953,8 +957,8 @@ class SimilaritySpec extends SparkSpec {
           s"twin ($qid,$cid): appended copy must score identically " +
             "(same frozen centroid, same frozen residual codebook)")
       }
-    assert(rows(Similarity.queryIvfPqIndex(spark, idx, q, k = 5, nProbes = 8,
-      residual = true, asOf = Some(0L))) == before)
+    assert(rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8,
+      residual = true, asOf = Some(0L)), q, 5)) == before)
   }
 
   test("filtered IVF probe (metadata gate baked at build): exhaustive " +
@@ -977,13 +981,13 @@ class SimilaritySpec extends SparkSpec {
     // corpus — the filter applied to the full scored set BEFORE ranking
     // (a gated post-filter would starve queries whose neighbors are
     // gated; this is the hardNegativesIndexed contract generalized)
-    assert(pairs(Similarity.queryIvfIndexFiltered(spark, idx, q, k = 5,
-      predicate = col("label") === 3, nProbes = 8)) == wantExact)
+    assert(pairs(Similarity.probe(spark, Ivf(idx, nProbes = 8), q, 5,
+      Similarity.Where(col("label") === 3))) == wantExact)
     // pruned probes: recall measured against the FILTERED truth (the
     // unfiltered truth is unreachable by construction — its gated
     // neighbors no probe count could return)
-    val got2 = pairs(Similarity.queryIvfIndexFiltered(spark, idx, q, k = 5,
-      predicate = col("label") === 3, nProbes = 2))
+    val got2 = pairs(Similarity.probe(spark, Ivf(idx, nProbes = 2), q, 5,
+      Similarity.Where(col("label") === 3)))
     val hit = got2.map(r => (r._1, r._2)).toSet
       .intersect(wantExact.map(r => (r._1, r._2)).toSet)
     assert(hit.size * 2 >= wantExact.size,
@@ -992,16 +996,16 @@ class SimilaritySpec extends SparkSpec {
     // silently scoring unfiltered would be a wrong answer, not a
     // degradation
     val err = intercept[IllegalArgumentException] {
-      Similarity.queryIvfIndexFiltered(spark, idx, q, k = 5,
-        predicate = col("license") === "mit")
+      Similarity.probe(spark, Ivf(idx), q, 5,
+        Similarity.Where(col("license") === "mit"))
     }
     assert(err.getMessage.contains("metaCols"))
     // appends supply the baked columns and the contract survives
     val batch = e.filter(col("id") < 20)
       .select((col("id") + 50000L).as("id"), col("vec"), col("label"))
     Similarity.appendToIvfIndex(batch, idx): Unit
-    assert(pairs(Similarity.queryIvfIndexFiltered(spark, idx, q, k = 5,
-      predicate = col("label") === 3, nProbes = 8)) ==
+    assert(pairs(Similarity.probe(spark, Ivf(idx, nProbes = 8), q, 5,
+      Similarity.Where(col("label") === 3))) ==
       filteredBrute(e.unionByName(batch)))
     // ...and a batch MISSING a baked column refuses before any commit
     val vBefore = graft.sources.Versioned.latestVersion(spark, s"$idx/assignment")
@@ -1034,14 +1038,14 @@ class SimilaritySpec extends SparkSpec {
     // over the SHARED index equals the exact path over a filtered-corpus
     // twin index — both reduce to the exact dot top-k over the eligible
     // set (codebooks differ; the covered shortlist makes that moot)
-    val got = rows(Similarity.queryIvfPqIndexRerankedFiltered(spark, all, q,
-      k = 5, predicate = col("label") === 3, alpha = 200, nProbes = 8))
-    assert(got == rows(Similarity.queryIvfPqIndexReranked(spark, fl, q,
-      k = 5, alpha = 200, nProbes = 8)))
+    val got = rows(Similarity.probe(spark, Pq(all, Some(200), nProbes = 8), q,
+      5, Similarity.Where(col("label") === 3)))
+    assert(got == rows(Similarity.probe(spark, Pq(fl, Some(200), nProbes = 8),
+      q, 5)))
     // the PQ probe refuses un-baked predicate columns too
     val err = intercept[IllegalArgumentException] {
-      Similarity.queryIvfPqIndexFiltered(spark, all, q, k = 5,
-        predicate = col("license") === "mit")
+      Similarity.probe(spark, Pq(all, None), q, 5,
+        Similarity.Where(col("license") === "mit"))
     }
     assert(err.getMessage.contains("metaCols"))
     // crashed append on the meta index: the batch's vectors land (WITH
@@ -1066,10 +1070,10 @@ class SimilaritySpec extends SparkSpec {
     assert(Versioned.read(spark, s"$all/assignment")
       .filter(col("cand_id") >= 50000L && col("label").isNull).isEmpty,
       "the repaired assignment rows must carry the batch's metadata")
-    assert(rows(Similarity.queryIvfPqIndexRerankedFiltered(spark, all, q,
-      k = 5, predicate = col("label") === 3, alpha = 200, nProbes = 8)) ==
-      rows(Similarity.queryIvfPqIndexRerankedFiltered(spark, twin, q,
-        k = 5, predicate = col("label") === 3, alpha = 200, nProbes = 8)),
+    assert(rows(Similarity.probe(spark, Pq(all, Some(200), nProbes = 8), q, 5,
+      Similarity.Where(col("label") === 3))) ==
+      rows(Similarity.probe(spark, Pq(twin, Some(200), nProbes = 8), q, 5,
+        Similarity.Where(col("label") === 3))),
       "repair must complete the meta append — filtered serving identical " +
         "to the uncrashed twin")
   }

@@ -888,7 +888,7 @@ class StreamingSpec extends SparkSpec {
       mem.addData(qvecs.filter(q => ids.contains(q._1)).toIndexedSeq: _*)
       StreamJobs.hybridStream(
         mem.toDF().toDF("query_id", "terms", "vec"),
-        Hybrid(bmDir, Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8,
+        Hybrid(bmDir, Pq(pqDir, alpha = Some(8), nProbes = 4, m = 4, ks = 8,
           dim = 16), kEach = 10),
         out, s"$work/pqckpt$n", k = 5)
         .awaitTermination()
@@ -901,7 +901,7 @@ class StreamingSpec extends SparkSpec {
     deliver(Seq(900L), s"$work/pqout1")
     deliver(Seq(901L), s"$work/pqout1")
     val batch = Retrieval.hybrid(spark,
-      Hybrid(bmDir, Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8,
+      Hybrid(bmDir, Pq(pqDir, alpha = Some(8), nProbes = 4, m = 4, ks = 8,
         dim = 16), kEach = 10),
       withVecs(queries), k = 5)
     val expect = rows(batch)
@@ -924,7 +924,7 @@ class StreamingSpec extends SparkSpec {
       .exists(r => r._2 == 6L && r._3 == 1L),
       "post-append stream must surface the appended doc's span")
     assert(rows(Retrieval.hybrid(spark,
-        Hybrid(bmDir, Pq(pqDir, alpha = 8, nProbes = 4, m = 4, ks = 8,
+        Hybrid(bmDir, Pq(pqDir, alpha = Some(8), nProbes = 4, m = 4, ks = 8,
           dim = 16, asOf = Some(0L)), bm25AsOf = Some(0L), kEach = 10),
         withVecs(queries.take(1)), k = 5)) ==
       expect.filter(_._1 == 900L),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Corpus, Retrieval, Similarity, Tombstones}
+import graft.operators.Retrieval.{Lexical, Pq}
 import graft.sources.Versioned
 
 /** Document deletion/takedown across the persisted serving indexes:
@@ -70,8 +71,10 @@ class TombstoneSpec extends SparkSpec {
     assert(st.getLong(0) == stF.getLong(0) && st.getLong(1) == stF.getLong(1))
     // and QL / phrase / RM3 / filtered consumers agree post-merge
     def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).toSeq
-    assert(rowsOf(Retrieval.queryQlIndex(spark, dir, terms, 10)) ==
-           rowsOf(Retrieval.queryQlIndex(spark, freshDir, terms, 10)))
+    assert(rowsOf(Retrieval.lexical(spark, Lexical(dir,
+      ql = Some(Retrieval.Mu)), terms, 10)) ==
+           rowsOf(Retrieval.lexical(spark, Lexical(freshDir,
+             ql = Some(Retrieval.Mu)), terms, 10)))
     assert(rowsOf(Retrieval.phraseSearch(spark, dir, Seq("spark", "join"), 10)) ==
            rowsOf(Retrieval.phraseSearch(spark, freshDir, Seq("spark", "join"), 10)))
     assert(rowsOf(Retrieval.rm3Expand(spark, dir, Seq("rare"), 10, kFb = 2, nExp = 2)) ==
@@ -123,10 +126,12 @@ class TombstoneSpec extends SparkSpec {
     val many = Retrieval.queryBm25IndexMany(spark, dir, qdf, k = 10)
       .select("doc_id").as[Long].collect().toSet
     assert((many & dead.toSet).isEmpty)
-    val ql = Retrieval.queryQlIndex(spark, dir, terms, 10)
+    val ql = Retrieval.lexical(spark, Lexical(dir, ql = Some(Retrieval.Mu)),
+      terms, 10)
       .select("doc_id").as[Long].collect().toSet
     assert((ql & dead.toSet).isEmpty)
-    val qlMany = Retrieval.queryQlIndexMany(spark, dir, qdf, 10)
+    val qlMany = Retrieval.lexical(spark, Lexical(dir, ql = Some(Retrieval.Mu)),
+      qdf, 10)
       .select("doc_id").as[Long].collect().toSet
     assert((qlMany & dead.toSet).isEmpty)
     val ph = Retrieval.phraseSearch(spark, dir, Seq("rare", "spark"), 10)
@@ -141,7 +146,7 @@ class TombstoneSpec extends SparkSpec {
     Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), dir,
       size = 3, stride = 2)
     Tombstones.add(Seq(3L).toDF("doc_id"), dir)
-    val gated = Retrieval.queryChunkBm25Index(spark, dir, Seq("join"), 20)
+    val gated = Retrieval.lexical(spark, Lexical(dir), Seq("join"), 20)
       .select("doc_id").as[Long].collect().toSet
     assert(!gated.contains(3L))
     Retrieval.compactChunkBm25Index(spark, dir)
@@ -149,7 +154,7 @@ class TombstoneSpec extends SparkSpec {
     Retrieval.buildChunkBm25Index(docs.filter(col("doc_id") =!= 3L),
       col("doc_id"), col("text"), freshDir, size = 3, stride = 2)
     def rowsOf(d: String) =
-      Retrieval.queryChunkBm25Index(spark, d, Seq("join", "spark"), 20)
+      Retrieval.lexical(spark, Lexical(d), Seq("join", "spark"), 20)
         .collect().map(_.toSeq).toSeq
     assert(rowsOf(dir) == rowsOf(freshDir))
     // appends still work after the merge (grid re-stamped)
@@ -220,11 +225,11 @@ class TombstoneSpec extends SparkSpec {
     Similarity.buildIvfPqIndex(e, dir, nCentroids = 6, m = 4, ks = 8,
       dim = 16, metaCols = Seq("lang"))
     Tombstones.add(deadV.toDF("doc_id"), dir)
-    val adc = Similarity.queryIvfPqIndex(spark, dir, q, k = 10, nProbes = 6,
-      m = 4, ks = 8, dim = 16)
+    val adc = Similarity.probe(spark, Pq(dir, None, nProbes = 6, m = 4, ks = 8,
+      dim = 16), q, 10)
     assert((adc.select("cand_id").as[Long].collect().toSet & deadV.toSet).isEmpty)
-    val rr = Similarity.queryIvfPqIndexReranked(spark, dir, q, k = 10,
-      alpha = 2, nProbes = 6, m = 4, ks = 8, dim = 16)
+    val rr = Similarity.probe(spark, Pq(dir, Some(2), nProbes = 6, m = 4,
+      ks = 8, dim = 16), q, 10)
     assert((rr.select("cand_id").as[Long].collect().toSet & deadV.toSet).isEmpty)
 
     // compaction drops every table and keeps the vectors' meta column
@@ -238,8 +243,8 @@ class TombstoneSpec extends SparkSpec {
     // filtered probe still resolves its gate post-compaction, and a
     // meta-carrying append still lands (both broke under the old
     // (cand_id, cv)-only vectors rewrite)
-    val f = Similarity.queryIvfPqIndexFiltered(spark, dir, q, k = 5,
-      predicate = col("lang") === "en", nProbes = 6, m = 4, ks = 8, dim = 16)
+    val f = Similarity.probe(spark, Pq(dir, None, nProbes = 6, m = 4, ks = 8,
+      dim = 16), q, 5, Similarity.Where(col("lang") === "en"))
     assert(f.count() > 0)
     Similarity.appendToIvfPqIndex(
       Seq((100L, Seq.fill(16)(0.5f), "en")).toDF("id", "vec", "lang"),
