@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.ExplainMode
+import graft.operators.Index
 
 /** Emits PLAN_AUDIT.md: one row per declared query summarizing the
   * physical plan's scale-relevant structure — shuffle count, join
@@ -76,9 +77,9 @@ object PlanAudit {
       import org.apache.spark.sql.functions.col
       import spark.implicits._
       val tmp = java.nio.file.Files.createTempDirectory("audit_bmm").toString
-      graft.operators.Retrieval.buildBm25Index(
-        Tables.documents(spark, sfDir), col("doc_id"), col("text"),
-        s"$tmp/idx", layout = "partition"): Unit
+      Index.build(Index.Bm25Spec(layout = "partition"),
+        Index.Text(Tables.documents(spark, sfDir), col("doc_id"),
+          col("text")), s"$tmp/idx"): Unit
       Seq((1L, Seq("dup", "spark"), "keep"), (2L, Seq("unused"), "drop"))
         .toDF("query_id", "terms", "tag")
         .write.mode("overwrite").parquet(s"$tmp/q")
@@ -102,8 +103,9 @@ object PlanAudit {
       import org.apache.spark.sql.functions.col
       import spark.implicits._
       val tmp = java.nio.file.Files.createTempDirectory("audit_fwd").toString
-      graft.operators.Retrieval.buildForwardIndex(
-        Tables.documents(spark, sfDir), col("doc_id"), col("text"), tmp): Unit
+      Index.build(Index.ForwardSpec(),
+        Index.Text(Tables.documents(spark, sfDir), col("doc_id"),
+          col("text")), tmp): Unit
       val fb = Seq((3L, 1.5), (17L, 0.9)).toDF("doc_id", "score")
         .localCheckpoint(eager = false)
       val plan = graft.operators.Retrieval.forwardFor(spark, tmp, fb,
@@ -121,9 +123,9 @@ object PlanAudit {
     {
       import org.apache.spark.sql.functions.col
       val tmp = java.nio.file.Files.createTempDirectory("audit_facet").toString
-      graft.operators.Retrieval.buildBm25Index(
-        Tables.documents(spark, sfDir), col("doc_id"), col("text"), tmp,
-        metaCols = Seq("lang")): Unit
+      Index.build(Index.Bm25Spec(metaCols = Seq("lang")),
+        Index.Text(Tables.documents(spark, sfDir), col("doc_id"),
+          col("text")), tmp): Unit
       val (ranked, facets) = graft.operators.Retrieval.queryBm25IndexFaceted(
         spark, tmp, Seq("dup", "spark"), k = 10, facetCols = Seq("lang"),
         predicate = Some(col("lang") === "en"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Retrieval, Similarity}
+import graft.operators.{Index, Retrieval, Similarity}
 import graft.operators.Retrieval.{Hybrid, Ivf, MaxSim, Pq, Sq8}
 
 /** ANN quality probe: recall@k of the approximate similarity paths
@@ -39,7 +39,7 @@ object RecallProbe {
     // the persisted compressed index stacks BOTH approximations
     // (IVF pruning + SQ8 quantized dot) — the production-path floor
     val idx = java.nio.file.Files.createTempDirectory("recall_ivfsq8").toString
-    Similarity.buildIvfSq8Index(e, idx, nCentroids = 16): Unit
+    Index.build(Index.Sq8Spec(nCentroids = 16), Index.Vectors(e), idx): Unit
     for (probes <- Seq(4, 8, 16))
       println(f"ivf+sq8 nProbes=$probes%-2d recall@5 = ${
         recall(pairs(Similarity.probe(spark, Sq8(idx, probes), q, 5)))}%.3f")
@@ -49,8 +49,9 @@ object RecallProbe {
     // reconstruction gap is measured in SimilaritySpec
     for (res <- Seq(false, true)) {
       val pq = java.nio.file.Files.createTempDirectory(s"recall_ivfpq_$res").toString
-      Similarity.buildIvfPqIndex(e, pq, nCentroids = 16, ks = 64,
-        pqLloydIters = 1, residual = res): Unit
+      Index.build(Index.PqSpec(nCentroids = 16, ks = 64, pqLloydIters = 1,
+        residual = res),
+        Index.Vectors(e), pq): Unit
       for (probes <- Seq(4, 8, 16))
         println(f"ivf+pq residual=$res%-5s nProbes=$probes%-2d recall@5 = ${
           recall(pairs(Similarity.probe(spark, Pq(pq, None, probes, ks = 64,
@@ -60,8 +61,8 @@ object RecallProbe {
     // shortlist only — recovers what PQ reconstruction error displaced
     // past rank k but not past rank k·alpha, at equal probes
     val pq2 = java.nio.file.Files.createTempDirectory("recall_ivfpq_rr").toString
-    Similarity.buildIvfPqIndex(e, pq2, nCentroids = 16, ks = 64,
-      pqLloydIters = 1): Unit
+    Index.build(Index.PqSpec(nCentroids = 16, ks = 64, pqLloydIters = 1),
+      Index.Vectors(e), pq2): Unit
     for (probes <- Seq(4, 8, 16); alpha <- Seq(4, 8))
       println(f"ivf+pq+rerank alpha=$alpha%-2d nProbes=$probes%-2d recall@5 = ${
         recall(pairs(Similarity.probe(spark,
@@ -80,12 +81,14 @@ object RecallProbe {
       .join(e.filter(col("id") < 2).select(col("id").as("query_id"), col("vec")),
         Seq("query_id"))
     val bm = java.nio.file.Files.createTempDirectory("recall_bm25").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bm): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), bm): Unit
     val ivfF = java.nio.file.Files.createTempDirectory("recall_hyb_ivf").toString
-    Similarity.buildIvfIndex(e, ivfF, nCentroids = 16, lloydIters = 2): Unit
+    Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2),
+      Index.Vectors(e), ivfF): Unit
     val pqH = java.nio.file.Files.createTempDirectory("recall_hyb_pq").toString
-    Similarity.buildIvfPqIndex(e, pqH, nCentroids = 16, ks = 64,
-      pqLloydIters = 1): Unit
+    Index.build(Index.PqSpec(nCentroids = 16, ks = 64, pqLloydIters = 1),
+      Index.Vectors(e), pqH): Unit
     def fpairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("query_id", "doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -109,14 +112,14 @@ object RecallProbe {
     // chunk vector table is the largest vector artifact in the system,
     // so this is where the PQ arm's ~1/32 byte cut matters most.
     val cbm = java.nio.file.Files.createTempDirectory("recall_cbm").toString
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), cbm,
-      size = 32, stride = 16): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+      Index.Text(docs, col("doc_id"), col("text")), cbm): Unit
     val civ = java.nio.file.Files.createTempDirectory("recall_civ").toString
-    Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), civ,
-      size = 32, stride = 16, lloydIters = 2): Unit
+    Index.build(Index.IvfSpec(Index.Chunks(32, 16), lloydIters = 2),
+      Index.Text(docs, col("doc_id"), col("text")), civ): Unit
     val cpq = java.nio.file.Files.createTempDirectory("recall_cpq").toString
-    Retrieval.buildChunkIvfPqIndex(docs, col("doc_id"), col("text"), cpq,
-      size = 32, stride = 16, ks = 64, pqLloydIters = 1): Unit
+    Index.build(Index.PqSpec(Index.Chunks(32, 16), ks = 64, pqLloydIters = 1),
+      Index.Text(docs, col("doc_id"), col("text")), cpq): Unit
     val cq = Seq((900000001L, Seq("dup", "spark")),
         (900000002L, Seq("hash", "join", "table")))
       .toDF("query_id", "terms")

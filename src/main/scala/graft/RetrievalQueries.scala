@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Retrieval
+import graft.operators.{Index, Retrieval}
 import graft.operators.Retrieval.{Hybrid, Ivf, Lexical, MaxSim, Pq}
 
 /** Lexical retrieval + storage-layout queries (SURVEY.md §2 [EXT] rows,
@@ -67,8 +67,9 @@ object RetrievalQueries {
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25q",
       "postings", "stats")(
-      Retrieval.buildBm25Index(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _): Unit)
+      Index.build(Index.Bm25Spec(),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
 
   def q147Bm25Index(spark: SparkSession, dir: String): DataFrame =
     Retrieval.queryBm25Index(spark, cachedBm25(spark, dir), bmTerms, k = 20)
@@ -222,9 +223,9 @@ object RetrievalQueries {
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25metaq",
       "postings", "stats")(
-      Retrieval.buildBm25Index(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        metaCols = Seq("lang")): Unit)
+      Index.build(Index.Bm25Spec(metaCols = Seq("lang")),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
 
   def q185Bm25Filtered(spark: SparkSession, dir: String): DataFrame =
     Retrieval.lexical(spark, Lexical(cachedBm25Meta(spark, dir),
@@ -273,8 +274,8 @@ object RetrievalQueries {
       new java.io.File(dir, "documents.parquet"), "bm25tdq3",
       "postings", "stats") { d =>
       val docs = Tables.documents(spark, dir)
-      graft.operators.Retrieval.buildBm25Index(
-        docs, col("doc_id"), col("text"), d): Unit
+      Index.build(Index.Bm25Spec(),
+        Index.Text(docs, col("doc_id"), col("text")), d): Unit
       graft.operators.Tombstones.add(
         docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")), d,
         reason = "dmca", requestedAt = 86400000L,
@@ -339,8 +340,8 @@ object RetrievalQueries {
       new java.io.File(dir, "documents.parquet"), "bm25supq",
       "postings", "stats") { d =>
       val docs = Tables.documents(spark, dir)
-      graft.operators.Retrieval.buildBm25Index(
-        docs, col("doc_id"), col("text"), d): Unit
+      Index.build(Index.Bm25Spec(),
+        Index.Text(docs, col("doc_id"), col("text")), d): Unit
       val (old, v2) = supersedePairs(docs)
       graft.operators.Retrieval.appendToBm25Index(
         v2, col("doc_id"), col("text"), d): Unit
@@ -402,11 +403,11 @@ object RetrievalQueries {
       new java.io.File(dir, "documents.parquet"), "supworkq",
       "lineage", "lineage") { w =>
       val docs = Tables.documents(spark, dir)
-      graft.operators.Retrieval.buildForwardIndex(
-        docs, col("doc_id"), col("text"), s"$w/fwd"): Unit
+      Index.build(Index.ForwardSpec(),
+        Index.Text(docs, col("doc_id"), col("text")), s"$w/fwd"): Unit
       val (old, v2) = supersedePairs(docs)
-      graft.operators.Retrieval.appendToForwardIndex(
-        v2, col("doc_id"), col("text"), s"$w/fwd"): Unit
+      Index.append(Index.Text(v2, col("doc_id"),
+          col("text")), s"$w/fwd"): Unit
       graft.operators.Supersede.supersede(spark,
         old.select(col("doc_id").as("old_id"),
           (col("doc_id") + supOff).as("new_id")),
@@ -499,9 +500,9 @@ object RetrievalQueries {
     val d = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25chunklang",
       "postings", "stats")(
-      Retrieval.buildChunkBm25Index(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        size = 32, stride = 16, metaCols = Seq("lang")): Unit)
+      Index.build(Index.Bm25Spec(Index.Chunks(32, 16), metaCols = Seq("lang")),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
     Retrieval.bm25Facets(spark, d, bmTerms, facetCols = Seq("lang"))
   }
 
@@ -678,8 +679,9 @@ object RetrievalQueries {
             .select(col("doc_id").as("vec_id"), col("lang")), Seq("vec_id"))
           .select(col("vec_id").as("id"), col("embedding").as("vec"),
             col("lang"))
-        graft.operators.Similarity.buildIvfIndex(e, d, nCentroids = 16,
-          lloydIters = 2, metaCols = Seq("lang")): Unit
+        Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2,
+          metaCols = Seq("lang")),
+          Index.Vectors(e), d): Unit
       })
     Retrieval.hybrid(spark, Hybrid(cachedBm25Meta(spark, dir), Ivf(ivfLang),
       predicate = Some(col("lang") === "en")),
@@ -867,9 +869,9 @@ object RetrievalQueries {
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25chunkq",
       "postings", "stats")(
-      Retrieval.buildChunkBm25Index(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        size = 32, stride = 16): Unit)
+      Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
 
   def q168ChunkIndex(spark: SparkSession, dir: String): DataFrame =
     Retrieval.lexical(spark, Lexical(cachedChunkBm25(spark, dir)), bmTerms,
@@ -891,9 +893,9 @@ object RetrievalQueries {
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "chunkivfq",
       "centroids", "assignment")(
-      Retrieval.buildChunkIvfIndex(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        size = 32, stride = 16): Unit)
+      Index.build(Index.IvfSpec(Index.Chunks(32, 16)),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
 
   /** The hybrid chunk query batch: terms + the SAME feature-hash
     * embedding of the query text the index's chunks were encoded with.
@@ -931,9 +933,9 @@ object RetrievalQueries {
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "chunkpq2",
       "centroids", "codebook", "assignment", "vectors")(
-      Retrieval.buildChunkIvfPqIndex(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        size = 32, stride = 16): Unit)
+      Index.build(Index.PqSpec(Index.Chunks(32, 16)),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
 
   def q179ChunkHybridPq(spark: SparkSession, dir: String): DataFrame =
     Retrieval.hybrid(spark, Hybrid(cachedChunkBm25(spark, dir),
@@ -1424,15 +1426,15 @@ object RetrievalQueries {
     val bm = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25chunklang",
       "postings", "stats")(
-      Retrieval.buildChunkBm25Index(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        size = 32, stride = 16, metaCols = Seq("lang")): Unit)
+      Index.build(Index.Bm25Spec(Index.Chunks(32, 16), metaCols = Seq("lang")),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
     val iv = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "chunkivflang",
       "centroids", "assignment")(
-      Retrieval.buildChunkIvfIndex(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        size = 32, stride = 16, metaCols = Seq("lang")): Unit)
+      Index.build(Index.IvfSpec(Index.Chunks(32, 16), metaCols = Seq("lang")),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
     Retrieval.hybrid(spark, Hybrid(bm, Ivf(iv),
       predicate = Some(col("lang") === "en")), chunkQueryBatch(spark), k = 10)
   }
@@ -1510,8 +1512,9 @@ object RetrievalQueries {
   private def cachedForward(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "fwdq", "fwd", "fwd")(
-      Retrieval.buildForwardIndex(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _): Unit)
+      Index.build(Index.ForwardSpec(),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
 
   def q170ContextPack(spark: SparkSession, dir: String): DataFrame = {
     val fused = q169ChunkHybrid(spark, dir)
@@ -1906,9 +1909,9 @@ object RetrievalQueries {
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25partq",
       "postings", "stats")(
-      Retrieval.buildBm25Index(
-        Tables.documents(spark, dir), col("doc_id"), col("text"), _,
-        layout = "partition"): Unit)
+      Index.build(Index.Bm25Spec(layout = "partition"),
+        Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
+          _): Unit)
 
   def q172Bm25ManyPart(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1943,9 +1946,9 @@ object RetrievalQueries {
       // the recorded ratio opts the index into stop-list RE-DERIVATION
       // at compaction (post-build boilerplate gets capped on the daily
       // cadence instead of never)
-      Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), d,
-        layout = "partition", stopTokens = stops,
-        stopMaxDfRatio = Some(0.5)): Unit
+      Index.build(Index.Bm25Spec(layout = "partition", stopTokens = stops,
+        stopMaxDfRatio = Some(0.5)),
+        Index.Text(docs, col("doc_id"), col("text")), d): Unit
     })
 
   def q183Bm25Stopped(spark: SparkSession, dir: String): DataFrame = {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Corpus, Dedup, Graph, NearDup, Similarity}
+import graft.operators.{Corpus, Dedup, Graph, Index, NearDup, Similarity}
 import graft.operators.Retrieval.{Ivf, Lexical, Pq}
 
 /** Scaling probe: time the corpus-heavy operators on 1×/3×/10×
@@ -223,8 +223,8 @@ object ScaleProbe {
       val times = scales.map { s =>
         val idx = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_bm25_$s").toString
-        graft.operators.Retrieval.buildBm25Index(
-          replicate(docs, s), col("doc_id"), col("text"), idx): Unit
+        Index.build(Index.Bm25Spec(),
+          Index.Text(replicate(docs, s), col("doc_id"), col("text")), idx): Unit
         val run = () => {
           Bench.force(graft.operators.Retrieval.queryBm25Index(
             spark, idx, Seq("dup", "spark", "hash"), 20))
@@ -329,8 +329,8 @@ object ScaleProbe {
         val big = replicate(docs, s)
         val bkt = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_bml_b$s").toString
-        graft.operators.Retrieval.buildBm25Index(
-          big, col("doc_id"), col("text"), bkt): Unit
+        Index.build(Index.Bm25Spec(),
+          Index.Text(big, col("doc_id"), col("text")), bkt): Unit
         // plain-file twin: identical postings/stats, no bucketed layout
         val plain = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_bml_p$s").toString
@@ -372,8 +372,8 @@ object ScaleProbe {
         val big = grow(s)
         val part = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_annl_d$s").toString
-        graft.operators.Similarity.buildIvfIndex(big, part,
-          nCentroids = 16, assignmentLayout = "partition"): Unit
+        Index.build(Index.IvfSpec(nCentroids = 16, layout = "partition"),
+          Index.Vectors(big), part): Unit
         val plain = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_annl_p$s").toString
         graft.sources.Versioned.overwrite(
@@ -419,9 +419,9 @@ object ScaleProbe {
         val big = grow(s)
         val dir = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_annf_$s").toString
-        graft.operators.Similarity.buildIvfIndex(big, dir,
-          nCentroids = 16, assignmentLayout = "partition",
-          metaCols = Seq("rare")): Unit
+        Index.build(Index.IvfSpec(nCentroids = 16, layout = "partition",
+          metaCols = Seq("rare")),
+          Index.Vectors(big), dir): Unit
         graft.operators.Similarity.refreshGateCounts(spark, dir,
           Seq("rare")): Unit
         def probeA() = measured(() =>
@@ -475,12 +475,12 @@ object ScaleProbe {
         val big = replicate(docs, s)
         val part = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_bmm_d$s").toString
-        graft.operators.Retrieval.buildBm25Index(
-          big, col("doc_id"), col("text"), part, layout = "partition"): Unit
+        Index.build(Index.Bm25Spec(layout = "partition"),
+          Index.Text(big, col("doc_id"), col("text")), part): Unit
         val bkt = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_bmm_b$s").toString
-        graft.operators.Retrieval.buildBm25Index(
-          big, col("doc_id"), col("text"), bkt): Unit
+        Index.build(Index.Bm25Spec(),
+          Index.Text(big, col("doc_id"), col("text")), bkt): Unit
         def probe(dir: String) = measured(() =>
           Bench.force(graft.operators.Retrieval.queryBm25IndexMany(
             spark, dir, qdf, 10)))
@@ -530,16 +530,16 @@ object ScaleProbe {
         val big = zipf(replicate(docs0, s))
         val un = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_zipf_u$s").toString
-        graft.operators.Retrieval.buildBm25Index(big, col("doc_id"),
-          col("text"), un, layout = "partition", nPartDirs = 64): Unit
+        Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 64),
+          Index.Text(big, col("doc_id"), col("text")), un): Unit
         val stops = graft.operators.Retrieval.heavyTokens(big,
             col("doc_id"), col("text"), maxDfRatio = 0.5)
           .select("tok").collect().map(_.getString(0)).toSeq
         val cap = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_zipf_c$s").toString
-        graft.operators.Retrieval.buildBm25Index(big, col("doc_id"),
-          col("text"), cap, layout = "partition", nPartDirs = 64,
-          stopTokens = stops): Unit
+        Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 64,
+          stopTokens = stops),
+          Index.Text(big, col("doc_id"), col("text")), cap): Unit
         val bmU = measured(() => Bench.force(
           graft.operators.Retrieval.queryBm25IndexMany(spark, un, qdf, 10)))
         val qlU = measured(() => Bench.force(
@@ -589,8 +589,8 @@ object ScaleProbe {
         val big = replicate(docs, s)
         val fdir = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_rag_f$s").toString
-        graft.operators.Retrieval.buildForwardIndex(
-          big, col("doc_id"), col("text"), fdir): Unit
+        Index.build(Index.ForwardSpec(),
+          Index.Text(big, col("doc_id"), col("text")), fdir): Unit
         val textIdx = measured(() => Bench.force(
           graft.operators.Retrieval.contextTextsIndexed(spark, packed, fdir)))
         val textScan = measured(() => Bench.force(
@@ -643,8 +643,8 @@ object ScaleProbe {
       val rows = scales.map { s =>
         val idx = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_rr_$s").toString
-        graft.operators.Retrieval.buildChunkIvfPqIndex(replicate(docs, s),
-          col("doc_id"), col("text"), idx, size = 32, stride = 16): Unit
+        Index.build(Index.PqSpec(Index.Chunks(32, 16)),
+          Index.Text(replicate(docs, s), col("doc_id"), col("text")), idx): Unit
         // the ADC shortlist stage is SHARED by both re-rank forms and is
         // inherently ∝ corpus·nProbes/nCentroids (code-width rows) — at
         // larger SFs it dominates the totals, so it is measured as its
@@ -711,12 +711,13 @@ object ScaleProbe {
         val big = replicate(docs, s)
         val fdir = java.nio.file.Files
           .createTempDirectory(s"scaleprobe_pin_$s").toString
-        graft.operators.Retrieval.buildForwardIndex(
-          big, col("doc_id"), col("text"), fdir): Unit          // v0: epoch A
-        graft.operators.Retrieval.appendToForwardIndex(
-          Seq((900000001L, "appended doc")).toDF("doc_id", "text"),
-          col("doc_id"), col("text"), fdir): Unit               // v1: the pin
-        graft.operators.Retrieval.compactForwardIndex(spark, fdir): Unit // v2: epoch B
+        Index.build(Index.ForwardSpec(),
+          Index.Text(big, col("doc_id"), col("text")),
+            fdir): Unit          // v0: epoch A
+        Index.append(Index.Text(Seq((900000001L,
+          "appended doc")).toDF("doc_id", "text"), col("doc_id"),
+            col("text")), fdir): Unit               // v1: the pin
+        Index.compact(spark, fdir): Unit // v2: epoch B
         def pinnedRead() = Bench.force(
           graft.operators.Retrieval.contextTextsIndexed(spark, packed, fdir,
             asOf = Some(1L)))
@@ -765,9 +766,9 @@ object ScaleProbe {
         val stops = graft.operators.Retrieval.heavyTokens(base,
             col("doc_id"), col("text"), maxDfRatio = 0.4)
           .select("tok").collect().map(_.getString(0)).toSeq
-        graft.operators.Retrieval.buildBm25Index(base, col("doc_id"),
-          col("text"), dir, layout = "partition", nPartDirs = 64,
-          stopTokens = stops, stopMaxDfRatio = Some(0.4)): Unit
+        Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 64,
+          stopTokens = stops, stopMaxDfRatio = Some(0.4)),
+          Index.Text(base, col("doc_id"), col("text")), dir): Unit
         val maxId = base.agg(max(col("doc_id"))).head.getLong(0)
         // the burst: a same-sized batch whose every doc carries the new
         // boilerplate token — df ends at 0.5 of the doubled corpus,

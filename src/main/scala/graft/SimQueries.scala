@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Corpus, Graph, NearDup, Ranking, Similarity}
+import graft.operators.{Corpus, Graph, Index, NearDup, Ranking, Similarity}
 import graft.operators.Retrieval.{Ivf, Pq, Sq8}
 
 /** Similarity-search and near-duplicate queries (SURVEY.md §2.3 J7,
@@ -84,7 +84,8 @@ object SimQueries {
   def q135HardNegativesIndexed(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
     val idx = cachedIndex(spark, dir, "ivf_c16_l2b")(
-      Similarity.buildIvfIndex(e, _, nCentroids = 16, lloydIters = 2): Unit)
+      Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2),
+        Index.Vectors(e), _): Unit)
     Similarity.hardNegativesIndexed(spark, idx, e.filter(col("id") < 10), e,
         k = 5, nProbes = 16)
       .orderBy(col("query_id"), col("rank"))
@@ -680,7 +681,7 @@ object SimQueries {
 
   // ---------------------------------------------------------------------
   // J7 production shape — PERSISTED IVF index: build once
-  // (Similarity.buildIvfIndex → two Versioned tables: centroids +
+  // (Index.build with an IvfSpec → two Versioned tables: centroids +
   // bucket assignment), probe many times (queryIvfIndex). Same
   // parameters as q98 (16 centroids, 2 Lloyd passes), so the
   // query-from-index output is IDENTICAL to q98's inline pipeline and
@@ -703,8 +704,8 @@ object SimQueries {
     */
   def cachedIvfIndex(spark: SparkSession, dir: String): String =
     cachedIndex(spark, dir, "ivf_c16_l2b")(
-      Similarity.buildIvfIndex(embs(spark, dir), _,
-        nCentroids = 16, lloydIters = 2): Unit)
+      Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2),
+        Index.Vectors(embs(spark, dir)), _): Unit)
 
   def q116AnnIndex(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
@@ -734,8 +735,9 @@ object SimQueries {
   def q162AnnIndexDpp(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
     val idx = cachedIndex(spark, dir, "ivf_c16_l2p")(
-      Similarity.buildIvfIndex(e, _, nCentroids = 16, lloydIters = 2,
-        assignmentLayout = "partition"): Unit)
+      Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2,
+        layout = "partition"),
+        Index.Vectors(e), _): Unit)
     Similarity.queryIvfIndex(spark, idx, e.filter(col("id") < 10), k = 5)
   }
 
@@ -743,7 +745,7 @@ object SimQueries {
   // J7 production shape, metadata-FILTERED — the filtered-vector-search
   // composition every RAG deployment hits (language/date/license gates
   // on candidates): the gate column is BAKED INTO the assignment rows
-  // at build (buildIvfIndex metaCols), so the predicate rides the
+  // at build (IvfSpec metaCols), so the predicate rides the
   // probed-bucket scan itself — gated candidates die at the scan
   // without paying a join or a distance evaluation, and the filter
   // applies BEFORE ranking so the top-k never starves on gated
@@ -755,9 +757,9 @@ object SimQueries {
   def q184AnnFiltered(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
     val idx = cachedIndex(spark, dir, "ivf_c16_l2meta")(
-      Similarity.buildIvfIndex(embs(spark, dir), _, nCentroids = 16,
-        lloydIters = 2, assignmentLayout = "partition",
-        metaCols = Seq("label")): Unit)
+      Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2,
+        layout = "partition", metaCols = Seq("label")),
+        Index.Vectors(embs(spark, dir)), _): Unit)
     Similarity.probe(spark, Ivf(idx), e.filter(col("id") < 10), k = 5,
       Similarity.Where(col("label") === 1))
   }
@@ -833,7 +835,7 @@ object SimQueries {
   def q118AnnIvfSq8(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
     val idx = cachedIndex(spark, dir, "ivfsq8_c16b")(
-      Similarity.buildIvfSq8Index(e, _, nCentroids = 16): Unit)
+      Index.build(Index.Sq8Spec(nCentroids = 16), Index.Vectors(e), _): Unit)
     Similarity.probe(spark, Sq8(idx), e.filter(col("id") < 10), k = 5)
   }
 
@@ -989,7 +991,8 @@ object SimQueries {
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), "ivfpq3_c16b",
       "centroids", "codebook", "assignment", "vectors")(
-      Similarity.buildIvfPqIndex(embs(spark, dir), _, nCentroids = 16): Unit)
+      Index.build(Index.PqSpec(nCentroids = 16),
+        Index.Vectors(embs(spark, dir)), _): Unit)
 
   def q145AnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
@@ -1105,7 +1108,8 @@ object SimQueries {
     val idx = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), "ivfpqr2_c16b",
       "centroids", "codebook", "assignment", "vectors")(
-      Similarity.buildIvfPqIndex(e, _, nCentroids = 16, residual = true): Unit)
+      Index.build(Index.PqSpec(nCentroids = 16, residual = true),
+        Index.Vectors(e), _): Unit)
     Similarity.probe(spark, Pq(idx, None, residual = true),
       e.filter(col("id") < 10), k = 5)
   }
@@ -1206,15 +1210,15 @@ object SimQueries {
   def q192SupersedeAnn(spark: SparkSession, dir: String): DataFrame = {
     val e = embs(spark, dir)
     val idx = cachedIndex(spark, dir, "ivf_supq") { d =>
-      Similarity.buildIvfIndex(e, d, nCentroids = 16): Unit
+      Index.build(Index.IvfSpec(nCentroids = 16), Index.Vectors(e), d): Unit
       val old = e.filter(col("id") >= 10 && col("id") % 13 === 7)
       val v2 = old.select((col("id") + 10000000L).as("id"),
         transform(col("vec"), x => -x).as("vec"))
-      Similarity.appendToIvfIndex(v2, d): Unit
+      Index.append(Index.Vectors(v2), d): Unit
       graft.operators.Tombstones.add(old.select(col("id").as("doc_id")), d,
         reason = "superseded", requestedAt = 86400000L,
         boundary = 86400000L): Unit
-      Similarity.compactIvfIndex(spark, d): Unit
+      Index.compact(spark, d): Unit
     }
     Similarity.queryIvfIndex(spark, idx, e.filter(col("id") < 10), k = 5)
   }
@@ -1284,8 +1288,8 @@ object SimQueries {
     val idx = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), "ivf_cnt1",
       "centroids", "assignment", "gatecounts") { d =>
-      Similarity.buildIvfIndex(e, d, nCentroids = 16,
-        metaCols = Seq("label")): Unit
+      Index.build(Index.IvfSpec(nCentroids = 16, metaCols = Seq("label")),
+        Index.Vectors(e), d): Unit
       Similarity.refreshGateCounts(spark, d, Seq("label")): Unit
     }
     Similarity.probe(spark, Ivf(idx), e.filter(col("id") < 10), k = 5,

@@ -2,7 +2,7 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Corpus, Retrieval, Similarity, Stamp,
+import graft.operators.{Curation, Corpus, Index, Retrieval, Stamp,
   Tombstones}
 import graft.sources.Versioned
 
@@ -58,35 +58,57 @@ import graft.sources.Versioned
   */
 object DailyMaintenance {
 
+  /** One maintained index: its stage-name stem, its dir under the work
+    * dir, and its build spec (family and grain). The stages
+    * `<stem>_append`, `<stem>_rebuild` (float IVF and IVF-PQ: they
+    * retrain from their own rows) and `<stem>_compact` are generated from
+    * this list, in its order — the scheduler's `runs` history is keyed by
+    * stage name, so names and order are the resume contract.
+    */
+  private final case class Maintained(stem: String, dir: String,
+                                      spec: Index.Spec) {
+    def family: Index.Family = Index.family(spec)
+    def retrains: Boolean = family == Index.Ivf || family == Index.Pq
+  }
+
+  private val Chunked = Index.Chunks(size = 32, stride = 16)
+
+  /** Append order. The chunk ANN indexes are the semantic half of the
+    * chunk-grain hybrid pair the RAG stack serves (both chunk indexes on
+    * the SAME grid); the PQ one is the compressed arm a chunk-grain
+    * hybrid request serves at 100 TB. The forward index is the serve-path
+    * artifact the RAG stack reads BY DOCUMENT. */
+  private val Indexes = Seq(
+    Maintained("bm25", "bm25", Index.Bm25Spec()),
+    Maintained("chunk", "chunks", Index.Bm25Spec(Chunked)),
+    Maintained("ivf", "ivf", Index.IvfSpec()),
+    Maintained("chunk_ivf", "chunk_ivf", Index.IvfSpec(Chunked)),
+    Maintained("fwd", "fwd", Index.ForwardSpec()),
+    Maintained("chunk_pq", "chunk_pq", Index.PqSpec(Chunked)))
+
+  /** Rebuild, compaction and vacuum order: the forward index last. */
+  private val CompactOrder =
+    Indexes.sortBy(_.spec.isInstanceOf[Index.ForwardSpec])
+
   /** Every Versioned table the daily job maintains, relative to the
     * work dir — the vacuum stage's worklist. Includes the scheduler's
     * own runs/claims tables (they accrue one tiny commit per
     * (stage, attempt) / per tick forever otherwise) and the model
     * artifacts the retrain stages version.
     */
-  def maintainedTables(work: String): Seq[String] = Seq(
-    s"$work/state/candidates", s"$work/state/pairs",
-    s"$work/signals/nd", s"$work/signals/c1",
-    s"$work/signals/c12", s"$work/signals/vsz",
-    s"$work/signals/dels",
-    s"$work/bm25/postings", s"$work/bm25/stats",
-    s"$work/chunks/postings", s"$work/chunks/stats",
-    s"$work/ivf/centroids", s"$work/ivf/assignment",
-    s"$work/chunk_ivf/centroids", s"$work/chunk_ivf/assignment",
-    s"$work/chunk_pq/centroids", s"$work/chunk_pq/codebook",
-    s"$work/chunk_pq/assignment", s"$work/chunk_pq/vectors",
-    s"$work/fwd/fwd",
-    s"$work/bpe_model/merges", s"$work/bpe_model/vocab",
-    s"$work/nb_model/model", s"$work/nb_model/priors",
-    s"$work/lineage",
-    s"$work/runs", s"$work/claims") ++
-    indexDirs(work).map(d => s"$d/${Tombstones.TableName}")
+  def maintainedTables(work: String): Seq[String] =
+    (Seq("state/candidates", "state/pairs", "signals/nd", "signals/c1",
+      "signals/c12", "signals/vsz", "signals/dels") ++
+      CompactOrder.flatMap(m => m.family.tables.map(t => s"${m.dir}/$t")) ++
+      Seq("bpe_model/merges", "bpe_model/vocab", "nb_model/model",
+        "nb_model/priors", "lineage", "runs", "claims"))
+      .map(t => s"$work/$t") ++
+      indexDirs(work).map(d => s"$d/${Tombstones.TableName}")
 
   /** The index dirs a takedown must reach — every artifact that can
     * serve (or mount) a document. */
   private def indexDirs(work: String): Seq[String] =
-    Seq("bm25", "chunks", "ivf", "chunk_ivf", "chunk_pq", "fwd")
-      .map(d => s"$work/$d")
+    CompactOrder.map(m => s"$work/${m.dir}")
 
   /** Append commits sitting on top of `table`'s last overwrite — the
     * compaction trigger. "Latest action is an append" is NOT a usable
@@ -102,85 +124,13 @@ object DailyMaintenance {
     else Versioned.history(spark, table).reverse
       .takeWhile(_._2 == "append").size
 
-  /** True when a BM25-family index pair is wedged between its two
-    * commits — stats missing after a crashed build, or versions out of
-    * lockstep after a crashed append/compaction. The shapes
-    * [[graft.operators.Retrieval.repairBm25Index]] heals.
-    */
-  private def bm25PairBroken(spark: SparkSession, indexDir: String): Boolean =
-    !Versioned.exists(spark, s"$indexDir/stats") ||
-      Versioned.latestVersion(spark, s"$indexDir/postings") !=
-        Versioned.latestVersion(spark, s"$indexDir/stats")
-
-  /** True when an IVF-family index's lockstep tables have diverged —
-    * the shapes [[graft.operators.Similarity.repairIvfIndex]] heals
-    * (a crashed append, or a compaction that died between its
-    * per-table commits).
-    */
-  private def ivfTablesBroken(spark: SparkSession, indexDir: String): Boolean =
-    Seq("vectors", "centroids", "codebook", "assignment")
-      .filter(t => Versioned.exists(spark, s"$indexDir/$t"))
-      .map(t => Versioned.latestVersion(spark, s"$indexDir/$t"))
-      .distinct.size > 1
-
-  /** True iff `batch`'s documents are already present in the index's
-    * postings head — the disambiguator between the two broken-pair
-    * shapes [[graft.operators.Retrieval.repairBm25Index]] heals: a
-    * crashed APPEND's orphan postings ARE this boundary's batch (the
-    * repair completed it — appending again would land it twice), while
-    * a crashed COMPACTION from a prior boundary repairs with an EMPTY
-    * delta and this boundary's batch still needs its append. Presence
-    * is all-or-nothing (a batch's postings land in ONE commit), so a
-    * PARTIAL presence is a foreign write and refuses loudly rather
-    * than guessing. Chunk-grain postings key by the composite ck —
-    * doc membership decodes from its high 32 bits. An empty batch
-    * counts as landed (nothing to append).
-    */
-  private def batchLanded(spark: SparkSession, batch: DataFrame,
-                          indexDir: String,
-                          chunkGrain: Boolean): Boolean = {
-    val ids = batch.select(col("doc_id")).distinct()
-    val posted = Versioned.read(spark, s"$indexDir/postings")
-    val postedIds =
-      (if (chunkGrain) posted.select(shiftright(col("doc_id"), 32).as("doc_id"))
-       else posted.select(col("doc_id"))).distinct()
-    val present = ids.join(postedIds, Seq("doc_id"), "left_semi").count()
-    val total = ids.count()
-    require(present == 0L || present == total,
-      s"$indexDir postings hold PART of this boundary's batch ($present " +
-        s"of $total docs) — no append/compaction crash shape produces a " +
-        "partial batch; investigate foreign writes before appending")
-    total == 0L || present == total
-  }
-
-  /** [[batchLanded]] against an IVF-PQ index's full-precision vectors
-    * table (the FIRST-committed table of its append, so membership
-    * there means the repair completed the whole operation). Chunk-grain
-    * vectors key by the composite ck — doc membership decodes from its
-    * high 32 bits.
-    */
-  private def vectorsBatchLanded(spark: SparkSession, batch: DataFrame,
-                                 indexDir: String,
-                                 chunkGrain: Boolean): Boolean = {
-    val ids = batch.select(col("doc_id")).distinct()
-    val stored = Versioned.read(spark, s"$indexDir/vectors")
-    val storedIds =
-      (if (chunkGrain) stored.select(shiftright(col("cand_id"), 32).as("doc_id"))
-       else stored.select(col("cand_id").as("doc_id"))).distinct()
-    val present = ids.join(storedIds, Seq("doc_id"), "left_semi").count()
-    val total = ids.count()
-    require(present == 0L || present == total,
-      s"$indexDir vectors hold PART of this boundary's batch ($present " +
-        s"of $total docs) — no append/compaction crash shape produces a " +
-        "partial batch; investigate foreign writes before appending")
-    total == 0L || present == total
-  }
-
   /** The day's stage list over a batch of documents (doc_id, text,
     * n_chars, …) and their embedding rows (id, vec). Build-or-append
     * decisions, demotion checks, and the vacuum worklist all evaluate
     * AT RUN TIME (inside the closures), so a stage retried after a
     * crash sees the current state, not the tick-construction snapshot.
+    * Routing reads only logs and sidecars; the index work is the four
+    * [[Index]] verbs.
     */
   def stages(spark: SparkSession, batch: DataFrame, vecs: DataFrame,
              work: String,
@@ -192,25 +142,109 @@ object DailyMaintenance {
              stopMaxDfRatio: Option[Double] = None,
              takedown: Option[DataFrame] = None,
              supersede: Option[DataFrame] = None): Seq[(String, () => Unit)] = {
+    val retrainDue = (boundary / intervalMs) % retrainEvery == 0
+    def dirOf(m: Maintained) = s"$work/${m.dir}"
+    def inputOf(m: Maintained): Index.Input = m.spec match {
+      case _: Index.IvfSpec | _: Index.PqSpec if m.spec.grain == Index.Docs =>
+        Index.Vectors(vecs)
+      case _ => Index.Text(batch, col("doc_id"), col("text"))
+    }
     // df-cap stop set for a ratio-opted pipeline: the FIRST build
-    // derives it from its day's batch and records the ratio in the
-    // stop_toks sidecar; appends inherit the frozen set through that
-    // sidecar, and every compaction re-derives the set over the grown
-    // corpus (compactBm25Index reads the recorded ratio) — so
+    // derives it from its day's batch (chunk grain: the day's CHUNKS —
+    // chunk df, not doc df) and records the ratio in the stop_toks
+    // sidecar; appends inherit the frozen set through that sidecar, and
+    // every compaction re-derives the set over the grown corpus — so
     // boilerplate that emerges after day 1 gets capped on the compact
     // cadence. The collect is the documented bounded stop-token-list
     // exception (≤ 1/ratio tokens).
-    def stopsOf(docs: DataFrame): Seq[String] = stopMaxDfRatio match {
-      case Some(r) => Retrieval.heavyTokens(docs, col("doc_id"), col("text"), r)
-        .select("tok").collect().map(_.getString(0)).toSeq
-      case None => Nil
+    def buildSpec(m: Maintained): Index.Spec = (m.spec, stopMaxDfRatio) match {
+      case (b: Index.Bm25Spec, Some(r)) =>
+        val heavy = b.grain match {
+          case Index.Chunks(size, stride) => Retrieval.heavyChunkTokens(batch,
+            col("doc_id"), col("text"), size, stride, r)
+          case Index.Docs => Retrieval.heavyTokens(batch, col("doc_id"),
+            col("text"), r)
+        }
+        b.copy(stopTokens = heavy.select("tok").collect().map(_.getString(0))
+          .toSeq, stopMaxDfRatio = Some(r))
+      case (s, _) => s
     }
-    def chunkStopsOf(docs: DataFrame): Seq[String] = stopMaxDfRatio match {
-      case Some(r) => Retrieval.heavyChunkTokens(docs, col("doc_id"),
-          col("text"), size = 32, stride = 16, maxDfRatio = r)
-        .select("tok").collect().map(_.getString(0)).toSeq
-      case None => Nil
+    // build day 0, append after. A dir wedged between a writer's commits
+    // is healed FIRST (Index.repair; a no-op on an intact, trusted dir):
+    // BM25 and IVF-PQ repairs COMPLETE a crashed append from their
+    // landing table, but the broken dir is NOT always this boundary's
+    // crashed append (a compaction that died between its commits at a
+    // PRIOR boundary leaves the same shape with an empty repair delta),
+    // so the batch's presence decides: landed ⇒ skip (appending again
+    // would land it twice); absent ⇒ append. A float IVF repair rolls
+    // back, so its batch always still needs its append. A chunk index
+    // whose FIRST build died between its commit and the grid stamp holds
+    // exactly this boundary's batch (resume re-runs the same boundary),
+    // so rebuilding it from the batch is lossless; any later grid
+    // corruption refuses loudly — rebuilding a multi-day index from one
+    // day's batch would silently discard every prior day.
+    def appendStage(m: Maintained): () => Unit = () => {
+      val dir = dirOf(m)
+      if (!Index.exists(spark, dir)) Index.build(buildSpec(m), inputOf(m), dir): Unit
+      else {
+        val broken = !Index.intact(spark, dir)
+        Index.repair(spark, dir): Unit
+        if (m.spec.grain == Index.Docs ||
+            Stamp.read(spark, dir, m.family.gridKind.get).nonEmpty) {
+          if (!broken || !Index.landed(spark, batch, dir))
+            Index.append(inputOf(m), dir): Unit
+        }
+        else if (Versioned.history(spark, s"$dir/${m.family.grid.get}")
+            .forall(_._1 == 0L))
+          Index.build(buildSpec(m), inputOf(m), dir): Unit
+        else sys.error(s"$dir grid sidecar is untrusted and the index holds " +
+          "more than the first build — rebuild it manually from the full " +
+          "corpus (a one-batch rebuild here would silently drop prior days)")
+      }
     }
+    // INDEX rebuild on the retrainEvery cadence: IVF centroids and PQ
+    // codebooks freeze at build, FAISS-add appends degrade recall as the
+    // corpus drifts from the training distribution, and each rebuild
+    // re-trains from the index's OWN rows with its recorded spec — a
+    // fresh lockstep overwrite version; pinned consumers keep their epoch
+    // via the sidecar history; pending tombstones drop in the rewrite. An
+    // index whose history is still the fresh build skips (it would
+    // re-train on the distribution it was just trained on). A broken dir
+    // is repaired first when repair applies (a crashed APPEND —
+    // completing it keeps the batch); a repair REFUSAL is the
+    // crashed-REBUILD shape, which the rebuild itself heals by version
+    // padding, so it is tolerated rather than wedging the cadence.
+    def rebuildStage(m: Maintained): () => Unit = () => {
+      val dir = dirOf(m)
+      val layoutT = s"$dir/${m.family.layout._1}"
+      if (retrainDue && Versioned.exists(spark, layoutT) &&
+          Versioned.latestVersion(spark, layoutT) > 0) {
+        if (!Index.intact(spark, dir))
+          try Index.repair(spark, dir): Unit catch { case _: Exception => () }
+        Index.build(Index.recorded(spark, dir), Index.Own, dir): Unit
+      }
+    }
+    // Each compact stage HEALS its own crash shape first: a compaction
+    // that died between its per-table commits leaves the lockstep broken
+    // with appendDebt 0 (the first table's overwrite landed), and one
+    // that died after its commits but before a sidecar re-stamp leaves
+    // the stamp stale; without the heal a resumed stage would no-op,
+    // cover the boundary with a wedged index, and leave the NEXT
+    // boundary's append stage to misread the shape as its own crashed
+    // append. Repair-then-debt-check heals the crash AT ITS OWN BOUNDARY.
+    def compactStage(m: Maintained): () => Unit = () => {
+      val dir = dirOf(m)
+      if (Index.exists(spark, dir)) {
+        Index.repair(spark, dir): Unit
+        if (appendDebt(spark, s"$dir/${m.family.layout._1}") >= compactEvery)
+          Index.compact(spark, dir): Unit
+      }
+    }
+    // the dirs a supersede or takedown reaches: every maintained index
+    // whose data table has landed
+    def live: Seq[String] = CompactOrder.map(m => (dirOf(m), m.family))
+      .filter { case (d, f) => Versioned.exists(spark, s"$d/${f.layout._1}") }
+      .map(_._1)
     Seq(
     "curate" -> (() =>
       Curation.curateBatch(batch, s"$work/state"): Unit),
@@ -221,180 +255,8 @@ object DailyMaintenance {
       else
         Corpus.appendSignalState(batch, col("doc_id"), col("text"),
           s"$work/signals"): Unit
-    }),
-    "bm25_append" -> (() => {
-      if (!Versioned.exists(spark, s"$work/bm25/postings"))
-        Retrieval.buildBm25Index(batch, col("doc_id"), col("text"),
-          s"$work/bm25", stopTokens = stopsOf(batch),
-          stopMaxDfRatio = stopMaxDfRatio): Unit
-      // a build or append crashed between its postings and stats commits
-      // (stats missing, or lockstep broken): repair restores lockstep —
-      // but the broken pair is NOT always this boundary's crashed
-      // append (a compaction that died between its two commits at a
-      // PRIOR boundary leaves the same shape with an empty repair
-      // delta), so verify the batch actually landed before skipping
-      // the append: completed-append ⇒ landed ⇒ skip (appending again
-      // would land it twice); healed-compaction ⇒ absent ⇒ append
-      else if (bm25PairBroken(spark, s"$work/bm25")) {
-        Retrieval.repairBm25Index(spark, s"$work/bm25"): Unit
-        if (!batchLanded(spark, batch, s"$work/bm25", chunkGrain = false))
-          Retrieval.appendToBm25Index(batch, col("doc_id"), col("text"),
-            s"$work/bm25"): Unit
-      }
-      else
-        Retrieval.appendToBm25Index(batch, col("doc_id"), col("text"),
-          s"$work/bm25"): Unit
-    }),
-    "chunk_append" -> (() => {
-      val postingsT = s"$work/chunks/postings"
-      if (!Versioned.exists(spark, postingsT))
-        // the chunk index is the LARGER postings artifact — the df cap
-        // matters most exactly here; the chunk-grain stop set derives
-        // from the day's CHUNKS (chunk df, not doc df)
-        Retrieval.buildChunkBm25Index(batch, col("doc_id"), col("text"),
-          s"$work/chunks", size = 32, stride = 16,
-          stopTokens = chunkStopsOf(batch),
-          stopMaxDfRatio = stopMaxDfRatio): Unit
-      else {
-        // heal a pair broken between its postings and stats commits
-        // BEFORE routing: repair restores stats lockstep from the orphan
-        // postings. Without it, (a) a crashed APPEND would make the
-        // healthy-grid append below refuse forever, and (b) the
-        // first-build rebuild would overwrite postings to v1 while
-        // CREATING stats at v0, fail its own lockstep require, and wedge
-        // the boundary behind the manual-rebuild error on the next tick.
-        val broken = bm25PairBroken(spark, s"$work/chunks")
-        if (broken) {
-          Retrieval.repairBm25Index(spark, s"$work/chunks"): Unit
-          // a healed compaction crash also left the grid stamp behind
-          // the moved overwrite snapshot — recoverable when the rewrite
-          // was provably pure (no-op otherwise)
-          Retrieval.restampChunkGrid(spark, s"$work/chunks")
-        }
-        if (Retrieval.chunkGridHealthy(spark, s"$work/chunks")) {
-          // the window grid comes from the index's own sidecar; a healed
-          // crashed APPEND already holds this boundary's batch (skip),
-          // while a healed prior-boundary COMPACTION crash repaired
-          // with an empty delta and this batch still needs its append
-          if (!broken || !batchLanded(spark, batch, s"$work/chunks",
-              chunkGrain = true))
-            Retrieval.appendToChunkBm25Index(batch, col("doc_id"),
-              col("text"), s"$work/chunks"): Unit
-        }
-        else if (Versioned.history(spark, postingsT).forall(_._1 == 0L))
-          // a FIRST build died between its index commit and the grid
-          // stamp: the table holds exactly this boundary's batch (resume
-          // re-runs the same boundary), so rebuilding from the batch is
-          // LOSSLESS — the self-heal the build path owns. Any later
-          // grid corruption falls through to the loud error below:
-          // rebuilding a multi-day index from one day's batch would
-          // silently discard every prior day.
-          Retrieval.buildChunkBm25Index(batch, col("doc_id"), col("text"),
-            s"$work/chunks", size = 32, stride = 16,
-            stopTokens = chunkStopsOf(batch),
-            stopMaxDfRatio = stopMaxDfRatio): Unit
-        else sys.error(s"$work/chunks grid sidecar is untrusted and the " +
-          "postings hold more than the first build — rebuild the chunk " +
-          "index manually from the full corpus (a one-batch rebuild here " +
-          "would silently drop prior days)")
-      }
-    }),
-    "ivf_append" -> (() => {
-      if (!Versioned.exists(spark, s"$work/ivf/centroids"))
-        Similarity.buildIvfIndex(vecs, s"$work/ivf"): Unit
-      else {
-        // a float-IVF repair restores the PRE-append state (the batch's
-        // assignment rows died with the crash — nothing of it landed),
-        // so after a repair the batch always still needs its append
-        if (ivfTablesBroken(spark, s"$work/ivf"))
-          Similarity.repairIvfIndex(spark, s"$work/ivf"): Unit
-        Similarity.appendToIvfIndex(vecs, s"$work/ivf"): Unit
-      }
-    }),
-    // the chunk ANN index — the semantic half of the chunk-grain hybrid
-    // pair the RAG stack serves ([[graft.operators.Retrieval.hybrid]]
-    // needs BOTH chunk indexes on the SAME grid);
-    // same grid-health routing and first-build self-heal as chunk_append
-    "chunk_ivf_append" -> (() => {
-      val dir = s"$work/chunk_ivf"
-      if (!Versioned.exists(spark, s"$dir/centroids"))
-        Retrieval.buildChunkIvfIndex(batch, col("doc_id"), col("text"),
-          dir, size = 32, stride = 16): Unit
-      else {
-        // float repair = catch-up to the pre-append state (see
-        // ivf_append): after it the batch always still needs its append
-        if (ivfTablesBroken(spark, dir)) {
-          Similarity.repairIvfIndex(spark, dir): Unit
-          Retrieval.restampChunkGrid(spark, dir, stampTable = "assignment")
-        }
-        if (Retrieval.chunkGridHealthy(spark, dir,
-            stampTable = "assignment"))
-          Retrieval.appendToChunkIvfIndex(batch, col("doc_id"), col("text"),
-            dir): Unit
-        else if (Versioned.history(spark, s"$dir/assignment")
-            .forall(_._1 == 0L))
-          Retrieval.buildChunkIvfIndex(batch, col("doc_id"), col("text"),
-            dir, size = 32, stride = 16): Unit
-        else sys.error(s"$dir grid sidecar is untrusted and the assignment " +
-          "holds more than the first build — rebuild the chunk ANN index " +
-          "manually from the full corpus")
-      }
-    }),
-    // the doc-keyed FORWARD index — the serve-path artifact the RAG
-    // stack reads BY DOCUMENT (context clip lengths, span-text slices,
-    // RM3 feedback mining): build day 0, appends derive the shard
-    // modulus from the index's own sidecar
-    "fwd_append" -> (() => {
-      if (!Versioned.exists(spark, s"$work/fwd/fwd"))
-        Retrieval.buildForwardIndex(batch, col("doc_id"), col("text"),
-          s"$work/fwd"): Unit
-      else {
-        // a compaction that died between its overwrite and the sidecar
-        // re-stamp leaves doc_parts stale and the append refusing with a
-        // rebuild message — the modulus is data-verifiable, so heal it
-        // here instead of wedging the daily cadence (no-op when trusted)
-        Retrieval.repairForwardIndex(spark, s"$work/fwd")
-        Retrieval.appendToForwardIndex(batch, col("doc_id"), col("text"),
-          s"$work/fwd"): Unit
-      }
-    }),
-    // the COMPRESSED chunk ANN index (IVF-PQ + rerank — the semantic arm
-    // a chunk-grain hybrid request serves at 100 TB, where the chunk-grain
-    // vector table is the largest vector artifact in the system): same
-    // grid-health routing and first-build self-heal as chunk_ivf_append
-    "chunk_pq_append" -> (() => {
-      val dir = s"$work/chunk_pq"
-      if (!Versioned.exists(spark, s"$dir/centroids"))
-        Retrieval.buildChunkIvfPqIndex(batch, col("doc_id"), col("text"),
-          dir, size = 32, stride = 16): Unit
-      else {
-        // the PQ repair COMPLETES a crashed append from the orphan
-        // full-precision vectors slice (vectors commit first) — so a
-        // healed append already holds this boundary's batch, while a
-        // healed compaction crash repaired with an empty delta and the
-        // batch still needs its append: the vectors-membership check
-        // disambiguates, exactly like batchLanded on the lexical side
-        val broken = ivfTablesBroken(spark, dir)
-        if (broken) {
-          Similarity.repairIvfIndex(spark, dir): Unit
-          Retrieval.restampChunkGrid(spark, dir, stampTable = "assignment")
-        }
-        if (Retrieval.chunkGridHealthy(spark, dir,
-            stampTable = "assignment")) {
-          if (!broken || !vectorsBatchLanded(spark, batch, dir,
-              chunkGrain = true))
-            Retrieval.appendToChunkIvfPqIndex(batch, col("doc_id"),
-              col("text"), dir): Unit
-        }
-        else if (Versioned.history(spark, s"$dir/assignment")
-            .forall(_._1 == 0L))
-          Retrieval.buildChunkIvfPqIndex(batch, col("doc_id"), col("text"),
-            dir, size = 32, stride = 16): Unit
-        else sys.error(s"$dir grid sidecar is untrusted and the assignment " +
-          "holds more than the first build — rebuild the chunk PQ index " +
-          "manually from the full corpus")
-      }
-    }),
+    })) ++
+    Indexes.map(m => s"${m.stem}_append" -> appendStage(m)) ++ Seq(
     // SUPERSEDE — the day's recrawl list: (old_id, new_id) pairs whose
     // NEW documents rode this boundary's batch through every append
     // stage above; the stage swaps the predecessors out atomically at
@@ -406,14 +268,9 @@ object DailyMaintenance {
     // text must still be physically readable for the signal
     // subtraction on a retry).
     "supersede" -> (() => supersede.foreach { up =>
-      if (!up.isEmpty) { // bounded: recrawl lists are batch-sized
-        val live = indexDirs(work).filter(d =>
-          Versioned.exists(spark, s"$d/postings") ||
-            Versioned.exists(spark, s"$d/assignment") ||
-            Versioned.exists(spark, s"$d/fwd"))
+      if (!up.isEmpty) // bounded: recrawl lists are batch-sized
         graft.operators.Supersede.supersede(spark, up, work, boundary,
           live): Unit
-      }
     }),
     // TAKEDOWN — the day's deletion list (opt-outs, DMCA, discovered
     // contamination): tombstone the documents in every serving artifact
@@ -430,10 +287,6 @@ object DailyMaintenance {
     // shared totals stay positive).
     "takedown" -> (() => takedown.foreach { td =>
       if (!td.isEmpty) { // bounded: takedown lists are tiny by nature
-        val live = indexDirs(work).filter(d =>
-          Versioned.exists(spark, s"$d/postings") ||
-            Versioned.exists(spark, s"$d/assignment") ||
-            Versioned.exists(spark, s"$d/fwd"))
         // audit provenance rides the gate table: row-level
         // reason/requested_at when the takedown feed carries them,
         // with the gate-effective boundary stamped here
@@ -462,131 +315,17 @@ object DailyMaintenance {
     // no-op. Day index = boundary / interval, so a resumed boundary
     // makes the same decision it would have made on time.
     "bpe_retrain" -> (() => {
-      val due = (boundary / intervalMs) % retrainEvery == 0
-      if (due || !Versioned.exists(spark, s"$work/bpe_model/merges"))
+      if (retrainDue || !Versioned.exists(spark, s"$work/bpe_model/merges"))
         graft.operators.Bpe.buildBpeModel(batch, col("text"), k = 40,
           s"$work/bpe_model"): Unit
     }),
     "nb_retrain" -> (() => {
-      val due = (boundary / intervalMs) % retrainEvery == 0
-      if (due || !Versioned.exists(spark, s"$work/nb_model/model"))
+      if (retrainDue || !Versioned.exists(spark, s"$work/nb_model/model"))
         Corpus.buildNbModel(batch, col("lang"), col("text"),
           s"$work/nb_model"): Unit
-    }),
-    // INDEX rebuild on the SAME retrainEvery cadence (an index whose
-    // history is still the fresh build — version 0, no appends — skips:
-    // rebuilding it would re-train from the exact distribution it was
-    // just trained on; the version gate is data-verified, where the old
-    // `boundary > 0` literal only excluded the epoch-zero boundary and
-    // immediately re-built a day-0 index on any pipeline whose first
-    // absolute day index happened to hit the cadence): IVF centroids
-    // and PQ codebooks freeze
-    // at build, FAISS-add appends degrade recall as the corpus drifts
-    // from the training distribution, and nothing turned the documented
-    // "rebuild dial" until this stage. Each rebuild re-trains from the
-    // index's OWN tables (float: assignment carries cv; PQ: the
-    // full-precision vectors table) — a fresh lockstep overwrite
-    // version; pinned consumers keep their epoch via the sidecar
-    // history; pending tombstones drop in the rewrite. A broken pair is
-    // repaired first when repair applies (a crashed APPEND — completing
-    // it keeps the batch); a repair REFUSAL is the crashed-REBUILD
-    // shape, which the rebuild itself heals via version padding, so it
-    // is tolerated rather than wedging the cadence.
-    "ivf_rebuild" -> (() => {
-      val due = (boundary / intervalMs) % retrainEvery == 0 &&
-        Versioned.exists(spark, s"$work/ivf/centroids") &&
-        Versioned.latestVersion(spark, s"$work/ivf/assignment") > 0
-      if (due) {
-        if (ivfTablesBroken(spark, s"$work/ivf"))
-          try Similarity.repairIvfIndex(spark, s"$work/ivf"): Unit
-          catch { case _: Exception => () }
-        Similarity.rebuildIvfIndex(spark, s"$work/ivf"): Unit
-      }
-    }),
-    "chunk_ivf_rebuild" -> (() => {
-      val due = (boundary / intervalMs) % retrainEvery == 0 &&
-        Versioned.exists(spark, s"$work/chunk_ivf/centroids") &&
-        Versioned.latestVersion(spark, s"$work/chunk_ivf/assignment") > 0
-      if (due) {
-        if (ivfTablesBroken(spark, s"$work/chunk_ivf"))
-          try Similarity.repairIvfIndex(spark, s"$work/chunk_ivf"): Unit
-          catch { case _: Exception => () }
-        Retrieval.rebuildChunkIvfIndex(spark, s"$work/chunk_ivf"): Unit
-      }
-    }),
-    "chunk_pq_rebuild" -> (() => {
-      val due = (boundary / intervalMs) % retrainEvery == 0 &&
-        Versioned.exists(spark, s"$work/chunk_pq/centroids") &&
-        Versioned.latestVersion(spark, s"$work/chunk_pq/assignment") > 0
-      if (due) {
-        // the PQ repair COMPLETES a crashed append from the orphan
-        // vectors slice — run it first so a rebuild never sources a
-        // snapshot that silently drops the batch
-        if (ivfTablesBroken(spark, s"$work/chunk_pq"))
-          try Similarity.repairIvfIndex(spark, s"$work/chunk_pq"): Unit
-          catch { case _: Exception => () }
-        Retrieval.rebuildChunkIvfPqIndex(spark, s"$work/chunk_pq"): Unit
-      }
-    }),
-    // Each compact stage HEALS its own crash shape first: a compaction
-    // that died between its per-table commits leaves the lockstep
-    // broken with appendDebt 0 (the first table's overwrite landed), so
-    // a resumed stage would otherwise no-op, cover the boundary with a
-    // wedged index, and leave the NEXT boundary's append stage to
-    // misread the shape as its own crashed append (the r12 silent-loss
-    // finding). Repair-then-debt-check makes the compaction crash heal
-    // AT ITS OWN BOUNDARY.
-    "bm25_compact" -> (() => {
-      if (bm25PairBroken(spark, s"$work/bm25"))
-        Retrieval.repairBm25Index(spark, s"$work/bm25"): Unit
-      if (appendDebt(spark, s"$work/bm25/postings") >= compactEvery)
-        Retrieval.compactBm25Index(spark, s"$work/bm25"): Unit
-    }),
-    "chunk_compact" -> (() => {
-      if (bm25PairBroken(spark, s"$work/chunks"))
-        Retrieval.repairBm25Index(spark, s"$work/chunks"): Unit
-      // covers BOTH stale-grid shapes: pair healed above (crash between
-      // the two table compacts) and a crash after both compacts but
-      // before the grid re-stamp (no-op when the grid is trusted)
-      Retrieval.restampChunkGrid(spark, s"$work/chunks")
-      if (appendDebt(spark, s"$work/chunks/postings") >= compactEvery)
-        // the chunk compactor also re-stamps the grid sidecar
-        Retrieval.compactChunkBm25Index(spark, s"$work/chunks"): Unit
-    }),
-    "ivf_compact" -> (() => {
-      if (ivfTablesBroken(spark, s"$work/ivf"))
-        Similarity.repairIvfIndex(spark, s"$work/ivf"): Unit
-      if (appendDebt(spark, s"$work/ivf/assignment") >= compactEvery)
-        Similarity.compactIvfIndex(spark, s"$work/ivf"): Unit
-    }),
-    "chunk_ivf_compact" -> (() => {
-      if (ivfTablesBroken(spark, s"$work/chunk_ivf"))
-        Similarity.repairIvfIndex(spark, s"$work/chunk_ivf"): Unit
-      Retrieval.restampChunkGrid(spark, s"$work/chunk_ivf",
-        stampTable = "assignment")
-      if (appendDebt(spark, s"$work/chunk_ivf/assignment") >= compactEvery)
-        // re-stamps the grid sidecar at the new overwrite version
-        Retrieval.compactChunkIvfIndex(spark, s"$work/chunk_ivf"): Unit
-    }),
-    "chunk_pq_compact" -> (() => {
-      if (ivfTablesBroken(spark, s"$work/chunk_pq"))
-        Similarity.repairIvfIndex(spark, s"$work/chunk_pq"): Unit
-      Retrieval.restampChunkGrid(spark, s"$work/chunk_pq",
-        stampTable = "assignment")
-      if (appendDebt(spark, s"$work/chunk_pq/assignment") >= compactEvery)
-        // compacts all lockstep tables + re-stamps the grid
-        Retrieval.compactChunkIvfIndex(spark, s"$work/chunk_pq"): Unit
-    }),
-    "fwd_compact" -> (() => {
-      // heal a stale doc_parts stamp (a compaction that died between
-      // its overwrite and the re-stamp) before the debt check — the
-      // compactor read-validates the modulus BEFORE rewriting, so an
-      // unhealed stale stamp would compact without ever re-stamping
-      Retrieval.repairForwardIndex(spark, s"$work/fwd")
-      if (appendDebt(spark, s"$work/fwd/fwd") >= compactEvery)
-        // re-merges per-append files and re-stamps the doc_parts sidecar
-        Retrieval.compactForwardIndex(spark, s"$work/fwd"): Unit
-    }),
+    })) ++
+    Indexes.filter(_.retrains).map(m => s"${m.stem}_rebuild" -> rebuildStage(m)) ++
+    CompactOrder.map(m => s"${m.stem}_compact" -> compactStage(m)) :+ (
     "vacuum" -> (() => {
       // the scheduler's own history accrues one tiny append per
       // (stage, attempt): compact it on the index cadence so boundary

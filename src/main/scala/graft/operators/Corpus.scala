@@ -855,15 +855,10 @@ object Corpus {
     * mid-commit crash.
     */
   def signalStateVersion(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Long = {
-    val vs = signalStateTables
-      .map(t => graft.sources.Versioned.latestVersion(spark, s"$stateDir/$t"))
-    require(vs.distinct.size == 1,
-      s"signal-state tables out of lockstep (versions ${vs.mkString(", ")}) " +
-        "— rerun buildSignalState (it repairs the dir); pinned asOf reads " +
-        "of intact versions keep working")
-    vs.head
-  }
+      stateDir: String): Long =
+    graft.sources.Versioned.lockstep(spark, stateDir, signalStateTables, None,
+      "rerun buildSignalState (it repairs the dir); pinned asOf reads of " +
+        "intact versions keep working")
 
   /** Incremental maintenance for [[buildSignalState]] — the daily
     * cadence: merge a NEW batch of documents into the frozen lookup

@@ -30,7 +30,7 @@ import graft.sources.Versioned
   * only shuffle carries (doc_id, dl, tok, tf) for the query terms alone;
   * df is |T| rows; the final ranking is TakeOrderedAndProject. The
   * query-many path is the persisted inverted index
-  * ([[buildBm25Index]] / [[queryBm25Index]]): build once, and each query
+  * ([[Index.build]] / [[queryBm25Index]]): build once, and each query
   * touches only the postings rows of its terms (predicate pushdown on
   * the token column; bucket the postings by token on a real cluster) —
   * document length is DENORMALIZED INTO the postings row exactly so a
@@ -223,7 +223,7 @@ object Retrieval {
     * score contribution (df ≈ N ⇒ BM25 idf ≈ 0) for probe bytes bounded
     * by the DISCRIMINATIVE terms' postings. Output: (tok, df),
     * vocabulary-bounded and usually a handful of rows — collect it into
-    * [[buildBm25Index]]'s `stopTokens`.
+    * an [[Index.Bm25Spec]]'s `stopTokens`.
     */
   def heavyTokens(docs: DataFrame, id: Column, text: Column,
                   maxDfRatio: Double): DataFrame = {
@@ -249,12 +249,9 @@ object Retrieval {
     * it, so the index stays internally consistent until the rebuild
     * cadence refreshes the set.
     */
-  def buildBm25Index(docs: DataFrame, id: Column, text: Column,
-                     indexDir: String, nBuckets: Int = 8,
-                     layout: String = "bucket", nPartDirs: Int = 16,
-                     stopTokens: Seq[String] = Nil,
-                     stopMaxDfRatio: Option[Double] = None,
-                     metaCols: Seq[String] = Nil): Long = {
+  private[operators] def bm25Build(docs: DataFrame, id: Column, text: Column,
+                                   indexDir: String, spec: Index.Bm25Spec): Long = {
+    import spec._
     val spark = docs.sparkSession
     val base = docs.select((id.as("doc_id") +:
         TextOps.tokens(text).as("toks") +: metaCols.map(col)): _*)
@@ -290,9 +287,7 @@ object Retrieval {
       case other => throw new IllegalArgumentException(
         s"postings layout must be bucket or partition, got $other")
     }
-    val vs = Versioned.overwrite(stats, s"$indexDir/stats")
-    require(vp == vs, s"BM25 index tables diverged: postings v$vp vs stats " +
-      s"v$vs (was $indexDir written by something other than buildBm25Index?)")
+    Versioned.overwrite(stats, s"$indexDir/stats"): Unit
     // the shard count is persisted beside the index (the chunk_grid
     // discipline): queries and appends derive tok_part from there, so
     // there is no way to probe or append with a mismatched modulus
@@ -314,7 +309,7 @@ object Retrieval {
     * index); a stale EMPTY list is inert (filtering with the empty set is
     * the identity); a stale NON-empty list throws — the cap status of the
     * head snapshot is unknowable, and appending with a maybe-wrong set is
-    * silent ranking corruption, not degradation. [[repairBm25Index]]
+    * silent ranking corruption, not degradation. [[Index.repair]]
     * restores the stamp after the pure-rewrite content check.
     */
   private def stopStateOf(spark: SparkSession,
@@ -326,22 +321,9 @@ object Retrieval {
         case Some(_) => throw new IllegalArgumentException(
           s"$indexDir ${Stamp.StopToks.name} sidecar is STALE (a " +
             "compaction or rebuild died between its postings commit and " +
-            "the re-stamp) — run repairBm25Index to restore it, or " +
+            "the re-stamp) — run Index.repair to restore it, or " +
             "rebuild the index")
       })
-
-  /** Re-stamp the BM25 sidecars after a repair restored lockstep: the
-    * shard modulus of a partition layout (data-verified: a crashed
-    * REBUILD with a different modulus must never get the old stamp
-    * blessed — probes would prune to the wrong shards) and a legacy
-    * stop list (blessed only when the head overwrite is a pure rewrite
-    * of its predecessor: true for a crashed compaction, false for any
-    * content-changing rebuild). Both no-op when already trusted.
-    */
-  private def restampBm25(spark: SparkSession, indexDir: String): Unit = {
-    Stamp.restamp(spark, indexDir, Stamp.TokParts)
-    Stamp.restamp(spark, indexDir, Stamp.StopToks)
-  }
 
   // --------------------------------------------------- tombstone gating
   //
@@ -379,22 +361,24 @@ object Retrieval {
     * rows append FIRST, then the 1-row stats table merges additively
     * and commits at the EXPECTED version (CAS). A crash — or a lost
     * CAS race — between the two commits leaves the batch's postings as
-    * an ORPHAN SLICE ON DISK, from which [[repairBm25Index]] recomputes
+    * an ORPHAN SLICE ON DISK, from which [[Index.repair]] recomputes
     * the stats delta exactly (document length is denormalized into
     * every postings row). The reverse order was unwedgeable: the missed
     * postings delta was the batch itself, gone with the crashed
     * process. On a CAS failure do NOT re-append the same batch (its
-    * postings are already committed) — run [[repairBm25Index]], which
+    * postings are already committed) — run [[Index.repair]], which
     * folds the orphan slice's stats in and completes the append.
     */
   def appendToBm25Index(batch: DataFrame, id: Column, text: Column,
-                        indexDir: String): Long = {
+                        indexDir: String): Long =
+    Index.append(Index.Text(batch, id, text), indexDir)
+
+  /** [[appendToBm25Index]]'s body, on a dir [[Index.append]] checked is
+    * in lockstep. */
+  private[operators] def bm25Append(batch: DataFrame, id: Column, text: Column,
+                                    indexDir: String): Long = {
     val spark = batch.sparkSession
     val vStats = Versioned.latestVersion(spark, s"$indexDir/stats")
-    val vPost  = Versioned.latestVersion(spark, s"$indexDir/postings")
-    require(vPost == vStats, s"BM25 index tables out of lockstep (postings " +
-      s"v$vPost, stats v$vStats) — a build or append crashed between " +
-      "commits; run repairBm25Index, then retry")
     // a metadata-carrying index keeps its filtered-probe contract
     // through appends: the batch must supply the SAME baked columns
     // (the Similarity.withMeta discipline at the lexical layer)
@@ -429,22 +413,19 @@ object Retrieval {
           s"$indexDir postings are partition-laid-out but the " +
             s"${Stamp.TokParts.name} sidecar is absent or stale (a rebuild " +
             "crashed between its commit and the stamp) — rebuild with " +
-            "buildBm25Index"))
+            "Index.build"))
         Versioned.appendPartitioned(
           postings.withColumn("tok_part", tokPartExpr(col("tok"), n)),
           s"$indexDir/postings", "tok_part")
       }
-    val vs =
-      try Versioned.overwriteExpecting(merged, s"$indexDir/stats", vStats + 1)
-      catch { case e: IllegalArgumentException =>
-        throw new IllegalStateException(s"BM25 stats CAS failed after the " +
-          s"batch's postings committed (v$vp) on $indexDir — the postings " +
-          "are an orphan slice now; run repairBm25Index to fold their " +
-          "stats in. Do NOT re-append the same batch (its postings would " +
-          "land twice).", e)
-      }
-    require(vp == vs, s"BM25 append left tables out of lockstep (postings " +
-      s"v$vp, stats v$vs) — run repairBm25Index")
+    try Versioned.overwriteExpecting(merged, s"$indexDir/stats", vStats + 1): Unit
+    catch { case e: IllegalArgumentException =>
+      throw new IllegalStateException(s"BM25 stats CAS failed after the " +
+        s"batch's postings committed (v$vp) on $indexDir — the postings " +
+        s"are an orphan slice now; ${Index.Bm25.remedy} to fold their " +
+        "stats in. Do NOT re-append the same batch (its postings would " +
+        "land twice).", e)
+    }
     vp
   }
 
@@ -471,12 +452,12 @@ object Retrieval {
     *
     * NOT covered: a chunk-grain index whose BUILD crashed before the
     * grid sidecar landed — the window grid lived only in the crashed
-    * caller; rebuild with [[buildChunkBm25Index]] (the DailyMaintenance
+    * caller; rebuild it at Chunks grain (the DailyMaintenance
     * chunk stage self-heals exactly that way). A stats-AHEAD shape is
     * refused: no code path here produces it, so it signals foreign
     * writes. Returns the restored lockstep version; no-op when intact.
     */
-  def repairBm25Index(spark: SparkSession, indexDir: String): Long = {
+  private[operators] def bm25Repair(spark: SparkSession, indexDir: String): Long = {
     val postT = s"$indexDir/postings"
     val statT = s"$indexDir/stats"
     require(Versioned.exists(spark, postT),
@@ -491,17 +472,10 @@ object Retrieval {
       var v = Versioned.overwrite(full, statT)
       while (v < vp)
         v = Versioned.overwrite(Versioned.read(spark, statT, Some(v)), statT)
-      restampBm25(spark, indexDir)
       return v
     }
     val vs = Versioned.latestVersion(spark, statT)
-    if (vp == vs) {
-      // lockstep intact, but a compaction may still have died between
-      // its table commits and a sidecar re-stamp — both restamps no-op
-      // when already trusted
-      restampBm25(spark, indexDir)
-      return vp
-    }
+    if (vp == vs) return vp
     require(vp > vs, s"$indexDir stats v$vs is AHEAD of postings v$vp — " +
       "not the orphan-postings crash shape (no BM25 code path produces " +
       "it); rebuild into a fresh directory")
@@ -533,7 +507,6 @@ object Retrieval {
     while (v < vp)
       v = Versioned.overwriteExpecting(
         Versioned.read(spark, statT, Some(v)), statT, v + 1)
-    restampBm25(spark, indexDir)
     v
   }
 
@@ -545,11 +518,16 @@ object Retrieval {
     * last declared layout). BOTH tables compact so versions stay in
     * lockstep, POSTINGS FIRST: a crash between the two commits leaves
     * postings one version ahead with IDENTICAL content, which
-    * [[repairBm25Index]] heals with an empty-delta catch-up commit —
+    * [[Index.repair]] heals with an empty-delta catch-up commit —
     * the stats-first order would leave the unrepairable stats-ahead
     * shape.
     */
-  def compactBm25Index(spark: SparkSession, indexDir: String): Long = {
+  def compactBm25Index(spark: SparkSession, indexDir: String): Long =
+    Index.compact(spark, indexDir)
+
+  /** [[compactBm25Index]]'s body ([[Index.compact]] re-stamps a chunk
+    * index's grid after it). */
+  private[operators] def bm25Compact(spark: SparkSession, indexDir: String): Long = {
     val postT = s"$indexDir/postings"
     val statT = s"$indexDir/stats"
     // a partition-layout index re-stamps its shard sidecar — and a
@@ -557,7 +535,7 @@ object Retrieval {
     // (compaction is an overwrite); both are read-validated BEFORE the
     // rewrite moves the stamp (a stale legacy state is never blessed
     // here: the compact proceeds and the index stays refused until
-    // repairBm25Index adjudicates it)
+    // Index.repair adjudicates it)
     val nParts = Stamp.read(spark, indexDir, Stamp.TokParts)
     val state: Option[(Seq[String], Option[Double])] =
       try Some(stopStateOf(spark, indexDir))
@@ -590,7 +568,7 @@ object Retrieval {
     // (post-merge df/cf derive per-query from the dropped postings).
     // The dropped (doc, dl) set comes off the postings BEFORE the
     // rewrite; the 1-row aggregate is a bounded control read. Known
-    // epsilon (shared with repairBm25Index): a tombstoned document whose
+    // epsilon (shared with bm25Repair): a tombstoned document whose
     // every token was stop-capped has no postings row, so its length
     // stays in stats — a rebuild restores exact stats.
     val docX = docKeyExpr(spark, indexDir, col("doc_id"))
@@ -615,19 +593,16 @@ object Retrieval {
         Versioned.overwriteLike(
           Tombstones.gate(spark, indexDir, recapFiltered, docX), postT)
       }
-    val vs =
-      if (nGone == 0L) Versioned.compact(spark, statT)
-      else {
+    if (nGone == 0L) Versioned.compact(spark, statT): Unit
+    else {
         // postings committed first, so a crash here leaves the
-        // postings-ahead-with-REMOVED-content shape repairBm25Index
+        // postings-ahead-with-REMOVED-content shape bm25Repair
         // heals (it subtracts exactly the tombstoned gone-docs' stats)
         val corrected = Versioned.read(spark, statT).select(
           (col("n_docs") - lit(nGone)).cast("long").as("n_docs"),
           (col("sum_dl") - lit(dlGone)).cast("long").as("sum_dl"))
-        Versioned.overwriteExpecting(corrected, statT, vp)
-      }
-    require(vp == vs, s"BM25 compaction left tables out of lockstep " +
-      s"(postings v$vp, stats v$vs) — run repairBm25Index")
+        Versioned.overwriteExpecting(corrected, statT, vp): Unit
+    }
     nParts.foreach(Stamp.write(spark, indexDir, Stamp.TokParts, _, vp))
     recapped.foreach(Stamp.write(spark, indexDir, Stamp.StopToks, _, vp))
     vp
@@ -649,28 +624,25 @@ object Retrieval {
       case None => posts
     }
 
-  /** The tables an index writer commits together, whichever family the
-    * dir holds: BM25 {postings, stats}, IVF {centroids, assignment},
-    * IVF-PQ {vectors, centroids, codebook, assignment}. */
-  private val IndexTables =
-    Seq("postings", "stats", "vectors", "centroids", "codebook", "assignment")
-
   /** The version a read of the index at `indexDir` pins
-    * ([[Versioned.lockstep]] over its tables): `asOf` itself, or the
-    * latest version all its tables share — a wedged dir refuses naming
-    * its family's repair. Every index probe and every serving stream
-    * pins through here.
+    * ([[Versioned.lockstep]] over its family's declared tables,
+    * [[Index.Family]]): `asOf` itself, or the latest version all of them
+    * share — a wedged dir, or one missing a declared table, refuses
+    * naming its family's remedy. Every index probe and every serving
+    * stream pins through here.
     */
   private[graft] def pinIndex(spark: SparkSession, indexDir: String,
                                asOf: Option[Long] = None): Long =
-    Versioned.lockstep(spark, indexDir, IndexTables, asOf,
-      (if (Versioned.exists(spark, s"$indexDir/postings")) "run repairBm25Index"
-       else "run repairIvfIndex") + ", or pin an intact version with asOf")
+    asOf.getOrElse {
+      val fam = Index.tablesFamily(spark, indexDir)
+      Versioned.lockstep(spark, indexDir, fam.tables, None,
+        fam.remedy + ", or pin an intact version with asOf")
+    }
 
   // ------------------------------------------------ lexical probe request
 
   /** A single-index LEXICAL probe request over a persisted BM25 index
-    * ([[buildBm25Index]] or [[buildChunkBm25Index]] — the dir's own
+    * ([[Index.build]] with a [[Index.Bm25Spec]] at either grain — the dir's own
     * chunk_grid sidecar decides the grain, never a caller flag):
     *
     *  - BM25 by default, scored IDENTICALLY to the inline [[bm25TopK]]
@@ -797,7 +769,8 @@ object Retrieval {
     // read only when used: each read resolves the table's log, and the
     // batch plan's probe join reads the postings itself
     lazy val posts = Versioned.read(spark, s"${req.dir}/postings", req.asOf)
-    req.predicate.foreach(requirePostingsPredicate(req.dir, posts, _))
+    req.predicate.foreach(requirePredicate(req.dir, "postings", posts,
+      postingsMetaCols(posts), _))
     input match {
       case Left(terms) => (shardPruned(spark, req.dir, posts, terms, req.asOf)
         .filter(col("tok").isInCollection(terms)), Nil)
@@ -846,27 +819,31 @@ object Retrieval {
 
   /** Postings columns beyond the core shape = caller-baked metadata
     * (the filtered-probe gate columns). */
-  private def postingsMetaCols(posts: DataFrame): Seq[String] =
+  private[operators] def postingsMetaCols(posts: DataFrame): Seq[String] =
     posts.columns.toSeq.filterNot(
       Set("tok", "doc_id", "tf", "dl", "positions", "tok_part"))
 
-  private def requirePostingsPredicate(indexDir: String, posts: DataFrame,
-                                       predicate: Column): Unit =
-    try posts.filter(predicate).queryExecution.analyzed: Unit
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$indexDir postings cannot resolve the probe predicate " +
-            s"`$predicate` — the filtered probe gates candidates inside " +
-            "the token-pruned scan, so the predicate may only reference " +
-            "columns baked into the index at build (metaCols; available " +
-            s"metadata here: ${postingsMetaCols(posts) match {
-              case Nil => "none — this index was built without metaCols"
-              case ms => ms.mkString(", ")
-            }}). Rebuild with the column in metaCols, or gate through a " +
-            s"doc-meta relation joined post-probe. Analyzer: ${
-              e.getSimpleMessage}", e)
-    }
+  /** Refuse a probe predicate naming a column the index `table` does not
+    * carry: silently scoring an UNfiltered stream would be a wrong
+    * answer, not a degradation. The check compares the predicate's
+    * referenced column names with the schema — no analysis is run, so a
+    * refusal leaves no failed query behind for Spark's listeners to log.
+    */
+  private[operators] def requirePredicate(indexDir: String, table: String,
+                                          rows: DataFrame, meta: Seq[String],
+                                          predicate: Column): Unit = {
+    val have = rows.columns.map(_.toLowerCase).toSet
+    val missing = org.apache.spark.sql.GraftColumnBridge.references(predicate)
+      .filterNot(c => have(c.toLowerCase)).distinct
+    require(missing.isEmpty, s"$indexDir $table cannot resolve the probe " +
+      s"predicate `$predicate` (no column ${missing.mkString(", ")}) — the " +
+      "filtered probe gates candidates inside the scan, so the predicate " +
+      "may only reference columns baked into the index at build (metaCols; " +
+      s"available metadata here: ${if (meta.isEmpty) "none — this index " +
+        "was built without metaCols" else meta.mkString(", ")}). Rebuild " +
+      "with the column in metaCols, or gate through a relation joined " +
+      "post-probe.")
+  }
 
   /** The batch postings probe: the (query, posting) equality join
     * BEFORE scoring. The term set is data, not a literal, so nothing
@@ -999,7 +976,7 @@ object Retrieval {
     * token-ordered layout scatters the kFb feedback docs' rows across
     * every bucket, so doc-id pruning has nothing to prune, and a
     * deployment that expands every query pays a corpus-sized read per
-    * batch. With `forwardDir` (a [[buildForwardIndex]] artifact over
+    * batch. With `forwardDir` (a [[Index.ForwardSpec]] artifact over
     * the SAME corpus) the feedback docs' tf/dl mine from the doc-keyed
     * forward rows instead: the kFb ids broadcast onto the forward scan
     * and DPP prunes to their doc-shard directories — mining bytes
@@ -1128,7 +1105,7 @@ object Retrieval {
     * guarded in-plan against the overflow range. Shared by the inline
     * ranker and the persisted-index builder.
     */
-  private def chunkKeyed(docs: DataFrame, id: Column, text: Column,
+  private[operators] def chunkKeyed(docs: DataFrame, id: Column, text: Column,
                          size: Int, stride: Int,
                          metaCols: Seq[String] = Nil): DataFrame = {
     val chunked = Corpus.chunk(docs, id, text, size, stride)
@@ -1165,23 +1142,10 @@ object Retrieval {
     decodeChunkKey(bm25TopK(chunkKeyed(docs, id, text, size, stride),
       col("ck"), col("chunk_text"), terms, k))
 
-  /** The serve-many RAG path — the persisted-index machinery is
-    * grain-agnostic, so the chunk index IS [[buildBm25Index]] over the
-    * keyed windows: postings at chunk grain (dl = chunk length, df =
-    * chunk frequency), bucketed by token, FAISS-add appends and
-    * time travel included. A probe reads its terms' buckets' bytes,
-    * never the chunk corpus.
-    *
-    * The window GRID (size, stride) is persisted beside the index and
-    * appends derive it from there (the pqResGuard discipline — a
-    * caller-supplied grid that disagreed with the build's would
-    * interleave incompatible spans silently). The grid is immutable
-    * for an index's lifetime: changing it is a rebuild, not an append.
-    */
   /** [[heavyTokens]] at CHUNK grain — df counts chunks containing the
     * token (what the chunk index's postings lists are sized by), over
     * the same window grid the index will use. The stop-set derivation
-    * for a df-capped [[buildChunkBm25Index]].
+    * for a df-capped chunk-grain [[Index.Bm25Spec]] build.
     */
   def heavyChunkTokens(docs: DataFrame, id: Column, text: Column,
                        size: Int, stride: Int,
@@ -1189,36 +1153,9 @@ object Retrieval {
     heavyTokens(chunkKeyed(docs, id, text, size, stride),
       col("ck"), col("chunk_text"), maxDfRatio)
 
-  def buildChunkBm25Index(docs: DataFrame, id: Column, text: Column,
-                          indexDir: String, size: Int, stride: Int,
-                          nBuckets: Int = 8,
-                          stopTokens: Seq[String] = Nil,
-                          stopMaxDfRatio: Option[Double] = None,
-                          metaCols: Seq[String] = Nil): Long = {
-    require(size > 0 && stride > 0)
-    // the df cap applies at chunk grain too — at 100 TB the chunk index
-    // is the LARGER postings artifact, and a stop token's chunk-grain
-    // list is size/stride× the doc-grain one; appends inherit the
-    // frozen set through the shared stop_toks sidecar, and a recorded
-    // ratio has [[compactBm25Index]] re-derive the set over the grown
-    // chunk corpus (chunk-grain df: chunks containing the token).
-    // metaCols: chunks inherit their document's gate columns, so
-    // a filtered [[lexical]] request gates spans inside the pruned scan
-    val v = buildBm25Index(chunkKeyed(docs, id, text, size, stride, metaCols),
-      col("ck"), col("chunk_text"), indexDir, nBuckets,
-      stopTokens = stopTokens, stopMaxDfRatio = stopMaxDfRatio,
-      metaCols = metaCols)
-    // sidecar AFTER the build commits, stamped with the overwrite
-    // version it describes: a rebuild that dies between the two writes
-    // leaves a version mismatch chunkGrid() refuses loudly, instead of
-    // a stale grid silently mis-chunking the next append
-    Stamp.write(docs.sparkSession, indexDir, lexGrid, (size, stride), v)
-    v
-  }
-
-  /** The grid kinds of the chunk BM25 and chunk ANN indexes. */
+  /** The grid kind of the chunk BM25 index (the chunk ANN kind shares
+    * its file name). */
   private val lexGrid = Stamp.chunkGrid("postings")
-  private val annGrid = Stamp.chunkGrid("assignment")
 
   /** The build-time window grid of a chunk-grain index, trusted ONLY
     * when its stamp matches the postings' current overwrite snapshot.
@@ -1235,7 +1172,7 @@ object Retrieval {
     Stamp.read(spark, indexDir, k).getOrElse {
       require(Stamp.exists(spark, indexDir, k), s"$indexDir carries no " +
         s"${k.name} sidecar — not a chunk-grain index (or a pre-grid " +
-        "build); rebuild with buildChunkBm25Index / buildChunkIvfIndex")
+        "build); rebuild with Index.build at Chunks grain")
       val v = Stamp.recorded(spark, indexDir, k).map(_._2).getOrElse(
         sys.error(s"$indexDir ${k.name} sidecar is corrupt — a crashed " +
           "write; rebuild the index"))
@@ -1245,72 +1182,6 @@ object Retrieval {
         "commit and the grid stamp, so the recorded grid cannot be " +
         "trusted to describe the current build; rebuild the index")
     }
-  }
-
-  /** True iff the chunk_grid sidecar is present, parseable, and its
-    * stamp matches the stamp table's current overwrite snapshot — the
-    * routing predicate a self-healing maintenance stage uses to decide
-    * build-vs-append (a crashed build leaves tables without a trusted
-    * grid; the heal is a rebuild, which the build path owns).
-    */
-  def chunkGridHealthy(spark: SparkSession, indexDir: String,
-                       stampTable: String = "postings"): Boolean =
-    try { chunkGrid(spark, indexDir, stampTable); true }
-    catch { case _: Exception => false }
-
-  /** Re-stamp the chunk_grid sidecar after a crashed COMPACTION moved
-    * the stamp table's overwrite snapshot past the stamp — the
-    * [[Stamp.restamp]] discipline applied to the grid: without it the
-    * index is permanently refused even though the recorded grid is
-    * fully recoverable, and a maintenance-grain operator that obeyed
-    * the rebuild message would rebuild from one day's batch, silently
-    * dropping prior days. The stamp is restored ONLY when the current
-    * overwrite snapshot's content is IDENTICAL to the version before it
-    * — true for a compaction (a pure rewrite), false for a
-    * grid-CHANGING rebuild (different window ⇒ different ck keys ⇒
-    * different rows), which stays refused with the manual-rebuild
-    * message. No-op when the grid is already trusted, the sidecar is
-    * absent/corrupt, or nothing on disk can prove the rewrite was pure.
-    * Content comparison is a maintenance-cadence cost, paid only on the
-    * crash-recovery path.
-    */
-  def restampChunkGrid(spark: SparkSession, indexDir: String,
-                       stampTable: String = "postings"): Unit =
-    Stamp.restamp(spark, indexDir, Stamp.chunkGrid(stampTable))
-
-  /** Compact the chunk index ([[compactBm25Index]] — re-establishes
-    * the bucketed layout in lockstep) and RE-STAMP the grid sidecar at
-    * the new overwrite version. Use this, not the raw compactor, on
-    * chunk indexes. The grid is validated BEFORE compacting; a death
-    * between the compaction commit and the re-stamp leaves every
-    * consumer refusing loudly (stale stamp) — recovery is a rebuild,
-    * the same fail-safe as a crashed grid-changing rebuild, because
-    * nothing on disk can prove the recorded grid describes the
-    * current snapshot.
-    */
-  def compactChunkBm25Index(spark: SparkSession, indexDir: String): Long = {
-    val (size, stride) = chunkGrid(spark, indexDir)
-    val v = compactBm25Index(spark, indexDir)
-    Stamp.write(spark, indexDir, lexGrid, (size, stride), v)
-    v
-  }
-
-  /** Append a document batch's chunks to the chunk-grain index —
-    * [[appendToBm25Index]] semantics (new keys only, stats merge under
-    * CAS). The window grid comes from the index's own sidecar, never
-    * from the caller: there is no way to append a mismatched grid.
-    */
-  def appendToChunkBm25Index(batch: DataFrame, id: Column, text: Column,
-                             indexDir: String): Long = {
-    val spark = batch.sparkSession
-    val (size, stride) = chunkGrid(spark, indexDir)
-    // a metadata-carrying chunk index derives its gate columns from the
-    // index itself, never the caller — appendToBm25Index then enforces
-    // the batch actually supplies them
-    val meta = postingsMetaCols(Versioned.read(spark, s"$indexDir/postings"))
-    appendToBm25Index(chunkKeyed(batch, id, text, size, stride,
-        meta.filter(batch.columns.contains)),
-      col("ck"), col("chunk_text"), indexDir)
   }
 
   // ------------------------------------------------------------ fusion
@@ -1402,7 +1273,7 @@ object Retrieval {
     def score: String
   }
 
-  /** The float IVF index ([[Similarity.buildIvfIndex]]): cosine `sim`
+  /** The float IVF index ([[ivfBuild]]): cosine `sim`
     * over the `nProbes` probed buckets. */
   final case class Ivf(dir: String, nProbes: Int = 4,
                        asOf: Option[Long] = None) extends SemanticArm {
@@ -1419,7 +1290,7 @@ object Retrieval {
     def score: String = "qdot"
   }
 
-  /** The COMPRESSED IVF-PQ index ([[Similarity.buildIvfPqIndex]]): the
+  /** The COMPRESSED IVF-PQ index ([[Index.PqSpec]]): the
     * ADC scan of the probed buckets' code rows (`pqdot`), and with
     * `alpha = Some(a)` the exact re-rank: the ADC scan shortlists k·a
     * candidates per query at code-width bytes, and the exact `dot`
@@ -1525,51 +1396,12 @@ object Retrieval {
     hybrid(spark, Hybrid(bm25Dir, Ivf(ivfDir, nProbes, ivfAsOf), bm25AsOf,
       kEach = kEach, c = c), queries, k)
 
-  // --------------------------------------------- chunk-grain hybrid RAG
-
-  /** Build the chunk-grain ANN index — the semantic twin of
-    * [[buildChunkBm25Index]]: documents chunk into the same keyed
-    * windows, each chunk embeds via the deterministic feature-hash
-    * encoder ([[Corpus.hashEmbed]] — the SQL-replayable stand-in for a
-    * neural encoder; a deployment swaps in its model's vectors at this
-    * exact seam), and the vectors build a persisted IVF index keyed by
-    * ck. The window grid persists beside the index stamped against the
-    * ASSIGNMENT table's overwrite snapshot, so the fusion path can
-    * refuse to fuse two indexes chunked on different grids.
-    */
-  def buildChunkIvfIndex(docs: DataFrame, id: Column, text: Column,
-                         indexDir: String, size: Int, stride: Int,
-                         dim: Int = 64, nCentroids: Int = 16,
-                         lloydIters: Int = 0, nBuckets: Int = 8,
-                         metaCols: Seq[String] = Nil): Long = {
-    require(size > 0 && stride > 0)
-    val v = Similarity.buildIvfIndex(
-      chunkVecs(docs, id, text, size, stride, dim, metaCols), indexDir,
-      nCentroids, lloydIters, nBuckets, metaCols = metaCols)
-    Stamp.write(docs.sparkSession, indexDir, annGrid, (size, stride), v)
-    v
-  }
-
-  /** Append a document batch's chunks to the chunk-grain ANN index:
-    * grid from the index's own sidecar (no way to append a mismatched
-    * window), embeddings from the SAME feature-hash encoder (`dim`
-    * must match the build's), then FAISS-add semantics via
-    * [[Similarity.appendToIvfIndex]] (frozen centroids). Assignment
-    * APPENDS keep the grid stamp valid — only rebuilds and compactions
-    * move the overwrite snapshot, and [[compactChunkIvfIndex]]
-    * re-stamps.
-    */
-  def appendToChunkIvfIndex(batch: DataFrame, id: Column, text: Column,
-                            indexDir: String, dim: Int = 64): Long =
-    Similarity.appendToIvfIndex(
-      appendedChunkVecs(batch, id, text, indexDir, dim), indexDir)
-
   /** A document batch as chunk-grain ANN rows (id = ck, vec, gate
     * columns): chunked on the grid, each chunk embedded
     * ([[Corpus.hashEmbed]]), and each chunk carrying its document's
     * gate columns (chunkKeyed inherited them) so the filtered probe
     * gates spans inside the probed buckets. */
-  private def chunkVecs(docs: DataFrame, id: Column, text: Column,
+  private[operators] def chunkVecs(docs: DataFrame, id: Column, text: Column,
                         size: Int, stride: Int, dim: Int,
                         metaCols: Seq[String]): DataFrame = {
     val chunked = chunkKeyed(docs, id, text, size, stride, metaCols)
@@ -1578,105 +1410,6 @@ object Retrieval {
     else vecs.join(
       chunked.select((col("ck").as("id") +: metaCols.map(col)): _*), Seq("id"))
   }
-
-  /** [[chunkVecs]] for an append: the grid from the index's own
-    * sidecar, and the index's gate columns the batch carries (the
-    * underlying append enforces it supplies all of them). */
-  private def appendedChunkVecs(batch: DataFrame, id: Column, text: Column,
-                                indexDir: String, dim: Int): DataFrame = {
-    val spark = batch.sparkSession
-    val (size, stride) = chunkGrid(spark, indexDir, stampTable = "assignment")
-    chunkVecs(batch, id, text, size, stride, dim,
-      Similarity.indexMetaCols(spark, indexDir).filter(batch.columns.contains))
-  }
-
-  /** Compact the chunk-grain ANN index and RE-STAMP its grid sidecar
-    * at the new overwrite version — the [[compactChunkBm25Index]]
-    * discipline; use this, not the raw [[Similarity.compactIvfIndex]],
-    * on chunk indexes. Handles both the plain-float and the IVF-PQ
-    * chunk index (the compactor compacts whichever of
-    * centroids/codebook/assignment exist, in lockstep).
-    */
-  def compactChunkIvfIndex(spark: SparkSession, indexDir: String): Long = {
-    val (size, stride) = chunkGrid(spark, indexDir, stampTable = "assignment")
-    val v = Similarity.compactIvfIndex(spark, indexDir)
-    Stamp.write(spark, indexDir, annGrid, (size, stride), v)
-    v
-  }
-
-  /** Run a RETRAIN `rebuild` of a chunk ANN dir and re-stamp the grid at
-    * its overwrite (the grid itself is immutable across a retrain — same
-    * windows, fresh centroids). The grid reads stamp-UNvalidated
-    * ([[Stamp.recorded]]): a stale stamp left by a crashed prior rebuild
-    * must not wedge the retrain cadence, and the rebuild sources from the
-    * last LOCKSTEP snapshot — the era the recorded grid describes — then
-    * makes the stamp true again at its own commit.
-    */
-  private def regridded(spark: SparkSession, indexDir: String,
-                        builder: String)(rebuild: => Long): Long = {
-    val grid = Stamp.recorded(spark, indexDir, annGrid).map(_._1)
-      .getOrElse(sys.error(s"$indexDir carries no parseable " +
-        s"${annGrid.name} sidecar — rebuild from the corpus with $builder"))
-    val v = rebuild
-    Stamp.write(spark, indexDir, annGrid, grid, v)
-    v
-  }
-
-  /** [[Similarity.rebuildIvfIndex]] on a CHUNK-grain dir ([[regridded]]). */
-  def rebuildChunkIvfIndex(spark: SparkSession, indexDir: String,
-                           lloydIters: Int = 0): Long =
-    regridded(spark, indexDir, "buildChunkIvfIndex")(
-      Similarity.rebuildIvfIndex(spark, indexDir, lloydIters))
-
-  /** [[Similarity.rebuildIvfPqIndex]] on a CHUNK-grain dir
-    * ([[regridded]]). */
-  def rebuildChunkIvfPqIndex(spark: SparkSession, indexDir: String,
-                             pqLloydIters: Int = 0,
-                             lloydIters: Int = 0): Long =
-    regridded(spark, indexDir, "buildChunkIvfPqIndex")(
-      Similarity.rebuildIvfPqIndex(spark, indexDir, pqLloydIters, lloydIters))
-
-  /** Build the COMPRESSED chunk-grain ANN index — [[buildChunkIvfIndex]]
-    * with the assignment storing m-byte PQ codes instead of float
-    * vectors ([[Similarity.buildIvfPqIndex]]). At 100 TB the chunk-grain
-    * vector table is the LARGEST vector artifact in the system (every
-    * document explodes into size/stride windows), which is exactly
-    * where PQ's ~32× byte cut pays most: a probe moves
-    * ~nProbes/nCentroids ÷ 32 of the float-index bytes, and the exact
-    * re-rank (a [[Pq]] arm with `alpha`, alone or in [[hybrid]]) closes
-    * the reconstruction-error recall gap at |Q|·kEach·alpha exact dots.
-    * Same grid-sidecar discipline as
-    * the float index — stamped against the assignment's overwrite
-    * snapshot, so fusion refuses mismatched grids.
-    */
-  def buildChunkIvfPqIndex(docs: DataFrame, id: Column, text: Column,
-                           indexDir: String, size: Int, stride: Int,
-                           dim: Int = 64, nCentroids: Int = 16,
-                           m: Int = 8, ks: Int = 16,
-                           pqLloydIters: Int = 0, lloydIters: Int = 0,
-                           residual: Boolean = false,
-                           nBuckets: Int = 8,
-                           metaCols: Seq[String] = Nil): Long = {
-    require(size > 0 && stride > 0)
-    val v = Similarity.buildIvfPqIndex(
-      chunkVecs(docs, id, text, size, stride, dim, metaCols), indexDir,
-      nCentroids, m, ks, pqLloydIters, lloydIters, dim, residual, nBuckets,
-      metaCols = metaCols)
-    Stamp.write(docs.sparkSession, indexDir, annGrid, (size, stride), v)
-    v
-  }
-
-  /** Append a document batch's chunks to the compressed chunk ANN
-    * index: grid from the sidecar, embeddings from the same
-    * feature-hash encoder, then FAISS-add on the frozen centroids +
-    * codebook ([[Similarity.appendToIvfPqIndex]]).
-    */
-  def appendToChunkIvfPqIndex(batch: DataFrame, id: Column, text: Column,
-                              indexDir: String, dim: Int = 64, m: Int = 8,
-                              residual: Boolean = false): Long =
-    Similarity.appendToIvfPqIndex(
-      appendedChunkVecs(batch, id, text, indexDir, dim), indexDir, m, dim,
-      residual)
 
   /** LATE-INTERACTION (multi-vector) re-rank — ColBERT's maxsim
     * (Khattab & Zaharia, SIGIR 2020) bounded to the serving shape a
@@ -2013,19 +1746,24 @@ object Retrieval {
     * discipline); parquet column pruning means a length-only consumer
     * ([[assembleContextIndexed]]) never reads the token arrays.
     */
-  def buildForwardIndex(docs: DataFrame, id: Column, text: Column,
-                        indexDir: String, nPartDirs: Int = 0): Long = {
+  private[operators] def fwdBuild(docs: DataFrame, id: Column, text: Column,
+                                  indexDir: String, nPartDirs: Int): Long = {
     require(nPartDirs >= 0, s"need nPartDirs >= 0 (0 = auto), got $nPartDirs")
     val n = if (nPartDirs > 0) nPartDirs else autoDocShards(docs.count())
-    val rows = docs.select(id.as("doc_id"), TextOps.tokens(text).as("toks"))
+    val v = Versioned.overwritePartitioned(fwdRows(docs, id, text, n),
+      s"$indexDir/fwd", "doc_part")
+    Stamp.write(docs.sparkSession, indexDir, Stamp.DocParts, n, v)
+    v
+  }
+
+  /** Forward rows (doc_id, dl, toks, doc_part) on doc-shard modulus `n`. */
+  private def fwdRows(docs: DataFrame, id: Column, text: Column,
+                      n: Int): DataFrame =
+    docs.select(id.as("doc_id"), TextOps.tokens(text).as("toks"))
       .select(col("doc_id"),
         org.apache.spark.sql.functions.size(col("toks")).cast("long").as("dl"),
         col("toks"),
         pmod(col("doc_id"), lit(n.toLong)).as("doc_part"))
-    val v = Versioned.overwritePartitioned(rows, s"$indexDir/fwd", "doc_part")
-    Stamp.write(docs.sparkSession, indexDir, Stamp.DocParts, n, v)
-    v
-  }
 
   /** Auto-sized doc_part modulus: ~64 documents of token arrays per
     * shard directory (a few hundred KB — shard bytes, not shard count,
@@ -2035,7 +1773,7 @@ object Retrieval {
     * FIXED modulus makes probed bytes grow linearly with the corpus (a
     * probed shard is read whole, and shards fatten as the corpus grows
     * — the r12 rag_serve residual slope); sizing it from the corpus
-    * count at build, and re-deriving at [[compactForwardIndex]], keeps
+    * count at build, and re-deriving at [[fwdCompact]], keeps
     * shard bytes — and therefore a fixed serving batch's read — flat.
     */
   private[operators] def autoDocShards(count: Long): Int =
@@ -2048,19 +1786,14 @@ object Retrieval {
     * partitioned layout and the stamp stays valid (appends never move
     * the overwrite snapshot it tracks).
     */
-  def appendToForwardIndex(batch: DataFrame, id: Column, text: Column,
-                           indexDir: String): Long = {
-    val spark = batch.sparkSession
-    val n = Stamp.read(spark, indexDir, Stamp.DocParts).getOrElse(sys.error(
-      s"$indexDir forward index's ${Stamp.DocParts.name} sidecar is " +
-        "absent or stale (a rebuild crashed between its commit and the " +
-        "stamp) — rebuild with buildForwardIndex"))
-    val rows = batch.select(id.as("doc_id"), TextOps.tokens(text).as("toks"))
-      .select(col("doc_id"),
-        org.apache.spark.sql.functions.size(col("toks")).cast("long").as("dl"),
-        col("toks"),
-        pmod(col("doc_id"), lit(n.toLong)).as("doc_part"))
-    Versioned.appendPartitioned(rows, s"$indexDir/fwd", "doc_part")
+  private[operators] def fwdAppend(batch: DataFrame, id: Column, text: Column,
+                                   indexDir: String): Long = {
+    val n = Stamp.read(batch.sparkSession, indexDir, Stamp.DocParts)
+      .getOrElse(sys.error(s"$indexDir forward index's " +
+        s"${Stamp.DocParts.name} sidecar is absent or stale (a rebuild " +
+        s"crashed between its commit and the stamp) — ${Index.Forward.remedy}"))
+    Versioned.appendPartitioned(fwdRows(batch, id, text, n), s"$indexDir/fwd",
+      "doc_part")
   }
 
   /** Compact the forward index's per-append files and RE-STAMP the
@@ -2069,10 +1802,10 @@ object Retrieval {
     * snapshot anyway, so the re-shard is free — [[autoDocShards]] keeps
     * probed shard bytes flat as appends accumulate). An untrusted
     * sidecar falls back to a plain layout-preserving compact with the
-    * stamp left stale ([[repairForwardIndex]] recovers it). The modulus
+    * stamp left stale ([[Index.repair]] recovers it). The modulus
     * is read-validated BEFORE any rewrite moves the stamp.
     */
-  def compactForwardIndex(spark: SparkSession, indexDir: String): Long =
+  private[operators] def fwdCompact(spark: SparkSession, indexDir: String): Long =
     Stamp.read(spark, indexDir, Stamp.DocParts) match {
       case Some(_) =>
         // tombstoned documents drop from the rewrite (single table — no
@@ -2096,19 +1829,6 @@ object Retrieval {
             Versioned.read(spark, s"$indexDir/fwd"), col("doc_id")),
           s"$indexDir/fwd")
     }
-
-  /** Re-stamp a stale doc_parts sidecar ([[Stamp.restamp]] of
-    * [[Stamp.DocParts]]): a compaction that died between its overwrite
-    * commit and the re-stamp leaves every [[appendToForwardIndex]]
-    * refusing, though the modulus is recoverable (a maintenance-grain
-    * operator that OBEYED the rebuild message would rebuild from one
-    * day's batch, silently dropping prior days). The modulus is blessed
-    * only after every row verifies doc_part = pmod(doc_id, n); nothing
-    * verifying ⇒ queries stay unpruned (correct) and appends keep
-    * refusing. No-op when already trusted.
-    */
-  def repairForwardIndex(spark: SparkSession, indexDir: String): Unit =
-    Stamp.restamp(spark, indexDir, Stamp.DocParts)
 
   /** Forward rows for a bounded doc set: the set's distinct doc ids
     * broadcast ONTO the partitioned forward scan. On a trusted sidecar

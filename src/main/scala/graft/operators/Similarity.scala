@@ -210,28 +210,6 @@ object Similarity {
       source.select((col("id").as("cand_id") +: metaCols.map(col)): _*),
       Seq("cand_id"))
 
-  /** Refuse a probe predicate naming columns the index does not carry:
-    * silently scoring an UNfiltered stream would be a wrong answer, not
-    * a degradation — the one sidecar-style fail-open this family must
-    * never have. */
-  private def requirePredicateCols(indexDir: String, assigned: DataFrame,
-                                   predicate: Column): Unit =
-    try assigned.filter(predicate).queryExecution.analyzed: Unit
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$indexDir assignment cannot resolve the probe predicate " +
-            s"`$predicate` — a filtered probe gates candidates INSIDE the " +
-            "probed-bucket scan, so the predicate may only reference " +
-            "columns baked into the index at build (metaCols; available " +
-            s"metadata here: ${assignmentMetaCols(assigned) match {
-              case Nil => "none — this index was built without metaCols"
-              case ms => ms.mkString(", ")
-            }}). Rebuild with the column in metaCols, or gate through a " +
-            "separate (id, label) relation with hardNegativesIndexed-style " +
-            s"post-join scoring. Analyzer: ${e.getSimpleMessage}", e)
-    }
-
   /** The IVF build: deterministic seed sample, optional Lloyd passes,
     * final assignment. Returns (centroids, assignment) — exactly the
     * two relations a persisted index stores.
@@ -284,6 +262,10 @@ object Similarity {
     _.join(broadcast(centArray(cent)), lit(true))
 
   private val centFields = Seq("centroid_id", "centv", "cent_norm_sq")
+
+  /** The stored centroid dim — the width a chunk-grain append embeds at. */
+  private[operators] def centroidDim(spark: SparkSession, indexDir: String): Int =
+    centRows(spark, indexDir, None).head.getSeq[Double](1).size
 
   /** A persisted index's centroid rows at `asOf`, read once per centroids
     * version ([[Versioned.rows]] — nCentroids rows, bounded by
@@ -464,251 +446,185 @@ object Similarity {
     else graft.sources.Versioned.append(rows, table)
   }
 
-  def buildIvfIndex(candidates: DataFrame, indexDir: String,
-                    nCentroids: Int = 16, lloydIters: Int = 0,
-                    nBuckets: Int = 8,
-                    assignmentLayout: String = "bucket",
-                    metaCols: Seq[String] = Nil): Long = {
+  private[operators] def ivfBuild(candidates: DataFrame, indexDir: String,
+                                  spec: Index.IvfSpec): Long = {
     val c = prepCandidates(candidates)
-    val (centroids, assigned0) = centroidsAndAssignment(c, nCentroids, lloydIters)
+    val (centroids, assigned0) =
+      centroidsAndAssignment(c, spec.nCentroids, spec.lloydIters)
     // metadata gates ride the assignment rows ([[withMeta]]): one build-
     // cadence join so gated [[probe]]s pay neither a
     // join nor a distance eval for gated candidates
-    val assigned = withMeta(assigned0, candidates, metaCols)
-    val vc = graft.sources.Versioned.overwrite(centroids, s"$indexDir/centroids")
-    val va = commitAssignment(assigned, s"$indexDir/assignment",
-      assignmentLayout, nBuckets)
-    require(vc == va, s"index tables diverged: centroids v$vc vs assignment v$va " +
-      s"(was $indexDir written by something other than buildIvfIndex?)")
-    vc
+    val assigned = withMeta(assigned0, candidates, spec.metaCols)
+    Versioned.overwrite(centroids, s"$indexDir/centroids"): Unit
+    commitAssignment(assigned, s"$indexDir/assignment", spec.layout,
+      spec.nBuckets)
   }
 
-  /** Append a vector batch to a persisted IVF index WITHOUT rebuilding:
-    * the new vectors are assigned to the EXISTING (frozen) centroids —
-    * one map-side pass over the batch, no seed resample, no Lloyd
-    * passes, no touch of the already-assigned corpus. This is standard
-    * IVF maintenance (FAISS `add` does the same): centroids drift from
-    * the corpus distribution as appends accumulate, and the operator
-    * leaves rebuild cadence to the caller ([[buildIvfIndex]] again when
-    * recall decays). The centroid table re-commits its unchanged rows
-    * so both tables stay version-lockstep — `asOf = n` still snapshots
-    * a coherent (centroids, assignment) pair after any append.
-    * Returns the committed version.
+  /** Append a vector batch to a persisted IVF, IVF-SQ8 or IVF-PQ index
+    * WITHOUT rebuilding: the new vectors are assigned to the EXISTING
+    * (frozen) centroids — and, for PQ, encoded on the frozen codebook —
+    * in one map-side pass over the batch, with no seed resample, no Lloyd
+    * passes and no touch of the already-assigned corpus (FAISS `add`;
+    * centroid drift is the retrain cadence's dial). Every table commits,
+    * in the family's declared order, so versions stay lockstep: a PQ
+    * index lands its full-precision vectors FIRST (the postings-first
+    * discipline — a crash after it leaves the raw batch on disk, from
+    * which [[annRepair]] COMPLETES the append; the codes being lossy, the
+    * reverse order was unwedgeable), then re-commits the unchanged
+    * centroids and codebook; a float or SQ8 index re-commits its
+    * centroids, so `asOf = n` still snapshots a coherent set. The SQ8
+    * codes quantize on the index's stored scale and the PQ encode
+    * parameters (m, sub, residual) come off the stored codebook — never
+    * the caller. The dim guard (the stored centroid dim) rides the FIRST
+    * write, so a wrong-dimension batch refuses before anything commits;
+    * a meta-carrying index refuses a batch missing its baked columns.
     */
-  def appendToIvfIndex(batch: DataFrame, indexDir: String): Long = {
+  private[operators] def annAppend(batch: DataFrame, indexDir: String,
+                                   fam: Index.Family): Long = {
     val spark = batch.sparkSession
-    require(!new java.io.File(indexDir, "codebook").exists(),
-      s"$indexDir is an IVF-PQ index (has codebook/) — use appendToIvfPqIndex; " +
-        "a float-schema append would corrupt the code-row assignment table")
-    require(graft.sources.Versioned.latestVersion(spark, s"$indexDir/centroids")
-        == graft.sources.Versioned.latestVersion(spark, s"$indexDir/assignment"),
-      s"$indexDir tables out of lockstep — a prior append crashed between " +
-        "commits; run repairIvfIndex, then retry this append")
-    val centroids = graft.sources.Versioned.read(spark, s"$indexDir/centroids")
-    // an SQ8 index carries the quantization scale on its centroid rows;
-    // its assignment stores codes, so the appended rows must be
-    // quantized on the SAME stored scale (a float-schema append would
-    // silently replace the table schema and corrupt every probe)
-    val isSq8 = centroids.columns.contains("s")
-    val c = prepCandidates(batch)
-    // dim guard (in-plan, the pqGuard discipline): an append whose
-    // vectors' length differs from the build's would land wrong-length
-    // vectors in the assignment table and silently corrupt every
-    // subsequent cosine probe. The reference length is DERIVED from the
-    // index itself (the stored centroid vectors), never the caller, and
-    // the guard rides the CENTROIDS re-commit — the append's FIRST
-    // write job — so a tripped guard fails before anything commits: a
-    // refused append is a no-op, not a repairable wedge. (Cost: the
-    // batch is scanned once inside the centroids job — maintenance-
-    // cadence work, not a probe-path tax.)
-    val sz = (co: org.apache.spark.sql.Column) =>
-      org.apache.spark.sql.functions.size(co)
-    val badDims = c
-      .crossJoin(broadcast(centroids
-        .agg(org.apache.spark.sql.functions.max(sz(col("centv")))
-          .as("__dim"))))
-      .filter(sz(col("cv")) =!= col("__dim"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("__bad"))
-    val guardedCentroids = centroids.crossJoin(broadcast(badDims))
-      .filter(org.apache.spark.sql.functions.assert_true(
-        col("__bad") === 0L,
-        lit(s"IVF append dim mismatch on $indexDir: the batch carries " +
-          "vectors whose length differs from the index's stored centroid " +
-          "dim — re-embed the batch with the build's encoder/dim; " +
-          "nothing was committed")).isNull)
-      .drop("__bad")
-    val assignedNew = {
-      val a = assignTo(c,
-        centroids.select(col("centroid_id"), col("centv"), col("cent_norm_sq")))
-      if (!isSq8) a
-      else a.select(col("centroid_id"), col("cand_id"))
-        .join(sq8Apply(c.select(col("cand_id"), col("cv").as("v")),
-          centroids.select(col("s")).limit(1)), Seq("cand_id"))
-        .select(col("centroid_id"), col("cand_id"), col("q").as("cq"))
-    }
-    // a metadata-carrying index keeps its filtered-probe contract
-    // through appends: the batch must supply the SAME baked columns
-    // (rows without them would silently pass every gate)
-    val meta = assignmentMetaCols(
-      graft.sources.Versioned.read(spark, s"$indexDir/assignment"))
+    val centroids = Versioned.read(spark, s"$indexDir/centroids")
+    val meta = assignmentMetaCols(Versioned.read(spark, s"$indexDir/assignment"))
     val metaMissing = meta.filterNot(batch.columns.contains)
     require(metaMissing.isEmpty,
       s"$indexDir assignment carries metadata column(s) " +
         s"${meta.mkString(", ")} (filtered-probe gates); the append batch " +
         s"must supply them — missing: ${metaMissing.mkString(", ")}")
-    val assignedNewM = withMeta(assignedNew, batch, meta)
-    val vc = graft.sources.Versioned.overwrite(guardedCentroids,
-      s"$indexDir/centroids")
-    val va = appendAssignment(assignedNewM, s"$indexDir/assignment")
-    require(vc == va, s"index tables diverged: centroids v$vc vs assignment v$va")
+    val c = prepCandidates(batch)
+    val badDims = c
+      .crossJoin(broadcast(centroids.agg(max(size(col("centv"))).as("__dim"))))
+      .filter(size(col("cv")) =!= col("__dim"))
+      .agg(count(lit(1)).as("__bad"))
+    def guarded(first: DataFrame): DataFrame = first
+      .crossJoin(broadcast(badDims))
+      .filter(assert_true(col("__bad") === 0L,
+        lit(s"${fam.name} append dim mismatch on $indexDir: the batch " +
+          "carries vectors whose length differs from the index's stored " +
+          "centroid dim — re-embed the batch with the build's encoder/dim; " +
+          "nothing was committed")).isNull)
+      .drop("__bad")
+    val assigned = assignTo(c, centroids.select(centFields.map(col): _*))
+    val rows = fam match {
+      case Index.Sq8 => assigned.select(col("centroid_id"), col("cand_id"))
+        .join(sq8Apply(c.select(col("cand_id"), col("cv").as("v")),
+          centroids.select(col("s")).limit(1)), Seq("cand_id"))
+        .select(col("centroid_id"), col("cand_id"), col("q").as("cq"))
+      case Index.Pq =>
+        val (m, sub, _, residual) = pqParams(spark, indexDir, None)
+        val encBase = if (residual) residualsOf(assigned, centroids) else c
+        assigned.select(col("centroid_id"), col("cand_id"))
+          .join(withPqCodes(encBase, Versioned.read(spark,
+            s"$indexDir/codebook"), m, sub).select(col("cand_id"),
+            col("pqcode")), Seq("cand_id"))
+          .select(col("centroid_id"), col("cand_id"), col("pqcode"))
+      case _ => assigned
+    }
+    val assignedNew = withMeta(rows, batch, meta)
+    if (fam == Index.Pq) {
+      val nVec = Stamp.read(spark, indexDir, Stamp.VecParts).getOrElse(
+        sys.error(s"$indexDir vectors table's ${Stamp.VecParts.name} " +
+          s"sidecar is absent or stale — ${fam.remedy}"))
+      Versioned.appendPartitioned(guarded(
+        withMeta(c.select(col("cand_id"), col("cv")), batch, meta)
+          .withColumn("vec_part", pmod(col("cand_id"), lit(nVec.toLong)))),
+        s"$indexDir/vectors", "vec_part"): Unit
+      Versioned.overwrite(centroids, s"$indexDir/centroids"): Unit
+      Versioned.overwrite(Versioned.read(spark, s"$indexDir/codebook"),
+        s"$indexDir/codebook"): Unit
+    } else Versioned.overwrite(guarded(centroids), s"$indexDir/centroids"): Unit
+    val va = appendAssignment(assignedNew, s"$indexDir/assignment")
     // gatecounts sidecar (if present): fold the batch in additively —
     // a crash before this lands leaves it stale, which probes detect
     // (fall back to adaptive) and compact/rebuild re-derive
-    maintainGateCountsAfterAppend(spark, indexDir, assignedNewM,
+    maintainGateCountsAfterAppend(spark, indexDir, assignedNew,
       vaPrev = va - 1, vaNew = va)
-    vc
+    va
   }
 
-  /** Repair an IVF / IVF-SQ8 / IVF-PQ index wedged by a crash between
-    * an APPEND's table commits (the [[graft.operators.Retrieval
-    * .repairBm25Index]] discipline applied to the ANN family). An
-    * append re-commits the frozen centroids (and codebook) with
-    * IDENTICAL content before appending the assignment, so the crash
-    * shape is "centroids/codebook ahead by one, content unchanged,
-    * assignment behind" — and because the batch's assignment rows died
-    * with the crashed process, the repair is a catch-up: empty-append
-    * the assignment back into lockstep, leaving the index exactly at
-    * its pre-append state. The caller then re-appends the batch whole
-    * (nothing of it committed — unlike BM25, where postings land first
-    * and repair COMPLETES the append instead).
+  /** The PQ encode parameters (m, sub, ks, residual) off the codebook at
+    * `asOf` — read once per codebook version ([[Versioned.rows]]). A
+    * codebook persisted before the residual flag existed was raw. */
+  private[operators] def pqParams(spark: SparkSession, indexDir: String,
+                                  asOf: Option[Long]): (Int, Int, Int, Boolean) = {
+    val t = s"$indexDir/codebook"
+    val hasRes = Versioned.read(spark, t, asOf).columns.contains("res")
+    val rows = Versioned.rows(spark, t, asOf,
+      Seq("j", "code", "cb") ++ (if (hasRes) Seq("res") else Nil))
+    val m = rows.map(_.get(0).asInstanceOf[Number].intValue).max + 1
+    (m, rows.map(_.getSeq[Double](2).size).max, rows.size / m,
+      hasRes && rows.head.getBoolean(3))
+  }
+
+  /** Repair an IVF / IVF-SQ8 / IVF-PQ index wedged between its table
+    * commits (the BM25 repair discipline applied to the ANN family).
+    * Every writer commits the family's tables in declared order with the
+    * assignment LAST, so the only crash shape is a prefix of the other
+    * tables advanced by exactly one. Advanced centroids/codebook must be
+    * IDENTICAL to their previous version (nCentroids / m·ks rows — the
+    * comparison is trivial): a crashed REBUILD leaves the same version
+    * shape with CHANGED content, and pairing new centroids with the old
+    * assignment would be silent corruption, so that shape refuses
+    * loudly; a rebuild recovers. A missing table (a build crash) also
+    * refuses: the assignment IS the data, nothing to recompute from.
     *
-    * Safety gate: the repair verifies the advanced tables' content is
-    * IDENTICAL to their previous version (centroid/codebook tables are
-    * nCentroids/m·ks rows — the comparison is trivial). A crashed
-    * REBUILD leaves the same version shape but with CHANGED content,
-    * and an empty-append "repair" there would silently pair new
-    * centroids with the old corpus's assignment — that shape refuses
-    * loudly; rebuild recovers. A missing/behind centroids table (build
-    * crash) also refuses: the assignment IS the data, nothing to
-    * recompute from. Returns the restored lockstep version; no-op when
-    * intact.
+    *  - Float and SQ8 indexes: the batch's assignment rows died with the
+    *    crashed process, so the repair is a catch-up — lagging tables
+    *    re-commit their unchanged content and the assignment gains an
+    *    empty commit, leaving the index exactly at its pre-append state;
+    *    the caller re-appends the whole batch.
+    *  - IVF-PQ (full-precision `vectors` committed FIRST, the landing
+    *    table): a crashed APPEND is COMPLETED from the orphan vectors
+    *    slice, re-encoded on the frozen centroids + codebook with the
+    *    encode parameters off the codebook itself. A crashed COMPACTION
+    *    (vectors overwritten with identical (cand_id, cv) content, or
+    *    minus tombstoned rows) heals with catch-up commits; a crashed
+    *    REBUILD (changed content) refuses.
+    *
+    * Returns the restored lockstep version; no-op when intact.
     */
-  def repairIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                     indexDir: String): Long = {
-    import graft.sources.Versioned
-    require(Versioned.exists(spark, s"$indexDir/assignment"),
-      s"$indexDir has no assignment table — a build crashed before its " +
-        "data landed; rebuild the index")
-    if (Versioned.exists(spark, s"$indexDir/vectors"))
-      return repairPqVectorsIndex(spark, indexDir)
-    val va = Versioned.latestVersion(spark, s"$indexDir/assignment")
-    val heads = Seq("centroids", "codebook")
-      .filter(t => Versioned.exists(spark, s"$indexDir/$t"))
-      .map(t => t -> Versioned.latestVersion(spark, s"$indexDir/$t"))
-    require(heads.nonEmpty, s"$indexDir has no centroids table — not a " +
-      "persisted IVF index")
-    if (heads.forall(_._2 == va)) return va // intact
-    // the append commit order is centroids → codebook → assignment, so
-    // a crash leaves a PREFIX of the heads advanced by exactly one
-    // (centroids alone, or centroids + codebook) and the rest behind
-    require(heads.forall(h => h._2 == va || h._2 == va + 1) &&
-        heads.head._2 == va + 1,
-      s"$indexDir tables are not in the crashed-append shape " +
-        s"(assignment v$va, ${heads.map(h => s"${h._1} v${h._2}")
-          .mkString(", ")}) — no append/build commit order produces " +
-        "this; rebuild into a fresh directory")
-    heads.filter(_._2 == va + 1).foreach { case (t, v) =>
-      val now  = Versioned.read(spark, s"$indexDir/$t", Some(v))
-      val prev = Versioned.read(spark, s"$indexDir/$t", Some(v - 1))
-      require(now.exceptAll(prev).isEmpty && prev.exceptAll(now).isEmpty,
-        s"$indexDir/$t v$v CHANGED content vs v${v - 1} — a crashed " +
-          "REBUILD, not a crashed append: an empty-assignment catch-up " +
-          "would pair new centroids with the old assignment; rebuild " +
-          "into a fresh directory")
+  private[operators] def annRepair(spark: SparkSession, indexDir: String,
+                                   fam: Index.Family): Long = {
+    def at(t: String, v: Long) = Versioned.read(spark, s"$indexDir/$t", Some(v))
+    val missing = fam.tables.filterNot(t => Versioned.exists(spark, s"$indexDir/$t"))
+    require(missing.isEmpty, s"$indexDir has no ${missing.mkString("/")} " +
+      "table — a build crashed before its tables landed; rebuild the index")
+    val heads = fam.tables.map(t => t -> Versioned.latestVersion(spark, s"$indexDir/$t"))
+    val va = heads.last._2
+    val ahead = heads.init
+    if (ahead.forall(_._2 == va)) return va // intact
+    require(ahead.head._2 == va + 1 && ahead.forall(_._2 >= va) &&
+        ahead.map(_._2) == ahead.map(_._2).sorted.reverse,
+      s"$indexDir tables are not in a crashed-commit shape " +
+        s"(${heads.map(h => s"${h._1} v${h._2}").mkString(", ")}) — no " +
+        "commit order here produces this; rebuild into a fresh directory")
+    val landing = fam.landing.map(_._1)
+    ahead.filter(h => h._2 == va + 1 && !landing.contains(h._1)).foreach {
+      case (t, v) =>
+        require(at(t, v).exceptAll(at(t, v - 1)).isEmpty &&
+            at(t, v - 1).exceptAll(at(t, v)).isEmpty,
+          s"$indexDir/$t v$v CHANGED content vs v${v - 1} — a crashed " +
+            "REBUILD, not a crashed append or compaction: an automated " +
+            "repair would pair new centroids with the old assignment; " +
+            "rebuild into a fresh directory")
     }
-    // catch-up: lagging heads re-commit their unchanged content (a
-    // crash after the centroids alone left the codebook behind) and
-    // the assignment gains an empty commit, honoring the declared
-    // layout — the index lands exactly at its pre-append state and the
-    // caller re-appends the whole batch
-    heads.filter(_._2 == va).foreach { case (t, v) =>
-      Versioned.overwrite(
-        Versioned.read(spark, s"$indexDir/$t", Some(v)),
-        s"$indexDir/$t"): Unit
+    // lagging tables re-commit their unchanged content
+    def catchUp(): Unit = ahead.filter(_._2 == va).foreach { case (t, v) =>
+      Versioned.overwrite(at(t, v), s"$indexDir/$t"): Unit
     }
-    val empty = Versioned.read(spark, s"$indexDir/assignment", Some(va))
-      .limit(0)
-    appendAssignment(empty, s"$indexDir/assignment")
-  }
-
-  /** [[repairIvfIndex]] for the IVF-PQ-with-vectors format (four
-    * lockstep tables, full-precision vectors committed FIRST). Because
-    * the raw data lands before anything derived, a crashed APPEND is
-    * COMPLETED from the orphan vectors slice — the
-    * [[graft.operators.Retrieval.repairBm25Index]] postings-first
-    * discipline, where the three-table format could only catch up to
-    * the pre-append state (codes are lossy; the batch died with the
-    * crash). Encode parameters (m, sub, residual) derive from the
-    * persisted codebook itself, so the repair needs no caller-supplied
-    * knobs. A crashed COMPACTION (vectors overwritten with identical
-    * (cand_id, cv) content — vec_part is re-derivable layout metadata)
-    * heals with content-identical catch-up commits; a crashed REBUILD
-    * (changed content) refuses loudly. Also re-stamps a stale
-    * vec_parts sidecar once lockstep holds.
-    */
-  private def repairPqVectorsIndex(spark: org.apache.spark.sql.SparkSession,
-                                   indexDir: String): Long = {
-    import graft.sources.Versioned
-    require(Versioned.exists(spark, s"$indexDir/centroids") &&
-        Versioned.exists(spark, s"$indexDir/codebook"),
-      s"$indexDir has a vectors table but no centroids/codebook — a " +
-        "build crashed before its index tables landed; rebuild with " +
-        "buildIvfPqIndex")
-    val va = Versioned.latestVersion(spark, s"$indexDir/assignment")
-    val vv = Versioned.latestVersion(spark, s"$indexDir/vectors")
-    val heads = Seq("centroids", "codebook")
-      .map(t => t -> Versioned.latestVersion(spark, s"$indexDir/$t"))
-    if (vv == va && heads.forall(_._2 == va)) {
-      // intact lockstep — but a crashed compaction may still have died
-      // between the vectors overwrite and the sidecar re-stamp
-      Stamp.restamp(spark, indexDir, Stamp.VecParts)
-      return va
-    }
-    // commit order (append and compaction alike): vectors → centroids →
-    // codebook → assignment, so the only crash shape is vectors ahead
-    // by exactly one, a PREFIX of the heads advanced, assignment behind
-    require(vv == va + 1 &&
-        heads.forall(h => h._2 == va || h._2 == va + 1) &&
-        heads.head._2 >= heads.last._2,
-      s"$indexDir tables are not in a crashed-commit shape (vectors " +
-        s"v$vv, ${heads.map(h => s"${h._1} v${h._2}").mkString(", ")}, " +
-        s"assignment v$va) — no commit order here produces this; " +
-        "rebuild into a fresh directory")
-    // advanced heads must be content-identical to their prior version
-    // (a crashed REBUILD advances them with CHANGED content — an
-    // automated repair would pair new centroids with the old
-    // assignment; refuse)
-    heads.filter(_._2 == va + 1).foreach { case (t, v) =>
-      val now  = Versioned.read(spark, s"$indexDir/$t", Some(v))
-      val prev = Versioned.read(spark, s"$indexDir/$t", Some(v - 1))
-      require(now.exceptAll(prev).isEmpty && prev.exceptAll(now).isEmpty,
-        s"$indexDir/$t v$v CHANGED content vs v${v - 1} — a crashed " +
-          "REBUILD, not a crashed append/compaction; rebuild into a " +
-          "fresh directory")
-    }
-    val headAction = Versioned.history(spark, s"$indexDir/vectors").last._2
-    if (headAction == "overwrite") {
+    val emptyAppend = () =>
+      appendAssignment(at("assignment", va).limit(0), s"$indexDir/assignment")
+    val docX = Retrieval.docKeyExpr(spark, indexDir, col("cand_id"))
+    if (landing.isEmpty) { catchUp(); return emptyAppend() }
+    val vv = va + 1
+    if (Versioned.history(spark, s"$indexDir/vectors").last._2 == "overwrite") {
       // a COMPACTION died mid-way: verify the vectors overwrite added
       // nothing and removed at most TOMBSTONED rows (a pure rewrite, or
-      // a tombstone merge — [[compactIvfIndex]] drops pending deletes),
-      // then catch the lagging tables up. Anything else is a crashed
-      // REBUILD and refuses.
-      val now  = Versioned.read(spark, s"$indexDir/vectors", Some(vv))
-        .select(col("cand_id"), col("cv"))
-      val prev = Versioned.read(spark, s"$indexDir/vectors", Some(vv - 1))
-        .select(col("cand_id"), col("cv"))
+      // a tombstone merge — [[annCompact]] drops pending deletes), then
+      // catch the lagging tables up. Anything else is a crashed REBUILD
+      // and refuses.
+      val now  = at("vectors", vv).select(col("cand_id"), col("cv"))
+      val prev = at("vectors", va).select(col("cand_id"), col("cv"))
       require(now.exceptAll(prev).isEmpty,
-        s"$indexDir/vectors v$vv ADDED content vs v${vv - 1} — a " +
+        s"$indexDir/vectors v$vv ADDED content vs v$va — a " +
           "crashed REBUILD, not a crashed compaction; rebuild into a " +
           "fresh directory")
       val gone = prev.exceptAll(now).select(col("cand_id")).distinct()
@@ -716,76 +632,43 @@ object Similarity {
         case None => gone
         case Some(t) => gone.join(
           broadcast(t.select(col("doc_id").as("__ts_doc"))),
-          Retrieval.docKeyExpr(spark, indexDir, col("cand_id"))
-            === col("__ts_doc"), "left_anti")
+          docX === col("__ts_doc"), "left_anti")
       }
       require(goneUntombed.isEmpty,
         s"$indexDir/vectors v$vv REMOVED non-tombstoned rows vs " +
-          s"v${vv - 1} — a crashed REBUILD, not a crashed compaction or " +
+          s"v$va — a crashed REBUILD, not a crashed compaction or " +
           "tombstone merge; rebuild into a fresh directory")
-      val wasDrop = !gone.isEmpty
-      heads.filter(_._2 == va).foreach { case (t, v) =>
-        Versioned.overwrite(
-          Versioned.read(spark, s"$indexDir/$t", Some(v)),
-          s"$indexDir/$t"): Unit
-      }
+      catchUp()
       // complete the merge on the assignment: a crashed tombstone drop
       // re-applies the CURRENT tombstone set (a superset of the crashed
       // run's is safe — gates already hide those rows everywhere, and
       // the vectors rows they orphan drop at the next compaction); a
       // pure compaction catches up with an empty append as before
-      val out =
-        if (!wasDrop) appendAssignment(
-          Versioned.read(spark, s"$indexDir/assignment", Some(va)).limit(0),
-          s"$indexDir/assignment")
-        else Versioned.overwriteLike(
-          Tombstones.gate(spark, indexDir,
-            Versioned.read(spark, s"$indexDir/assignment", Some(va)),
-            Retrieval.docKeyExpr(spark, indexDir, col("cand_id"))),
-          s"$indexDir/assignment")
-      Stamp.restamp(spark, indexDir, Stamp.VecParts)
-      return out
+      return if (gone.isEmpty) emptyAppend()
+        else Versioned.overwriteLike(Tombstones.gate(spark, indexDir,
+          at("assignment", va), docX), s"$indexDir/assignment")
     }
     // a crashed APPEND: the orphan full-precision slice IS the batch —
     // COMPLETE the append by re-encoding it on the frozen centroids +
     // codebook (new-id-only append invariant makes cand_id membership
-    // the delta)
-    // the orphan slice carries the baked metadata too (the build/append
-    // write it onto the vectors table precisely so this repair can
-    // restore a meta-carrying assignment row set)
-    val metaR = assignmentMetaCols(
-      Versioned.read(spark, s"$indexDir/assignment", Some(va)))
-    val orphan = Versioned.read(spark, s"$indexDir/vectors", Some(vv))
+    // the delta); the slice carries the baked metadata too (the
+    // build/append write it onto the vectors table precisely so this
+    // repair can restore a meta-carrying assignment row set)
+    val metaR = assignmentMetaCols(at("assignment", va))
+    val orphan = at("vectors", vv)
       .select((col("cand_id") +: col("cv") +: metaR.map(col)): _*)
-      .join(Versioned.read(spark, s"$indexDir/vectors", Some(va))
-        .select(col("cand_id")), Seq("cand_id"), "left_anti")
-    val cb = Versioned.read(spark, s"$indexDir/codebook")
-    val spec = cb.agg(
-      (org.apache.spark.sql.functions.max(col("j")) + 1).cast("int"),
-      org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.size(col("cb"))).cast("int")).head
-    val m = spec.getInt(0)
-    val sub = spec.getInt(1)
-    val residual = cb.columns.contains("res") &&
-      cb.select(col("res")).head.getBoolean(0)
+      .join(at("vectors", va).select(col("cand_id")), Seq("cand_id"), "left_anti")
+    val (m, sub, _, residual) = pqParams(spark, indexDir, None)
     val centroids = Versioned.read(spark, s"$indexDir/centroids")
     val c = orphan.withColumn("c_norm_sq", VectorOps.normSq(col("cv")))
-    val assignedB = assignTo(c, centroids
-      .select(col("centroid_id"), col("centv"), col("cent_norm_sq")))
+    val assignedB = assignTo(c, centroids.select(centFields.map(col): _*))
     val encBase = if (residual) residualsOf(assignedB, centroids) else c
-    val delta0 = assignedB.select(col("centroid_id"), col("cand_id"))
-      .join(withPqCodes(encBase, cb, m, sub)
-        .select(col("cand_id"), col("pqcode")), Seq("cand_id"))
-      .select(col("centroid_id"), col("cand_id"), col("pqcode"))
-    val delta =
-      if (metaR.isEmpty) delta0
-      else delta0.join(
-        orphan.select((col("cand_id") +: metaR.map(col)): _*), Seq("cand_id"))
-    heads.filter(_._2 == va).foreach { case (t, v) =>
-      Versioned.overwrite(
-        Versioned.read(spark, s"$indexDir/$t", Some(v)),
-        s"$indexDir/$t"): Unit
-    }
+    val delta = withMeta(assignedB.select(col("centroid_id"), col("cand_id"))
+      .join(withPqCodes(encBase, Versioned.read(spark, s"$indexDir/codebook"),
+        m, sub).select(col("cand_id"), col("pqcode")), Seq("cand_id"))
+      .select(col("centroid_id"), col("cand_id"), col("pqcode")),
+      orphan.withColumnRenamed("cand_id", "id"), metaR)
+    catchUp()
     appendAssignment(delta, s"$indexDir/assignment")
   }
 
@@ -794,15 +677,11 @@ object Similarity {
     * (appended batches land as plain files, demoting reads until the
     * rewrite) and keeps EVERY table of the index in version lockstep —
     * compacting just one would make all consumers refuse. Same crash
-    * contract as build/append: a failure between table commits wedges
-    * the index and a rebuild recovers.
+    * contract as append: a failure between table commits leaves the
+    * prefix shape [[annRepair]] heals.
     */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String): Long = {
-    val tables = Seq("centroids", "codebook", "assignment")
-      .filter(t => graft.sources.Versioned.exists(spark, s"$indexDir/$t"))
-    require(tables.contains("assignment"),
-      s"$indexDir is not a persisted IVF index (no assignment/ table)")
+  private[operators] def annCompact(spark: SparkSession, indexDir: String,
+                                    fam: Index.Family): Long = {
     val docX = Retrieval.docKeyExpr(spark, indexDir, col("cand_id"))
     val hasTomb = Tombstones.of(spark, indexDir).nonEmpty
     // the vectors table compacts FIRST (mirroring the append order, so
@@ -813,148 +692,104 @@ object Similarity {
     // with the corpus. Pending deletes ([[Tombstones]]) drop here too —
     // this is the index family's merge step; centroids/codebook are
     // corpus-level models, untouched until the rebuild cadence.
-    val vVec =
-      if (!graft.sources.Versioned.exists(spark, s"$indexDir/vectors"))
-        Seq.empty[Long]
-      else {
+    val vs = fam.tables.map {
+      case "vectors" =>
         // every column except the re-derived vec_part survives the
         // rewrite: baked metadata rides the vectors table precisely so
         // the crashed-append repair and post-compaction appends can
         // restore/extend a meta-carrying assignment (a bare
         // (cand_id, cv) projection here would silently strip it)
-        val all = graft.sources.Versioned.read(spark, s"$indexDir/vectors")
+        val all = Versioned.read(spark, s"$indexDir/vectors")
         val cur = Tombstones.gate(spark, indexDir,
           all.select(all.columns.filterNot(_ == "vec_part").map(col): _*),
           docX)
         val n = autoVecShards(cur.count())
-        val v = graft.sources.Versioned.overwritePartitioned(
+        val v = Versioned.overwritePartitioned(
           cur.withColumn("vec_part", pmod(col("cand_id"), lit(n.toLong))),
           s"$indexDir/vectors", "vec_part")
         Stamp.write(spark, indexDir, Stamp.VecParts, n, v)
-        Seq(v)
-      }
-    val names = (if (vVec.nonEmpty) Seq("vectors") else Nil) ++ tables
-    val vs = vVec ++ tables.map {
+        v
       case "assignment" if hasTomb =>
-        graft.sources.Versioned.overwriteLike(
-          Tombstones.gate(spark, indexDir,
-            graft.sources.Versioned.read(spark, s"$indexDir/assignment"),
-            docX),
+        Versioned.overwriteLike(Tombstones.gate(spark, indexDir,
+          Versioned.read(spark, s"$indexDir/assignment"), docX),
           s"$indexDir/assignment")
-      case t => graft.sources.Versioned.compact(spark, s"$indexDir/$t")
+      case t => Versioned.compact(spark, s"$indexDir/$t")
     }
-    require(vs.distinct.size == 1, s"index compaction left tables out of " +
-      s"lockstep (${names.zip(vs).map { case (t, v) => s"$t v$v" }
-        .mkString(", ")}) — run repairIvfIndex")
     // the merge is where tombstoned rows leave the data — re-derive the
     // gatecounts sidecar so one-shot probes stay byte-tight (and heal
     // any staleness a crashed append left)
     refreshGateCountsIfPresent(spark, indexDir)
-    vs.head
+    vs.last
   }
 
   // ------------------------------------------------- retrain-cadence rebuild
 
-  /** REBUILD a float IVF index's centroids from its CURRENT corpus —
-    * the retrain-cadence maintenance FAISS-add semantics defer to the
-    * caller: centroids freeze at build, appended batches assign to them,
-    * and recall decays as the corpus drifts from the training
-    * distribution; nothing turned that dial until this stage. The
-    * corpus is the index's OWN assignment rows (float assignments carry
-    * full-precision cv), so no external table is consulted — the
+  /** The corpus a RETRAIN rebuilds a float IVF or IVF-PQ index from: the
+    * index's OWN rows (float assignments carry full-precision cv; PQ has
+    * its `vectors` table), so no external table is consulted — the
     * [[graft.operators.Bpe]] retrain discipline: a fresh lockstep
     * overwrite version; pinned `asOf` consumers keep their epoch (the
-    * per-epoch sidecar history), and pending tombstones drop here too
-    * (a rebuild is the strongest merge).
+    * per-epoch sidecar history), and pending tombstones drop here too (a
+    * rebuild is the strongest merge). FAISS-add appends freeze centroids
+    * (and codebooks) at build and recall decays as the corpus drifts;
+    * this is the dial. SQ8 refuses (codes only — the original vectors
+    * are gone).
     *
-    * Crash safety: a prior rebuild that died between its two overwrites
-    * leaves versions skewed; this pads the lagging table with
-    * content-identical commits until both sit one below a common
-    * target, then rebuilds — the pad versions are gap versions that
-    * never existed as consistent pairs (the [[graft.operators.Retrieval
-    * .repairBm25Index]] catch-up precedent: pin at or before the gap,
-    * or at the rebuilt head). SQ8 indexes refuse (codes only — the
-    * original vectors are gone); IVF-PQ uses [[rebuildIvfPqIndex]].
+    * Crash safety: a prior rebuild that died between its overwrites
+    * leaves versions skewed; this pads the lagging tables with
+    * content-identical commits until all sit one below a common target,
+    * the version the rebuild must land at (the pad versions are gap
+    * versions that never existed as consistent sets: pin at or before
+    * the gap, or at the rebuilt head). Returns (rows, target).
     */
-  def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      indexDir: String, lloydIters: Int = 0): Long = {
-    import graft.sources.Versioned
-    val ts = Seq("centroids", "assignment")
-    require(ts.forall(t => Versioned.exists(spark, s"$indexDir/$t")),
-      s"$indexDir is not a persisted IVF index (centroids/ + assignment/)")
-    require(!Versioned.exists(spark, s"$indexDir/codebook"),
-      s"$indexDir is an IVF-PQ index — use rebuildIvfPqIndex")
-    val vLock = ts.map(t => Versioned.latestVersion(spark, s"$indexDir/$t")).min
-    val cents = Versioned.read(spark, s"$indexDir/centroids", Some(vLock))
-    require(!cents.columns.contains("s"),
-      s"$indexDir is an SQ8 index — its assignment stores codes, not " +
-        "vectors; rebuild from the original corpus with buildIvfSq8Index")
+  private[operators] def ownRows(spark: SparkSession, indexDir: String,
+                                 fam: Index.Family): (DataFrame, Long) = {
+    require(fam != Index.Sq8, s"$indexDir is an SQ8 index — its assignment " +
+      "stores codes, not vectors; rebuild from the original corpus with " +
+      "Index.build")
+    val vLock = fam.tables.map(t => Versioned.latestVersion(spark,
+      s"$indexDir/$t")).min
+    val src = fam.landing.fold("assignment")(_._1)
     val rows = Tombstones.gate(spark, indexDir,
-      Versioned.read(spark, s"$indexDir/assignment", Some(vLock)),
+      Versioned.read(spark, s"$indexDir/$src", Some(vLock)),
       Retrieval.docKeyExpr(spark, indexDir, col("cand_id")))
-    val meta = assignmentMetaCols(rows)
-    val nCent = cents.count().toInt // nCentroids rows — bounded
-    val cand = rows.select((col("cand_id").as("id") +:
-      col("cv").as("vec") +: meta.map(col)): _*)
-    val (layoutName, nBuckets) = assignLayoutOf(spark, indexDir)
-    val target = padToLockstepTarget(spark, indexDir, ts)
-    val v = buildIvfIndex(cand, indexDir, nCent, lloydIters, nBuckets,
-      layoutName, meta)
-    require(v == target, s"$indexDir rebuild landed at v$v, expected " +
-      s"v$target — a concurrent writer interleaved; verify lockstep")
-    refreshGateCountsIfPresent(spark, indexDir)
-    v
-  }
-
-  /** [[rebuildIvfIndex]] for the four-table IVF-PQ format: centroids
-    * AND codebook retrain from the index's own full-precision `vectors`
-    * table; every encode parameter (m, ks, dim, residual) derives from
-    * the persisted codebook itself, so the rebuild needs no
-    * caller-supplied knobs and cannot drift from the build's contract.
-    */
-  def rebuildIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        indexDir: String, pqLloydIters: Int = 0,
-                        lloydIters: Int = 0): Long = {
-    import graft.sources.Versioned
-    val ts = Seq("vectors", "centroids", "codebook", "assignment")
-    require(ts.forall(t => Versioned.exists(spark, s"$indexDir/$t")),
-      s"$indexDir is not a four-table IVF-PQ index " +
-        "(vectors/ centroids/ codebook/ assignment/)")
-    val vLock = ts.map(t => Versioned.latestVersion(spark, s"$indexDir/$t")).min
-    val cb = Versioned.read(spark, s"$indexDir/codebook", Some(vLock))
-    val spec = cb.agg(
-      (org.apache.spark.sql.functions.max(col("j")) + 1).cast("int"),
-      org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.size(col("cb"))).cast("int"),
-      count(lit(1))).head
-    val m = spec.getInt(0)
-    val sub = spec.getInt(1)
-    val ks = (spec.getLong(2) / m).toInt
-    val residual = cb.columns.contains("res") &&
-      cb.select(col("res")).head.getBoolean(0)
-    val nCent = Versioned.read(spark, s"$indexDir/centroids", Some(vLock))
-      .count().toInt
     val meta = assignmentMetaCols(
       Versioned.read(spark, s"$indexDir/assignment", Some(vLock)))
-    val vecs = Tombstones.gate(spark, indexDir,
-      Versioned.read(spark, s"$indexDir/vectors", Some(vLock)),
-      Retrieval.docKeyExpr(spark, indexDir, col("cand_id")))
-    val cand = vecs.select((col("cand_id").as("id") +:
-      col("cv").as("vec") +: meta.map(col)): _*)
-    val (layoutName, nBuckets) = assignLayoutOf(spark, indexDir)
-    val target = padToLockstepTarget(spark, indexDir, ts)
-    val v = buildIvfPqIndex(cand, indexDir, nCent, m, ks, pqLloydIters,
-      lloydIters, m * sub, residual, nBuckets, layoutName, metaCols = meta)
-    require(v == target, s"$indexDir rebuild landed at v$v, expected " +
-      s"v$target — a concurrent writer interleaved; verify lockstep")
-    v
+    val cand = rows.select((col("cand_id").as("id") +: col("cv").as("vec") +:
+      meta.map(col)): _*)
+    (cand, padToLockstepTarget(spark, indexDir, fam.tables))
+  }
+
+  /** The build spec an ANN dir records at its last lockstep version:
+    * centroid count and dim (off the centroid literal), assignment layout,
+    * baked metadata, and for PQ the codebook's (m, ks, residual) — what a
+    * retrain rebuilds with ([[Index.recorded]]). */
+  private[operators] def recordedSpec(spark: SparkSession, indexDir: String,
+                                      fam: Index.Family,
+                                      grain: Index.Grain): Index.Spec = {
+    val vLock = fam.tables.map(t => Versioned.latestVersion(spark,
+      s"$indexDir/$t")).min
+    val cents = centRows(spark, indexDir, Some(vLock))
+    val dim = cents.head.getSeq[Double](1).size
+    val (layout, nBuckets) = assignLayoutOf(spark, indexDir)
+    val meta = assignmentMetaCols(
+      Versioned.read(spark, s"$indexDir/assignment", Some(vLock)))
+    fam match {
+      case Index.Sq8 => Index.Sq8Spec(cents.size, 0, nBuckets, layout)
+      case Index.Pq =>
+        val (m, sub, ks, residual) = pqParams(spark, indexDir, Some(vLock))
+        Index.PqSpec(grain, cents.size, m, ks, dim = m * sub,
+          residual = residual, nBuckets = nBuckets, layout = layout,
+          metaCols = meta)
+      case _ => Index.IvfSpec(grain, cents.size, 0, nBuckets, layout, meta, dim)
+    }
   }
 
   /** The assignment table's declared physical layout, as
-    * (buildIvfIndex's layout name, nBuckets). */
-  private def assignLayoutOf(spark: org.apache.spark.sql.SparkSession,
+    * (layout name, nBuckets). */
+  private def assignLayoutOf(spark: SparkSession,
                              indexDir: String): (String, Int) =
-    graft.sources.Versioned.declaredLayout(spark, s"$indexDir/assignment") match {
+    Versioned.declaredLayout(spark, s"$indexDir/assignment") match {
       case l if l.startsWith("bucket:") => ("bucket", l.split(":")(2).toInt)
       case l if l.startsWith("part:") => ("partition", 8)
       case _ => ("bucket", 8)
@@ -965,10 +800,8 @@ object Similarity {
     * land in lockstep even after a crashed prior rebuild skewed them.
     * Pad versions are documented gap versions (never consistent pairs).
     */
-  private def padToLockstepTarget(spark: org.apache.spark.sql.SparkSession,
-                                  indexDir: String,
+  private def padToLockstepTarget(spark: SparkSession, indexDir: String,
                                   tables: Seq[String]): Long = {
-    import graft.sources.Versioned
     val target = tables
       .map(t => Versioned.latestVersion(spark, s"$indexDir/$t")).max + 1
     tables.foreach { t =>
@@ -989,7 +822,7 @@ object Similarity {
     * into the assignment rows at build (`metaCols`), so gated candidates
     * die at the scan without a join OR a distance evaluation. A
     * predicate naming a column the index does not carry REFUSES
-    * ([[requirePredicateCols]]). With nProbes = nCentroids a gated probe
+    * ([[Retrieval.requirePredicate]]). With nProbes = nCentroids a gated probe
     * is EXACTLY the brute-force top-k over the filtered corpus.
     */
   sealed trait Gate
@@ -1099,7 +932,8 @@ object Similarity {
         Some(col(c) === lit(v))
     }
     val assigned = pinnedAssignment(spark, arm.dir, arm.asOf)
-    predicate.foreach(requirePredicateCols(arm.dir, assigned, _))
+    predicate.foreach(Retrieval.requirePredicate(arm.dir, "assignment",
+      assigned, assignmentMetaCols(assigned), _))
     val eligible = predicate.map(assigned.filter).getOrElse(assigned)
     val cents = centroidArray(spark, arm.dir, arm.asOf, None)
     val (scored, stage) = bucketScorer(spark, arm, cents)
@@ -1182,7 +1016,7 @@ object Similarity {
       require(a.alpha.isEmpty || Versioned.exists(spark, s"${a.dir}/vectors"),
         s"${a.dir} has no vectors table — the exact re-rank serves the " +
           "shortlist from the index's own full-precision snapshot; rebuild " +
-          "this (pre-vectors) index with buildIvfPqIndex")
+          "this (pre-vectors) index with Index.build")
       val cbs = codebookArray(spark, a)
       // residual ADC: score(q, x) ≈ dot(q, c) + dot(q, x − c hat) — the
       // centroid base dot is ONE extra term per (query, probe), off the
@@ -1239,13 +1073,13 @@ object Similarity {
     val t = s"${arm.dir}/centroids"
     require(Versioned.read(spark, t, arm.asOf).columns.contains("s"),
       s"${arm.dir} is not an SQ8 index (its centroids carry no " +
-        "quantization scale) — build it with buildIvfSq8Index")
+        "quantization scale) — build it with an Index.Sq8Spec")
     Versioned.rows(spark, t, arm.asOf, Seq("s")).head.getDouble(0)
   }
 
   /** The PQ codebook as the [[pqCbNested]] value — cbs[j+1] = subspace
     * j's (code, cb) entries sorted by code — planned as a literal, with
-    * the [[pqGuard]]/[[pqResGuard]] checks on the collected rows: a
+    * the [[pqGuard]] and residual-flag checks on the collected rows: a
     * probe with the wrong m would slice wrong, and residual codes scored
     * without the centroid base term (or raw codes with it) would be
     * silently wrong by roughly one centroid dot.
@@ -1363,8 +1197,8 @@ object Similarity {
     * gate value, tombstone-gated so the counts reflect what a probe
     * can actually return, stamped with the assignment version they
     * describe (`src_v` — the staleness check readers apply). Called at
-    * build cadence by the operator owner; [[appendToIvfIndex]] merges
-    * batches additively, [[compactIvfIndex]]/[[rebuildIvfIndex]]
+    * build cadence by the operator owner; [[Index.append]] merges
+    * batches additively, [[Index.compact]]/retrain
     * re-derive. Counts are (nCentroids × gate cardinality) rows —
     * broadcast-sized by the categorical-gate contract.
     */
@@ -1399,7 +1233,7 @@ object Similarity {
     * tracks — the compact/rebuild-cadence heal (also repairs a sidecar
     * gone stale after a crashed append). No-op without a sidecar.
     */
-  private def refreshGateCountsIfPresent(
+  private[operators] def refreshGateCountsIfPresent(
       spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
     val t = s"$indexDir/gatecounts"
     if (!graft.sources.Versioned.exists(spark, t)) return
@@ -1445,25 +1279,22 @@ object Similarity {
     * centroid row carries the ONE global quantization scale (max |x|
     * over the corpus, the ranking-preserving shared scale q109 uses).
     * Assignment runs in full precision BEFORE quantization, so bucket
-    * membership is identical to [[buildIvfIndex]]'s.
+    * membership is identical to [[ivfBuild]]'s.
     */
-  def buildIvfSq8Index(candidates: DataFrame, indexDir: String,
-                       nCentroids: Int = 16, lloydIters: Int = 0,
-                       nBuckets: Int = 8,
-                       assignmentLayout: String = "bucket"): Long = {
+  private[operators] def sq8Build(candidates: DataFrame, indexDir: String,
+                                  spec: Index.Sq8Spec): Long = {
     val c = prepCandidates(candidates)
-    val (centroids, assigned) = centroidsAndAssignment(c, nCentroids, lloydIters)
+    val (centroids, assigned) =
+      centroidsAndAssignment(c, spec.nCentroids, spec.lloydIters)
     val scale = sq8Scale(c.select(col("cv").as("v")))
     val codes = sq8Apply(c.select(col("cand_id"), col("cv").as("v")), scale)
     val assignedQ = assigned.select(col("centroid_id"), col("cand_id"))
       .join(codes, Seq("cand_id"))
       .select(col("centroid_id"), col("cand_id"), col("q").as("cq"))
-    val vc = graft.sources.Versioned.overwrite(
-      centroids.crossJoin(broadcast(scale)), s"$indexDir/centroids")
-    val va = commitAssignment(assignedQ, s"$indexDir/assignment",
-      assignmentLayout, nBuckets)
-    require(vc == va, s"index tables diverged: centroids v$vc vs assignment v$va")
-    vc
+    Versioned.overwrite(centroids.crossJoin(broadcast(scale)),
+      s"$indexDir/centroids"): Unit
+    commitAssignment(assignedQ, s"$indexDir/assignment", spec.layout,
+      spec.nBuckets)
   }
 
   /** Global quantization scale of a corpus: max |component| across
@@ -1592,26 +1423,6 @@ object Similarity {
     .filter(assert_true(size(col("cbs")) === m,
       lit(s"PQ codebook subspace count != caller's m = $m")).isNull)
 
-  /** Guard: the caller's residual flag must match the flag the codebook
-    * was BUILT with (persisted on every codebook row). Scoring residual
-    * codes without the centroid base term — or raw codes with it —
-    * would be silently wrong by roughly one centroid dot, so a mismatch
-    * fails loudly in-plan (same discipline as [[pqGuard]]).
-    */
-  private def pqResGuard(cb: DataFrame, residual: Boolean): DataFrame =
-    if (!cb.columns.contains("res")) {
-      // Index dir persisted before the residual flag existed: those
-      // codebooks were always raw-encoded, so residual=false reads them
-      // unchanged; residual=true gets a real message instead of an
-      // unresolved-column AnalysisException.
-      require(!residual, "this codebook predates residual encoding (no " +
-        "'res' column): it was built raw — query/append with " +
-        "residual=false, or rebuild the index to use by_residual")
-      cb
-    } else cb
-      .filter(assert_true(col("res") === lit(residual),
-        lit(s"PQ codebook residual flag != caller's residual = $residual")).isNull)
-
   /** Residual vectors: cand − its assigned centroid, the relation a
     * residual codebook trains on and encodes (FAISS-IVFPQ's
     * `by_residual`). Centroids broadcast; the subtraction is map-side.
@@ -1698,7 +1509,7 @@ object Similarity {
     * IVF centroids stay full-precision (probe quality), the codebook is
     * m·ks tiny rows, and the assignment stores (centroid_id, cand_id,
     * pqcode). Bucket membership is assigned in full precision BEFORE
-    * quantization, identical to [[buildIvfIndex]]'s.
+    * quantization, identical to [[ivfBuild]]'s.
     *
     * A FOURTH lockstep table, `vectors/`, persists the full-precision
     * vectors the build already computed to encode the codes —
@@ -1717,14 +1528,9 @@ object Similarity {
     * rows — a couple of row-groups — per shard directory, so probed
     * bytes stay flat as the corpus grows).
     */
-  def buildIvfPqIndex(candidates: DataFrame, indexDir: String,
-                      nCentroids: Int = 16, m: Int = 8, ks: Int = 16,
-                      pqLloydIters: Int = 0, lloydIters: Int = 0,
-                      dim: Int = 64, residual: Boolean = false,
-                      nBuckets: Int = 8,
-                      assignmentLayout: String = "bucket",
-                      nVecParts: Int = 0,
-                      metaCols: Seq[String] = Nil): Long = {
+  private[operators] def pqBuild(candidates: DataFrame, indexDir: String,
+                                 spec: Index.PqSpec): Long = {
+    import spec._
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val sub = dim / m
     val c = prepCandidates(candidates)
@@ -1751,21 +1557,18 @@ object Similarity {
       candidates, metaCols)
     // the full-precision table lands FIRST (the postings-first
     // discipline: a crash after it leaves the raw data on disk, from
-    // which repairIvfIndex COMPLETES the operation)
+    // which annRepair COMPLETES the operation)
     val nVec = if (nVecParts > 0) nVecParts else autoVecShards(c.count())
-    val vv = graft.sources.Versioned.overwritePartitioned(
+    val vv = Versioned.overwritePartitioned(
       withMeta(c.select(col("cand_id"), col("cv")), candidates, metaCols)
         .withColumn("vec_part", pmod(col("cand_id"), lit(nVec.toLong))),
       s"$indexDir/vectors", "vec_part")
-    val vc = graft.sources.Versioned.overwrite(centroids, s"$indexDir/centroids")
-    val vb = graft.sources.Versioned.overwrite(cb, s"$indexDir/codebook")
-    val va = commitAssignment(assignedQ, s"$indexDir/assignment",
-      assignmentLayout, nBuckets)
-    require(vv == vc && vc == vb && vb == va,
-      s"index tables diverged: vectors v$vv / centroids v$vc / " +
-        s"codebook v$vb / assignment v$va")
+    Versioned.overwrite(centroids, s"$indexDir/centroids"): Unit
+    Versioned.overwrite(cb, s"$indexDir/codebook"): Unit
+    val va = commitAssignment(assignedQ, s"$indexDir/assignment", layout,
+      nBuckets)
     Stamp.write(candidates.sparkSession, indexDir, Stamp.VecParts, nVec, vv)
-    vc
+    va
   }
 
   /** Auto-sized vec_part modulus: ~128 vectors (~64 KB of float64 at
@@ -1775,94 +1578,11 @@ object Similarity {
     * batch's |Q|·k·alpha shortlist for the probe to prune — with
     * count-proportional shards the probed bytes are bounded by
     * |shortlist| × shardBytes, flat in the corpus. Sized at BUILD time
-    * from the actual corpus; [[compactIvfIndex]] re-derives it when
+    * from the actual corpus; [[annCompact]] re-derives it when
     * appends have outgrown the layout.
     */
   private[operators] def autoVecShards(count: Long): Int =
     math.max(4L, math.min(4096L, (count + 127L) / 128L)).toInt
-
-  /** Append a batch to a persisted IVF-PQ index without rebuilding:
-    * assign to the FROZEN centroids, encode on the FROZEN codebook —
-    * one map-side pass over the batch (FAISS `add` semantics; codebook
-    * drift vs the growing corpus is the caller's rebuild dial). All
-    * four tables commit so versions stay lockstep, FULL-PRECISION
-    * VECTORS FIRST (the postings-first discipline): a crash after the
-    * vectors append leaves the raw batch on disk, from which
-    * [[repairIvfIndex]] COMPLETES the append (re-encoding the orphan
-    * slice on the frozen centroids + codebook) — the reverse order was
-    * unwedgeable, the codes being lossy. The dim guard rides the
-    * vectors append (the FIRST write), so a wrong-dimension batch
-    * refuses before anything commits.
-    */
-  def appendToIvfPqIndex(batch: DataFrame, indexDir: String,
-                         m: Int = 8, dim: Int = 64,
-                         residual: Boolean = false): Long = {
-    require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
-    val sub = dim / m
-    val spark = batch.sparkSession
-    require(Seq("vectors", "centroids", "codebook", "assignment")
-        .filter(t => graft.sources.Versioned.exists(spark, s"$indexDir/$t"))
-        .map(t => graft.sources.Versioned.latestVersion(spark, s"$indexDir/$t"))
-        .distinct.size == 1,
-      s"$indexDir tables out of lockstep — a prior append crashed between " +
-        "commits; run repairIvfIndex, then retry this append")
-    val nVec = Stamp.read(spark, indexDir, Stamp.VecParts).getOrElse(sys.error(
-      s"$indexDir vectors table's ${Stamp.VecParts.name} sidecar is " +
-        "absent or stale — run repairIvfIndex (a pre-vectors index must " +
-        "rebuild with buildIvfPqIndex: the exact re-rank serves from the " +
-        "index's own full-precision table)"))
-    val centroids = graft.sources.Versioned.read(spark, s"$indexDir/centroids")
-    val cb = pqResGuard(
-      graft.sources.Versioned.read(spark, s"$indexDir/codebook"), residual)
-    val c = prepCandidates(batch)
-    // dim guard in-plan, riding the FIRST write job: a batch whose
-    // vectors' length differs from the index's would corrupt both the
-    // codes and every exact re-rank dot — refused before any commit
-    val sz = (co: org.apache.spark.sql.Column) =>
-      org.apache.spark.sql.functions.size(co)
-    val badDims = c
-      .crossJoin(broadcast(centroids
-        .agg(org.apache.spark.sql.functions.max(sz(col("centv"))).as("__dim"))))
-      .filter(sz(col("cv")) =!= col("__dim"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("__bad"))
-    // a metadata-carrying index keeps its filtered-probe contract
-    // through appends (see appendToIvfIndex): the batch must supply the
-    // baked columns, and they land on BOTH tables, matching the build
-    val meta = assignmentMetaCols(
-      graft.sources.Versioned.read(spark, s"$indexDir/assignment"))
-    val metaMissing = meta.filterNot(batch.columns.contains)
-    require(metaMissing.isEmpty,
-      s"$indexDir assignment carries metadata column(s) " +
-        s"${meta.mkString(", ")} (filtered-probe gates); the append batch " +
-        s"must supply them — missing: ${metaMissing.mkString(", ")}")
-    val guardedVecs = withMeta(c.select(col("cand_id"), col("cv")), batch, meta)
-      .withColumn("vec_part", pmod(col("cand_id"), lit(nVec.toLong)))
-      .crossJoin(broadcast(badDims))
-      .filter(org.apache.spark.sql.functions.assert_true(
-        col("__bad") === 0L,
-        lit(s"IVF-PQ append dim mismatch on $indexDir: the batch carries " +
-          "vectors whose length differs from the index's stored centroid " +
-          "dim — re-embed the batch with the build's encoder/dim; " +
-          "nothing was committed")).isNull)
-      .drop("__bad")
-    val assignedB = assignTo(c, centroids)
-    val encBase = if (residual) residualsOf(assignedB, centroids) else c
-    val assignedNew = withMeta(assignedB
-      .select(col("centroid_id"), col("cand_id"))
-      .join(withPqCodes(encBase, cb, m, sub).select(col("cand_id"), col("pqcode")),
-        Seq("cand_id"))
-      .select(col("centroid_id"), col("cand_id"), col("pqcode")),
-      batch, meta)
-    val vv = graft.sources.Versioned.appendPartitioned(guardedVecs,
-      s"$indexDir/vectors", "vec_part")
-    val vc = graft.sources.Versioned.overwrite(centroids, s"$indexDir/centroids")
-    val vb = graft.sources.Versioned.overwrite(cb, s"$indexDir/codebook")
-    val va = appendAssignment(assignedNew, s"$indexDir/assignment")
-    require(vv == vc && vc == vb && vb == va,
-      s"index tables diverged: vectors v$vv / centroids v$vc / " +
-        s"codebook v$vb / assignment v$va")
-    vc
-  }
 
   /** Full-precision rows for a bounded candidate set — the
     * [[Retrieval.forwardFor]] discipline on the vectors table: the

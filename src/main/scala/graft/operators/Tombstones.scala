@@ -22,7 +22,7 @@ import graft.sources.Versioned
   *    is unchanged by a pending delete.
   *  - **Physical drop at the compaction cadence**: the index
   *    compactions ([[Retrieval.compactBm25Index]],
-  *    [[Similarity.compactIvfIndex]], [[Retrieval.compactForwardIndex]])
+  *    [[Index.compact]])
   *    filter the tombstoned rows out of the data tables and CORRECT the
   *    corpus statistics (n_docs/sum_dl subtract the dropped documents'
   *    denormalized lengths), after which the index is row-identical to

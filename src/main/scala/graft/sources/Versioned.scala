@@ -805,12 +805,13 @@ object Versioned {
   /** The read-side LOCKSTEP rule for tables one writer commits together
     * under `dir`, and the version a read of them pins. A pinned read
     * names its own version (`asOf`, returned unchecked). A latest read
-    * requires every table of `tables` that exists under `dir` to share
-    * one latest version: one table ahead of the others means a
-    * multi-table commit crashed between its commits, and reading the
-    * pair anyway would join new rows against stale ones. The refusal
-    * names `remedy`. Index and model reads, batch and streaming, pin
-    * through here.
+    * requires every table of `tables` to exist under `dir` at one shared
+    * latest version: a table missing beside the others means a first
+    * build crashed between its commits, and one table ahead of the
+    * others means a later multi-table commit did — reading the set
+    * anyway would join new rows against stale (or absent) ones. The
+    * refusal names `remedy`. Index, model and signal-state reads, batch
+    * and streaming, pin through here.
     */
   def lockstep(spark: SparkSession, dir: String, tables: Seq[String],
                asOf: Option[Long], remedy: => String): Long =
@@ -821,6 +822,11 @@ object Versioned {
       }
       require(heads.nonEmpty,
         s"$dir holds none of the versioned tables ${tables.mkString(", ")}")
+      val missing = tables.filterNot(heads.map(_._1).contains)
+      require(missing.isEmpty, s"$dir tables out of lockstep: " +
+        s"${missing.mkString(", ")} missing beside " +
+        s"${heads.map { case (t, v) => s"$t v$v" }.mkString(", ")} — a " +
+        s"first build crashed between commits; $remedy")
       require(heads.map(_._2).distinct.size == 1, s"$dir tables out of " +
         s"lockstep (${heads.map { case (t, v) => s"$t v$v" }.mkString(", ")})" +
         s" — a build or append crashed between commits; $remedy")

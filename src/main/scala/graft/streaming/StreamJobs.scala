@@ -242,7 +242,7 @@ object StreamJobs {
       .start()
 
   /** Probe a persisted ANN index ([[graft.operators.Similarity]]
-    * `buildIvfIndex`) with an unbounded stream of query vectors
+    * `Index.build`) with an unbounded stream of query vectors
     * (id, vec): each micro-batch pays only probe selection + the
     * bucket scan — the online-serving half of the build-once /
     * probe-many cadence. The index version is PINNED at stream start
@@ -307,7 +307,7 @@ object StreamJobs {
   }
 
   /** Online BM25 serving against the persisted inverted index
-    * ([[graft.operators.Retrieval.buildBm25Index]]): each micro-batch
+    * ([[graft.operators.Index.build]]): each micro-batch
     * of (query_id, terms) rows pays one pass over its terms' postings
     * slices ([[graft.operators.Retrieval.queryBm25IndexMany]] — never
     * the corpus); the index version is pinned at stream start

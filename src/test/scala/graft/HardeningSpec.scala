@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import java.nio.file.Files
 import org.apache.hadoop.fs.{FilterFileSystem, Path}
 import org.apache.spark.sql.functions._
@@ -185,7 +186,8 @@ class HardeningSpec extends SparkSpec {
     val idir = Files.createTempDirectory("ivf_lockstep").toString
     val pool = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)),
       (3L, Seq(0.7f, 0.7f))).toDF("id", "vec")
-    Similarity.buildIvfIndex(pool, idir, nCentroids = 2): Unit
+    Index.build(Index.IvfSpec(nCentroids = 2),
+      Index.Vectors(pool), idir): Unit
     Versioned.overwrite(
       Versioned.read(spark, s"$idir/assignment"), s"$idir/assignment"): Unit
     val e2 = intercept[IllegalArgumentException] {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -93,7 +94,8 @@ class PropertiesSpec extends SparkSpec {
     val wordGen = Gen.oneOf("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
     val docGen = Gen.listOfN(8, wordGen).map(_.mkString(" "))
     forSamples(Gen.listOfN(8, docGen), n = 4) { texts =>
-      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong,
+        t) }.toDF("doc_id", "text")
       val pairs = NearDup.ngramJaccardPairs(df, col("doc_id"), col("text")).collect()
       assert(pairs.forall { r =>
         val j = r.getAs[Double]("jaccard")
@@ -425,8 +427,8 @@ class PropertiesSpec extends SparkSpec {
       val lens = docs.map { case (id, t) => id -> t.split(" ").length.toLong }.toMap
       val docsDf = docs.toDF("doc_id", "text")
       val fdir = java.nio.file.Files.createTempDirectory("prop_fwd").toString
-      graft.operators.Retrieval.buildForwardIndex(docsDf, col("doc_id"),
-        col("text"), fdir, nPartDirs = 3): Unit
+      Index.build(Index.ForwardSpec(nPartDirs = 3),
+        Index.Text(docsDf, col("doc_id"), col("text")), fdir): Unit
       // random valid spans over the corpus
       val spans = docs.flatMap { case (id, _) =>
         val L = lens(id)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
@@ -83,7 +84,8 @@ class RetrievalSpec extends SparkSpec {
     val union  = first.unionByName(second)
     val terms  = Seq("spark", "rare", "join")
 
-    val v1 = Retrieval.buildBm25Index(first, col("doc_id"), col("text"), dir)
+    val v1 = Index.build(Index.Bm25Spec(),
+      Index.Text(first, col("doc_id"), col("text")), dir)
     val inline1 = Retrieval.bm25TopK(first, col("doc_id"), col("text"), terms, 10)
       .collect().toSeq
     val probe1 = Retrieval.queryBm25Index(spark, dir, terms, 10).collect().toSeq
@@ -109,7 +111,8 @@ class RetrievalSpec extends SparkSpec {
       (5L, "a a a a"))                      // overlapping self-phrase
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("bm25phrase").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
 
     def naive(phrase: Seq[String]): Map[Long, Long] = docs
       .as[(Long, String)].collect().toMap.view.mapValues(_.split(" ").toSeq)
@@ -134,7 +137,8 @@ class RetrievalSpec extends SparkSpec {
   test("queryBm25IndexMany: a 1-query batch ≡ queryBm25Index; phrase asOf pins") {
     val dir = java.nio.file.Files.createTempDirectory("bm25many").toString
     val docs = corpus.toDF("doc_id", "text")
-    val v0 = Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir)
+    val v0 = Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     val terms = Seq("spark", "rare", "join")
     val single = Retrieval.queryBm25Index(spark, dir, terms, 10)
       .as[(Long, Long, Double)].collect().toSeq
@@ -159,7 +163,8 @@ class RetrievalSpec extends SparkSpec {
   test("an out-of-lockstep index refuses every consumer; asOf still works") {
     val dir = java.nio.file.Files.createTempDirectory("bm25wedge").toString
     val docs = corpus.toDF("doc_id", "text")
-    val v0 = Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir)
+    val v0 = Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     val good = Retrieval.queryBm25Index(spark, dir, Seq("spark"), 5)
       .collect().toSeq
     // simulate a crash between an append's two commits: postings
@@ -191,15 +196,18 @@ class RetrievalSpec extends SparkSpec {
     val healthy = java.nio.file.Files.createTempDirectory("bm25ok").toString
     val docs = corpus.toDF("doc_id", "text")
     val batch = Seq((60L, "spark spark rare"), (61L, "join hay")).toDF("doc_id", "text")
-    val v0 = Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), crashed)
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), healthy): Unit
+    val v0 = Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), crashed)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), healthy): Unit
     val vOk = Retrieval.appendToBm25Index(batch, col("doc_id"), col("text"), healthy)
 
     // simulate the crash: the batch's postings land (identical rows to a
     // real append — a scratch one-batch build produces exactly
     // postingsOf(batch)), the stats CAS never runs
     val scratch = java.nio.file.Files.createTempDirectory("bm25sc").toString
-    Retrieval.buildBm25Index(batch, col("doc_id"), col("text"), scratch): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(batch, col("doc_id"), col("text")), scratch): Unit
     graft.sources.Versioned.append(
       graft.sources.Versioned.read(spark, s"$scratch/postings"),
       s"$crashed/postings"): Unit
@@ -215,7 +223,7 @@ class RetrievalSpec extends SparkSpec {
     }
 
     // repair recomputes the stats delta from the orphan postings slice
-    val vr = Retrieval.repairBm25Index(spark, crashed)
+    val vr = Index.repair(spark, crashed)
     assert(vr == vOk)
     def rows(dir: String) = Retrieval.queryBm25Index(spark, dir,
       Seq("spark", "rare", "join", "hay"), 10)
@@ -223,7 +231,7 @@ class RetrievalSpec extends SparkSpec {
     assert(rows(crashed) == rows(healthy),
       "repaired index must score exactly like the uncrashed append")
     // idempotent: repairing an intact index is a no-op
-    assert(Retrieval.repairBm25Index(spark, crashed) == vr)
+    assert(Index.repair(spark, crashed) == vr)
     // the pre-crash version still time-travels
     assert(Retrieval.queryBm25Index(spark, crashed, Seq("spark"), 10,
       asOf = Some(v0)).collect().nonEmpty)
@@ -235,11 +243,12 @@ class RetrievalSpec extends SparkSpec {
     val docs = corpus.toDF("doc_id", "text")
     // simulate a build crash: postings committed, stats never were
     val scratch = java.nio.file.Files.createTempDirectory("bm25bsc").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), scratch): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), scratch): Unit
     graft.sources.Versioned.overwriteBucketed(
       graft.sources.Versioned.read(spark, s"$scratch/postings"),
       s"$dir/postings", "tok", 8): Unit
-    val vr = Retrieval.repairBm25Index(spark, dir)
+    val vr = Index.repair(spark, dir)
     assert(vr == 0L)
     val want = Retrieval.queryBm25Index(spark, scratch, Seq("spark"), 10)
       .as[(Long, Long, Double)].collect().toSeq
@@ -250,7 +259,7 @@ class RetrievalSpec extends SparkSpec {
     graft.sources.Versioned.overwrite(
       graft.sources.Versioned.read(spark, s"$dir/stats"), s"$dir/stats"): Unit
     val e = intercept[IllegalArgumentException] {
-      Retrieval.repairBm25Index(spark, dir)
+      Index.repair(spark, dir)
     }
     assert(e.getMessage.contains("AHEAD"))
   }
@@ -259,7 +268,8 @@ class RetrievalSpec extends SparkSpec {
       "not) heals with an empty-delta catch-up commit") {
     val dir = java.nio.file.Files.createTempDirectory("bm25ccr").toString
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     Retrieval.appendToBm25Index(
       Seq((80L, "spark appended")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir): Unit
@@ -268,7 +278,7 @@ class RetrievalSpec extends SparkSpec {
     // compactBm25Index compacts postings FIRST; simulate dying before
     // the stats compaction
     graft.sources.Versioned.compact(spark, s"$dir/postings"): Unit
-    val vr = Retrieval.repairBm25Index(spark, dir)
+    val vr = Index.repair(spark, dir)
     assert(vr == graft.sources.Versioned.latestVersion(spark, s"$dir/postings"))
     assert(Retrieval.queryBm25Index(spark, dir, Seq("spark"), 10)
       .as[(Long, Long, Double)].collect().toSeq == before,
@@ -279,7 +289,8 @@ class RetrievalSpec extends SparkSpec {
       "scan; appends demote; compactBm25Index restores layout + scores") {
     val dir = java.nio.file.Files.createTempDirectory("bm25bkt").toString
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution
       .explainString(org.apache.spark.sql.execution.SimpleMode)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -319,9 +330,10 @@ class RetrievalSpec extends SparkSpec {
     val bdir = java.nio.file.Files.createTempDirectory("bm25b").toString
     val pdir = java.nio.file.Files.createTempDirectory("bm25p").toString
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bdir): Unit
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), pdir,
-      layout = "partition", nPartDirs = 4): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), bdir): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), pdir): Unit
     val terms = Seq("spark", "rare", "join")
     def single(dir: String) = Retrieval.queryBm25Index(spark, dir, terms, 10)
       .as[(Long, Long, Double)].collect().toSeq
@@ -395,8 +407,8 @@ class RetrievalSpec extends SparkSpec {
       "pin's own epoch record") {
     val dir = java.nio.file.Files.createTempDirectory("bm25pin").toString
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 8): Unit          // v0: epoch A
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 8),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit          // v0: epoch A
     Retrieval.appendToBm25Index(
       Seq((90L, "spark appended")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir): Unit              // v1: the pin
@@ -446,8 +458,9 @@ class RetrievalSpec extends SparkSpec {
       (4L, "nothing matches here at all", "fr"),
       (5L, "spark rare join", "de")).toDF("doc_id", "text", "lang")
     val dir = java.nio.file.Files.createTempDirectory("bm25flt").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4, metaCols = Seq("lang")): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4,
+      metaCols = Seq("lang")),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     val terms = Seq("spark", "rare", "join")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "n_terms", "score")
@@ -502,8 +515,8 @@ class RetrievalSpec extends SparkSpec {
     val emb = graft.operators.Corpus.hashEmbed(docs, col("doc_id"), col("text"))
       .join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
     val ivfDir = java.nio.file.Files.createTempDirectory("ivfflt").toString
-    graft.operators.Similarity.buildIvfIndex(emb, ivfDir, nCentroids = 4,
-      metaCols = Seq("lang")): Unit
+    Index.build(Index.IvfSpec(nCentroids = 4, metaCols = Seq("lang")),
+      Index.Vectors(emb), ivfDir): Unit
     val queries = Seq((1L, terms)).toDF("query_id", "terms")
       .join(emb.select(col("id").as("query_id"), col("vec")), Seq("query_id"))
     val fused = Retrieval.hybrid(spark, Hybrid(dir, Ivf(ivfDir, nProbes = 4),
@@ -512,7 +525,8 @@ class RetrievalSpec extends SparkSpec {
     assert(fused.nonEmpty && fused.subsetOf(Set(1L, 3L, 9L)),
       s"fused results must all pass the gate, got $fused")
     val ivfPlain = java.nio.file.Files.createTempDirectory("ivfflt2").toString
-    graft.operators.Similarity.buildIvfIndex(emb, ivfPlain, nCentroids = 4): Unit
+    Index.build(Index.IvfSpec(nCentroids = 4),
+      Index.Vectors(emb), ivfPlain): Unit
     val err3 = intercept[IllegalArgumentException] {
       Retrieval.hybrid(spark, Hybrid(dir, Ivf(ivfPlain),
         predicate = Some(col("lang") === "en")), queries, k = 10).collect()
@@ -537,11 +551,11 @@ class RetrievalSpec extends SparkSpec {
     val docs = (filler :+ planted :+ plantedFr).toDF("doc_id", "text", "lang")
     val bmDir = java.nio.file.Files.createTempDirectory("cbmflt").toString
     val ivDir = java.nio.file.Files.createTempDirectory("civflt").toString
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), bmDir,
-      size = 16, stride = 8, metaCols = Seq("lang")): Unit
-    Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), ivDir,
-      size = 16, stride = 8, dim = 16, nCentroids = 4,
-      metaCols = Seq("lang")): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(16, 8), metaCols = Seq("lang")),
+      Index.Text(docs, col("doc_id"), col("text")), bmDir): Unit
+    Index.build(Index.IvfSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 4,
+      metaCols = Seq("lang")),
+      Index.Text(docs, col("doc_id"), col("text")), ivDir): Unit
     val terms = Seq("zebra", "quark", "xylem")
     def spans(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "chunk_start", "n_terms", "score")
@@ -557,25 +571,23 @@ class RetrievalSpec extends SparkSpec {
     // chunk appends inherit the doc gate per chunk (batch must carry it)
     val vB = Versioned.latestVersion(spark, s"$bmDir/postings")
     intercept[IllegalArgumentException] {
-      Retrieval.appendToChunkBm25Index(
-        Seq((7L, "zebra quark xylem encore")).toDF("doc_id", "text"),
-        col("doc_id"), col("text"), bmDir)
+      Index.append(Index.Text(Seq((7L,
+        "zebra quark xylem encore")).toDF("doc_id", "text"), col("doc_id"),
+          col("text")), bmDir)
     }
     assert(Versioned.latestVersion(spark, s"$bmDir/postings") == vB)
-    Retrieval.appendToChunkBm25Index(
-      Seq((7L, "zebra quark xylem encore", "en"),
+    Index.append(Index.Text(Seq((7L, "zebra quark xylem encore", "en"),
           (8L, "zebra quark xylem aussi", "fr"))
-        .toDF("doc_id", "text", "lang"),
-      col("doc_id"), col("text"), bmDir): Unit
+        .toDF("doc_id", "text", "lang"), col("doc_id"),
+        col("text")), bmDir): Unit
     val flt2 = spans(Retrieval.lexical(spark, Lexical(bmDir,
       predicate = Some(col("lang") === "en")), terms, 20)).map(_._1).toSet
     assert(flt2 == Set(5L, 7L), s"expected EN docs only, got $flt2")
     // the ANN arm appends inherit the gate too
-    Retrieval.appendToChunkIvfIndex(
-      Seq((7L, "zebra quark xylem encore", "en"),
+    Index.append(Index.Text(Seq((7L, "zebra quark xylem encore", "en"),
           (8L, "zebra quark xylem aussi", "fr"))
-        .toDF("doc_id", "text", "lang"),
-      col("doc_id"), col("text"), ivDir, dim = 16): Unit
+        .toDF("doc_id", "text", "lang"), col("doc_id"),
+        col("text")), ivDir): Unit
     assert(Versioned.read(spark, s"$ivDir/assignment")
       .filter(col("lang").isNull).isEmpty)
     // the fused filtered serve: every span's DOCUMENT passes the gate
@@ -591,8 +603,8 @@ class RetrievalSpec extends SparkSpec {
     assert(fused.contains(5L))
     // an arm missing the gate column refuses the whole serve
     val plain = java.nio.file.Files.createTempDirectory("civplain").toString
-    Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), plain,
-      size = 16, stride = 8, dim = 16, nCentroids = 4): Unit
+    Index.build(Index.IvfSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 4),
+      Index.Text(docs, col("doc_id"), col("text")), plain): Unit
     val err = intercept[IllegalArgumentException] {
       Retrieval.hybrid(spark, Hybrid(bmDir, Ivf(plain),
         predicate = Some(col("lang") === "en")), queries, k = 10).collect()
@@ -601,9 +613,9 @@ class RetrievalSpec extends SparkSpec {
     // the PQ chunk build carries the gate too: the generic filtered
     // re-rank works on it unchanged
     val pqDir = java.nio.file.Files.createTempDirectory("cpqflt").toString
-    Retrieval.buildChunkIvfPqIndex(docs, col("doc_id"), col("text"), pqDir,
-      size = 16, stride = 8, dim = 16, nCentroids = 4, m = 4,
-      metaCols = Seq("lang")): Unit
+    Index.build(Index.PqSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 4,
+      m = 4, metaCols = Seq("lang")),
+      Index.Text(docs, col("doc_id"), col("text")), pqDir): Unit
     val pq = Similarity.probe(spark, Pq(pqDir, Some(50), nProbes = 4, m = 4,
       dim = 16), queries.select(col("query_id").as("id"), col("vec")), 5,
       Similarity.Where(col("lang") === "en"))
@@ -644,10 +656,10 @@ class RetrievalSpec extends SparkSpec {
     val docs = (filler :+ planted).toDF("doc_id", "text")
     val bmDir = java.nio.file.Files.createTempDirectory("chb").toString
     val ivDir = java.nio.file.Files.createTempDirectory("chi").toString
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), bmDir,
-      size = 16, stride = 8): Unit
-    Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), ivDir,
-      size = 16, stride = 8, dim = 16, nCentroids = 4): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(16, 8)),
+      Index.Text(docs, col("doc_id"), col("text")), bmDir): Unit
+    Index.build(Index.IvfSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 4),
+      Index.Text(docs, col("doc_id"), col("text")), ivDir): Unit
 
     val qraw = Seq((900L, Seq("zebra", "quark", "xylem")))
       .toDF("query_id", "terms")
@@ -668,8 +680,8 @@ class RetrievalSpec extends SparkSpec {
 
     // grids must agree or fusion refuses
     val ivDir2 = java.nio.file.Files.createTempDirectory("chi2").toString
-    Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), ivDir2,
-      size = 32, stride = 16, dim = 16, nCentroids = 4): Unit
+    Index.build(Index.IvfSpec(Index.Chunks(32, 16), dim = 16, nCentroids = 4),
+      Index.Text(docs, col("doc_id"), col("text")), ivDir2): Unit
     val e = intercept[IllegalArgumentException] {
       Retrieval.hybrid(spark, Hybrid(bmDir, Ivf(ivDir2)), queries, 5)
     }
@@ -687,8 +699,10 @@ class RetrievalSpec extends SparkSpec {
     val vecs = graft.operators.Corpus.hashEmbed(docs, col("doc_id"), col("text"))
     val bmDir = java.nio.file.Files.createTempDirectory("hpqb").toString
     val pqDir = java.nio.file.Files.createTempDirectory("hpqi").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bmDir): Unit
-    graft.operators.Similarity.buildIvfPqIndex(vecs, pqDir, nCentroids = 4): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), bmDir): Unit
+    Index.build(Index.PqSpec(nCentroids = 4),
+      Index.Vectors(vecs), pqDir): Unit
 
     val qraw = Seq((900L, Seq("zebra", "quark", "xylem")))
       .toDF("query_id", "terms")
@@ -720,10 +734,11 @@ class RetrievalSpec extends SparkSpec {
     val docs = (filler :+ planted).toDF("doc_id", "text")
     val bmDir = java.nio.file.Files.createTempDirectory("cpqb").toString
     val pqDir = java.nio.file.Files.createTempDirectory("cpqi").toString
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), bmDir,
-      size = 16, stride = 8): Unit
-    Retrieval.buildChunkIvfPqIndex(docs, col("doc_id"), col("text"), pqDir,
-      size = 16, stride = 8, dim = 16, nCentroids = 4, m = 4, ks = 8): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(16, 8)),
+      Index.Text(docs, col("doc_id"), col("text")), bmDir): Unit
+    Index.build(Index.PqSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 4,
+      m = 4, ks = 8),
+      Index.Text(docs, col("doc_id"), col("text")), pqDir): Unit
 
     val qraw = Seq((900L, Seq("zebra", "quark", "xylem")))
       .toDF("query_id", "terms")
@@ -747,8 +762,9 @@ class RetrievalSpec extends SparkSpec {
 
     // grid mismatch refuses
     val pqDir2 = java.nio.file.Files.createTempDirectory("cpqi2").toString
-    Retrieval.buildChunkIvfPqIndex(docs, col("doc_id"), col("text"), pqDir2,
-      size = 32, stride = 16, dim = 16, nCentroids = 4, m = 4, ks = 8): Unit
+    Index.build(Index.PqSpec(Index.Chunks(32, 16), dim = 16, nCentroids = 4,
+      m = 4, ks = 8),
+      Index.Text(docs, col("doc_id"), col("text")), pqDir2): Unit
     val e = intercept[IllegalArgumentException] {
       Retrieval.hybrid(spark, Hybrid(bmDir, Pq(pqDir2, m = 4, ks = 8,
         dim = 16)), queries, k = 5)
@@ -760,10 +776,8 @@ class RetrievalSpec extends SparkSpec {
     val batch = Seq((9L,
       (Seq.fill(8)("pad") ++ Seq("zebra", "quark", "xylem")).mkString(" ")))
       .toDF("doc_id", "text")
-    Retrieval.appendToChunkBm25Index(batch, col("doc_id"), col("text"),
-      bmDir): Unit
-    Retrieval.appendToChunkIvfPqIndex(batch, col("doc_id"), col("text"),
-      pqDir, dim = 16, m = 4): Unit
+    Index.append(Index.Text(batch, col("doc_id"), col("text")), bmDir): Unit
+    Index.append(Index.Text(batch, col("doc_id"), col("text")), pqDir): Unit
     val fused2 = Retrieval.hybrid(spark, Hybrid(bmDir,
         Pq(pqDir, alpha = Some(8), nProbes = 4, m = 4, ks = 8, dim = 16),
         kEach = 10), queries, k = 5)
@@ -809,9 +823,10 @@ class RetrievalSpec extends SparkSpec {
     // one lexical and one float IVF index, both built without metaCols
     val bm = java.nio.file.Files.createTempDirectory("prref-bm").toString
     val iv = java.nio.file.Files.createTempDirectory("prref-iv").toString
-    Retrieval.buildBm25Index(corpus.toDF("doc_id", "text"), col("doc_id"),
-      col("text"), bm)
-    graft.operators.Similarity.buildIvfIndex(plantedVecs, iv, nCentroids = 2)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(corpus.toDF("doc_id", "text"), col("doc_id"), col("text")), bm)
+    Index.build(Index.IvfSpec(nCentroids = 2),
+      Index.Vectors(plantedVecs), iv)
     val gate = col("lang") === "en"
     val queries = Seq((1L, Seq("spark"), Seq(1.0, 0.0, 0.0, 0.0)))
       .toDF("query_id", "terms", "vec")
@@ -837,10 +852,15 @@ class RetrievalSpec extends SparkSpec {
           col("text")), queries, 5), "Pq arm"),
       ("SQ8 arm over a float index", () => Similarity.probe(spark, Sq8(iv),
         vecs, 5), "not an SQ8 index"))
-    for ((name, plan, msg) <- cases) {
-      val e = intercept[IllegalArgumentException](plan())
-      assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+    // a refusal is a checked message, never a failed analysis Spark's
+    // query listeners then log as an ERROR trace
+    val (_, errors) = org.apache.spark.graft.ErrorLogs(spark) {
+      for ((name, plan, msg) <- cases) {
+        val e = intercept[IllegalArgumentException](plan())
+        assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      }
     }
+    assert(errors == 0, s"$errors ERROR log events across the refusals")
   }
 
   test("only the frozen presets are public single-arm query* entry " +
@@ -856,6 +876,40 @@ class RetrievalSpec extends SparkSpec {
     } yield s"$f.${m.group(1)}"
     assert(found.map(_.split('.')(1)).toSet == presets,
       s"public query* functions: ${found.mkString(", ")}")
+  }
+
+  test("only the four Index verbs and the two frozen presets are public " +
+      "index writers: a new index kind is a family declaration") {
+    val allowed = Set("Index.build", "Index.compact", "Index.repair",
+      "Retrieval.appendToBm25Index", "Retrieval.compactBm25Index")
+    val Def = """^\s*def\s+((?:build|appendTo|compact|repair|rebuild)\w*)""".r
+    val found = for {
+      f <- Seq("Retrieval", "Similarity", "Index")
+      line <- scala.io.Source.fromFile(
+        s"src/main/scala/graft/operators/$f.scala", "UTF-8").getLines()
+      m <- Def.findFirstMatchIn(line)
+    } yield s"$f.${m.group(1)}"
+    assert(found.toSet == allowed,
+      s"public write verbs: ${found.mkString(", ")}")
+  }
+
+  test("a probe of a dir whose first build crashed before stats " +
+      "committed refuses at the pin, naming the repair") {
+    val full = java.nio.file.Files.createTempDirectory("bm25po-f").toString
+    val crashed = java.nio.file.Files.createTempDirectory("bm25po-c").toString
+    Index.build(Index.Bm25Spec(), Index.Text(corpus.toDF("doc_id", "text"),
+      col("doc_id"), col("text")), full): Unit
+    Versioned.overwrite(Versioned.read(spark, s"$full/postings"),
+      s"$crashed/postings"): Unit
+    val e = intercept[IllegalArgumentException] {
+      Retrieval.queryBm25Index(spark, crashed, Seq("spark"), 5)
+    }
+    assert(e.getMessage.contains("stats") &&
+      e.getMessage.contains("Index.repair"), e.getMessage)
+    Index.repair(spark, crashed): Unit
+    assert(Retrieval.queryBm25Index(spark, crashed, Seq("spark"), 5)
+      .collect().toSeq == Retrieval.queryBm25Index(spark, full, Seq("spark"),
+      5).collect().toSeq)
   }
 
   test("assembleContext: overlap + adjacency merge to one span, the " +
@@ -899,7 +953,8 @@ class RetrievalSpec extends SparkSpec {
       "terms charge their smoothing mass; a third ranker fuses") {
     val docs = corpus.toDF("doc_id", "text") // reuses the BM25 fixture
     val dir = java.nio.file.Files.createTempDirectory("qlidx").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     val terms = Seq("spark", "rare")
     val mu = 100.0
 
@@ -947,7 +1002,8 @@ class RetrievalSpec extends SparkSpec {
       "order and reaches n_rankers = 3") {
     val docs = corpus.toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("qlmany").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     val terms = Seq("spark", "rare")
     val single = Retrieval.lexical(spark, Lexical(dir, ql = Some(100.0)), terms,
       10)
@@ -965,8 +1021,8 @@ class RetrievalSpec extends SparkSpec {
         Seq.fill(14)("pad")).mkString(" ")),
       (2L, Seq.fill(32)("filler").mkString(" ")))
       .toDF("doc_id", "text")
-    Retrieval.buildChunkBm25Index(longDocs, col("doc_id"), col("text"),
-      cdir, size = 16, stride = 8): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(16, 8)),
+      Index.Text(longDocs, col("doc_id"), col("text")), cdir): Unit
     val chunkQl = Retrieval.lexical(spark, Lexical(cdir,
       ql = Some(Retrieval.Mu)), Seq("zebra", "quark"), 5)
       .as[(Long, Long, Long, Double)].collect()
@@ -992,8 +1048,8 @@ class RetrievalSpec extends SparkSpec {
     // rankers carries n_rankers = 3
     val qraw = Seq((900L, Seq("zebra", "quark"))).toDF("query_id", "terms")
     val ivDir = java.nio.file.Files.createTempDirectory("qlciv").toString
-    Retrieval.buildChunkIvfIndex(longDocs, col("doc_id"), col("text"),
-      ivDir, size = 16, stride = 8, dim = 16, nCentroids = 2): Unit
+    Index.build(Index.IvfSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 2),
+      Index.Text(longDocs, col("doc_id"), col("text")), ivDir): Unit
     val queries = qraw.join(
       graft.operators.Corpus.hashEmbed(qraw, col("query_id"),
         concat_ws(" ", col("terms")), dim = 16)
@@ -1018,8 +1074,8 @@ class RetrievalSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val fdir = java.nio.file.Files.createTempDirectory("mtfwd").toString
     val mdl = java.nio.file.Files.createTempDirectory("mtmdl").toString
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"), fdir,
-      nPartDirs = 2): Unit
+    Index.build(Index.ForwardSpec(nPartDirs = 2),
+      Index.Text(docs, col("doc_id"), col("text")), fdir): Unit
     graft.operators.Bpe.buildBpeModel(docs, col("text"), k = 2, mdl): Unit
     // both docs' first chunk ranks; score order puts the long-word doc
     // first
@@ -1069,7 +1125,8 @@ class RetrievalSpec extends SparkSpec {
       (5L, "more filler and unrelated text"))
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("rm3").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
 
     val plain = Retrieval.queryBm25Index(spark, dir, Seq("zebra"), 10)
       .select("doc_id").as[Long].collect().toSet
@@ -1109,8 +1166,8 @@ class RetrievalSpec extends SparkSpec {
       (4L, Seq.fill(16)("unrelated").mkString(" ")))
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("rm3ch").toString
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), dir,
-      size = 8, stride = 8): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(8, 8)),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     val plain = Retrieval.lexical(spark, Lexical(dir), Seq("zebra"), 10)
       .select("doc_id").as[Long].collect().toSet
     assert(plain == Set(1L, 2L), "only literal matches before expansion")
@@ -1149,8 +1206,8 @@ class RetrievalSpec extends SparkSpec {
       (6L, "stripes stripes pattern"),
       (7L, "unrelated filler words here")).toDF("doc_id", "text")
     val fdir = java.nio.file.Files.createTempDirectory("fwdidx").toString
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"), fdir,
-      nPartDirs = 4): Unit
+    Index.build(Index.ForwardSpec(nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), fdir): Unit
 
     val fused = Seq(
       (7L, 1L, 1L, 0.50), (7L, 1L, 9L, 0.40), (7L, 1L, 17L, 0.30),
@@ -1188,7 +1245,8 @@ class RetrievalSpec extends SparkSpec {
     // RM3 mining: forward-index masses ≡ postings masses, so rankings
     // are identical
     val bdir = java.nio.file.Files.createTempDirectory("fwdbm").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bdir): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), bdir): Unit
     val wantRm3 = rows(Retrieval.rm3Expand(spark, bdir, Seq("zebra"),
       k = 10, kFb = 2, nExp = 2))
     assert(rows(Retrieval.rm3Expand(spark, bdir, Seq("zebra"), k = 10,
@@ -1196,7 +1254,7 @@ class RetrievalSpec extends SparkSpec {
 
     // appends derive the modulus from the sidecar and reach new docs
     val batch = Seq((8L, "zebra zebra stripes fresh")).toDF("doc_id", "text")
-    Retrieval.appendToForwardIndex(batch, col("doc_id"), col("text"), fdir): Unit
+    Index.append(Index.Text(batch, col("doc_id"), col("text")), fdir): Unit
     Retrieval.appendToBm25Index(batch, col("doc_id"), col("text"), bdir): Unit
     val union = docs.unionByName(batch)
     assert(rows(Retrieval.rm3Expand(spark, bdir, Seq("zebra"), k = 10,
@@ -1209,7 +1267,7 @@ class RetrievalSpec extends SparkSpec {
       rows(Retrieval.contextTexts(packed8, union, col("doc_id"), col("text"))))
 
     // compaction re-stamps; results unchanged and DPP still present
-    Retrieval.compactForwardIndex(spark, fdir): Unit
+    Index.compact(spark, fdir): Unit
     val afterCompact = Retrieval.contextTextsIndexed(spark, packed8, fdir)
     assert(rows(afterCompact) ==
       rows(Retrieval.contextTexts(packed8, union, col("doc_id"), col("text"))))
@@ -1233,8 +1291,8 @@ class RetrievalSpec extends SparkSpec {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       .contains("dynamicpruning"))
     val e = intercept[RuntimeException] {
-      Retrieval.appendToForwardIndex(
-        Seq((99L, "x")).toDF("doc_id", "text"), col("doc_id"), col("text"), fdir)
+      Index.append(Index.Text(Seq((99L, "x")).toDF("doc_id", "text"), col("doc_id"),
+          col("text")), fdir)
     }
     assert(e.getMessage.contains("buildForwardIndex"))
   }
@@ -1243,8 +1301,8 @@ class RetrievalSpec extends SparkSpec {
       "after a crashed compaction — pruning and appends come back") {
     val dir = java.nio.file.Files.createTempDirectory("bm25rs").toString
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     Retrieval.appendToBm25Index(
       Seq((80L, "spark appended")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir): Unit
@@ -1253,7 +1311,7 @@ class RetrievalSpec extends SparkSpec {
     // crashed compaction: postings compacted (overwrite version moves,
     // sidecar stamp goes stale), stats never compacted
     graft.sources.Versioned.compact(spark, s"$dir/postings"): Unit
-    Retrieval.repairBm25Index(spark, dir): Unit
+    Index.repair(spark, dir): Unit
     assert(Retrieval.queryBm25Index(spark, dir, Seq("spark"), 10)
       .as[(Long, Long, Double)].collect().toSeq == before)
     // the sidecar was re-stamped with the (data-verified) modulus:
@@ -1275,13 +1333,13 @@ class RetrievalSpec extends SparkSpec {
     // stamp blessed: data-validation fails every candidate and the
     // sidecar stays stale (degraded, correct)
     val dir2 = java.nio.file.Files.createTempDirectory("bm25rs2").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir2,
-      layout = "partition", nPartDirs = 4): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), dir2): Unit
     // rebuild with modulus 3 dies between its postings commit and stamp:
     // postings land at modulus 3, sidecar still says 4 at the old version
     val scratch = java.nio.file.Files.createTempDirectory("bm25rs3").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), scratch,
-      layout = "partition", nPartDirs = 3): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 3),
+      Index.Text(docs, col("doc_id"), col("text")), scratch): Unit
     val side = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(dir2, "tok_parts").toPath), "UTF-8")
     graft.sources.Versioned.overwritePartitioned(
@@ -1289,7 +1347,7 @@ class RetrievalSpec extends SparkSpec {
       s"$dir2/postings", "tok_part"): Unit
     java.nio.file.Files.write(new java.io.File(dir2, "tok_parts").toPath,
       side.getBytes("UTF-8")): Unit // the stale pre-rebuild stamp
-    Retrieval.repairBm25Index(spark, dir2): Unit
+    Index.repair(spark, dir2): Unit
     // wait — modulus 3 postings DO verify under n=3 (the max+1 probe), so
     // repair may legitimately re-stamp 3; what must NEVER happen is a
     // stamp whose modulus disagrees with the data
@@ -1361,8 +1419,9 @@ class RetrievalSpec extends SparkSpec {
     val vecs = plantedVecs
     val bm = java.nio.file.Files.createTempDirectory("graft-hy-bm").toString
     val iv = java.nio.file.Files.createTempDirectory("graft-hy-iv").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bm)
-    graft.operators.Similarity.buildIvfIndex(vecs, iv, nCentroids = 2)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), bm)
+    Index.build(Index.IvfSpec(nCentroids = 2), Index.Vectors(vecs), iv)
     val queries = Seq((100L, Seq("alpha"), Seq(1.0, 0.0, 0.0, 0.0)))
       .toDF("query_id", "terms", "vec")
     val relevant = Set(1L, 2L)
@@ -1409,15 +1468,18 @@ class RetrievalSpec extends SparkSpec {
     // tombstones on both indexes
     val bm = java.nio.file.Files.createTempDirectory("graft-budget-bm").toString
     val iv = java.nio.file.Files.createTempDirectory("graft-budget-iv").toString
-    Retrieval.buildBm25Index(plantedDocs, col("doc_id"), col("text"), bm)
-    graft.operators.Similarity.buildIvfIndex(plantedVecs, iv, nCentroids = 2)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(plantedDocs, col("doc_id"), col("text")), bm)
+    Index.build(Index.IvfSpec(nCentroids = 2),
+      Index.Vectors(plantedVecs), iv)
     // the compressed arms: the SQ8 scale and the PQ codebook are
     // per-version constants too
     val sq = java.nio.file.Files.createTempDirectory("graft-budget-sq").toString
     val pq = java.nio.file.Files.createTempDirectory("graft-budget-pq").toString
-    graft.operators.Similarity.buildIvfSq8Index(plantedVecs, sq, nCentroids = 2)
-    graft.operators.Similarity.buildIvfPqIndex(plantedVecs, pq, nCentroids = 2,
-      m = 2, ks = 4, dim = 4)
+    Index.build(Index.Sq8Spec(nCentroids = 2),
+      Index.Vectors(plantedVecs), sq)
+    Index.build(Index.PqSpec(nCentroids = 2, m = 2, ks = 4, dim = 4),
+      Index.Vectors(plantedVecs), pq)
     graft.operators.Tombstones.addAll(Seq(5L, 6L).toDF("doc_id"),
       Seq(bm, iv, sq, pq))
     assert(Versioned.declaredLayout(spark, s"$bm/postings").startsWith("bucket:"))
@@ -1506,8 +1568,8 @@ class RetrievalSpec extends SparkSpec {
       (3L, "nothing relevant at all")).toDF("doc_id", "text")
     val terms = Seq("dup", "spark", "hash")
     val idx = java.nio.file.Files.createTempDirectory("bm25chunk").toString
-    assert(Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"),
-      idx, size = 16, stride = 8) == 0L)
+    assert(Index.build(Index.Bm25Spec(Index.Chunks(16, 8)),
+      Index.Text(docs, col("doc_id"), col("text")), idx) == 0L)
     assert(Retrieval.chunkGrid(spark, idx) == (16, 8))
     def probe(asOf: Option[Long] = None) =
       Retrieval.lexical(spark, Lexical(idx, asOf = asOf), terms, 6)
@@ -1519,35 +1581,38 @@ class RetrievalSpec extends SparkSpec {
 
     // append: the grid comes from the index, not the caller — the new
     // doc's span chunk enters the latest ranking; asOf still pins v0
-    Retrieval.appendToChunkBm25Index(
-      Seq((7L, "dup dup spark hash")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), idx)
+    Index.append(Index.Text(Seq((7L, "dup dup spark hash")).toDF("doc_id",
+      "text"), col("doc_id"),
+        col("text")), idx)
     val after = probe()
     assert(after.exists(_._1 == 7L),
       s"appended doc's chunk must enter the latest ranking: $after")
     assert(probe(asOf = Some(0L)) == inline,
       "the pre-append version must reproduce the original ranking")
 
-    // a plain document-grain index has no grid sidecar: chunk appends
-    // refuse loudly instead of interleaving incompatible spans
+    // a plain document-grain index has no grid sidecar: the append
+    // reads the grain from the dir, so the batch lands at document grain
+    // (keys are doc ids, no grid appears) — no chunk span can interleave
     val plain = java.nio.file.Files.createTempDirectory("bm25plain").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), plain)
-    val e = intercept[IllegalArgumentException] {
-      Retrieval.appendToChunkBm25Index(
-        Seq((8L, "dup spark")).toDF("doc_id", "text"),
-        col("doc_id"), col("text"), plain)
-    }
-    assert(e.getMessage.contains("chunk_grid"))
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), plain)
+    Index.append(Index.Text(Seq((8L, "dup spark")).toDF("doc_id", "text"),
+      col("doc_id"), col("text")), plain)
+    assert(!graft.operators.Stamp.exists(spark, plain,
+      graft.operators.Stamp.chunkGrid("postings")))
+    assert(Versioned.read(spark, s"$plain/postings")
+      .filter(col("doc_id") === 8L).count() == 2L)
 
     // a rebuild that died between its index commit and the grid
     // re-stamp (simulated: a raw overwrite lands on the chunk dir,
     // stamp left behind) refuses appends — the recorded grid can no
     // longer be trusted to describe the current build
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), idx)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), idx)
     val e2 = intercept[IllegalArgumentException] {
-      Retrieval.appendToChunkBm25Index(
-        Seq((9L, "dup spark")).toDF("doc_id", "text"),
-        col("doc_id"), col("text"), idx)
+      Index.append(Index.Text(Seq((9L, "dup spark")).toDF("doc_id", "text"),
+        col("doc_id"),
+          col("text")), idx)
     }
     assert(e2.getMessage.contains("does not match"))
   }
@@ -1556,18 +1621,18 @@ class RetrievalSpec extends SparkSpec {
       "crashed compaction — appends and DPP come back") {
     val fdir = java.nio.file.Files.createTempDirectory("fwdrep").toString
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"), fdir,
-      nPartDirs = 4): Unit
+    Index.build(Index.ForwardSpec(nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), fdir): Unit
     // crashed compaction: the fwd table's overwrite lands, the sidecar
     // re-stamp never runs — every append refuses with a rebuild message
     // even though the modulus is fully recoverable
     graft.sources.Versioned.compact(spark, s"$fdir/fwd"): Unit
     val batch = Seq((60L, "appended doc text")).toDF("doc_id", "text")
     intercept[RuntimeException] {
-      Retrieval.appendToForwardIndex(batch, col("doc_id"), col("text"), fdir)
+      Index.append(Index.Text(batch, col("doc_id"), col("text")), fdir)
     }
-    Retrieval.repairForwardIndex(spark, fdir)
-    Retrieval.appendToForwardIndex(batch, col("doc_id"), col("text"), fdir): Unit
+    Index.repair(spark, fdir)
+    Index.append(Index.Text(batch, col("doc_id"), col("text")), fdir): Unit
     def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSeq
     val packed = Seq((1L, 1L, 1L, 3L, 0.9), (1L, 60L, 1L, 2L, 0.8))
       .toDF("query_id", "doc_id", "span_start", "span_end", "score")
@@ -1579,7 +1644,7 @@ class RetrievalSpec extends SparkSpec {
       .contains("dynamicpruning"),
       "the repaired sidecar must restore shard pruning")
     // idempotent when already trusted
-    Retrieval.repairForwardIndex(spark, fdir)
+    Index.repair(spark, fdir)
     assert(rows(Retrieval.contextTextsIndexed(spark, packed, fdir)) == rows(got))
   }
 
@@ -1587,11 +1652,11 @@ class RetrievalSpec extends SparkSpec {
       "compaction (pure rewrite) and never blesses a grid-changing rebuild") {
     val dir = java.nio.file.Files.createTempDirectory("cgrs").toString
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), dir,
-      size = 3, stride = 2): Unit
-    Retrieval.appendToChunkBm25Index(
-      Seq((80L, "spark appended here")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), dir): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(3, 2)),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
+    Index.append(Index.Text(Seq((80L, "spark appended here")).toDF("doc_id",
+      "text"), col("doc_id"),
+        col("text")), dir): Unit
     def probe() = Retrieval.lexical(spark, Lexical(dir), Seq("spark"), 10)
       .collect().map(_.toSeq).toSeq
     val before = probe()
@@ -1599,9 +1664,11 @@ class RetrievalSpec extends SparkSpec {
     // before the grid re-stamp
     graft.sources.Versioned.compact(spark, s"$dir/postings"): Unit
     graft.sources.Versioned.compact(spark, s"$dir/stats"): Unit
-    assert(!Retrieval.chunkGridHealthy(spark, dir))
-    Retrieval.restampChunkGrid(spark, dir)
-    assert(Retrieval.chunkGridHealthy(spark, dir),
+    assert(!graft.operators.Stamp.read(spark, dir,
+      graft.operators.Stamp.chunkGrid("postings")).nonEmpty)
+    Index.repair(spark, dir)
+    assert(graft.operators.Stamp.read(spark, dir,
+      graft.operators.Stamp.chunkGrid("postings")).nonEmpty,
       "a pure-rewrite overwrite must get its grid stamp back")
     assert(probe() == before)
     // a rebuild on a DIFFERENT grid that died before its stamp: content
@@ -1609,16 +1676,17 @@ class RetrievalSpec extends SparkSpec {
     // consumers keep refusing (a blessed stale grid would mis-chunk
     // every append)
     val scratch = java.nio.file.Files.createTempDirectory("cgrs2").toString
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), scratch,
-      size = 4, stride = 4): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(4, 4)),
+      Index.Text(docs, col("doc_id"), col("text")), scratch): Unit
     graft.sources.Versioned.overwriteBucketed(
       graft.sources.Versioned.read(spark, s"$scratch/postings"),
       s"$dir/postings", "tok", 8): Unit
     graft.sources.Versioned.overwrite(
       graft.sources.Versioned.read(spark, s"$scratch/stats"),
       s"$dir/stats"): Unit
-    Retrieval.restampChunkGrid(spark, dir)
-    assert(!Retrieval.chunkGridHealthy(spark, dir),
+    Index.repair(spark, dir)
+    assert(!graft.operators.Stamp.read(spark, dir,
+      graft.operators.Stamp.chunkGrid("postings")).nonEmpty,
       "a content-changing rebuild must never get the old grid blessed")
   }
 
@@ -1630,11 +1698,11 @@ class RetrievalSpec extends SparkSpec {
     // modulus 7 ≠ the auto modulus a compaction re-derives (4 for this
     // corpus), so cross-epoch pruning is provably per-epoch, not a
     // lucky shared modulus
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"), fdir,
-      nPartDirs = 7): Unit
-    Retrieval.appendToForwardIndex(
-      Seq((60L, "appended doc text")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), fdir): Unit // v1; epoch = [0, head]
+    Index.build(Index.ForwardSpec(nPartDirs = 7),
+      Index.Text(docs, col("doc_id"), col("text")), fdir): Unit
+    Index.append(Index.Text(Seq((60L, "appended doc text")).toDF("doc_id",
+      "text"), col("doc_id"),
+        col("text")), fdir): Unit // v1; epoch = [0, head]
     val packed = Seq((1L, 1L, 1L, 3L, 0.9))
       .toDF("query_id", "doc_id", "span_start", "span_end", "score")
     def fmt(df: org.apache.spark.sql.DataFrame) = df.queryExecution
@@ -1655,7 +1723,7 @@ class RetrievalSpec extends SparkSpec {
     // sidecar history survives, so it STILL prunes (the r13 judge gap:
     // previously a mid-stream compaction silently un-pruned every
     // pinned serving stream for its remaining lifetime)
-    Retrieval.compactForwardIndex(spark, fdir): Unit // v2 overwrite
+    Index.compact(spark, fdir): Unit // v2 overwrite
     val pre = Retrieval.contextTextsIndexed(spark, packed, fdir,
       asOf = Some(1L))
     assert(fmt(pre).contains("dynamicpruningexpression"),
@@ -1690,10 +1758,11 @@ class RetrievalSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq == Seq("the"))
     val capped = java.nio.file.Files.createTempDirectory("bm25cap").toString
     val plain  = java.nio.file.Files.createTempDirectory("bm25unc").toString
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), capped,
-      layout = "partition", nPartDirs = 4, stopTokens = Seq("the")): Unit
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), plain,
-      layout = "partition", nPartDirs = 4): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4,
+      stopTokens = Seq("the")),
+      Index.Text(docs, col("doc_id"), col("text")), capped): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), plain): Unit
     def rows(dir: String, terms: Seq[String]) =
       Retrieval.queryBm25Index(spark, dir, terms, 10)
         .as[(Long, Long, Double)].collect().toSeq
@@ -1736,7 +1805,7 @@ class RetrievalSpec extends SparkSpec {
         col("doc_id"), col("text"), capped)
     }
     assert(e.getMessage.contains("stop_toks"))
-    Retrieval.repairBm25Index(spark, capped): Unit
+    Index.repair(spark, capped): Unit
     Retrieval.appendToBm25Index(
       Seq((11L, "the rare1")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), capped): Unit
@@ -1753,8 +1822,9 @@ class RetrievalSpec extends SparkSpec {
       (3L, "the the z"), (4L, "the rare1 w")).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("bm25order").toString
     val postT = s"$dir/postings"
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4, stopTokens = Seq("the")): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4,
+      stopTokens = Seq("the")),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     val conf = spark.sparkContext.hadoopConfiguration
     def del(name: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir, name)
@@ -1773,8 +1843,8 @@ class RetrievalSpec extends SparkSpec {
       "appends must filter via the epoch marker alone")
     // an UNCAPPED rebuild writes an explicit uncapped marker for its own
     // epoch — the superseded capped state never leaks forward
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4): Unit // v2 overwrite
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit // v2 overwrite
     Retrieval.appendToBm25Index(Seq((9L, "the rare1 v")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), dir): Unit
     assert(Versioned.read(spark, postT).filter(col("tok") === "the")
@@ -1785,8 +1855,9 @@ class RetrievalSpec extends SparkSpec {
     // repair refuses to bless the stale pointer because the rewrite was
     // not content-pure — blessing it would filter appends against a
     // base whose cap state differs (the r13 enlarged-rebuild advisory)
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4, stopTokens = Seq("the")): Unit // v4
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4,
+      stopTokens = Seq("the")),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit // v4
     Versioned.overwrite(Versioned.read(spark, postT, Some(3L)), postT): Unit
     Versioned.overwrite(
       Versioned.read(spark, s"$dir/stats", Some(3L)), s"$dir/stats"): Unit
@@ -1796,7 +1867,7 @@ class RetrievalSpec extends SparkSpec {
         col("doc_id"), col("text"), dir)
     }
     assert(e.getMessage.contains("stop_toks"))
-    Retrieval.repairBm25Index(spark, dir): Unit
+    Index.repair(spark, dir): Unit
     val e2 = intercept[IllegalArgumentException] {
       Retrieval.appendToBm25Index(
         Seq((10L, "the rare1")).toDF("doc_id", "text"),
@@ -1821,9 +1892,9 @@ class RetrievalSpec extends SparkSpec {
     val stops0 = Retrieval.heavyTokens(day0, col("doc_id"), col("text"), 0.6)
       .collect().map(_.getString(0)).toSeq
     assert(stops0 == Seq("alpha"))
-    Retrieval.buildBm25Index(day0, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4, stopTokens = stops0,
-      stopMaxDfRatio = Some(0.6)): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4,
+      stopTokens = stops0, stopMaxDfRatio = Some(0.6)),
+      Index.Text(day0, col("doc_id"), col("text")), dir): Unit
     Retrieval.appendToBm25Index(day1, col("doc_id"), col("text"), dir): Unit
     // pre-compaction: the frozen set is {alpha} — spam postings landed
     assert(Versioned.read(spark, s"$dir/postings")
@@ -1843,7 +1914,8 @@ class RetrievalSpec extends SparkSpec {
     // fresh UNCAPPED index over the same corpus (the q183 invariant)
     assert(q(dir, Seq("rare1")) == rare1Before)
     val unc = java.nio.file.Files.createTempDirectory("bm25recapu").toString
-    Retrieval.buildBm25Index(full, col("doc_id"), col("text"), unc): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(full, col("doc_id"), col("text")), unc): Unit
     assert(q(dir, Seq("rare1")) == q(unc, Seq("rare1")))
     assert(q(dir, Seq("spam", "rare1")) == q(dir, Seq("rare1")))
     // appends after the recap filter with the ENLARGED set
@@ -1859,8 +1931,8 @@ class RetrievalSpec extends SparkSpec {
       Seq((11L, "spam rare1 tail")).toDF("doc_id", "text"))
     val stopsF = Retrieval.heavyTokens(full11, col("doc_id"), col("text"), 0.6)
       .collect().map(_.getString(0)).toSeq
-    Retrieval.buildBm25Index(full11, col("doc_id"), col("text"), fresh,
-      stopTokens = stopsF, stopMaxDfRatio = Some(0.6)): Unit
+    Index.build(Index.Bm25Spec(stopTokens = stopsF, stopMaxDfRatio = Some(0.6)),
+      Index.Text(full11, col("doc_id"), col("text")), fresh): Unit
     assert(q(dir, Seq("rare1")) == q(fresh, Seq("rare1")))
   }
 
@@ -1874,11 +1946,11 @@ class RetrievalSpec extends SparkSpec {
     val docs = Seq((0L, "a"), (1L, "b"), (2L, "c"), (4L, "d"), (5L, "e"),
       (6L, "f")).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("fwdauto").toString
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"), dir,
-      nPartDirs = 5): Unit
+    Index.build(Index.ForwardSpec(nPartDirs = 5),
+      Index.Text(docs, col("doc_id"), col("text")), dir): Unit
     val sc = new java.io.File(dir, "doc_parts")
     val preCompact = java.nio.file.Files.readAllBytes(sc.toPath)
-    Retrieval.compactForwardIndex(spark, dir): Unit // re-derives modulus 4
+    Index.compact(spark, dir): Unit // re-derives modulus 4
     // crash simulation: the compaction's overwrite landed but the
     // re-stamp did not — head pointer still records the OLD build's
     // stamp, the new epoch has no sidecar record
@@ -1889,17 +1961,15 @@ class RetrievalSpec extends SparkSpec {
       .delete(ep1, false): Unit
     // appends wedge on the stale sidecar...
     intercept[RuntimeException] {
-      Retrieval.appendToForwardIndex(
-        Seq((8L, "g")).toDF("doc_id", "text"),
-        col("doc_id"), col("text"), dir)
+      Index.append(Index.Text(Seq((8L, "g")).toDF("doc_id", "text"), col("doc_id"),
+          col("text")), dir)
     }
     // ...and repair recovers it via the auto-modulus candidate (it
     // stayed wedged before r14: no id ≡ 3 mod 4 exists, so max+1
     // mis-derives and the recorded modulus fails verification)
-    Retrieval.repairForwardIndex(spark, dir)
-    Retrieval.appendToForwardIndex(
-      Seq((8L, "g")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), dir): Unit
+    Index.repair(spark, dir)
+    Index.append(Index.Text(Seq((8L, "g")).toDF("doc_id", "text"), col("doc_id"),
+        col("text")), dir): Unit
     assert(Versioned.read(spark, s"$dir/fwd")
       .filter(col("doc_part") =!= pmod(col("doc_id"), lit(4L))).isEmpty,
       "recovered appends must shard with the compaction's actual modulus")
@@ -1909,13 +1979,13 @@ class RetrievalSpec extends SparkSpec {
       "corpus: the restamp derives no modulus from data and must not crash") {
     val dir = java.nio.file.Files.createTempDirectory("bm25emp").toString
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    Retrieval.buildBm25Index(empty, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4): Unit
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4),
+      Index.Text(empty, col("doc_id"), col("text")), dir): Unit
     // crashed compaction shape on the empty index: postings one
     // overwrite ahead with identical (empty) content, stats behind,
     // sidecar stamp stale
     graft.sources.Versioned.compact(spark, s"$dir/postings"): Unit
-    Retrieval.repairBm25Index(spark, dir): Unit // must not throw
+    Index.repair(spark, dir): Unit // must not throw
     assert(graft.sources.Versioned.latestVersion(spark, s"$dir/postings") ==
       graft.sources.Versioned.latestVersion(spark, s"$dir/stats"))
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import graft.app.Scheduler
 import graft.operators.Retrieval.Lexical
 
@@ -382,9 +383,10 @@ class SchedulerSpec extends SparkSpec {
 
     // fake the crash shape: a first build's two index commits landed,
     // the grid stamp never did (single overwrite version, no sidecar)
-    graft.operators.Retrieval.buildBm25Index(dayDocs(0), col("doc_id"),
-      col("text"), s"$work/chunks"): Unit
-    assert(!graft.operators.Retrieval.chunkGridHealthy(spark, s"$work/chunks"))
+    Index.build(Index.Bm25Spec(),
+      Index.Text(dayDocs(0), col("doc_id"), col("text")), s"$work/chunks"): Unit
+    assert(!graft.operators.Stamp.read(spark, s"$work/chunks",
+      graft.operators.Stamp.chunkGrid("postings")).nonEmpty)
 
     // the day-9 tick reroutes chunk_append to a rebuild (lossless: the
     // table holds exactly this boundary's batch) and completes
@@ -393,7 +395,8 @@ class SchedulerSpec extends SparkSpec {
       nowMs = 10 * Day + 5, intervalMs = Day, retries = 0,
       retryDelayMs = 1L, sleep = _ => ())
     assert(r0.forall(_._2.last.ok), s"heal tick failed: $r0")
-    assert(graft.operators.Retrieval.chunkGridHealthy(spark, s"$work/chunks"))
+    assert(graft.operators.Stamp.read(spark, s"$work/chunks",
+      graft.operators.Stamp.chunkGrid("postings")).nonEmpty)
 
     // day 10 appends normally; then the grid goes untrusted on a
     // MULTI-day index → the stage must refuse, not rebuild from one day
@@ -439,14 +442,14 @@ class SchedulerSpec extends SparkSpec {
     // postings to v1 but CREATED stats at v0 and failed its lockstep
     // require; the next tick saw postings v1 and hit the manual error.
     val scratchA = java.nio.file.Files.createTempDirectory("graft-sa").toString
-    Retrieval.buildChunkBm25Index(dayDocs(0), col("doc_id"), col("text"),
-      scratchA, size = 32, stride = 16): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+      Index.Text(dayDocs(0), col("doc_id"), col("text")), scratchA): Unit
     Versioned.overwriteBucketed(
       Versioned.read(spark, s"$scratchA/postings"),
       s"$work/chunks/postings", "tok", 8): Unit
     // same shape on the DOC index (no grid involved there)
-    graft.operators.Retrieval.buildBm25Index(dayDocs(0), col("doc_id"),
-      col("text"), scratchA + "_doc"): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(dayDocs(0), col("doc_id"), col("text")), scratchA + "_doc"): Unit
     Versioned.overwriteBucketed(
       Versioned.read(spark, scratchA + "_doc/postings"),
       s"$work/bm25/postings", "tok", 8): Unit
@@ -456,7 +459,8 @@ class SchedulerSpec extends SparkSpec {
       nowMs = 10 * Day + 5, intervalMs = Day, retries = 0,
       retryDelayMs = 1L, sleep = _ => ())
     assert(r0.forall(_._2.last.ok), s"heal tick failed: $r0")
-    assert(Retrieval.chunkGridHealthy(spark, s"$work/chunks"))
+    assert(graft.operators.Stamp.read(spark, s"$work/chunks",
+      graft.operators.Stamp.chunkGrid("postings")).nonEmpty)
     // and the next tick must NOT wedge (the old bug fired here)
     val r1 = graft.app.DailyMaintenance.tick(spark, work,
       b => dayDocs(dayOf(b)), b => dayVecs_(vecs, dayOf(b)),
@@ -467,10 +471,10 @@ class SchedulerSpec extends SparkSpec {
     // the healed indexes answer exactly like an uncrashed day9+day10
     // sequence
     val clean = java.nio.file.Files.createTempDirectory("graft-cl").toString
-    Retrieval.buildChunkBm25Index(dayDocs(0), col("doc_id"), col("text"),
-      s"$clean/chunks", size = 32, stride = 16): Unit
-    Retrieval.appendToChunkBm25Index(dayDocs(1), col("doc_id"), col("text"),
-      s"$clean/chunks"): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+      Index.Text(dayDocs(0), col("doc_id"), col("text")), s"$clean/chunks"): Unit
+    Index.append(Index.Text(dayDocs(1), col("doc_id"),
+        col("text")), s"$clean/chunks"): Unit
     def probe(dir: String) = Retrieval.lexical(spark, Lexical(dir),
       Seq("dup", "spark", "hash"), 10)
       .as[(Long, Long, Long, Double)].collect().toSeq
@@ -480,8 +484,8 @@ class SchedulerSpec extends SparkSpec {
     // commit (the orphan slice is on disk, stats behind). The stage must
     // repair — COMPLETING the append — and must NOT re-append the batch.
     val scratchB = java.nio.file.Files.createTempDirectory("graft-sb").toString
-    Retrieval.buildChunkBm25Index(dayDocs(2), col("doc_id"), col("text"),
-      scratchB, size = 32, stride = 16): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+      Index.Text(dayDocs(2), col("doc_id"), col("text")), scratchB): Unit
     Versioned.append(Versioned.read(spark, s"$scratchB/postings"),
       s"$work/chunks/postings"): Unit
     val r2 = graft.app.DailyMaintenance.tick(spark, work,
@@ -489,8 +493,8 @@ class SchedulerSpec extends SparkSpec {
       nowMs = 12 * Day + 5, intervalMs = Day, retries = 0,
       retryDelayMs = 1L, sleep = _ => ())
     assert(r2.forall(_._2.last.ok), s"orphan-append tick failed: $r2")
-    Retrieval.appendToChunkBm25Index(dayDocs(2), col("doc_id"), col("text"),
-      s"$clean/chunks"): Unit
+    Index.append(Index.Text(dayDocs(2), col("doc_id"),
+        col("text")), s"$clean/chunks"): Unit
     assert(probe(s"$work/chunks") == probe(s"$clean/chunks"),
       "repair must complete the crashed append exactly once")
   }
@@ -555,10 +559,10 @@ class SchedulerSpec extends SparkSpec {
     locally {
       val fresh = java.nio.file.Files.createTempDirectory("graft-daily-h").toString
       val union = docs.filter(col("doc_id") < 300)
-      graft.operators.Retrieval.buildChunkBm25Index(union, col("doc_id"),
-        col("text"), s"$fresh/chunks", size = 32, stride = 16): Unit
-      graft.operators.Retrieval.buildChunkIvfIndex(union, col("doc_id"),
-        col("text"), s"$fresh/chunk_ivf", size = 32, stride = 16): Unit
+      Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+        Index.Text(union, col("doc_id"), col("text")), s"$fresh/chunks"): Unit
+      Index.build(Index.IvfSpec(Index.Chunks(32, 16)),
+        Index.Text(union, col("doc_id"), col("text")), s"$fresh/chunk_ivf"): Unit
       val qraw = Seq((900000001L, Seq("dup", "spark")))
         .toDF("query_id", "terms")
       val queries = qraw.join(
@@ -595,8 +599,8 @@ class SchedulerSpec extends SparkSpec {
     // (append ≡ build, surviving the whole compact/vacuum cadence)
     val fresh = java.nio.file.Files.createTempDirectory("graft-daily-f").toString
     val union = docs.filter(col("doc_id") < 300)
-    graft.operators.Retrieval.buildBm25Index(union, col("doc_id"),
-      col("text"), fresh)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(union, col("doc_id"), col("text")), fresh)
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toSeq).toSeq
     assert(rows(probe) == rows(graft.operators.Retrieval.queryBm25Index(
@@ -604,8 +608,8 @@ class SchedulerSpec extends SparkSpec {
     // chunk index: the maintained index (grid from the sidecar on every
     // append) ranks exactly as a fresh chunk build over the union
     val freshC = java.nio.file.Files.createTempDirectory("graft-daily-c").toString
-    graft.operators.Retrieval.buildChunkBm25Index(union, col("doc_id"),
-      col("text"), freshC, size = 32, stride = 16)
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+      Index.Text(union, col("doc_id"), col("text")), freshC)
     assert(rows(graft.operators.Retrieval.lexical(spark,
       Lexical(s"$work/chunks"), Seq("dup"), 5)) ==
       rows(graft.operators.Retrieval.lexical(spark, Lexical(freshC), Seq("dup"),
@@ -618,8 +622,8 @@ class SchedulerSpec extends SparkSpec {
     locally {
       val freshPq = java.nio.file.Files
         .createTempDirectory("graft-daily-pq").toString
-      graft.operators.Retrieval.buildChunkIvfPqIndex(union, col("doc_id"),
-        col("text"), freshPq, size = 32, stride = 16): Unit
+      Index.build(Index.PqSpec(Index.Chunks(32, 16)),
+        Index.Text(union, col("doc_id"), col("text")), freshPq): Unit
       val qraw = Seq((900000001L, Seq("dup", "spark")))
         .toDF("query_id", "terms")
       val pqQueries = qraw.join(
@@ -641,8 +645,8 @@ class SchedulerSpec extends SparkSpec {
     locally {
       val freshF = java.nio.file.Files
         .createTempDirectory("graft-daily-fwd").toString
-      graft.operators.Retrieval.buildForwardIndex(union, col("doc_id"),
-        col("text"), freshF): Unit
+      Index.build(Index.ForwardSpec(),
+        Index.Text(union, col("doc_id"), col("text")), freshF): Unit
       val spans = Seq((9L, 5L, 1L, 4L, 0.9), (9L, 205L, 2L, 6L, 0.8))
         .toDF("query_id", "doc_id", "span_start", "span_end", "score")
       def txt(dir: String) = graft.operators.Retrieval
@@ -720,8 +724,8 @@ class SchedulerSpec extends SparkSpec {
     // lexical: the day-2 compaction merged the drop — the maintained
     // index equals a fresh build that never saw the docs
     val freshB = java.nio.file.Files.createTempDirectory("gtd-b").toString
-    graft.operators.Retrieval.buildBm25Index(survivors, col("doc_id"),
-      col("text"), freshB)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(survivors, col("doc_id"), col("text")), freshB)
     assert(rows(graft.operators.Retrieval.queryBm25Index(
         spark, s"$work/bm25", Seq("dup", "spark"), k = 10)) ==
       rows(graft.operators.Retrieval.queryBm25Index(
@@ -732,8 +736,8 @@ class SchedulerSpec extends SparkSpec {
 
     // chunk grain: one DOC takedown removed every span
     val freshC = java.nio.file.Files.createTempDirectory("gtd-c").toString
-    graft.operators.Retrieval.buildChunkBm25Index(survivors, col("doc_id"),
-      col("text"), freshC, size = 32, stride = 16)
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+      Index.Text(survivors, col("doc_id"), col("text")), freshC)
     assert(rows(graft.operators.Retrieval.lexical(spark,
       Lexical(s"$work/chunks"), Seq("dup"), 10)) ==
       rows(graft.operators.Retrieval.lexical(spark, Lexical(freshC), Seq("dup"),
@@ -837,9 +841,9 @@ class SchedulerSpec extends SparkSpec {
     // union (true corpus stats on both sides — the q183 invariant,
     // held through 2 appends and a recapping compaction)
     val freshC = java.nio.file.Files.createTempDirectory("graft-dailycapf").toString
-    Retrieval.buildChunkBm25Index(union, col("doc_id"), col("text"),
-      s"$freshC/chunks", size = 32, stride = 16,
-      stopTokens = heavyChunkU, stopMaxDfRatio = Some(0.5)): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16), stopTokens = heavyChunkU,
+      stopMaxDfRatio = Some(0.5)),
+      Index.Text(union, col("doc_id"), col("text")), s"$freshC/chunks"): Unit
     def chunkQ(dir: String, terms: Seq[String]) =
       Retrieval.lexical(spark, Lexical(dir), terms, 10)
         .collect().map(_.toSeq).toSeq
@@ -854,9 +858,9 @@ class SchedulerSpec extends SparkSpec {
     assert(chunkQ(s"$work/chunks", Seq(stoppedC, "dup")) ==
       chunkQ(s"$work/chunks", Seq("dup")))
     // and the NEXT append still filters with the recapped (enlarged) set
-    Retrieval.appendToChunkBm25Index(
-      Seq((900001L, (s"$stoppedC dup " * 4).trim)).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), s"$work/chunks"): Unit
+    Index.append(Index.Text(Seq((900001L,
+      (s"$stoppedC dup " * 4).trim)).toDF("doc_id", "text"), col("doc_id"),
+        col("text")), s"$work/chunks"): Unit
     assert(Versioned.read(spark, s"$work/chunks/postings")
       .filter(col("tok") === stoppedC).isEmpty,
       "appends after the recap must inherit the enlarged frozen set")
@@ -1025,8 +1029,8 @@ class SchedulerSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSeq
     val union = docs.filter(col("doc_id") < 300)
     val fresh = java.nio.file.Files.createTempDirectory("graft-cc-f").toString
-    graft.operators.Retrieval.buildBm25Index(union, col("doc_id"),
-      col("text"), fresh): Unit
+    Index.build(Index.Bm25Spec(),
+      Index.Text(union, col("doc_id"), col("text")), fresh): Unit
     assert(rows(graft.operators.Retrieval.queryBm25Index(spark,
         s"$work/bm25", Seq("dup", "spark"), k = 10)) ==
       rows(graft.operators.Retrieval.queryBm25Index(spark, fresh,
@@ -1034,8 +1038,8 @@ class SchedulerSpec extends SparkSpec {
       "day 2's docs must be present — the healed pair must score like a " +
         "fresh 3-day build")
     val freshC = java.nio.file.Files.createTempDirectory("graft-cc-c").toString
-    graft.operators.Retrieval.buildChunkBm25Index(union, col("doc_id"),
-      col("text"), freshC, size = 32, stride = 16): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
+      Index.Text(union, col("doc_id"), col("text")), freshC): Unit
     assert(rows(graft.operators.Retrieval.lexical(spark,
       Lexical(s"$work/chunks"), Seq("dup", "spark"), 10)) ==
       rows(graft.operators.Retrieval.lexical(spark, Lexical(freshC),
@@ -1054,7 +1058,48 @@ class SchedulerSpec extends SparkSpec {
     stages("chunk_compact")()
     assert(Versioned.latestVersion(spark, s"$work/chunks/postings") ==
       Versioned.latestVersion(spark, s"$work/chunks/stats"))
-    assert(graft.operators.Retrieval.chunkGridHealthy(spark, s"$work/chunks"),
+    assert(graft.operators.Stamp.read(spark, s"$work/chunks",
+      graft.operators.Stamp.chunkGrid("postings")).nonEmpty,
       "chunk_compact must restore the grid stamp at its own boundary")
+  }
+
+  test("the daily stage list is the resume contract: today's 22 stage " +
+      "names in today's order, and the vacuum worklist covers the same " +
+      "tables (no index is built: the closures are listed, never run)") {
+    val work = "/nonexistent/daily"
+    val names = graft.app.DailyMaintenance.stages(spark, spark.emptyDataFrame,
+      spark.emptyDataFrame, work).map(_._1)
+    assert(names == Seq("curate", "signal_state", "bm25_append",
+      "chunk_append", "ivf_append", "chunk_ivf_append", "fwd_append",
+      "chunk_pq_append", "supersede", "takedown", "bpe_retrain",
+      "nb_retrain", "ivf_rebuild", "chunk_ivf_rebuild", "chunk_pq_rebuild",
+      "bm25_compact", "chunk_compact", "ivf_compact", "chunk_ivf_compact",
+      "chunk_pq_compact", "fwd_compact", "vacuum"))
+    // the worklist is vacuumed table by table, so membership is the
+    // contract: every table once, none added or lost
+    val tables = graft.app.DailyMaintenance.maintainedTables(work)
+    val dirs = Seq("bm25", "chunks", "ivf", "chunk_ivf", "chunk_pq", "fwd")
+    val today = (Seq("state/candidates", "state/pairs", "signals/nd",
+      "signals/c1", "signals/c12", "signals/vsz", "signals/dels",
+      "bm25/postings", "bm25/stats", "chunks/postings", "chunks/stats",
+      "ivf/centroids", "ivf/assignment", "chunk_ivf/centroids",
+      "chunk_ivf/assignment", "chunk_pq/centroids", "chunk_pq/codebook",
+      "chunk_pq/assignment", "chunk_pq/vectors", "fwd/fwd",
+      "bpe_model/merges", "bpe_model/vocab", "nb_model/model",
+      "nb_model/priors", "lineage", "runs", "claims") ++
+      dirs.map(d => s"$d/${graft.operators.Tombstones.TableName}"))
+      .map(t => s"$work/$t")
+    assert(tables.size == today.size && tables.toSet == today.toSet,
+      s"maintained tables changed: ${tables.diff(today)} vs ${today.diff(tables)}")
+  }
+
+  test("DailyMaintenance names no index writer but the four Index verbs") {
+    val Writer = """\b(Retrieval|Similarity|Index)\.((?:build|append|compact|repair|rebuild|restamp)\w*)""".r
+    val src = scala.io.Source.fromFile(
+      "src/main/scala/graft/app/DailyMaintenance.scala", "UTF-8").mkString
+    val named = Writer.findAllMatchIn(src).map(m => s"${m.group(1)}.${m.group(2)}")
+      .toSet
+    assert(named.subsetOf(Set("Index.build", "Index.append", "Index.compact",
+      "Index.repair")), s"writers named: ${named.mkString(", ")}")
   }
 }

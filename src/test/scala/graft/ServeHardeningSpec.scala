@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
@@ -24,8 +25,8 @@ class ServeHardeningSpec extends SparkSpec {
        "corpus; faceted serve pair ≡ (filtered ranking, facets)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val dir = tmp("fct")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      metaCols = Seq("lang"))
+    Index.build(Index.Bm25Spec(metaCols = Seq("lang")),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     val terms = Seq("dup", "spark", "hash")
 
     def bruteCounts(pred: Option[org.apache.spark.sql.Column]) = {
@@ -73,8 +74,8 @@ class ServeHardeningSpec extends SparkSpec {
       (2L, "a a a a", "de"),
       (3L, "z z z z z", "en")).toDF("doc_id", "text", "lang")
     val dir = tmp("fctc")
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), dir,
-      size = 4, stride = 2, metaCols = Seq("lang"))
+    Index.build(Index.Bm25Spec(Index.Chunks(4, 2), metaCols = Seq("lang")),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     val got = Retrieval.bm25Facets(spark, dir, Seq("a"), Seq("lang"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // doc 1 (8 toks, windows at 1/3/5/7): only [a b c d] contains 'a';
@@ -101,8 +102,8 @@ class ServeHardeningSpec extends SparkSpec {
        "an unselective gate returns the fixed-probe plan's exact rows") {
     val corpus = plantedGateCorpus()
     val dir = tmp("adpt")
-    Similarity.buildIvfIndex(corpus, dir, nCentroids = 8, lloydIters = 2,
-      metaCols = Seq("rare"))
+    Index.build(Index.IvfSpec(nCentroids = 8, lloydIters = 2, metaCols = Seq("rare")),
+      Index.Vectors(corpus), dir)
     // query from cluster 0 — its nearest probes are cluster-0 buckets,
     // while every rare=true candidate sits in cluster 2
     val q = corpus.filter(col("id") === 1L).select("id", "vec")
@@ -136,8 +137,8 @@ class ServeHardeningSpec extends SparkSpec {
        "tombstone drift trips the underfill backstop") {
     val corpus = plantedGateCorpus()
     val dir = tmp("cnt")
-    Similarity.buildIvfIndex(corpus, dir, nCentroids = 8, lloydIters = 2,
-      metaCols = Seq("rare"))
+    Index.build(Index.IvfSpec(nCentroids = 8, lloydIters = 2, metaCols = Seq("rare")),
+      Index.Vectors(corpus), dir)
     Similarity.refreshGateCounts(spark, dir, Seq("rare"))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
     val q = corpus.filter(col("id") === 1L).select("id", "vec")
@@ -166,8 +167,8 @@ class ServeHardeningSpec extends SparkSpec {
 
     // append keeps the sidecar fresh additively: src_v tracks the new
     // assignment version and the batch's counts land
-    Similarity.appendToIvfIndex(
-      Seq((900L, Seq.fill(8)(0.25f), true)).toDF("id", "vec", "rare"), dir)
+    Index.append(Index.Vectors(Seq((900L, Seq.fill(8)(0.25f),
+      true)).toDF("id", "vec", "rare")), dir)
     val gc = Versioned.read(spark, s"$dir/gatecounts")
     assert(gc.select(max(col("src_v"))).head.getLong(0) ==
       Versioned.latestVersion(spark, s"$dir/assignment"))
@@ -178,8 +179,8 @@ class ServeHardeningSpec extends SparkSpec {
 
     // missing sidecar ⇒ correct fallback to the adaptive path
     val dir2 = tmp("cnt2")
-    Similarity.buildIvfIndex(corpus, dir2, nCentroids = 8, lloydIters = 2,
-      metaCols = Seq("rare"))
+    Index.build(Index.IvfSpec(nCentroids = 8, lloydIters = 2, metaCols = Seq("rare")),
+      Index.Vectors(corpus), dir2)
     assert(rows(Similarity.probe(spark, Ivf(dir2), q, 3,
       Similarity.Counted("rare", true))) ==
       rows(Similarity.probe(spark, Ivf(dir2), q, 3,
@@ -197,7 +198,7 @@ class ServeHardeningSpec extends SparkSpec {
     assert(rows(afterTomb) == rows(exhTomb),
       "tombstone drift must fall back to the widening loop's answer")
     // and the compaction merge re-derives the sidecar tombstone-free
-    Similarity.compactIvfIndex(spark, dir)
+    Index.compact(spark, dir)
     val gc2 = Versioned.read(spark, s"$dir/gatecounts")
     assert(gc2.filter(col("gate_col") === "rare" &&
         col("gate_val") === "true")
@@ -210,8 +211,9 @@ class ServeHardeningSpec extends SparkSpec {
   test("adaptive filtered IVF-PQ probe escalates the ADC scan the same way") {
     val corpus = plantedGateCorpus()
     val dir = tmp("adptpq")
-    Similarity.buildIvfPqIndex(corpus, dir, nCentroids = 8, m = 4, ks = 8,
-      lloydIters = 2, dim = 8, metaCols = Seq("rare"))
+    Index.build(Index.PqSpec(nCentroids = 8, m = 4, ks = 8, lloydIters = 2,
+      dim = 8, metaCols = Seq("rare")),
+      Index.Vectors(corpus), dir)
     val q = corpus.filter(col("id") === 1L).select("id", "vec")
     val fixed = Similarity.probe(spark, Pq(dir, None, nProbes = 1, m = 4,
       ks = 8, dim = 8), q, 3, Similarity.Where(col("rare")))
@@ -253,8 +255,9 @@ class ServeHardeningSpec extends SparkSpec {
     val shifted = clustered(1000L, Seq(1, 3, 5, 7), 12, seed = 2)
     val union = day0.unionByName(shifted)
     val dir = tmp("rbld")
-    val v0 = Similarity.buildIvfIndex(day0, dir, nCentroids = 8, lloydIters = 2)
-    Similarity.appendToIvfIndex(shifted, dir)
+    val v0 = Index.build(Index.IvfSpec(nCentroids = 8, lloydIters = 2),
+      Index.Vectors(day0), dir)
+    Index.append(Index.Vectors(shifted), dir)
     val q = shifted.filter(col("id") < 1004L)
     def recallOf(df: DataFrame): Double = {
       val got = df.select("query_id", "cand_id").as[(Long, Long)]
@@ -266,7 +269,8 @@ class ServeHardeningSpec extends SparkSpec {
     val pinnedBefore = Similarity.queryIvfIndex(spark, dir, q, 5,
       nProbes = 2, asOf = Some(v0 + 1)).collect().map(_.toSeq).toSeq
     val drifted = recallOf(Similarity.queryIvfIndex(spark, dir, q, 5, nProbes = 2))
-    val v = Similarity.rebuildIvfIndex(spark, dir, lloydIters = 2)
+    val v = Index.build(Index.recorded(spark, dir) match {
+      case s: Index.IvfSpec => s.copy(lloydIters = 2) }, Index.Own, dir)
     val rebuilt = recallOf(Similarity.queryIvfIndex(spark, dir, q, 5, nProbes = 2))
     assert(rebuilt > drifted,
       s"rebuild must recover recall: drifted $drifted, rebuilt $rebuilt")
@@ -288,11 +292,12 @@ class ServeHardeningSpec extends SparkSpec {
       .withColumn("lang", when(col("id") % 2 === 0, "en").otherwise("de"))
     val union = day0.unionByName(shifted)
     val dir = tmp("rbldpq")
-    Similarity.buildIvfPqIndex(day0, dir, nCentroids = 6, m = 4, ks = 8,
-      dim = 8, residual = true, metaCols = Seq("lang"))
-    Similarity.appendToIvfPqIndex(shifted, dir, m = 4, dim = 8,
-      residual = true)
-    Similarity.rebuildIvfPqIndex(spark, dir, lloydIters = 2)
+    Index.build(Index.PqSpec(nCentroids = 6, m = 4, ks = 8, dim = 8,
+      residual = true, metaCols = Seq("lang")),
+      Index.Vectors(day0), dir)
+    Index.append(Index.Vectors(shifted), dir)
+    Index.build(Index.recorded(spark, dir) match {
+      case s: Index.PqSpec => s.copy(lloydIters = 2) }, Index.Own, dir)
     // four tables lockstep, meta preserved on vectors AND assignment
     val vs = Seq("vectors", "centroids", "codebook", "assignment")
       .map(t => graft.sources.Versioned.latestVersion(spark, s"$dir/$t"))
@@ -303,8 +308,9 @@ class ServeHardeningSpec extends SparkSpec {
     // a fresh one-shot build over the union with the same knobs (the
     // md5-derived seed sample and every derived encode param agree)
     val fresh = tmp("rbldpqf")
-    Similarity.buildIvfPqIndex(union, fresh, nCentroids = 6, m = 4, ks = 8,
-      dim = 8, residual = true, metaCols = Seq("lang"), lloydIters = 2)
+    Index.build(Index.PqSpec(nCentroids = 6, m = 4, ks = 8, dim = 8,
+      residual = true, metaCols = Seq("lang"), lloydIters = 2),
+      Index.Vectors(union), fresh)
     Seq("vectors", "centroids", "codebook", "assignment").foreach { t =>
       val a = graft.sources.Versioned.read(spark, s"$dir/$t")
       val b = graft.sources.Versioned.read(spark, s"$fresh/$t")
@@ -331,20 +337,22 @@ class ServeHardeningSpec extends SparkSpec {
       (1L, "a b c d e f g h"), (2L, "a a b b c c d d"),
       (3L, "z y x w v u t s")).toDF("doc_id", "text")
     val dir = tmp("rbldc")
-    Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), dir,
-      size = 4, stride = 2)
-    Retrieval.rebuildChunkIvfIndex(spark, dir)
-    assert(Retrieval.chunkGridHealthy(spark, dir, stampTable = "assignment"))
-    Retrieval.appendToChunkIvfIndex(
-      Seq((9L, "a b fresh doc")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), dir)
+    Index.build(Index.IvfSpec(Index.Chunks(4, 2)),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
+    Index.build(Index.recorded(spark, dir), Index.Own, dir)
+    assert(graft.operators.Stamp.read(spark, dir,
+      graft.operators.Stamp.chunkGrid("assignment")).nonEmpty)
+    Index.append(Index.Text(Seq((9L, "a b fresh doc")).toDF("doc_id", "text"),
+      col("doc_id"),
+        col("text")), dir)
     // simulate a crashed rebuild: centroids advanced, assignment not
     val c = graft.sources.Versioned.read(spark, s"$dir/centroids")
     graft.sources.Versioned.overwrite(c, s"$dir/centroids")
-    val v = Retrieval.rebuildChunkIvfIndex(spark, dir)
+    val v = Index.build(Index.recorded(spark, dir), Index.Own, dir)
     val vs = Seq("centroids", "assignment")
       .map(t => graft.sources.Versioned.latestVersion(spark, s"$dir/$t"))
     assert(vs.distinct == Seq(v), s"padding must restore lockstep: $vs")
-    assert(Retrieval.chunkGridHealthy(spark, dir, stampTable = "assignment"))
+    assert(graft.operators.Stamp.read(spark, dir,
+      graft.operators.Stamp.chunkGrid("assignment")).nonEmpty)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 import graft.operators.{Ranking, Similarity}
@@ -86,7 +87,7 @@ class SimilaritySpec extends SparkSpec {
       (6L, Seq(0.7f, 0.7f),  2))
       .toDF("id", "vec", "label")
     val idx = java.nio.file.Files.createTempDirectory("hn_idx").toString
-    Similarity.buildIvfIndex(pool, idx, nCentroids = 3): Unit
+    Index.build(Index.IvfSpec(nCentroids = 3), Index.Vectors(pool), idx): Unit
     val q = pool.filter(col("id") <= 2)
     val viaIndex = Similarity.hardNegativesIndexed(spark, idx, q, pool,
       k = 3, nProbes = 3)
@@ -228,7 +229,8 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Long, Double)].collect().toSeq
 
     // build once, probe — identical to the inline call (same params)
-    val v0 = Similarity.buildIvfIndex(e, idx, nCentroids = 16, lloydIters = 2)
+    val v0 = Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2),
+      Index.Vectors(e), idx)
     assert(v0 == 0L)
     val fromIndex = rows(Similarity.queryIvfIndex(spark, idx, q, k = 5))
     val inline = rows(Similarity.ivfTopK(q, e, k = 5, lloydIters = 2))
@@ -242,7 +244,8 @@ class SimilaritySpec extends SparkSpec {
     // rebuild over a mutated corpus → version 1; latest reflects the
     // new corpus, asOf(0) reproduces the ORIGINAL index exactly
     val mutated = e.filter(col("id") % 7 =!= 0)
-    val v1 = Similarity.buildIvfIndex(mutated, idx, nCentroids = 16, lloydIters = 2)
+    val v1 = Index.build(Index.IvfSpec(nCentroids = 16, lloydIters = 2),
+      Index.Vectors(mutated), idx)
     assert(v1 == 1L)
     val latest = rows(Similarity.queryIvfIndex(spark, idx, q, k = 5))
     assert(latest == rows(Similarity.ivfTopK(q, mutated, k = 5, lloydIters = 2)))
@@ -263,9 +266,10 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "cand_id", "sim")
         .as[(Long, Long, Double)].collect().toSeq
 
-    Similarity.buildIvfIndex(initial, idx, nCentroids = 8): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8),
+      Index.Vectors(initial), idx): Unit
     val before = rows(Similarity.queryIvfIndex(spark, idx, q, k = 5))
-    assert(Similarity.appendToIvfIndex(batch, idx) == 1L)
+    assert(Index.append(Index.Vectors(batch), idx) == 1L)
 
     // appended vectors are probe-reachable: an exhaustive probe over the
     // appended index equals brute force over the UNION corpus — the
@@ -288,7 +292,7 @@ class SimilaritySpec extends SparkSpec {
     val wrongDim = Seq((90001L, Seq(1.0f, 0.0f, 0.5f)))
       .toDF("id", "vec")
     val err = intercept[Exception] {
-      Similarity.appendToIvfIndex(wrongDim, idx)
+      Index.append(Index.Vectors(wrongDim), idx)
     }
     assert(err.getMessage != null && err.getMessage.contains("dim mismatch"),
       s"wrong-dim append must name the guard, got: ${err.getMessage}")
@@ -308,7 +312,8 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "cand_id", "sim")
         .as[(Long, Long, Double)].collect().toSeq
 
-    Similarity.buildIvfIndex(initial, idx, nCentroids = 8): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8),
+      Index.Vectors(initial), idx): Unit
     val before = rows(Similarity.queryIvfIndex(spark, idx, q, k = 5))
 
     // crash between an append's two commits: the identical centroids
@@ -321,18 +326,18 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(e1.getMessage.contains("repairIvfIndex"))
     intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(batch, idx)
+      Index.append(Index.Vectors(batch), idx)
     }
 
     // repair = empty catch-up: the index is exactly its pre-append self
-    val vr = Similarity.repairIvfIndex(spark, idx)
+    val vr = Index.repair(spark, idx)
     assert(vr == 1L)
     assert(rows(Similarity.queryIvfIndex(spark, idx, q, k = 5)) == before)
-    assert(Similarity.repairIvfIndex(spark, idx) == vr) // no-op when intact
+    assert(Index.repair(spark, idx) == vr) // no-op when intact
 
     // the caller re-appends the WHOLE batch (nothing of it committed):
     // exhaustive probe ≡ brute force over the union, batch in ONCE
-    Similarity.appendToIvfIndex(batch, idx): Unit
+    Index.append(Index.Vectors(batch), idx): Unit
     val exhaustive = rows(Similarity.queryIvfIndex(spark, idx, q, k = 5, nProbes = 8))
     val brute = Similarity.bruteForceTopK(q, e, k = 5)
       .select(col("query_id"), col("cand_id"), col("sim"))
@@ -342,13 +347,14 @@ class SimilaritySpec extends SparkSpec {
     // a crashed REBUILD (centroid content CHANGED) must refuse — an
     // empty catch-up would pair new centroids with the old assignment
     val idx2 = java.nio.file.Files.createTempDirectory("graft_ivf_rep2").toString
-    Similarity.buildIvfIndex(initial, idx2, nCentroids = 8): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8),
+      Index.Vectors(initial), idx2): Unit
     graft.sources.Versioned.overwrite(
       graft.sources.Versioned.read(spark, s"$idx2/centroids")
         .withColumn("cent_norm_sq", col("cent_norm_sq") + 1.0),
       s"$idx2/centroids"): Unit
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.repairIvfIndex(spark, idx2)
+      Index.repair(spark, idx2)
     }
     assert(e2.getMessage.contains("CHANGED"))
 
@@ -359,9 +365,11 @@ class SimilaritySpec extends SparkSpec {
     // index exactly where an uncrashed appendToIvfPqIndex would have
     val idx3 = java.nio.file.Files.createTempDirectory("graft_pq_rep").toString
     val idx4 = java.nio.file.Files.createTempDirectory("graft_pq_ok").toString
-    Similarity.buildIvfPqIndex(initial, idx3, nCentroids = 8): Unit
-    Similarity.buildIvfPqIndex(initial, idx4, nCentroids = 8): Unit
-    Similarity.appendToIvfPqIndex(batch, idx4): Unit // the uncrashed twin
+    Index.build(Index.PqSpec(nCentroids = 8),
+      Index.Vectors(initial), idx3): Unit
+    Index.build(Index.PqSpec(nCentroids = 8),
+      Index.Vectors(initial), idx4): Unit
+    Index.append(Index.Vectors(batch), idx4): Unit // the uncrashed twin
     def pqRows(dir: String) =
       Similarity.probe(spark, Pq(dir, None, nProbes = 8), q, 5)
       .as[(Long, Long, Double)].collect().toSeq
@@ -379,7 +387,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.probe(spark, Pq(idx3, None), q, 5)
     }
     assert(e3.getMessage.contains("repairIvfIndex"))
-    assert(Similarity.repairIvfIndex(spark, idx3) == 1L)
+    assert(Index.repair(spark, idx3) == 1L)
     assert(pqRows(idx3) == pqRows(idx4),
       "repair must COMPLETE the crashed PQ append — codes identical to " +
         "the uncrashed twin's")
@@ -398,7 +406,7 @@ class SimilaritySpec extends SparkSpec {
       graft.sources.Versioned.read(spark, s"$idx4/vectors"),
       s"$idx4/vectors", "vec_part"): Unit
     val pq4Before = pqRows(idx3)
-    assert(Similarity.repairIvfIndex(spark, idx4) == 2L)
+    assert(Index.repair(spark, idx4) == 2L)
     assert(pqRows(idx4) == pq4Before)
   }
 
@@ -408,7 +416,7 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
       .filter(col("id") < 64)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivf_bkt").toString
-    Similarity.buildIvfIndex(e, idx, nCentroids = 8): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8), Index.Vectors(e), idx): Unit
     def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution
       .explainString(org.apache.spark.sql.execution.SimpleMode)
     def bucketCounts() = graft.sources.Versioned
@@ -421,13 +429,13 @@ class SimilaritySpec extends SparkSpec {
       df.as[(Long, Long, Double)].collect().toSeq
     val q = e.filter(col("id") < 2)
 
-    Similarity.appendToIvfIndex(
-      e.select((col("id") + 5000L).as("id"), col("vec")), idx): Unit
+    Index.append(Index.Vectors(e.select((col("id") + 5000L).as("id"),
+      col("vec"))), idx): Unit
     assert(plan(bucketCounts()).contains("Exchange"),
       "appended batches land as plain files until compaction")
     val demoted = rows(Similarity.queryIvfIndex(spark, idx, q, k = 5, nProbes = 8))
 
-    val v = Similarity.compactIvfIndex(spark, idx)
+    val v = Index.compact(spark, idx)
     assert(graft.sources.Versioned.latestVersion(spark, s"$idx/centroids") == v)
     assert(graft.sources.Versioned.latestVersion(spark, s"$idx/assignment") == v)
     assert(!plan(bucketCounts()).contains("Exchange"),
@@ -443,9 +451,9 @@ class SimilaritySpec extends SparkSpec {
     val q = e.filter(col("id") < 6)
     val bIdx = java.nio.file.Files.createTempDirectory("graft_ivf_b").toString
     val pIdx = java.nio.file.Files.createTempDirectory("graft_ivf_p").toString
-    Similarity.buildIvfIndex(e, bIdx, nCentroids = 8): Unit
-    Similarity.buildIvfIndex(e, pIdx, nCentroids = 8,
-      assignmentLayout = "partition"): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8), Index.Vectors(e), bIdx): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8, layout = "partition"),
+      Index.Vectors(e), pIdx): Unit
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSeq
     // identical probes whatever the physical layout
@@ -463,8 +471,8 @@ class SimilaritySpec extends SparkSpec {
 
     // appends route through appendPartitioned: layout survives, the
     // appended vectors are probe-reachable, plain appends are refused
-    Similarity.appendToIvfIndex(
-      e.select((col("id") + 7000L).as("id"), col("vec")), pIdx): Unit
+    Index.append(Index.Vectors(e.select((col("id") + 7000L).as("id"),
+      col("vec"))), pIdx): Unit
     val afterAppend = Similarity.queryIvfIndex(spark, pIdx, q, 1000,
       nProbes = 8)
     assert(afterAppend.filter(col("cand_id") >= 7000L).count() > 0)
@@ -478,7 +486,7 @@ class SimilaritySpec extends SparkSpec {
     // compaction re-merges per-append files, keeps the layout + probes;
     // vacuum reclaims the superseded partitioned dirs
     val before = rows(Similarity.queryIvfIndex(spark, pIdx, q, 5, nProbes = 8))
-    Similarity.compactIvfIndex(spark, pIdx): Unit
+    Index.compact(spark, pIdx): Unit
     assert(rows(Similarity.queryIvfIndex(spark, pIdx, q, 5, nProbes = 8))
       == before)
     assert(graft.sources.Versioned.vacuum(spark, s"$pIdx/assignment",
@@ -492,7 +500,7 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val q = e.filter(col("id") < 10)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfsq8").toString
-    Similarity.buildIvfSq8Index(e, idx, nCentroids = 16): Unit
+    Index.build(Index.Sq8Spec(nCentroids = 16), Index.Vectors(e), idx): Unit
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "qdot")
@@ -524,14 +532,14 @@ class SimilaritySpec extends SparkSpec {
     val batch = e.select((col("id") + 100000L).as("id"), col("vec"))
     val q = e.filter(col("id") < 5)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfsq8_append").toString
-    Similarity.buildIvfSq8Index(e, idx, nCentroids = 8): Unit
+    Index.build(Index.Sq8Spec(nCentroids = 8), Index.Vectors(e), idx): Unit
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "qdot")
         .as[(Long, Long, Long)].collect().toSeq
 
     val before = rows(Similarity.probe(spark, Sq8(idx, nProbes = 8), q, 5))
-    assert(Similarity.appendToIvfIndex(batch, idx) == 1L)
+    assert(Index.append(Index.Vectors(batch), idx) == 1L)
 
     // exhaustive probe of the appended index ≡ the full quantized scan
     // over the union, bit-for-bit: the append stored int CODES on the
@@ -619,7 +627,7 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val q = e.filter(col("id") < 10)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 16): Unit
+    Index.build(Index.PqSpec(nCentroids = 16), Index.Vectors(e), idx): Unit
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "pqdot")
@@ -653,14 +661,14 @@ class SimilaritySpec extends SparkSpec {
     val batch = e.select((col("id") + 100000L).as("id"), col("vec"))
     val q = e.filter(col("id") < 3)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_append").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 8): Unit
+    Index.build(Index.PqSpec(nCentroids = 8), Index.Vectors(e), idx): Unit
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "pqdot")
         .as[(Long, Long, Double)].collect().toSeq
 
     val before = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8), q, 5))
-    assert(Similarity.appendToIvfPqIndex(batch, idx) == 1L)
+    assert(Index.append(Index.Vectors(batch), idx) == 1L)
 
     val all = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8), q,
       100000))
@@ -677,11 +685,10 @@ class SimilaritySpec extends SparkSpec {
     assert(rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8,
       asOf = Some(0L)), q, 5)) == before)
 
-    // the float-index append path refuses a PQ index loudly
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(batch, idx): Unit
-    }
-    assert(ex.getMessage.contains("appendToIvfPqIndex"))
+    // the family comes from the dir, so an append can never land
+    // float-schema rows in a PQ index: the assignment stays code rows
+    val asg = graft.sources.Versioned.read(spark, s"$idx/assignment").columns
+    assert(asg.contains("pqcode") && !asg.contains("cv"))
   }
 
   // -------------------------------------------------------------------
@@ -715,7 +722,8 @@ class SimilaritySpec extends SparkSpec {
     def dot(a: Array[Double], b: Array[Double]) =
       a.iterator.zip(b.iterator).map { case (x, y) => x * y }.sum
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpqr_exact").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 4, residual = true): Unit
+    Index.build(Index.PqSpec(nCentroids = 4, residual = true),
+      Index.Vectors(e), idx): Unit
     val got = Similarity.probe(spark, Pq(idx, None, nProbes = 4,
       residual = true), e.filter(col("id") < 3), 15).collect()
     assert(got.length == 3 * 15)
@@ -744,8 +752,9 @@ class SimilaritySpec extends SparkSpec {
     def meanErr(residual: Boolean): Double = {
       val idx = java.nio.file.Files
         .createTempDirectory(s"graft_ivfpqr_$residual").toString
-      Similarity.buildIvfPqIndex(e, idx, nCentroids = 24, ks = 16,
-        lloydIters = 1, pqLloydIters = 1, residual = residual): Unit
+      Index.build(Index.PqSpec(nCentroids = 24, ks = 16, lloydIters = 1,
+        pqLloydIters = 1, residual = residual),
+        Index.Vectors(e), idx): Unit
       val got = Similarity.probe(spark, Pq(idx, None, nProbes = 24,
         residual = residual), e.filter(col("id") < 5), 100000)
         .collect()
@@ -769,8 +778,9 @@ class SimilaritySpec extends SparkSpec {
     val corpus = clusteredCorpus()
     val e = corpus.toDF("id", "vec")
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpqr_ansi").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 8, ks = 64,
-      pqLloydIters = 1, residual = true): Unit
+    Index.build(Index.PqSpec(nCentroids = 8, ks = 64, pqLloydIters = 1,
+      residual = true),
+      Index.Vectors(e), idx): Unit
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
       val got = Similarity.probe(spark, Pq(idx, None, nProbes = 8, ks = 64,
@@ -784,7 +794,8 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
       .filter(col("id") < 32)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpqr_flag").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 4, residual = true): Unit
+    Index.build(Index.PqSpec(nCentroids = 4, residual = true),
+      Index.Vectors(e), idx): Unit
     def causes(e: Throwable) = Iterator.iterate(e)(_.getCause)
       .takeWhile(_ != null).map(m => Option(m.getMessage).getOrElse("")).mkString("\n")
     // probing without the flag would drop the centroid base term —
@@ -794,13 +805,17 @@ class SimilaritySpec extends SparkSpec {
         e.filter(col("id") < 2), 3).collect()
     }
     assert(causes(exQ).contains("residual flag"))
-    // appending raw-encoded codes into a residual assignment would
-    // corrupt every future probe
-    val exA = intercept[Exception] {
-      Similarity.appendToIvfPqIndex(e.select((col("id") + 1000L).as("id"),
-        col("vec")), idx): Unit
-    }
-    assert(causes(exA).contains("residual flag"))
+    // an append reads the residual flag off the codebook, so it cannot
+    // land raw-encoded codes in a residual assignment: each appended
+    // copy of a vector carries its twin's residual code
+    Index.append(Index.Vectors(e.select((col("id") + 1000L).as("id"),
+      col("vec"))), idx): Unit
+    val codes = graft.sources.Versioned.read(spark, s"$idx/assignment")
+      .select(col("cand_id"), col("pqcode"))
+    assert(codes.filter(col("cand_id") >= 1000L)
+      .select((col("cand_id") - 1000L).as("cand_id"), col("pqcode"))
+      .collect().map(_.toSeq).toSet ==
+      codes.filter(col("cand_id") < 1000L).collect().map(_.toSeq).toSet)
   }
 
   test("two-stage re-rank: exhaustive probes + corpus-covering alpha ≡ " +
@@ -809,8 +824,8 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val q = e.filter(col("id") < 6)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_rr").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 16, ks = 64,
-      pqLloydIters = 1): Unit
+    Index.build(Index.PqSpec(nCentroids = 16, ks = 64, pqLloydIters = 1),
+      Index.Vectors(e), idx): Unit
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id").as[(Long, Long)].collect().toSet
 
@@ -858,7 +873,8 @@ class SimilaritySpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val idx = java.nio.file.Files.createTempDirectory("graft_pq_vecdpp").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 16, nVecParts = 8): Unit
+    Index.build(Index.PqSpec(nCentroids = 16, nVecParts = 8),
+      Index.Vectors(e), idx): Unit
     def versions() = Seq("vectors", "centroids", "codebook", "assignment")
       .map(t => Versioned.latestVersion(spark, s"$idx/$t"))
     assert(versions() == Seq(0L, 0L, 0L, 0L),
@@ -883,7 +899,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rr2.as[(Long, Long, Double)].collect().toSeq == rows0)
     assert(!fmt(rr2).contains("dynamicpruning"))
     // repair data-verifies the recorded modulus and restores the stamp
-    Similarity.repairIvfIndex(spark, idx): Unit
+    Index.repair(spark, idx): Unit
     val rr3 = Similarity.probe(spark, Pq(idx), q, 5)
     assert(rr3.as[(Long, Long, Double)].collect().toSeq == rows0)
     assert(fmt(rr3).contains("dynamicpruningexpression"),
@@ -892,10 +908,10 @@ class SimilaritySpec extends SparkSpec {
     // append keeps all four tables in lockstep; compaction re-derives
     // the shard modulus from the grown corpus and re-stamps; time
     // travel still pins the pre-append snapshot
-    Similarity.appendToIvfPqIndex(
-      e.select((col("id") + 50000L).as("id"), col("vec")), idx): Unit
+    Index.append(Index.Vectors(e.select((col("id") + 50000L).as("id"),
+      col("vec"))), idx): Unit
     assert(versions() == Seq(1L, 1L, 1L, 1L))
-    Similarity.compactIvfIndex(spark, idx): Unit
+    Index.compact(spark, idx): Unit
     assert(versions() == Seq(2L, 2L, 2L, 2L))
     assert(Similarity.probe(spark, Pq(idx, asOf = Some(0L)), q, 5)
         .as[(Long, Long, Double)].collect().toSeq == rows0,
@@ -908,7 +924,7 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
       .filter(col("id") < 32)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpq_legacy").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 4): Unit
+    Index.build(Index.PqSpec(nCentroids = 4), Index.Vectors(e), idx): Unit
     val q = e.filter(col("id") < 2)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSeq
@@ -939,13 +955,14 @@ class SimilaritySpec extends SparkSpec {
     val batch = e.select((col("id") + 100000L).as("id"), col("vec"))
     val q = e.filter(col("id") < 3)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivfpqr_append").toString
-    Similarity.buildIvfPqIndex(e, idx, nCentroids = 8, residual = true): Unit
+    Index.build(Index.PqSpec(nCentroids = 8, residual = true),
+      Index.Vectors(e), idx): Unit
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "pqdot")
         .as[(Long, Long, Double)].collect().toSeq
     val before = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8,
       residual = true), q, 5))
-    assert(Similarity.appendToIvfPqIndex(batch, idx, residual = true) == 1L)
+    assert(Index.append(Index.Vectors(batch), idx) == 1L)
     val all = rows(Similarity.probe(spark, Pq(idx, None, nProbes = 8,
       residual = true), q, 100000))
       .map { case (qid, cid, d) => (qid, cid) -> d }.toMap
@@ -969,8 +986,9 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"), col("label"))
     val q = e.filter(col("id") < 4)
     val idx = java.nio.file.Files.createTempDirectory("graft_ivf_meta").toString
-    Similarity.buildIvfIndex(e, idx, nCentroids = 8,
-      assignmentLayout = "partition", metaCols = Seq("label")): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8, layout = "partition",
+      metaCols = Seq("label")),
+      Index.Vectors(e), idx): Unit
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select(col("query_id"), col("cand_id"), col("sim"))
       .as[(Long, Long, Double)].collect().toSeq.sorted
@@ -1003,16 +1021,14 @@ class SimilaritySpec extends SparkSpec {
     // appends supply the baked columns and the contract survives
     val batch = e.filter(col("id") < 20)
       .select((col("id") + 50000L).as("id"), col("vec"), col("label"))
-    Similarity.appendToIvfIndex(batch, idx): Unit
+    Index.append(Index.Vectors(batch), idx): Unit
     assert(pairs(Similarity.probe(spark, Ivf(idx, nProbes = 8), q, 5,
       Similarity.Where(col("label") === 3))) ==
       filteredBrute(e.unionByName(batch)))
     // ...and a batch MISSING a baked column refuses before any commit
     val vBefore = graft.sources.Versioned.latestVersion(spark, s"$idx/assignment")
     val err2 = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(
-        batch.drop("label").select((col("id") + 90000L).as("id"), col("vec")),
-        idx)
+      Index.append(Index.Vectors(batch.drop("label").select((col("id") + 90000L).as("id"), col("vec"))), idx)
     }
     assert(err2.getMessage.contains("label"))
     assert(graft.sources.Versioned.latestVersion(spark, s"$idx/assignment")
@@ -1030,10 +1046,10 @@ class SimilaritySpec extends SparkSpec {
       df.as[(Long, Long, Double)].collect().toSeq
     val all  = java.nio.file.Files.createTempDirectory("graft_pqf_all").toString
     val fl   = java.nio.file.Files.createTempDirectory("graft_pqf_flt").toString
-    Similarity.buildIvfPqIndex(e, all, nCentroids = 8,
-      metaCols = Seq("label")): Unit
-    Similarity.buildIvfPqIndex(e.filter(col("label") === 3), fl,
-      nCentroids = 8): Unit
+    Index.build(Index.PqSpec(nCentroids = 8, metaCols = Seq("label")),
+      Index.Vectors(e), all): Unit
+    Index.build(Index.PqSpec(nCentroids = 8),
+      Index.Vectors(e.filter(col("label") === 3)), fl): Unit
     // exhaustive probes + corpus-covering alpha: the filtered re-rank
     // over the SHARED index equals the exact path over a filtered-corpus
     // twin index — both reduce to the exact dot top-k over the eligible
@@ -1055,9 +1071,9 @@ class SimilaritySpec extends SparkSpec {
     val batch = e.filter(col("id").between(100, 119))
       .select((col("id") + 50000L).as("id"), col("vec"), col("label"))
     val twin = java.nio.file.Files.createTempDirectory("graft_pqf_tw").toString
-    Similarity.buildIvfPqIndex(e, twin, nCentroids = 8,
-      metaCols = Seq("label")): Unit
-    Similarity.appendToIvfPqIndex(batch, twin): Unit // the uncrashed twin
+    Index.build(Index.PqSpec(nCentroids = 8, metaCols = Seq("label")),
+      Index.Vectors(e), twin): Unit
+    Index.append(Index.Vectors(batch), twin): Unit // the uncrashed twin
     val nShards = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(all, "vec_parts").toPath), "UTF-8")
       .trim.split(" ")(0).toInt
@@ -1066,7 +1082,7 @@ class SimilaritySpec extends SparkSpec {
           VectorOps.toDoubleArray(col("vec")).as("cv"), col("label"))
         .withColumn("vec_part", pmod(col("cand_id"), lit(nShards.toLong))),
       s"$all/vectors", "vec_part"): Unit
-    assert(Similarity.repairIvfIndex(spark, all) == 1L)
+    assert(Index.repair(spark, all) == 1L)
     assert(Versioned.read(spark, s"$all/assignment")
       .filter(col("cand_id") >= 50000L && col("label").isNull).isEmpty,
       "the repaired assignment rows must carry the batch's metadata")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.clean.{Cleaners, Schemas}
@@ -440,7 +441,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val work = tmpDir()
     val idx = s"$work/ivf"
-    Similarity.buildIvfIndex(e, idx, nCentroids = 8): Unit
+    Index.build(Index.IvfSpec(nCentroids = 8), Index.Vectors(e), idx): Unit
 
     val qRows = e.filter(col("id") < 12)
       .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
@@ -468,7 +469,7 @@ class StreamingSpec extends SparkSpec {
     // append new vectors (same vectors, shifted ids): a stream started
     // AFTER the append answers from the appended snapshot...
     val batch = e.select((col("id") + 500000L).as("id"), col("vec"))
-    Similarity.appendToIvfIndex(batch, idx): Unit
+    Index.append(Index.Vectors(batch), idx): Unit
     deliver(d1, s"$work/out2")
     assert(rows(spark.read.parquet(s"$work/out2"))
         .exists { case (_, cid, _) => cid >= 500000L },
@@ -489,8 +490,8 @@ class StreamingSpec extends SparkSpec {
     val idx = s"$work/ivf"
     val pool = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)),
       (3L, Seq(0.7f, 0.7f)))
-    graft.operators.Similarity.buildIvfIndex(pool.toDF("id", "vec"), idx,
-      nCentroids = 2): Unit
+    Index.build(Index.IvfSpec(nCentroids = 2),
+      Index.Vectors(pool.toDF("id", "vec")), idx): Unit
     // crash between an append's two commits: the identical centroids
     // re-committed, the batch's assignment never landed
     Versioned.overwrite(Versioned.read(spark, s"$idx/centroids"),
@@ -597,7 +598,8 @@ class StreamingSpec extends SparkSpec {
     val idx = s"$work/bm25"
     val docsA = Seq((1L, "spark shuffle join"), (2L, "rare spark spark"),
       (3L, "join join shuffle"), (4L, "nothing here")).toDF("doc_id", "text")
-    assert(Retrieval.buildBm25Index(docsA, col("doc_id"), col("text"), idx) == 0L)
+    assert(Index.build(Index.Bm25Spec(),
+      Index.Text(docsA, col("doc_id"), col("text")), idx) == 0L)
 
     val queries = Seq((10L, Seq("spark", "rare")), (11L, Seq("join")))
     var n = 0
@@ -649,9 +651,10 @@ class StreamingSpec extends SparkSpec {
       (1L, Seq(1.0, 0.0, 0.0, 0.1)), (2L, Seq(0.9, 0.1, 0.0, 0.0)),
       (3L, Seq(0.0, 1.0, 0.1, 0.0)), (4L, Seq(0.0, 0.0, 1.0, 0.9)))
       .toDF("id", "vec")
-    assert(Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bm25) == 0L)
-    assert(Similarity.buildIvfIndex(vecs, ivf, nCentroids = 2,
-      lloydIters = 1) == 0L)
+    assert(Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), bm25) == 0L)
+    assert(Index.build(Index.IvfSpec(nCentroids = 2, lloydIters = 1),
+      Index.Vectors(vecs), ivf) == 0L)
 
     val queries = Seq(
       (10L, Seq("spark", "rare"), Seq(1.0, 0.05, 0.0, 0.0)),
@@ -687,8 +690,8 @@ class StreamingSpec extends SparkSpec {
     assert(Retrieval.appendToBm25Index(
       Seq((5L, "spark spark rare join")).toDF("doc_id", "text"),
       col("doc_id"), col("text"), bm25) == 1L)
-    assert(Similarity.appendToIvfIndex(
-      Seq((5L, Seq(0.95, 0.05, 0.0, 0.05))).toDF("id", "vec"), ivf) == 1L)
+    assert(Index.append(Index.Vectors(Seq((5L, Seq(0.95, 0.05, 0.0,
+      0.05))).toDF("id", "vec")), ivf) == 1L)
     deliver(queries.take(1), s"$work/hout2")
     assert(rows(spark.read.parquet(s"$work/hout2")).exists(_._2 == 5L),
       "post-append stream must reach the appended doc through both arms")
@@ -718,10 +721,11 @@ class StreamingSpec extends SparkSpec {
       (1L, Seq(1.0, 0.0, 0.0, 0.1), "en"), (2L, Seq(0.9, 0.1, 0.0, 0.0), "fr"),
       (3L, Seq(0.0, 1.0, 0.1, 0.0), "en"), (4L, Seq(0.0, 0.0, 1.0, 0.9), "de"))
       .toDF("id", "vec", "lang")
-    assert(Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), bm25,
-      metaCols = Seq("lang")) == 0L)
-    assert(Similarity.buildIvfIndex(vecs, ivf, nCentroids = 2,
-      lloydIters = 1, metaCols = Seq("lang")) == 0L)
+    assert(Index.build(Index.Bm25Spec(metaCols = Seq("lang")),
+      Index.Text(docs, col("doc_id"), col("text")), bm25) == 0L)
+    assert(Index.build(Index.IvfSpec(nCentroids = 2, lloydIters = 1,
+      metaCols = Seq("lang")),
+      Index.Vectors(vecs), ivf) == 0L)
 
     val queries = Seq(
       (10L, Seq("spark", "rare"), Seq(1.0, 0.05, 0.0, 0.0)),
@@ -782,10 +786,10 @@ class StreamingSpec extends SparkSpec {
       (Seq.fill(16)("pad") ++ Seq("zebra", "quark", "xylem") ++
         Seq.fill(29)("pad")).mkString(" "))
     val docs = (filler :+ planted).toDF("doc_id", "text")
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), bmDir,
-      size = 16, stride = 8): Unit
-    Retrieval.buildChunkIvfIndex(docs, col("doc_id"), col("text"), ivDir,
-      size = 16, stride = 8, dim = 16, nCentroids = 4): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(16, 8)),
+      Index.Text(docs, col("doc_id"), col("text")), bmDir): Unit
+    Index.build(Index.IvfSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 4),
+      Index.Text(docs, col("doc_id"), col("text")), ivDir): Unit
 
     def withVecs(qs: Seq[(Long, Seq[String])]) = {
       val raw = qs.toDF("query_id", "terms")
@@ -833,10 +837,10 @@ class StreamingSpec extends SparkSpec {
     // span; the pinned (0,0) pair reproduces the original fusion
     val batchDocs = Seq((6L, "zebra quark xylem tail tail"))
       .toDF("doc_id", "text")
-    Retrieval.appendToChunkBm25Index(batchDocs, col("doc_id"), col("text"),
-      bmDir): Unit
-    Retrieval.appendToChunkIvfIndex(batchDocs, col("doc_id"), col("text"),
-      ivDir, dim = 16): Unit
+    Index.append(Index.Text(batchDocs, col("doc_id"),
+        col("text")), bmDir): Unit
+    Index.append(Index.Text(batchDocs, col("doc_id"),
+        col("text")), ivDir): Unit
     deliver(Seq(900L), s"$work/cout2")
     assert(rows(spark.read.parquet(s"$work/cout2"))
       .exists(r => r._2 == 6L && r._3 == 1L),
@@ -865,10 +869,11 @@ class StreamingSpec extends SparkSpec {
       (Seq.fill(16)("pad") ++ Seq("zebra", "quark", "xylem") ++
         Seq.fill(29)("pad")).mkString(" "))
     val docs = (filler :+ planted).toDF("doc_id", "text")
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), bmDir,
-      size = 16, stride = 8): Unit
-    Retrieval.buildChunkIvfPqIndex(docs, col("doc_id"), col("text"), pqDir,
-      size = 16, stride = 8, dim = 16, nCentroids = 4, m = 4, ks = 8): Unit
+    Index.build(Index.Bm25Spec(Index.Chunks(16, 8)),
+      Index.Text(docs, col("doc_id"), col("text")), bmDir): Unit
+    Index.build(Index.PqSpec(Index.Chunks(16, 8), dim = 16, nCentroids = 4,
+      m = 4, ks = 8),
+      Index.Text(docs, col("doc_id"), col("text")), pqDir): Unit
 
     def withVecs(qs: Seq[(Long, Seq[String])]) = {
       val raw = qs.toDF("query_id", "terms")
@@ -915,10 +920,10 @@ class StreamingSpec extends SparkSpec {
     // reproduces
     val batchDocs = Seq((6L, "zebra quark xylem tail tail"))
       .toDF("doc_id", "text")
-    Retrieval.appendToChunkBm25Index(batchDocs, col("doc_id"), col("text"),
-      bmDir): Unit
-    Retrieval.appendToChunkIvfPqIndex(batchDocs, col("doc_id"), col("text"),
-      pqDir, dim = 16, m = 4): Unit
+    Index.append(Index.Text(batchDocs, col("doc_id"),
+        col("text")), bmDir): Unit
+    Index.append(Index.Text(batchDocs, col("doc_id"),
+        col("text")), pqDir): Unit
     deliver(Seq(900L), s"$work/pqout2")
     assert(rows(spark.read.parquet(s"$work/pqout2"))
       .exists(r => r._2 == 6L && r._3 == 1L),
@@ -999,8 +1004,8 @@ class StreamingSpec extends SparkSpec {
     val docs = Seq((1L, Seq.fill(8)("abcabc").mkString(" ")),
         (2L, Seq.fill(8)("abcabc").mkString(" ")))
       .toDF("doc_id", "text")
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"),
-      s"$work/fwd"): Unit
+    Index.build(Index.ForwardSpec(),
+      Index.Text(docs, col("doc_id"), col("text")), s"$work/fwd"): Unit
     graft.operators.Bpe.buildBpeModel(docs, col("text"), k = 40,
       s"$work/bpe"): Unit
 

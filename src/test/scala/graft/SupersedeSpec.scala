@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Corpus, Curation, Retrieval, Similarity, Supersede,
@@ -107,8 +108,8 @@ class SupersedeSpec extends SparkSpec {
 
     // ---- merge phase: physical drop + stats correction everywhere
     Retrieval.compactBm25Index(spark, s"$workA/bm25")
-    Similarity.compactIvfIndex(spark, s"$workA/ivf")
-    Retrieval.compactForwardIndex(spark, s"$workA/fwd")
+    Index.compact(spark, s"$workA/ivf")
+    Index.compact(spark, s"$workA/fwd")
 
     // BM25 ≡ the v2-only pipeline, exactly (stats corrected)
     val a = Retrieval.queryBm25Index(spark, s"$workA/bm25", terms, 20)
@@ -168,14 +169,14 @@ class SupersedeSpec extends SparkSpec {
     val base = slice(docs, "doc_id", 0, 100)
     val olds = docs.filter(col("doc_id").isInCollection(oldIds))
     val v2 = v2Docs(olds)
-    Retrieval.buildForwardIndex(base, col("doc_id"), col("text"),
-      s"$work/fwd")
+    Index.build(Index.ForwardSpec(),
+      Index.Text(base, col("doc_id"), col("text")), s"$work/fwd")
     Corpus.buildSignalState(base, col("doc_id"), col("text"),
       s"$work/signals")
     Curation.curateBatch(base.select("doc_id", "text", "n_chars"),
       s"$work/state")
-    Retrieval.appendToForwardIndex(v2, col("doc_id"), col("text"),
-      s"$work/fwd")
+    Index.append(Index.Text(v2, col("doc_id"),
+        col("text")), s"$work/fwd")
     Corpus.appendSignalState(v2, col("doc_id"), col("text"),
       s"$work/signals")
     Curation.curateBatch(v2.select("doc_id", "text", "n_chars"),
@@ -230,8 +231,8 @@ class SupersedeSpec extends SparkSpec {
     // chained recrawl: v2 itself superseded by v3 — resolveLatest walks
     val v3 = v2.withColumn("doc_id", col("doc_id") + Off)
       .withColumn("text", concat(col("text"), lit(" again")))
-    Retrieval.appendToForwardIndex(v3, col("doc_id"), col("text"),
-      s"$work/fwd")
+    Index.append(Index.Text(v3, col("doc_id"),
+        col("text")), s"$work/fwd")
     val pairs2 = oldIds.map(o => (o + Off, o + 2 * Off))
       .toDF("old_id", "new_id")
     Supersede.supersede(spark, pairs2, work, boundary + Day,

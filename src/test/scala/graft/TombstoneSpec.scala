@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Index
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Corpus, Retrieval, Similarity, Tombstones}
@@ -39,7 +40,8 @@ class TombstoneSpec extends SparkSpec {
        "the merged index ≡ a fresh build without the docs") {
     val dir = tmp("ts_bm25")
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
 
     val before = bm25Rows(
       Retrieval.queryBm25Index(spark, dir, terms, k = 10))
@@ -57,8 +59,9 @@ class TombstoneSpec extends SparkSpec {
     // merge phase: physical drop + stats correction
     Retrieval.compactBm25Index(spark, dir)
     val freshDir = tmp("ts_bm25_fresh")
-    Retrieval.buildBm25Index(docs.filter(!col("doc_id").isInCollection(dead)),
-      col("doc_id"), col("text"), freshDir)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs.filter(!col("doc_id").isInCollection(dead)),
+        col("doc_id"), col("text")), freshDir)
     val merged = bm25Rows(Retrieval.queryBm25Index(spark, dir, terms, k = 10))
     val fresh  = bm25Rows(Retrieval.queryBm25Index(spark, freshDir, terms, k = 10))
     assert(merged == fresh,
@@ -120,7 +123,8 @@ class TombstoneSpec extends SparkSpec {
   test("BM25 gates cover the many-query, QL, and phrase paths pre-merge") {
     val dir = tmp("ts_paths")
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     Tombstones.add(dead.toDF("doc_id"), dir)
     val qdf = Seq((1L, Seq("spark", "rare")), (2L, Seq("join"))).toDF("query_id", "terms")
     val many = Retrieval.queryBm25IndexMany(spark, dir, qdf, k = 10)
@@ -143,23 +147,25 @@ class TombstoneSpec extends SparkSpec {
        "document; merged chunk index ≡ fresh chunk build without it") {
     val dir = tmp("ts_chunk")
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildChunkBm25Index(docs, col("doc_id"), col("text"), dir,
-      size = 3, stride = 2)
+    Index.build(Index.Bm25Spec(Index.Chunks(3, 2)),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     Tombstones.add(Seq(3L).toDF("doc_id"), dir)
     val gated = Retrieval.lexical(spark, Lexical(dir), Seq("join"), 20)
       .select("doc_id").as[Long].collect().toSet
     assert(!gated.contains(3L))
-    Retrieval.compactChunkBm25Index(spark, dir)
+    Index.compact(spark, dir)
     val freshDir = tmp("ts_chunk_fresh")
-    Retrieval.buildChunkBm25Index(docs.filter(col("doc_id") =!= 3L),
-      col("doc_id"), col("text"), freshDir, size = 3, stride = 2)
+    Index.build(Index.Bm25Spec(Index.Chunks(3, 2)),
+      Index.Text(docs.filter(col("doc_id") =!= 3L), col("doc_id"),
+        col("text")), freshDir)
     def rowsOf(d: String) =
       Retrieval.lexical(spark, Lexical(d), Seq("join", "spark"), 20)
         .collect().map(_.toSeq).toSeq
     assert(rowsOf(dir) == rowsOf(freshDir))
     // appends still work after the merge (grid re-stamped)
-    Retrieval.appendToChunkBm25Index(Seq((30L, "join spark fresh"))
-      .toDF("doc_id", "text"), col("doc_id"), col("text"), dir)
+    Index.append(Index.Text(Seq((30L, "join spark fresh"))
+      .toDF("doc_id", "text"), col("doc_id"),
+        col("text")), dir)
   }
 
   test("crashed tombstone merge (postings dropped, stats not) heals via " +
@@ -167,7 +173,8 @@ class TombstoneSpec extends SparkSpec {
        "non-tombstoned removal is NOT subtracted") {
     val dir = tmp("ts_crash")
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir)
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     Tombstones.add(dead.toDF("doc_id"), dir)
     // simulate the crash: the postings rewrite landed, the stats commit
     // did not (exactly compactBm25Index's first half)
@@ -177,7 +184,7 @@ class TombstoneSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Retrieval.queryBm25Index(spark, dir, terms, 5)
     }
-    Retrieval.repairBm25Index(spark, dir)
+    Index.repair(spark, dir)
     val st = Versioned.read(spark, s"$dir/stats").head
     // corrected stats: 4 surviving docs, their true token lengths
     val want = corpus.filterNot(c => dead.contains(c._1))
@@ -195,7 +202,7 @@ class TombstoneSpec extends SparkSpec {
     val q = e.filter(col("id") >= 38)
     val deadV = Seq(1L, 5L, 9L)
     val dir = tmp("ts_ivf")
-    Similarity.buildIvfIndex(e, dir, nCentroids = 8)
+    Index.build(Index.IvfSpec(nCentroids = 8), Index.Vectors(e), dir)
     Tombstones.add(deadV.toDF("doc_id"), dir)
     val gated = Similarity.queryIvfIndex(spark, dir, q, k = 8, nProbes = 8)
     assert((gated.select("cand_id").as[Long].collect().toSet & deadV.toSet).isEmpty)
@@ -204,7 +211,7 @@ class TombstoneSpec extends SparkSpec {
       .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
     assert(gated.select("query_id", "cand_id").as[(Long, Long)].collect().toSet
       == brute, "exhaustive gated probe must equal filtered brute force")
-    Similarity.compactIvfIndex(spark, dir)
+    Index.compact(spark, dir)
     assert(Versioned.read(spark, s"$dir/assignment")
       .filter(col("cand_id").isInCollection(deadV)).isEmpty)
     // post-merge probe unchanged vs the gated one
@@ -222,8 +229,9 @@ class TombstoneSpec extends SparkSpec {
     val q = e.filter(col("id") >= 46).select("id", "vec")
     val deadV = Seq(0L, 2L, 4L)
     val dir = tmp("ts_pq")
-    Similarity.buildIvfPqIndex(e, dir, nCentroids = 6, m = 4, ks = 8,
-      dim = 16, metaCols = Seq("lang"))
+    Index.build(Index.PqSpec(nCentroids = 6, m = 4, ks = 8, dim = 16,
+      metaCols = Seq("lang")),
+      Index.Vectors(e), dir)
     Tombstones.add(deadV.toDF("doc_id"), dir)
     val adc = Similarity.probe(spark, Pq(dir, None, nProbes = 6, m = 4, ks = 8,
       dim = 16), q, 10)
@@ -233,7 +241,7 @@ class TombstoneSpec extends SparkSpec {
     assert((rr.select("cand_id").as[Long].collect().toSet & deadV.toSet).isEmpty)
 
     // compaction drops every table and keeps the vectors' meta column
-    Similarity.compactIvfIndex(spark, dir)
+    Index.compact(spark, dir)
     val vec = Versioned.read(spark, s"$dir/vectors")
     assert(vec.columns.contains("lang"),
       "compaction must not strip baked metadata from the vectors table")
@@ -246,9 +254,8 @@ class TombstoneSpec extends SparkSpec {
     val f = Similarity.probe(spark, Pq(dir, None, nProbes = 6, m = 4, ks = 8,
       dim = 16), q, 5, Similarity.Where(col("lang") === "en"))
     assert(f.count() > 0)
-    Similarity.appendToIvfPqIndex(
-      Seq((100L, Seq.fill(16)(0.5f), "en")).toDF("id", "vec", "lang"),
-      dir, m = 4, dim = 16)
+    Index.append(Index.Vectors(Seq((100L, Seq.fill(16)(0.5f),
+      "en")).toDF("id", "vec", "lang")), dir)
 
     // crashed drop: vectors rewritten minus a NEW tombstone, rest not
     Tombstones.add(Seq(6L).toDF("doc_id"), dir)
@@ -258,7 +265,7 @@ class TombstoneSpec extends SparkSpec {
     Versioned.overwritePartitioned(
       cur.withColumn("vec_part", pmod(col("cand_id"), lit(4L))),
       s"$dir/vectors", "vec_part")
-    Similarity.repairIvfIndex(spark, dir)
+    Index.repair(spark, dir)
     val vs = Seq("vectors", "centroids", "codebook", "assignment")
       .map(t => Versioned.latestVersion(spark, s"$dir/$t"))
     assert(vs.distinct.size == 1, s"repair left lockstep broken: $vs")
@@ -271,14 +278,15 @@ class TombstoneSpec extends SparkSpec {
        "compaction drops its row") {
     val dir = tmp("ts_fwd")
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"), dir)
+    Index.build(Index.ForwardSpec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     Tombstones.add(Seq(1L).toDF("doc_id"), dir)
     val packed = Seq((0L, 1L, 1L, 2L, 1.0), (0L, 2L, 1L, 2L, 0.5))
       .toDF("query_id", "doc_id", "span_start", "span_end", "score")
     val got = Retrieval.contextTextsIndexed(spark, packed, dir)
       .select("doc_id").as[Long].collect().toSet
     assert(got == Set(2L))
-    Retrieval.compactForwardIndex(spark, dir)
+    Index.compact(spark, dir)
     assert(Versioned.read(spark, s"$dir/fwd").filter(col("doc_id") === 1L).isEmpty)
   }
 
@@ -314,8 +322,8 @@ class TombstoneSpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val dir = tmp("ts_dpp")
-    Similarity.buildIvfIndex(e, dir, nCentroids = 8,
-      assignmentLayout = "partition")
+    Index.build(Index.IvfSpec(nCentroids = 8, layout = "partition"),
+      Index.Vectors(e), dir)
     Tombstones.add(Seq(3L, 7L).toDF("doc_id"), dir)
     val probe = Similarity.queryIvfIndex(spark, dir,
       e.filter(col("id") < 2), 5, nProbes = 3)
@@ -328,7 +336,8 @@ class TombstoneSpec extends SparkSpec {
 
     val fdir = tmp("ts_dppf")
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    Retrieval.buildForwardIndex(docs, col("doc_id"), col("text"), fdir)
+    Index.build(Index.ForwardSpec(),
+      Index.Text(docs, col("doc_id"), col("text")), fdir)
     Tombstones.add(Seq(3L).toDF("doc_id"), fdir)
     val packed = Seq((0L, 1L, 1L, 2L, 1.0), (0L, 5L, 1L, 2L, 0.5))
       .toDF("query_id", "doc_id", "span_start", "span_end", "score")
@@ -403,8 +412,8 @@ class TombstoneSpec extends SparkSpec {
        "still prune") {
     val dir = tmp("ts_vac")
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir,
-      layout = "partition", nPartDirs = 4)
+    Index.build(Index.Bm25Spec(layout = "partition", nPartDirs = 4),
+      Index.Text(docs, col("doc_id"), col("text")), dir)
     // several layout epochs: each compaction re-stamps tok_parts@v
     (1 to 3).foreach { i =>
       Retrieval.appendToBm25Index(
@@ -433,7 +442,8 @@ class TombstoneSpec extends SparkSpec {
        "version can serve and every retained version stays gated") {
     val dir = tmp("ts_audit")
     val docs = corpus.toDF("doc_id", "text")
-    Retrieval.buildBm25Index(docs, col("doc_id"), col("text"), dir) // v0
+    Index.build(Index.Bm25Spec(),
+      Index.Text(docs, col("doc_id"), col("text")), dir) // v0
     // legacy (pre-audit) tombstone table → first audited add migrates it
     Versioned.overwrite(Seq(99L).toDF("doc_id"), Tombstones.table(dir))
     Tombstones.add(dead.toDF("doc_id"), dir, reason = "dmca",
