@@ -1068,7 +1068,7 @@ object PipelineQueries {
                          (build: String => Unit): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), tag,
-      "model", "priors")(build)
+      Corpus.NbModel)(build)
 
   def q132NbModelScore(spark: SparkSession, dir: String): DataFrame = {
     val docs  = Tables.documents(spark, dir)
@@ -1502,7 +1502,7 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bpe_m6",
-      "merges", "vocab")(
+      Bpe.Model)(
       Bpe.buildBpeModel(docs, col("text"), k = bpeK, _): Unit)
   }
 
@@ -1542,7 +1542,7 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bpe_byte1",
-      "merges", "vocab")(
+      Bpe.Model)(
       Bpe.buildBpeModel(docs, col("text"), k = bpeK, _,
         byteLevel = true): Unit)
   }

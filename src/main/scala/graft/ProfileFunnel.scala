@@ -30,7 +30,7 @@ object ProfileFunnel {
     val train = docs.filter(Corpus.hashBucket(col("doc_id")) < 90)
     val mdl = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "nb_lang_512",
-      "model", "priors")(
+      Corpus.NbModel)(
       Corpus.buildNbModel(train, col("lang"), col("text"), _, buckets = 512): Unit)
     t("nb_score_full")(Corpus.scoreWithNbModel(spark, mdl, docs,
       col("doc_id"), col("text")))

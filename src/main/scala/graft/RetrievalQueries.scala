@@ -66,7 +66,7 @@ object RetrievalQueries {
   private def cachedBm25(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25q",
-      "postings", "stats")(
+      Index.Bm25.artifact)(
       Index.build(Index.Bm25Spec(),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -222,7 +222,7 @@ object RetrievalQueries {
   private def cachedBm25Meta(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25metaq",
-      "postings", "stats")(
+      Index.Bm25.artifact)(
       Index.build(Index.Bm25Spec(metaCols = Seq("lang")),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -272,7 +272,7 @@ object RetrievalQueries {
   private def cachedBm25Takedown(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25tdq3",
-      "postings", "stats") { d =>
+      Index.Bm25.artifact) { d =>
       val docs = Tables.documents(spark, dir)
       Index.build(Index.Bm25Spec(),
         Index.Text(docs, col("doc_id"), col("text")), d): Unit
@@ -338,7 +338,7 @@ object RetrievalQueries {
   private def cachedBm25Supersede(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25supq",
-      "postings", "stats") { d =>
+      Index.Bm25.artifact) { d =>
       val docs = Tables.documents(spark, dir)
       Index.build(Index.Bm25Spec(),
         Index.Text(docs, col("doc_id"), col("text")), d): Unit
@@ -401,7 +401,7 @@ object RetrievalQueries {
   private def cachedSupersedeWork(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "supworkq",
-      "lineage", "lineage") { w =>
+      graft.operators.Supersede.Lineage) { w =>
       val docs = Tables.documents(spark, dir)
       Index.build(Index.ForwardSpec(),
         Index.Text(docs, col("doc_id"), col("text")), s"$w/fwd"): Unit
@@ -499,7 +499,7 @@ object RetrievalQueries {
   def q190ChunkFacets(spark: SparkSession, dir: String): DataFrame = {
     val d = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25chunklang",
-      "postings", "stats")(
+      Index.Bm25.artifact)(
       Index.build(Index.Bm25Spec(Index.Chunks(32, 16), metaCols = Seq("lang")),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -670,7 +670,7 @@ object RetrievalQueries {
       .select(col("vec_id").as("query_id"), col("embedding").as("vec"))
     val ivfLang = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), "ivf_c16_l2lang",
-      "centroids", "assignment")(d => {
+      Index.Ivf.artifact)(d => {
         // the gate column rides in from the documents table by id (the
         // corpus' embeddings are 1:1 with its documents); baked once at
         // build, joined never again at query time
@@ -868,7 +868,7 @@ object RetrievalQueries {
   private def cachedChunkBm25(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25chunkq",
-      "postings", "stats")(
+      Index.Bm25.artifact)(
       Index.build(Index.Bm25Spec(Index.Chunks(32, 16)),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -892,7 +892,7 @@ object RetrievalQueries {
   private def cachedChunkIvf(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "chunkivfq",
-      "centroids", "assignment")(
+      Index.Ivf.artifact)(
       Index.build(Index.IvfSpec(Index.Chunks(32, 16)),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -932,7 +932,7 @@ object RetrievalQueries {
   private def cachedChunkPq(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "chunkpq2",
-      "centroids", "codebook", "assignment", "vectors")(
+      Index.Pq.artifact)(
       Index.build(Index.PqSpec(Index.Chunks(32, 16)),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -1425,13 +1425,13 @@ object RetrievalQueries {
   def q187ChunkHybridFiltered(spark: SparkSession, dir: String): DataFrame = {
     val bm = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25chunklang",
-      "postings", "stats")(
+      Index.Bm25.artifact)(
       Index.build(Index.Bm25Spec(Index.Chunks(32, 16), metaCols = Seq("lang")),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
     val iv = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "chunkivflang",
-      "centroids", "assignment")(
+      Index.Ivf.artifact)(
       Index.build(Index.IvfSpec(Index.Chunks(32, 16), metaCols = Seq("lang")),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -1511,7 +1511,7 @@ object RetrievalQueries {
   // Same rows ⇒ same oracle SQL as before the index existed.
   private def cachedForward(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
-      new java.io.File(dir, "documents.parquet"), "fwdq", "fwd", "fwd")(
+      new java.io.File(dir, "documents.parquet"), "fwdq", Index.Forward.artifact)(
       Index.build(Index.ForwardSpec(),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -1908,7 +1908,7 @@ object RetrievalQueries {
   private def cachedBm25Part(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25partq",
-      "postings", "stats")(
+      Index.Bm25.artifact)(
       Index.build(Index.Bm25Spec(layout = "partition"),
         Index.Text(Tables.documents(spark, dir), col("doc_id"), col("text")),
           _): Unit)
@@ -1937,7 +1937,7 @@ object RetrievalQueries {
   private def cachedBm25Stopped(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "documents.parquet"), "bm25stopq",
-      "postings", "stats")(d => {
+      Index.Bm25.artifact)(d => {
       val docs = Tables.documents(spark, dir)
       // the stop set is vocabulary-bounded and tiny (df > half the
       // corpus); collecting it is build-cadence wiring, not a query path

@@ -697,7 +697,7 @@ object SimQueries {
                          (build: String => Unit): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), tag,
-      "centroids", "assignment")(build)
+      Index.Ivf.artifact)(build)
 
   /** The shared sf-dir-keyed q116 IVF artifact (16 centroids, 2 Lloyd
     * passes) — also the semantic arm of the q166 hybrid fusion.
@@ -990,7 +990,7 @@ object SimQueries {
   private[graft] def cachedIvfPqIndex(spark: SparkSession, dir: String): String =
     graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), "ivfpq3_c16b",
-      "centroids", "codebook", "assignment", "vectors")(
+      Index.Pq.artifact)(
       Index.build(Index.PqSpec(nCentroids = 16),
         Index.Vectors(embs(spark, dir)), _): Unit)
 
@@ -1107,7 +1107,7 @@ object SimQueries {
     val e = embs(spark, dir)
     val idx = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), "ivfpqr2_c16b",
-      "centroids", "codebook", "assignment", "vectors")(
+      Index.Pq.artifact)(
       Index.build(Index.PqSpec(nCentroids = 16, residual = true),
         Index.Vectors(e), _): Unit)
     Similarity.probe(spark, Pq(idx, None, residual = true),
@@ -1287,7 +1287,7 @@ object SimQueries {
     val e = embs(spark, dir)
     val idx = graft.sources.CachedArtifact.resolve(spark,
       new java.io.File(dir, "embeddings.parquet"), "ivf_cnt1",
-      "centroids", "assignment", "gatecounts") { d =>
+      Similarity.GateCounted) { d =>
       Index.build(Index.IvfSpec(nCentroids = 16, metaCols = Seq("label")),
         Index.Vectors(e), d): Unit
       Similarity.refreshGateCounts(spark, d, Seq("label")): Unit

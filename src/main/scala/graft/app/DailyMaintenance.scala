@@ -2,8 +2,8 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Corpus, Index, Retrieval, Stamp,
-  Tombstones}
+import graft.operators.{Bpe, Curation, Corpus, Index, Retrieval, Stamp,
+  Supersede, Tombstones}
 import graft.sources.Versioned
 
 /** The COMPOSED daily maintenance job (SURVEY §8, round 10) — the full
@@ -90,18 +90,26 @@ object DailyMaintenance {
   private val CompactOrder =
     Indexes.sortBy(_.spec.isInstanceOf[Index.ForwardSpec])
 
+  /** A maintained state or model artifact: its dir under the work dir
+    * and its declaration (the indexes are [[Indexes]]). */
+  private final case class Held(dir: String, artifact: Versioned.Artifact)
+
+  private val State = Held("state", Curation.State)
+  private val Signals = Held("signals", Corpus.SignalState)
+  private val BpeModel = Held("bpe_model", Bpe.Model)
+  private val NbModel = Held("nb_model", Corpus.NbModel)
+
   /** Every Versioned table the daily job maintains, relative to the
-    * work dir — the vacuum stage's worklist. Includes the scheduler's
-    * own runs/claims tables (they accrue one tiny commit per
-    * (stage, attempt) / per tick forever otherwise) and the model
-    * artifacts the retrain stages version.
+    * work dir — the vacuum stage's worklist: every declared artifact's
+    * tables, the signal state's deletion claims, the supersede lineage,
+    * and the scheduler's own runs/claims tables (they accrue one tiny
+    * commit per (stage, attempt) / per tick forever otherwise).
     */
   def maintainedTables(work: String): Seq[String] =
-    (Seq("state/candidates", "state/pairs", "signals/nd", "signals/c1",
-      "signals/c12", "signals/vsz", "signals/dels") ++
-      CompactOrder.flatMap(m => m.family.tables.map(t => s"${m.dir}/$t")) ++
-      Seq("bpe_model/merges", "bpe_model/vocab", "nb_model/model",
-        "nb_model/priors", "lineage", "runs", "claims"))
+    ((Seq(State, Signals) ++ CompactOrder.map(m => Held(m.dir, m.family.artifact)) ++
+      Seq(BpeModel, NbModel)).flatMap(h => h.artifact.tables.map(t => s"${h.dir}/$t")) ++
+      Seq(s"${Signals.dir}/dels") ++ Supersede.Lineage.tables ++
+      Seq("runs", "claims"))
       .map(t => s"$work/$t") ++
       indexDirs(work).map(d => s"$d/${Tombstones.TableName}")
 
@@ -144,6 +152,8 @@ object DailyMaintenance {
              supersede: Option[DataFrame] = None): Seq[(String, () => Unit)] = {
     val retrainDue = (boundary / intervalMs) % retrainEvery == 0
     def dirOf(m: Maintained) = s"$work/${m.dir}"
+    def at(h: Held) = s"$work/${h.dir}"
+    def hasSignals = Versioned.exists(spark, at(Signals), Signals.artifact)
     def inputOf(m: Maintained): Index.Input = m.spec match {
       case _: Index.IvfSpec | _: Index.PqSpec if m.spec.grain == Index.Docs =>
         Index.Vectors(vecs)
@@ -247,14 +257,14 @@ object DailyMaintenance {
       .map(_._1)
     Seq(
     "curate" -> (() =>
-      Curation.curateBatch(batch, s"$work/state"): Unit),
+      Curation.curateBatch(batch, at(State)): Unit),
     "signal_state" -> (() => {
-      if (!Versioned.exists(spark, s"$work/signals/nd"))
+      if (!hasSignals)
         Corpus.buildSignalState(batch, col("doc_id"), col("text"),
-          s"$work/signals"): Unit
+          at(Signals)): Unit
       else
         Corpus.appendSignalState(batch, col("doc_id"), col("text"),
-          s"$work/signals"): Unit
+          at(Signals)): Unit
     })) ++
     Indexes.map(m => s"${m.stem}_append" -> appendStage(m)) ++ Seq(
     // SUPERSEDE — the day's recrawl list: (old_id, new_id) pairs whose
@@ -295,14 +305,13 @@ object DailyMaintenance {
         Tombstones.addAll(td.select((col("doc_id") +: auditCols): _*),
           live, reason = "takedown", requestedAt = boundary,
           boundary = boundary)
-        if (Versioned.exists(spark, s"$work/signals/nd"))
+        if (hasSignals)
           Corpus.deleteFromSignalState(td, col("doc_id"), col("text"),
-            s"$work/signals",
-            batchId = Some(s"takedown:$boundary")): Unit
+            at(Signals), batchId = Some(s"takedown:$boundary")): Unit
         // the curation state persists doc-derived data (norm_fp + the
         // shingle-hash set) — drop it too; idempotent, and re-firing
         // every boundary also completes a previously-crashed drop
-        Curation.deleteFromState(spark, s"$work/state",
+        Curation.deleteFromState(spark, at(State),
           td.select(col("doc_id"))): Unit
       }
     }),
@@ -312,17 +321,19 @@ object DailyMaintenance {
     // OVERWRITE version; consumers that pinned `modelAsOf` reproduce
     // bit-for-bit across it (SchedulerSpec proves an old pinned encode
     // survives a retrain unchanged). Between firings the stage is a
-    // no-op. Day index = boundary / interval, so a resumed boundary
-    // makes the same decision it would have made on time.
+    // no-op unless the model is absent or not intact: a retrain that
+    // crashed between its two commits is re-aligned by the next one
+    // (the builds commit through Versioned.rewrite). Day index =
+    // boundary / interval, so a resumed boundary makes the same
+    // decision it would have made on time.
     "bpe_retrain" -> (() => {
-      if (retrainDue || !Versioned.exists(spark, s"$work/bpe_model/merges"))
-        graft.operators.Bpe.buildBpeModel(batch, col("text"), k = 40,
-          s"$work/bpe_model"): Unit
+      if (retrainDue || !Versioned.intact(spark, at(BpeModel), BpeModel.artifact))
+        Bpe.buildBpeModel(batch, col("text"), k = 40, at(BpeModel)): Unit
     }),
     "nb_retrain" -> (() => {
-      if (retrainDue || !Versioned.exists(spark, s"$work/nb_model/model"))
+      if (retrainDue || !Versioned.intact(spark, at(NbModel), NbModel.artifact))
         Corpus.buildNbModel(batch, col("lang"), col("text"),
-          s"$work/nb_model"): Unit
+          at(NbModel)): Unit
     })) ++
     Indexes.filter(_.retrains).map(m => s"${m.stem}_rebuild" -> rebuildStage(m)) ++
     CompactOrder.map(m => s"${m.stem}_compact" -> compactStage(m)) :+ (

@@ -294,7 +294,7 @@ object Scheduler {
     * row) but never covered is resumed FIRST, even after later
     * intervals elapse — its early stages already hold its batch, so
     * abandoning it would leave the composed artifacts permanently
-    * diverged (some with day N, some without) with no error anywhere.
+    * inconsistent (some with day N, some without) with no error anywhere.
     * catchup=false's gap collapse applies only to boundaries never
     * touched. One boundary per tick: after a resume, the next interval
     * waits for the next tick.

@@ -343,15 +343,19 @@ object Bpe {
     // read (the pqResGuard discipline): encoding byte-level merges over
     // char-level segmentations (or vice versa) produces plausible-but-
     // wrong output silently — ASCII merges still fire, unknown toks
-    // vanish in the vocab join — so a flag mismatch must fail loudly
-    val vm = graft.sources.Versioned.overwrite(
-      staged.withColumn("byte_level", lit(byteLevel)), s"$modelDir/merges")
-    val vv = graft.sources.Versioned.overwrite(
-      vocab(docs, text, staged, byteLevel), s"$modelDir/vocab")
-    require(vm == vv, s"BPE model tables diverged: merges v$vm vs vocab " +
-      s"v$vv (was $modelDir written by something other than buildBpeModel?)")
-    vm
+    // vanish in the vocab join — so a flag mismatch must fail loudly.
+    // A retrain over a dir a crashed prior retrain left skewed heals in
+    // the commit rule ([[graft.sources.Versioned.rewrite]]).
+    val frames = Seq(staged.withColumn("byte_level", lit(byteLevel)),
+      vocab(docs, text, staged, byteLevel))
+    graft.sources.Versioned.rewrite(docs.sparkSession, modelDir, Model)(
+      graft.sources.Versioned.overwriteAt(modelDir, Model, frames, _): Unit)
   }
+
+  /** The persisted tokenizer: merges, then vocab, in lockstep. */
+  val Model: graft.sources.Versioned.Artifact = graft.sources.Versioned
+    .Artifact("BPE model", Seq("merges", "vocab"), "rerun buildBpeModel " +
+      "(the daily job's next bpe_retrain does) to re-align the tables")
 
   /** In-plan alphabet guard: reading a model whose persisted
     * `byte_level` differs from the caller's flag fails loudly instead
@@ -372,11 +376,10 @@ object Bpe {
       .drop("byte_level")
 
   /** The version a read of the tokenizer at `modelDir` pins
-    * ([[graft.sources.Versioned.lockstep]] over merges + vocab). */
+    * ([[graft.sources.Versioned.lockstep]] over [[Model]]). */
   private[graft] def pinModel(spark: org.apache.spark.sql.SparkSession,
                               modelDir: String, asOf: Option[Long]): Long =
-    graft.sources.Versioned.lockstep(spark, modelDir, Seq("merges", "vocab"),
-      asOf, "rebuild into a fresh directory or pin an intact version with asOf")
+    graft.sources.Versioned.lockstep(spark, modelDir, Model, asOf)
 
   private def readModel(spark: org.apache.spark.sql.SparkSession,
                         modelDir: String, asOf: Option[Long],

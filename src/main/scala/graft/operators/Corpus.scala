@@ -800,29 +800,23 @@ object Corpus {
     * smaller than the corpus. Returns the committed version.
     *
     * Commit protocol (shared with [[appendSignalState]]): the four
-    * tables commit through the compare-and-swap
-    * [[graft.sources.Versioned.overwriteExpecting]], nd first — of two
+    * [[SignalState]] tables commit through the compare-and-swap
+    * [[graft.sources.Versioned.overwriteAt]], nd first — of two
     * concurrent writers, the loser fails at its FIRST table before
     * committing anything, so a race is a clean error, never silently
     * dropped counts. A crash BETWEEN commits leaves the tables out of
-    * lockstep; build REPAIRS such a dir by wiping it and starting
-    * fresh (the state is a derived artifact — pinned readers of the
+    * lockstep; build REPAIRS such a dir by dropping it and starting
+    * fresh at v0 (the state is a derived artifact — pinned readers of the
     * wiped history must rebuild, which the lockstep check tells them).
     */
   def buildSignalState(docs: DataFrame, id: Column, text: Column,
       stateDir: String,
       shingler: Column => Column = NearDup.shingleHashes3Inst): Long = {
+    import graft.sources.Versioned
     val spark = docs.sparkSession
-    val latests = signalStateTables.map(t =>
-      try Some(graft.sources.Versioned.latestVersion(spark, s"$stateDir/$t"))
-      catch { case _: Exception => None })
-    val wedged = latests.exists(_.isDefined) &&
-      (latests.exists(_.isEmpty) || latests.flatten.distinct.size > 1)
-    if (wedged) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stateDir)): Unit
-    }
-    val expected =
-      if (wedged) 0L else latests.head.map(_ + 1).getOrElse(0L)
+    if (Versioned.exists(spark, stateDir, SignalState) &&
+        !Versioned.intact(spark, stateDir, SignalState))
+      Versioned.drop(spark, stateDir)
 
     val nd = ngramDocCounts(shingleInstances(docs, id, text, shingler))
     // LM model in [[lmScore]]'s hashed key space. The base is STAGED:
@@ -832,22 +826,14 @@ object Corpus {
     val (c1raw, c12) = lmCountTables(base, lmBigrams(base))
     val c1 = c1raw.staged // feeds its commit AND vsz
     val vsz = c1.agg(count(lit(1)).as("v"))
-    commitSignalState(stateDir, nd, c1, c12, vsz, expected)
+    Versioned.rewrite(spark, stateDir, SignalState)(
+      Versioned.overwriteAt(stateDir, SignalState, Seq(nd, c1, c12, vsz), _): Unit)
   }
 
-  private val signalStateTables = Seq("nd", "c1", "c12", "vsz")
-
-  /** CAS-commit the four signal-state tables in fixed order at exactly
-    * `expected` (see [[buildSignalState]]'s commit protocol).
-    */
-  private def commitSignalState(stateDir: String, nd: DataFrame, c1: DataFrame,
-      c12: DataFrame, vsz: DataFrame, expected: Long): Long = {
-    import graft.sources.Versioned.overwriteExpecting
-    overwriteExpecting(nd, s"$stateDir/nd", expected): Unit
-    overwriteExpecting(c1, s"$stateDir/c1", expected): Unit
-    overwriteExpecting(c12, s"$stateDir/c12", expected): Unit
-    overwriteExpecting(vsz, s"$stateDir/vsz", expected)
-  }
+  /** The frozen doc-signal lookup tables, in commit order. */
+  val SignalState: graft.sources.Versioned.Artifact = graft.sources.Versioned
+    .Artifact("signal state", Seq("nd", "c1", "c12", "vsz"),
+      "rerun buildSignalState (it repairs the dir)")
 
   /** The latest LOCKSTEP version of a signal-state dir — the one
     * version pinning primitive every reader (batch scorer, stream
@@ -856,9 +842,7 @@ object Corpus {
     */
   def signalStateVersion(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): Long =
-    graft.sources.Versioned.lockstep(spark, stateDir, signalStateTables, None,
-      "rerun buildSignalState (it repairs the dir); pinned asOf reads of " +
-        "intact versions keep working")
+    graft.sources.Versioned.lockstep(spark, stateDir, SignalState, None)
 
   /** Incremental maintenance for [[buildSignalState]] — the daily
     * cadence: merge a NEW batch of documents into the frozen lookup
@@ -878,17 +862,6 @@ object Corpus {
   def appendSignalState(batch: DataFrame, id: Column, text: Column,
       stateDir: String,
       shingler: Column => Column = NearDup.shingleHashes3Inst): Long = {
-    val spark = batch.sparkSession
-    val v0 = signalStateVersion(spark, stateDir)
-    def tbl(t: String) = graft.sources.Versioned.read(spark, s"$stateDir/$t",
-      Some(v0))
-
-    val ndB = ngramDocCounts(shingleInstances(batch, id, text, shingler))
-    // batch-side aggregates through the shared LM helpers; the base is
-    // staged so c1/c12 don't each re-tokenize the batch
-    val base = hashedTokenBase(batch, id, text).staged
-    val (c1B, c12B) = lmCountTables(base, lmBigrams(base))
-
     def merge(state: DataFrame, delta: DataFrame, key: String,
               cnt: String): DataFrame =
       state.withColumnRenamed(cnt, "_old")
@@ -896,17 +869,34 @@ object Corpus {
         .select(col(key),
           (coalesce(col("_old"), lit(0L)) + coalesce(col("_new"), lit(0L)))
             .as(cnt))
+    foldSignalState(batch, id, text, stateDir, shingler,
+      signalStateVersion(batch.sparkSession, stateDir), merge)
+  }
 
-    val nd  = merge(tbl("nd"),  ndB,  "ngram", "nd")
-    // merged c1 feeds its own commit AND the vocab recount — staged so
-    // the full_outer merge join runs once
-    val c1  = merge(tbl("c1"),  c1B,  "tk",    "c1").staged
-    val c12 = merge(tbl("c12"), c12B, "ngk",   "c12")
-    val vsz = c1.agg(count(lit(1)).as("v"))
-    // CAS at v0+1: a concurrent appender that read the same v0 fails
-    // cleanly at the nd commit before touching anything — a lost
-    // update is impossible, not just detectable (see buildSignalState)
-    commitSignalState(stateDir, nd, c1, c12, vsz, v0 + 1)
+  /** Fold a batch's nd/c1/c12 counts into the signal state pinned at `v0`
+    * with `combine` (state, delta, key, count column — add or subtract),
+    * recount the vocabulary off the combined c1, and CAS-commit all four
+    * at v0+1: a concurrent writer that read the same v0 fails cleanly at
+    * the nd commit before touching anything — a lost update is
+    * impossible, not just detectable (see [[buildSignalState]]).
+    */
+  private def foldSignalState(batch: DataFrame, id: Column, text: Column,
+      stateDir: String, shingler: Column => Column, v0: Long,
+      combine: (DataFrame, DataFrame, String, String) => DataFrame): Long = {
+    def fold(t: String, delta: DataFrame, key: String): DataFrame = combine(
+      graft.sources.Versioned.read(batch.sparkSession, s"$stateDir/$t",
+        Some(v0)), delta, key, t)
+    // batch-side aggregates through the shared LM helpers; the base is
+    // staged so c1/c12 don't each re-tokenize the batch
+    val base = hashedTokenBase(batch, id, text).staged
+    val (c1B, c12B) = lmCountTables(base, lmBigrams(base))
+    // the combined c1 feeds its own commit AND the vocab recount —
+    // staged so the full_outer join runs once
+    val c1 = fold("c1", c1B, "tk").staged
+    graft.sources.Versioned.overwriteAt(stateDir, SignalState, Seq(
+      fold("nd", ngramDocCounts(shingleInstances(batch, id, text, shingler)),
+        "ngram"),
+      c1, fold("c12", c12B, "ngk"), c1.agg(count(lit(1)).as("v"))), v0 + 1)
   }
 
   /** DELETE documents from the signal state — the takedown half of the
@@ -971,13 +961,6 @@ object Corpus {
       }
     }
     if (alreadyApplied) return v0
-    def tbl(t: String) = graft.sources.Versioned.read(spark, s"$stateDir/$t",
-      Some(v0))
-
-    val ndB = ngramDocCounts(shingleInstances(deleted, id, text, shingler))
-    val base = hashedTokenBase(deleted, id, text).staged
-    val (c1B, c12B) = lmCountTables(base, lmBigrams(base))
-
     def unmerge(state: DataFrame, delta: DataFrame, key: String,
                 cnt: String): DataFrame =
       state.withColumnRenamed(cnt, "_old")
@@ -996,13 +979,7 @@ object Corpus {
               "drifted since the append; nothing was committed")).isNull,
             col("_old") - coalesce(col("_new"), lit(0L))).as(cnt))
         .filter(col(cnt) > 0)
-
-    val nd  = unmerge(tbl("nd"),  ndB,  "ngram", "nd")
-    val c1  = unmerge(tbl("c1"),  c1B,  "tk",    "c1")
-      .staged // feeds its commit AND the recount
-    val c12 = unmerge(tbl("c12"), c12B, "ngk",   "c12")
-    val vsz = c1.agg(count(lit(1)).as("v"))
-    commitSignalState(stateDir, nd, c1, c12, vsz, v0 + 1)
+    foldSignalState(deleted, id, text, stateDir, shingler, v0, unmerge)
   }
 
   /** The doc-signals sheet ([[graft.PipelineQueries.q136SignalSheet]]'s
@@ -1330,29 +1307,33 @@ object Corpus {
         size(col("bs")).cast("long").as("n_tok"))
   }
 
-  /** Persist an NB model as two Versioned tables committing in
+  /** Persist an NB model as the two [[NbModel]] tables committing in
     * lockstep — train once, score many times, `asOf` time-travels to
     * any historical model version (the [[Similarity]] persisted-index
-    * discipline applied to a classifier). Returns the committed
+    * discipline applied to a classifier). A retrain over a dir a crashed
+    * prior retrain left skewed heals in the commit rule
+    * ([[graft.sources.Versioned.rewrite]]). Returns the committed
     * version.
     */
   def buildNbModel(train: DataFrame, label: Column, text: Column,
                    modelDir: String, buckets: Int = 512): Long = {
     val (model, prior) = nbModelFrames(train, label, text, buckets)
-    val vm = graft.sources.Versioned.overwrite(model, s"$modelDir/model")
-    val vp = graft.sources.Versioned.overwrite(prior, s"$modelDir/priors")
-    require(vm == vp, s"model tables diverged: model v$vm vs priors v$vp " +
-      s"(was $modelDir written by something other than buildNbModel?)")
-    vm
+    graft.sources.Versioned.rewrite(train.sparkSession, modelDir, NbModel)(
+      graft.sources.Versioned.overwriteAt(modelDir, NbModel,
+        Seq(model, prior), _): Unit)
   }
 
+  /** The persisted NB classifier: the model grid, then the priors. */
+  val NbModel: graft.sources.Versioned.Artifact = graft.sources.Versioned
+    .Artifact("NB model", Seq("model", "priors"), "rerun buildNbModel " +
+      "(the daily job's next nb_retrain does) to re-align the tables")
+
   /** The version a read of the NB model at `modelDir` pins
-    * ([[graft.sources.Versioned.lockstep]] over model + priors). */
+    * ([[graft.sources.Versioned.lockstep]] over [[NbModel]]). */
   private[graft] def pinNbModel(spark: org.apache.spark.sql.SparkSession,
                                 modelDir: String,
                                 asOf: Option[Long]): Long =
-    graft.sources.Versioned.lockstep(spark, modelDir, Seq("model", "priors"),
-      asOf, "rebuild into a fresh directory or pin an intact version with asOf")
+    graft.sources.Versioned.lockstep(spark, modelDir, NbModel, asOf)
 
   /** Score against a persisted NB model (optionally a pinned historical
     * version). A scoring run pays the test-corpus pass only — no
@@ -1360,8 +1341,8 @@ object Corpus {
     *
     * Latest-version reads REFUSE an out-of-lockstep pair (a build that
     * crashed between its two commits): scoring a new model grid with
-    * stale priors would be silently wrong. The model dir is a derived
-    * artifact — repair is a rebuild into a fresh directory (pinned
+    * stale priors would be silently wrong. The next [[buildNbModel]] over
+    * the dir — the daily job's `nb_retrain` — re-aligns it (pinned
     * `asOf` reads of intact historical versions keep working).
     */
   def scoreWithNbModel(spark: org.apache.spark.sql.SparkSession,

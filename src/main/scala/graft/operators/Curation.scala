@@ -68,8 +68,14 @@ object Curation {
   val minJaccard = 0.6
   val trainPct = 90
 
-  private def candTable(stateDir: String) = s"$stateDir/candidates"
-  private def pairTable(stateDir: String) = s"$stateDir/pairs"
+  /** The curation state: candidates, then pairs, one commit each per
+    * batch. */
+  val State: Versioned.Artifact = Versioned.Artifact("curation state",
+    Seq("candidates", "pairs"), "rerun curateBatch (its heal completes a " +
+      "crashed batch's pairs)")
+
+  private def candTable(stateDir: String) = s"$stateDir/${State.tables(0)}"
+  private def pairTable(stateDir: String) = s"$stateDir/${State.tables(1)}"
 
   /** Row-local stages f1–f3 (language-ID, quality score, repetition
     * rules) — per-doc predicates, no cross-doc state. Output:
@@ -175,9 +181,8 @@ object Curation {
         .select(col("doc_id").as("id"), col("sh"))))
 
     val vc = Versioned.append(f4B, candTable(stateDir))
-    val vp = Versioned.append(newPairs, pairTable(stateDir))
-    require(vc == vp, s"curation state diverged: candidates v$vc vs pairs v$vp")
-    vc
+    Versioned.append(newPairs, pairTable(stateDir)): Unit
+    Versioned.committed(spark, stateDir, State, vc)
   }
 
   /** TAKEDOWN for the curation state — the [[Tombstones]] discipline's
@@ -230,13 +235,11 @@ object Curation {
       cands.join(broadcast(dead), col("doc_id") === col("__dead"),
         "left_anti"),
       candTable(stateDir))
-    val vp = Versioned.overwrite(
+    Versioned.overwrite(
       prs.join(broadcast(dead), col("doc_a") === col("__dead"), "left_anti")
         .join(broadcast(dead), col("doc_b") === col("__dead"), "left_anti"),
-      pairTable(stateDir))
-    require(vc == vp,
-      s"curation state diverged after delete: candidates v$vc vs pairs v$vp")
-    Some(vc)
+      pairTable(stateDir)): Unit
+    Some(Versioned.committed(spark, stateDir, State, vc))
   }
 
   /** The curated corpus at state version `asOf` (default latest):

@@ -16,8 +16,10 @@ import graft.sources.Versioned
   * stop list and the PQ encode parameters from the dir itself, so there
   * is no way to append with a mismatched grid, modulus or codebook flag.
   * Every verb commits its family's tables in declared order and checks
-  * them back into lockstep ([[Versioned.lockstep]], the read side's one
-  * version rule) before it returns.
+  * them back into lockstep ([[Versioned.committed]], over the read side's
+  * one version rule) before it returns; a build commits through
+  * [[Versioned.rewrite]], so a crash between a prior writer's commits
+  * heals there.
   *
   * A new index kind is a [[Family]] declaration plus its [[Spec]], served
   * by these four verbs — never a new `build*`/`append*` function.
@@ -36,40 +38,42 @@ object Index {
 
   /** An index family, declared once:
     *
-    *  - `tables` in commit order — also its lockstep set (a read pins all
-    *    of them; a declared table missing beside another refuses);
+    *  - `artifact`: its name, its tables in commit order — also its
+    *    lockstep set (a read pins all of them; a declared table missing
+    *    beside another refuses) — and what a refusal of a wedged dir
+    *    tells the operator;
     *  - `layout`: (table, column) of its physical layout — the table the
     *    compaction debt accrues on;
     *  - `stamps`: the sidecars [[repair]] re-stamps after verification;
     *    `grid` names the table a chunk-grain index's grid is stamped on;
     *  - `landing`: (table, key) of the table an append lands FIRST and a
     *    crashed append is completed from — a float or SQ8 repair rolls
-    *    back instead, so those have none;
-    *  - `remedy`: what a refusal of a wedged dir tells the operator.
+    *    back instead, so those have none.
     */
-  final case class Family(name: String, tables: Seq[String],
+  final case class Family(artifact: Versioned.Artifact,
                           layout: (String, String),
                           stamps: Seq[Stamp.Kind[_]], grid: Option[String],
-                          landing: Option[(String, String)],
-                          remedy: String) {
+                          landing: Option[(String, String)]) {
+    def name: String = artifact.name
     def gridKind: Option[Stamp.Kind[(Int, Int)]] = grid.map(Stamp.chunkGrid)
   }
 
-  val Bm25: Family = Family("BM25", Seq("postings", "stats"),
+  val Bm25: Family = Family(Versioned.Artifact("BM25", Seq("postings", "stats"),
+      "run Index.repair (formerly repairBm25Index)"),
     "postings" -> "tok", Seq(Stamp.TokParts, Stamp.StopToks),
-    Some("postings"), Some("postings" -> "doc_id"),
-    "run Index.repair (formerly repairBm25Index)")
-  val Ivf: Family = Family("IVF", Seq("centroids", "assignment"),
-    "assignment" -> "centroid_id", Nil, Some("assignment"), None,
-    "run Index.repair (formerly repairIvfIndex)")
-  val Sq8: Family = Ivf.copy(name = "IVF-SQ8")
-  val Pq: Family = Family("IVF-PQ",
-    Seq("vectors", "centroids", "codebook", "assignment"),
+    Some("postings"), Some("postings" -> "doc_id"))
+  val Ivf: Family = Family(Versioned.Artifact("IVF",
+      Seq("centroids", "assignment"),
+      "run Index.repair (formerly repairIvfIndex)"),
+    "assignment" -> "centroid_id", Nil, Some("assignment"), None)
+  val Sq8: Family = Ivf.copy(artifact = Ivf.artifact.copy(name = "IVF-SQ8"))
+  val Pq: Family = Family(Versioned.Artifact("IVF-PQ",
+      Seq("vectors", "centroids", "codebook", "assignment"), Ivf.artifact.remedy),
     "assignment" -> "centroid_id", Seq(Stamp.VecParts), Some("assignment"),
-    Some("vectors" -> "cand_id"), Ivf.remedy)
-  val Forward: Family = Family("forward", Seq("fwd"), "fwd" -> "doc_part",
-    Seq(Stamp.DocParts), None, None,
-    "rebuild with Index.build (formerly buildForwardIndex)")
+    Some("vectors" -> "cand_id"))
+  val Forward: Family = Family(Versioned.Artifact("forward", Seq("fwd"),
+      "rebuild with Index.build (formerly buildForwardIndex)"),
+    "fwd" -> "doc_part", Seq(Stamp.DocParts), None, None)
 
   /** What to build an index with. The grain is a field; every other
     * field is a build-time choice the dir then records. */
@@ -131,7 +135,7 @@ object Index {
     * (codebook, no vectors) predates the exact re-rank and refuses with
     * the rebuild remedy. */
   private[graft] def tablesFamily(spark: SparkSession, indexDir: String): Family =
-    Detected.find(f => has(spark, indexDir, f.tables.head)) match {
+    Detected.find(f => has(spark, indexDir, f.artifact.tables.head)) match {
       case Some(Ivf) if has(spark, indexDir, "codebook") =>
         throw new IllegalArgumentException(s"$indexDir is a three-table " +
           "IVF-PQ index (no vectors table) — rebuild it with Index.build")
@@ -150,15 +154,12 @@ object Index {
 
   /** True when a first table of any family has committed under `dir`. */
   def exists(spark: SparkSession, indexDir: String): Boolean =
-    Detected.exists(f => has(spark, indexDir, f.tables.head))
+    Detected.exists(f => has(spark, indexDir, f.artifact.tables.head))
 
   /** True when every declared table of the dir's family exists at one
     * latest version — false is the shape [[repair]] heals. */
-  def intact(spark: SparkSession, indexDir: String): Boolean = {
-    val fam = tablesFamily(spark, indexDir)
-    try { Versioned.lockstep(spark, indexDir, fam.tables, None, ""); true }
-    catch { case _: IllegalArgumentException => false }
-  }
+  def intact(spark: SparkSession, indexDir: String): Boolean =
+    Versioned.intact(spark, indexDir, tablesFamily(spark, indexDir).artifact)
 
   /** The grid of a chunk-grain dir, validated ([[Retrieval.chunkGrid]]
     * refuses a stale or corrupt stamp); None at doc grain. */
@@ -166,15 +167,6 @@ object Index {
                      fam: Family): Option[(Int, Int)] =
     fam.gridKind.filter(Stamp.exists(spark, indexDir, _))
       .map(k => Retrieval.chunkGrid(spark, indexDir, k.table))
-
-  /** Every declared table at one version, and that version `v`. */
-  private def committed(spark: SparkSession, indexDir: String, fam: Family,
-                        v: Long): Long = {
-    val at = Versioned.lockstep(spark, indexDir, fam.tables, None, fam.remedy)
-    require(at == v, s"$indexDir ${fam.name} tables landed at v$at, the " +
-      s"writer committed v$v — a concurrent writer interleaved")
-    v
-  }
 
   private def textOf(in: Input, fam: Family): Text = in match {
     case t: Text => t
@@ -197,11 +189,13 @@ object Index {
   // --------------------------------------------------------------- verbs
 
   /** Build (or rebuild) the index at `indexDir` from `in` per `spec`, as
-    * one fresh lockstep overwrite version, then stamp the chunk grid.
-    * With [[Own]] this is the RETRAIN of a float IVF or IVF-PQ index
-    * from its own rows ([[Similarity.ownRows]]: tombstones drop, a prior
-    * crashed rebuild's skew is padded) — pass `recorded(spark, dir)` to
-    * keep every recorded parameter. Returns the committed version.
+    * one fresh lockstep overwrite version through [[Versioned.rewrite]]
+    * (a dir a prior writer left skewed is padded, a crashed first build's
+    * partial tables are dropped), then stamp the chunk grid. With [[Own]]
+    * this is the RETRAIN of a float IVF or IVF-PQ index from its own rows
+    * ([[Similarity.ownRows]]: tombstones drop) — pass
+    * `recorded(spark, dir)` to keep every recorded parameter. Returns the
+    * committed version.
     */
   def build(spec: Spec, in: Input, indexDir: String): Long = {
     val spark = in match {
@@ -210,55 +204,51 @@ object Index {
       case Own => SparkSession.active
     }
     val fam = family(spec)
-    val v = spec match {
-      case s: Bm25Spec =>
-        val t = textOf(in, Bm25)
-        s.grain match {
-          case Docs => Retrieval.bm25Build(t.docs, t.id, t.text, indexDir, s)
-          case Chunks(size, stride) => Retrieval.bm25Build(
-            Retrieval.chunkKeyed(t.docs, t.id, t.text, size, stride, s.metaCols),
-            col("ck"), col("chunk_text"), indexDir, s)
-        }
-      case s: ForwardSpec =>
-        val t = textOf(in, Forward)
-        Retrieval.fwdBuild(t.docs, t.id, t.text, indexDir, s.nPartDirs)
-      case s: Sq8Spec =>
-        Similarity.sq8Build(vecsOf(in, Docs, 0, Nil), indexDir, s)
-      case s: IvfSpec => annBuild(spark, in, indexDir, fam, s.grain, s.dim,
-        s.metaCols)(Similarity.ivfBuild(_, indexDir, s))
-      case s: PqSpec => annBuild(spark, in, indexDir, fam, s.grain, s.dim,
-        s.metaCols)(Similarity.pqBuild(_, indexDir, s))
+    Versioned.rewrite(spark, indexDir, fam.artifact) { v =>
+      spec match {
+        case s: Bm25Spec =>
+          val t = textOf(in, Bm25)
+          s.grain match {
+            case Docs => Retrieval.bm25Build(t.docs, t.id, t.text, indexDir, s, v)
+            case Chunks(size, stride) => Retrieval.bm25Build(
+              Retrieval.chunkKeyed(t.docs, t.id, t.text, size, stride, s.metaCols),
+              col("ck"), col("chunk_text"), indexDir, s, v)
+          }
+        case s: ForwardSpec =>
+          val t = textOf(in, Forward)
+          Retrieval.fwdBuild(t.docs, t.id, t.text, indexDir, s.nPartDirs)
+        case s: Sq8Spec =>
+          Similarity.sq8Build(vecsOf(in, Docs, 0, Nil), indexDir, s)
+        case s: IvfSpec => annBuild(spark, in, indexDir, fam, s.grain, s.dim,
+          s.metaCols)(Similarity.ivfBuild(_, indexDir, s))
+        case s: PqSpec => annBuild(spark, in, indexDir, fam, s.grain, s.dim,
+          s.metaCols)(Similarity.pqBuild(_, indexDir, s))
+      }
+      // the grid AFTER the build commits, stamped with the overwrite it
+      // describes: a build that dies between the two leaves a stamp
+      // mismatch every consumer refuses, never a stale grid silently
+      // mis-chunking the next append
+      spec.grain match {
+        case Chunks(size, stride) =>
+          Stamp.write(spark, indexDir, fam.gridKind.get, (size, stride), v)
+        case Docs => ()
+      }
     }
-    // the grid AFTER the build commits, stamped with the overwrite it
-    // describes: a build that dies between the two leaves a stamp
-    // mismatch every consumer refuses, never a stale grid silently
-    // mis-chunking the next append
-    spec.grain match {
-      case Chunks(size, stride) =>
-        Stamp.write(spark, indexDir, fam.gridKind.get, (size, stride), v)
-      case Docs => ()
-    }
-    committed(spark, indexDir, fam, v)
   }
 
   /** A float IVF or IVF-PQ build over `in`'s rows; over [[Own]], the
-    * retrain, which must land at [[Similarity.ownRows]]' target version
-    * and re-derives a gatecounts sidecar. */
+    * retrain, which re-derives a gatecounts sidecar. */
   private def annBuild(spark: SparkSession, in: Input, indexDir: String,
                        fam: Family, grain: Grain, dim: Int,
-                       metaCols: Seq[String])(body: DataFrame => Long): Long =
+                       metaCols: Seq[String])(body: DataFrame => Long): Unit =
     in match {
       case Own =>
         val own = familyOf(spark, indexDir)
         require(own == fam || own == Sq8, s"$indexDir is a ${own.name} " +
           "index — retrain it with its recorded spec")
-        val (rows, target) = Similarity.ownRows(spark, indexDir, own)
-        val v = body(rows)
-        require(v == target, s"$indexDir rebuild landed at v$v, expected " +
-          s"v$target — a concurrent writer interleaved; verify lockstep")
+        body(Similarity.ownRows(spark, indexDir, own)): Unit
         Similarity.refreshGateCountsIfPresent(spark, indexDir)
-        v
-      case _ => body(vecsOf(in, grain, dim, metaCols))
+      case _ => body(vecsOf(in, grain, dim, metaCols)): Unit
     }
 
   /** Append a batch of NEW documents or vectors (ids previously unseen —
@@ -275,7 +265,7 @@ object Index {
         "an append writes a batch (Index.Text or Index.Vectors)")
     }
     val fam = familyOf(spark, indexDir)
-    Versioned.lockstep(spark, indexDir, fam.tables, None, fam.remedy): Unit
+    Versioned.lockstep(spark, indexDir, fam.artifact, None): Unit
     val grid = gridOf(spark, indexDir, fam)
     val v = fam match {
       case Bm25 =>
@@ -307,7 +297,7 @@ object Index {
         }
         Similarity.annAppend(rows, indexDir, fam)
     }
-    committed(spark, indexDir, fam, v)
+    Versioned.committed(spark, indexDir, fam.artifact, v)
   }
 
   /** Compact the index after a run of appends: re-establish its declared
@@ -326,7 +316,7 @@ object Index {
       case _ => Similarity.annCompact(spark, indexDir, fam)
     }
     grid.foreach(Stamp.write(spark, indexDir, fam.gridKind.get, _, v))
-    committed(spark, indexDir, fam, v)
+    Versioned.committed(spark, indexDir, fam.artifact, v)
   }
 
   /** Heal the dir: restore lockstep after a crash between a writer's

@@ -250,7 +250,8 @@ object Retrieval {
     * cadence refreshes the set.
     */
   private[operators] def bm25Build(docs: DataFrame, id: Column, text: Column,
-                                   indexDir: String, spec: Index.Bm25Spec): Long = {
+                                   indexDir: String, spec: Index.Bm25Spec,
+                                   v: Long): Long = {
     import spec._
     val spark = docs.sparkSession
     val base = docs.select((id.as("doc_id") +:
@@ -267,17 +268,14 @@ object Retrieval {
     // write would otherwise read as UNCAPPED — appends would land stop
     // postings unfiltered onto a filtered base, silent ranking
     // corruption with no repair signal. Every build writes its epoch
-    // marker (empty token list = explicitly uncapped) at the version it
-    // is ABOUT to commit, so the commit can never land without its cap
-    // status on disk; a pre-commit crash leaves only an orphan marker at
-    // a version that does not exist, which the next build overwrites.
+    // marker (empty token list = explicitly uncapped) at the version `v`
+    // the commit rule ([[Versioned.rewrite]]) is ABOUT to commit, so the
+    // commit can never land without its cap status on disk; a pre-commit
+    // crash leaves only an orphan marker at a version that does not
+    // exist, which the next build overwrites.
     val postT = s"$indexDir/postings"
-    val vPred =
-      if (Versioned.exists(spark, postT))
-        Versioned.latestVersion(spark, postT) + 1
-      else 0L
     Stamp.mark(spark, indexDir, Stamp.StopToks,
-      (stopTokens, stopMaxDfRatio), vPred)
+      (stopTokens, stopMaxDfRatio), v)
     val vp = layout match {
       case "bucket" => Versioned.overwriteBucketed(postings,
         postT, "tok", nBuckets)
@@ -422,7 +420,7 @@ object Retrieval {
     catch { case e: IllegalArgumentException =>
       throw new IllegalStateException(s"BM25 stats CAS failed after the " +
         s"batch's postings committed (v$vp) on $indexDir — the postings " +
-        s"are an orphan slice now; ${Index.Bm25.remedy} to fold their " +
+        s"are an orphan slice now; ${Index.Bm25.artifact.remedy} to fold their " +
         "stats in. Do NOT re-append the same batch (its postings would " +
         "land twice).", e)
     }
@@ -469,10 +467,9 @@ object Retrieval {
       // a build died between its postings and stats commits
       val full = statsOf(Versioned.read(spark, postT, Some(vp))
         .select(col("doc_id"), col("dl")).distinct())
-      var v = Versioned.overwrite(full, statT)
-      while (v < vp)
-        v = Versioned.overwrite(Versioned.read(spark, statT, Some(v)), statT)
-      return v
+      Versioned.overwrite(full, statT): Unit
+      Versioned.pad(spark, indexDir, Seq("stats"), vp)
+      return vp
     }
     val vs = Versioned.latestVersion(spark, statT)
     if (vp == vs) return vp
@@ -503,11 +500,9 @@ object Retrieval {
       .unionByName(statsOf(goneDocs).select(
         (-col("n_docs")).as("n_docs"), (-col("sum_dl")).as("sum_dl")))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    var v = Versioned.overwriteExpecting(merged, statT, vs + 1)
-    while (v < vp)
-      v = Versioned.overwriteExpecting(
-        Versioned.read(spark, statT, Some(v)), statT, v + 1)
-    v
+    Versioned.overwriteExpecting(merged, statT, vs + 1): Unit
+    Versioned.pad(spark, indexDir, Seq("stats"), vp)
+    vp
   }
 
   /** Compact the index after a run of appends (the daily-add cadence):
@@ -633,11 +628,8 @@ object Retrieval {
     */
   private[graft] def pinIndex(spark: SparkSession, indexDir: String,
                                asOf: Option[Long] = None): Long =
-    asOf.getOrElse {
-      val fam = Index.tablesFamily(spark, indexDir)
-      Versioned.lockstep(spark, indexDir, fam.tables, None,
-        fam.remedy + ", or pin an intact version with asOf")
-    }
+    asOf.getOrElse(Versioned.lockstep(spark, indexDir,
+      Index.tablesFamily(spark, indexDir).artifact, None))
 
   // ------------------------------------------------ lexical probe request
 
@@ -1791,7 +1783,7 @@ object Retrieval {
     val n = Stamp.read(batch.sparkSession, indexDir, Stamp.DocParts)
       .getOrElse(sys.error(s"$indexDir forward index's " +
         s"${Stamp.DocParts.name} sidecar is absent or stale (a rebuild " +
-        s"crashed between its commit and the stamp) — ${Index.Forward.remedy}"))
+        s"crashed between its commit and the stamp) — ${Index.Forward.artifact.remedy}"))
     Versioned.appendPartitioned(fwdRows(batch, id, text, n), s"$indexDir/fwd",
       "doc_part")
   }

@@ -522,7 +522,7 @@ object Similarity {
     if (fam == Index.Pq) {
       val nVec = Stamp.read(spark, indexDir, Stamp.VecParts).getOrElse(
         sys.error(s"$indexDir vectors table's ${Stamp.VecParts.name} " +
-          s"sidecar is absent or stale — ${fam.remedy}"))
+          s"sidecar is absent or stale — ${fam.artifact.remedy}"))
       Versioned.appendPartitioned(guarded(
         withMeta(c.select(col("cand_id"), col("cv")), batch, meta)
           .withColumn("vec_part", pmod(col("cand_id"), lit(nVec.toLong)))),
@@ -584,10 +584,11 @@ object Similarity {
   private[operators] def annRepair(spark: SparkSession, indexDir: String,
                                    fam: Index.Family): Long = {
     def at(t: String, v: Long) = Versioned.read(spark, s"$indexDir/$t", Some(v))
-    val missing = fam.tables.filterNot(t => Versioned.exists(spark, s"$indexDir/$t"))
+    val tables = fam.artifact.tables
+    val missing = tables.filterNot(t => Versioned.exists(spark, s"$indexDir/$t"))
     require(missing.isEmpty, s"$indexDir has no ${missing.mkString("/")} " +
       "table — a build crashed before its tables landed; rebuild the index")
-    val heads = fam.tables.map(t => t -> Versioned.latestVersion(spark, s"$indexDir/$t"))
+    val heads = tables.map(t => t -> Versioned.latestVersion(spark, s"$indexDir/$t"))
     val va = heads.last._2
     val ahead = heads.init
     if (ahead.forall(_._2 == va)) return va // intact
@@ -607,9 +608,7 @@ object Similarity {
             "rebuild into a fresh directory")
     }
     // lagging tables re-commit their unchanged content
-    def catchUp(): Unit = ahead.filter(_._2 == va).foreach { case (t, v) =>
-      Versioned.overwrite(at(t, v), s"$indexDir/$t"): Unit
-    }
+    def catchUp(): Unit = Versioned.pad(spark, indexDir, ahead.map(_._1), va + 1)
     val emptyAppend = () =>
       appendAssignment(at("assignment", va).limit(0), s"$indexDir/assignment")
     val docX = Retrieval.docKeyExpr(spark, indexDir, col("cand_id"))
@@ -692,7 +691,7 @@ object Similarity {
     // with the corpus. Pending deletes ([[Tombstones]]) drop here too —
     // this is the index family's merge step; centroids/codebook are
     // corpus-level models, untouched until the rebuild cadence.
-    val vs = fam.tables.map {
+    val vs = fam.artifact.tables.map {
       case "vectors" =>
         // every column except the re-derived vec_part survives the
         // rewrite: baked metadata rides the vectors table precisely so
@@ -735,29 +734,23 @@ object Similarity {
     * this is the dial. SQ8 refuses (codes only — the original vectors
     * are gone).
     *
-    * Crash safety: a prior rebuild that died between its overwrites
-    * leaves versions skewed; this pads the lagging tables with
-    * content-identical commits until all sit one below a common target,
-    * the version the rebuild must land at (the pad versions are gap
-    * versions that never existed as consistent sets: pin at or before
-    * the gap, or at the rebuilt head). Returns (rows, target).
+    * Read inside the rebuild's commit rule ([[Versioned.rewrite]]), which
+    * has already padded any skew a prior rebuild that died between its
+    * overwrites left (content-identical commits), so the latest tables
+    * are one consistent set.
     */
   private[operators] def ownRows(spark: SparkSession, indexDir: String,
-                                 fam: Index.Family): (DataFrame, Long) = {
+                                 fam: Index.Family): DataFrame = {
     require(fam != Index.Sq8, s"$indexDir is an SQ8 index — its assignment " +
       "stores codes, not vectors; rebuild from the original corpus with " +
       "Index.build")
-    val vLock = fam.tables.map(t => Versioned.latestVersion(spark,
-      s"$indexDir/$t")).min
     val src = fam.landing.fold("assignment")(_._1)
     val rows = Tombstones.gate(spark, indexDir,
-      Versioned.read(spark, s"$indexDir/$src", Some(vLock)),
+      Versioned.read(spark, s"$indexDir/$src"),
       Retrieval.docKeyExpr(spark, indexDir, col("cand_id")))
-    val meta = assignmentMetaCols(
-      Versioned.read(spark, s"$indexDir/assignment", Some(vLock)))
-    val cand = rows.select((col("cand_id").as("id") +: col("cv").as("vec") +:
+    val meta = assignmentMetaCols(Versioned.read(spark, s"$indexDir/assignment"))
+    rows.select((col("cand_id").as("id") +: col("cv").as("vec") +:
       meta.map(col)): _*)
-    (cand, padToLockstepTarget(spark, indexDir, fam.tables))
   }
 
   /** The build spec an ANN dir records at its last lockstep version:
@@ -767,7 +760,7 @@ object Similarity {
   private[operators] def recordedSpec(spark: SparkSession, indexDir: String,
                                       fam: Index.Family,
                                       grain: Index.Grain): Index.Spec = {
-    val vLock = fam.tables.map(t => Versioned.latestVersion(spark,
+    val vLock = fam.artifact.tables.map(t => Versioned.latestVersion(spark,
       s"$indexDir/$t")).min
     val cents = centRows(spark, indexDir, Some(vLock))
     val dim = cents.head.getSeq[Double](1).size
@@ -794,23 +787,6 @@ object Similarity {
       case l if l.startsWith("part:") => ("partition", 8)
       case _ => ("bucket", 8)
     }
-
-  /** Pad each table with content-identical commits until all sit one
-    * below a common target version, so a multi-table build's overwrites
-    * land in lockstep even after a crashed prior rebuild skewed them.
-    * Pad versions are documented gap versions (never consistent pairs).
-    */
-  private def padToLockstepTarget(spark: SparkSession, indexDir: String,
-                                  tables: Seq[String]): Long = {
-    val target = tables
-      .map(t => Versioned.latestVersion(spark, s"$indexDir/$t")).max + 1
-    tables.foreach { t =>
-      val tab = s"$indexDir/$t"
-      while (Versioned.latestVersion(spark, tab) < target - 1)
-        Versioned.overwriteLike(Versioned.read(spark, tab), tab): Unit
-    }
-    target
-  }
 
   // ------------------------------------------------- ANN probe request
 
@@ -1191,6 +1167,12 @@ object Similarity {
   // probe width in ONE round — the widening loop's re-scans (bounded
   // ≤2× final-round bytes, plus one driver round-trip per doubling)
   // collapse to the final round alone.
+
+  /** A float IVF index together with its `gatecounts` sidecar table
+    * ([[refreshGateCounts]] commits it after the index, at the index's
+    * version) — what a counted-gate artifact is intact only with. */
+  val GateCounted: Versioned.Artifact = Index.Ivf.artifact.copy(
+    name = "IVF + gatecounts", tables = Index.Ivf.artifact.tables :+ "gatecounts")
 
   /** Derive and commit the `gatecounts` sidecar table from the CURRENT
     * assignment: (gate_col, gate_val, centroid_id, n) per categorical

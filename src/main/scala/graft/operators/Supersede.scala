@@ -58,8 +58,14 @@ import graft.sources.Versioned
   */
 object Supersede {
 
+  /** The lineage table under a maintenance work dir, declared as a
+    * one-table artifact: committed LAST by [[supersede]], so its presence
+    * marks a fully-applied supersede. */
+  val Lineage: Versioned.Artifact = Versioned.Artifact("supersede lineage",
+    Seq("lineage"), "rerun supersede (a fully-applied retry commits nothing)")
+
   /** The lineage table's path under a maintenance work dir. */
-  def lineageTable(work: String): String = s"$work/lineage"
+  def lineageTable(work: String): String = s"$work/${Lineage.tables.head}"
 
   /** Apply a batch of (old_id, new_id) supersede pairs at `boundary`.
     * `indexDirs` = every live serving artifact (the takedown list);
@@ -104,7 +110,7 @@ object Supersede {
       requestedAt = boundary, boundary = boundary)
 
     // 2. exactly-once signal-state subtraction off the fwd-index text
-    if (Versioned.exists(spark, s"$work/signals/nd")) {
+    if (Versioned.exists(spark, s"$work/signals", Corpus.SignalState)) {
       val oldDocs = fwd
         .join(broadcast(oldIds), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), array_join(col("toks"), " ").as("text"))
@@ -114,7 +120,7 @@ object Supersede {
 
     // 3. curation state: drop v1's rows and every edge touching it —
     // including the fresh (v1, v2) near-dup edge
-    if (Versioned.exists(spark, s"$work/state/candidates"))
+    if (Versioned.exists(spark, s"$work/state", Curation.State))
       Curation.deleteFromState(spark, s"$work/state", oldIds): Unit
 
     // 4. lineage, committed last: the retry detector for the whole

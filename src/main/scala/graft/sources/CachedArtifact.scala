@@ -2,27 +2,26 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Build-if-absent cache for a derived artifact stored as a PAIR of
-  * [[Versioned]] tables committing in lockstep (an ANN index's
-  * centroids + assignment, an NB model's grid + priors).
+/** Build-if-absent cache for a derived multi-table artifact — one
+  * [[Versioned.Artifact]] declaration (an index family's tables, an NB
+  * model's grid + priors).
   *
   * The cache key is a FINGERPRINT of the source parquet (file names,
   * sizes, mtimes — children folded in name order, so the key is stable
   * across filesystems with unstable directory-listing order), so
   * regenerated testdata at the same path gets a fresh artifact instead
-  * of stale results. A half-completed build (either log missing, or
-  * the two tables' versions out of lockstep after a crash between
-  * commits) is wiped and rebuilt rather than wedging every later run.
+  * of stale results. A half-completed build (a declared table missing,
+  * or the tables out of lockstep after a crash between commits —
+  * [[Versioned.intact]]) is dropped and rebuilt rather than wedging every
+  * later run.
   */
 object CachedArtifact {
 
   /** Returns the artifact directory, building it first if absent or
-    * unhealthy. `subA`/`subB` (+ any `more`) are the Versioned-table
-    * subpaths whose latest versions must all agree for the artifact to
-    * count as healthy (an IVF-PQ index carries three).
+    * not intact (the declared tables of `artifact`, relative to it).
     */
   def resolve(spark: SparkSession, sourceFile: java.io.File, tag: String,
-              subA: String, subB: String, more: String*)(build: String => Unit): String = {
+              artifact: Versioned.Artifact)(build: String => Unit): String = {
     def fp(f: java.io.File): Long =
       if (f.isDirectory)
         f.listFiles.sortBy(_.getName)
@@ -31,12 +30,8 @@ object CachedArtifact {
       else f.lastModified ^ (f.length * 1315423911L)
     val key = java.lang.Long.toHexString(fp(sourceFile))
     val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft_${tag}_$key").getPath
-    val subs = subA +: subB +: more
-    val healthy =
-      try subs.map(s => Versioned.latestVersion(spark, s"$dir/$s")).distinct.size == 1
-      catch { case _: Exception => false }
-    if (!healthy) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)): Unit
+    if (!Versioned.intact(spark, dir, artifact)) {
+      Versioned.drop(spark, dir)
       build(dir)
     }
     dir

@@ -378,24 +378,37 @@ object Versioned {
           "overwritePartitioned with the same column")
     }
     checkAppendLayout()
-    val schemaJson = df.schema.json
     var v = versions(f, table).lastOption.map(_ + 1).getOrElse(0L)
-    val (files, rows, bytes) = stage(df, table, v, layout, writeOptions)
+    val staged = stage(df, table, v, layout, writeOptions)
     var attempts = 0
-    while (!writeString(f, logFile(table, v),
-             render(Commit(v, action, files, schemaJson, layout, rows, bytes)),
-             exclusive = true)) {
+    while (!publish(f, table, v, action, staged, df.schema.json, layout)) {
       attempts += 1
       require(attempts <= maxRetries, s"lost $maxRetries commit races on $table")
       v = versions(f, table).lastOption.map(_ + 1).getOrElse(0L)
       checkAppendLayout()
     }
-    if (v % checkpointInterval == 0 && v > 0) {
+    v
+  }
+
+  /** The commit core [[commit]], [[overwriteExpecting]] and [[tryCommitAt]]
+    * share: write version `v`'s log entry for already-staged files with an
+    * EXCLUSIVE create (of two writers at one version exactly one wins),
+    * then, on a win at a checkpoint version, the consolidated checkpoint.
+    * False when another writer holds `v`.
+    */
+  private def publish(f: FileSystem, table: String, v: Long, action: String,
+                      staged: (Seq[String], Long, Long), schemaJson: String,
+                      layout: String): Boolean = {
+    val (files, rows, bytes) = staged
+    val ok = writeString(f, logFile(table, v),
+      render(Commit(v, action, files, schemaJson, layout, rows, bytes)),
+      exclusive = true)
+    if (ok && v % checkpointInterval == 0 && v > 0) {
       val full = resolve(f, table, Some(v))
       writeString(f, checkpointFile(table, v),
         render(full.copy(action = "checkpoint")), exclusive = false): Unit
     }
-    v
+    ok
   }
 
   /** `writeOptions` pass straight to the parquet writer of THIS
@@ -494,18 +507,10 @@ object Versioned {
       s"stale snapshot on $table: expected to commit v$expected but the " +
         s"table is at v${next - 1} — a concurrent writer advanced it; " +
         "re-read the latest state before retrying")
-    val (files, rows, bytes) = stage(df, table, expected)
-    require(writeString(f, logFile(table, expected),
-        render(Commit(expected, "overwrite", files, df.schema.json,
-          rows = rows, bytes = bytes)),
-        exclusive = true),
+    require(publish(f, table, expected, "overwrite", stage(df, table, expected),
+        df.schema.json, ""),
       s"lost the commit race on $table at v$expected (concurrent writer) — " +
         "re-read the latest state before retrying")
-    if (expected % checkpointInterval == 0 && expected > 0) {
-      val full = resolve(f, table, Some(expected))
-      writeString(f, checkpointFile(table, expected),
-        render(full.copy(action = "checkpoint")), exclusive = false): Unit
-    }
     expected
   }
 
@@ -543,19 +548,9 @@ object Versioned {
     * stagers leave unreferenced data files; [[vacuum]] reclaims them.
     */
   private def tryCommitAt(df: DataFrame, table: String, action: String,
-                          v: Long, layout: String = ""): Boolean = {
-    val f = fs(df.sparkSession, new Path(table))
-    val (files, rows, bytes) = stage(df, table, v, layout)
-    val ok = writeString(f, logFile(table, v),
-      render(Commit(v, action, files, df.schema.json, layout, rows, bytes)),
-      exclusive = true)
-    if (ok && v % checkpointInterval == 0 && v > 0) {
-      val full = resolve(f, table, Some(v))
-      writeString(f, checkpointFile(table, v),
-        render(full.copy(action = "checkpoint")), exclusive = false): Unit
-    }
-    ok
-  }
+                          v: Long, layout: String = ""): Boolean =
+    publish(fs(df.sparkSession, new Path(table)), table, v, action,
+      stage(df, table, v, layout), df.schema.json, layout)
 
   /** Compact the current snapshot into ~`targetFileMB`-sized files as a
     * new "overwrite" version — Delta's OPTIMIZE: the daily-append
@@ -802,45 +797,145 @@ object Versioned {
     vs.last
   }
 
-  /** The read-side LOCKSTEP rule for tables one writer commits together
-    * under `dir`, and the version a read of them pins. A pinned read
-    * names its own version (`asOf`, returned unchecked). A latest read
-    * requires every table of `tables` to exist under `dir` at one shared
-    * latest version: a table missing beside the others means a first
-    * build crashed between its commits, and one table ahead of the
-    * others means a later multi-table commit did — reading the set
-    * anyway would join new rows against stale (or absent) ones. The
-    * refusal names `remedy`. Index, model and signal-state reads, batch
-    * and streaming, pin through here.
+  // ------------------------------------------------- multi-table artifacts
+
+  /** A multi-table artifact, declared once: its `name`, its `tables`
+    * (relative to the artifact's dir) in COMMIT ORDER — the lockstep set
+    * a read pins ([[lockstep]]) and a writer commits ([[rewrite]],
+    * [[overwriteAt]]) — and the `remedy` a refusal of a wedged dir names.
+    * No reader or writer lists an artifact's tables, compares their
+    * versions or pads them by hand: it names its declaration.
     */
-  def lockstep(spark: SparkSession, dir: String, tables: Seq[String],
-               asOf: Option[Long], remedy: => String): Long =
+  final case class Artifact(name: String, tables: Seq[String], remedy: String)
+
+  /** Each declared table of `a` under `dir` with its latest version
+    * (None = never committed). */
+  private def heads(spark: SparkSession, dir: String,
+                    a: Artifact): Seq[(String, Option[Long])] =
+    a.tables.map(t => t -> versions(fs(spark, new Path(dir)), s"$dir/$t").lastOption)
+
+  /** The read-side LOCKSTEP rule, and the version a read of `a` under
+    * `dir` pins. A pinned read names its own version (`asOf`, returned
+    * unchecked). A latest read requires every declared table at one
+    * shared latest version: a table missing beside the others means a
+    * first build crashed between its commits, and one table ahead of the
+    * others means a later multi-table commit did — reading the set anyway
+    * would join new rows against stale (or absent) ones. The refusal
+    * names the artifact's remedy. Index, model and signal-state reads,
+    * batch and streaming, pin through here, and every multi-table writer
+    * ends with it ([[committed]]).
+    */
+  def lockstep(spark: SparkSession, dir: String, a: Artifact,
+               asOf: Option[Long]): Long =
     asOf.getOrElse {
-      val heads = tables.flatMap { t =>
-        val table = s"$dir/$t"
-        versions(fs(spark, new Path(table)), table).lastOption.map(t -> _)
-      }
-      require(heads.nonEmpty,
-        s"$dir holds none of the versioned tables ${tables.mkString(", ")}")
-      val missing = tables.filterNot(heads.map(_._1).contains)
+      val hs = heads(spark, dir, a)
+      val present = hs.collect { case (t, Some(v)) => s"$t v$v" }
+      require(present.nonEmpty,
+        s"$dir holds none of the versioned tables ${a.tables.mkString(", ")}")
+      val remedy = s"${a.remedy}, or pin an intact version with asOf"
+      val missing = hs.collect { case (t, None) => t }
       require(missing.isEmpty, s"$dir tables out of lockstep: " +
-        s"${missing.mkString(", ")} missing beside " +
-        s"${heads.map { case (t, v) => s"$t v$v" }.mkString(", ")} — a " +
-        s"first build crashed between commits; $remedy")
-      require(heads.map(_._2).distinct.size == 1, s"$dir tables out of " +
-        s"lockstep (${heads.map { case (t, v) => s"$t v$v" }.mkString(", ")})" +
-        s" — a build or append crashed between commits; $remedy")
-      heads.head._2
+        s"${missing.mkString(", ")} missing beside ${present.mkString(", ")}" +
+        s" — a first build crashed between commits; $remedy")
+      require(hs.flatMap(_._2).distinct.size == 1, s"$dir tables out of " +
+        s"lockstep (${present.mkString(", ")}) — a build or append crashed " +
+        s"between commits; $remedy")
+      hs.head._2.get
     }
 
-  /** Table history: (version, action, fileCount) ascending. */
-  def history(spark: SparkSession, table: String): Seq[(Long, String, Int)] = {
-    val f = fs(spark, new Path(table))
-    versions(f, table).map { v =>
-      val c = parse(readString(f, logFile(table, v)))
-      (v, c.action, c.add.length)
-    }
+  /** True when every declared table of `a` exists under `dir` at one
+    * latest version — what [[lockstep]] accepts. */
+  def intact(spark: SparkSession, dir: String, a: Artifact): Boolean =
+    PartialFunction.cond(heads(spark, dir, a).map(_._2).distinct) { case Seq(Some(_)) => true }
+
+  /** True when any declared table of `a` has committed under `dir`. */
+  def exists(spark: SparkSession, dir: String, a: Artifact): Boolean =
+    heads(spark, dir, a).exists(_._2.isDefined)
+
+  /** The lockstep check a multi-table writer ends with: every table of
+    * `a` under `dir` at the version `v` it committed. Returns `v`. */
+  def committed(spark: SparkSession, dir: String, a: Artifact, v: Long): Long = {
+    val at = lockstep(spark, dir, a, None)
+    require(at == v, s"$dir ${a.name} tables landed at v$at, the writer " +
+      s"committed v$v — a concurrent writer interleaved")
+    v
   }
+
+  /** The ONE commit rule for a FULL rewrite of `a` under `dir` (a build, a
+    * retrain): `commit` writes every declared table, in declared order, at
+    * the version it is handed, and the rule then checks the set back into
+    * lockstep there ([[committed]]). The version is chosen so that a crash
+    * between a prior writer's commits heals here instead of wedging every
+    * later rewrite:
+    *
+    *  - no declared table exists: v0;
+    *  - every table exists, versions skewed (a rewrite or append crashed
+    *    between its commits): the lagging tables are padded with
+    *    content-identical commits ([[pad]]) and the set commits at max+1.
+    *    The pad versions are gap versions that never existed as a
+    *    consistent set — pin at or before the gap, or at the new head;
+    *  - some tables missing (a FIRST build crashed, so no consistent
+    *    version ever existed): the partial tables are dropped ([[drop]]),
+    *    then v0.
+    *
+    * An intact set commits at latest+1, as a plain overwrite would; the
+    * rule itself reads logs only. Returns the committed version.
+    */
+  def rewrite(spark: SparkSession, dir: String, a: Artifact)
+             (commit: Long => Unit): Long = {
+    val hs = heads(spark, dir, a)
+    val v =
+      if (hs.forall(_._2.isDefined)) {
+        val top = hs.flatMap(_._2).max
+        pad(spark, dir, a.tables, top)
+        top + 1
+      } else {
+        hs.collect { case (t, Some(_)) => drop(spark, s"$dir/$t") }
+        0L
+      }
+    commit(v)
+    committed(spark, dir, a, v)
+  }
+
+  /** Commit `frames` to `a`'s tables under `dir`, in declared order, each
+    * as a compare-and-swap overwrite at exactly `v` ([[overwriteExpecting]]:
+    * of two writers that pinned the same version, the loser fails at the
+    * FIRST table before committing anything), then the lockstep check at
+    * `v`. The frames a read-modify-write writer derived from its pin land
+    * at pin+1; a full rewrite passes this as its [[rewrite]] body.
+    */
+  def overwriteAt(dir: String, a: Artifact, frames: Seq[DataFrame],
+                  v: Long): Long = {
+    require(frames.size == a.tables.size, s"${a.name} commits ${a.tables}")
+    a.tables.zip(frames).foreach(t => overwriteExpecting(t._2, s"$dir/${t._1}", v))
+    committed(frames.head.sparkSession, dir, a, v)
+  }
+
+  /** Pad each of `tables` under `dir` up to version `to` with
+    * content-identical overwrites of its latest snapshot in its declared
+    * layout, each a compare-and-swap at the next version — the catch-up a
+    * full rewrite over a skewed set ([[rewrite]]) and a repair that
+    * re-aligns lagging tables share.
+    */
+  def pad(spark: SparkSession, dir: String, tables: Seq[String], to: Long): Unit =
+    for (t <- tables; table = s"$dir/$t"; f = fs(spark, new Path(table));
+         v <- versions(f, table).last until to)
+      require(tryCommitAt(read(spark, table, Some(v)), table, "overwrite",
+          v + 1, lastOverwriteLayout(f, table, v)),
+        s"lost the commit race on $table at v${v + 1} (concurrent writer)")
+
+  /** Delete `path` — a table, or a whole artifact dir — through its
+    * Hadoop FileSystem (any scheme, `file://` URIs included), and forget
+    * every cached relation under it. */
+  def drop(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    fs(spark, p).delete(p, true): Unit
+    relationCache.keys.filter(_._2.startsWith(path)).foreach(relationCache.remove(_): Unit)
+  }
+
+  /** Table history: (version, action, fileCount) ascending. */
+  def history(spark: SparkSession, table: String): Seq[(Long, String, Int)] =
+    historyStats(spark, table).map(h => (h._1, h._2, h._3))
 
   /** Table history with each commit's own data stats:
     * (version, action, fileCount, rows, bytes) ascending — rows/bytes

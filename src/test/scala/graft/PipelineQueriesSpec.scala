@@ -827,28 +827,34 @@ class PipelineQueriesSpec extends SparkSpec {
     import graft.sources.Versioned
     val docs = Tables.documents(spark, dir)
     val d1 = docs.filter(col("doc_id") < 100)
-    val work = java.nio.file.Files.createTempDirectory("sigstate_safety").toString
-    assert(Corpus.buildSignalState(d1, col("doc_id"), col("text"), work) == 0L)
-    // simulate a crash between the four commits: one table advances alone
-    Versioned.overwrite(Versioned.read(spark, s"$work/nd"), s"$work/nd"): Unit
-    val e1 = intercept[IllegalArgumentException] {
-      Corpus.signalStateVersion(spark, work)
+    val local = java.nio.file.Files.createTempDirectory("sigstate_safety").toString
+    // the same again on a dir named by a file:// URI — the repair's wipe
+    // must reach it through its Hadoop FileSystem
+    val uri = "file://" +
+      java.nio.file.Files.createTempDirectory("sigstate_safety_uri").toString
+    for (work <- Seq(local, uri)) {
+      assert(Corpus.buildSignalState(d1, col("doc_id"), col("text"), work) == 0L)
+      // simulate a crash between the four commits: one table advances alone
+      Versioned.overwrite(Versioned.read(spark, s"$work/nd"), s"$work/nd"): Unit
+      val e1 = intercept[IllegalArgumentException] {
+        Corpus.signalStateVersion(spark, work)
+      }
+      assert(e1.getMessage.contains("lockstep"), "wedge must name the problem")
+      val e2 = intercept[IllegalArgumentException] {
+        Corpus.appendSignalState(d1.limit(1), col("doc_id"), col("text"), work)
+      }
+      assert(e2.getMessage.contains("lockstep"), "append on a wedged dir must refuse")
+      // build REPAIRS: wipes the wedged dir and starts fresh at v0
+      assert(Corpus.buildSignalState(d1, col("doc_id"), col("text"), work) == 0L)
+      assert(Corpus.signalStateVersion(spark, work) == 0L)
+      // CAS primitive: a commit expecting a version the table has moved
+      // past fails instead of retrying onto the next free slot
+      val e3 = intercept[IllegalArgumentException] {
+        Versioned.overwriteExpecting(
+          Versioned.read(spark, s"$work/nd"), s"$work/nd", expected = 5L)
+      }
+      assert(e3.getMessage.contains("stale snapshot"))
     }
-    assert(e1.getMessage.contains("lockstep"), "wedge must name the problem")
-    val e2 = intercept[IllegalArgumentException] {
-      Corpus.appendSignalState(d1.limit(1), col("doc_id"), col("text"), work)
-    }
-    assert(e2.getMessage.contains("lockstep"), "append on a wedged dir must refuse")
-    // build REPAIRS: wipes the wedged dir and starts fresh at v0
-    assert(Corpus.buildSignalState(d1, col("doc_id"), col("text"), work) == 0L)
-    assert(Corpus.signalStateVersion(spark, work) == 0L)
-    // CAS primitive: a commit expecting a version the table has moved
-    // past fails instead of retrying onto the next free slot
-    val e3 = intercept[IllegalArgumentException] {
-      Versioned.overwriteExpecting(
-        Versioned.read(spark, s"$work/nd"), s"$work/nd", expected = 5L)
-    }
-    assert(e3.getMessage.contains("stale snapshot"))
   }
 
   test("q136 signal sheet: one row per doc; columns agree with the standalone signal operators") {

@@ -1102,4 +1102,119 @@ class SchedulerSpec extends SparkSpec {
     assert(named.subsetOf(Set("Index.build", "Index.append", "Index.compact",
       "Index.repair")), s"writers named: ${named.mkString(", ")}")
   }
+
+  test("a model retrain that crashed between its commits heals on the next " +
+      "tick: bpe_retrain and nb_retrain re-align a skewed pair and a " +
+      "crashed first build on their first attempt, and cover the boundary") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.Versioned
+    import graft.operators.{Bpe, Corpus}
+    val batch = Seq(
+      (1L, "the cat sat on the mat with the hat", "en"),
+      (2L, "the dog sat on the log by the bog", "en"),
+      (3L, "a cat and a dog ran to the mat", "en"),
+      (4L, "le chat est sur le tapis de la maison", "fr"),
+      (5L, "le chien est dans la maison de la ville", "fr"),
+      (6L, "la maison est grande et le chat dort", "fr"))
+      .toDF("doc_id", "text", "lang")
+    val models = Set("bpe_retrain", "nb_retrain")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // only the model stages of the daily list, every boundary a retrain
+    def tick(work: String, day: Int) = Scheduler.tickStagesFor(spark, work,
+      b => graft.app.DailyMaintenance.stages(spark, batch, spark.emptyDataFrame,
+          work, boundary = b, intervalMs = Day, retrainEvery = 1)
+        .filter(s => models(s._1)),
+      nowMs = day * Day + 5, intervalMs = Day, retries = 2,
+      retryDelayMs = 1L, sleep = _ => ())
+    def covered(work: String, b: Long) = Versioned.read(spark, s"$work/runs")
+      .filter(col("ok") && col("stage") === Scheduler.CoveredStage &&
+        col("boundary_ms") === b).count() == 1L
+    // a fresh model pair on the same batch: what each healed one must equal
+    val fresh = tmp("graft-models-fresh")
+    Bpe.buildBpeModel(batch, col("text"), k = 40, s"$fresh/bpe_model"): Unit
+    Corpus.buildNbModel(batch, col("lang"), col("text"), s"$fresh/nb_model"): Unit
+    def ids(work: String) = Bpe.encodeIdsWithModel(spark, s"$work/bpe_model",
+        batch, col("doc_id"), col("text"))
+      .select("doc_id", "word_pos", "sym_pos", "tok_id")
+      .as[(Long, Long, Int, Long)].collect().toSeq.sorted
+    def scores(work: String) = Corpus.scoreWithNbModel(spark,
+        s"$work/nb_model", batch, col("doc_id"), col("text"))
+      .select("doc_id", "predicted", "score")
+      .as[(Long, String, Double)].collect().toSeq.sorted
+    def advance(table: String): Unit =
+      Versioned.overwrite(Versioned.read(spark, table), table): Unit
+
+    // a retrain that died after its FIRST table: merges and model one
+    // version ahead of vocab and priors
+    val skewed = tmp("graft-models-skewed")
+    val day9 = tick(skewed, 10)
+    assert(day9.nonEmpty && day9.forall(_._2.last.ok))
+    advance(s"$skewed/bpe_model/merges")
+    advance(s"$skewed/nb_model/model")
+    // a FIRST build that died after its first table: merges v0, no
+    // vocab; model v0, no priors
+    val first = tmp("graft-models-first")
+    Seq("bpe_model/merges", "nb_model/model").foreach { t =>
+      Versioned.overwrite(Versioned.read(spark, s"$fresh/$t"), s"$first/$t"): Unit
+    }
+    for ((work, v) <- Seq(skewed -> 2L, first -> 0L)) {
+      val res = tick(work, 11)
+      assert(res.map(_._1).toSet == models &&
+          res.forall(r => r._2.size == 1 && r._2.head.ok),
+        s"$work: ${res.map(r => r._1 -> r._2.map(_.error))}")
+      assert(covered(work, 10 * Day), s"$work: boundary not covered")
+      assert(Bpe.pinModel(spark, s"$work/bpe_model", None) == v)
+      assert(Corpus.pinNbModel(spark, s"$work/nb_model", None) == v)
+      assert(ids(work) == ids(fresh), "healed tokenizer differs from a fresh one")
+      assert(scores(work) == scores(fresh), "healed NB model differs from a fresh one")
+    }
+  }
+
+  test("multi-table artifacts are declared once: no table list at a pin " +
+      "or cache site, no hand-rolled version check, and DailyMaintenance " +
+      "names no table of a declared artifact") {
+    import graft.operators.{Bpe, Corpus, Curation, Similarity}
+    def under(dir: java.io.File): Seq[java.io.File] = dir.listFiles.toSeq
+      .flatMap(f => if (f.isDirectory) under(f) else Seq(f))
+      .filter(_.getName.endsWith(".scala"))
+    val sources = under(new java.io.File("src/main/scala")).map(f =>
+      f.getPath -> scala.io.Source.fromFile(f, "UTF-8").mkString)
+    // the top-level arguments of every call of `fn` in `src`
+    def calls(src: String, fn: String): Seq[Seq[String]] =
+      (java.util.regex.Pattern.quote(fn) + "\\(").r.findAllMatchIn(src).map { m =>
+        val args = scala.collection.mutable.ArrayBuffer(new StringBuilder)
+        var depth = 1
+        var i = m.end
+        while (depth > 0) {
+          src(i) match {
+            case '(' => depth += 1; args.last += '('
+            case ')' => depth -= 1; if (depth > 0) args.last += ')'
+            case ',' if depth == 1 => args += new StringBuilder
+            case c => args.last += c
+          }
+          i += 1
+        }
+        args.map(_.toString.trim).toSeq
+      }.toSeq
+    // a pin's artifact and a cache's artifact are declarations, never
+    // string literals
+    val offenders = sources.filterNot(_._1.endsWith("sources/Versioned.scala"))
+      .filter { case (_, src) =>
+        calls(src, "Versioned.lockstep").exists(_.lift(2).exists(_.contains('"'))) ||
+          calls(src, "CachedArtifact.resolve").exists(_.drop(3).exists(_.contains('"')))
+      }.map(_._1)
+    assert(offenders.isEmpty, s"table lists at pin/cache sites: $offenders")
+    val diverged = sources.filter(_._2.contains("diverged")).map(_._1)
+    assert(diverged.isEmpty, s"hand-rolled version checks: $diverged")
+    val declared = (Seq(Curation.State, Corpus.SignalState, Bpe.Model,
+      Corpus.NbModel, Similarity.GateCounted) ++
+      Seq(Index.Bm25, Index.Ivf, Index.Pq, Index.Forward).map(_.artifact))
+      .flatMap(_.tables).distinct
+    val daily = sources.collectFirst {
+      case (p, src) if p.endsWith("app/DailyMaintenance.scala") => src }.get
+    val literals = "\"(?:[^\"\\\\]|\\\\.)*\"".r.findAllIn(daily).toSeq
+    val named = for (l <- literals; t <- declared
+      if s"/$t(?![A-Za-z0-9_])".r.findFirstIn(l).nonEmpty) yield l
+    assert(named.isEmpty, s"DailyMaintenance names declared tables: $named")
+  }
 }
