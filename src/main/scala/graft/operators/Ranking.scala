@@ -34,6 +34,17 @@ object Ranking {
   def argmax(df: DataFrame, partitionBy: Seq[Column], measure: Column, tieBreak: Column): DataFrame =
     topPerGroup(df, partitionBy, Seq(measure.desc, tieBreak.asc), 1)
 
+  /** Total order for a SMALL result: `coalesce(1)` then `orderBy`, so
+    * the sort runs in one task and needs no range-sampling job and no
+    * range exchange (a single partition already satisfies any ordering
+    * requirement). Bound it relies on: every caller's input is already
+    * an argmax per group (one row per country / year / age range, after
+    * `WindowGroupLimit`) or a per-year count — a few hundred rows at
+    * most reach the single task. Never use it on a corpus-grain input.
+    */
+  def ordered(df: DataFrame, order: Column*): DataFrame =
+    df.coalesce(1).orderBy(order: _*)
+
   /** Global argmax (A4): single row with the max measure, deterministic
     * tie-break. Planned as TakeOrderedAndProject — no full sort.
     */

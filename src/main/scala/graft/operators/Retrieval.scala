@@ -720,13 +720,22 @@ object Retrieval {
   private def lexTop(spark: SparkSession, req: Lexical,
                      input: Either[Seq[String], DataFrame],
                      k: Int): DataFrame = {
+    val (scored, group) = lexScored(spark, req, input)
+    topOf(scored, group, k)
+  }
+
+  /** The gated (group…, doc_id, n_terms, score) set of a lexical
+    * request, unranked, and its group keys. */
+  private def lexScored(spark: SparkSession, req: Lexical,
+                        input: Either[Seq[String], DataFrame])
+      : (DataFrame, Seq[String]) = {
     val (hits, group) = lexHits(spark, req, input)
     val scored = req.ql match {
       case None => scoreIndexed(spark, req.dir, req.asOf,
         bm25Slice(hits, group, req.predicate), group)
       case Some(mu) => qlScored(spark, req, hits, group, mu)
     }
-    topOf(tombGate(spark, req.dir, scored, "doc_id"), group, k)
+    (tombGate(spark, req.dir, scored, "doc_id"), group)
   }
 
   /** Ranking of a gated (group…, doc_id, n_terms, score) set: the global
@@ -1011,7 +1020,11 @@ object Retrieval {
       .unionByName(terms.toDF("tok"))
       .agg(collect_set(col("tok")).as("terms"))
       .select(lit(0L).as("query_id"), col("terms"))
-    lexTop(spark, Lexical(indexDir, asOf = asOf), Right(expanded), k)
+    // the expanded batch is ONE query, so its top-k is the global top-k
+    // (TakeOrderedAndProject): a per-query window over its literal
+    // query_id would lose its key to constant folding and run
+    // unpartitioned
+    topOf(lexScored(spark, Lexical(indexDir, asOf = asOf), Right(expanded))._1, Nil, k)
       .select(col("doc_id"), col("n_terms"), col("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
   }

@@ -17,8 +17,13 @@ import org.apache.spark.sql.DataFrame
   * e.g. 2 jobs for a subtree that broadcast-joins a `distinct()` side
   * (the distinct's shuffle, then the broadcast) — and only the final
   * stage waits for the consuming action.
-  * With AQE off the call runs no job. Stage only what several
-  * consumers read; a single consumer pays those jobs for nothing.
+  * With AQE off the call runs no job, and neither does a bare file scan
+  * (no shuffle or broadcast subtree). Stage only what several consumers
+  * read; a single consumer pays those jobs for nothing.
+  *
+  * Corpus-grain users: the tokenize/hash/score producers of the corpus
+  * operators, and the batch JSON source ([[graft.sources.Sources.json]]),
+  * whose one parse per read feeds every result of the paper's batch job.
   *
   * CLUSTER CAVEAT (the reason this seam exists as ONE function): a
   * localCheckpoint block CUTS lineage — on a real cluster a lost

@@ -1,17 +1,31 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.{Buckets, Ranking}
 
 /** The reference's five analytics queries (reference README.md:449-597)
   * in deterministic declared form (SURVEY.md §7.3): every argmax uses
   * max-count-then-lexicographic-tie-break instead of the reference's
-  * order-dependent `first()`, and every output carries a total order.
+  * order-dependent `first()`, and every output carries a total order,
+  * sorted in one partition by [[Ranking.ordered]] (each output is a few
+  * hundred rows at most).
   *
   * Inputs are the CLEANED tables (Cleaners.pin/geo/user output).
   */
 object PinterestQueries {
+
+  /** Top category per `group` over its per-(group, category) counts, in
+    * `order`. The counts are bounded by the taxonomies (countries, post
+    * years or age ranges × categories: a few thousand rows at most), so
+    * they move to ONE partition before the argmax: its window needs no
+    * exchange, and the final sort ([[Ranking.ordered]]) shares the task.
+    */
+  private def topCategory(counts: DataFrame, group: String, order: Column*): DataFrame =
+    Ranking.ordered(
+      Ranking.argmax(counts.coalesce(1), Seq(col(group)), col("category_count"),
+        col("category")),
+      order: _*)
 
   /** Q1 — most popular category per country (README.md:449-467).
     * Ties → lexicographically smallest category.
@@ -20,8 +34,7 @@ object PinterestQueries {
     val counts = pin.join(geo, Seq("ind"), "inner")
       .groupBy(col("country"), col("category"))
       .agg(count(lit(1)).as("category_count"))
-    Ranking.argmax(counts, Seq(col("country")), col("category_count"), col("category"))
-      .orderBy(col("category_count").desc, col("country").asc)
+    topCategory(counts, "country", col("category_count").desc, col("country").asc)
   }
 
   /** Q2 — most popular category per post year (README.md:474-496). */
@@ -30,8 +43,7 @@ object PinterestQueries {
       .withColumn("post_year", year(col("timestamp")))
       .groupBy(col("post_year"), col("category"))
       .agg(count(lit(1)).as("category_count"))
-    Ranking.argmax(counts, Seq(col("post_year")), col("category_count"), col("category"))
-      .orderBy(col("post_year").desc)
+    topCategory(counts, "post_year", col("post_year").desc)
   }
 
   /** Q3a — user with most followers per country (README.md:504-524).
@@ -49,9 +61,10 @@ object PinterestQueries {
     val maxPerUser = joined
       .groupBy(col("country"), col("user_name"))
       .agg(max(col("follower_count")).as("follower_count"))
-    Ranking.argmax(maxPerUser, Seq(col("country")), col("follower_count"), col("user_name"))
-      .withColumnRenamed("user_name", "poster_name")
-      .orderBy(col("country").asc)
+    Ranking.ordered(
+      Ranking.argmax(maxPerUser, Seq(col("country")), col("follower_count"), col("user_name"))
+        .withColumnRenamed("user_name", "poster_name"),
+      col("country").asc)
   }
 
   /** Q3b — the single country whose top user has the most followers
@@ -68,8 +81,7 @@ object PinterestQueries {
       .withColumn("age_group", Buckets.ageRange(col("age")))
       .groupBy(col("age_group"), col("category"))
       .agg(count(lit(1)).as("category_count"))
-    Ranking.argmax(counts, Seq(col("age_group")), col("category_count"), col("category"))
-      .orderBy(col("age_group").asc)
+    topCategory(counts, "age_group", col("age_group").asc)
   }
 
   /** Q5 — users joined per year (README.md:583-592). Implemented over
@@ -78,9 +90,10 @@ object PinterestQueries {
     * (README.md:583-584) is what this computes.
     */
   def usersJoinedPerYear(user: DataFrame): DataFrame =
-    user
-      .withColumn("join_year", year(col("date_joined")))
-      .groupBy(col("join_year"))
-      .agg(count(lit(1)).as("number_users_joined"))
-      .orderBy(col("join_year").asc)
+    Ranking.ordered(
+      user
+        .withColumn("join_year", year(col("date_joined")))
+        .groupBy(col("join_year"))
+        .agg(count(lit(1)).as("number_users_joined")),
+      col("join_year").asc)
 }

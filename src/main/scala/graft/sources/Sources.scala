@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.operators.Stage
 
 /** Source connectors (SURVEY.md §2.1). Every reader takes a DECLARED
   * schema — never `inferSchema` (the reference's inference over
@@ -9,9 +10,22 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** S2 — JSON directory scan with declared schema. */
+  /** S2 — JSON directory scan with declared schema, parsed ONCE per
+    * read: the scan is staged through [[graft.operators.Stage.staged]],
+    * so the first action that consumes the returned DataFrame parses the
+    * text into staged rows, and every later result built on the same
+    * DataFrame (the batch job's six query results, its cleaned tables)
+    * reads those rows instead of re-parsing the files. A bare file scan
+    * has no shuffle or broadcast, so staging it runs no job at the call.
+    *
+    * Snapshot semantics: the call lists the directory's files; the first
+    * action parses all of them. Files added after the call, and files
+    * rewritten or removed after that action, do not change later results
+    * from this DataFrame. A NEW call is a fresh read — it lists and
+    * parses again, so it sees them. Nothing is cached across calls.
+    */
   def json(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
+    Stage.staged(spark.read.schema(schema).json(path))
 
   /** S2 — JSON scan with INFERRED schema, the explicit opt-in the
     * reference defaults to (reference README.md:344-348): inference is

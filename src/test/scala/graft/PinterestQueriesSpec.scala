@@ -1,8 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.graft.JobCount
+import graft.app.PinterestPipeline
 import graft.clean.{Cleaners, Schemas}
 import graft.queries.PinterestQueries
+import graft.sources.{Emulator, Sources}
 
 /** Reference-parity golden tests (SURVEY.md §5.2 layer 4): the five
   * README queries over a hand-computed fixture in deterministic declared
@@ -113,5 +116,122 @@ class PinterestQueriesSpec extends SparkSpec {
     val r = PinterestQueries.usersJoinedPerYear(user).collect()
     assert(r.map(x => (x.getAs[Int]("join_year"), x.getAs[Long]("number_users_joined"))).toSeq ==
       Seq((2015, 3L), (2016, 2L), (2017, 1L)))
+  }
+
+  // ---- the batch job over emulator JSON: one parse per read ----------
+
+  private def rawDir(n: Int, seed: Long): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pinterest").toString
+    Emulator.write(s"$dir/raw", n, seed)
+    s"$dir/raw"
+  }
+
+  private def results(r: PinterestPipeline.Results): Seq[(String, DataFrame)] =
+    Seq("q1" -> r.q1, "q2" -> r.q2, "q3a" -> r.q3a, "q3b" -> r.q3b,
+      "q4" -> r.q4, "q5" -> r.q5)
+
+  /** Bytes read through the Hadoop local filesystem, JVM-wide. */
+  private def localBytesRead(): Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+  }
+
+  private def dirBytes(dir: String): Long = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(java.nio.file.Files.size).sum
+    } finally files.close()
+  }
+
+  test("one read of the raw JSON feeds all six results: each source is parsed " +
+      "once, no result range-sorts, and the pass runs a pinned number of jobs") {
+    val raw = rawDir(n = 300, seed = 71L)
+    val rawBytes = dirBytes(raw)
+    val read0 = localBytesRead()
+    val (out, jobs) = JobCount(spark) {
+      val rs = results(PinterestPipeline.run(spark, raw))
+      rs.foreach { case (_, df) => df.collect() }
+      rs
+    }
+    val read = localBytesRead() - read0
+    assert(read < 1.1 * rawBytes,
+      s"the pass read $read local bytes for a $rawBytes-byte raw dir " +
+        f"(${read.toDouble / rawBytes}%.2fx): a source was parsed more than once")
+    out.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("rangepartitioning"),
+        s"$name's final plan range-sorts a small result:\n$plan")
+    }
+    // per result, its broadcasts, shuffle map stages and result stage:
+    // q1, q2, q4 = 3 each (no window exchange), q3a, q3b = 5 each, q5 = 2;
+    // the source parses ride the first jobs that read them
+    assert(jobs == 21, s"the pass ran $jobs jobs")
+  }
+
+  test("each result is delivered in its declared total order, in one sorted " +
+      "partition, without a caller sort — with AQE on and off") {
+    val raw = rawDir(n = 300, seed = 72L)
+    // declared sort keys (SURVEY §7.3), `true` = ascending; Spark puts
+    // nulls first ascending and last descending
+    def cmp(a: Any, b: Any, asc: Boolean): Int = (Option(a), Option(b)) match {
+      case (None, None) => 0
+      case (None, _) => if (asc) -1 else 1
+      case (_, None) => if (asc) 1 else -1
+      case (Some(x), Some(y)) =>
+        val c = x.asInstanceOf[Comparable[Any]].compareTo(y)
+        if (asc) c else -c
+    }
+    def check(adaptive: String): Unit = {
+      spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+      try {
+        val r = PinterestPipeline.run(spark, raw)
+        Seq(
+          ("q1", r.q1, Seq("category_count" -> false, "country" -> true)),
+          ("q2", r.q2, Seq("post_year" -> false)),
+          ("q3a", r.q3a, Seq("country" -> true)),
+          ("q4", r.q4, Seq("age_group" -> true)),
+          ("q5", r.q5, Seq("join_year" -> true))
+        ).foreach { case (name, df, order) =>
+          val parts = df.rdd.glom().collect().count(_.nonEmpty)
+          assert(parts == 1, s"$name (AQE $adaptive) arrives in $parts non-empty " +
+            "partitions, not one sorted partition")
+          val rows = df.collect().toSeq
+          assert(rows.length > 1, s"$name: too few rows to check an order")
+          rows.sliding(2).foreach { case Seq(a, b) =>
+            val c = order.iterator
+              .map { case (col, asc) => cmp(a.getAs[Any](col), b.getAs[Any](col), asc) }
+              .find(_ != 0).getOrElse(0)
+            assert(c < 0, s"$name (AQE $adaptive): $a does not strictly precede $b " +
+              "under its declared order")
+          }
+        }
+        assert(r.q3b.collect().length == 1)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    check("true")
+    check("false")
+  }
+
+  test("a Sources.json read is a snapshot: files added or removed after its first " +
+      "action do not change its results; a new read sees them") {
+    val raw = rawDir(n = 100, seed = 73L)
+    val read = Sources.json(spark, s"$raw/user", Schemas.rawUser)
+    val perYear = PinterestQueries.usersJoinedPerYear(Cleaners.user(read))
+    val first = perYear.collect().toSeq
+    assert(first.map(_.getAs[Long]("number_users_joined")).sum == 100)
+    // a late wave lands beside the read files, and one read file goes away
+    Emulator.writeWave(raw, start = 100, n = 50, seed = 74L)
+    val gone = new java.io.File(s"$raw/user").listFiles()
+      .filter(_.getName.startsWith("wave-73-")).minBy(_.getName)
+    val goneRows = scala.io.Source.fromFile(gone).getLines().count(_.nonEmpty)
+    assert(gone.delete())
+    assert(perYear.collect().toSeq == first)
+    assert(Cleaners.user(read).count() == 100)
+    assert(read.select("ind").distinct().count() == 100)
+    val fresh = Sources.json(spark, s"$raw/user", Schemas.rawUser)
+    assert(fresh.count() == 100 - goneRows + 50)
   }
 }
