@@ -196,13 +196,14 @@ object PipelineQueries {
       .groupBy(col("user_id"))
       .agg(min(to_date(col("ts"))).as("day"))
     val byDay = firstSeen.groupBy(col("day")).agg(count(lit(1)).as("n_new"))
-    byDay
-      // BOUNDED single-partition window: byDay has one row per distinct
-      // calendar day (a collapsed time dimension — thousands of rows
-      // after decades, never event-scale). The BoundedWindow key keeps
-      // the identical single-partition semantics while stating the
-      // bound (and keeping WindowExec's corpus-scale warning
-      // meaningful elsewhere).
+    // BOUNDED single-partition window: byDay has one row per distinct
+    // calendar day (a collapsed time dimension — thousands of rows
+    // after decades, never event-scale). The BoundedWindow key keeps
+    // the identical single-partition semantics while stating the
+    // bound (and keeping WindowExec's corpus-scale warning meaningful
+    // elsewhere); coalescing the day rows to one partition first lets
+    // both the window and the final sort run without an exchange.
+    byDay.coalesce(1)
       .withColumn("cum_users",
         sum(col("n_new")).over(Window
           .partitionBy(graft.operators.BoundedWindow.key(col("day")))

@@ -7,7 +7,7 @@ import graft.operators.{Bpe, Curation, Corpus, Index, Retrieval, Stamp,
 import graft.sources.Versioned
 
 /** The COMPOSED daily maintenance job (SURVEY §8, round 10) — the full
-  * documented daily cadence in one [[Scheduler.tickStages]] chain,
+  * documented daily cadence in one [[Scheduler.tickStagesFor]] chain,
   * where the reference's Airflow DAG ticks a single notebook
   * (reference 0affc6b7559b_dag.py:28-41). Each day's document/vector
   * batch flows through every state artifact the engine maintains:

@@ -1,21 +1,25 @@
 package graft.app
 
 import org.apache.spark.sql.SparkSession
+import graft.sources.Versioned
 
 /** Scheduled-batch orchestration — the engine-side analogue of the
   * reference's Airflow DAG (reference 0affc6b7559b_dag.py:23-43:
   * `schedule_interval='@daily'`, `retries: 2`, `retry_delay: 2 min`,
   * `catchup=False`, submitting one batch job per interval). The
-  * reference delegates these semantics to Airflow; here they are a
-  * small, fully spec-testable runner:
+  * reference delegates these semantics to Airflow; here they are one
+  * small, fully spec-testable runner, [[tickStagesFor]], over a linear
+  * chain of stages (a single job is a one-stage chain):
   *
   *  - **fixed-interval schedule**: intervals are `[k·interval,
   *    (k+1)·interval)` epochs; a run is due when `now` has crossed a
   *    boundary the last successful run has not covered;
-  *  - **no catchup**: missed intervals collapse to the LATEST boundary
-  *    (Airflow's `catchup=False`) — a runner that was down for a week
-  *    runs once, not seven times;
-  *  - **bounded retries with delay**: a failing job re-runs up to
+  *  - **resume first, then no catchup**: a started-but-uncovered
+  *    boundary is retried before any later one; untouched missed
+  *    intervals collapse to the LATEST boundary (Airflow's
+  *    `catchup=False`) — a runner that was down for a week runs once,
+  *    not seven times;
+  *  - **bounded retries with delay**: a failing stage re-runs up to
   *    `retries` more times, sleeping `retryDelayMs` between attempts;
   *    the final failure is recorded, never thrown away;
   *  - **run history as data**: every attempt appends to a
@@ -79,55 +83,6 @@ object Scheduler {
     out.result()
   }
 
-  /** One scheduler tick: if an interval is due, run the job with
-    * retries and append one history row PER ATTEMPT to
-    * `historyDir/runs` (boundary, attempt, ok, error, recorded_at_ms).
-    * Returns the attempts (empty = nothing due). The boundary counts
-    * as covered only when the run SUCCEEDED — a failed interval is
-    * retried at the next tick (depends_on_past = false: it runs the
-    * then-latest boundary, not the failed one).
-    */
-  def tick(spark: SparkSession, historyDir: String, job: () => Unit,
-           nowMs: Long, intervalMs: Long, retries: Int = 2,
-           retryDelayMs: Long = 120000L,
-           sleep: Long => Unit = Thread.sleep,
-           claimTtlMs: Long = 0L): Seq[Attempt] = {
-    import spark.implicits._
-    val runsTable = s"$historyDir/runs"
-    val lastOk =
-      if (!graft.sources.Versioned.exists(spark, runsTable)) None
-      else {
-        val rows = graft.sources.Versioned.read(spark, runsTable)
-          .filter(org.apache.spark.sql.functions.col("ok"))
-          .agg(org.apache.spark.sql.functions.max(
-            org.apache.spark.sql.functions.col("boundary_ms")))
-          .as[Option[Long]].collect()
-        rows.headOption.flatten
-      }
-    dueBoundary(nowMs, lastOk, intervalMs) match {
-      case None => Seq.empty
-      case Some(boundary) =>
-        val ttl = if (claimTtlMs > 0) claimTtlMs else intervalMs
-        acquireClaim(spark, historyDir, boundary, nowMs, ttl) match {
-          case None => Seq.empty
-          case Some(owner) => try {
-            val attempts = runWithRetries(job, retries, retryDelayMs, sleep)
-            // fencing: a taker past the TTL owns the boundary now — a
-            // history row from us would corrupt its coverage view
-            if (ownsClaim(spark, historyDir, owner)) {
-              val rows = attempts.map(a =>
-                (boundary, a.attempt, a.ok, a.error, nowMs))
-              graft.sources.Versioned.append(
-                rows.toDF("boundary_ms", "attempt", "ok", "error",
-                  "recorded_at_ms"),
-                runsTable): Unit
-            }
-            attempts
-          } finally releaseClaim(spark, historyDir, boundary, nowMs, owner)
-        }
-    }
-  }
-
   /** The coverage marker row's stage name: appended once per boundary
     * AFTER every stage succeeded, so "is this interval covered?" is one
     * filter regardless of how the stage list evolves across deploys.
@@ -147,10 +102,7 @@ object Scheduler {
   // ordered — so ANY fresh unreleased claim blocks, regardless of which
   // boundary it names (two tickers running DIFFERENT boundaries of the
   // same historyDir would interleave their stage chains over shared
-  // composed artifacts, which no stage list here is written for). A
-  // backfill deployment that wants cross-boundary parallelism needs
-  // per-boundary artifact isolation first; it would key the claim row
-  // by boundary at that point, not before.
+  // composed artifacts, which no stage list here is written for).
   //
   //  - of two SIMULTANEOUS tickers, both read claim version v and both
   //    try to commit at v+1 — the log-entry race has exactly one
@@ -172,31 +124,22 @@ object Scheduler {
 
   private def claimsTable(historyDir: String) = s"$historyDir/claims"
 
-  /** True iff `boundary` is already covered in the runs table — the
+  /** True iff `boundary` carries a [[CoveredStage]] marker — the
     * release-failure disambiguator [[acquireClaim]] consults: a fresh
     * unreleased claim whose boundary is COVERED means the claimant
     * finished its work and only its best-effort release write failed;
     * honoring such a claim until the TTL would stall every tick on the
     * historyDir for up to claimTtlMs over a run that has nothing left
-    * to protect. Schema-tolerant across both runners ([[tick]] writes
-    * no stage column and covers with any ok row; [[tickStagesFor]]
-    * covers via the [[CoveredStage]] marker). A read failure counts as
-    * NOT covered — fail-safe: the claim keeps blocking as before.
+    * to protect. A read failure counts as NOT covered — fail-safe: the
+    * claim keeps blocking as before.
     */
   private def boundaryCovered(spark: SparkSession, historyDir: String,
                               boundary: Long): Boolean = try {
     import org.apache.spark.sql.functions.col
     val t = s"$historyDir/runs"
-    if (!graft.sources.Versioned.exists(spark, t)) false
-    else {
-      val runs = graft.sources.Versioned.read(spark, t)
-      val base = runs.filter(col("ok") && col("boundary_ms") === boundary)
-      val hits =
-        if (runs.columns.contains("stage"))
-          base.filter(col("stage") === CoveredStage)
-        else base
-      !hits.isEmpty
-    }
+    Versioned.exists(spark, t) && !Versioned.read(spark, t)
+      .filter(col("ok") && col("boundary_ms") === boundary &&
+        col("stage") === CoveredStage).isEmpty
   } catch { case _: Exception => false }
 
   /** Returns the owner token on success, None when another claimant
@@ -211,14 +154,14 @@ object Scheduler {
     val row = Seq((boundary, nowMs, owner, false))
       .toDF("boundary_ms", "claimed_at_ms", "owner", "released")
     val vNext =
-      if (!graft.sources.Versioned.exists(spark, t)) 0L
+      if (!Versioned.exists(spark, t)) 0L
       else {
-        val v = graft.sources.Versioned.latestVersion(spark, t)
+        val v = Versioned.latestVersion(spark, t)
         // single-flight: ANY fresh unreleased claim blocks — with
         // claimTtlMs > intervalMs a live claimant on an older boundary
         // must still exclude a second ticker (schema-tolerant read: the
         // liveness fields predate the owner column)
-        val cur = graft.sources.Versioned.read(spark, t, Some(v))
+        val cur = Versioned.read(spark, t, Some(v))
           .select("boundary_ms", "claimed_at_ms", "released")
           .as[(Long, Long, Boolean)].collect().headOption
         val live = cur.exists { case (_, at, rel) => !rel && at > nowMs - ttlMs }
@@ -231,7 +174,7 @@ object Scheduler {
         v + 1
       }
     try {
-      graft.sources.Versioned.overwriteExpecting(row, t, vNext): Unit
+      Versioned.overwriteExpecting(row, t, vNext): Unit
       Some(owner)
     } catch { case _: IllegalArgumentException => None }
   }
@@ -244,8 +187,7 @@ object Scheduler {
   private def ownsClaim(spark: SparkSession, historyDir: String,
                         owner: String): Boolean = try {
     import spark.implicits._
-    val t = claimsTable(historyDir)
-    graft.sources.Versioned.read(spark, t)
+    Versioned.read(spark, claimsTable(historyDir))
       .select("owner", "released").as[(String, Boolean)]
       .collect().headOption.contains((owner, false))
   } catch { case _: Exception => false }
@@ -259,30 +201,30 @@ object Scheduler {
                            owner: String): Unit = try {
     import spark.implicits._
     val t = claimsTable(historyDir)
-    val v = graft.sources.Versioned.latestVersion(spark, t)
-    val cur = graft.sources.Versioned.read(spark, t, Some(v))
+    val v = Versioned.latestVersion(spark, t)
+    val cur = Versioned.read(spark, t, Some(v))
       .select("owner", "released")
       .as[(String, Boolean)].collect().headOption
     if (cur.contains((owner, false)))
-      graft.sources.Versioned.overwriteExpecting(
+      Versioned.overwriteExpecting(
         Seq((boundary, claimedAt, owner, true))
           .toDF("boundary_ms", "claimed_at_ms", "owner", "released"),
         t, v + 1): Unit
   } catch { case _: Exception => () }
 
-  /** One scheduler tick of a MULTI-STAGE job (a linear DAG, the Airflow
-    * task-chain shape) over BOUNDARY-ADDRESSED stages: `stagesFor`
-    * builds the stage list FOR the data interval being processed, so a
-    * resumed boundary runs against ITS batch — never whichever batch
-    * happens to be current at resume time. Stages run in order, each
-    * with the full retry discipline; a stage that exhausts its retries
-    * FAILS THE RUN and the remaining stages are skipped (their absence
-    * from the history is the skip record — exactly Airflow's
-    * upstream_failed). One history row per (stage, attempt) goes to
-    * `historyDir/runs` (boundary_ms, stage, stage_idx, attempt, ok,
-    * error, recorded_at_ms), plus one [[CoveredStage]] marker row when
-    * the whole chain succeeded — the boundary counts as covered ONLY
-    * then.
+  /** The scheduler's one runner: one tick of a linear stage chain (the
+    * Airflow task-chain shape; a single job is a one-stage list) over
+    * BOUNDARY-ADDRESSED stages: `stagesFor` builds the stage list FOR
+    * the data interval being processed, so a resumed boundary runs
+    * against ITS batch — never whichever batch happens to be current at
+    * resume time. Stages run in order, each with the full retry
+    * discipline; a stage that exhausts its retries FAILS THE RUN and the
+    * remaining stages are skipped (their absence from the history is
+    * the skip record — exactly Airflow's upstream_failed). One history
+    * row per (stage, attempt) goes to `historyDir/runs` (boundary_ms,
+    * stage, stage_idx, attempt, ok, error, recorded_at_ms), plus one
+    * [[CoveredStage]] marker row when the whole chain succeeded — the
+    * boundary counts as covered ONLY then.
     *
     * Concurrency: the chosen boundary is CLAIMED before any stage runs
     * (see the claim block above) — of two tickers racing the same
@@ -308,6 +250,10 @@ object Scheduler {
     * absorb that; a purely ADDITIVE stage (signal counts, index
     * postings) double-applies in that window — a deployment that
     * cannot tolerate it must make the stage idempotent per boundary.
+    *
+    * A `runs` table without a `stage` column (the single-job history
+    * schema of earlier releases) fails the tick before any claim or
+    * stage: its rows cannot say which boundaries are covered.
     * Returns the attempts per stage RUN THIS TICK in order (empty =
     * nothing due).
     */
@@ -323,10 +269,13 @@ object Scheduler {
     // boundary selection off two pushed-down aggregates (never a full
     // history collect — the runs table grows for the deployment's life)
     val (lastOk, resumable) =
-      if (!graft.sources.Versioned.exists(spark, runsTable)) (None, None)
+      if (!Versioned.exists(spark, runsTable)) (None, None)
       else {
-        val runs = graft.sources.Versioned.read(spark, runsTable)
-          .select("boundary_ms", "stage", "ok")
+        val runs = Versioned.read(spark, runsTable)
+        require(runs.columns.contains("stage"), s"$runsTable has no stage " +
+          "column: it is a single-job history from an earlier release. Move " +
+          "it aside; the next tick then covers only the latest elapsed " +
+          "interval, so no old boundary re-runs")
         val coveredMax = runs
           .filter(col("ok") && col("stage") === CoveredStage)
           .agg(max(col("boundary_ms")))
@@ -343,247 +292,60 @@ object Scheduler {
       case None => Seq.empty
       case Some(boundary) =>
         val stages = stagesFor(boundary)
-        require(stages.nonEmpty, "tickStages needs at least one stage")
+        require(stages.nonEmpty, "tickStagesFor needs at least one stage")
         require(!stages.exists(_._1 == CoveredStage),
           s"stage name $CoveredStage is reserved for the coverage marker")
         val ttl = if (claimTtlMs > 0) claimTtlMs else intervalMs
         acquireClaim(spark, historyDir, boundary, nowMs, ttl) match {
           case None => Seq.empty
-          case Some(owner) =>
-            try runClaimedChain(spark, historyDir, boundary, stages, nowMs,
-              retries, retryDelayMs, sleep,
-              () => ownsClaim(spark, historyDir, owner))
-            finally releaseClaim(spark, historyDir, boundary, nowMs, owner)
+          case Some(owner) => try {
+            def owns = ownsClaim(spark, historyDir, owner)
+            def record(name: String, idx: Int, as: Seq[Attempt]): Unit =
+              Versioned.append(as.map(a => (boundary, name, idx, a.attempt,
+                a.ok, a.error, nowMs)).toDF("boundary_ms", "stage",
+                "stage_idx", "attempt", "ok", "error", "recorded_at_ms"),
+                runsTable): Unit
+            // stages already ok for THIS boundary (a prior failed run got
+            // partway through) — resume after them, never re-apply
+            val doneStages: Set[String] =
+              if (!Versioned.exists(spark, runsTable)) Set.empty
+              else Versioned.read(spark, runsTable)
+                .filter(col("ok") && col("boundary_ms") === boundary)
+                .select("stage").distinct().as[String].collect().toSet
+            val out = Seq.newBuilder[(String, Seq[Attempt])]
+            // false once a stage exhausts its retries or the claim is
+            // lost (fenced: a slow claimant whose claim was taken over
+            // stops at the next stage boundary instead of racing the
+            // taker down the chain)
+            var go = true
+            stages.zipWithIndex.foreach { case ((name, job), idx) =>
+              if (go && !doneStages.contains(name)) {
+                go = owns
+                if (go) {
+                  val attempts =
+                    runWithRetries(job, retries, retryDelayMs, sleep)
+                  out += name -> attempts
+                  go = owns
+                  if (go) {
+                    record(name, idx, attempts)
+                    go = attempts.last.ok
+                  }
+                }
+              }
+            }
+            if (go && owns)
+              record(CoveredStage, stages.size, Seq(Attempt(0, ok = true, "")))
+            out.result()
+          } finally releaseClaim(spark, historyDir, boundary, nowMs, owner)
         }
     }
   }
-
-  /** The fenced stage-chain body shared by [[tickStagesFor]] and
-    * [[backfillStages]]: skip already-ok stages, run the rest in order
-    * with the retry discipline, re-verify claim ownership (`owns`)
-    * before each stage and before recording its result, and append the
-    * [[CoveredStage]] marker when the whole chain succeeded.
-    */
-  private def runClaimedChain(spark: SparkSession, historyDir: String,
-                              boundary: Long,
-                              stages: Seq[(String, () => Unit)],
-                              nowMs: Long, retries: Int, retryDelayMs: Long,
-                              sleep: Long => Unit,
-                              owns: () => Boolean): Seq[(String, Seq[Attempt])] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val runsTable = s"$historyDir/runs"
-    // stages already ok for THIS boundary (a prior failed run got
-    // partway through) — resume after them, never re-apply
-    val doneStages: Set[String] =
-      if (!graft.sources.Versioned.exists(spark, runsTable)) Set.empty
-      else graft.sources.Versioned.read(spark, runsTable)
-        .filter(col("ok") && col("boundary_ms") === boundary)
-        .select("stage").distinct().as[String].collect().toSet
-    val out = Seq.newBuilder[(String, Seq[Attempt])]
-    var failed = false
-    // fenced: a slow claimant whose claim was taken over stops at the
-    // next stage boundary instead of racing the taker down the chain
-    var fenced = false
-    stages.zipWithIndex.foreach { case ((name, job), idx) =>
-      if (!failed && !fenced && !doneStages.contains(name)) {
-        if (!owns()) fenced = true
-        else {
-          val attempts = runWithRetries(job, retries, retryDelayMs, sleep)
-          out += name -> attempts
-          if (!owns()) fenced = true
-          else {
-            val rows = attempts.map(a =>
-              (boundary, name, idx, a.attempt, a.ok, a.error, nowMs))
-            graft.sources.Versioned.append(
-              rows.toDF("boundary_ms", "stage", "stage_idx", "attempt",
-                "ok", "error", "recorded_at_ms"),
-              runsTable): Unit
-            if (!attempts.last.ok) failed = true
-          }
-        }
-      }
-    }
-    if (!failed && !fenced && owns())
-      graft.sources.Versioned.append(
-        Seq((boundary, CoveredStage, stages.size, 0, true, "", nowMs))
-          .toDF("boundary_ms", "stage", "stage_idx", "attempt",
-            "ok", "error", "recorded_at_ms"),
-        runsTable): Unit
-    out.result()
-  }
-
-  // --------------------------------------------- per-boundary backfill
-  //
-  // The single-flight claim deliberately serializes the whole
-  // historyDir — correct for the tick cadence (one boundary per tick,
-  // resumes ordered, composed artifacts shared across boundaries), but
-  // it makes a deliberate PARALLEL BACKFILL over disjoint boundaries
-  // fully sequential. The opt-in below keys the claim row BY BOUNDARY
-  // (same CAS/TTL/fencing discipline; contending commits retry against
-  // the re-read row set), so two backfillers on different boundaries
-  // both run while two on the same boundary still resolve to exactly
-  // one winner. THE CALLER OWNS cross-boundary isolation: only use it
-  // with stage lists whose artifacts tolerate concurrent
-  // disjoint-boundary writers (per-boundary output dirs, commutative
-  // appends). The composed DailyMaintenance chain is NOT such a list
-  // (its index appends assume ordered boundaries), which is why
-  // single-flight stays the tick default. Do not mix tick and backfill
-  // runners on one historyDir: the single-flight acquire reads the
-  // claims table as one row.
-
-  private def acquireClaimFor(spark: SparkSession, historyDir: String,
-                              boundary: Long, nowMs: Long, ttlMs: Long,
-                              casRetries: Int = 5): Option[String] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
-    val t = claimsTable(historyDir)
-    val owner = java.util.UUID.randomUUID.toString
-    var attempt = 0
-    while (attempt <= casRetries) {
-      attempt += 1
-      val (vNext, keep) =
-        if (!graft.sources.Versioned.exists(spark, t))
-          (0L, Seq.empty[(Long, Long, String, Boolean, Long)])
-        else {
-          val v = graft.sources.Versioned.latestVersion(spark, t)
-          // every claim row carries ITS OWN ttl, and liveness is judged
-          // by it — never by this caller's ttlMs: concurrent backfillers
-          // configured with different claimTtlMs would otherwise drop
-          // another boundary's still-live claim row here, spuriously
-          // fencing a healthy run mid-chain (correctness survives — the
-          // fenced claimant stops — but the run is killed and a third
-          // claimant takes the boundary over). Schema-tolerant: rows
-          // written before the ttl column default to the reader's ttl.
-          val raw = graft.sources.Versioned.read(spark, t, Some(v))
-          val rows = (if (raw.columns.contains("ttl_ms"))
-              raw.select("boundary_ms", "claimed_at_ms", "owner",
-                "released", "ttl_ms")
-            else raw.select(col("boundary_ms"), col("claimed_at_ms"),
-              col("owner"), col("released"), lit(ttlMs).as("ttl_ms")))
-            .as[(Long, Long, String, Boolean, Long)].collect().toSeq
-          def live(r: (Long, Long, String, Boolean, Long)) =
-            !r._4 && r._2 > nowMs - r._5
-          val mineLive = rows.exists(r => r._1 == boundary && live(r))
-          if (mineLive && !boundaryCovered(spark, historyDir, boundary))
-            return None
-          // carry every OTHER boundary's live claim forward; released
-          // and stale rows drop (the table stays backfill-width)
-          (v + 1, rows.filter(r => r._1 != boundary && live(r)))
-        }
-      try {
-        graft.sources.Versioned.overwriteExpecting(
-          (keep :+ ((boundary, nowMs, owner, false, ttlMs)))
-            .toDF("boundary_ms", "claimed_at_ms", "owner", "released",
-              "ttl_ms"),
-          t, vNext): Unit
-        return Some(owner)
-      } catch {
-        // CAS lost to a concurrent backfiller (usually on a DIFFERENT
-        // boundary) — re-read the row set and retry
-        case _: IllegalArgumentException => ()
-      }
-    }
-    None
-  }
-
-  private def ownsClaimFor(spark: SparkSession, historyDir: String,
-                           boundary: Long, owner: String): Boolean = try {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    graft.sources.Versioned.read(spark, claimsTable(historyDir))
-      .filter(col("boundary_ms") === boundary)
-      .select("owner", "released").as[(String, Boolean)]
-      .collect().headOption.contains((owner, false))
-  } catch { case _: Exception => false }
-
-  private def releaseClaimFor(spark: SparkSession, historyDir: String,
-                              boundary: Long, owner: String,
-                              casRetries: Int = 5): Unit = try {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
-    val t = claimsTable(historyDir)
-    var attempt = 0
-    var done = false
-    while (!done && attempt <= casRetries) {
-      attempt += 1
-      val v = graft.sources.Versioned.latestVersion(spark, t)
-      // preserve each row's own ttl through the rewrite (legacy rows
-      // default to a 0 ttl: already-stale, the pre-ttl-column behavior
-      // for a release racing a reader is unaffected — release only
-      // flips our own row)
-      val raw = graft.sources.Versioned.read(spark, t, Some(v))
-      val rows = (if (raw.columns.contains("ttl_ms"))
-          raw.select("boundary_ms", "claimed_at_ms", "owner", "released",
-            "ttl_ms")
-        else raw.select(col("boundary_ms"), col("claimed_at_ms"),
-          col("owner"), col("released"), lit(0L).as("ttl_ms")))
-        .as[(Long, Long, String, Boolean, Long)].collect().toSeq
-      if (!rows.exists(r => r._1 == boundary && r._3 == owner && !r._4))
-        done = true // taken over or already released — nothing ours to flip
-      else try {
-        graft.sources.Versioned.overwriteExpecting(
-          rows.map(r => if (r._1 == boundary && r._3 == owner)
-              (r._1, r._2, r._3, true, r._5) else r)
-            .toDF("boundary_ms", "claimed_at_ms", "owner", "released",
-              "ttl_ms"),
-          t, v + 1): Unit
-        done = true
-      } catch { case _: IllegalArgumentException => () }
-    }
-  } catch { case _: Exception => () }
-
-  /** Run ONE explicit boundary's stage chain under a PER-BOUNDARY claim
-    * — the opt-in parallel-backfill entry point (see the block comment
-    * above for scope and the isolation contract). Covered boundaries
-    * return empty; covered stages skip; history rows, fencing, and the
-    * [[CoveredStage]] marker behave exactly as in [[tickStagesFor]].
-    */
-  def backfillStages(spark: SparkSession, historyDir: String,
-                     boundary: Long,
-                     stagesFor: Long => Seq[(String, () => Unit)],
-                     nowMs: Long, retries: Int = 2,
-                     retryDelayMs: Long = 120000L,
-                     sleep: Long => Unit = Thread.sleep,
-                     claimTtlMs: Long = 24L * 3600 * 1000)
-      : Seq[(String, Seq[Attempt])] = {
-    require(claimTtlMs > 0, s"claimTtlMs must be positive, got $claimTtlMs")
-    if (boundaryCovered(spark, historyDir, boundary)) return Seq.empty
-    val stages = stagesFor(boundary)
-    require(stages.nonEmpty, "backfillStages needs at least one stage")
-    require(!stages.exists(_._1 == CoveredStage),
-      s"stage name $CoveredStage is reserved for the coverage marker")
-    acquireClaimFor(spark, historyDir, boundary, nowMs, claimTtlMs) match {
-      case None => Seq.empty
-      case Some(owner) =>
-        try runClaimedChain(spark, historyDir, boundary, stages, nowMs,
-          retries, retryDelayMs, sleep,
-          () => ownsClaimFor(spark, historyDir, boundary, owner))
-        finally releaseClaimFor(spark, historyDir, boundary, owner)
-    }
-  }
-
-  /** [[tickStagesFor]] with a FIXED stage list — only for jobs whose
-    * stage work is boundary-independent (each closure is valid for any
-    * boundary it might run under, including a resumed older one). A
-    * job whose batch derives from the data interval must use
-    * [[tickStagesFor]] or a resumed boundary would process the wrong
-    * day's data.
-    */
-  def tickStages(spark: SparkSession, historyDir: String,
-                 stages: Seq[(String, () => Unit)], nowMs: Long,
-                 intervalMs: Long, retries: Int = 2,
-                 retryDelayMs: Long = 120000L,
-                 sleep: Long => Unit = Thread.sleep,
-                 claimTtlMs: Long = 0L): Seq[(String, Seq[Attempt])] =
-    tickStagesFor(spark, historyDir, _ => stages, nowMs, intervalMs,
-      retries, retryDelayMs, sleep, claimTtlMs)
 
   /** Real-clock entry point: one tick of the daily incremental-curation
-    * batch. Run from cron/systemd per the deployment's cadence — the
-    * runner is a TICK, not a daemon, so process supervision stays with
-    * the platform (the same division of labor the reference delegates
-    * to Airflow's scheduler process).
+    * batch, a one-stage chain. Run from cron/systemd per the
+    * deployment's cadence — the runner is a TICK, not a daemon, so
+    * process supervision stays with the platform (the same division of
+    * labor the reference delegates to Airflow's scheduler process).
     *
     * Usage: tools/run.sh graft.app.Scheduler [sfDir] [workDir]
     */
@@ -592,16 +354,16 @@ object Scheduler {
     val workDir = args.lift(1).getOrElse("/tmp/graft_scheduler")
     val spark = graft.LocalSession()
     import org.apache.spark.sql.functions.col
-    val attempts = tick(spark, workDir,
-      () => { graft.operators.Curation.curateBatch(
-        graft.Tables.documents(spark, sfDir), s"$workDir/state"): Unit },
+    val attempts = tickStagesFor(spark, workDir, _ => Seq("curate" -> (() => {
+        graft.operators.Curation.curateBatch(
+          graft.Tables.documents(spark, sfDir), s"$workDir/state"): Unit })),
       nowMs = System.currentTimeMillis(),
-      intervalMs = 24L * 3600 * 1000)
+      intervalMs = 24L * 3600 * 1000).flatMap(_._2)
     if (attempts.isEmpty) println("[scheduler] nothing due")
     else println(s"[scheduler] ran ${attempts.size} attempt(s), " +
       s"ok=${attempts.last.ok}")
-    val history = graft.sources.Versioned.read(spark, s"$workDir/runs")
-      .orderBy(col("boundary_ms"), col("attempt"))
+    val history = Versioned.read(spark, s"$workDir/runs")
+      .orderBy(col("boundary_ms"), col("stage_idx"), col("attempt"))
     history.show(20, truncate = false)
     spark.stop()
   }

@@ -59,34 +59,39 @@ class SchedulerSpec extends SparkSpec {
     var healthy = false
     var runs = 0
     val job = () => { runs += 1; if (!healthy) sys.error("db down") }
+    // a single job is a one-stage chain; its attempts are the stage's
+    def tick(nowMs: Long) = Scheduler.tickStagesFor(spark, dir,
+      _ => Seq("job" -> job), nowMs = nowMs, intervalMs = Day, retries = 2,
+      retryDelayMs = 1L, sleep = _ => ()).flatMap(_._2)
 
     // day 10: job down → 3 failed attempts recorded, interval NOT
     // covered (the due boundary is day 9, the elapsed interval)
-    val t1 = Scheduler.tick(spark, dir, job, nowMs = 10 * Day + 5,
-      intervalMs = Day, retries = 2, retryDelayMs = 1L, sleep = _ => ())
+    val t1 = tick(10 * Day + 5)
     assert(t1.size == 3 && t1.forall(!_.ok) && runs == 3)
     // later the same day: the uncovered boundary fires again
     healthy = true
-    val t2 = Scheduler.tick(spark, dir, job, nowMs = 10 * Day + 9,
-      intervalMs = Day, retries = 2, retryDelayMs = 1L, sleep = _ => ())
+    val t2 = tick(10 * Day + 9)
     assert(t2 == Seq(Scheduler.Attempt(1, ok = true, "")) && runs == 4)
     // again the same day: covered → nothing due, job untouched
-    assert(Scheduler.tick(spark, dir, job, nowMs = 10 * Day + 99,
-      intervalMs = Day, retries = 2, retryDelayMs = 1L, sleep = _ => ()).isEmpty)
+    assert(tick(10 * Day + 99).isEmpty)
     assert(runs == 4)
     // next day fires exactly once more
-    assert(Scheduler.tick(spark, dir, job, nowMs = 11 * Day,
-      intervalMs = Day, retries = 2, retryDelayMs = 1L,
-      sleep = _ => ()).size == 1)
+    assert(tick(11 * Day).size == 1)
 
-    // the run history is a queryable attempt-grained trail
-    val hist = graft.sources.Versioned.read(spark, s"$dir/runs")
+    // the run history is a queryable attempt-grained trail, plus exactly
+    // one coverage marker per succeeded boundary
+    import org.apache.spark.sql.functions.col
+    val runsDf = graft.sources.Versioned.read(spark, s"$dir/runs")
+    val hist = runsDf.filter(col("stage") =!= Scheduler.CoveredStage)
       .select("recorded_at_ms", "boundary_ms", "attempt", "ok")
       .as[(Long, Long, Int, Boolean)].collect()
       .sortBy(r => (r._1, r._3)).map(r => (r._2, r._3, r._4)).toSeq
     assert(hist == Seq(
       (9 * Day, 1, false), (9 * Day, 2, false), (9 * Day, 3, false),
       (9 * Day, 1, true), (10 * Day, 1, true)))
+    val markers = runsDf.filter(col("stage") === Scheduler.CoveredStage)
+      .select("boundary_ms").as[Long].collect().toSeq.sorted
+    assert(markers == Seq(9 * Day, 10 * Day))
   }
 
   test("tickStages: a mid-chain failure skips downstream stages and a " +
@@ -100,8 +105,9 @@ class SchedulerSpec extends SparkSpec {
       "c" -> (() => { calls("c") += 1; () }))
 
     // day 10: a ok, b exhausts retries, c SKIPPED, boundary uncovered
-    val t1 = Scheduler.tickStages(spark, dir, stages, nowMs = 10 * Day + 5,
-      intervalMs = Day, retries = 1, retryDelayMs = 1L, sleep = _ => ())
+    val t1 = Scheduler.tickStagesFor(spark, dir, _ => stages,
+      nowMs = 10 * Day + 5, intervalMs = Day, retries = 1,
+      retryDelayMs = 1L, sleep = _ => ())
     assert(t1.map(_._1) == Seq("a", "b"))
     assert(t1.toMap.apply("a").map(_.ok) == Seq(true))
     assert(t1.toMap.apply("b").map(_.ok) == Seq(false, false))
@@ -111,19 +117,21 @@ class SchedulerSpec extends SparkSpec {
     // boundary: its append-only work must not double), b re-runs and
     // succeeds, c finally runs, the coverage marker lands
     bHealthy = true
-    val t2 = Scheduler.tickStages(spark, dir, stages, nowMs = 10 * Day + 9,
-      intervalMs = Day, retries = 1, retryDelayMs = 1L, sleep = _ => ())
+    val t2 = Scheduler.tickStagesFor(spark, dir, _ => stages,
+      nowMs = 10 * Day + 9, intervalMs = Day, retries = 1,
+      retryDelayMs = 1L, sleep = _ => ())
     assert(t2.map(_._1) == Seq("b", "c"))
     assert(calls == Map("a" -> 1, "b" -> 3, "c" -> 1))
 
     // covered → a third tick the same day does nothing
-    assert(Scheduler.tickStages(spark, dir, stages, nowMs = 10 * Day + 99,
-      intervalMs = Day, retries = 1, retryDelayMs = 1L, sleep = _ => ()).isEmpty)
+    assert(Scheduler.tickStagesFor(spark, dir, _ => stages,
+      nowMs = 10 * Day + 99, intervalMs = Day, retries = 1,
+      retryDelayMs = 1L, sleep = _ => ()).isEmpty)
     assert(calls == Map("a" -> 1, "b" -> 3, "c" -> 1))
 
     // next day: the full chain runs once
-    assert(Scheduler.tickStages(spark, dir, stages, nowMs = 11 * Day + 1,
-      intervalMs = Day, retries = 1, retryDelayMs = 1L,
+    assert(Scheduler.tickStagesFor(spark, dir, _ => stages,
+      nowMs = 11 * Day + 1, intervalMs = Day, retries = 1, retryDelayMs = 1L,
       sleep = _ => ()).map(_._1) == Seq("a", "b", "c"))
     assert(calls == Map("a" -> 2, "b" -> 4, "c" -> 2))
 
@@ -137,8 +145,8 @@ class SchedulerSpec extends SparkSpec {
       == Seq(false, false, true))
     // reserved stage name refused
     intercept[IllegalArgumentException] {
-      Scheduler.tickStages(spark, dir,
-        Seq(Scheduler.CoveredStage -> (() => ())), 12 * Day, Day)
+      Scheduler.tickStagesFor(spark, dir,
+        _ => Seq(Scheduler.CoveredStage -> (() => ())), 12 * Day, Day)
     }
   }
 
@@ -198,13 +206,14 @@ class SchedulerSpec extends SparkSpec {
         // a second process double-fires MID-RUN (cron overlap): it
         // reads the same runs table, picks the same boundary, and must
         // lose on the fresh claim — additive stages never double-apply
-        inner = Scheduler.tickStages(spark, dir, stages,
+        inner = Scheduler.tickStagesFor(spark, dir, _ => stages,
           nowMs = 10 * Day + 6, intervalMs = Day, retries = 0,
           retryDelayMs = 1L, sleep = _ => ())
       }),
       "b" -> (() => { calls += "b"; () }))
-    val t1 = Scheduler.tickStages(spark, dir, stages, nowMs = 10 * Day + 5,
-      intervalMs = Day, retries = 0, retryDelayMs = 1L, sleep = _ => ())
+    val t1 = Scheduler.tickStagesFor(spark, dir, _ => stages,
+      nowMs = 10 * Day + 5, intervalMs = Day, retries = 0,
+      retryDelayMs = 1L, sleep = _ => ())
     assert(t1.map(_._1) == Seq("a", "b"))
     assert(inner != null && inner.isEmpty,
       "the interleaved ticker must lose the claim and run nothing")
@@ -219,8 +228,8 @@ class SchedulerSpec extends SparkSpec {
       Seq((10 * Day, now2 - 1000L, false))
         .toDF("boundary_ms", "claimed_at_ms", "released"),
       claims, Versioned.latestVersion(spark, claims) + 1): Unit
-    assert(Scheduler.tickStages(spark, dir, stages, nowMs = now2,
-      intervalMs = Day, retries = 0, retryDelayMs = 1L,
+    assert(Scheduler.tickStagesFor(spark, dir, _ => stages,
+      nowMs = now2, intervalMs = Day, retries = 0, retryDelayMs = 1L,
       sleep = _ => ()).isEmpty)
     assert(calls.toSeq == Seq("a", "b"))
 
@@ -231,8 +240,9 @@ class SchedulerSpec extends SparkSpec {
       Seq((10 * Day, now2 - Day - 1L, false))
         .toDF("boundary_ms", "claimed_at_ms", "released"),
       claims, Versioned.latestVersion(spark, claims) + 1): Unit
-    val t3 = Scheduler.tickStages(spark, dir, stages, nowMs = now2 + 10,
-      intervalMs = Day, retries = 0, retryDelayMs = 1L, sleep = _ => ())
+    val t3 = Scheduler.tickStagesFor(spark, dir, _ => stages,
+      nowMs = now2 + 10, intervalMs = Day, retries = 0,
+      retryDelayMs = 1L, sleep = _ => ())
     assert(t3.map(_._1) == Seq("a", "b"))
     assert(calls.toSeq == Seq("a", "b", "a", "b"))
   }
@@ -255,7 +265,7 @@ class SchedulerSpec extends SparkSpec {
     val stagesPlain: Seq[(String, () => Unit)] = Seq(
       "a" -> (() => { calls += "a"; () }),
       "b" -> (() => { calls += "b"; () }))
-    assert(Scheduler.tickStages(spark, dir, stagesPlain,
+    assert(Scheduler.tickStagesFor(spark, dir, _ => stagesPlain,
       nowMs = 10 * Day + 5, intervalMs = Day, retries = 0,
       retryDelayMs = 1L, sleep = _ => (), claimTtlMs = 3 * Day).isEmpty,
       "a fresh foreign claim must block regardless of its boundary")
@@ -277,7 +287,7 @@ class SchedulerSpec extends SparkSpec {
           claims, Versioned.latestVersion(spark, claims) + 1): Unit
       }),
       "b" -> (() => { calls += "b"; () }))
-    val t = Scheduler.tickStages(spark, dir, fencedStages,
+    val t = Scheduler.tickStagesFor(spark, dir, _ => fencedStages,
       nowMs = 10 * Day + 5, intervalMs = Day, retries = 0,
       retryDelayMs = 1L, sleep = _ => ())
     assert(t.map(_._1) == Seq("a"), "the in-flight stage's attempts are " +
@@ -870,8 +880,10 @@ class SchedulerSpec extends SparkSpec {
       "acquire: a failed release never stalls the historyDir until TTL") {
     val dir = java.nio.file.Files.createTempDirectory("claimcov").toString
     var runs = 0
-    val a1 = Scheduler.tick(spark, dir, () => { runs += 1 },
-      nowMs = 10 * Day + 5, intervalMs = Day, retries = 0, sleep = _ => ())
+    def tick(nowMs: Long) = Scheduler.tickStagesFor(spark, dir,
+      _ => Seq("job" -> (() => { runs += 1 })), nowMs = nowMs,
+      intervalMs = Day, retries = 0, sleep = _ => ()).flatMap(_._2)
+    val a1 = tick(10 * Day + 5)
     assert(a1.nonEmpty && runs == 1)
     // simulate a crash between the history append and releaseClaim: a
     // FRESH unreleased claim sits on the already-covered boundary
@@ -883,8 +895,7 @@ class SchedulerSpec extends SparkSpec {
       s"$dir/claims", v + 1): Unit
     // the ghost claim is fresh (claimed_at ~ now) but its boundary is
     // covered — the next tick takes over instead of waiting out the TTL
-    val a2 = Scheduler.tick(spark, dir, () => { runs += 1 },
-      nowMs = 11 * Day + 5, intervalMs = Day, retries = 0, sleep = _ => ())
+    val a2 = tick(11 * Day + 5)
     assert(a2.nonEmpty && runs == 2,
       "a covered boundary's ghost claim must not block the next interval")
     // whereas a fresh claim on an UNCOVERED boundary still blocks
@@ -893,103 +904,49 @@ class SchedulerSpec extends SparkSpec {
       Seq((11 * Day, 12 * Day + 1, "ghost-owner-2", false))
         .toDF("boundary_ms", "claimed_at_ms", "owner", "released"),
       s"$dir/claims", v2 + 1): Unit
-    val a3 = Scheduler.tick(spark, dir, () => { runs += 1 },
-      nowMs = 12 * Day + 5, intervalMs = Day, retries = 0, sleep = _ => ())
+    val a3 = tick(12 * Day + 5)
     assert(a3.isEmpty && runs == 2,
       "an uncovered boundary's fresh claim must keep blocking")
   }
 
-  test("backfillStages (per-boundary claims, opt-in): a live claim on a " +
-      "DIFFERENT boundary does not block; the SAME boundary has exactly " +
-      "one winner; covered boundaries and stages never re-run") {
-    import graft.sources.Versioned
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("backfill").toString
-    var ran = List.empty[Long]
-    def stagesFor(b: Long): Seq[(String, () => Unit)] =
-      Seq("work" -> (() => ran ::= b))
-
-    // two backfills over DISJOINT boundaries both run (under the tick
-    // runner's single-flight claim the second would have to wait for
-    // the first's release)
-    val a = Scheduler.backfillStages(spark, dir, 9 * Day, stagesFor,
-      nowMs = 20 * Day, retries = 0, sleep = _ => ())
-    val b = Scheduler.backfillStages(spark, dir, 10 * Day, stagesFor,
-      nowMs = 20 * Day, retries = 0, sleep = _ => ())
-    assert(a.nonEmpty && b.nonEmpty && ran.toSet == Set(9 * Day, 10 * Day))
-    // a covered boundary is a no-op, even with a fresh claim history
-    assert(Scheduler.backfillStages(spark, dir, 9 * Day, stagesFor,
-      nowMs = 20 * Day, retries = 0, sleep = _ => ()).isEmpty)
-    assert(ran.size == 2)
-
-    // plant a LIVE foreign claim on boundary 11: a backfill of 12 runs
-    // anyway (per-boundary), a backfill of 11 is excluded (same
-    // boundary, presumed-live claimant)
-    val v = Versioned.latestVersion(spark, s"$dir/claims")
-    Versioned.overwriteExpecting(
-      Seq((11 * Day, 20 * Day, "ghost-owner", false))
-        .toDF("boundary_ms", "claimed_at_ms", "owner", "released"),
-      s"$dir/claims", v + 1): Unit
-    assert(Scheduler.backfillStages(spark, dir, 12 * Day, stagesFor,
-      nowMs = 20 * Day, retries = 0, sleep = _ => ()).nonEmpty,
-      "a live claim on a different boundary must not block a backfill")
-    assert(Scheduler.backfillStages(spark, dir, 11 * Day, stagesFor,
-      nowMs = 20 * Day, retries = 0, sleep = _ => ()).isEmpty,
-      "a live claim on the same boundary must exclude a second backfiller")
-    // the excluded boundary's work never ran; the others each ran once
-    assert(ran.count(_ == 11 * Day) == 0 && ran.count(_ == 12 * Day) == 1)
-    // the ghost's claim goes stale past the TTL and the boundary
-    // becomes backfillable again (takeover)
-    assert(Scheduler.backfillStages(spark, dir, 11 * Day, stagesFor,
-      nowMs = 22 * Day, retries = 0, sleep = _ => (),
-      claimTtlMs = Day).nonEmpty)
-    assert(ran.count(_ == 11 * Day) == 1)
-    // every boundary covered exactly once in the history
-    val covered = Versioned.read(spark, s"$dir/runs")
-      .filter(col("ok") && col("stage") === Scheduler.CoveredStage)
-      .select("boundary_ms").as[Long].collect().toSeq
-    assert(covered.sorted == Seq(9L, 10L, 11L, 12L).map(_ * Day))
+  test("the scheduler has one runner and one claim protocol") {
+    import scala.reflect.runtime.universe._
+    // public members, default-argument getters aside
+    val public = typeOf[Scheduler.type].decls
+      .filter(m => m.isPublic && !m.isConstructor)
+      .map(_.name.decodedName.toString.trim).filterNot(_.contains("$"))
+      .toSet
+    assert(public == Set("Attempt", "dueBoundary", "runWithRetries",
+      "CoveredStage", "tickStagesFor", "main"), s"public members: $public")
+    // one claim protocol: the single-flight claim's ttl is the runner's
+    // argument, never a column of a per-boundary claim row
+    val src = scala.io.Source.fromFile(
+      "src/main/scala/graft/app/Scheduler.scala", "UTF-8").mkString
+    assert(!src.contains("ttl_ms"), "Scheduler names a per-claim ttl column")
   }
 
-  test("backfill claims carry their OWN ttl: a short-ttl backfiller on " +
-      "another boundary must not drop a long-ttl claimant's live claim " +
-      "(the spurious mid-chain fence)") {
+  test("a legacy single-job runs table (no stage column) fails the tick " +
+      "loudly: no stage runs and no claim is left unreleased") {
     import graft.sources.Versioned
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("backfillttl").toString
-    var ran = List.empty[Long]
-    def stagesFor(b: Long): Seq[(String, () => Unit)] =
-      Seq("work" -> (() => ran ::= b))
-    // boundary 20 covered once so the claims table exists
-    assert(Scheduler.backfillStages(spark, dir, 20 * Day, stagesFor,
-      nowMs = 30 * Day, retries = 0, sleep = _ => ()).nonEmpty)
-    // plant a LIVE claim on boundary 21 with a LONG declared ttl (a
-    // slow in-flight run, claimed 2 days ago, ttl 10 days)
-    val v = Versioned.latestVersion(spark, s"$dir/claims")
-    Versioned.overwriteExpecting(
-      Seq((21 * Day, 28 * Day, "slow-owner", false, 10 * Day))
-        .toDF("boundary_ms", "claimed_at_ms", "owner", "released", "ttl_ms"),
-      s"$dir/claims", v + 1): Unit
-    // a backfiller on a DIFFERENT boundary with a SHORT ttl (1 hour —
-    // by which the slow claim would look stale) runs, and must carry
-    // the slow claim forward judged by ITS OWN ttl, not the caller's
-    assert(Scheduler.backfillStages(spark, dir, 22 * Day, stagesFor,
-      nowMs = 30 * Day, retries = 0, sleep = _ => (),
-      claimTtlMs = 3600 * 1000L).nonEmpty)
-    val after = Versioned.read(spark, s"$dir/claims")
-      .filter(col("boundary_ms") === 21 * Day && !col("released"))
-      .count()
-    assert(after == 1L,
-      "the long-ttl claim must survive a short-ttl peer's rewrite")
-    // and the slow claimant still excludes a takeover on its boundary
-    assert(Scheduler.backfillStages(spark, dir, 21 * Day, stagesFor,
-      nowMs = 30 * Day, retries = 0, sleep = _ => ()).isEmpty,
-      "the surviving claim must still exclude a second claimant")
-    // past its OWN ttl the claim goes stale and the boundary is
-    // backfillable again
-    assert(Scheduler.backfillStages(spark, dir, 21 * Day, stagesFor,
-      nowMs = 39 * Day, retries = 0, sleep = _ => ()).nonEmpty)
-    assert(ran.count(_ == 21 * Day) == 1)
+    val dir = java.nio.file.Files.createTempDirectory("legacyruns").toString
+    // the history shape a single-job runner wrote: one row per attempt,
+    // no stage column, coverage = any ok row
+    Versioned.append(Seq((9 * Day, 1, true, "", 10 * Day + 5))
+      .toDF("boundary_ms", "attempt", "ok", "error", "recorded_at_ms"),
+      s"$dir/runs"): Unit
+    var runs = 0
+    val e = intercept[IllegalArgumentException] {
+      Scheduler.tickStagesFor(spark, dir,
+        _ => Seq("job" -> (() => { runs += 1 })), nowMs = 12 * Day + 5,
+        intervalMs = Day, retries = 0, sleep = _ => ())
+    }
+    assert(e.getMessage.contains("no stage column"), e.getMessage)
+    assert(runs == 0, "no boundary of a legacy history may be (re-)run")
+    assert(Versioned.read(spark, s"$dir/runs").count() == 1L)
+    assert(!Versioned.exists(spark, s"$dir/claims") ||
+      Versioned.read(spark, s"$dir/claims")
+        .filter(!org.apache.spark.sql.functions.col("released")).isEmpty,
+      "a refused tick must leave no unreleased claim")
   }
 
   test("a compaction crash between index commits can never eat the NEXT " +
