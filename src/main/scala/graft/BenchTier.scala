@@ -1,17 +1,15 @@
 package graft
 
 /** Second-tier bench over the SERVE-PATH AND FUNNEL queries — the
-  * composed retrieval/curation subset whose 100 TB behavior the
-  * ScaleProbe byte slopes vouch for at sf0.001–0.01 corpora and the
-  * main Bench times only at sf0.1. Run against a [[ScaleData]]-scaled
-  * dir and compare per-query seconds with the sf0.1 BENCH numbers: a
-  * query whose WALL-CLOCK slope exceeds its measured BYTE slope has a
-  * named cause to find (fixed-stage latency amortizing is fine; a
-  * corpus-sized stage hiding behind a pruned-looking plan is not).
+  * composed retrieval/curation subset whose byte growth `ScalingSpec`
+  * gates on sf0.001 replicas and the main Bench times only at sf0.1.
+  * Run against a [[ScaleData]]-scaled dir and compare per-query seconds
+  * (and counters) with the sf0.1 BENCH numbers: a query whose
+  * WALL-CLOCK slope exceeds its BYTE slope has a named cause to find
+  * (fixed-stage latency amortizing is fine; a corpus-sized stage hiding
+  * behind a pruned-looking plan is not).
   *
-  * Protocol matches [[Bench]]: one untimed global warm pass (shared
-  * artifacts — indexes, BPE models — build there, never inside a timed
-  * rep), then min-of-2 timed runs per query.
+  * Protocol: [[Bench.timeAll]], the same loop the main Bench runs.
   *
   * Usage: SPARK_GRAFT_CPUS=32 tools/run.sh graft.BenchTier /tmp/sf0.3
   */
@@ -42,32 +40,11 @@ object BenchTier {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf0.3")
     val spark = LocalSession()
-    val qs = serveQueries.map(n => n -> SparkEntry.queries(n))
-    val warm = qs.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { Bench.force(fn(spark, sfDir)); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench-tier] $name failed: ${e.getMessage}")
-          false
-      }
-      spark.catalog.clearCache()
-      name -> (ok, (System.nanoTime() - t0) / 1e9)
-    }.toMap
-    val results = qs.map { case (name, fn) =>
-      val ts = if (!warm(name)._1) Seq(-1.0) else Seq.fill(2) {
-        val t0 = System.nanoTime()
-        Bench.force(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      spark.catalog.clearCache()
-      name -> ts
-    }
-    val qj = results.map { case (k, v) => "\"" + k + "\":" + v.min }
-      .mkString("{", ",", "}")
-    val wj = warm.toSeq.sortBy(_._1)
-      .map { case (k, (_, t)) => "\"" + k + "\":" + t }.mkString("{", ",", "}")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
-    println(s"""{"metric":"serve_total","value":$total,"unit":"sec","queries":$qj,"warm":$wj,"sf":"$sfDir"}""")
+    val results = Bench.timeAll(spark, sfDir,
+      serveQueries.map(n => n -> SparkEntry.queries(n)))
+    val (qj, wj, counters) = Bench.jsonMaps(results)
+    val total = results.map(_.secs.min).filter(_ >= 0).sum
+    println(s"""{"metric":"serve_total","value":$total,"unit":"sec","queries":$qj,"warm":$wj,"sf":"$sfDir","counters":$counters}""")
     spark.stop()
   }
 }

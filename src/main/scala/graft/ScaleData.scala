@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build a LARGER bench tier from an existing driver testdata dir by
   * deterministically scaling the two pipeline tables (`documents`,
-  * `embeddings`) `factor`× — replicas get offset ids, a replica-unique
-  * rare token appended to the text (vocabulary keeps growing, so no
-  * replica is an exact dup and the Zipf head stays the head), and a
+  * `embeddings`) `factor`× — replicas get offset ids, every text token
+  * tagged per replica ([[replicate]]: vocabulary keeps growing, so no
+  * replica is a dup or near-dup of another), and a
   * per-(id, replica, position) arithmetic perturbation of the embedding
   * (directions move, so ANN rankings are not degenerate ties). Every
   * other table copies verbatim, so any query runs against the new dir.
@@ -20,6 +21,27 @@ import org.apache.spark.sql.functions._
   * Usage: tools/run.sh graft.ScaleData /root/testdata/sf0.1 /tmp/sf0.3 3
   */
 object ScaleData {
+  /** The one replica rule: `factor` copies of a documents table, copy k's
+    * ids offset by k × (max id + 1) and EVERY token of its text tagged
+    * `r<k>` (copy 0 stays verbatim). Replicas then share no shingles,
+    * fingerprints or minhash bands with their originals, so the
+    * duplicate structure grows linearly with the corpus — a one-suffix
+    * perturbation left each replica a NEAR-DUP of its original, so the
+    * near-dup pair graph (and every funnel built on it) grew
+    * ~replicas², a replica-injected super-linearity the first sf0.3 run
+    * measured as a phantom 3.7× slope on q117. `ScalingSpec` grows its
+    * corpora with this rule too.
+    */
+  def replicate(docs: DataFrame, factor: Int): DataFrame = {
+    val docSpan = docs.agg(max(col("doc_id"))).head.getLong(0) + 1L
+    (1 until factor).map { k =>
+      docs.withColumn("doc_id", col("doc_id") + lit(k.toLong * docSpan))
+        .withColumn("text", array_join(
+          transform(split(col("text"), " "),
+            t => concat(lit(s"r$k"), t)), " "))
+    }.foldLeft(docs)(_ unionByName _)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args.take(3)
     val factor = factorS.toInt
@@ -32,22 +54,7 @@ object ScaleData {
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dst/$t.parquet")
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val docSpan = docs.agg(max(col("doc_id"))).head.getLong(0) + 1L
-    val docReps = (1 until factor).map { k =>
-      docs.withColumn("doc_id", col("doc_id") + lit(k.toLong * docSpan))
-        // rewrite EVERY token with a replica tag (the ScaleProbe
-        // .replicate discipline): replicas then share no shingles,
-        // fingerprints, or minhash bands with their originals — a
-        // one-suffix perturbation left each replica a NEAR-DUP of its
-        // original, so the near-dup pair graph (and every funnel built
-        // on it) grew ~replicas² — probe-injected super-linearity the
-        // first sf0.3 run measured as a phantom 3.7× slope on q117
-        .withColumn("text", array_join(
-          transform(split(col("text"), " "),
-            t => concat(lit(s"r$k"), t)), " "))
-    }
-    docReps.foldLeft(docs)(_ unionByName _)
+    replicate(spark.read.parquet(s"$src/documents.parquet"), factor)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
 
     val embs = spark.read.parquet(s"$src/embeddings.parquet")

@@ -270,9 +270,11 @@ object Multimodal {
     * whole candidate-generation and verification pipeline
     * oracle-checks in DuckDB, which a real codec output cannot.
     *
-    * Scale note (measured, ScaleProbe): 8-bit band keys saturate as
-    * the corpus outgrows 256·cap docs per key — near-uniform hashes
-    * then pair O(n²/256) candidates. At corpus scale either set
+    * Scale note: 8-bit band keys saturate as the corpus outgrows
+    * 256·cap docs per key — near-uniform hashes then pair O(n²/256)
+    * candidates (ScalingSpec's sf0.001 rows sit below that point, and
+    * the Hamming filter drops the candidates before any counted
+    * exchange, so this is arithmetic, not a gated ratio). At corpus scale either set
     * `maxBandFreq` (drops only heavy keys — a heavy PERCEPTUAL key is
     * a boilerplate/blank-image cluster by definition) or trade recall
     * down to hamming ≤ 3 with 4×16-bit bands.

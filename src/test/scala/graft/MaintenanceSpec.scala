@@ -226,46 +226,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(bloomOf(s"$base/bloom"), "bloom filter missing from the footer")
     assert(!bloomOf(s"$base/plain"), "plain write must carry no bloom filter")
 
-    // scan bytes for a probe value that min/max cannot exclude
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead): Unit
+    // scan bytes for a probe value that min/max cannot exclude: the
+    // probe PROJECTS the payload, so any row group the footer cannot
+    // prune pays its data bytes (the vectorized reader materializes all
+    // projected columns before the filter runs). Vectored IO off for the
+    // measurement only: parquet-mr's readVectored path bypasses the
+    // Hadoop FS statistics that feed inputMetrics.bytesRead, so data-page
+    // bytes would go uncounted (footer/bloom reads use counted
+    // positioned reads either way).
+    def probeBytes(dir: String): Long = {
+      def run() = spark.read
+        .option("parquet.hadoop.vectored.io.enabled", "false")
+        .parquet(dir)
+        .filter(col("k") === 100001L).select(col("payload")).collect()
+      assert(run().isEmpty) // warm
+      val (rows, counts) =
+        org.apache.spark.graft.EngineListener.measure(spark)(run())
+      assert(rows.isEmpty)
+      counts.inputBytes
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // listener events post async — poll until the counter is stable
-      def drained(): Long = {
-        var prev = -1L
-        var cur = bytesRead.get()
-        while (prev != cur) { Thread.sleep(250); prev = cur; cur = bytesRead.get() }
-        cur
-      }
-      // the probe PROJECTS the payload, so any row group the footer
-      // cannot prune pays its data bytes (the vectorized reader
-      // materializes all projected columns before the filter runs).
-      // Vectored IO off for the measurement only: parquet-mr's
-      // readVectored path bypasses the Hadoop FS statistics that feed
-      // inputMetrics.bytesRead, so data-page bytes would go uncounted
-      // (footer/bloom reads use counted positioned reads either way).
-      def probeBytes(dir: String): Long = {
-        def run() = spark.read
-          .option("parquet.hadoop.vectored.io.enabled", "false")
-          .parquet(dir)
-          .filter(col("k") === 100001L).select(col("payload")).collect()
-        assert(run().isEmpty) // warm
-        drained(): Unit
-        bytesRead.set(0L)
-        assert(run().isEmpty)
-        drained()
-      }
-      val withBloom = probeBytes(s"$base/bloom")
-      val without = probeBytes(s"$base/plain")
-      assert(withBloom * 2 < without,
-        s"bloom probe read $withBloom bytes vs $without without — row " +
-          "groups were not pruned")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val withBloom = probeBytes(s"$base/bloom")
+    val without = probeBytes(s"$base/plain")
+    assert(withBloom * 2 < without,
+      s"bloom probe read $withBloom bytes vs $without without — row " +
+        "groups were not pruned")
   }
 
   test("malformed JSON records are quarantined, not dropped or fatal") {

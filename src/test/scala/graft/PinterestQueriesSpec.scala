@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.graft.JobCount
+import org.apache.spark.graft.EngineListener
 import graft.app.PinterestPipeline
 import graft.clean.{Cleaners, Schemas}
 import graft.queries.PinterestQueries
@@ -151,11 +151,12 @@ class PinterestQueriesSpec extends SparkSpec {
     val raw = rawDir(n = 300, seed = 71L)
     val rawBytes = dirBytes(raw)
     val read0 = localBytesRead()
-    val (out, jobs) = JobCount(spark) {
+    val (out, counts) = EngineListener.measure(spark) {
       val rs = results(PinterestPipeline.run(spark, raw))
       rs.foreach { case (_, df) => df.collect() }
       rs
     }
+    val jobs = counts.jobs
     val read = localBytesRead() - read0
     assert(read < 1.1 * rawBytes,
       s"the pass read $read local bytes for a $rawBytes-byte raw dir " +

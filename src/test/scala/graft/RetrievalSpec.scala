@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Index
-import org.apache.spark.graft.JobCount
+import org.apache.spark.graft.EngineListener
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
 import graft.operators.Retrieval.{Hybrid, Ivf, Lexical, MaxSim, Pq, Sq8}
@@ -1510,9 +1510,9 @@ class RetrievalSpec extends SparkSpec {
         spark, Pq(pq, Some(2), nProbes = 2, m = 2, ks = 4, dim = 4), vecs, 3)))
     val got = requests.map { case (name, _, req) =>
       req().collect(): Unit // warm: per-version constants read once
-      val (rows, jobs) = JobCount(spark)(req().collect())
+      val (rows, counts) = EngineListener.measure(spark)(req().collect())
       assert(rows.nonEmpty, name)
-      name -> jobs
+      name -> counts.jobs
     }
     assert(got == requests.map(r => r._1 -> r._2),
       s"jobs per warm request (plan call + collect): $got")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Index
-import org.apache.spark.graft.JobCount
+import org.apache.spark.graft.EngineListener
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Retrieval, Similarity, Tombstones}
@@ -222,14 +222,14 @@ class ServeHardeningSpec extends SparkSpec {
     // read (a plan literal), never a count job over the centroids table,
     // and the codebook is a plan literal too: the jobs left are the
     // escalation rounds' and the final collect's
-    val (adaptive, jobs) = JobCount(spark)(
+    val (adaptive, counts) = EngineListener.measure(spark)(
       Similarity.probe(spark, Pq(dir, None, nProbes = 1, m = 4, ks = 8,
         dim = 8), q, 3, Similarity.Widening(col("rare")))
         .collect().map(_.toSeq).toSeq)
     val exhaustive = Similarity.probe(spark, Pq(dir, None, nProbes = 8, m = 4,
       ks = 8, dim = 8), q, 3, Similarity.Where(col("rare")))
     assert(adaptive == exhaustive.collect().map(_.toSeq).toSeq)
-    assert(jobs == 18, s"jobs per adaptive PQ request: $jobs")
+    assert(counts.jobs == 18, s"jobs per adaptive PQ request: ${counts.jobs}")
   }
 
   // --------------------------------------------- retrain-cadence rebuild

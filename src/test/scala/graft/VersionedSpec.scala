@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import org.apache.spark.graft.JobCount
+import org.apache.spark.graft.EngineListener
 import graft.sources.Versioned
 
 /** S3 — versioned table format: ACID-ish commit log over plain parquet
@@ -379,8 +379,11 @@ class VersionedSpec extends SparkSpec {
       "new commit, a vacuum and a rebuilt directory are read afresh") {
     val t = tmpTable()
     Versioned.overwrite(Seq((1L, "a")).toDF("k", "v"), t)
-    def keys(asOf: Option[Long] = None): (Seq[Long], Int) = JobCount(spark)(
-      Versioned.rows(spark, t, asOf, Seq("k")).map(_.getLong(0)).sorted)
+    def keys(asOf: Option[Long] = None): (Seq[Long], Int) = {
+      val (ks, counts) = EngineListener.measure(spark)(
+        Versioned.rows(spark, t, asOf, Seq("k")).map(_.getLong(0)).sorted)
+      (ks, counts.jobs)
+    }
     val (first, j0) = keys()
     assert(first == Seq(1L) && j0 > 0)
     assert(keys() == ((Seq(1L), 0)),
